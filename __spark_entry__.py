@@ -7,7 +7,8 @@ value-hash → CORRECTNESS_r{N}.json).
 
 All implementation lives in ``week3_2_practice_big_data__spark`` (see
 SURVEY.md §2 for the key inventory); this module only adapts the engine's
-query REGISTRY to the driver's three-function surface.
+query REGISTRY to the driver's three-function surface. Keys are listed in
+REGISTRY registration order.
 """
 
 from __future__ import annotations
@@ -25,954 +26,6 @@ from week3_2_practice_big_data__spark.session import ensure_session_confs  # noq
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 FLAGSHIP = "agg_groupby_multi"
-
-# Keys already hash-verified by the driver (CORRECTNESS_r01–r04, all
-# green). The driver checks a bounded prefix (~50 keys) of `queries()`, so
-# keys NOT yet driver-verified are emitted first; these proven keys go to
-# the back.
-#
-# ROUND-6 ORDERING (this round): r5 cleared the never-verified backlog
-# (CORRECTNESS_r05: 35/35 oracle green + 14 rows-only clean), so the
-# ordering flips back to CHANGED-FIRST (the r1–r4 block order). The
-# window leads with the 16 r5-changed keys whose current code never got
-# a driver row (they fell past r5's 50-key window; judge-rerun MATCH at
-# sf0.01, but the driver artifact should say so — VERDICT r5 item 2),
-# then this round's changed keys, then any still-pending, then proven.
-_R01_VERIFIED = frozenset({
-    "agg_groupby_multi", "agg_extent", "agg_centroid_mean",
-    "agg_sum_normalize", "agg_count_distinct", "agg_rollup_cube",
-    "agg_cube", "agg_salted_skew", "agg_percentile", "agg_corr_moments",
-    "agg_mode", "udaf_weighted_quantity", "agg_grouping_sets",
-    "join_cross_meshgrid", "join_broadcast_params", "join_inner_equi",
-    "join_outer", "join_semi_anti", "join_range_theta", "join_asof",
-    "join_bucketed_colocated", "join_salted_skew",
-    "win_conv1d_frame", "win_rank_order", "win_lead_lag",
-    "win_running_agg", "win_ntile", "win_range_frame", "win_first_last",
-    "win_percent_rank",
-    "sort_orderby", "limit_topk", "limit_topk_per_group",
-    "set_union", "set_intersect", "set_except",
-    "filt_range_pred", "filt_dict_dispatch",
-    "reshape_pivot", "reshape_unpivot", "merge_upsert",
-    "proj_dist_radial", "proj_dot_light", "proj_minmax_norm",
-    "proj_shade_affine", "proj_color_scale", "proj_trig_polar",
-    "proj_wobble", "proj_gauss_exp",
-})
-
-# CORRECTNESS_r02.json: 50/50 green (rows + schema + hash).
-_R02_VERIFIED = frozenset({
-    "agg_approx_distinct", "agg_cohort_retention", "agg_conditional",
-    "agg_sketch_hll_merge", "agg_sketch_kll_quantile", "filt_mask_apply",
-    "filt_pip_scanline", "filt_point_in_polygon", "fn_bitwise_ops",
-    "fn_datetime_math", "fn_hsv_to_rgb", "fn_json_extract", "fn_string_fmt",
-    "gen_poster_param", "gen_poster_shadow", "join_interval_bucketed",
-    "join_q3_shipping_priority", "join_q5_region_volume", "ns_decontaminate",
-    "ns_dedup_cluster", "ns_dedup_embed_cosine", "ns_dedup_exact",
-    "ns_dedup_minhash", "ns_dedup_ngram_jaccard", "ns_dedup_simhash",
-    "ns_pack_sequences", "ns_pipeline_e2e", "ns_sample_stratified",
-    "ns_sim_ann_ivf", "ns_sim_ann_lsh", "ns_sim_topk", "ns_split_train_val",
-    "ns_text_clean", "ns_text_fingerprint", "ns_text_langid",
-    "ns_text_quality", "ns_text_stats", "ns_text_tfidf", "ns_text_tokens",
-    "proj_cond_guard", "proj_mod_cycle", "proj_resample_bilinear",
-    "set_except_all", "set_intersect_all", "sink_display",
-    "sort_composite_order", "src_orc_roundtrip", "win_cume_dist",
-    "win_funnel_conversion", "win_sessionize_gaps",
-})
-
-# CORRECTNESS_r03.json: 49/50 green; the one red row (udf_geom_contains)
-# was a DuckDB HUGEINT→float64 oracle-type artifact, fixed in r4 and
-# re-windowed via _CHANGED_THIS_ROUND.
-_R03_VERIFIED = frozenset({
-    "agg_anova_oneway", "agg_bootstrap_poisson", "agg_chi2_independence",
-    "agg_corr_moments", "agg_histogram", "agg_q14_promo_share",
-    "agg_q16_supplier_cnt", "agg_q18_large_orders",
-    "agg_sketch_kll_quantile", "agg_t_test", "gen_poster_shadow_blur",
-    "graph_triangle_count", "iter_bpe_merges", "join_dpp_partitioned",
-    "join_q10_returned_item", "join_q4_order_priority",
-    "join_q7_volume_shipping", "ml_naive_bayes", "ml_pca_power",
-    "ns_dedup_embed_cosine", "ns_dedup_substring", "ns_domain_mix",
-    "ns_pii_scrub", "ns_sample_importance", "ns_sample_reservoir",
-    "ns_semdedup", "ns_sim_ann_ivf", "ns_sim_ann_lsh",
-    "ns_text_perplexity", "qry_correlated_scalar", "qry_exists_correlated",
-    "qry_in_null_semantics", "qry_lateral_topk", "qry_recursive_cte",
-    "qry_scalar_subquery", "src_param_lookup", "src_parquet_scan",
-    "src_range_gen", "src_sequence", "src_text_lines",
-    "stream_session_window", "stream_sliding_agg", "stream_tumbling_agg",
-    "ts_downsample_lttb", "ts_resample_fill", "udf_rowwise_lambda",
-    "udtf_explode_gen", "win_conv2d_separable", "win_cusum_changepoint",
-})
-
-# CORRECTNESS_r04.json: 50/50 green (rows + schema + hash).
-_R04_VERIFIED = frozenset({
-    "agg_bitmap_distinct", "agg_conditional", "agg_entropy",
-    "agg_gini_revenue", "agg_mad_robust", "agg_market_basket",
-    "agg_ohlc_bars", "agg_skew_kurt", "agg_zorder_clustering",
-    "dq_constraint_check", "gen_poster_aspect", "gen_poster_bg_colormap",
-    "gen_poster_caption", "join_spatial_grid", "merge_scd2",
-    "ml_linreg_closed", "ml_naive_bayes", "ml_pca_power",
-    "ns_ann_knn_join", "ns_bpe_pair_stats", "ns_decontaminate_ngram",
-    "ns_dedup_cluster", "ns_dedup_embed_cosine", "ns_dedup_incremental",
-    "ns_dedup_minhash", "ns_dedup_paragraph", "ns_dedup_simhash",
-    "ns_dedup_substring", "ns_domain_temperature", "ns_embed_quantize",
-    "ns_kn_bigram", "ns_repetition_filter", "ns_semdedup",
-    "ns_sim_ann_ivf", "ns_sim_ann_lsh", "ns_sim_topk",
-    "ns_text_fingerprint", "ns_text_pmi", "ns_text_quality",
-    "sink_partitioned_write", "src_csv_roundtrip", "src_json_roundtrip",
-    "src_partition_prune_static", "src_table_stats", "udf_geom_contains",
-    "win_cusum_changepoint", "win_interpolate_gaps", "win_islands_ranges",
-    "win_moving_zscore", "win_rolling_corr",
-})
-
-# CORRECTNESS_r05.json: 35/35 oracle keys green (rows + schema + hash) —
-# clearing the never-verified backlog — plus 14 rows-only keys ran clean
-# (counted as verified for ORDERING: they hold a clean driver row; the
-# one rows-only crash, ns_mm_feature_stub, re-enters via
-# _CHANGED_THIS_ROUND with its r6 scalar-output fix).
-_R05_VERIFIED = frozenset({
-    "agg_conditional", "agg_string_listagg", "fn_array_ops", "fn_map_ops",
-    "fn_null_semantics", "fn_regex_extract", "fn_string_similarity",
-    "fn_try_arith", "fn_url_parse", "fn_variant_json",
-    "iter_connected_components", "iter_gd_logreg", "iter_kcore",
-    "iter_kmeans_points", "iter_pagerank_tokens", "join_asof_forward",
-    "join_asof_nearest", "ns_dedup_substring", "src_csv_malformed",
-    "src_range_gen_numpy", "stream_custom_state", "stream_dedup_state",
-    "stream_foreachbatch", "stream_sink_parquet", "stream_static_join",
-    "stream_stream_join", "stream_trigger_availablenow",
-    "stream_tumbling_file_rate", "stream_watermark_late",
-    "win_distinct_rolling", "win_ewma_smooth", "win_islands_blocked",
-    "win_moving_zscore", "win_ntile_blocked", "win_rolling_corr",
-    # rows-only, driver-ran clean in r5
-    "gen_poster_full", "ns_mm_audio_window", "ns_mm_decode_meta",
-    "ns_mm_frame_sample", "ns_mm_image_phash", "ns_mm_resize",
-    "ns_mm_scene_cut", "ns_multimodal_cols", "sink_binary_export",
-    "sink_binary_export_hires", "sink_binary_export_tiled",
-    "src_binary_files", "stream_rate_source", "udf_grouped_map_render",
-})
-
-# CORRECTNESS_r06.json: 50/50 clean — 40 oracle keys green (rows +
-# schema + hash) and 10 rows-only keys ran clean. The window executed
-# the r6 changed-first rotation exactly: all 42 changed keys (16
-# r5-spillover re-verifications + the r6 additions incl. the fixed
-# ns_mm_feature_stub) plus 8 proven agg keys as spillover.
-_R06_VERIFIED = frozenset({
-    "agg_approx_distinct", "agg_centroid_mean", "agg_count_distinct",
-    "agg_cube", "agg_extent", "agg_groupby_multi", "agg_rollup_cube",
-    "agg_sketch_cms_heavy", "agg_sum_normalize", "gen_poster_caption",
-    "graph_triangle_count", "ml_naive_bayes", "ml_pca_power",
-    "ns_chunk_overlap", "ns_decontaminate_bloom", "ns_dedup_cluster",
-    "ns_dedup_minhash", "ns_dedup_ngram_jaccard", "ns_dedup_simhash",
-    "ns_dedup_url", "ns_domain_mix", "ns_domain_temperature",
-    "ns_kn_bigram", "ns_mm_audio_window", "ns_mm_decode_meta",
-    "ns_mm_feature_stub", "ns_mm_frame_sample", "ns_mm_image_phash",
-    "ns_mm_resize", "ns_mm_scene_cut", "ns_quality_classifier",
-    "ns_sample_importance", "ns_text_langid", "ns_text_perplexity",
-    "ns_text_pmi", "ns_text_tfidf", "sink_binary_export",
-    "sink_binary_export_hires", "sink_binary_export_tiled",
-    "sink_compact_small_files", "src_schema_evolution",
-    "stream_sliding_agg", "stream_trigger_availablenow",
-    "stream_tumbling_agg", "stream_unbounded_socket",
-    "ts_downsample_lttb", "ts_seasonal_decompose",
-    "win_cusum_changepoint", "win_event_pattern_cep",
-    "win_funnel_conversion",
-})
-
-# CORRECTNESS_r07.json: 50/50 green (rows + schema + hash on every row;
-# zero rows-only rows in the window). Executed the r7 rotation exactly:
-# the 39 never-driver-verified r7 additions plus 11 re-verifications of
-# r7-changed keys.
-_R07_VERIFIED = frozenset({
-    "agg_centroid_mean", "agg_extent", "agg_groupby_multi",
-    "agg_q11_important_stock", "agg_q13_cust_distribution",
-    "agg_q15_top_supplier", "agg_q17_small_qty_revenue",
-    "agg_q6_forecast_revenue", "agg_sketch_kmv_intersect",
-    "agg_sum_normalize", "dq_distribution_drift", "dq_freshness",
-    "dq_rowcount_anomaly", "graph_bipartite_jaccard",
-    "graph_clustering_coeff", "graph_degree_distribution",
-    "graph_resource_alloc", "iter_als_rank2", "join_asof_forward",
-    "join_asof_nearest", "join_q12_ship_priority",
-    "join_q19_bracket_revenue", "join_q20_promo_suppliers",
-    "join_q21_waiting_supplier", "join_q8_market_share",
-    "join_q9_product_profit", "ml_decision_stump", "ml_knn_classify",
-    "ml_lift_gains", "ns_bpe_encode", "ns_dedup_incremental_persist",
-    "ns_global_shuffle", "ns_mixture_epochs", "ns_sim_ann_ivf_persist",
-    "ns_text_bm25", "qry_q22_idle_customers", "qry_q2_top_supplier",
-    "sink_compact_small_files", "stream_event_pattern_cep",
-    "stream_unbounded_socket", "ts_autocorr", "ts_cross_corr",
-    "ts_max_drawdown", "ts_seasonal_decompose", "win_attribution",
-    "win_budget_allocation", "win_event_pattern_cep",
-    "win_interpolate_gaps", "win_markov_transitions", "win_survival_km",
-})
-
-# CORRECTNESS_r08.json: all 50 window rows green (rows + schema + hash,
-# zero err) — the 11 r8-new/changed keys, the 9 stateful-streaming keys
-# re-verified after the shuffle-width fix, and 30 r01-era refresh keys.
-_R08_VERIFIED = frozenset({
-    "ns_pipeline_e2e", "ns_quality_classifier", "ns_text_perplexity",
-    "ns_decontaminate_bloom", "iter_bfs_sssp", "stream_stream_outer_join",
-    "win_pareto_abc", "ns_curriculum_order", "stream_chained_join_agg",
-    "ts_rollup_multires", "ml_gbt_boost2", "stream_watermark_late",
-    "stream_dedup_state", "stream_custom_state", "stream_stream_join",
-    "stream_event_pattern_cep", "stream_unbounded_socket",
-    "stream_tumbling_file_rate", "stream_static_join",
-    "stream_sink_parquet", "agg_grouping_sets", "agg_mode",
-    "agg_percentile", "agg_salted_skew", "filt_dict_dispatch",
-    "filt_range_pred", "join_asof", "join_broadcast_params",
-    "join_bucketed_colocated", "join_cross_meshgrid", "join_inner_equi",
-    "join_outer", "join_range_theta", "join_salted_skew",
-    "join_semi_anti", "limit_topk", "limit_topk_per_group",
-    "merge_upsert", "proj_color_scale", "proj_dist_radial",
-    "proj_dot_light", "proj_gauss_exp", "proj_minmax_norm",
-    "proj_shade_affine", "proj_trig_polar", "proj_wobble",
-    "reshape_pivot", "reshape_unpivot", "set_except", "set_intersect",
-})
-
-_R09_VERIFIED = frozenset({
-    "agg_cohort_retention", "agg_sketch_hll_merge", "filt_mask_apply",
-    "filt_pip_scanline", "filt_point_in_polygon", "fn_datetime_math",
-    "fn_hsv_to_rgb", "fn_json_extract", "fn_sql_udf", "fn_string_fmt",
-    "iter_kmeans_embed", "join_interval_bucketed",
-    "join_q3_shipping_priority", "join_q5_region_volume",
-    "ml_gbt_boost2", "ns_decontaminate", "ns_dedup_exact",
-    "ns_mm_pipeline_e2e", "ns_pack_sequences", "ns_sample_stratified",
-    "ns_split_train_val", "ns_text_clean", "ns_text_stats",
-    "ns_text_tokens", "ns_topic_mixture", "ns_vocab_coverage",
-    "proj_cond_guard", "proj_mod_cycle", "set_except_all",
-    "set_intersect_all", "set_union", "sort_orderby",
-    "src_python_datasource", "stream_checkpoint_restart",
-    "stream_dedup_within_watermark", "stream_session_window_native",
-    "stream_unbounded_socket", "udaf_weighted_quantity",
-    "udf_arrow_map", "udtf_python_native", "win_conv1d_frame",
-    "win_cume_dist", "win_first_last", "win_lead_lag", "win_ntile",
-    "win_percent_rank", "win_range_frame", "win_rank_order",
-    "win_running_agg", "win_sessionize_gaps",
-})
-
-_R10_VERIFIED = frozenset({
-    "agg_crosstab", "agg_grouping_sets_df", "dq_observe_metrics",
-    "fn_bitwise_ops", "fn_collation", "fn_crypto_aes",
-    "fn_interval_agg", "fn_mask_redact", "fn_time_type",
-    "fn_udf_sql_register", "fn_variant_type", "fn_xml_funcs",
-    "gen_poster_param", "gen_poster_shadow", "iter_kmeans_embed",
-    "join_lateral_df", "ns_topic_mixture", "proj_resample_bilinear",
-    "qry_dynamic_sql", "qry_modern_sql_sugar", "qry_parameterized_sql",
-    "qry_pipe_syntax", "qry_session_variables", "qry_sql_scripting",
-    "reshape_transpose", "set_union_byname_missing",
-    "sink_display", "sink_python_datasource",
-    "sink_python_datasource_arrow", "sort_composite_order",
-    "src_arrow_roundtrip", "src_file_metadata", "src_orc_roundtrip",
-    "src_python_datasource_pushdown", "src_python_datasource_stream",
-    "src_range_gen", "src_statestore_changefeed", "src_statestore_read",
-    "src_xml_roundtrip", "stream_checkpoint_restart",
-    "stream_observe_metrics", "stream_pipeline_e2e",
-    "stream_python_datasource_sink", "stream_python_datasource_sink_arrow",
-    "stream_query_listener", "stream_rocksdb_state",
-    "stream_sink_foreach_rows", "udf_arrow_grouped", "udf_arrow_map",
-    "udf_pandas_iter",
-})
-
-_R11_VERIFIED = frozenset({
-    "agg_approx_quantile", "agg_bitmap_native", "agg_cov_corr",
-    "agg_describe_summary", "agg_freq_items", "agg_histogram_numeric",
-    "agg_random_split", "agg_regr_native", "agg_sample_by",
-    "agg_sketch_theta_ops", "limit_offset_page",
-})
-
-# CORRECTNESS_r12.json: 50/50 green (rows + schema + hash on every
-# row, zero err, zero rows-only). Executed the r12 rotation exactly:
-# the r12-new key, the full r04 attestation cohort, and the r05 head
-# through iter_pagerank_tokens.
-_R12_VERIFIED = frozenset({
-    "qry_pandas_on_spark", "src_table_stats", "sink_partitioned_write",
-    "merge_scd2", "dq_constraint_check", "agg_bitmap_distinct",
-    "agg_entropy", "agg_gini_revenue", "agg_mad_robust",
-    "agg_market_basket", "agg_ohlc_bars", "agg_skew_kurt",
-    "agg_zorder_clustering", "ml_linreg_closed", "join_spatial_grid",
-    "win_islands_ranges", "udf_geom_contains", "ns_ann_knn_join",
-    "ns_bpe_pair_stats", "ns_decontaminate_ngram",
-    "ns_dedup_embed_cosine", "ns_dedup_incremental",
-    "ns_dedup_paragraph", "ns_embed_quantize", "ns_repetition_filter",
-    "ns_semdedup", "ns_sim_ann_ivf", "ns_sim_ann_lsh", "ns_sim_topk",
-    "ns_text_fingerprint", "ns_text_quality", "gen_poster_aspect",
-    "gen_poster_bg_colormap", "agg_conditional", "agg_string_listagg",
-    "fn_array_ops", "fn_map_ops", "fn_null_semantics",
-    "fn_regex_extract", "fn_string_similarity", "fn_try_arith",
-    "fn_url_parse", "fn_variant_json", "src_csv_malformed",
-    "src_range_gen_numpy", "iter_connected_components", "iter_gd_logreg",
-    "iter_kcore", "iter_kmeans_points", "iter_pagerank_tokens",
-})
-
-_VERIFIED = (
-    _R01_VERIFIED | _R02_VERIFIED | _R03_VERIFIED | _R04_VERIFIED
-    | _R05_VERIFIED | _R06_VERIFIED | _R07_VERIFIED | _R08_VERIFIED
-    | _R09_VERIFIED | _R10_VERIFIED | _R11_VERIFIED | _R12_VERIFIED
-)
-
-
-# Keys whose implementation changed in ROUND 13 (or new in r13): they
-# lead the window, highest behavior-change risk first.
-_CHANGED_THIS_ROUND: list[str] = [
-    # ADVICE r12: the ps groupby leg now passes dropna=False so the
-    # pandas-API bridge keeps NULL group keys exactly like the SQL
-    # oracle's GROUP BY (latent divergence on NULL-keyed data; TPC-H
-    # flag columns are non-null so values are unchanged here)
-    "qry_pandas_on_spark",
-]
-
-# Round-12 changed list, kept for the record (green r12 row + judge
-# r12 MATCH).
-_R12_CHANGED: list[str] = [
-    # NEW r12: the pandas API on Spark (pyspark.pandas) dialect bridge —
-    # mask/groupby-agg/sort_values via pandas_api(index_col=...),
-    # pure-Catalyst plan pinned (no AttachDistributedSequence, zero
-    # Python eval nodes, pre-bridge filter pushed to parquet)
-    "qry_pandas_on_spark",
-]
-
-# Round-11 changed list, kept for the record (all hold green r11 rows;
-# CORRECTNESS_r11.json 50/50 green, judge r11 independently MATCHed all
-# 11 new keys).
-_R11_CHANGED: list[str] = [
-    # NEW r11 (VERDICT r10 item 5 — the df.stat completion sweep):
-    # freqItems (KPS candidates ∩ exact counts = the true frequent set),
-    # approxQuantile (GK estimates, exact-rank-interval bound),
-    # cov/corr (exact BIGINT component sums + 1e-6 closed-form check),
-    # sampleBy (per-stratum 6σ binomial bounds, zero-fraction pinned)
-    "agg_freq_items",
-    "agg_approx_quantile",
-    "agg_cov_corr",
-    "agg_sample_by",
-    # NEW r11 (second batch): the native Datasketches theta set algebra
-    # (theta_sketch_agg/union/intersection/difference/estimate) — exact
-    # counts hashed, estimates held to the union-relative theta envelope
-    "agg_sketch_theta_ops",
-    # NEW r11 (second batch): ANSI regression aggregates
-    # (regr_slope/intercept/r2/count) — exact component sums hashed,
-    # native co-moment values checked in-plan at 1e-6
-    "agg_regr_native",
-    # NEW r11 (second batch): native bitmap aggregates — EXACT distinct
-    # via bucketed bitmaps, hashed directly against count(DISTINCT)
-    "agg_bitmap_native",
-    # NEW r11 (second batch): the NGT streaming histogram
-    # (histogram_numeric) — mass/bounds/order/cap verified in-plan
-    "agg_histogram_numeric",
-    # NEW r11 (third batch): randomSplit (exact partition checks + 6σ
-    # multinomial bounds) and df.summary() (8 statistics parsed back and
-    # verified against exact derivations)
-    "agg_random_split",
-    "agg_describe_summary",
-    # NEW r11 (third batch): df.offset() pagination —
-    # TakeOrderedAndProject plan, keyset equivalence pytest-pinned
-    "limit_offset_page",
-    # ADVICE r10: the TIME preview flag is now SCOPED to the builder's
-    # parse (flag gates analysis only — probed and pytest-pinned); the
-    # session the driver hands us stays clean afterwards
-    "fn_time_type",
-    # ADVICE r10: checkpoint naming extracted to _ssread_checkpoint
-    # (shared with the pytest inventory check); SQL/results unchanged
-    "src_statestore_read",
-    # ADVICE r10: _scoped_conf now rolls back already-applied confs if a
-    # later set() raises; this key is _scoped_conf's heaviest user
-    "stream_rocksdb_state",
-]
-
-# Round-10 changed list, kept for the record (all hold green r10 rows).
-_R10_CHANGED: list[str] = [
-    # NOTE on ADVICE r9 (medium, session exact-gap boundary): resolved
-    # by LIVE calibration AGAINST the advisory claim — Spark's
-    # session_window() MERGES events exactly gap apart in both batch and
-    # streaming execution (r10 crafted probes), so the shared
-    # gaps-and-islands predicate stays `diff > gap` and the session
-    # keys' SQL text is UNCHANGED from their r9-verified state; the
-    # boundary is now pytest-pinned (test_sessionize_exact_gap_pair_
-    # merges + the u5 pair in the native crafted fixture).
-    #
-    # NEW r10 (VERDICT r9 item 3): df.observe()/CollectMetrics — exact-
-    # integer audit metrics riding a proven pipeline to a no-op sink,
-    # observed dict emitted as the output relation; relational oracle
-    "dq_observe_metrics",
-    # NEW r10 (VERDICT r9 item 3, streaming twin): observe() on a
-    # watermarked streaming query, per-micro-batch metrics summed from
-    # the progress events; lockstep exactly-once totals oracle
-    "stream_observe_metrics",
-    # NEW r10 (VERDICT r9 item 4): Python Data Source STREAMING reader
-    # (simpleStreamReader) — offset-tracked LCG chunks with exact
-    # readBetweenOffsets replay under the standard watermarked topology
-    "src_python_datasource_stream",
-    # NEW r10 (VERDICT r9 item 5): applyInArrow grouped map — per-group
-    # Arrow table kernel (micro-unit extent + exact ppm position),
-    # hash-pinned against the relational window derivation
-    "udf_arrow_grouped",
-    # NEW r10 (VERDICT r9 item 6): the composed streaming pipeline —
-    # dedupWithinWatermark → observe → session_window across a
-    # checkpoint restart (two query lives), native-session oracle
-    "stream_pipeline_e2e",
-    # NEW r10: Python Data Source BATCH writer — per-task staged jsonl +
-    # driver commit manifest, read-back of committed files only;
-    # relational rollup oracle (completes the DataSource API write side)
-    "sink_python_datasource",
-    # NEW r10: Python Data Source STREAMING writer — per-batch commit
-    # manifests under the stream_watermark_late topology; the shared
-    # lockstep finalized-window oracle
-    "stream_python_datasource_sink",
-    # NEW r10: Spark 4 SQL pipe syntax (|> WHERE/AGGREGATE/ORDER BY) —
-    # the flagship Q1 semantic through the new parser, classic-SQL oracle
-    "qry_pipe_syntax",
-    # NEW r10: Spark 4 VARIANT type — parse_json/variant_get/`:` path/
-    # schema_of_variant/to_json round-trip, DuckDB JSON oracle
-    "fn_variant_type",
-    # NEW r10: StreamingQueryListener — async-bus lifecycle + progress
-    # totals for the watermarked query, exactly-once relational oracle
-    "stream_query_listener",
-    # NEW r10: DataSourceArrowWriter — the Arrow-native batch write path
-    # (RecordBatches through the two-phase commit), relational oracle
-    "sink_python_datasource_arrow",
-    # NEW r10: Python reader filter pushdown (Spark 4.1 pushFilters) —
-    # consumed filters prune GENERATION (accumulator-pinned), DuckDB
-    # WHERE-over-full-series oracle
-    "src_python_datasource_pushdown",
-    # NEW r10: parameterized spark.sql() — named + positional binding
-    # cross-checked in the builder, inlined-literal oracle
-    "qry_parameterized_sql",
-    # NEW r10: GROUP BY ALL / ORDER BY ALL / SELECT * EXCEPT — the
-    # resolution rules pinned against the fully explicit form
-    "qry_modern_sql_sugar",
-    # NEW r10: SQL session variables (DECLARE / SET VAR from subquery,
-    # consumed by a later statement), integer-exact threshold
-    "qry_session_variables",
-    # NEW r10: SQL scripting (BEGIN..END, WHILE loop, IF/ELSE, last
-    # statement is the result), closed-form oracle
-    "qry_sql_scripting",
-    # NEW r10: spark.udf.register — the SQL-callable vectorized
-    # pandas_udf (catalog-named Python logic), inlined-sat oracle
-    "fn_udf_sql_register",
-    # NEW r10: SCALAR_ITER pandas_udf — Iterator[Series]->Iterator[
-    # Series], one-time per-partition init reused across Arrow batches
-    "udf_pandas_iter",
-    # NEW r10: foreach ROW sink — open/process/close writer contract on
-    # the watermarked topology, finalized-window oracle
-    "stream_sink_foreach_rows",
-    # NEW r10: DataSourceStreamArrowWriter — the 4th writer quadrant
-    # (Row/Arrow x batch/streaming), per-batch manifests, same oracle
-    "stream_python_datasource_sink_arrow",
-    # ADVICE r9 (low): k-means chain now filters size(embedding) = 64
-    # identically in every Spark pass AND the oracle ev CTE (vector-set
-    # alignment; d=0 posexplode undercount + per-dim KeyError closed)
-    "iter_kmeans_embed",
-    # composes iter_kmeans_embed's Lloyd chain — re-windowed with it
-    "ns_topic_mixture",
-    # ADVICE r9 (low): two-life restart harness now wraps each life in
-    # try/finally query.stop() and the scratch path is pid-suffixed
-    "stream_checkpoint_restart",
-    # ADVICE r9 (low): mapInArrow kernel + oracle now share the sat()
-    # saturation discipline (NaN→0, NULL→0, ±1e9 clip before quantize)
-    "udf_arrow_map",
-    # NEW r10 (second session): native XML sink+source round trip —
-    # decimal money through text, entity escaping pinned via a crafted
-    # `<&"` marker column; relational oracle on the parquet original
-    "src_xml_roundtrip",
-    # NEW r10 (second session): scalar XML surface — to_xml → from_xml
-    # typed parse-back + xpath_string/xpath_long with entity decode;
-    # identity oracle recomputed from source columns
-    "fn_xml_funcs",
-    # NEW r10 (second session): Spark 4 UTF8_LCASE collation — case-
-    # insensitive GROUP BY merges synthesized casings (n_casings pins
-    # the merge), collation-aware startswith; lower()-explicit oracle
-    "fn_collation",
-    # NEW r10 (second session): df.transpose() over the domain-spined
-    # returnflag rollup; scalar-subquery-per-cell oracle
-    "reshape_transpose",
-    # NEW r10 (second session): the State Data Source — a stateful
-    # query's checkpointed state read back as a batch relation and
-    # hash-checked against the relational GROUP BY (associative merge)
-    "src_statestore_read",
-    # NEW r10 (second session): dynamic SQL — EXECUTE IMMEDIATE over a
-    # session-variable statement with IDENTIFIER()-resolved object names
-    # and USING params; statically-written oracle
-    "qry_dynamic_sql",
-    # NEW r10 (second session): the TIME type (4.1 preview flag) —
-    # to_time/hour/compare/min-max against DuckDB's native TIME
-    "fn_time_type",
-    # NEW r10 (second session): DataFrame lateralJoin API — per-customer
-    # top-2 via F.col(...).outer() correlation; window-derivation oracle
-    "join_lateral_df",
-    # NEW r10 (second session): the _metadata hidden file column —
-    # row_index/file_path vs the relational write-rank derivation
-    "src_file_metadata",
-    # NEW r10 (second session): RocksDB state store provider (changelog
-    # checkpointing) under the watermark topology; provider-independence
-    # pinned by the shared lockstep oracle
-    "stream_rocksdb_state",
-    # NEW r10 (second session): the state CHANGE FEED — per-batch state
-    # deltas replayed from RocksDB changelogs, prefix-aggregate oracle
-    "src_statestore_changefeed",
-    # NEW r10 (second session): df.groupingSets API twin of the SQL
-    # grouping-sets key, same oracle
-    "agg_grouping_sets_df",
-    # NEW r10 (second session): ANSI day-time intervals as aggregated
-    # columns (sum/max/scale of the TYPE); native-INTERVAL DuckDB oracle
-    "fn_interval_agg",
-    # NEW r10 (second session): toArrow → createDataFrame(pa.Table)
-    # round trip on a bounded rollup; relational oracle
-    "src_arrow_roundtrip",
-    # NEW r10 (second session): df.stat.crosstab contingency table;
-    # CASE-sum pivot oracle
-    "agg_crosstab",
-    # NEW r10 (second session): unionByName(allowMissingColumns=True)
-    # NULL-fill semantics; CASE-reconstructed oracle
-    "set_union_byname_missing",
-    # NEW r10 (second session): built-in mask() redaction (default +
-    # custom replacement chars); chained-regex oracle
-    "fn_mask_redact",
-    # NEW r10 (second session): AES-128-ECB encrypt/decrypt round trip
-    # + PKCS7 length law + sha2-256 vs DuckDB sha256
-    "fn_crypto_aes",
-]
-
-# Round-9 changed list, kept for the record (all 13 hold green r09 rows).
-_R09_CHANGED: list[str] = [
-    # ADVICE r8: nt-ceiling overflow guard added to the builder (SQL
-    # text untouched; the builder now reads the 384-row histogram
-    # summary before planning)
-    "ml_gbt_boost2",
-    # ADVICE r8: _stream_shuffle now scopes the whole build/start/poll
-    # via the context manager so the width override is restored on any
-    # exception
-    "stream_unbounded_socket",
-    # NEW r9 (VERDICT r8 item 2): NATIVE streaming session_window()
-    # under a 6 h watermark — session state merges across micro-batch
-    # boundaries, append-mode finalization at session_end_us <=
-    # ms-floored final wm * 1000 (boundary calibrated against the
-    # engine); full gaps-and-islands batch-equivalence oracle
-    "stream_session_window_native",
-    # NEW r9 (VERDICT r8 item 3): composed media pipeline — rep-collapse
-    # then ONE fused decode kernel per distinct image (accumulator-pinned
-    # in pytest), near-dup pairs, member expansion, metadata join,
-    # all-scalar per-source funnel; rows-only (rendered-pixel inputs)
-    "ns_mm_pipeline_e2e",
-    # NEW r9 (VERDICT r8 item 4): Spark 4 native Python UDTF (@udtf via
-    # SQL LATERAL) — span-emitting tokenizer, oracle = the relational
-    # span derivation (two derivations, one hash)
-    "udtf_python_native",
-    # NEW r9 (VERDICT r8 item 5): embedding k-means topic clustering +
-    # balanced-topic sampling weights — 3 Lloyd rounds, projection
-    # argmin (no shuffle), exact micro-unit centroid sums, unrolled
-    # MATERIALIZED oracle
-    "iter_kmeans_embed",
-    # NEW r9: tokenizer-vocabulary coverage / OOV-rate diagnostic —
-    # top-V df vocabulary (TakeOrderedAndProject) broadcast into the
-    # one-pass tf relation, per-source rollup
-    "ns_vocab_coverage",
-    # NEW r9: topic-balanced mixture allocation — the k-means topic
-    # weights feeding an actual per-topic token budget (composes
-    # iter_kmeans_embed; oracle = shared unrolled Lloyd chain + rollup)
-    "ns_topic_mixture",
-    # NEW r9: Spark 4 Python Data Source API — custom partitioned
-    # DataSource/DataSourceReader, LCG source hash-pinned against the
-    # SQL/DuckDB derivations
-    "src_python_datasource",
-    # NEW r9: mapInArrow RecordBatch transform, hash-pinned vs SQL
-    "udf_arrow_map",
-    # NEW r9: SQL-language UDFs (CREATE TEMPORARY FUNCTION ... RETURN),
-    # Catalyst-inlined; oracle inlines the identical expression text
-    "fn_sql_udf",
-    # NEW r9: dropDuplicatesWithinWatermark — watermark-BOUNDED dedup
-    # state (the at-least-once-source API); same exactly-once oracle as
-    # the unbounded dropDuplicates key, different state contract
-    "stream_dedup_within_watermark",
-    # NEW r9: checkpoint RECOVERY — the watermarked agg run as two query
-    # lives against one checkpoint/sink; boundary-straddling windows pin
-    # real state recovery; same finalized-window oracle
-    "stream_checkpoint_restart",
-]
-
-# Round-8 changed list, kept for the record (all 20 hold green r08 rows).
-_R08_CHANGED: list[str] = [
-    # r8 (VERDICT r7 item 1): ns_pipeline_e2e REBUILT as the full current
-    # pipeline — url canon → exact+MinHash dedup keepers → quality
-    # classifier → perplexity tercile (blocked ntile) → bloom decontam →
-    # pack → blocked global shuffle → mixture epochs; per-source funnel +
-    # exact modular pack/position checksums; oracle is the naive pipeline
-    "ns_pipeline_e2e",
-    # r8: oracle text re-factored through the shared per-doc score
-    # relation (_qc_scored_sql) — old-vs-new proven value-identical in
-    # DuckDB on sf0.001/sf0.01/one/weird/empty before the swap
-    "ns_quality_classifier",
-    # r8: builder now consumes the extracted _cached_ppl_doc /
-    # _cached_bloom_ng helpers (SQL byte-identical; re-windowed because
-    # the builder code path changed)
-    "ns_text_perplexity",
-    "ns_decontaminate_bloom",
-    # NEW r8 (VERDICT r7 item 4): multi-source BFS / unweighted shortest
-    # path over the shared bip_edges graph — per-round frontier equi-join
-    # + visited anti-join, localCheckpoint per round, unrolled
-    # MATERIALIZED-CTE oracle
-    "iter_bfs_sssp",
-    # NEW r8 (VERDICT r7 item 5): stream-stream LEFT OUTER join with
-    # watermark-driven null emission — full batch-equivalence oracle
-    # (inner set + never-matched clicks evicted at click_ms <= wm_ms -
-    # range_ms - 1, final global wm = max_ts + sentinel offset - 1 s -
-    # delay); eviction forced into data batches by two far-future
-    # sentinel files (the trailing no-data batch is not awaited by
-    # processAllAvailable — observed flaky before the sentinels)
-    "stream_stream_outer_join",
-    # NEW r8: ABC/Pareto revenue classification — global cumulative sum
-    # via the blocked decomposition with an EXACT log2 bucket key
-    # (length(bin(rev_u)), <= 64-row summary at any value range); oracle
-    # is the naive global window
-    "win_pareto_abc",
-    # NEW r8: curriculum training order — ns_global_shuffle's blocked
-    # position/shard plan with the sort key swapped to the shared
-    # quality-model score; oracle is the naive global-sort row_number
-    "ns_curriculum_order",
-    # NEW r8: chained stateful operators (stream-stream inner join
-    # feeding a tumbling windowed agg in ONE append-mode query) — pins
-    # watermark propagation: windows finalize against the join's output
-    # watermark = global wm - join range, reproduced in the oracle
-    "stream_chained_join_agg",
-    # NEW r8: hierarchical multi-resolution rollup — hour tier aggregated
-    # FROM the 10-min tier (micro-unit BIGINT sums make tier-from-tier
-    # commutative); oracle computes the hour tier directly from raw, so
-    # the hash proves rollup-of-rollup == direct
-    "ts_rollup_multires",
-    # NEW r8: two-round LS gradient boosting on the shared PLANET stump
-    # histogram — exact integer/DECIMAL residual numerators, order-free
-    # prefix sums, micro-quantized per-round train MSE
-    "ml_gbt_boost2",
-    # r8 streaming-shuffle-width fix (SQL/results unchanged; builders now
-    # size streaming shuffles to executor count via _stream_shuffle —
-    # state-store commit overhead measured 33 s -> 8 s on the chained
-    # join at sf0.1; every stateful streaming key re-windowed)
-    "stream_watermark_late",
-    "stream_dedup_state",
-    "stream_custom_state",
-    "stream_stream_join",
-    "stream_event_pattern_cep",
-    "stream_unbounded_socket",
-    "stream_tumbling_file_rate",
-    "stream_static_join",
-    "stream_sink_parquet",
-]
-
-# ROUND-13 REFRESH (VERDICT r12 items 1+2): the r04 cohort cleared in
-# r12, so this rotation leads with the 13-key r05-stale remainder (the
-# 8 oracle keys that spilled past r12's window plus the 5 rows-only
-# keys whose last driver attestation is r05 — VERDICT r12 item 2 asks
-# the driver to re-attest the long-unattested rows-only family on
-# current code), followed by the full 39-key r06 cohort. With one
-# changed key leading, the 50-key window covers everything except the
-# last 3 entries (pytest-golden-pinned binary-export variants + the
-# scalar mm stub — lowest-risk spill, leads r14's refresh). Every key
-# here is pytest-replayed and sf0.01-swept this round regardless.
-_REFRESH_THIS_ROUND: list[str] = [
-    # r05-stale oracle spill (oldest attestations in the registry)
-    "ns_dedup_substring", "stream_foreachbatch", "win_distinct_rolling",
-    "win_ewma_smooth", "win_islands_blocked", "win_moving_zscore",
-    "win_ntile_blocked", "win_rolling_corr",
-    # r05-stale rows-only (driver re-attests spark_rows > 0 on current
-    # code; all pytest-pinned every session)
-    "udf_grouped_map_render", "gen_poster_full", "ns_multimodal_cols",
-    "src_binary_files", "stream_rate_source",
-    # r06 cohort (next-oldest; dedup/text families first, then
-    # streaming, sketch/ml, windows/ts, mm rows-only block, generative
-    # and binary-export tail last)
-    "ns_dedup_minhash", "ns_dedup_simhash", "ns_dedup_cluster",
-    "ns_dedup_ngram_jaccard", "ns_dedup_url", "ns_text_tfidf",
-    "ns_text_langid", "ns_text_pmi", "ns_kn_bigram",
-    "ns_domain_mix", "ns_domain_temperature", "ns_chunk_overlap",
-    "ns_sample_importance", "stream_tumbling_agg", "stream_sliding_agg",
-    "stream_trigger_availablenow", "agg_count_distinct",
-    "agg_approx_distinct", "agg_cube", "agg_rollup_cube",
-    "agg_sketch_cms_heavy", "graph_triangle_count", "ml_naive_bayes",
-    "ml_pca_power", "win_cusum_changepoint", "win_funnel_conversion",
-    "ts_downsample_lttb", "src_schema_evolution", "gen_poster_caption",
-    "ns_mm_decode_meta", "ns_mm_resize", "ns_mm_frame_sample",
-    "ns_mm_audio_window", "ns_mm_image_phash", "ns_mm_scene_cut",
-    "sink_binary_export",
-    # lowest-risk spill tail (expected to fall past the 50-key window;
-    # leads r14)
-    "sink_binary_export_hires", "sink_binary_export_tiled",
-    "ns_mm_feature_stub",
-]
-
-# Round-7 changed list, kept for the record (all hold green r07 rows —
-# the 50-key window covered every entry that fit; the few spillover
-# entries were judge-rerun MATCH and hold earlier-round rows).
-_R07_CHANGED: list[str] = [
-    # ADVICE r6: trend window converted to exact BIGINT micro-unit sums
-    # (order-free by construction, not by engine accident)
-    "ts_seasonal_decompose",
-    # ADVICE r6: ingestion gauge no longer relies on the capped
-    # recentProgress buffer; broker connection provably outlives the query
-    "stream_unbounded_socket",
-    # r7: compacted-file target is now size-derived (max(4, rows/2M)) so
-    # the rewrite keeps its parallelism at any scale
-    "sink_compact_small_files",
-    # r7 skew-ladder fix: next_nonerr suffix-min rewritten as a running
-    # min over the reverse sort — the CURRENT ROW..UNBOUNDED FOLLOWING
-    # frame was O(n²) per partition (308× wall under a hot user)
-    "win_event_pattern_cep",
-    # r7: same O(n²) suffix-frame class, same reverse-sort rewrite
-    # (old-vs-new oracle values proven identical in DuckDB on
-    # sf0.01/weird/one before the swap)
-    "join_asof_forward",
-    "join_asof_nearest",
-    "win_interpolate_gaps",
-    # NEW r7: corpus-wide BPE application (broadcast encoded vocab over
-    # the map-side token explode; shares iter_bpe_merges' merge table by
-    # construction — one training chain, two keys)
-    "ns_bpe_encode",
-    # NEW r7: persist-and-probe index lifecycle (standing MinHash band
-    # index written once via build_once, ingest batch probes the
-    # persisted parquet; oracle = the in-flight text verbatim)
-    "ns_dedup_incremental_persist",
-    # NEW r7: same lifecycle for the IVF inverted file (query computes
-    # only its own probe cells; persisted cells scanned, exact rerank)
-    "ns_sim_ann_ivf_persist",
-    # NEW r7: streaming CEP — per-user pattern state (last-2 events +
-    # trailing error run) across micro-batch boundaries, hash-checked
-    # against the batch CEP's independent islands oracle
-    "stream_event_pattern_cep",
-    # NEW r7: the remaining classic TPC-H plan shapes the tables can
-    # express (correlated scalar max/avg, ON-clause outer-join filter,
-    # decorrelated sole-late-supplier, threshold anti-join)
-    "qry_q2_top_supplier",
-    "agg_q13_cust_distribution",
-    "agg_q17_small_qty_revenue",
-    "join_q21_waiting_supplier",
-    "qry_q22_idle_customers",
-    "agg_q6_forecast_revenue",
-    "join_q8_market_share",
-    "agg_q15_top_supplier",
-    "join_q19_bracket_revenue",
-    # NEW r7 (second session): the last four classic TPC-H shapes —
-    # all 22 plan skeletons now covered (q9 profit star, q11
-    # twice-referenced threshold view, q12 delay-class CASE counts,
-    # q20 grouped-HAVING semi-join chain) — plus join_q8_market_share's
-    # share nation fixed to a name that exists in the data
-    # ('GERMANY' -> 'NATION_18'; the numerator was vacuously zero).
-    "join_q9_product_profit",
-    "agg_q11_important_stock",
-    "join_q12_ship_priority",
-    "join_q20_promo_suppliers",
-    # NEW r7 (second session): deterministic corpus-wide training order
-    # via the blocked-window decomposition (no single-partition sort;
-    # oracle IS the naive global sort), and token-budget epoch planning
-    # for domain mixtures (single-IEEE-op decision values).
-    "ns_global_shuffle",
-    "ns_mixture_epochs",
-    # NEW r7 (third session): exact-integer sample ACF + per-user
-    # running-peak drawdown over the events stream, and the first
-    # node-similarity graph primitive (supplier Jaccard through shared
-    # parts, candidate volume bounded by suppliers-per-part).
-    "ts_autocorr",
-    "ts_max_drawdown",
-    "graph_bipartite_jaccard",
-    # NEW r7 (third session): two-series lead/lag CCF at calendar lags
-    "ts_cross_corr",
-    # NEW r7 (fourth session): weighted common-neighbor link prediction
-    # (Resource Allocation index, exact integer micro-weights), greedy
-    # exact-cents budget allocation, and the two-epoch PSI drift monitor
-    "graph_resource_alloc",
-    "win_budget_allocation",
-    "dq_distribution_drift",
-    # NEW r7 (fourth session): KMV/theta sketch intersection with a
-    # deterministic hash — the fully-hash-checked sketch key
-    "agg_sketch_kmv_intersect",
-    # NEW r7 (fifth session): BM25 ranked retrieval (the query-probes-
-    # inverted-index shape tf-idf lacks), local clustering coefficient
-    # (shares the triangle edge checkpoint), kNN classification with
-    # leave-one-out confusion/accuracy, and histogram-based decision-
-    # stump training (the PLANET shape: 384-cell shuffle at any scale)
-    "ns_text_bm25",
-    "graph_clustering_coeff",
-    "ml_knn_classify",
-    "ml_decision_stump",
-    # NEW r7 (fifth session, second batch): last/first-touch attribution
-    # (incremental prefix frames on the one user window) and the degree
-    # distribution + log-log power-law fit over the shared edge list
-    "win_attribution",
-    "graph_degree_distribution",
-    # NEW r7 (fifth session, third batch): the EVALUATE leg — lift/gains
-    # table + bucketed trapezoidal AUC from an all-BIGINT propensity score
-    "ml_lift_gains",
-    # NEW r7 (fifth session, fourth batch): freshness/SLA monitor and
-    # robust daily-volume anomaly detection (dq family 2 → 4)
-    "dq_freshness",
-    "dq_rowcount_anomaly",
-    # NEW r7 (fifth session, fifth batch): one full ALS round at rank 2
-    # — the recommender-training workload, micro-exact normal equations
-    "iter_als_rank2",
-    # NEW r7 (fifth session, sixth batch): the journey transition matrix
-    # and the Kaplan-Meier churn curve (12 h churn horizon calibrated so
-    # both the churned and censored branches carry real mass)
-    "win_markov_transitions",
-    "win_survival_km",
-]
-
-# Round-6 changed list, kept for the record (all 42 hold green r06 rows).
-_R06_CHANGED = [
-    # --- the 16 r5-changed keys with no driver row for their current
-    # code (judge-rerun MATCH at sf0.01; re-windowed here for the
-    # artifact). Order: dedup rewrites first (largest r5 diffs), then
-    # shared-tokenize consumers, then the CTE-materialization family.
-    "ns_dedup_minhash",
-    "ns_dedup_simhash",
-    "ns_dedup_cluster",
-    "ns_dedup_ngram_jaccard",
-    "ns_text_tfidf",
-    "ns_text_langid",
-    "ns_text_pmi",
-    "ns_domain_mix",
-    "ns_domain_temperature",
-    "ns_kn_bigram",
-    "graph_triangle_count",
-    "ml_naive_bayes",
-    "ml_pca_power",
-    "win_cusum_changepoint",
-    "win_funnel_conversion",
-    "ts_downsample_lttb",
-    # --- round-6 changes ---
-    # exact micro-unit sums replace q6-over-float-sum in the streaming
-    # aggregation oracles (ADVICE r5: order-free by construction)
-    "stream_tumbling_agg",
-    "stream_sliding_agg",
-    "stream_trigger_availablenow",
-    # blocked-ntile decomposition replaces the corpus-sized global
-    # ntile(3) sort (VERDICT r5 item 3); oracles unchanged (real ntile)
-    "ns_text_perplexity",
-    "ns_sample_importance",
-    # NEW r6: Kafka-shaped unbounded source (socket broker, no EOF),
-    # same topology + full oracle as stream_watermark_late
-    "stream_unbounded_socket",
-    # NEW r6 (second session): training-pipeline widening — URL-canon
-    # dedup, stride chunking, and the two sketch-accelerated-exact plans
-    # (Bloom-prefiltered decontamination, Count-Min heavy hitters)
-    "ns_dedup_url",
-    "ns_chunk_overlap",
-    "ns_decontaminate_bloom",
-    "agg_sketch_cms_heavy",
-    "sink_compact_small_files",
-    "ns_quality_classifier",
-    "src_schema_evolution",
-    "win_event_pattern_cep",
-    "ts_seasonal_decompose",
-    # scalar-only output boundary (f0..f7 + sha256 digest) — fixes the
-    # r5 red row (driver harness can't hash array<double>)
-    "ns_mm_feature_stub",
-    # caption layer upgraded to REAL DejaVu Sans outlines (pure-stdlib
-    # TTF rasterizer, anti-aliased alpha blend) — closes VERDICT r5
-    # missing-item 2; pixel golden regenerated
-    "gen_poster_caption",
-    "sink_binary_export",
-    "sink_binary_export_hires",
-    "sink_binary_export_tiled",
-    # rep-collapse for pixel dedup (sha256 rep before decode/hash) +
-    # the pipeline-extraction refactor for the mm scale ladder
-    "ns_mm_image_phash",
-    "ns_mm_decode_meta",
-    "ns_mm_resize",
-    "ns_mm_frame_sample",
-    "ns_mm_scene_cut",
-    "ns_mm_audio_window",
-]
-
-# Round-5 changed list, kept for the record (all 20 were either
-# re-verified inside the r5 window or are re-windowed above).
-_R05_CHANGED = [
-    # r5: rep-collapse for ns_dedup_substring (VERDICT r4 item 2) —
-    # span indexing at exact-dup-representative level, member expansion
-    # after; fixes the duplication-inflated span-df recall loss at the
-    # df ≤ 50 cap.
-    "ns_dedup_substring",
-    # r5 ADVICE: sat()'s isnan() test is now the FIRST CASE branch
-    # (NaN→0 as documented; previously NaN saturated to +bound because
-    # both engines order NaN greater than any value). Value-identical on
-    # NaN-free driver data; these five keys carry sat() in their SQL:
-    "agg_conditional",
-    "win_rolling_corr",
-    "win_moving_zscore",
-    "win_cusum_changepoint",
-    "ml_pca_power",
-    # r5 ADVICE: top-50 via ORDER BY + LIMIT (TakeOrderedAndProject)
-    # instead of a global row_number window — identical selected set;
-    # plus the bigram-count relation is now materialized once (was 6
-    # inlined re-derivations).
-    "ns_kn_bigram",
-    # r5 plan audit: CTE-inlining explosions fixed by materializing the
-    # multiply-referenced corpus relation once (localCheckpoint) —
-    # 12→0 and 10→5 parquet scans respectively; triangle SQL also
-    # restructured (explode memberships + window total, single tri ref).
-    "graph_triangle_count",
-    "ml_naive_bayes",
-    "ns_domain_temperature",  # same fix: per_src materialized, 8→0 scans
-    "win_funnel_conversion",  # same fix: stage relations chained, 6→3 scans
-    "ts_downsample_lttb",     # same fix: ev materialized, 9→1 windows
-    # r5 shared materializations (functions.text): ONE corpus tokenize
-    # (cached_tokens_ref) and ONE doc→rep map (cached_rep_map_ref) per
-    # (session, sf) across the whole text family — plans verified
-    # value-identical on all fixtures, physical scans collapse to 0–2.
-    "ns_dedup_minhash",
-    "ns_dedup_simhash",
-    "ns_dedup_cluster",
-    "ns_text_tfidf",
-    "ns_text_langid",
-    "ns_text_pmi",
-    "ns_domain_mix",
-    # r5: jaccard rep-collapse (same df-cap recall bug class as
-    # substring — the cap now counts distinct TEXTS; member expansion
-    # output-bound, within-group pairs at jaccard 1.0)
-    "ns_dedup_ngram_jaccard",
-]
-
-# Never-driver-verified keys, priority-ordered. After r5 the backlog is
-# CLEAR — every registered key holds at least one clean driver row — so
-# this list only catches keys added in r6+ that aren't folded into
-# _CHANGED_THIS_ROUND. Keys not listed sort after the listed ones in
-# registration order.
-_PENDING_PRIORITY: list[str] = []
-
-
-def _ordered_keys() -> list[str]:
-    """Registry keys ordered for the driver's bounded correctness window.
-
-    ROUND-8 ORDER (changed-first, then oldest-green refresh): this
-    round's changed keys lead (oracle before rows-only), then the
-    _REFRESH_THIS_ROUND r01-era re-attestation block (VERDICT r7 item
-    3), then never-verified keys (new keys not listed as changed), then
-    proven keys (registration order within unlisted groups)."""
-    changed = [k for k in _CHANGED_THIS_ROUND if k in REGISTRY]
-    changed_set = set(changed)
-    changed_oracle = [k for k in changed if REGISTRY[k].oracle is not None]
-    changed_rows_only = [k for k in changed if REGISTRY[k].oracle is None]
-    refresh = [
-        k for k in _REFRESH_THIS_ROUND
-        if k in REGISTRY and k not in changed_set
-    ]
-    changed_set.update(refresh)
-    rest = [k for k in REGISTRY if k not in changed_set]
-    prio = {k: i for i, k in enumerate(_PENDING_PRIORITY)}
-    pending_oracle = sorted(
-        (
-            k for k in rest
-            if k not in _VERIFIED and REGISTRY[k].oracle is not None
-        ),
-        key=lambda k: prio.get(k, len(prio)),
-    )
-    pending_rows_only = sorted(
-        (
-            k for k in rest
-            if k not in _VERIFIED and REGISTRY[k].oracle is None
-        ),
-        key=lambda k: prio.get(k, len(prio)),
-    )
-    proven = [k for k in rest if k in _VERIFIED]
-    return (
-        changed_oracle
-        + changed_rows_only
-        + refresh
-        + pending_oracle
-        + pending_rows_only
-        + proven
-    )
 
 
 def _tuned(builder: Callable[[SparkSession, str], DataFrame]):
@@ -993,13 +46,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator key from SURVEY.md §2."""
-    return {key: _tuned(REGISTRY[key].builder) for key in _ordered_keys()}
+    return {key: _tuned(q.builder) for key, q in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent ANSI SQL per key (omitted → rows-only check)."""
-    return {
-        key: REGISTRY[key].oracle
-        for key in _ordered_keys()
-        if REGISTRY[key].oracle is not None
-    }
+    return {key: q.oracle for key, q in REGISTRY.items() if q.oracle is not None}

@@ -3,10 +3,11 @@
 
 The coverage ledger used to be hand-maintained prose in SURVEY §8 and
 drifted at least once; this script derives it mechanically — one row per
-registered key with its check mode (oracle / rows-only), defining
-file:line, tags, and the driver round that first hash-verified it —
-and `tests/test_registry_doc.py` pins OPERATORS.md == regenerated text
-so the ledger can never drift from the registry again.
+registered key with its check mode (oracle / rows-only), defining module
+and tags — and `tests/test_registry_doc.py` pins OPERATORS.md ==
+regenerated text so the ledger can never drift from the registry again.
+Every column comes from the registry alone, so edits that only move code
+inside a module leave the ledger unchanged.
 
 Run from the repo root: `python gen_operators.py`.
 """
@@ -22,32 +23,17 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 _REPO = os.path.dirname(os.path.abspath(__file__))
 
 
-def _driver_rounds() -> dict[str, str]:
-    import __spark_entry__ as entry
-
-    rounds: dict[str, str] = {}
-    for attr in sorted(d for d in dir(entry) if d.endswith("_VERIFIED") and d.startswith("_R")):
-        tag = attr[1:4].lower()  # _R01_VERIFIED -> r01
-        for key in getattr(entry, attr):
-            rounds.setdefault(key, tag)
-    return rounds
-
-
 def render() -> str:
     from week3_2_practice_big_data__spark import REGISTRY
 
-    rounds = _driver_rounds()
     lines = [
         "# Operator registry ledger (generated — do not edit)",
         "",
         "Generated by `gen_operators.py` from the live query REGISTRY;",
         "`tests/test_registry_doc.py` asserts this file is in sync. One row",
         "per registered key: check mode (`oracle` = DuckDB value-hash gate,",
-        "`rows-only` = error/row-count/schema signal by design), the",
-        "builder's `file:line`, registry tags, and the first driver round",
-        "whose CORRECTNESS artifact verified the key (`pending` = awaiting",
-        "its first driver window; such keys are still pytest-replayed",
-        "against their oracle at sf0.001 and swept at sf0.01).",
+        "`rows-only` = error/row-count/schema signal by design), the module",
+        "that defines the builder, and its registry tags.",
         "",
     ]
     n_oracle = sum(1 for q in REGISTRY.values() if q.oracle is not None)
@@ -55,19 +41,14 @@ def render() -> str:
         f"**{len(REGISTRY)} keys: {n_oracle} oracle-checked, "
         f"{len(REGISTRY) - n_oracle} rows-only.**",
         "",
-        "| key | check | file:line | tags | driver |",
-        "|---|---|---|---|---|",
+        "| key | check | module | tags |",
+        "|---|---|---|---|",
     ]
     for key in sorted(REGISTRY):
         q = REGISTRY[key]
-        fn = inspect.unwrap(q.builder)
-        src = os.path.relpath(inspect.getsourcefile(fn), _REPO)
-        line = inspect.getsourcelines(fn)[1]
+        module = inspect.unwrap(q.builder).__module__
         mode = "oracle" if q.oracle is not None else "rows-only"
-        lines.append(
-            f"| {key} | {mode} | {src}:{line} | {', '.join(q.tags)} "
-            f"| {rounds.get(key, 'pending')} |"
-        )
+        lines.append(f"| {key} | {mode} | {module} | {', '.join(q.tags)} |")
     lines.append("")
     return "\n".join(lines)
 

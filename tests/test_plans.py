@@ -7,6 +7,8 @@ broadcast, and whole-stage codegen covers the hot path.
 
 from __future__ import annotations
 
+import re
+
 from week3_2_practice_big_data__spark import REGISTRY
 
 from .conftest import SF_SMALL
@@ -1180,11 +1182,26 @@ def _plan_tree(plan: str) -> list[str]:
     return tree
 
 
-def _first_line(tree: list[str], token: str) -> int:
+_TREE_NODE = re.compile(r"^[\s+:|*-]*(.+?)\s+\((\d+)\)$")
+
+
+def _first_line(tree: list[str], node: str) -> int:
+    """Index of the first tree line whose operator is exactly ``node``
+    (so "Sort" never binds to SortMergeJoin/SortAggregate, nor "Exchange"
+    to BroadcastExchange)."""
     for i, ln in enumerate(tree):
-        if token in ln:
+        m = _TREE_NODE.match(ln)
+        if m and m.group(1) == node:
             return i
-    raise AssertionError(f"{token!r} not in plan tree:\n" + "\n".join(tree))
+    raise AssertionError(f"{node!r} not in plan tree:\n" + "\n".join(tree))
+
+
+def _node_arguments(plan: str, tree_line: str) -> str:
+    """The ``Arguments:`` line of a tree node's detail block in a
+    formatted plan."""
+    name, node_id = _TREE_NODE.match(tree_line).groups()
+    block = plan.split(f"\n({node_id}) {name}", 1)[1].split("\n\n", 1)[0]
+    return next(ln for ln in block.splitlines() if ln.startswith("Arguments:"))
 
 
 def test_presorted_python_stages_keep_sort_below_python(spark):
@@ -1215,8 +1232,9 @@ def test_presorted_python_stages_keep_sort_below_python(spark):
         assert not any(
             "Sort" in ln or "Exchange" in ln for ln in tree[:py]
         ), (key, tree)
-        # the rangepartitioning exchange is the deterministic-output one
-        assert "rangepartitioning" in plan, key
+        # the exchange under the sort is the deterministic-output
+        # range-partitioning one
+        assert "rangepartitioning(" in _node_arguments(plan, tree[exch]), (key, plan)
 
 
 def test_checkpointed_python_stages_hide_python_below_the_sort(spark):
@@ -1238,7 +1256,7 @@ def test_checkpointed_python_stages_hide_python_below_the_sort(spark):
             ("Python" in ln) or ("MapInArrow" in ln) or ("Pandas" in ln)
             for ln in tree
         ), (key, tree)
-        assert _first_line(tree, "Sort") < _first_line(tree, "ExistingRDD"), (
+        assert _first_line(tree, "Sort") < _first_line(tree, "Scan ExistingRDD"), (
             key,
             tree,
         )

@@ -45,3 +45,16 @@ def test_registration_shape_builder_names_match_keys():
         if q.builder.__name__ != factory_aliases.get(key, key)
     }
     assert not bad, f"decorator-trap suspects (builder name != key): {bad}"
+
+
+def test_driver_contract_lists_keys_in_registration_order():
+    """queries() and oracle_sql() list keys in REGISTRY registration
+    order, with oracle_sql() holding exactly the keys that have one."""
+    import __spark_entry__ as entry
+    from week3_2_practice_big_data__spark import REGISTRY
+
+    assert list(entry.queries()) == list(REGISTRY)
+    expected = {k: q.oracle for k, q in REGISTRY.items() if q.oracle is not None}
+    got = entry.oracle_sql()
+    assert got == expected
+    assert list(got) == list(expected)

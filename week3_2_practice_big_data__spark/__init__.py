@@ -24,9 +24,8 @@ from .functions import projections, text, similarity, multimodal, scalar_ext  # 
 from .sources import generators, files  # noqa: F401
 from .plans import generative, iterative  # noqa: F401
 from .streaming import batch_windows, streams  # noqa: F401
-# Round-2 extensions register LAST: the driver verifies a bounded prefix of
-# the key list, and the prefix is already packed with this round's changed
-# keys (see __spark_entry__._ordered_keys) — new keys queue behind them.
+# Registration order is the order __spark_entry__.queries() lists keys in;
+# the later extension modules register after the core families.
 from .operators import subqueries, tpch, statml, quality, advanced, timeseries, partitioned  # noqa: F401
 from .functions import llmprep, semantics  # noqa: F401
 from .streaming import modern  # noqa: F401

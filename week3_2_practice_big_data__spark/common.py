@@ -3,9 +3,17 @@
 Centralized so the cross-engine float discipline (registry.py docstring) has
 exactly one definition per rule — a precision change here propagates to every
 Spark builder and stays in lockstep with the DuckDB oracle texts.
+
+It also owns the engine's ONE materialization cache (``checkpointed``): a
+session-scoped store of relations that several builders, or several
+references inside one builder, reuse. Every entry is keyed by
+``(applicationId, name, sf_dir, params)``; builders never build cache keys
+or hold cache dicts of their own.
 """
 
 from __future__ import annotations
+
+import threading
 
 import pyspark.sql.functions as F
 
@@ -124,28 +132,49 @@ def session_key(spark) -> str:
     return spark.sparkContext.applicationId
 
 
-def checkpointed(cache: dict, key, build):
-    """Materialize-once-per-key: eager localCheckpoint of build()'s result.
+# The materialization store: (applicationId, name, sf_dir, params) -> value.
+# One re-entrant lock guards it, so concurrent misses on one key build once
+# and a build that itself calls `checkpointed` on the same thread proceeds.
+_STORE: dict[tuple, object] = {}
+_STORE_LOCK = threading.RLock()
+
+
+def _memo(spark, name: str, build, sf_dir: str | None = None, params: tuple = ()):
+    """Return the stored value for (session, name, sf_dir, params), calling
+    ``build()`` once on a miss.
+
+    On a miss, entries keyed to OTHER sessions are evicted first (ADVICE
+    r6): one live session at a time is the usage pattern, and without
+    eviction a long-lived process that restarts sessions would leak each
+    dead session's materialized relations forever.
+    """
+    app = session_key(spark)
+    key = (app, name, None if sf_dir is None else sf_dir.rstrip("/"), params)
+    with _STORE_LOCK:
+        if key not in _STORE:
+            for k in [k for k in _STORE if k[0] != app]:
+                del _STORE[k]
+            _STORE[key] = build()
+        return _STORE[key]
+
+
+def checkpointed(spark, name: str, build, sf_dir: str | None = None, params: tuple = ()):
+    """Materialize-once: eager localCheckpoint of ``build()``'s result, kept
+    in the session's store under ``(name, sf_dir, params)``.
 
     The ONE sanctioned pattern for relations consumed multiple times via a
     temp view: persist()+view silently misses Spark's cache for plans
     containing collect_list (flagged nondeterministic) or higher-order
     lambdas (canonicalization fails), re-deriving the relation per
-    reference — an RDD-backed checkpoint cannot miss. Callers key by
-    (session_key(spark), sf_dir) for sf-dependent relations,
-    session_key(spark) otherwise.
+    reference — an RDD-backed checkpoint cannot miss.
 
-    On a miss, entries keyed to OTHER sessions are evicted first (ADVICE
-    r6): one live session at a time is the usage pattern, and without
-    eviction a long-lived process that restarts sessions would leak each
-    dead session's eagerly-materialized checkpoints forever.
+    ``name`` identifies the relation: builders that share a relation pass
+    the same name. Pass ``sf_dir`` for relations read from the tables
+    (``None`` for session-only relations such as the canvas grid) and
+    ``params`` (a hashable tuple) for any other input the result depends
+    on. Keys of other sessions are evicted on a miss (see ``_memo``).
     """
-    if key not in cache:
-        sess = key[0] if isinstance(key, tuple) else key
-        for k in [k for k in cache if (k[0] if isinstance(k, tuple) else k) != sess]:
-            del cache[k]
-        cache[key] = build().localCheckpoint(eager=True)
-    return cache[key]
+    return _memo(spark, name, lambda: build().localCheckpoint(eager=True), sf_dir, params)
 
 
 def local_rows_df(spark, schema_ddl: str, rows):
@@ -163,16 +192,19 @@ def local_rows_df(spark, schema_ddl: str, rows):
     createDataFrame's DDL-schema nullability).
 
     Scalars only (int/float/str/bool/None); use createDataFrame for
-    anything nested or larger than a few hundred rows.
+    anything nested or larger than a few hundred rows. The DDL is parsed by
+    Spark (so ``decimal(18,2)`` is one field), and a row whose arity differs
+    from the schema raises instead of being truncated.
     """
-    import pyspark.sql.functions as F
+    from pyspark.sql.types import StructType
 
-    fields = []
-    for fdef in schema_ddl.split(","):
-        name, typ = fdef.strip().split(None, 1)
-        fields.append((name, typ))
+    fields = [(f.name, f.dataType) for f in StructType.fromDDL(schema_ddl).fields]
     out = None
     for row in rows:
+        if len(row) != len(fields):
+            raise ValueError(
+                f"row {row!r} has {len(row)} values; schema has {len(fields)}"
+            )
         cols = [
             F.when(F.lit(True), F.lit(v).cast(t)).alias(n)
             for (n, t), v in zip(fields, row)

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
-from ..common import checkpointed, ordered_string_agg, session_key
+from ..common import checkpointed, ordered_string_agg
 from ..io import load_table
 from ..registry import register
 from .text import (
@@ -211,13 +211,11 @@ ORDER BY per_src.source
     tags=("ns", "text", "sampling"),
 )
 def ns_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..common import checkpointed, session_key
-
     _view(spark, sf_dir, "documents")
     checkpointed(
-        _DOMAIN_SRC_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark, "domain_src",
         lambda: spark.sql(_domain_src_sql("spark")).coalesce(1),
+        sf_dir,
     ).createOrReplaceTempView("domain_src")
     return spark.sql(
         _domain_mix_sql(
@@ -269,9 +267,6 @@ ORDER BY s.tau, s.source
 """
 
 
-_DOMAIN_SRC_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "ns_domain_temperature",
     oracle=_domain_temperature_sql("duckdb"),
@@ -283,13 +278,11 @@ _DOMAIN_SRC_CACHE: dict[tuple, DataFrame] = {}
     tags=("ns", "sampling", "text"),
 )
 def ns_domain_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..common import checkpointed, session_key
-
     _view(spark, sf_dir, "documents")
     checkpointed(
-        _DOMAIN_SRC_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark, "domain_src",
         lambda: spark.sql(_domain_src_sql("spark")).coalesce(1),
+        sf_dir,
     ).createOrReplaceTempView("domain_src")
     return spark.sql(
         _domain_temperature_sql(
@@ -312,7 +305,6 @@ def ns_domain_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _KN_TOP = 50
-_KN_BC_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _kn_bc_sql(dialect: str) -> str:
@@ -388,13 +380,9 @@ LIMIT {_KN_TOP}
     tags=("ns", "text", "statml"),
 )
 def ns_kn_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..common import checkpointed, session_key
-
     _view(spark, sf_dir, "documents")
     checkpointed(
-        _KN_BC_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_kn_bc_sql("spark")).coalesce(8),
+        spark, "kn_bc", lambda: spark.sql(_kn_bc_sql("spark")).coalesce(8), sf_dir
     ).createOrReplaceTempView("kn_bc")
     return spark.sql(
         _kn_bigram_sql("spark", bc_ref="SELECT v, w, c FROM kn_bc")
@@ -990,9 +978,6 @@ ORDER BY doc_id
 """
 
 
-_PPL_DOC_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cached_ppl_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_tokens, nll) materialized once per (session, sf) — the
     blocked-ntile tail consumes it twice, and CTE inlining would re-run
@@ -1002,11 +987,11 @@ def _cached_ppl_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _view(spark, sf_dir, "documents")
     return checkpointed(
-        _PPL_DOC_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark, "ppl_doc",
         lambda: spark.sql(
             _perplexity_doc_sql("spark", cached_tokens_ref(spark, sf_dir))
         ).coalesce(8),
+        sf_dir,
     )
 
 
@@ -1111,9 +1096,6 @@ ORDER BY doc_id
 """
 
 
-_IMP_Q_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "ns_sample_importance",
     oracle=_importance_sql("duckdb"),
@@ -1132,11 +1114,11 @@ def ns_sample_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from both the bucket-count and the rank CTE, and inlining would
     # re-run the regex scoring scan per reference.
     q = checkpointed(
-        _IMP_Q_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark, "imp_q",
         lambda: spark.sql(
             f"SELECT doc_id, quality FROM ({_quality_sql('spark')}) qq"
         ).coalesce(8),
+        sf_dir,
     )
     q.createOrReplaceTempView("imp_q")
     return spark.sql(
@@ -1260,9 +1242,6 @@ ORDER BY n_shared_spans DESC, da, db
 """
 
 
-_SUBSTR_SD_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "ns_dedup_substring",
     oracle=_substring_sql("duckdb"),
@@ -1277,13 +1256,11 @@ _SUBSTR_SD_CACHE: dict[tuple, DataFrame] = {}
     tags=("ns", "dedup", "text"),
 )
 def ns_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..common import checkpointed, session_key
-
     _view(spark, sf_dir, "documents")
-    key = (session_key(spark), sf_dir.rstrip("/"))
     checkpointed(
-        _SUBSTR_SD_CACHE, key,
+        spark, "substr_sd",
         lambda: spark.sql(_substring_sd_sql("spark")).coalesce(8),
+        sf_dir,
     ).createOrReplaceTempView("substr_sd")
     # the doc→rep map is the SHARED materialization (functions.text)
     from .text import cached_rep_map_ref
@@ -1864,7 +1841,6 @@ def ns_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _BLOOM_M = 65536  # bits
-_BLOOM_NG_CACHE: dict = {}
 
 
 def _cached_bloom_ng(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1873,9 +1849,7 @@ def _cached_bloom_ng(spark: SparkSession, sf_dir: str) -> DataFrame:
     decontamination stage (ns_pipeline_e2e, r8)."""
     _view(spark, sf_dir, "documents")
     return checkpointed(
-        _BLOOM_NG_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_ngram_sql("spark")).coalesce(8),
+        spark, "bloom_ng", lambda: spark.sql(_ngram_sql("spark")).coalesce(8), sf_dir
     )
 
 
@@ -2570,11 +2544,6 @@ def _pipeline_v2_oracle_sql() -> str:
     )
 
 
-_PIPE_FLAGS_CACHE: dict[tuple, DataFrame] = {}
-_PIPE_S4_CACHE: dict[tuple, DataFrame] = {}
-_PIPE_DOC2_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "ns_pipeline_e2e",
     oracle=_pipeline_v2_oracle_sql(),
@@ -2597,39 +2566,41 @@ def ns_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import _cached_minhash_pairs, cached_rep_map_ref
 
     _view(spark, sf_dir, "documents")
-    key = (session_key(spark), sf_dir.rstrip("/"))
     rep_ref = cached_rep_map_ref(spark, sf_dir)
     _cached_minhash_pairs(spark, sf_dir).createOrReplaceTempView(
         "minhash_pairs"
     )
     checkpointed(
-        _PIPE_FLAGS_CACHE, key,
+        spark, "pipe_flags",
         lambda: spark.sql(
             _pipe_flags_sql(
                 "spark", rep_ref=rep_ref,
                 pairs_ref="SELECT ai, bi FROM minhash_pairs",
             )
         ).coalesce(8),
+        sf_dir,
     ).createOrReplaceTempView("pipe_flags")
     _cached_ppl_doc(spark, sf_dir).createOrReplaceTempView("ppl_doc")
     checkpointed(
-        _PIPE_S4_CACHE, key,
+        spark, "pipe_s4",
         lambda: spark.sql(
             _pipe_s4_sql(
                 "spark", "SELECT * FROM pipe_flags",
                 pdoc_ref="SELECT doc_id, n_tokens, nll FROM ppl_doc",
             )
         ).coalesce(8),
+        sf_dir,
     ).createOrReplaceTempView("pipe_s4")
     _cached_bloom_ng(spark, sf_dir).createOrReplaceTempView("bloom_ng")
     checkpointed(
-        _PIPE_DOC2_CACHE, key,
+        spark, "pipe_doc2",
         lambda: spark.sql(
             _pipe_doc2_sql(
                 "spark", "SELECT * FROM pipe_s4",
                 ng_ref="SELECT doc_id, gram FROM bloom_ng",
             )
         ).coalesce(8),
+        sf_dir,
     ).createOrReplaceTempView("pipe_doc2")
     return spark.sql(
         "WITH "
@@ -2657,7 +2628,6 @@ def ns_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _CURR_SHARD = 64  # docs per shard (ns_global_shuffle's constant)
-_CURR_PB_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _curriculum_sql(
@@ -2727,13 +2697,13 @@ def ns_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per reference (r8 plan audit: 2 documents scans) — materialize once.
     _view(spark, sf_dir, "documents")
     checkpointed(
-        _CURR_PB_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark, "curr_pb",
         lambda: spark.sql(
             "SELECT doc_id, z, CAST(floor(z * 16e0) AS BIGINT) AS pb FROM ("
             + _qc_scored_sql("spark")
             + ") qs0"
         ).coalesce(8),
+        sf_dir,
     ).createOrReplaceTempView("curr_pb")
     return spark.sql(
         _curriculum_sql("spark", pb_ref="SELECT doc_id, z, pb FROM curr_pb")

@@ -20,12 +20,10 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..common import checkpointed, session_key
+from ..common import checkpointed
 from ..registry import register
 from ..session import ensure_package_on_workers
 from ..plans.generative import udf_grouped_map_render
-
-_POSTER_CACHE: dict = {}
 
 
 def _posters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -37,9 +35,7 @@ def _posters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the registered udf_grouped_map_render KEY itself still renders
     live — this cache covers the downstream consumers only)."""
     return checkpointed(
-        _POSTER_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: udf_grouped_map_render(spark, sf_dir),
+        spark, "poster", lambda: udf_grouped_map_render(spark, sf_dir), sf_dir
     )
 
 

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..io import load_table
 from ..registry import register
-from ..common import checkpointed, session_key
+from ..common import checkpointed
 from .. import synth
 
 _DIM = 64
@@ -210,9 +210,6 @@ GROUP BY vec_id, {band}
 """
 
 
-_BAND_SIG_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cached_band_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band signatures persisted per (session, sf): both consumers reference
     the relation twice (self-join sides / corpus+query probe) and Catalyst
@@ -222,7 +219,7 @@ def _cached_band_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
         _view(spark, sf_dir)
         return spark.sql(_band_sig_sql("spark")).coalesce(4)
 
-    return checkpointed(_BAND_SIG_CACHE, (session_key(spark), sf_dir.rstrip("/")), build)
+    return checkpointed(spark, "band_sig", build, sf_dir)
 
 
 def _band_sig_ref(dialect: str) -> str:
@@ -243,15 +240,12 @@ def _emb_norm_sql(dialect: str, rel: str = "embeddings", label: bool = True) -> 
     return f"SELECT {cols}, sqrt({na}) AS nrm FROM {rel}"
 
 
-_EMB_NORM_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cached_emb_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
         _view(spark, sf_dir)
         return spark.sql(_emb_norm_sql("spark")).coalesce(4)
 
-    return checkpointed(_EMB_NORM_CACHE, (session_key(spark), sf_dir.rstrip("/")), build)
+    return checkpointed(spark, "emb_norm", build, sf_dir)
 
 
 def _emb_norm_ref(dialect: str) -> str:
@@ -358,24 +352,17 @@ def _embed_pairs_oracle() -> str:
     )
 
 
-_CELLS_CACHE: dict[tuple, DataFrame] = {}
-_REP_CACHE: dict[tuple, DataFrame] = {}
-_REP_SIG_CACHE: dict[tuple, DataFrame] = {}
-_REP_NORM_CACHE: dict[tuple, DataFrame] = {}
-_GM_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _rep_views(spark: SparkSession, sf_dir: str) -> None:
     """Materialize the representative relations once per (session, sf):
     reps, rep band signatures, rep norms, and the member→rep map — every
     one is consumed at least twice by the pair plan."""
-    key = (session_key(spark), sf_dir.rstrip("/"))
-
     def reps():
         _view(spark, sf_dir)
         return spark.sql(_rep_sql("spark")).coalesce(4)
 
-    checkpointed(_REP_CACHE, key, reps).createOrReplaceTempView("embeddings_reps")
+    checkpointed(spark, "embeddings_reps", reps, sf_dir).createOrReplaceTempView(
+        "embeddings_reps"
+    )
 
     def sig():
         return spark.sql(_band_sig_sql("spark", rel="embeddings_reps")).coalesce(4)
@@ -391,9 +378,10 @@ def _rep_views(spark: SparkSession, sf_dir: str) -> None:
             _gm_sql("spark", "SELECT vec_id, embedding FROM embeddings_reps")
         ).coalesce(4)
 
-    checkpointed(_REP_SIG_CACHE, key, sig).createOrReplaceTempView("reps_band_sig")
-    checkpointed(_REP_NORM_CACHE, key, norm).createOrReplaceTempView("reps_norm")
-    checkpointed(_GM_CACHE, key, gm).createOrReplaceTempView("embeddings_gm")
+    for name, build in (
+        ("reps_band_sig", sig), ("reps_norm", norm), ("embeddings_gm", gm)
+    ):
+        checkpointed(spark, name, build, sf_dir).createOrReplaceTempView(name)
 
 
 @register(
@@ -743,14 +731,13 @@ ORDER BY cl.vec_id
 def ns_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     _view(spark, sf_dir)
     _rep_views(spark, sf_dir)
-    key = (session_key(spark), sf_dir.rstrip("/"))
 
     def cells():
         return spark.sql(
             f"WITH {_ivf_assign_ctes('spark')} SELECT vec_id, cell FROM cells"
         ).coalesce(4)
 
-    checkpointed(_CELLS_CACHE, key, cells).createOrReplaceTempView(
+    checkpointed(spark, "embeddings_cells", cells, sf_dir).createOrReplaceTempView(
         "embeddings_cells"
     )
     return spark.sql(

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..io import load_table
 from ..registry import register
-from ..common import checkpointed, session_key
+from ..common import checkpointed
 from .. import synth
 
 _P = 2_147_483_647  # hash modulus (2^31-1)
@@ -42,8 +42,6 @@ _REP_MAP_SQL = (
     "SELECT doc_id, min(doc_id) OVER (PARTITION BY text) AS rep "
     "FROM documents"
 )
-_TOK_MAT_CACHE: dict[tuple, "DataFrame"] = {}
-_REP_MAP_CACHE: dict[tuple, "DataFrame"] = {}
 
 
 def cached_tokens_ref(spark: SparkSession, sf_dir: str) -> str:
@@ -56,8 +54,7 @@ def cached_tokens_ref(spark: SparkSession, sf_dir: str) -> str:
     the shared oracle text was always single-pass."""
     _view(spark, sf_dir)
     checkpointed(
-        _TOK_MAT_CACHE, (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(tokens_sql("spark")).coalesce(8),
+        spark, "tok_mat", lambda: spark.sql(tokens_sql("spark")).coalesce(8), sf_dir
     ).createOrReplaceTempView("tok_mat")
     return "SELECT doc_id, pos, token FROM tok_mat"
 
@@ -69,8 +66,7 @@ def cached_rep_map_ref(spark: SparkSession, sf_dir: str) -> str:
     scans + text-partition windows)."""
     _view(spark, sf_dir)
     checkpointed(
-        _REP_MAP_CACHE, (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_REP_MAP_SQL).coalesce(8),
+        spark, "rep_map", lambda: spark.sql(_REP_MAP_SQL).coalesce(8), sf_dir
     ).createOrReplaceTempView("rep_map")
     return "SELECT doc_id, rep FROM rep_map"
 
@@ -200,9 +196,6 @@ SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN keep ON sh0.shingle = keep.shingle
 """
 
 
-_SHINGLE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cached_capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capped rep-shingle index materialized per (session, sf): the
     Jaccard stage references it three times (inverted-index self-join +
@@ -211,7 +204,7 @@ def _cached_capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         _view(spark, sf_dir)
         return spark.sql(_capped_shingles_sql("spark")).coalesce(4)
 
-    return checkpointed(_SHINGLE_CACHE, (session_key(spark), sf_dir.rstrip("/")), build)
+    return checkpointed(spark, "shingle", build, sf_dir)
 
 
 def _jaccard_sql(
@@ -336,9 +329,6 @@ GROUP BY doc_id, hp.i
 """
 
 
-_MINHASH_SIG_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cached_minhash_sig(
     spark: SparkSession, sf_dir: str, where: str = ""
 ) -> DataFrame:
@@ -350,9 +340,7 @@ def _cached_minhash_sig(
         _view(spark, sf_dir)
         return spark.sql(_minhash_sig_sql("spark", where)).coalesce(4)
 
-    return checkpointed(
-        _MINHASH_SIG_CACHE, (session_key(spark), sf_dir.rstrip("/"), where), build
-    )
+    return checkpointed(spark, "minhash_sig", build, sf_dir, (where,))
 
 
 def _minhash_sql(
@@ -549,9 +537,6 @@ ORDER BY hamming, ai, bi
 """
 
 
-_SIMHASH_FP_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cached_simhash_fp(
     spark: SparkSession, sf_dir: str, where: str = ""
 ) -> DataFrame:
@@ -564,9 +549,7 @@ def _cached_simhash_fp(
         _view(spark, sf_dir)
         return spark.sql(_simhash_fp_sql("spark", where)).coalesce(4)
 
-    return checkpointed(
-        _SIMHASH_FP_CACHE, (session_key(spark), sf_dir.rstrip("/"), where), build
-    )
+    return checkpointed(spark, "simhash_fp", build, sf_dir, (where,))
 
 
 @register(
@@ -686,9 +669,6 @@ ORDER BY cluster
     return "".join(parts)
 
 
-_MINHASH_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cached_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confirmed minhash pairs persisted per (session, sf): every label-
     propagation round references the edge list, and Catalyst inlines CTEs —
@@ -705,7 +685,7 @@ def _cached_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).coalesce(2)
 
-    return checkpointed(_MINHASH_PAIRS_CACHE, (session_key(spark), sf_dir.rstrip("/")), build)
+    return checkpointed(spark, "minhash_pairs", build, sf_dir)
 
 
 @register(

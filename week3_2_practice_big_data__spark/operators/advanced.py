@@ -24,10 +24,13 @@ one declarative plan with exact cross-engine results:
 
 from __future__ import annotations
 
+import itertools
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
-from ..common import checkpointed, session_key
+from ..common import checkpointed
 from ..io import load_table
 from ..registry import register
 
@@ -42,7 +45,6 @@ def _view(spark: SparkSession, sf_dir: str, name: str) -> None:
 
 _GD_STEPS = 3
 _GD_LR = "1e0"
-_GD_DATA_CACHE: dict[tuple, object] = {}
 
 
 def _gd_grad(j_expr: str) -> str:
@@ -119,9 +121,7 @@ def iter_gd_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached-training-set shape distributed SGD assumes.
     _view(spark, sf_dir, "lineitem")
     checkpointed(
-        _GD_DATA_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_GD_DATA_SQL),
+        spark, "gd_data", lambda: spark.sql(_GD_DATA_SQL), sf_dir
     ).createOrReplaceTempView("gd_data")
     return spark.sql(
         _gd_logreg_sql("spark", data_ref="SELECT y, x1, x2 FROM gd_data")
@@ -368,9 +368,6 @@ ORDER BY range_start
 """
 
 
-_ISL_EDGE_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "win_islands_blocked",
     oracle=_islands_sql("duckdb"),
@@ -387,9 +384,7 @@ def win_islands_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
         return spark.sql(_islands_edges_sql()).coalesce(8)
 
-    checkpointed(
-        _ISL_EDGE_CACHE, (session_key(spark), sf_dir.rstrip("/")), build
-    ).createOrReplaceTempView("isl_edges")
+    checkpointed(spark, "isl_edges", build, sf_dir).createOrReplaceTempView("isl_edges")
     return spark.sql(
         _islands_blocked_sql("SELECT b, s, e, lflush, rflush FROM isl_edges")
     )
@@ -583,7 +578,16 @@ LIMIT 20
 """
 
 
-_TRI_EDGE_CACHE: dict[tuple, DataFrame] = {}
+def _tri_edges_view(spark: SparkSession, sf_dir: str) -> None:
+    """Register the oriented token co-occurrence edge list, materialized
+    once and shared by the triangle/clustering/degree builders, as view
+    `tri_edges`."""
+    _view(spark, sf_dir, "documents")
+    checkpointed(
+        spark, "tri_edges",
+        lambda: spark.sql(_triangle_edges_sql("spark")).coalesce(8),
+        sf_dir,
+    ).createOrReplaceTempView("tri_edges")
 
 
 @register(
@@ -596,12 +600,7 @@ _TRI_EDGE_CACHE: dict[tuple, DataFrame] = {}
     tags=("graph", "iterative"),
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    checkpointed(
-        _TRI_EDGE_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_triangle_edges_sql("spark")).coalesce(8),
-    ).createOrReplaceTempView("tri_edges")
+    _tri_edges_view(spark, sf_dir)
     return spark.sql(
         _triangle_sql("spark", edges_ref="SELECT a, b FROM tri_edges")
     )
@@ -694,7 +693,14 @@ LIMIT 100
 """
 
 
-_BIP_EDGE_CACHE: dict[tuple, DataFrame] = {}
+def _bip_edges_view(spark: SparkSession, sf_dir: str) -> None:
+    """Register the part↔supplier edge list, materialized once and shared
+    by the bipartite, resource-allocation and BFS builders, as view
+    `bip_edges`."""
+    _view(spark, sf_dir, "lineitem")
+    checkpointed(
+        spark, "bip_edges", lambda: spark.sql(_BIP_EDGES_SQL).coalesce(8), sf_dir
+    ).createOrReplaceTempView("bip_edges")
 
 
 @register(
@@ -709,22 +715,18 @@ _BIP_EDGE_CACHE: dict[tuple, DataFrame] = {}
     tags=("graph", "join", "agg"),
 )
 def graph_bipartite_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "lineitem")
-    checkpointed(
-        _BIP_EDGE_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_BIP_EDGES_SQL).coalesce(8),
-    ).createOrReplaceTempView("bip_edges")
+    _bip_edges_view(spark, sf_dir)
     capped = _capped_edges_view(spark)
-    out = spark.sql(
-        _bipartite_jaccard_sql(
-            "spark",
-            edges_ref="SELECT p, s FROM bip_edges",
-            ecap_ref=f"SELECT p, s FROM {capped}",
+    try:
+        return spark.sql(
+            _bipartite_jaccard_sql(
+                "spark",
+                edges_ref="SELECT p, s FROM bip_edges",
+                ecap_ref=f"SELECT p, s FROM {capped}",
+            )
         )
-    )
-    spark.catalog.dropTempView(capped)  # plan already resolved/inlined
-    return out
+    finally:
+        spark.catalog.dropTempView(capped)  # plan already resolved/inlined
 
 
 # ---------------------------------------------------------------------------
@@ -819,25 +821,21 @@ LIMIT 100
     tags=("graph", "join", "agg"),
 )
 def graph_resource_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "lineitem")
-    checkpointed(
-        _BIP_EDGE_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_BIP_EDGES_SQL).coalesce(8),
-    ).createOrReplaceTempView("bip_edges")
+    _bip_edges_view(spark, sf_dir)
     capped = _capped_edges_view(spark)
-    out = spark.sql(
-        _resource_alloc_sql(
-            "spark",
-            edges_ref="SELECT p, s FROM bip_edges",
-            ecap_ref=f"SELECT p, s FROM {capped}",
+    try:
+        return spark.sql(
+            _resource_alloc_sql(
+                "spark",
+                edges_ref="SELECT p, s FROM bip_edges",
+                ecap_ref=f"SELECT p, s FROM {capped}",
+            )
         )
-    )
-    spark.catalog.dropTempView(capped)  # plan already resolved/inlined
-    return out
+    finally:
+        spark.catalog.dropTempView(capped)  # plan already resolved/inlined
 
 
-_CAPPED_VIEW_SEQ = 0
+_CAPPED_VIEW_SEQ = itertools.count(1)
 
 
 def _capped_edges_view(spark: SparkSession) -> str:
@@ -854,15 +852,13 @@ def _capped_edges_view(spark: SparkSession) -> str:
     overwrite each other's view mid-query; the per-invocation name (pid +
     counter) removes that, and the CALLER drops the view right after
     spark.sql() resolves it (resolution inlines the plan, so the catalog
-    entry is not needed at action time — no catalog accumulation). The
+    entry is not needed at action time — no catalog accumulation), also
+    when analysis raises. The counter is an ``itertools.count``, whose
+    ``next`` is atomic under the GIL, so threads never share a name. The
     checkpointed blocks themselves are freed by the ContextCleaner once
     the returned plan is unreachable; they are per-run MBs, never
     cross-run state."""
-    global _CAPPED_VIEW_SEQ
-    _CAPPED_VIEW_SEQ += 1
-    import os as _os
-
-    name = f"bip_edges_capped_{_os.getpid()}_{_CAPPED_VIEW_SEQ}"
+    name = f"bip_edges_capped_{os.getpid()}_{next(_CAPPED_VIEW_SEQ)}"
     spark.sql(
         f"""
 SELECT e.p, e.s FROM bip_edges e
@@ -952,12 +948,7 @@ LIMIT 20
     tags=("graph", "iterative", "agg"),
 )
 def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    checkpointed(
-        _TRI_EDGE_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_triangle_edges_sql("spark")).coalesce(8),
-    ).createOrReplaceTempView("tri_edges")
+    _tri_edges_view(spark, sf_dir)
     return spark.sql(
         _clustering_sql("spark", edges_ref="SELECT a, b FROM tri_edges")
     )
@@ -1051,12 +1042,7 @@ FROM agg
     tags=("graph", "agg", "stats"),
 )
 def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    checkpointed(
-        _TRI_EDGE_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_triangle_edges_sql("spark")).coalesce(8),
-    ).createOrReplaceTempView("tri_edges")
+    _tri_edges_view(spark, sf_dir)
     return spark.sql(
         _degree_dist_sql("spark", edges_ref="SELECT a, b FROM tri_edges")
     )
@@ -1084,8 +1070,6 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _ALS_LAMBDA = "0.1e0"
-_ALS_R_CACHE: dict[tuple, DataFrame] = {}
-_ALS_P_CACHE: dict[tuple, DataFrame] = {}
 
 _ALS_RATINGS_SQL = """
 SELECT o.o_custkey AS u, l.l_partkey AS i,
@@ -1176,15 +1160,12 @@ JOIN qn q ON q.i = r.i
 def iter_als_rank2(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("lineitem", "orders"):
         _view(spark, sf_dir, t)
-    key = (session_key(spark), sf_dir.rstrip("/"))
     checkpointed(
-        _ALS_R_CACHE, key, lambda: spark.sql(_ALS_RATINGS_SQL).coalesce(8)
+        spark, "als_r", lambda: spark.sql(_ALS_RATINGS_SQL).coalesce(8), sf_dir
     ).createOrReplaceTempView("als_r")
     r_ref = "SELECT u, i, rt FROM als_r"
     checkpointed(
-        _ALS_P_CACHE,
-        key,
-        lambda: spark.sql(_als_user_step_sql(r_ref)).coalesce(4),
+        spark, "als_p", lambda: spark.sql(_als_user_step_sql(r_ref)).coalesce(4), sf_dir
     ).createOrReplaceTempView("als_p")
     return spark.sql(
         _als_final_sql(r_ref, p_ref="SELECT u, f1, f2 FROM als_p")
@@ -1308,13 +1289,8 @@ def _bfs_expand(und: DataFrame, frontier: DataFrame, visited: DataFrame):
 def iter_bfs_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
-    for t in ("lineitem", "supplier"):
-        _view(spark, sf_dir, t)
-    checkpointed(
-        _BIP_EDGE_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_BIP_EDGES_SQL).coalesce(8),
-    ).createOrReplaceTempView("bip_edges")
+    _view(spark, sf_dir, "supplier")
+    _bip_edges_view(spark, sf_dir)
     und = spark.sql(
         f"WITH bip AS (SELECT p, s FROM bip_edges) {_BFS_UND_SQL}"
     ).localCheckpoint(eager=True)

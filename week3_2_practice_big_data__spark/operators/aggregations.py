@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..io import load_table
 from ..registry import register
-from ..common import dec as _dec
+from ..common import checkpointed, dec as _dec
 from .. import synth
 
 # ---------------------------------------------------------------------------
@@ -1000,9 +1000,6 @@ ORDER BY type_a, type_b
 """
 
 
-_KMV_D_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "agg_sketch_kmv_intersect",
     oracle=_kmv_sql("duckdb"),
@@ -1018,12 +1015,8 @@ _KMV_D_CACHE: dict[tuple, DataFrame] = {}
 )
 def agg_sketch_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    from ..common import checkpointed, session_key
-
     checkpointed(
-        _KMV_D_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_KMV_D_SQL).coalesce(8),
+        spark, "kmv_d", lambda: spark.sql(_KMV_D_SQL).coalesce(8), sf_dir
     ).createOrReplaceTempView("kmv_d")
     return spark.sql(_kmv_sql("spark", d_ref="SELECT t, u FROM kmv_d"))
 

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..common import checkpointed
 from ..io import load_table
 from ..registry import register
 
@@ -138,9 +139,6 @@ SELECT stage, n_users FROM (
 """
 
 
-_FUNNEL_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "win_funnel_conversion",
     oracle=_funnel_sql("duckdb"),
@@ -151,17 +149,13 @@ _FUNNEL_CACHE: dict[tuple, DataFrame] = {}
     tags=("window", "analytics"),
 )
 def win_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..common import checkpointed, session_key
-
     _view(spark, sf_dir)
-    key = (session_key(spark), sf_dir.rstrip("/"))
     refs = {}
     prev = None
     for name, stage in (("v", "view"), ("c", "click"), ("p", "purchase")):
         sql = _funnel_stage_sql("spark", stage, prev)
         checkpointed(
-            _FUNNEL_CACHE, key + (name,),
-            lambda q=sql: spark.sql(q).coalesce(4),
+            spark, f"funnel_{name}", lambda q=sql: spark.sql(q).coalesce(4), sf_dir
         ).createOrReplaceTempView(f"funnel_{name}")
         refs[name] = prev = f"SELECT user_id, t FROM funnel_{name}"
     return spark.sql(_funnel_sql("spark", refs["v"], refs["c"], refs["p"]))

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
-from ..common import checkpointed, session_key
+from ..common import checkpointed
 from ..io import load_table
 from ..registry import register
 
@@ -264,7 +264,6 @@ def src_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _DRIFT_B = 16
-_DRIFT_HIST_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _drift_hist_sql(dialect: str) -> str:
@@ -342,9 +341,9 @@ ORDER BY event_type
 def dq_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     _views(spark, sf_dir, ("events",))
     checkpointed(
-        _DRIFT_HIST_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark, "drift_hist",
         lambda: spark.sql(_drift_hist_sql("spark")).coalesce(1),
+        sf_dir,
     ).createOrReplaceTempView("drift_hist")
     return spark.sql(
         _drift_sql(
@@ -419,8 +418,6 @@ def dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (CTE inlining would re-run the events scan per reference).
 # ---------------------------------------------------------------------------
 
-_RC_DAILY_CACHE: dict[tuple, DataFrame] = {}
-
 
 def _rowcount_daily_sql(dialect: str) -> str:
     us = _us(dialect)
@@ -470,9 +467,9 @@ ORDER BY d.day
 def dq_rowcount_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     _views(spark, sf_dir, ("events",))
     checkpointed(
-        _RC_DAILY_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark, "rc_daily",
         lambda: spark.sql(_rowcount_daily_sql("spark")).coalesce(1),
+        sf_dir,
     ).createOrReplaceTempView("rc_daily")
     return spark.sql(
         _rowcount_anomaly_sql("spark", daily_ref="SELECT day, c FROM rc_daily")

@@ -1078,20 +1078,17 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _STUMP_VB = 16
-_STUMP_HIST_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _cached_stump_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 16×24 (value-bucket, hour) class histogram materialized once
     per (session, sf) as view `stump_hist` — the single corpus pass
     shared by ml_decision_stump and ml_gbt_boost2 (r8)."""
-    from ..common import session_key
-
     _view(spark, sf_dir, "events")
     df = checkpointed(
-        _STUMP_HIST_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark, "stump_hist",
         lambda: spark.sql(_stump_hist_sql("spark")).coalesce(1),
+        sf_dir,
     )
     df.createOrReplaceTempView("stump_hist")
     return df

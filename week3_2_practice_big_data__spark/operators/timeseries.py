@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
+from ..common import checkpointed
 from ..io import load_table
 from ..registry import register
 
@@ -479,9 +480,6 @@ ORDER BY user_id, bkt, kind
 """
 
 
-_LTTB_EV_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "ts_downsample_lttb",
     oracle=_lttb_sql("duckdb"),
@@ -494,13 +492,9 @@ _LTTB_EV_CACHE: dict[tuple, DataFrame] = {}
     tags=("timeseries", "window", "sampling"),
 )
 def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..common import checkpointed, session_key
-
     _view(spark, sf_dir)
     checkpointed(
-        _LTTB_EV_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_lttb_ev_sql("spark")).coalesce(8),
+        spark, "lttb_ev", lambda: spark.sql(_lttb_ev_sql("spark")).coalesce(8), sf_dir
     ).createOrReplaceTempView("lttb_ev")
     return spark.sql(
         _lttb_sql(
@@ -678,9 +672,6 @@ ORDER BY lag_k
 """
 
 
-_ACF_ORDERED_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "ts_autocorr",
     oracle=_autocorr_sql("duckdb"),
@@ -695,13 +686,11 @@ _ACF_ORDERED_CACHE: dict[tuple, DataFrame] = {}
     tags=("timeseries", "stats", "window"),
 )
 def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..common import checkpointed, session_key
-
     _view(spark, sf_dir)
     checkpointed(
-        _ACF_ORDERED_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark, "acf_ordered",
         lambda: spark.sql(_acf_ordered_sql("spark")).coalesce(1),
+        sf_dir,
     ).createOrReplaceTempView("acf_ordered")
     return spark.sql(
         _autocorr_sql("spark", ordered_ref="SELECT ym, i FROM acf_ordered")
@@ -823,9 +812,6 @@ ORDER BY lag_k
 """
 
 
-_CCF_DAILY_CACHE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "ts_cross_corr",
     oracle=_cross_corr_sql("duckdb"),
@@ -838,13 +824,11 @@ _CCF_DAILY_CACHE: dict[tuple, DataFrame] = {}
     tags=("timeseries", "stats"),
 )
 def ts_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..common import checkpointed, session_key
-
     _view(spark, sf_dir)
     checkpointed(
-        _CCF_DAILY_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
+        spark, "ccf_daily",
         lambda: spark.sql(_ccf_daily_sql("spark")).coalesce(1),
+        sf_dir,
     ).createOrReplaceTempView("ccf_daily")
     return spark.sql(
         _cross_corr_sql("spark", daily_ref="SELECT d, x, y FROM ccf_daily")

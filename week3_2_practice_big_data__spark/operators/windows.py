@@ -23,6 +23,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..common import checkpointed
 from ..io import load_table
 from ..registry import register
 from .. import synth
@@ -530,7 +531,6 @@ def win_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _ABC_P = 1_000_003
-_ABC_PR_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _pareto_rev_sql() -> str:
@@ -613,13 +613,9 @@ def win_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The per-part revenue relation feeds both the bucket-summary chain
     # and the rank join; CTE inlining would scan lineitem once per
     # reference (r8 plan audit: 2 scans) — materialize it once.
-    from ..common import checkpointed, session_key
-
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     checkpointed(
-        _ABC_PR_CACHE,
-        (session_key(spark), sf_dir.rstrip("/")),
-        lambda: spark.sql(_pareto_rev_sql()).coalesce(8),
+        spark, "abc_pr", lambda: spark.sql(_pareto_rev_sql()).coalesce(8), sf_dir
     ).createOrReplaceTempView("abc_pr")
     return spark.sql(
         _pareto_abc_sql("spark", pr_ref="SELECT p_partkey, rev_u FROM abc_pr")

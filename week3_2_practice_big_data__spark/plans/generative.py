@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..common import clip01 as _clip01
-from ..common import checkpointed, session_key
+from ..common import checkpointed
 from .. import synth
 from .png import encode_png_rgb, png_dimensions
 
@@ -1202,16 +1202,13 @@ ORDER BY row, col
 """
 
 
-_CANVAS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cached_canvas(spark: SparkSession) -> DataFrame:
     """Default-parameter composited canvas, persisted per session: the
     4-neighbor gather references it 4 times and Catalyst inlines CTEs."""
     def build():
         return spark.sql(_composite_sql("spark", order_by=False)).coalesce(4)
 
-    return checkpointed(_CANVAS_CACHE, session_key(spark), build)
+    return checkpointed(spark, "canvas", build)
 
 
 @register(
@@ -1467,9 +1464,6 @@ ORDER BY row, col
 """
 
 
-_MASK_CACHE: dict[int, DataFrame] = {}
-
-
 def _cached_mask(spark: SparkSession) -> DataFrame:
     """Default-parameter rasterized mask, materialized per session (see
     mask_ref note in _shadow_composite_sql)."""
@@ -1479,7 +1473,7 @@ def _cached_mask(spark: SparkSession) -> DataFrame:
             + "\nSELECT blob_id, row, col, x, y, inside, mask_f FROM mask"
         ).coalesce(4)
 
-    return checkpointed(_MASK_CACHE, session_key(spark), build)
+    return checkpointed(spark, "poster_mask", build)
 
 
 @register(

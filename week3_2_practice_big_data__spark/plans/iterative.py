@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..common import session_key
+from ..common import _memo
 from ..io import load_table
 from ..registry import register
 from ..functions.text import tokens_sql
@@ -124,9 +124,6 @@ def _pagerank_oracle() -> str:
     return _iterate_sql(_edges_sql("duckdb"))
 
 
-_CACHED: dict[tuple, tuple] = {}
-
-
 def _cached_graph(spark: SparkSession, sf_dir: str):
     """edges / nodes / outdeg as persisted DataFrames + node count.
 
@@ -136,9 +133,7 @@ def _cached_graph(spark: SparkSession, sf_dir: str):
     """
     import pyspark.sql.functions as F
 
-    # keyed by session too: a cached DataFrame is dead once its session stops
-    key = (session_key(spark), sf_dir.rstrip("/"))
-    if key not in _CACHED:
+    def build():
         load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
         # The graph is VOCAB-sized (distinct tokens / bigrams), bounded by
         # vocabulary — not corpus-sized. One heavy pass builds it; compact
@@ -158,8 +153,9 @@ def _cached_graph(spark: SparkSession, sf_dir: str):
         # the oracle's greatest(count(*), 1): an empty vocabulary yields an
         # empty result, not a constant-folded divide-by-zero literal.
         n = max(nodes.count(), 1)
-        _CACHED[key] = (edges, nodes, outdeg, n)
-    return _CACHED[key]
+        return edges, nodes, outdeg, n
+
+    return _memo(spark, "pagerank_graph", build, sf_dir)
 
 
 @register(
@@ -289,15 +285,11 @@ LIMIT 20
     return "".join(parts)
 
 
-_CC_CACHE: dict[tuple, object] = {}
-
-
 def _cached_cc_graph(spark: SparkSession):
     """Symmetrized distinct edge list + node set, persisted per session."""
     import pyspark.sql.functions as F
 
-    key = session_key(spark)
-    if key not in _CC_CACHE:
+    def build():
         edges = spark.sql(_cc_edges_sql("spark"))
         und = (
             edges.select("src", "dst")
@@ -310,8 +302,9 @@ def _cached_cc_graph(spark: SparkSession):
         )
         nodes = und.select(F.col("src").alias("node")).distinct().coalesce(1).persist()
         nodes.count()
-        _CC_CACHE[key] = (und, nodes)
-    return _CC_CACHE[key]
+        return und, nodes
+
+    return _memo(spark, "cc_graph", build)
 
 
 @register(
