@@ -282,6 +282,78 @@ def test_poster_shadow_param_point_matches_oracle(spark):
     compare(sdf, ddf, key="gen_poster_shadow:param")
 
 
+# sha256 of the DuckDB render's (row, col, r, g, b) as float64, sorted by
+# (row, col). The two engines read the same SQL text, so a change to that
+# text moves both together and parity alone cannot catch it; these pin the
+# pixels. The points cover both containment strategies, every theme, all
+# five lights of the UI, 1 to 30 blobs, 48 and 64 px and the 7:10 aspect.
+_COMPOSITE_GOLDEN = [
+    (dict(seed=42, nb=6, canvas=48, lx="-0.6e0", ly="0.8e0", theme=None),
+     "8fd5760d1bdb4e16631ef79eb5384920be3a6fdc3277141597a1ff1aa2a9ceb3"),
+    (dict(seed=7, nb=1, canvas=64, lx="0.4e0", ly="-0.7e0", theme="cool",
+          scanline=True),
+     "68be3ad031b42c02a11bd2db465f55dd4c540762b632ef602147ddcce564d5cd"),
+    (dict(seed=123, nb=20, canvas=48, lx="0.8e0", ly="0.6e0", theme="warm"),
+     "a547860107452530799dce224162ba9271d50fc7b36833c911d3588053ae1e58"),
+    (dict(seed=999, nb=30, canvas=64, lx="-0.7e0", ly="-0.4e0",
+          theme="neutral", scanline=True),
+     "d5aa2844d97bbb3abc9afb341cc8d28c126b5e8ceb2ee1d9f8404979e5b799fb"),
+    (dict(seed=5, nb=14, canvas=64, lx="0e0", ly="1e0", theme=None,
+          scanline=True),
+     "511b6844da87a6a72732c66b968fea2ffb77be9430426af1e5d8f33586a370a3"),
+    (dict(seed=31, nb=30, canvas=48, lx="0e0", ly="1e0", theme="cool"),
+     "e9e89abfdd5ce3a4d9b09fba742c1586f912c1a6313d6603c1cdf373c625e09e"),
+    (dict(seed=42, nb=6, canvas=70, canvas_h=100, theme="cool"),
+     "beb04d4c8b4d4ca0c165db7485d4b86700136f8f807f1341a87a6163c6d900ab"),
+    (dict(seed=8, nb=1, canvas=70, canvas_h=100, lx="0.8e0", ly="0.6e0",
+          theme="warm", scanline=True),
+     "8e41669e1c50790d651a497cf1fdb985b44bef9d0b3b81b2af6b8c59f83cdaf5"),
+]
+_SHADOW_GOLDEN = "825e50188f0cdc4ddb4a27a33aa3e891ec71bab8b0e463e91b0420ca489b6ee1"
+
+
+def _duck_pixel_digest(sql: str) -> str:
+    import hashlib
+
+    import duckdb
+
+    df = duckdb.connect().execute(sql).fetch_df().sort_values(["row", "col"])
+    px = df[["row", "col", "r", "g", "b"]].to_numpy(dtype="float64")
+    return hashlib.sha256(px.tobytes()).hexdigest()
+
+
+def test_composite_pixels_match_golden_hashes():
+    from week3_2_practice_big_data__spark.plans.generative import (
+        _composite_sql,
+        _shadow_composite_sql,
+    )
+
+    for pt, digest in _COMPOSITE_GOLDEN:
+        assert _duck_pixel_digest(_composite_sql("duckdb", **pt)) == digest, pt
+    assert _duck_pixel_digest(_shadow_composite_sql("duckdb")) == _SHADOW_GOLDEN
+
+
+def test_poster_blob_count_bounds(spark):
+    """n_blobs is data in the render (1..30, the slider's range): both ends
+    match the oracle, and a count outside the range is refused rather
+    than drawn with fewer blobs."""
+    import pytest
+
+    from week3_2_practice_big_data__spark.plans.generative import _composite_sql
+    from .oracle import compare, duck_run
+
+    for nb in (1, 30):
+        pt = dict(seed=17, nb=nb, canvas=48, theme="warm", scanline=True)
+        compare(
+            spark.sql(_composite_sql("spark", **pt)),
+            duck_run(_composite_sql("duckdb", **pt), SF_SMALL),
+            key=f"poster:nb={nb}",
+        )
+    for nb in (0, 31):
+        with pytest.raises(ValueError):
+            _composite_sql("spark", nb=nb)
+
+
 def test_bg_colormap_matches_lut_reference(spark):
     """gen_poster_bg_colormap reproduces matplotlib's colormap pipeline:
     independent Python recomputation (t → 256-LUT index → anchor

@@ -175,6 +175,28 @@ def test_reservoir_sample_is_per_source_k(spark):
     assert all(len(v) == 20 for v in per.values())  # every source has >=20 docs
 
 
+def test_bipartite_jaccard_concurrent_scale_factors(spark):
+    """Two threads run graph_bipartite_jaccard in one session on different
+    scale factors: the shared edge list and the capped edges are bound into
+    each query, not published as views, so each result equals its own
+    oracle and no bip_edges* view is left in the catalog."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from .conftest import SF_ORACLE
+    from .oracle import compare, duck_run
+
+    entry = REGISTRY["graph_bipartite_jaccard"]
+
+    def run(sf_dir: str) -> None:
+        df = entry.builder(spark, sf_dir)
+        compare(df, duck_run(entry.oracle, sf_dir), key=f"bipartite:{sf_dir}")
+
+    with ThreadPoolExecutor(2) as pool:
+        list(pool.map(run, (SF_SMALL, SF_ORACLE)))
+    left = [t.name for t in spark.catalog.listTables() if t.name.startswith("bip_edges")]
+    assert left == []
+
+
 def test_build_once_single_winner_under_racing_builders():
     """ADVICE r2: concurrent scratch builds must never expose a partially
     built directory. Race 8 threads through build_once; every thread must

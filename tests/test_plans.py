@@ -937,11 +937,15 @@ def test_bfs_round_plan_equi_joins_only(spark):
         _BFS_SEEDS_SQL,
         _BFS_UND_SQL,
         _bfs_expand,
+        _bip_edges,
     )
 
-    # builder run primes the bip_edges checkpoint + views
+    # builder run primes the bip_edges checkpoint + the supplier view
     REGISTRY["iter_bfs_sssp"].builder(spark, SF_SMALL).collect()
-    und = spark.sql(f"WITH bip AS (SELECT p, s FROM bip_edges) {_BFS_UND_SQL}")
+    und = spark.sql(
+        "WITH bip AS (SELECT p, s FROM {bip}) " + _BFS_UND_SQL,
+        bip=_bip_edges(spark, SF_SMALL),
+    )
     frontier = spark.sql(_BFS_SEEDS_SQL)
     new = _bfs_expand(und, frontier, frontier.select("node"))
     plan = new._jdf.queryExecution().executedPlan().toString()
@@ -1260,3 +1264,45 @@ def test_checkpointed_python_stages_hide_python_below_the_sort(spark):
             key,
             tree,
         )
+
+
+def _poster_render(spark, **params):
+    from week3_2_practice_big_data__spark.plans.generative import _composite_sql
+
+    return spark.sql(_composite_sql("spark", canvas=64, scanline=True, **params))
+
+
+def test_poster_render_is_two_stages(spark):
+    """A 64 px poster edit runs as one single-partition pipeline: at most
+    two exchanges, no range exchange under the final ORDER BY, no
+    nested-loop join, and at most four jobs."""
+    sc = spark.sparkContext
+    group = "test-poster-render-shape"
+    sc.setJobGroup(group, group)
+    try:
+        df = _poster_render(
+            spark, seed=7, nb=9, lx="0.4e0", ly="-0.7e0", theme="warm"
+        )
+        df.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"(?<![A-Za-z])Exchange ", final)) <= 2, final
+    assert "rangepartitioning" not in final, final
+    assert "BroadcastNestedLoopJoin" not in final, final
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+
+
+def test_poster_edits_reuse_compiled_code(spark):
+    """The UI parameters are data, so an edit at the same canvas generates
+    the same Java source: after one render, renders with another seed,
+    light, theme and blob count compile nothing."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+    _poster_render(spark, seed=42, nb=14, lx="-0.6e0", ly="0.8e0").collect()
+    before = compiles.getCount()
+    edit = dict(seed=1234, lx="0.8e0", ly="0.6e0", theme="cool")
+    _poster_render(spark, nb=14, **edit).collect()
+    _poster_render(spark, nb=20, **edit).collect()
+    assert compiles.getCount() == before

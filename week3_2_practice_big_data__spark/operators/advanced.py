@@ -24,9 +24,6 @@ one declarative plan with exact cross-engine results:
 
 from __future__ import annotations
 
-import itertools
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
@@ -624,7 +621,9 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-_BIP_EDGES_SQL = "SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem"
+# `{lineitem}`: the builders bind the table with spark.sql(text, lineitem=df);
+# the oracles read DuckDB's `lineitem` view.
+_BIP_EDGES_SQL = "SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM {lineitem}"
 
 # Per-part fan-out cap for pair generation — the graph twin of the dedup
 # family's df ≤ 50 span cap: a part shared by k suppliers emits C(k,2)
@@ -665,7 +664,7 @@ def _bipartite_jaccard_sql(
     )
     return f"""
 WITH edges AS (
-  {edges_ref or _BIP_EDGES_SQL}
+  {edges_ref or _BIP_EDGES_SQL.format(lineitem="lineitem")}
 ),
 deg AS (
   SELECT s, CAST(count(*) AS BIGINT) AS d FROM edges GROUP BY s
@@ -693,14 +692,18 @@ LIMIT 100
 """
 
 
-def _bip_edges_view(spark: SparkSession, sf_dir: str) -> None:
-    """Register the part↔supplier edge list, materialized once and shared
-    by the bipartite, resource-allocation and BFS builders, as view
-    `bip_edges`."""
-    _view(spark, sf_dir, "lineitem")
-    checkpointed(
-        spark, "bip_edges", lambda: spark.sql(_BIP_EDGES_SQL).coalesce(8), sf_dir
-    ).createOrReplaceTempView("bip_edges")
+def _bip_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part↔supplier edge list, materialized once per session and
+    shared by the bipartite, resource-allocation and BFS builders. Every
+    consumer binds it into its query text with ``spark.sql(text, bip=…)``,
+    so no view name is shared between concurrent builders."""
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    return checkpointed(
+        spark,
+        "bip_edges",
+        lambda: spark.sql(_BIP_EDGES_SQL, lineitem=lineitem).coalesce(8),
+        sf_dir,
+    )
 
 
 @register(
@@ -715,18 +718,16 @@ def _bip_edges_view(spark: SparkSession, sf_dir: str) -> None:
     tags=("graph", "join", "agg"),
 )
 def graph_bipartite_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _bip_edges_view(spark, sf_dir)
-    capped = _capped_edges_view(spark)
-    try:
-        return spark.sql(
-            _bipartite_jaccard_sql(
-                "spark",
-                edges_ref="SELECT p, s FROM bip_edges",
-                ecap_ref=f"SELECT p, s FROM {capped}",
-            )
-        )
-    finally:
-        spark.catalog.dropTempView(capped)  # plan already resolved/inlined
+    bip = _bip_edges(spark, sf_dir)
+    return spark.sql(
+        _bipartite_jaccard_sql(
+            "spark",
+            edges_ref="SELECT p, s FROM {bip}",
+            ecap_ref="SELECT p, s FROM {capped}",
+        ),
+        bip=bip,
+        capped=_capped_edges(spark, bip),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -782,7 +783,7 @@ def _resource_alloc_sql(
     )
     return f"""
 WITH edges AS (
-  {edges_ref or _BIP_EDGES_SQL}
+  {edges_ref or _BIP_EDGES_SQL.format(lineitem="lineitem")}
 ),
 pdeg AS (
   SELECT p, CAST(count(*) AS BIGINT) AS d FROM edges GROUP BY p
@@ -821,52 +822,33 @@ LIMIT 100
     tags=("graph", "join", "agg"),
 )
 def graph_resource_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _bip_edges_view(spark, sf_dir)
-    capped = _capped_edges_view(spark)
-    try:
-        return spark.sql(
-            _resource_alloc_sql(
-                "spark",
-                edges_ref="SELECT p, s FROM bip_edges",
-                ecap_ref=f"SELECT p, s FROM {capped}",
-            )
-        )
-    finally:
-        spark.catalog.dropTempView(capped)  # plan already resolved/inlined
+    bip = _bip_edges(spark, sf_dir)
+    return spark.sql(
+        _resource_alloc_sql(
+            "spark",
+            edges_ref="SELECT p, s FROM {bip}",
+            ecap_ref="SELECT p, s FROM {capped}",
+        ),
+        bip=bip,
+        capped=_capped_edges(spark, bip),
+    )
 
 
-_CAPPED_VIEW_SEQ = itertools.count(1)
-
-
-def _capped_edges_view(spark: SparkSession) -> str:
-    """Register the per-invocation capped edge list (parts with degree
-    <= _BIP_PART_CAP) under a UNIQUE view name, materialized behind a
-    LAZY localCheckpoint, and return the name. The checkpoint is the
-    point: it is a physical barrier Catalyst's inner-join flattening
-    cannot reorder across, so the hot-part cap provably prunes candidate
-    GENERATION (before the per-part self-join explodes C(d,2) pairs)
-    instead of filtering after it. Rebuilt per builder call — per-run
-    work, nothing cached across invocations.
-
-    ADVICE r13: a fixed view name let concurrent builders in one session
-    overwrite each other's view mid-query; the per-invocation name (pid +
-    counter) removes that, and the CALLER drops the view right after
-    spark.sql() resolves it (resolution inlines the plan, so the catalog
-    entry is not needed at action time — no catalog accumulation), also
-    when analysis raises. The counter is an ``itertools.count``, whose
-    ``next`` is atomic under the GIL, so threads never share a name. The
-    checkpointed blocks themselves are freed by the ContextCleaner once
-    the returned plan is unreachable; they are per-run MBs, never
-    cross-run state."""
-    name = f"bip_edges_capped_{os.getpid()}_{next(_CAPPED_VIEW_SEQ)}"
-    spark.sql(
-        f"""
-SELECT e.p, e.s FROM bip_edges e
-JOIN (SELECT p FROM bip_edges GROUP BY p
-      HAVING count(*) <= {_BIP_PART_CAP}) c
-  ON c.p = e.p"""
-    ).localCheckpoint(eager=False).createOrReplaceTempView(name)
-    return name
+def _capped_edges(spark: SparkSession, bip: DataFrame) -> DataFrame:
+    """The edge list restricted to parts with degree <= _BIP_PART_CAP,
+    behind a LAZY localCheckpoint. The checkpoint is the point: it is a
+    physical barrier Catalyst's inner-join flattening cannot reorder
+    across, so the hot-part cap provably prunes candidate GENERATION
+    (before the per-part self-join explodes C(d,2) pairs) instead of
+    filtering after it. Rebuilt per builder call — per-run work, nothing
+    cached across invocations; the ContextCleaner frees the blocks once
+    the consuming plan is unreachable."""
+    return spark.sql(
+        "SELECT e.p, e.s FROM {bip} e "
+        "JOIN (SELECT p FROM {bip} GROUP BY p "
+        f"HAVING count(*) <= {_BIP_PART_CAP}) c ON c.p = e.p",
+        bip=bip,
+    ).localCheckpoint(eager=False)
 
 # ---------------------------------------------------------------------------
 # graph_clustering_coeff — local clustering coefficient on the token
@@ -1221,7 +1203,7 @@ def _bfs_summary(rel: str, dist: str) -> str:
 def _bfs_oracle_sql() -> str:
     parts = [
         f"""
-WITH bip AS MATERIALIZED ({_BIP_EDGES_SQL}),
+WITH bip AS MATERIALIZED ({_BIP_EDGES_SQL.format(lineitem="lineitem")}),
 und AS MATERIALIZED ({_BFS_UND_SQL}),
 nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM und),
 f0 AS MATERIALIZED ({_BFS_SEEDS_SQL}),
@@ -1290,9 +1272,9 @@ def iter_bfs_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
     _view(spark, sf_dir, "supplier")
-    _bip_edges_view(spark, sf_dir)
     und = spark.sql(
-        f"WITH bip AS (SELECT p, s FROM bip_edges) {_BFS_UND_SQL}"
+        "WITH bip AS (SELECT p, s FROM {bip}) " + _BFS_UND_SQL,
+        bip=_bip_edges(spark, sf_dir),
     ).localCheckpoint(eager=True)
     nodes = und.select(F.col("src").alias("node")).distinct()
     frontier = spark.sql(_BFS_SEEDS_SQL).localCheckpoint(eager=True)

@@ -5,25 +5,40 @@ Reference dataflow (app.py:136-150 + render_blob 51-93): seeded blob params →
 radial+directional shading → RGBA with depth alpha → separable Gaussian
 shadow blur → painter's-algorithm composite → PNG export.
 
-Engine re-expression — ALL relational, long-format, per SURVEY §1.2:
-- polygon containment is NOT a UDF here: even-odd ray casting is a join of
-  pixels × polygon edges + crossing-parity aggregation (pure DataFrame ops,
-  DuckDB-oracle checkable). A pandas_udf variant (`udf_geom_contains`)
-  cross-checks the same counts through the Arrow UDF surface.
+Engine re-expression — relational, long-format, per SURVEY §1.2:
+- a render's UI parameters (seed, n_blobs, light, background theme) are
+  one VALUES row (`ui`), not literals in the expressions, so every edit at
+  a canvas size is the same plan and the same generated Java: Spark's
+  compiled-class cache serves an edit instead of Janino compiling ~30
+  classes for it.
+- blobs are rows generated from `ui`; each carries its closed polygon as a
+  280-edge array (vertex k + 1 is an array index, no window), its padded
+  box and centroid (array folds), and its candidate pixels, which are
+  generated from the box with `inline(...)` — no pixel×box join.
+- polygon containment is NOT a UDF here: even-odd ray casting counts, per
+  pixel, the edges spanning its raster row that cross it to its right
+  (array filters; the scanline variant computes the row's crossings once).
+  A pandas_udf variant (`udf_geom_contains`) cross-checks the same counts
+  through the Arrow UDF surface.
 - the blur is two 1-D Gaussian window passes (separable factorization kept
   from the reference, SURVEY §4.1) — Σ w_o·lead() terms, no self-join.
 - compositing is the ordered non-commutative fold (SURVEY §7.4.1): per pixel
   sort_array(collect_list(struct(depth,…))) + aggregate() alpha-over fold,
-  forced deterministic by the sort key.
+  forced deterministic by the sort key, with the background as its first
+  layer.
 
-Scale notes (100 TB): pixels are rows, blobs are rows — the whole poster at
-any resolution is one lazy plan with shuffles only at (blob) and (pixel)
-groupings; per-blob bbox restriction is the partition-pruning analog
-(app.py:56-60,66). Nothing collects to the driver except final small
-results; renders run per-group inside executors via applyInPandas.
+Stage shape: everything before the fold is row-local (generators,
+projections, array folds), so the composite needs one exchange, the
+`REPARTITION(1)` hint in front of the fold, and a 64 px edit runs as two
+Spark jobs. The hint is query text — it scopes to the one query and is a
+comment to DuckDB, which reads the same SQL as the oracle. At reference
+scale the pixel work sits in that one partition; `_composite_sql` notes
+the trade-off.
 """
 
 from __future__ import annotations
+
+import functools
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -43,164 +58,291 @@ PAD = "0.4e0"  # bbox pad fraction of max(xrange, yrange), app.py:58-60
 _LX, _LY = "-0.6e0", "0.8e0"  # light_dir (app.py:52)
 
 
+# Background themes: the reference declares two hex colors per theme
+# (bg_colors, app.py:126-130) and draws a vertical gradient imshow at
+# alpha 0.2 before compositing blobs (app.py:132-133). NOTE the reference
+# then colors that gradient with a matplotlib COLORMAP ("coolwarm"/"Wistia"),
+# leaving its own hex pairs unused — the engine deliberately uses the
+# declared hex pairs (a linear c1→c2 ramp) instead of reimplementing
+# matplotlib colormap tables; same layer semantics, documented deviation in
+# the gradient's color function. `None` keeps the plain white canvas.
+_THEMES = {
+    "cool": ("#a2cffe", "#f7faff"),
+    "warm": ("#ffdfba", "#fffaf0"),
+    "neutral": ("#e8e8e8", "#ffffff"),
+}
+_BG_ALPHA = 0.2
+
+
+def _theme_ramp(theme: str | None) -> list[tuple[float, float]]:
+    """Per-channel (base, slope) of the background: bg(row) = base + slope ·
+    (row / (canvas-1)).
+
+    bg(t) = (1-α)·white + α·(c1 + (c2-c1)·t), t = row/(canvas-1) — the
+    alpha-0.2 vertical gradient of app.py:132-133 over the white figure.
+    No theme is the white canvas: base 1, slope 0 (1 + 0·t = 1 exactly).
+    """
+    if theme is None:
+        return [(1.0, 0.0)] * 3
+    c1, c2 = _THEMES[theme]
+    out = []
+    for ch in range(3):
+        v1 = int(c1[1 + 2 * ch : 3 + 2 * ch], 16) / 255.0
+        v2 = int(c2[1 + 2 * ch : 3 + 2 * ch], 16) / 255.0
+        out.append(((1.0 - _BG_ALPHA) + _BG_ALPHA * v1, _BG_ALPHA * (v2 - v1)))
+    return out
+
+
+def _background_ctes(dialect: str, canvas: int, canvas_h: int) -> str:
+    """`grid`: every canvas pixel with its background colour (lr, lg, lb),
+    generated from `ui` — one row per raster row, then per pixel."""
+    t = f"(row / {synth.flit(canvas_h - 1)})"
+    rows = synth.explode_sql(synth.int_list("0", str(canvas_h - 1), dialect), dialect)
+    cols = synth.explode_sql(synth.int_list("0", str(canvas - 1), dialect), dialect)
+    return f"""bgrow AS (
+  SELECT row, bg_r + bg_dr * {t} AS lr, bg_g + bg_dg * {t} AS lg,
+    bg_b + bg_db * {t} AS lb
+  FROM (SELECT ui.*, {rows} AS row FROM ui) u
+),
+grid AS (SELECT row, {cols} AS col, lr, lg, lb FROM bgrow)"""
+
+
+# x of edge e's crossing with the pixel's raster row (y): the even-odd test's
+# intersection, one formula for both containment strategies.
+_XCROSS = "(e.x2 - e.x1) * (y - e.y1) / (e.y2 - e.y1) + e.x1"
+
+
+# Largest n_blobs the reference's slider offers (app.py:108).
+_NB_MAX = 30
+
+
+def _ui_sql(
+    dialect: str, seed: int, nb: int, lx: str, ly: str, theme: str | None
+) -> str:
+    """The render's UI parameters (app.py:107-113) as a one-row relation.
+
+    Seed, n_blobs, light and the theme's background ramp are DATA here, not
+    literals in the expressions: every edit at one canvas size is then the
+    same query text up to this row, Catalyst produces the same plan and
+    whole-stage codegen the same Java source, so Spark's compiled-class
+    cache hits instead of compiling ~30 classes per edit.
+    """
+    if not 1 <= nb <= _NB_MAX:
+        raise ValueError(f"n_blobs must be in 1..{_NB_MAX}, got {nb}")
+    cols = {
+        "seed": f"CAST({seed} AS BIGINT)",
+        "nb": f"CAST({nb} AS BIGINT)",
+        "lx": lx,
+        "ly": ly,
+    }
+    for ch, (base, slope) in zip("rgb", _theme_ramp(theme)):
+        cols[f"bg_{ch}"] = synth.flit(base)
+        cols[f"bg_d{ch}"] = synth.flit(slope)
+    return synth.values_sql(cols, "ui", dialect)
+
+
+def _axis(dialect: str, lo: str, hi: str, n: int, shift: float = 0.0) -> str:
+    """Sorted array of the grid indices i in 0..n-1 whose linspace
+    coordinate v(i) (+ `shift`) lies in [lo, hi] — the pixels a per-blob
+    box keeps, generated instead of found by a pixel×box join.
+
+    Candidates are the inverse map with a one-index margin on each side
+    (1/(n-1) in v, far wider than any rounding of v), clamped to the grid;
+    then the exact comparison the join used decides, so the set is the
+    join's, bit for bit."""
+    v = synth.linspace("i", "0e0", "1e0", n)
+    if shift:
+        v = f"{v} + {synth.flit(shift)}"
+    scale = synth.flit(n - 1)
+
+    def clamp(e: str) -> str:
+        return f"least(greatest({e}, 0), {n - 1})"
+
+    a = clamp(f"CAST(floor(({lo} - {synth.flit(shift)}) * {scale}) AS BIGINT) - 1")
+    b = clamp(f"CAST(ceil(({hi} - {synth.flit(shift)}) * {scale}) AS BIGINT) + 1")
+    cands = synth.int_list(a, f"greatest({a}, {b})", dialect)
+    return f"filter({cands}, i -> {v} >= {lo} AND {v} <= {hi})"
+
+
 def _scene_prefix_ctes(
     dialect: str, seed: int = SEED, nb: int = NB, canvas: int = CANVAS,
-    canvas_h: int | None = None,
+    canvas_h: int | None = None, lx: str = _LX, ly: str = _LY,
+    theme: str | None = None,
 ) -> str:
-    """Shared CTE prelude through `pairs`: blobs, boundary, closed edges,
-    padded bbox, centroid, grid, bbox-pruned candidate (blob,pixel) pairs.
-    Both containment strategies (join and scanline) compose on top.
+    """Shared CTE prelude through `pairs`: one row per blob, then per
+    (blob, raster row), then per candidate pixel. Generators, projections
+    and array folds only, so nothing here needs an exchange.
+
+    `ui` (the UI parameters) → `blobs` (generated from nb) → `poly` (the
+    280 q6-quantized vertices and the closed edges; vertex k + 1 is an
+    array index, not a window) → `bbox` (padded box; the centroid sums the
+    vertices left to right, the same additions as the row SUM it replaces)
+    → `norms` (the box's grid rows and cols, see `_axis`, and the shading
+    normalizers) → `prow` (the edges spanning the row and their crossings
+    `xs`) → `pairs`.
+
+    The shading normalizers (max distance and the light range over a
+    blob's candidate pixels) come from the four corners of the pixel
+    rectangle: each is a rounded, coordinate-wise monotone function of
+    the pixel's x and y, so its extremes over a rectangle of grid points
+    lie on the corners, with the same doubles the windows over all pixels
+    computed.
 
     `canvas_h` mirrors the reference's non-square figure (figsize 7x10,
     app.py:121): width stays `canvas`, height becomes `canvas_h`, and both
     axes keep their own unit-interval linspace exactly as imshow stretches
     extent=[0,1,0,1] over a 7:10 figure."""
     h = canvas_h or canvas
-    x = synth.linspace("g.col", "0e0", "1e0", canvas)
-    y = synth.linspace("g.row", "0e0", "1e0", h)
+    fn = functools.partial(synth.list_fn, dialect=dialect)
+    base = synth.blob_base_exprs("u.seed", "u.nb", id_expr="u.blob_id")
+    params = ",\n      ".join(f"{e} AS {name}" for name, e in base.items())
+    rgb = synth.hsv_to_rgb_exprs("hue", "sat", "val")
+    k_all = synth.int_list("0", str(NSAMP - 1), dialect)
+    _, _, vx, vy = synth.vertex_exprs("seed", "k", NSAMP)
+    raw = synth.struct_sql(dict(x=vx, y=vy), dialect)
+    quant = synth.struct_sql(dict(x=synth.q6("v.x"), y=synth.q6("v.y")), dialect)
+
+    def vert(k: str, field: str) -> str:
+        return f"{synth.list_at('verts', k, dialect)}.{field}"
+
+    k1 = f"(k + 1) % {NSAMP}"
+    edge = synth.struct_sql(
+        dict(x1=vert("k", "x"), y1=vert("k", "y"), x2=vert(k1, "x"), y2=vert(k1, "y")),
+        dialect,
+    )
+
+    def fold(agg: str, field: str) -> str:
+        return f"{fn(agg)}({fn('transform')}(verts, v -> v.{field}))"
+
+    def centroid(field: str) -> str:
+        vals = f"{fn('transform')}(verts, v -> v.{field})"
+        return synth.q6(f"{synth.list_sum_sql(vals, dialect)} / {NSAMP}")
+
+    ext = f"{PAD} * greatest(xmax - xmin, ymax - ymin)"
+    corners = [(x, y) for x in ("xlo", "xhi") for y in ("ylo", "yhi")]
+    dist = [f"sqrt(({x} - ccx) * ({x} - ccx) + ({y} - ccy) * ({y} - ccy))"
+            for x, y in corners]
+    light = [f"({x} - ccx) * lx + ({y} - ccy) * ly" for x, y in corners]
+
+    def ycoord(i: str) -> str:
+        return synth.linspace(i, "0e0", "1e0", h)
+
+    def xcoord(i: str) -> str:
+        return synth.linspace(i, "0e0", "1e0", canvas)
+
+    # Pixels are generated from expressions over the `rows`/`cols` columns,
+    # never by `explode(column)`: that makes Catalyst infer `size(column) >
+    # 0` and push it down through the projections, inlining the per-blob
+    # geometry (the 280-vertex transform) into a Filter once per reference.
+    # `inline` also emits each pixel's coordinate with its index, so no
+    # projection over the generator is left for Catalyst to collapse one
+    # way or the other from one query to the next.
     return f"""
-WITH blobs AS ({synth.blobs_sql(seed, nb, dialect)}),
-boundary AS ({synth.boundary_sql(seed, nb, dialect, NSAMP)}),
-edges AS (
-  SELECT blob_id, k,
-    px AS x1, py AS y1,
-    lead(px, 1) OVER w AS x2f, lead(py, 1) OVER w AS y2f,
-    first_value(px) OVER w AS x0, first_value(py) OVER w AS y0
-  FROM boundary
-  WINDOW w AS (PARTITION BY blob_id ORDER BY k)
+WITH ui AS ({_ui_sql(dialect, seed, nb, lx, ly, theme)}),
+blobs AS (
+  SELECT b.*, {rgb[0]} AS col_r, {rgb[1]} AS col_g, {rgb[2]} AS col_b
+  FROM (SELECT u.blob_id, u.seed, u.lx, u.ly,
+      {params}
+    FROM (SELECT ui.*,
+            {synth.explode_sql(synth.int_list("0", "nb - 1", dialect), dialect)} AS blob_id
+          FROM ui) u) b
 ),
-cedges AS (
-  SELECT blob_id, k, x1, y1,
-    coalesce(x2f, x0) AS x2, coalesce(y2f, y0) AS y2
-  FROM edges
+poly AS (
+  SELECT p.*, {fn('transform')}({k_all}, k -> {edge}) AS edges
+  FROM (SELECT b.*,
+          {fn('transform')}({fn('transform')}({k_all}, k -> {raw}), v -> {quant}) AS verts
+        FROM blobs b) p
 ),
 bbox AS (
-  SELECT blob_id,
-    min(px) - {PAD} * greatest(max(px) - min(px), max(py) - min(py)) AS bx0,
-    max(px) + {PAD} * greatest(max(px) - min(px), max(py) - min(py)) AS bx1,
-    min(py) - {PAD} * greatest(max(px) - min(px), max(py) - min(py)) AS by0,
-    max(py) + {PAD} * greatest(max(px) - min(px), max(py) - min(py)) AS by1
-  FROM boundary GROUP BY blob_id
+  SELECT blob_id, lx, ly, depth, col_r, col_g, col_b, edges,
+    xmin - {ext} AS bx0, xmax + {ext} AS bx1,
+    ymin - {ext} AS by0, ymax + {ext} AS by1,
+    {centroid("x")} AS ccx, {centroid("y")} AS ccy
+  FROM (SELECT p.*, {fold('min', 'x')} AS xmin, {fold('max', 'x')} AS xmax,
+          {fold('min', 'y')} AS ymin, {fold('max', 'y')} AS ymax
+        FROM poly p) p
 ),
-centroid AS (
-  SELECT blob_id,
-    {synth.q6("sum(px) / count(*)")} AS ccx,
-    {synth.q6("sum(py) / count(*)")} AS ccy
-  FROM boundary GROUP BY blob_id
+norms AS (
+  SELECT c.*,
+    greatest({", ".join(dist)}) AS dmax,
+    least({", ".join(light)}) AS lmin,
+    greatest({", ".join(light)}) AS lmax
+  FROM (SELECT s.*,
+          {xcoord(f"{fn('min')}(cols)")} AS xlo, {xcoord(f"{fn('max')}(cols)")} AS xhi,
+          {ycoord(f"{fn('min')}(rows)")} AS ylo, {ycoord(f"{fn('max')}(rows)")} AS yhi
+        FROM (SELECT b.*, {_axis(dialect, "by0", "by1", h)} AS rows,
+                {_axis(dialect, "bx0", "bx1", canvas)} AS cols
+              FROM bbox b) s) c
 ),
-grid AS (
-  SELECT r.row, c.col
-  FROM {synth.series_sql(h, "row", dialect)} r
-  CROSS JOIN {synth.series_sql(canvas, "col", dialect)} c
+prow AS (
+  SELECT q.*, {fn('transform')}(redges, e -> {_XCROSS}) AS xs
+  FROM (SELECT r.*, filter(edges, e -> (e.y1 > y) != (e.y2 > y)) AS redges
+        FROM (SELECT n.*, {synth.inline_sql("rows", "i", dict(row="i", y=ycoord("i")), dialect)}
+              FROM norms n) r) q
 ),
 pairs AS (
-  SELECT b.blob_id, g.row, g.col, {x} AS x, {y} AS y
-  FROM bbox b JOIN grid g
-    ON {x} >= b.bx0 AND {x} <= b.bx1 AND {y} >= b.by0 AND {y} <= b.by1
+  SELECT r.*, {synth.inline_sql("cols", "i", dict(col="i", x=xcoord("i")), dialect)}
+  FROM prow r
+)"""
+
+
+def _mask_ctes(prefix: str, n_cross: str) -> str:
+    """`mask` on top of the prelude: a pixel is inside iff `n_cross`, the
+    number of its row's edges that cross the row to its right, is odd."""
+    return f"""{prefix},
+mask AS (
+  SELECT *, (n_cross % 2 = 1) AS inside,
+    CASE WHEN n_cross % 2 = 1 THEN 1e0 ELSE 0e0 END AS mask_f
+  FROM (SELECT p.*, {n_cross} AS n_cross FROM pairs p) c
 )"""
 
 
 def _scene_ctes(
     dialect: str, seed: int = SEED, nb: int = NB, canvas: int = CANVAS,
-    canvas_h: int | None = None,
+    canvas_h: int | None = None, lx: str = _LX, ly: str = _LY,
+    theme: str | None = None,
 ) -> str:
-    """Containment via pixel×edge join + crossing parity on the prefix."""
-    return f"""{_scene_prefix_ctes(dialect, seed, nb, canvas, canvas_h)},
-crossings AS (
-  SELECT p.blob_id, p.row, p.col, p.x, p.y,
-    sum(CASE WHEN (e.y1 > p.y) != (e.y2 > p.y)
-              AND p.x < (e.x2 - e.x1) * (p.y - e.y1) / (e.y2 - e.y1) + e.x1
-         THEN 1 ELSE 0 END) AS n_cross
-  FROM pairs p JOIN cedges e ON p.blob_id = e.blob_id
-  GROUP BY p.blob_id, p.row, p.col, p.x, p.y
-),
-mask AS (
-  SELECT blob_id, row, col, x, y,
-    (n_cross % 2 = 1) AS inside,
-    CASE WHEN n_cross % 2 = 1 THEN 1e0 ELSE 0e0 END AS mask_f
-  FROM crossings
-)"""
+    """Containment by even-odd ray casting, the crossing test evaluated
+    per pixel against every edge spanning its row."""
+    size = synth.list_fn("size", dialect)
+    return _mask_ctes(
+        _scene_prefix_ctes(dialect, seed, nb, canvas, canvas_h, lx, ly, theme),
+        f"{size}(filter(redges, e -> x < {_XCROSS}))",
+    )
 
 
 def _scene_scanline_ctes(
     dialect: str, seed: int = SEED, nb: int = NB, canvas: int = CANVAS,
-    canvas_h: int | None = None,
+    canvas_h: int | None = None, lx: str = _LX, ly: str = _LY,
+    theme: str | None = None,
 ) -> str:
     """Scanline variant of the containment scene: same even-odd semantics,
-    O(edges·rows + pixels) instead of O(pixels·edges).
-
-    For each raster row, every edge spanning the row's y contributes one
-    x-intersection; a pixel is inside iff the count of intersections
-    strictly to its right is odd. That count is one running sum over the
-    row's (pixels ∪ intersections) sorted by x descending — the pixel×edge
-    join (133M rows at 400px×14 blobs) becomes ~1M rows. Identical float
-    comparisons to the join variant → identical masks, proven in pytest and
-    by both variants' DuckDB oracles.
+    the intersections computed once per raster row (`xs`, two to four for
+    these blobs) instead of per pixel; a pixel counts the ones right of its
+    x. Identical float comparisons to the per-pixel variant → identical
+    masks, proven in pytest and by both variants' DuckDB oracles.
     """
-    yr = synth.linspace("r.row", "0e0", "1e0", canvas_h or canvas)
-    return f"""{_scene_prefix_ctes(dialect, seed, nb, canvas, canvas_h)},
-rowy AS (
-  SELECT b.blob_id, r.row, {yr} AS y, b.by0, b.by1
-  FROM bbox b JOIN {synth.series_sql(canvas_h or canvas, "row", dialect)} r
-    ON {yr} >= b.by0 AND {yr} <= b.by1
-),
-scan_cross AS (
-  SELECT e.blob_id, g.row,
-    (e.x2 - e.x1) * (g.y - e.y1) / (e.y2 - e.y1) + e.x1 AS x,
-    CAST(1 AS BIGINT) AS is_cross
-  FROM cedges e JOIN rowy g
-    ON e.blob_id = g.blob_id AND (e.y1 > g.y) != (e.y2 > g.y)
-),
-merged AS (
-  SELECT blob_id, row, col, x, y, CAST(0 AS BIGINT) AS is_cross FROM pairs
-  UNION ALL
-  SELECT blob_id, row, CAST(NULL AS BIGINT) AS col, x,
-    CAST(NULL AS DOUBLE) AS y, is_cross
-  FROM scan_cross
-),
-counted AS (
-  SELECT blob_id, row, col, x, y, is_cross,
-    sum(is_cross) OVER (PARTITION BY blob_id, row
-                        ORDER BY x DESC, is_cross ASC
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      AS n_right
-  FROM merged
-),
-mask AS (
-  SELECT blob_id, row, col, x, y,
-    (n_right % 2 = 1) AS inside,
-    CASE WHEN n_right % 2 = 1 THEN 1e0 ELSE 0e0 END AS mask_f
-  FROM counted WHERE is_cross = 0
-)"""
+    size = synth.list_fn("size", dialect)
+    return _mask_ctes(
+        _scene_prefix_ctes(dialect, seed, nb, canvas, canvas_h, lx, ly, theme),
+        f"{size}(filter(xs, v -> v > x))",
+    )
 
 
-def _shaded_sql(
-    dialect: str,
-    scene: str | None = None,
-    lx: str = _LX,
-    ly: str = _LY,
-) -> str:
-    """Mask + shading + alpha (app.py:68-85) on top of the scene CTEs.
-
-    `lx`/`ly` are the reference's light_x/light_y sidebar sliders
-    (app.py:109-110, threaded into render_blob at 147-149) as SQL float
-    literals.
-    """
+def _shaded_sql(dialect: str, scene: str | None = None) -> str:
+    """Mask + shading + alpha (app.py:68-85) on top of the scene CTEs; the
+    light direction (sliders at app.py:109-110) arrives as columns lx/ly."""
     return f"""{scene or _scene_ctes(dialect)},
 lit AS (
-  SELECT m.*, b.depth, b.col_r, b.col_g, b.col_b,
-    sqrt((m.x - c.ccx) * (m.x - c.ccx) + (m.y - c.ccy) * (m.y - c.ccy)) AS d,
-    (m.x - c.ccx) * {lx} + (m.y - c.ccy) * {ly} AS light
+  SELECT m.*,
+    sqrt((x - ccx) * (x - ccx) + (y - ccy) * (y - ccy)) AS d,
+    (x - ccx) * lx + (y - ccy) * ly AS light
   FROM mask m
-  JOIN centroid c ON m.blob_id = c.blob_id
-  JOIN blobs b ON m.blob_id = b.blob_id
 ),
 norm AS (
   SELECT *,
-    {_clip01("1e0 - d / max(d) OVER (PARTITION BY blob_id)")} AS radial,
-    (light - min(light) OVER (PARTITION BY blob_id))
-      / (max(light) OVER (PARTITION BY blob_id)
-         - min(light) OVER (PARTITION BY blob_id) + 1e-9) AS light_n
+    {_clip01("1e0 - d / dmax")} AS radial,
+    (light - lmin) / (lmax - lmin + 1e-9) AS light_n
   FROM lit
 ),
 shaded AS (
@@ -231,7 +373,8 @@ def _pip_sql(dialect: str) -> str:
     "filt_point_in_polygon",
     oracle=_pip_sql("duckdb"),
     doc="Point-in-polygon containment (app.py:44-45) as even-odd ray casting "
-    "via pixel×edge join + crossing parity — relational, not a UDF.",
+    "— per pixel, the crossing test against each edge spanning its row; "
+    "relational arrays, not a UDF.",
     tags=("filter", "generative", "bench"),
 )
 def filt_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -248,9 +391,9 @@ def _pip_scanline_sql(dialect: str) -> str:
 @register(
     "filt_pip_scanline",
     oracle=_pip_scanline_sql("duckdb"),
-    doc="Scanline rasterization: per-row edge x-intersections + one "
-    "descending-x running-parity window — O(edges·rows+pixels) vs the "
-    "O(pixels·edges) join; identical even-odd mask (scale path).",
+    doc="Scanline rasterization: each raster row's edge x-intersections "
+    "computed once, each pixel counts those right of it — identical "
+    "even-odd mask to the per-pixel test (scale path).",
     tags=("filter", "generative", "scale"),
 )
 def filt_pip_scanline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -395,50 +538,6 @@ def udf_rowwise_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
         .applyInPandas(convolve_row, "blob_id bigint, row bigint, col bigint, blur1 double")
         .orderBy("blob_id", "row", "col")
     )
-
-
-# ---------------------------------------------------------------------------
-# sort_composite_order — painter's-algorithm alpha-over fold (app.py:137-150,
-# 91-93): ordered, non-commutative; order forced by sorting on depth.
-# ---------------------------------------------------------------------------
-
-
-# Background themes: the reference declares two hex colors per theme
-# (bg_colors, app.py:126-130) and draws a vertical gradient imshow at
-# alpha 0.2 before compositing blobs (app.py:132-133). NOTE the reference
-# then colors that gradient with a matplotlib COLORMAP ("coolwarm"/"Wistia"),
-# leaving its own hex pairs unused — the engine deliberately uses the
-# declared hex pairs (a linear c1→c2 ramp) instead of reimplementing
-# matplotlib colormap tables; same layer semantics, documented deviation in
-# the gradient's color function. `None` keeps the plain white canvas.
-_THEMES = {
-    "cool": ("#a2cffe", "#f7faff"),
-    "warm": ("#ffdfba", "#fffaf0"),
-    "neutral": ("#e8e8e8", "#ffffff"),
-}
-_BG_ALPHA = 0.2
-
-
-def _theme_bg_exprs(theme: str | None, canvas: int) -> tuple[str, str, str]:
-    """Per-channel background expressions (may reference grouping col `row`).
-
-    bg(t) = (1-α)·white + α·(c1 + (c2-c1)·t), t = row/(canvas-1) — the
-    alpha-0.2 vertical gradient of app.py:132-133 over the white figure.
-    """
-    if theme is None:
-        return "1e0", "1e0", "1e0"
-    c1, c2 = _THEMES[theme]
-    out = []
-    for ch in range(3):
-        v1 = int(c1[1 + 2 * ch : 3 + 2 * ch], 16) / 255.0
-        v2 = int(c2[1 + 2 * ch : 3 + 2 * ch], 16) / 255.0
-        base = (1.0 - _BG_ALPHA) + _BG_ALPHA * v1
-        slope = _BG_ALPHA * (v2 - v1)
-        out.append(
-            f"({synth.flit(base)} + {synth.flit(slope)} * "
-            f"(row / {synth.flit(canvas - 1)}))"
-        )
-    return out[0], out[1], out[2]
 
 
 # ---------------------------------------------------------------------------
@@ -588,16 +687,27 @@ def gen_poster_bg_colormap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_bg_colormap_sql("spark"))
 
 
+# ---------------------------------------------------------------------------
+# sort_composite_order — painter's-algorithm alpha-over fold (app.py:137-150,
+# 91-93): ordered, non-commutative; order forced by sorting on depth.
+# ---------------------------------------------------------------------------
+
+
 def _fold_sql(
     dialect: str,
-    ir: str,
-    ig: str,
-    ib: str,
-    source: str = "shaded",
+    source: str,
     cols: tuple[str, str, str, str] = ("pr", "pg", "pb", "alpha"),
     with_z: bool = False,
 ) -> str:
-    """Ordered alpha-over fold with per-pixel background init (ir/ig/ib).
+    """Ordered alpha-over fold per pixel, from a constant accumulator: the
+    background is the first layer (depth −1, α = 1, so bg·1 + acc·0 = bg
+    exactly), which keeps every parameter out of the fold's expressions.
+
+    Layers with α = 0 are left out by the aggregate's FILTER clause, which
+    is BIT-EXACT (r·0 + acc·(1−0) = acc in IEEE) and shrinks the groups
+    about 4× (most candidate pixels lie outside their blob). A FILTER, not
+    a WHERE: Catalyst would push a WHERE down through the projections,
+    inlining the containment test into a Filter a second time.
 
     ONE definition for both composites: the shadow pipeline passes
     `with_z=True` (a leading zorder sort field — shadows under blobs) and
@@ -611,8 +721,9 @@ def _fold_sql(
 SELECT row, col,
   aggregate(
     array_sort(collect_list(named_struct(
-      {ze}'depth', depth, 'r', {cr}, 'g', {cg}, 'b', {cb}, 'a', {ca}))),
-    named_struct({zi}'depth', 0e0, 'r', {ir}, 'g', {ig}, 'b', {ib}, 'a', 0e0),
+      {ze}'depth', depth, 'r', {cr}, 'g', {cg}, 'b', {cb}, 'a', {ca}))
+      FILTER (WHERE {ca} > 0e0)),
+    named_struct({zi}'depth', 0e0, 'r', 0e0, 'g', 0e0, 'b', 0e0, 'a', 0e0),
     (acc, e) -> named_struct(
       {zi}'depth', 0e0,
       'r', e.r * e.a + acc.r * (1e0 - e.a),
@@ -629,9 +740,9 @@ FROM {source} GROUP BY row, col
 SELECT row, col,
   list_reduce(
     list_prepend(
-      struct_pack({zpi}depth := 0e0, r := {ir}, g := {ig}, b := {ib}, a := 0e0),
+      struct_pack({zpi}depth := 0e0, r := 0e0, g := 0e0, b := 0e0, a := 0e0),
       list(struct_pack({zpe}depth := depth, r := {cr}, g := {cg}, b := {cb}, a := {ca})
-           {order})),
+           {order}) FILTER (WHERE {ca} > 0e0)),
     (acc, e) -> struct_pack(
       {zpi}depth := 0e0,
       r := e.r * e.a + acc.r * (1e0 - e.a),
@@ -656,47 +767,44 @@ def _composite_sql(
     canvas_h: int | None = None,
 ) -> str:
     """Full poster composite, parameterized over the reference's UI surface
-    (app.py:107-113): seed, n_blobs, light direction, background theme —
-    plus canvas resolution (width `canvas`, optional distinct height
-    `canvas_h` for the 7:10 figsize, app.py:121) and containment strategy
-    (join vs scanline)."""
-    scene_fn = _scene_scanline_ctes if scanline else _scene_ctes
-    shaded = _shaded_sql(
-        dialect,
-        scene=scene_fn(
-            dialect, seed=seed, nb=nb, canvas=canvas, canvas_h=canvas_h
-        ),
-        lx=lx, ly=ly,
-    )
-    ir, ig, ib = _theme_bg_exprs(theme, canvas_h or canvas)
-    fold = _fold_sql(dialect, ir, ig, ib)
-    tail = " ORDER BY row, col" if order_by else ""
+    (app.py:107-113): seed, n_blobs (1..30), light direction, background
+    theme — plus canvas resolution (width `canvas`, optional distinct
+    height `canvas_h` for the 7:10 figsize, app.py:121) and containment
+    strategy (per pixel vs scanline)."""
+    # Stage shape. Everything up to `all_layers` is row-local: one row per
+    # blob, generated pixels, array folds — no join, aggregate or window,
+    # so no exchange. The one exchange is the REPARTITION(1) hint on
+    # `all_layers`: it puts every layer in one partition, which satisfies
+    # the fold's GROUP BY row, col and the final ORDER BY, so neither adds
+    # an exchange of its own. A 64 px render is then two Spark jobs (the
+    # shuffle map stage and the result stage) instead of ~14 AQE stages in
+    # six waves. The hint lives in the query text, so it scopes to this
+    # query; to DuckDB it is a comment, so both engines read the same SQL.
+    # The price is one task for all pixel work: at 400 px × 14 blobs
+    # (gen_poster_full) that measured 3.8 s against 4.2 s for the previous
+    # 32-partition plan on a 4-core VM, so it holds up to reference scale.
+    #
     # Canvas completion: pixels outside every blob bbox never enter
     # `pairs`/`shaded`, but the poster still shows background there (the
-    # reference renders the full figure, app.py:121-133). A zero-alpha
-    # sentinel layer per grid pixel (depth −1 sorts first, α=0 is a no-op in
-    # the alpha-over fold) routes EVERY pixel through the one fold groupBy —
-    # one shuffle, instead of a second grid⋈folded join shuffle.
-    # The α>0 filter on the blob layers is BIT-EXACT (an α=0 layer leaves
-    # the accumulator untouched: r·0 + acc·(1−0) = acc in IEEE): only ~1/4
-    # of bbox-pruned pixels are inside their blob, so the fold's
-    # collect+sort groups shrink 4× — measured 2.97 s → 2.16 s at 400 px.
-    return (
-        shaded
-        + """,
+    # reference renders the full figure, app.py:121-133). The background
+    # layer (depth −1 sorts first, α = 1) routes EVERY pixel through the
+    # one fold groupBy.
+    scene_fn = _scene_scanline_ctes if scanline else _scene_ctes
+    scene = scene_fn(dialect, seed, nb, canvas, canvas_h, lx, ly, theme)
+    tail = " ORDER BY row, col" if order_by else ""
+    return f"""{_shaded_sql(dialect, scene=scene)},
+{_background_ctes(dialect, canvas, canvas_h or canvas)},
 all_layers AS (
-  SELECT blob_id, row, col, inside, mask_f, depth, shade, pr, pg, pb, alpha
-  FROM shaded WHERE alpha > 0e0
-  UNION ALL
-  SELECT CAST(-1 AS BIGINT) AS blob_id, row, col, false AS inside,
-    0e0 AS mask_f, -1e0 AS depth, 0e0 AS shade,
-    0e0 AS pr, 0e0 AS pg, 0e0 AS pb, 0e0 AS alpha
-  FROM grid
-)"""
-        + f",\nfolded AS ({fold.replace('FROM shaded', 'FROM all_layers')})\n"
-        + f"SELECT row, col, {synth.q6('px.r')} AS r, {synth.q6('px.g')} AS g, "
-        f"{synth.q6('px.b')} AS b FROM folded{tail}"
-    )
+  SELECT /*+ REPARTITION(1) */ * FROM (
+    SELECT row, col, depth, pr, pg, pb, alpha FROM shaded
+    UNION ALL
+    SELECT row, col, -1e0 AS depth, lr AS pr, lg AS pg, lb AS pb, 1e0 AS alpha
+    FROM grid
+  ) layers
+),
+folded AS ({_fold_sql(dialect, "all_layers")})
+SELECT row, col, {synth.q6('px.r')} AS r, {synth.q6('px.g')} AS g,
+  {synth.q6('px.b')} AS b FROM folded{tail}"""
 
 
 @register(
@@ -1369,6 +1477,14 @@ _BLUR_STRENGTH = 0.015  # app.py:113 default
 _SHADOW_OFF = 0.02  # extent shift, app.py:90
 
 
+# The mask columns the shading chain reads: a materialized mask (see
+# `mask_ref` below) carries these.
+_MASK_COLS = (
+    "blob_id, row, col, x, y, inside, mask_f, depth, col_r, col_g, col_b, "
+    "ccx, ccy, dmax, lmin, lmax, lx, ly"
+)
+
+
 def _shadow_composite_sql(
     dialect: str,
     seed: int = SEED,
@@ -1378,82 +1494,76 @@ def _shadow_composite_sql(
     ly: str = _LY,
     theme: str | None = None,
     blur_strength: float = _BLUR_STRENGTH,
-    pass2_ref: str | None = None,
     mask_ref: str | None = None,
 ) -> str:
-    # `mask_ref` substitutes a materialized rasterized-mask relation for the
-    # mask CTE: the shading chain AND the shadow-blur chain both consume it,
-    # so without materialization the pixel×edge rasterization runs twice
-    # (Spark builder passes a checkpointed view; DuckDB self-materializes).
+    # `mask_ref` substitutes a materialized rasterized-mask relation (with
+    # _MASK_COLS) for the mask CTE: the shading chain AND the shadow-blur
+    # chain both consume it, so without materialization the rasterization
+    # runs twice (Spark builder passes a checkpointed view; DuckDB
+    # self-materializes).
     if mask_ref is None:
-        scene = _scene_ctes(dialect, seed=seed, nb=nb, canvas=canvas)
+        scene = _scene_ctes(dialect, seed, nb, canvas, None, lx, ly, theme)
     else:
         scene = (
-            _scene_prefix_ctes(dialect, seed=seed, nb=nb, canvas=canvas)
+            _scene_prefix_ctes(dialect, seed, nb, canvas, None, lx, ly, theme)
             + f",\nmask AS ({mask_ref})"
         )
-    shaded = _shaded_sql(dialect, scene=scene, lx=lx, ly=ly)
     sigma = max(2.0, canvas * blur_strength)
-    x = synth.linspace("g.col", "0e0", "1e0", canvas)
-    y = synth.linspace("g.row", "0e0", "1e0", canvas)
-    offu = synth.flit(_SHADOW_OFF)
     offi = synth.flit(_SHADOW_OFF * (canvas - 1))  # shift in pixel-index space
-    ir, ig, ib = _theme_bg_exprs(theme, canvas)
-
-    if pass2_ref is None:
-        p1 = _blur_terms("mask_f", "blob_id, row", "col", sigma)
-        p2 = _blur_terms("blur1", "blob_id, col", "row", sigma)
-        pass2_ref = (
-            f"SELECT blob_id, row, col, {p2} AS blur2 FROM "
-            f"(SELECT blob_id, row, col, {p1} AS blur1 FROM mask) bp1"
-        )
-
+    p1 = _blur_terms("mask_f", "blob_id, row", "col", sigma)
+    p2 = _blur_terms("blur1", "blob_id, col", "row", sigma)
     sample = (
         "((coalesce(p00.blur2, 0e0) * (1e0 - s.wc) + "
         "coalesce(p01.blur2, 0e0) * s.wc) * (1e0 - s.wr) + "
         "(coalesce(p10.blur2, 0e0) * (1e0 - s.wc) + "
         "coalesce(p11.blur2, 0e0) * s.wc) * s.wr)"
     )
-
+    explode = functools.partial(synth.explode_sql, dialect=dialect)
+    srows = _axis(dialect, "by0", "by1", canvas, _SHADOW_OFF)
+    scols = _axis(dialect, "bx0", "bx1", canvas, -_SHADOW_OFF)
     fold = _fold_sql(
-        dialect, ir, ig, ib, source="layers",
-        cols=("lr", "lg", "lb", "la"), with_z=True,
+        dialect, "layers", cols=("lr", "lg", "lb", "la"), with_z=True
     )
 
-    return f"""{shaded},
-spass2 AS ({pass2_ref}),
+    # sgrid: per blob, the pixels whose offset position (x − 0.02, y + 0.02)
+    # lies in the blob's box — the shadow's extent shift, app.py:90.
+    return f"""{_shaded_sql(dialect, scene=scene)},
+{_background_ctes(dialect, canvas, canvas)},
+spass2 AS (
+  SELECT blob_id, row, col, {p2} AS blur2 FROM
+  (SELECT blob_id, row, col, {p1} AS blur1 FROM mask) bp1
+),
 sgrid AS (
-  SELECT b.blob_id, g.row, g.col,
-    CAST(floor(g.row + {offi}) AS BIGINT) AS r0,
-    CAST(floor(g.row + {offi}) AS BIGINT) + 1 AS r1,
-    (g.row + {offi} - floor(g.row + {offi})) AS wr,
-    CAST(floor(g.col - {offi}) AS BIGINT) AS c0,
-    CAST(floor(g.col - {offi}) AS BIGINT) + 1 AS c1,
-    (g.col - {offi} - floor(g.col - {offi})) AS wc
-  FROM bbox b JOIN grid g
-    ON {x} - {offu} >= b.bx0 AND {x} - {offu} <= b.bx1
-   AND {y} + {offu} >= b.by0 AND {y} + {offu} <= b.by1
+  SELECT blob_id, depth, row, col,
+    CAST(floor(row + {offi}) AS BIGINT) AS r0,
+    CAST(floor(row + {offi}) AS BIGINT) + 1 AS r1,
+    (row + {offi} - floor(row + {offi})) AS wr,
+    CAST(floor(col - {offi}) AS BIGINT) AS c0,
+    CAST(floor(col - {offi}) AS BIGINT) + 1 AS c1,
+    (col - {offi} - floor(col - {offi})) AS wc
+  FROM (SELECT blob_id, depth, row, {explode(scols)} AS col
+        FROM (SELECT blob_id, bx0, bx1, depth, {explode(srows)} AS row
+              FROM bbox) r) g
 ),
 shadow_layers AS (
-  SELECT s.row, s.col, bl.depth, {sample} AS v
+  SELECT s.row, s.col, s.depth, {sample} AS v
   FROM sgrid s
-  JOIN blobs bl ON s.blob_id = bl.blob_id
   LEFT JOIN spass2 p00 ON s.blob_id = p00.blob_id AND s.r0 = p00.row AND s.c0 = p00.col
   LEFT JOIN spass2 p01 ON s.blob_id = p01.blob_id AND s.r0 = p01.row AND s.c1 = p01.col
   LEFT JOIN spass2 p10 ON s.blob_id = p10.blob_id AND s.r1 = p10.row AND s.c0 = p10.col
   LEFT JOIN spass2 p11 ON s.blob_id = p11.blob_id AND s.r1 = p11.row AND s.c1 = p11.col
 ),
 layers AS (
-  SELECT row, col, 0 AS z, depth, v AS lr, v AS lg, v AS lb,
-    (0.25e0 * (1e0 - depth)) AS la
-  FROM shadow_layers
-  UNION ALL
-  SELECT row, col, 1 AS z, depth, pr AS lr, pg AS lg, pb AS lb, alpha AS la
-  FROM shaded WHERE alpha > 0e0
-  UNION ALL
-  SELECT row, col, -1 AS z, -1e0 AS depth, 0e0 AS lr, 0e0 AS lg, 0e0 AS lb,
-    0e0 AS la
-  FROM grid
+  SELECT /*+ REPARTITION(1) */ * FROM (
+    SELECT row, col, 0 AS z, depth, v AS lr, v AS lg, v AS lb,
+      (0.25e0 * (1e0 - depth)) AS la
+    FROM shadow_layers
+    UNION ALL
+    SELECT row, col, 1 AS z, depth, pr AS lr, pg AS lg, pb AS lb, alpha AS la
+    FROM shaded
+    UNION ALL
+    SELECT row, col, -1 AS z, -1e0 AS depth, lr, lg, lb, 1e0 AS la FROM grid
+  ) l
 ),
 folded AS ({fold})
 SELECT row, col, {synth.q6('px.r')} AS r,
@@ -1469,8 +1579,7 @@ def _cached_mask(spark: SparkSession) -> DataFrame:
     mask_ref note in _shadow_composite_sql)."""
     def build():
         return spark.sql(
-            _scene_ctes("spark")
-            + "\nSELECT blob_id, row, col, x, y, inside, mask_f FROM mask"
+            _scene_ctes("spark") + f"\nSELECT {_MASK_COLS} FROM mask"
         ).coalesce(4)
 
     return checkpointed(spark, "poster_mask", build)
@@ -1491,8 +1600,7 @@ def gen_poster_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         _shadow_composite_sql(
             "spark",
-            mask_ref="SELECT blob_id, row, col, x, y, inside, mask_f "
-            "FROM poster_mask",
+            mask_ref=f"SELECT {_MASK_COLS} FROM poster_mask",
         )
     )
 
@@ -1520,8 +1628,7 @@ def gen_poster_shadow_blur(spark: SparkSession, sf_dir: str) -> DataFrame:
         _shadow_composite_sql(
             "spark",
             blur_strength=_BLUR_POINT,
-            mask_ref="SELECT blob_id, row, col, x, y, inside, mask_f "
-            "FROM poster_mask",
+            mask_ref=f"SELECT {_MASK_COLS} FROM poster_mask",
         )
     )
 
@@ -1568,9 +1675,8 @@ def udtf_explode_gen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # gen_poster_full — the reference's ACTUAL workload shape for benchmarking:
 # n_blobs=14 (app.py:108 default), 400-px canvas (app.py:66), 280 boundary
-# samples, full rasterize→shade→composite. Rows-only (the sf0.01 oracle gate
-# would pay the same 10⁸-row edge join in DuckDB; correctness of every stage
-# is already oracle-checked at the 96-px configuration) — this key exists to
+# samples, full rasterize→shade→composite. Rows-only (correctness of every
+# stage is already oracle-checked at the 96-px configuration) — this key exists to
 # measure throughput against the reference's ~5×10⁷ element-ops/run
 # (BASELINE.md) and to prove the plan scales with resolution.
 # ---------------------------------------------------------------------------

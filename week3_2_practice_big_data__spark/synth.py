@@ -155,35 +155,77 @@ def hsv_to_rgb_exprs(h: str, s: str, v: str) -> tuple[str, str, str]:
     return r, g, b
 
 
-def blob_param_exprs(seed: int, n_blobs: int, id_expr: str = "blob_id") -> dict[str, str]:
-    """Per-blob parameter formulas mirroring app.py:138-146 / FIXTURES.md §B.
+def _as_double(n: int | str) -> str:
+    """`n` as a DOUBLE operand: a float literal for a Python int, a CAST for
+    a column (the UI parameters of a render are data, not literals)."""
+    return flit(n) if isinstance(n, int) else f"CAST({n} AS DOUBLE)"
+
+
+def blob_base_exprs(
+    seed: int | str, n_blobs: int | str, id_expr: str = "blob_id"
+) -> dict[str, str]:
+    """Per-blob parameter formulas mirroring app.py:138-146 / FIXTURES.md §B,
+    with the colour left as its HSV inputs (hue, sat, val).
 
     r ∈ [0.1,0.26), wobble ∈ [0.08,0.22), cx,cy ∈ [0.12,0.88),
-    depth = blob_id/(n-1), color = hsv(h=i/n, s∈[0.35,0.65), v∈[0.75,0.95)).
+    depth = blob_id/(n-1), hue = i/n, sat ∈ [0.35,0.65), val ∈ [0.75,0.95).
+    `seed` and `n_blobs` are Python ints or BIGINT column names; both give
+    the same doubles.
     """
-    h = f"((({id_expr}) % {n_blobs}) / {flit(n_blobs)})"
-    s = uniform(f"{id_expr} + 7000000", seed, 0, 0.35, 0.65)
-    v = uniform(f"{id_expr} + 9000000", seed, 0, 0.75, 0.95)
-    cr, cg, cb = hsv_to_rgb_exprs(h, s, v)
-    denom = flit(max(n_blobs - 1, 1))
+    if isinstance(n_blobs, int):
+        denom = flit(max(n_blobs - 1, 1))
+    else:
+        denom = _as_double(f"greatest({n_blobs} - 1, 1)")
     return {
         "r": uniform(id_expr, seed, 0, 0.1, 0.26),
         "wobble": uniform(id_expr, seed, 1, 0.08, 0.22),
         "cx": uniform(id_expr, seed, 2, 0.12, 0.88),
         "cy": uniform(id_expr, seed, 3, 0.12, 0.88),
         "depth": f"(({id_expr}) / {denom})",
-        "col_r": cr,
-        "col_g": cg,
-        "col_b": cb,
+        "hue": f"((({id_expr}) % {n_blobs}) / {_as_double(n_blobs)})",
+        "sat": uniform(f"{id_expr} + 7000000", seed, 0, 0.35, 0.65),
+        "val": uniform(f"{id_expr} + 9000000", seed, 0, 0.75, 0.95),
     }
+
+
+def blob_param_exprs(
+    seed: int | str, n_blobs: int | str, id_expr: str = "blob_id"
+) -> dict[str, str]:
+    """:func:`blob_base_exprs` with the colour converted to RGB
+    (color = hsv(hue, sat, val), app.py:146)."""
+    p = blob_base_exprs(seed, n_blobs, id_expr)
+    cr, cg, cb = hsv_to_rgb_exprs(p.pop("hue"), p.pop("sat"), p.pop("val"))
+    return {**p, "col_r": cr, "col_g": cg, "col_b": cb}
+
+
+def vertex_exprs(
+    seed: int | str, k: str, n_samples: int = 280
+) -> tuple[str, str, str, str]:
+    """(theta, rr, x, y) of boundary vertex `k` of blob `b` (columns
+    b.blob_id, b.r, b.wobble, b.cx, b.cy) —
+    app.py:141-144: theta = 2πk/(n-1), rr = r·(1 + wobble·(u-0.5)·2),
+    (x, y) = c + rr·(cos, sin)(theta). Callers quantize x, y with q6 so
+    both engines treat the polygon vertices as identical exact doubles
+    (cos/sin may differ in the last ulp across libm implementations).
+    """
+    noise_seed = seed + 101 if isinstance(seed, int) else f"({seed} + 101)"
+    theta = f"({TWO_PI} * {k} / {flit(n_samples - 1)})"
+    noise = lcg_u(f"b.blob_id * {n_samples} + {k}", noise_seed, 0)
+    rr = f"(b.r * (1e0 + b.wobble * ({noise} - 0.5e0) * 2e0))"
+    return (
+        theta,
+        rr,
+        f"(b.cx + {rr} * cos({theta}))",
+        f"(b.cy + {rr} * sin({theta}))",
+    )
 
 
 def series_sql(n: int, alias: str = "i", dialect: str = "spark") -> str:
     """Integer series 0..n-1 — np.linspace/arange support (app.py:26,41,141).
 
-    The ONLY dialect seam in the synthetic pipeline: Spark explodes a
-    `sequence`, DuckDB uses its `range` table function. Everything downstream
-    is shared text.
+    A dialect seam: Spark explodes a `sequence`, DuckDB uses its `range`
+    table function. Everything downstream is shared text; the array helpers
+    below are the other seams.
     """
     if dialect == "spark":
         # BIGINT cast matters: sequence(int, int) yields INTs and the LCG
@@ -193,6 +235,73 @@ def series_sql(n: int, alias: str = "i", dialect: str = "spark") -> str:
             f"FROM (SELECT explode(sequence(0, {n - 1})) AS _i))"
         )
     return f"(SELECT CAST(range AS BIGINT) AS {alias} FROM range({n}))"
+
+
+# Array functions where the two dialects spell them differently. Lambdas
+# (`x -> expr`) and `filter` are spelled the same in both.
+_LIST_FNS = {
+    "spark": {"transform": "transform", "min": "array_min", "max": "array_max",
+              "size": "size"},
+    "duckdb": {"transform": "list_transform", "min": "list_min",
+               "max": "list_max", "size": "len"},
+}
+
+
+def list_fn(name: str, dialect: str) -> str:
+    """The dialect's name for array function `name` (transform/min/max/size)."""
+    return _LIST_FNS[dialect][name]
+
+
+def list_at(array: str, i: str, dialect: str) -> str:
+    """Element `i` (0-based) of `array`."""
+    return f"{array}[{i}]" if dialect == "spark" else f"{array}[{i} + 1]"
+
+
+def int_list(lo: str, hi: str, dialect: str) -> str:
+    """BIGINT array lo..hi inclusive. Keep hi >= lo: Spark's `sequence`
+    counts down when lo > hi, DuckDB's `generate_series` is empty."""
+    fn = "sequence" if dialect == "spark" else "generate_series"
+    return f"{fn}(CAST({lo} AS BIGINT), CAST({hi} AS BIGINT))"
+
+
+def explode_sql(array: str, dialect: str) -> str:
+    """Select-list generator: one output row per element of `array`."""
+    return f"{'explode' if dialect == 'spark' else 'unnest'}({array})"
+
+
+def inline_sql(array: str, var: str, fields: dict[str, str], dialect: str) -> str:
+    """Select-list generator: one output row per element `var` of `array`,
+    with one output column per entry of `fields` (expressions of `var`)."""
+    struct = struct_sql(fields, dialect)
+    structs = f"{list_fn('transform', dialect)}({array}, {var} -> {struct})"
+    if dialect == "spark":
+        return f"inline({structs})"
+    return f"unnest({structs}, recursive := true)"
+
+
+def struct_sql(fields: dict[str, str], dialect: str) -> str:
+    """Struct literal with named fields."""
+    if dialect == "spark":
+        return "named_struct(" + ", ".join(
+            f"'{k}', {v}" for k, v in fields.items()) + ")"
+    return "struct_pack(" + ", ".join(f'"{k}" := {v}' for k, v in fields.items()) + ")"
+
+
+def list_sum_sql(array: str, dialect: str) -> str:
+    """Left-to-right double sum of `array` — the same additions, in the same
+    order, as a row-at-a-time SUM over the elements."""
+    if dialect == "spark":
+        return f"aggregate({array}, 0e0, (acc, v) -> acc + v)"
+    return f"list_reduce(list_prepend(0e0, {array}), (acc, v) -> acc + v)"
+
+
+def values_sql(cols: dict[str, str], alias: str, dialect: str) -> str:
+    """One-row inline relation `alias(cols…)` of literal expressions."""
+    row = ", ".join(cols.values())
+    names = ", ".join(cols)
+    if dialect == "spark":
+        return f"SELECT * FROM VALUES ({row}) AS {alias}({names})"
+    return f"SELECT * FROM (VALUES ({row})) AS {alias}({names})"
 
 
 def blobs_sql(seed: int, n_blobs: int, dialect: str) -> str:
@@ -208,19 +317,13 @@ def blobs_sql(seed: int, n_blobs: int, dialect: str) -> str:
 def boundary_sql(
     seed: int, n_blobs: int, dialect: str, n_samples: int = 280
 ) -> str:
-    """Blob boundary samples — app.py:141-144 / FIXTURES.md §B `boundary`.
-
-    theta = 2πk/(n-1); rr = r·(1 + wobble·(u-0.5)·2); px,py quantized to 6 dp
-    so both engines treat the polygon vertices as identical exact doubles
-    (cos/sin may differ in the last ulp across libm implementations).
-    """
-    theta = f"({TWO_PI} * k / {flit(n_samples - 1)})"
-    noise = lcg_u(f"b.blob_id * {n_samples} + k", seed + 101, 0)
-    rr = f"(b.r * (1e0 + b.wobble * ({noise} - 0.5e0) * 2e0))"
+    """Blob boundary samples — app.py:141-144 / FIXTURES.md §B `boundary`;
+    vertex formula in :func:`vertex_exprs`."""
+    theta, rr, x, y = vertex_exprs(seed, "k", n_samples)
     return (
         f"SELECT b.blob_id, k, {theta} AS theta, {rr} AS rr,\n"
-        f"  {q6(f'b.cx + {rr} * cos({theta})')} AS px,\n"
-        f"  {q6(f'b.cy + {rr} * sin({theta})')} AS py\n"
+        f"  {q6(x)} AS px,\n"
+        f"  {q6(y)} AS py\n"
         f"FROM ({blobs_sql(seed, n_blobs, dialect)}) b\n"
         f"CROSS JOIN {series_sql(n_samples, 'k', dialect)}"
     )
