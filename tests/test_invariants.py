@@ -7,6 +7,8 @@ implementation cannot violate regardless of data.
 
 from __future__ import annotations
 
+import pytest
+
 from week3_2_practice_big_data__spark import REGISTRY
 
 from .conftest import SF_SMALL
@@ -175,26 +177,46 @@ def test_reservoir_sample_is_per_source_k(spark):
     assert all(len(v) == 20 for v in per.values())  # every source has >=20 docs
 
 
-def test_bipartite_jaccard_concurrent_scale_factors(spark):
-    """Two threads run graph_bipartite_jaccard in one session on different
-    scale factors: the shared edge list and the capped edges are bound into
-    each query, not published as views, so each result equals its own
-    oracle and no bip_edges* view is left in the catalog."""
+# Batch builders from eight families (graph, poster canvas/shadow, TPC-H,
+# LLM prep, similarity, time series, quality) that set no session conf.
+_CONCURRENT_KEYS = (
+    "graph_bipartite_jaccard",
+    "gen_poster_caption",
+    "gen_poster_shadow",
+    "join_q3_shipping_priority",
+    "agg_q15_top_supplier",
+    "ns_text_tfidf",
+    "ns_domain_mix",
+    "ns_sim_ann_lsh",
+    "ts_cross_corr",
+    "dq_rowcount_anomaly",
+)
+
+
+@pytest.mark.parametrize("key", _CONCURRENT_KEYS)
+def test_batch_builders_concurrent_scale_factors(spark, key):
+    """Two threads run one builder in one session on different scale
+    factors: inputs and shared materializations are bound into each query
+    with spark.sql(text, name=df), not published as views, so each result
+    equals its own oracle and the session's temp views are unchanged."""
     from concurrent.futures import ThreadPoolExecutor
 
     from .conftest import SF_ORACLE
     from .oracle import compare, duck_run
 
-    entry = REGISTRY["graph_bipartite_jaccard"]
+    entry = REGISTRY[key]
+
+    def temp_views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
     def run(sf_dir: str) -> None:
         df = entry.builder(spark, sf_dir)
-        compare(df, duck_run(entry.oracle, sf_dir), key=f"bipartite:{sf_dir}")
+        compare(df, duck_run(entry.oracle, sf_dir), key=f"{key}:{sf_dir}")
 
+    before = temp_views()
     with ThreadPoolExecutor(2) as pool:
         list(pool.map(run, (SF_SMALL, SF_ORACLE)))
-    left = [t.name for t in spark.catalog.listTables() if t.name.startswith("bip_edges")]
-    assert left == []
+    assert temp_views() == before
 
 
 def test_build_once_single_winner_under_racing_builders():
@@ -355,9 +377,6 @@ def test_bootstrap_ci_brackets_the_mean(spark):
     assert r["ci_lo"] <= r["mean_full"] <= r["ci_hi"]
     width = r["ci_hi"] - r["ci_lo"]
     assert 0 < width < 0.2 * r["mean_full"]
-
-
-import pytest
 
 
 @pytest.mark.parametrize("limit,tag", [(0, "sf_empty"), (1, "sf_one")])
@@ -818,15 +837,15 @@ def test_pareto_abc_classes_partition_parts(spark):
     class A's revenue share lands at ~70% (first part to cross the
     threshold included), and every class carries real mass at sf0.001."""
     from week3_2_practice_big_data__spark import REGISTRY
+    from week3_2_practice_big_data__spark.io import load_table
 
     rows = {r["abc_class"]: r for r in
             REGISTRY["win_pareto_abc"].builder(spark, SF_SMALL).collect()}
     assert set(rows) == {"A", "B", "C"}
-    n_parts = (
-        REGISTRY["win_pareto_abc"].builder(spark, SF_SMALL)
-        .sparkSession.sql("SELECT count(DISTINCT l_partkey) AS n FROM lineitem")
-        .collect()[0]["n"]
-    )
+    n_parts = spark.sql(
+        "SELECT count(DISTINCT l_partkey) AS n FROM {lineitem}",
+        lineitem=load_table(spark, SF_SMALL, "lineitem"),
+    ).collect()[0]["n"]
     assert sum(r["n_parts"] for r in rows.values()) == n_parts
     assert all(r["n_parts"] > 0 for r in rows.values())
     assert 0.6 < rows["A"]["revenue_share"] <= 0.75
@@ -838,6 +857,8 @@ def test_curriculum_order_is_permutation(spark):
     non-NULL-text corpus, shards are contiguous 64-doc ranges, and the
     order is actually quality-descending (spot-checked via the score)."""
     from week3_2_practice_big_data__spark import REGISTRY
+    from week3_2_practice_big_data__spark.functions.llmprep import _qc_scored_sql
+    from week3_2_practice_big_data__spark.io import load_table
 
     rows = REGISTRY["ns_curriculum_order"].builder(spark, SF_SMALL).collect()
     pos = sorted(r["pos"] for r in rows)
@@ -845,12 +866,15 @@ def test_curriculum_order_is_permutation(spark):
     for r in rows:
         assert r["shard"] == (r["pos"] - 1) // 64
         assert r["pos_in_shard"] == (r["pos"] - 1) % 64 + 1
-    # ADVICE r8: tie pos to the quality score — the builder's curr_pb
-    # temp view carries z per doc; the walk down positions must be
+    # ADVICE r8: tie pos to the quality score — the builder's scoring
+    # text carries z per doc; the walk down positions must be
     # z-descending with doc_id as the tiebreak, so an ascending-sort
     # regression fails HERE, not only at the oracle compare.
     z = {r["doc_id"]: r["z"]
-         for r in spark.sql("SELECT doc_id, z FROM curr_pb").collect()}
+         for r in spark.sql(
+             f"SELECT doc_id, z FROM ({_qc_scored_sql('spark')}) qs",
+             documents=load_table(spark, SF_SMALL, "documents"),
+         ).collect()}
     ordered = sorted(rows, key=lambda r: r["pos"])
     assert len(ordered) > 2
     for a, b in zip(ordered, ordered[1:]):
@@ -1021,11 +1045,9 @@ def test_collation_merges_casings_binary_splits_them(spark):
     for r in rows:
         assert r["n_bu_pfx"] == (r["n"] if r["segment"] == "building" else 0)
 
-    spark.read.parquet(f"{SF_SMALL}/customer.parquet").createOrReplaceTempView(
-        "customer"
-    )
     n_binary = spark.sql(
-        f"SELECT count(DISTINCT {_COLLATE_VARIANT}) AS n FROM customer"
+        f"SELECT count(DISTINCT {_COLLATE_VARIANT}) AS n FROM {{customer}}",
+        customer=spark.read.parquet(f"{SF_SMALL}/customer.parquet"),
     ).first()["n"]
     assert n_binary == 15  # 5 segments x 3 casings under UTF8_BINARY
 

@@ -612,13 +612,14 @@ def test_vocab_coverage_bounds_and_conservation(spark):
     import pyspark.sql.functions as F
 
     from week3_2_practice_big_data__spark.functions.text import (
-        cached_tokens_ref,
+        TOK_REF,
+        cached_tokens,
     )
 
     rows = REGISTRY["ns_vocab_coverage"].builder(spark, SF_SMALL).collect()
     assert rows
     total_tokens = spark.sql(
-        f"SELECT count(*) AS n FROM ({cached_tokens_ref(spark, SF_SMALL)})"
+        f"SELECT count(*) AS n FROM ({TOK_REF})", tok=cached_tokens(spark, SF_SMALL)
     ).collect()[0]["n"]
     assert sum(r["n_tokens"] for r in rows) == total_tokens
     assert sum(r["n_oov"] for r in rows) > 0  # the V-cap bites

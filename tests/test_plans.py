@@ -482,6 +482,7 @@ def test_islands_blocked_no_global_window_over_events(spark):
     itself must window by block only."""
     import re
 
+    from week3_2_practice_big_data__spark.io import load_table
     from week3_2_practice_big_data__spark.operators.advanced import (
         _islands_edges_sql,
     )
@@ -493,7 +494,9 @@ def test_islands_blocked_no_global_window_over_events(spark):
     assert "row_number" not in plan
     assert "Scan ExistingRDD" in plan  # the checkpointed edges summary
 
-    edges_plan = spark.sql(_islands_edges_sql())._jdf.queryExecution()
+    edges_plan = spark.sql(
+        _islands_edges_sql(), events=load_table(spark, SF_SMALL, "events")
+    )._jdf.queryExecution()
     ep = edges_plan.executedPlan().toString()
     for line in ep.splitlines():
         if "Window [" in line:
@@ -933,6 +936,7 @@ def test_bfs_round_plan_equi_joins_only(spark):
     checkpoints 4 times."""
     import pyspark.sql.functions as F
 
+    from week3_2_practice_big_data__spark.io import load_table
     from week3_2_practice_big_data__spark.operators.advanced import (
         _BFS_SEEDS_SQL,
         _BFS_UND_SQL,
@@ -940,13 +944,15 @@ def test_bfs_round_plan_equi_joins_only(spark):
         _bip_edges,
     )
 
-    # builder run primes the bip_edges checkpoint + the supplier view
+    # builder run primes the bip_edges checkpoint
     REGISTRY["iter_bfs_sssp"].builder(spark, SF_SMALL).collect()
     und = spark.sql(
         "WITH bip AS (SELECT p, s FROM {bip}) " + _BFS_UND_SQL,
         bip=_bip_edges(spark, SF_SMALL),
     )
-    frontier = spark.sql(_BFS_SEEDS_SQL)
+    frontier = spark.sql(
+        _BFS_SEEDS_SQL, supplier=load_table(spark, SF_SMALL, "supplier")
+    )
     new = _bfs_expand(und, frontier, frontier.select("node"))
     plan = new._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan

@@ -270,9 +270,11 @@ def test_islands_blocked_chain_merge_multiblock():
     from week3_2_practice_big_data__spark.operators import advanced as adv
 
     def blocked_sql(B):
-        return adv._islands_blocked_sql(adv._islands_edges_sql(block=B))
+        return adv._islands_blocked_sql(adv._islands_edges_sql(block=B)).format(
+            events="events"
+        )
 
-    global_sql = adv._islands_sql("duckdb")
+    global_sql = adv._islands_sql("duckdb").format(events="events")
 
     def run(ids, B):
         con = duckdb.connect()
@@ -447,7 +449,7 @@ def test_chunk_tiling_covers_every_token(n):
     )
 
     text = " ".join(f"t{i}" for i in range(n))
-    q = _chunk_overlap_sql("duckdb")
+    q = _chunk_overlap_sql("duckdb").format(documents="documents")
     sql = q.replace(
         "WITH tok AS",
         f"WITH documents(doc_id, text) AS (VALUES (1, '{text}')), tok AS",
@@ -557,10 +559,9 @@ def test_blocked_global_shuffle_matches_naive_random(spark):
     blocked_sql = _global_shuffle_spark_sql()
     for ids in cases:
         df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-        df.createOrReplaceTempView("documents")
         blocked = {
             r["doc_id"]: (r["pos"], r["shard"], r["pos_in_shard"])
-            for r in spark.sql(blocked_sql).collect()
+            for r in spark.sql(blocked_sql, documents=df).collect()
         }
         naive = {
             r["doc_id"]: (r["pos"], r["shard"], r["pos_in_shard"])
@@ -571,8 +572,8 @@ SELECT doc_id, pos,
 FROM (
   SELECT doc_id, row_number() OVER (
     ORDER BY md5(concat('shuf1:', CAST(doc_id AS STRING))), doc_id) AS pos
-  FROM documents) t
-""").collect()
+  FROM {{documents}}) t
+""", documents=df).collect()
         }
         assert blocked == naive, len(ids)
 
@@ -620,7 +621,7 @@ def test_km_survival_matches_python_product(pairs):
 
     rows = [(u, s * 1_000_000, "view", 1.0) for u, s in pairs]
     con = _duck_with_events(rows)
-    got = con.execute(_survival_sql("duckdb")).fetchall()
+    got = con.execute(_survival_sql("duckdb").format(events="events")).fetchall()
     # Pure-Python Kaplan-Meier from the same rows.
     by_user: dict = {}
     for u, us, _, _ in rows:
@@ -674,7 +675,7 @@ def test_markov_rows_are_distributions(triples):
 
     rows = [(u, s * 1_000_000, t, 1.0) for u, s, t in triples]
     con = _duck_with_events(rows)
-    got = con.execute(_markov_sql("duckdb")).fetchall()
+    got = con.execute(_markov_sql("duckdb").format(events="events")).fetchall()
     from collections import defaultdict
 
     by_from = defaultdict(list)
@@ -703,7 +704,7 @@ def test_lift_gains_curve_invariants():
         "CREATE VIEW events AS SELECT * FROM "
         f"read_parquet('{_SF0001}/events.parquet')"
     )
-    rows = con.execute(_lift_gains_sql("duckdb")).fetchall()
+    rows = con.execute(_lift_gains_sql("duckdb").format(events="events")).fetchall()
     assert rows, "sf0.001 events must produce a gains table"
     reach = [r[6] for r in rows]   # cum_reach, walked top bucket down
     capture = [r[5] for r in rows]

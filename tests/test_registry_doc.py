@@ -58,3 +58,38 @@ def test_driver_contract_lists_keys_in_registration_order():
     got = entry.oracle_sql()
     assert got == expected
     assert list(got) == list(expected)
+
+
+# Builders bind their inputs with spark.sql(text, name=df). The only
+# createOrReplaceTempView calls left are keys whose point is a catalog
+# feature; each uses a name unique to the call and drops it in `finally`
+# (the list in CHANGES.md).
+_TEMP_VIEW_EXCEPTIONS = {("operators/subqueries.py", "qry_dynamic_sql")}
+
+
+def test_no_temp_views_outside_catalog_feature_keys():
+    """Static guard (no Spark): walk every package module's AST and fail
+    on a createOrReplaceTempView call outside the listed exceptions."""
+    import ast
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "week3_2_practice_big_data__spark")
+    found = set()
+    for dirpath, _, files in os.walk(pkg):
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for top in tree.body:
+                owner = getattr(top, "name", "<module>")
+                for node in ast.walk(top):
+                    if (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "createOrReplaceTempView"
+                    ):
+                        found.add((rel, owner))
+    assert found - _TEMP_VIEW_EXCEPTIONS == set(), sorted(found)

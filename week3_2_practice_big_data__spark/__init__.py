@@ -10,12 +10,12 @@ driver-side loops, Catalyst/AQE left free to optimize).
 
 Public surface:
     get_spark()            — tuned local SparkSession (tests/bench)
-    load_table/load_tables — parquet ingestion for the driver test tables
+    load_table             — parquet ingestion of the input tables
     REGISTRY               — all query keys (SURVEY.md §2) with DuckDB oracles
 """
 
 from .session import get_spark
-from .io import TABLES, load_table, load_tables, register_views
+from .io import TABLES, load_table
 from .registry import REGISTRY, register, Query
 
 # Import query modules for their registration side effects.
@@ -34,8 +34,6 @@ __all__ = [
     "get_spark",
     "TABLES",
     "load_table",
-    "load_tables",
-    "register_views",
     "REGISTRY",
     "register",
     "Query",

@@ -162,11 +162,11 @@ def checkpointed(spark, name: str, build, sf_dir: str | None = None, params: tup
     """Materialize-once: eager localCheckpoint of ``build()``'s result, kept
     in the session's store under ``(name, sf_dir, params)``.
 
-    The ONE sanctioned pattern for relations consumed multiple times via a
-    temp view: persist()+view silently misses Spark's cache for plans
-    containing collect_list (flagged nondeterministic) or higher-order
-    lambdas (canonicalization fails), re-deriving the relation per
-    reference — an RDD-backed checkpoint cannot miss.
+    The ONE sanctioned pattern for relations a query reads several times:
+    persist() silently misses Spark's cache for plans containing
+    collect_list (flagged nondeterministic) or higher-order lambdas
+    (canonicalization fails), re-deriving the relation per reference —
+    an RDD-backed checkpoint cannot miss.
 
     ``name`` identifies the relation: builders that share a relation pass
     the same name. Pass ``sf_dir`` for relations read from the tables

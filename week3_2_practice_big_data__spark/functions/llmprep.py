@@ -38,10 +38,6 @@ from .text import (
 from .similarity import _dot_fold
 
 
-def _view(spark: SparkSession, sf_dir: str, name: str) -> None:
-    load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 # ---------------------------------------------------------------------------
 # ns_repetition_filter — Gopher-style repetition signals: fraction of
 # repeated tokens and the share of the most frequent bigram. Documents
@@ -92,7 +88,7 @@ ORDER BY doc_id
 
 @register(
     "ns_repetition_filter",
-    oracle=_repetition_sql("duckdb"),
+    oracle=_repetition_sql("duckdb").format(documents="documents"),
     doc="Gopher-style repetition quality signals per document: repeated-"
     "token fraction and top-bigram share, with the keep decision on "
     "quantized boundaries. One tokenize pass, doc_id-keyed aggregations "
@@ -100,8 +96,8 @@ ORDER BY doc_id
     tags=("ns", "text", "quality"),
 )
 def ns_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_repetition_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_repetition_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -145,16 +141,16 @@ LIMIT 20
 
 @register(
     "ns_text_pmi",
-    oracle=_pmi_sql("duckdb"),
+    oracle=_pmi_sql("duckdb").format(documents="documents"),
     doc="Collocation mining via pointwise mutual information of adjacent "
     "token pairs (min support 3, top-20). Unigram and bigram counts are "
     "token-keyed aggregates; the totals are scalar broadcasts (NS).",
     tags=("ns", "text"),
 )
 def ns_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .text import cached_tokens_ref
+    from .text import TOK_REF, cached_tokens
 
-    return spark.sql(_pmi_sql("spark", cached_tokens_ref(spark, sf_dir)))
+    return spark.sql(_pmi_sql("spark", TOK_REF), tok=cached_tokens(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -176,9 +172,19 @@ WITH tok AS ({tokens_sql(dialect)}),
 dl AS (SELECT doc_id, count(*) AS n_tok FROM tok GROUP BY doc_id)
 SELECT d.source, count(*) AS n_docs,
   CAST(sum(coalesce(dl.n_tok, 0)) AS BIGINT) AS n_tokens
-FROM documents d LEFT JOIN dl ON d.doc_id = dl.doc_id
+FROM {{documents}} d LEFT JOIN dl ON d.doc_id = dl.doc_id
 GROUP BY d.source
 """
+
+
+def _domain_src(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The per-source relation, materialized once for both mixture keys."""
+    documents = load_table(spark, sf_dir, "documents")
+    return checkpointed(
+        spark, "domain_src",
+        lambda: spark.sql(_domain_src_sql("spark"), documents=documents).coalesce(1),
+        sf_dir,
+    )
 
 
 def _domain_mix_sql(dialect: str, per_src_ref: str | None = None) -> str:
@@ -204,24 +210,19 @@ ORDER BY per_src.source
 
 @register(
     "ns_domain_mix",
-    oracle=_domain_mix_sql("duckdb"),
+    oracle=_domain_mix_sql("duckdb").format(documents="documents"),
     doc="Domain-mixture accounting: per-source doc/token counts, token "
     "share, and the uniform-target resampling weight (target/actual). Two "
     "bounded-key aggregations + a scalar broadcast (NS).",
     tags=("ns", "text", "sampling"),
 )
 def ns_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    checkpointed(
-        spark, "domain_src",
-        lambda: spark.sql(_domain_src_sql("spark")).coalesce(1),
-        sf_dir,
-    ).createOrReplaceTempView("domain_src")
     return spark.sql(
         _domain_mix_sql(
             "spark",
-            per_src_ref="SELECT source, n_docs, n_tokens FROM domain_src",
-        )
+            per_src_ref="SELECT source, n_docs, n_tokens FROM {per_src}",
+        ),
+        per_src=_domain_src(spark, sf_dir),
     )
 
 
@@ -269,7 +270,7 @@ ORDER BY s.tau, s.source
 
 @register(
     "ns_domain_temperature",
-    oracle=_domain_temperature_sql("duckdb"),
+    oracle=_domain_temperature_sql("duckdb").format(documents="documents"),
     doc="Temperature-scaled domain sampling (p_i ∝ share_i^τ, τ ∈ {0.3, "
     "0.7, 1.0} — the XLM-R multi-domain mixing rule): per-(τ, source) "
     "sampling probability and upsample factor; share^τ quantized to "
@@ -278,17 +279,12 @@ ORDER BY s.tau, s.source
     tags=("ns", "sampling", "text"),
 )
 def ns_domain_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    checkpointed(
-        spark, "domain_src",
-        lambda: spark.sql(_domain_src_sql("spark")).coalesce(1),
-        sf_dir,
-    ).createOrReplaceTempView("domain_src")
     return spark.sql(
         _domain_temperature_sql(
             "spark",
-            per_src_ref="SELECT source, n_docs, n_tokens FROM domain_src",
-        )
+            per_src_ref="SELECT source, n_docs, n_tokens FROM {per_src}",
+        ),
+        per_src=_domain_src(spark, sf_dir),
     )
 
 
@@ -371,7 +367,7 @@ LIMIT {_KN_TOP}
 
 @register(
     "ns_kn_bigram",
-    oracle=_kn_bigram_sql("duckdb"),
+    oracle=_kn_bigram_sql("duckdb").format(documents="documents"),
     doc="Interpolated Kneser-Ney bigram LM estimate (Kneser & Ney 1995, "
     "Chen-Goodman discount n1/(n1+2n2)): absolute-discounted bigram "
     "probability backed off to continuation unigrams, top-50 bigrams — "
@@ -380,13 +376,13 @@ LIMIT {_KN_TOP}
     tags=("ns", "text", "statml"),
 )
 def ns_kn_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    checkpointed(
-        spark, "kn_bc", lambda: spark.sql(_kn_bc_sql("spark")).coalesce(8), sf_dir
-    ).createOrReplaceTempView("kn_bc")
-    return spark.sql(
-        _kn_bigram_sql("spark", bc_ref="SELECT v, w, c FROM kn_bc")
+    documents = load_table(spark, sf_dir, "documents")
+    bc = checkpointed(
+        spark, "kn_bc",
+        lambda: spark.sql(_kn_bc_sql("spark"), documents=documents).coalesce(8),
+        sf_dir,
     )
+    return spark.sql(_kn_bigram_sql("spark", bc_ref="SELECT v, w, c FROM {bc}"), bc=bc)
 
 
 # ---------------------------------------------------------------------------
@@ -434,7 +430,7 @@ LIMIT 50
 
 @register(
     "ns_decontaminate_ngram",
-    oracle=_decontaminate_ngram_sql("duckdb"),
+    oracle=_decontaminate_ngram_sql("duckdb").format(documents="documents"),
     doc="N-gram benchmark decontamination: distinct 5-gram overlap between "
     "corpus documents and a held-out eval slice (doc_id % 97 = 0). The "
     "DISTINCT eval gram set broadcasts; the corpus is scanned once — the "
@@ -443,8 +439,10 @@ LIMIT 50
     tags=("ns", "text", "decontamination"),
 )
 def ns_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_decontaminate_ngram_sql("spark"))
+    return spark.sql(
+        _decontaminate_ngram_sql("spark"),
+        documents=load_table(spark, sf_dir, "documents"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -538,7 +536,7 @@ matches AS (
 newdocs AS (
   -- From the documents TABLE, not sig: a sub-3-token new doc has no
   -- shingles (hence no signature) but still needs an admit decision.
-  SELECT doc_id FROM documents WHERE doc_id % {_INC_MOD} = 0
+  SELECT doc_id FROM {{documents}} WHERE doc_id % {_INC_MOD} = 0
 )
 SELECT nd.doc_id AS new_id,
   coalesce(m.n_dup_matches, 0) AS n_dup_matches,
@@ -551,7 +549,7 @@ ORDER BY new_id
 
 @register(
     "ns_dedup_incremental",
-    oracle=_dedup_incremental_sql("duckdb"),
+    oracle=_dedup_incremental_sql("duckdb").format(documents="documents"),
     doc="Incremental near-dup ingestion: the new batch (every 10th doc) "
     "probes the standing MinHash band index — only new×old candidates, "
     "verified by signature agreement, per-document admit/reject. Ingest "
@@ -562,12 +560,10 @@ ORDER BY new_id
 def ns_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import _cached_minhash_sig
 
-    _view(spark, sf_dir, "documents")
-    _cached_minhash_sig(spark, sf_dir).createOrReplaceTempView("minhash_sig")
     return spark.sql(
-        _dedup_incremental_sql(
-            "spark", sig_ref="SELECT doc_id, i, sig FROM minhash_sig"
-        )
+        _dedup_incremental_sql("spark", sig_ref="SELECT doc_id, i, sig FROM {sig}"),
+        sig=_cached_minhash_sig(spark, sf_dir),
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -591,7 +587,7 @@ def ns_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ns_dedup_incremental_persist",
-    oracle=_dedup_incremental_sql("duckdb"),
+    oracle=_dedup_incremental_sql("duckdb").format(documents="documents"),
     doc="Persist-and-probe incremental dedup: the standing MinHash band "
     "index + old-corpus signatures are written once as parquet scratch "
     "tables (build_once, stamp-keyed) and the ingest batch probes the "
@@ -608,48 +604,37 @@ def ns_dedup_incremental_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.files import _scratch
     from .text import MINHASH_BAND, MINHASH_K, _bandsig, _cached_minhash_sig
 
-    _view(spark, sf_dir, "documents")
     band = MINHASH_BAND
     out = _scratch(sf_dir, "bandidx")
 
     def build(tmp: str) -> None:
         sig = _cached_minhash_sig(spark, sf_dir)
-        sig.createOrReplaceTempView("w32bd_idx_allsig")
         spark.sql(f"""
 SELECT doc_id, {band} AS band, {_bandsig("spark")} AS bandsig
-FROM w32bd_idx_allsig WHERE doc_id % {_INC_MOD} <> 0
+FROM {{sig}} WHERE doc_id % {_INC_MOD} <> 0
 GROUP BY doc_id, {band}
-""").write.mode("overwrite").parquet(os.path.join(tmp, "bands.parquet"))
+""", sig=sig).write.mode("overwrite").parquet(os.path.join(tmp, "bands.parquet"))
         sig.filter(f"doc_id % {_INC_MOD} <> 0").write.mode(
             "overwrite"
         ).parquet(os.path.join(tmp, "sig.parquet"))
 
     build_once(out, build, stamp=f"v1:k{MINHASH_K}:m{_INC_MOD}")
-    spark.read.parquet(
-        os.path.join(out, "bands.parquet")
-    ).createOrReplaceTempView("w32bd_idx_bands")
-    spark.read.parquet(
-        os.path.join(out, "sig.parquet")
-    ).createOrReplaceTempView("w32bd_idx_oldsig")
-    _cached_minhash_sig(spark, sf_dir).filter(
-        f"doc_id % {_INC_MOD} = 0"
-    ).createOrReplaceTempView("w32bd_idx_newsig")
     return spark.sql(f"""
 WITH nbands AS (
   SELECT doc_id, {band} AS band, {_bandsig("spark")} AS bandsig
-  FROM w32bd_idx_newsig GROUP BY doc_id, {band}
+  FROM {{newsig}} GROUP BY doc_id, {band}
 ),
 cand AS (
   SELECT DISTINCT n.doc_id AS new_id, o.doc_id AS old_id
-  FROM nbands n JOIN w32bd_idx_bands o
+  FROM nbands n JOIN {{bands}} o
     ON n.band = o.band AND n.bandsig = o.bandsig
 ),
 verify AS (
   SELECT c.new_id, c.old_id,
     sum(CASE WHEN sa.sig = sb.sig THEN 1e0 ELSE 0e0 END) / {MINHASH_K}e0 AS est
   FROM cand c
-  JOIN w32bd_idx_newsig sa ON sa.doc_id = c.new_id
-  JOIN w32bd_idx_oldsig sb ON sb.doc_id = c.old_id AND sb.i = sa.i
+  JOIN {{newsig}} sa ON sa.doc_id = c.new_id
+  JOIN {{oldsig}} sb ON sb.doc_id = c.old_id AND sb.i = sa.i
   GROUP BY c.new_id, c.old_id
 ),
 matches AS (
@@ -658,7 +643,7 @@ matches AS (
   GROUP BY new_id
 ),
 newdocs AS (
-  SELECT doc_id FROM documents WHERE doc_id % {_INC_MOD} = 0
+  SELECT doc_id FROM {{documents}} WHERE doc_id % {_INC_MOD} = 0
 )
 SELECT nd.doc_id AS new_id,
   coalesce(m.n_dup_matches, 0) AS n_dup_matches,
@@ -666,7 +651,12 @@ SELECT nd.doc_id AS new_id,
   (m.new_id IS NULL) AS admit
 FROM newdocs nd LEFT JOIN matches m ON nd.doc_id = m.new_id
 ORDER BY new_id
-""")
+""",
+        newsig=_cached_minhash_sig(spark, sf_dir).filter(f"doc_id % {_INC_MOD} = 0"),
+        bands=spark.read.parquet(os.path.join(out, "bands.parquet")),
+        oldsig=spark.read.parquet(os.path.join(out, "sig.parquet")),
+        documents=load_table(spark, sf_dir, "documents"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -714,7 +704,7 @@ ORDER BY doc_id
 
 @register(
     "ns_dedup_paragraph",
-    oracle=_dedup_paragraph_sql("duckdb"),
+    oracle=_dedup_paragraph_sql("duckdb").format(documents="documents"),
     doc="Sub-document dedup: 8-token chunks assembled with ordered string "
     "agg, counted corpus-wide, per-document duplicated-chunk fraction + "
     "keep rule — the paragraph-granularity pass between exact and near "
@@ -722,8 +712,8 @@ ORDER BY doc_id
     tags=("ns", "dedup", "text"),
 )
 def ns_dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_dedup_paragraph_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_dedup_paragraph_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -779,7 +769,7 @@ WITH scaled AS (
   -- is NULL; DuckDB's generate_series fold sees 64 NULL elements and
   -- its greatest/least skip them) — r13 weird-fixture v2 finding.
   SELECT vec_id, label, embedding, {amax} / {_QLEVELS}e0 AS scale
-  FROM embeddings WHERE embedding IS NOT NULL
+  FROM {{embeddings}} WHERE embedding IS NOT NULL
 )
 SELECT s.vec_id, s.label,
   {synth.q6("s.scale")} AS scale_q6,
@@ -793,7 +783,7 @@ ORDER BY s.vec_id
 
 @register(
     "ns_embed_quantize",
-    oracle=_quantize_sql("duckdb"),
+    oracle=_quantize_sql("duckdb").format(embeddings="embeddings"),
     doc="Int8 symmetric embedding quantization: per-vector scale = "
     "max|v|/127, clamp(floor(v/scale+0.5)) codes, reconstruction RMSE — "
     "all fixed-order array folds, map-side only, zero shuffle (NS; the "
@@ -801,13 +791,13 @@ ORDER BY s.vec_id
     tags=("ns", "similarity", "scale"),
 )
 def ns_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "embeddings")
-    return spark.sql(_quantize_sql("spark"))
+    embeddings = load_table(spark, sf_dir, "embeddings")
+    return spark.sql(_quantize_sql("spark"), embeddings=embeddings)
 
 
 @register(
     "ns_ann_knn_join",
-    oracle=_knn_join_sql("duckdb"),
+    oracle=_knn_join_sql("duckdb").format(embeddings="embeddings"),
     doc="Batch kNN join: top-5 cosine neighbors for every 50th vector as "
     "queries, one plan — broadcast query set, map-side fixed-order dot "
     "folds, single qid shuffle for ranking (NS; IVF probe is the unbounded-"
@@ -817,12 +807,11 @@ def ns_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ns_ann_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .similarity import _cached_emb_norm
 
-    _view(spark, sf_dir, "embeddings")
-    _cached_emb_norm(spark, sf_dir).createOrReplaceTempView("embeddings_norm")
     return spark.sql(
         _knn_join_sql(
-            "spark", emb_ref="SELECT vec_id, label, embedding, nrm FROM embeddings_norm"
-        )
+            "spark", emb_ref="SELECT vec_id, label, embedding, nrm FROM {emb}"
+        ),
+        emb=_cached_emb_norm(spark, sf_dir),
     )
 
 
@@ -867,7 +856,7 @@ LIMIT {_BPE_TOP}
 
 @register(
     "ns_bpe_pair_stats",
-    oracle=_bpe_pair_sql("duckdb"),
+    oracle=_bpe_pair_sql("duckdb").format(documents="documents"),
     doc="BPE vocabulary induction, first pass: corpus-weighted adjacent "
     "character-pair frequencies over the distinct token vocabulary — the "
     "argmax of this table IS the first BPE merge. Character explode is "
@@ -876,8 +865,8 @@ LIMIT {_BPE_TOP}
     tags=("ns", "text", "tokenizer"),
 )
 def ns_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_bpe_pair_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_bpe_pair_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -983,13 +972,12 @@ def _cached_ppl_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocked-ntile tail consumes it twice, and CTE inlining would re-run
     the unigram join per reference. Tokenizes via the session-shared token
     stream. Shared by ns_text_perplexity and ns_pipeline_e2e (r8)."""
-    from .text import cached_tokens_ref
+    from .text import TOK_REF, cached_tokens
 
-    _view(spark, sf_dir, "documents")
     return checkpointed(
         spark, "ppl_doc",
         lambda: spark.sql(
-            _perplexity_doc_sql("spark", cached_tokens_ref(spark, sf_dir))
+            _perplexity_doc_sql("spark", TOK_REF), tok=cached_tokens(spark, sf_dir)
         ).coalesce(8),
         sf_dir,
     )
@@ -997,7 +985,7 @@ def _cached_ppl_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ns_text_perplexity",
-    oracle=_perplexity_sql("duckdb"),
+    oracle=_perplexity_sql("duckdb").format(documents="documents"),
     doc="CCNet-style LM quality scoring (public method, arXiv:1911.00359): "
     "per-doc mean NLL under a corpus-estimated add-1 unigram model, "
     "head/middle/tail perplexity terciles via the hierarchical blocked-"
@@ -1010,9 +998,9 @@ def ns_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the per-doc score relation once (and tokenize via the
     # session-shared token stream): the blocked-ntile tail consumes it
     # twice, and CTE inlining would re-run the unigram join per reference.
-    _cached_ppl_doc(spark, sf_dir).createOrReplaceTempView("ppl_doc")
     return spark.sql(
-        _perplexity_sql("spark", "SELECT doc_id, n_tokens, nll FROM ppl_doc")
+        _perplexity_sql("spark", "SELECT doc_id, n_tokens, nll FROM {doc}"),
+        doc=_cached_ppl_doc(spark, sf_dir),
     )
 
 
@@ -1098,7 +1086,7 @@ ORDER BY doc_id
 
 @register(
     "ns_sample_importance",
-    oracle=_importance_sql("duckdb"),
+    oracle=_importance_sql("duckdb").format(documents="documents"),
     doc="Quality-weighted importance subsampling: quality terciles (via the "
     "hierarchical blocked-ntile decomposition, r6 — no corpus-sized global "
     "sort) keep 100/50/10 percent via the deterministic affine doc_id hash "
@@ -1109,21 +1097,18 @@ ORDER BY doc_id
 def ns_sample_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text import _quality_sql
 
-    _view(spark, sf_dir, "documents")
     # Materialize the quality scores once: the blocked-ntile tail reads q
     # from both the bucket-count and the rank CTE, and inlining would
     # re-run the regex scoring scan per reference.
     q = checkpointed(
         spark, "imp_q",
         lambda: spark.sql(
-            f"SELECT doc_id, quality FROM ({_quality_sql('spark')}) qq"
+            f"SELECT doc_id, quality FROM ({_quality_sql('spark')}) qq",
+            documents=load_table(spark, sf_dir, "documents"),
         ).coalesce(8),
         sf_dir,
     )
-    q.createOrReplaceTempView("imp_q")
-    return spark.sql(
-        _importance_sql("spark", "SELECT doc_id, quality FROM imp_q")
-    )
+    return spark.sql(_importance_sql("spark", "SELECT doc_id, quality FROM {q}"), q=q)
 
 
 # ---------------------------------------------------------------------------
@@ -1244,7 +1229,7 @@ ORDER BY n_shared_spans DESC, da, db
 
 @register(
     "ns_dedup_substring",
-    oracle=_substring_sql("duckdb"),
+    oracle=_substring_sql("duckdb").format(documents="documents"),
     doc="Exact-substring span dedup (public method, arXiv:2107.06499): doc "
     "pairs sharing an exact 8-token run, via an inverted span index over "
     "exact-dup REPRESENTATIVES (rep-collapse, r5) with df ≤ 50 cap on "
@@ -1256,21 +1241,19 @@ ORDER BY n_shared_spans DESC, da, db
     tags=("ns", "dedup", "text"),
 )
 def ns_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    checkpointed(
+    documents = load_table(spark, sf_dir, "documents")
+    sd = checkpointed(
         spark, "substr_sd",
-        lambda: spark.sql(_substring_sd_sql("spark")).coalesce(8),
+        lambda: spark.sql(_substring_sd_sql("spark"), documents=documents).coalesce(8),
         sf_dir,
-    ).createOrReplaceTempView("substr_sd")
+    )
     # the doc→rep map is the SHARED materialization (functions.text)
-    from .text import cached_rep_map_ref
+    from .text import REP_REF, cached_rep_map
 
     return spark.sql(
-        _substring_sql(
-            "spark",
-            sd_ref="SELECT doc_id, span FROM substr_sd",
-            g_ref=cached_rep_map_ref(spark, sf_dir),
-        )
+        _substring_sql("spark", sd_ref="SELECT doc_id, span FROM {sd}", g_ref=REP_REF),
+        sd=sd,
+        rep=cached_rep_map(spark, sf_dir),
     )
 
 
@@ -1293,7 +1276,7 @@ def _reservoir_sql(dialect: str) -> str:
 WITH ranked AS (
   SELECT source, doc_id, n_chars,
     row_number() OVER (PARTITION BY source ORDER BY {h}, doc_id) AS rk
-  FROM documents
+  FROM {{documents}}
 )
 SELECT source, doc_id, n_chars, rk
 FROM ranked WHERE rk <= {_RESERVOIR_K}
@@ -1303,7 +1286,7 @@ ORDER BY source, rk
 
 @register(
     "ns_sample_reservoir",
-    oracle=_reservoir_sql("duckdb"),
+    oracle=_reservoir_sql("duckdb").format(documents="documents"),
     doc="Deterministic per-source k=20 uniform sample: affine doc_id hash "
     "rank, keep the k smallest per group — reservoir-sampling semantics "
     "with cross-engine/shard reproducibility; per-group top-k, no global "
@@ -1311,8 +1294,8 @@ ORDER BY source, rk
     tags=("ns", "sampling"),
 )
 def ns_sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_reservoir_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_reservoir_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -1408,7 +1391,7 @@ def _bpe_merges_oracle() -> str:
 
 @register(
     "iter_bpe_merges",
-    oracle=_bpe_merges_oracle(),
+    oracle=_bpe_merges_oracle().format(documents="documents"),
     doc="BPE vocabulary induction, 3 greedy merge rounds over the corpus-"
     "weighted vocabulary (follows ns_bpe_pair_stats): per round, argmax "
     "adjacent symbol pair → leftmost-non-overlapping application via "
@@ -1440,28 +1423,27 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     the latter; one training, two keys, same merge table."""
     import pyspark.sql.functions as F
 
-    _view(spark, sf_dir, "documents")
+    documents = load_table(spark, sf_dir, "documents")
     seq = spark.sql(f"""
 SELECT v.token, v.freq, s.i AS pos, substring(v.token, CAST(s.i AS INT) + 1, 1) AS sym
 FROM (SELECT token, count(*) AS freq FROM ({tokens_sql("spark")}) t GROUP BY token) v
 JOIN {synth.series_sql(_BPE_MAXLEN, "i", "spark")} s ON s.i < length(v.token)
-""").localCheckpoint(eager=True)
+""", documents=documents).localCheckpoint(eager=True)
 
     tops = []
     for r in range(1, _BPE_ROUNDS + 1):
-        seq.createOrReplaceTempView("bpe_seq")
         adj = spark.sql(
             "SELECT token, freq, pos, sym, "
             "lead(sym) OVER (PARTITION BY token ORDER BY pos) AS nxt "
-            "FROM bpe_seq"
+            "FROM {seq}",
+            seq=seq,
         ).localCheckpoint(eager=True)
-        adj.createOrReplaceTempView("bpe_adj")
         top = spark.sql(
             "SELECT sym AS a, nxt AS b, CAST(sum(freq) AS BIGINT) AS c "
-            "FROM bpe_adj WHERE nxt IS NOT NULL "
-            "GROUP BY sym, nxt ORDER BY c DESC, a, b LIMIT 1"
+            "FROM {adj} WHERE nxt IS NOT NULL "
+            "GROUP BY sym, nxt ORDER BY c DESC, a, b LIMIT 1",
+            adj=adj,
         ).localCheckpoint(eager=True)
-        top.createOrReplaceTempView("bpe_top")
         tops.append(top.withColumn("round", F.lit(r)))
         seq = spark.sql("""
 WITH mch AS (
@@ -1471,18 +1453,18 @@ WITH mch AS (
     SELECT a1.token, a1.pos,
       a1.pos - row_number() OVER (PARTITION BY a1.token ORDER BY a1.pos)
         AS chain
-    FROM bpe_adj a1 JOIN bpe_top t ON a1.sym = t.a AND a1.nxt = t.b
+    FROM {adj} a1 JOIN {top} t ON a1.sym = t.a AND a1.nxt = t.b
   ) runs
 ),
 keep AS (SELECT token, pos FROM mch WHERE crn % 2 = 1)
 SELECT s.token, s.freq,
   row_number() OVER (PARTITION BY s.token ORDER BY s.pos) - 1 AS pos,
   CASE WHEN k.pos IS NOT NULL THEN s.sym || s.nxt ELSE s.sym END AS sym
-FROM bpe_adj s
+FROM {adj} s
 LEFT JOIN keep k ON s.token = k.token AND s.pos = k.pos
 LEFT JOIN keep kc ON s.token = kc.token AND s.pos = kc.pos + 1
 WHERE kc.pos IS NULL
-""").localCheckpoint(eager=True)
+""", adj=adj, top=top).localCheckpoint(eager=True)
     return tops, seq
 
 
@@ -1534,7 +1516,7 @@ ORDER BY t.doc_id
 
 @register(
     "ns_bpe_encode",
-    oracle=_bpe_encode_sql("duckdb"),
+    oracle=_bpe_encode_sql("duckdb").format(documents="documents"),
     doc="Corpus-wide BPE encoding with the trained merge table (completes "
     "the tokenizer story: ns_bpe_pair_stats → iter_bpe_merges → encode): "
     "the chain's final symbol state is the encoded DISTINCT vocabulary, "
@@ -1550,7 +1532,9 @@ def ns_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = seq.groupBy("token").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_syms")
     )
-    tok = spark.sql(tokens_sql("spark"))
+    tok = spark.sql(
+        tokens_sql("spark"), documents=load_table(spark, sf_dir, "documents")
+    )
     capped = F.least(F.length("token"), F.lit(_BPE_MAXLEN))
     return (
         tok.join(F.broadcast(enc), "token")
@@ -1729,7 +1713,7 @@ WITH fetches AS (
         'https://docs.site%d.com/page/%d?id=%d&utm_campaign=refresh&utm_medium=rss',
         (doc_id - doc_id % 4) % 7, doc_id - doc_id % 4, doc_id - doc_id % 4)
     END AS url
-  FROM documents
+  FROM {{documents}}
 ),
 canon AS ({_canon_url_sql(dialect)})
 SELECT canon_url,
@@ -1744,7 +1728,7 @@ ORDER BY canon_url
 
 @register(
     "ns_dedup_url",
-    oracle=_dedup_url_sql("duckdb"),
+    oracle=_dedup_url_sql("duckdb").format(documents="documents"),
     doc="URL-canonicalization dedup: map-side canonicalization (lower-case "
     "host, default-port/fragment/trailing-slash removal, utm_* stripping, "
     "query-param sort, scheme normalization) over deterministically "
@@ -1756,8 +1740,8 @@ ORDER BY canon_url
     tags=("ns", "text", "dedup"),
 )
 def ns_dedup_url(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_dedup_url_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_dedup_url_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -1793,7 +1777,7 @@ def _chunk_overlap_sql(dialect: str) -> str:
     return f"""
 WITH tok AS (
   SELECT doc_id, toks, {n} AS n
-  FROM (SELECT doc_id, {toks} AS toks FROM documents) t0
+  FROM (SELECT doc_id, {toks} AS toks FROM {{documents}}) t0
 ),
 st AS (
   SELECT doc_id, toks, n, {starts} AS st FROM tok
@@ -1811,7 +1795,7 @@ ORDER BY doc_id, chunk_start
 
 @register(
     "ns_chunk_overlap",
-    oracle=_chunk_overlap_sql("duckdb"),
+    oracle=_chunk_overlap_sql("duckdb").format(documents="documents"),
     doc="Stride-overlap token chunking (CHUNK=24, STRIDE=16): every "
     "document explodes map-side into fixed-size context windows, emission "
     "stopping at the first window that reaches the document end (HF-"
@@ -1822,8 +1806,8 @@ ORDER BY doc_id, chunk_start
     tags=("ns", "text", "chunking"),
 )
 def ns_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_chunk_overlap_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_chunk_overlap_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -1847,9 +1831,11 @@ def _cached_bloom_ng(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, gram) distinct corpus 5-grams materialized once per
     (session, sf) — shared by ns_decontaminate_bloom and the pipeline's
     decontamination stage (ns_pipeline_e2e, r8)."""
-    _view(spark, sf_dir, "documents")
+    documents = load_table(spark, sf_dir, "documents")
     return checkpointed(
-        spark, "bloom_ng", lambda: spark.sql(_ngram_sql("spark")).coalesce(8), sf_dir
+        spark, "bloom_ng",
+        lambda: spark.sql(_ngram_sql("spark"), documents=documents).coalesce(8),
+        sf_dir,
     )
 
 
@@ -1915,7 +1901,7 @@ LIMIT 50
 
 @register(
     "ns_decontaminate_bloom",
-    oracle=_decon_bloom_sql("duckdb"),
+    oracle=_decon_bloom_sql("duckdb").format(documents="documents"),
     doc="Bloom-prefiltered exact decontamination: the eval 5-gram set "
     "folds into an 8 KB bitmask (1024-row bit_or aggregation, k=2 "
     "xxhash64 probes) that broadcasts at ANY eval-suite size; corpus "
@@ -1928,9 +1914,9 @@ LIMIT 50
     tags=("ns", "text", "decontamination", "sketch"),
 )
 def ns_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _cached_bloom_ng(spark, sf_dir).createOrReplaceTempView("bloom_ng")
     return spark.sql(
-        _decon_bloom_sql("spark", ng_ref="SELECT doc_id, gram FROM bloom_ng")
+        _decon_bloom_sql("spark", ng_ref="SELECT doc_id, gram FROM {ng}"),
+        ng=_cached_bloom_ng(spark, sf_dir),
     )
 
 
@@ -1981,7 +1967,7 @@ WITH feats AS (
   SELECT doc_id, source, {n} AS n_toks, {n_uniq} AS n_uniq,
     {n_stop} AS n_stop,
     CAST(length(text) - ({n} - 1) AS DOUBLE) / {n} AS mean_len
-  FROM (SELECT doc_id, source, text, {toks} AS toks FROM documents) t0
+  FROM (SELECT doc_id, source, text, {toks} AS toks FROM {{documents}}) t0
   WHERE text IS NOT NULL
 )
 SELECT doc_id, source, {z} AS z FROM feats
@@ -2005,7 +1991,7 @@ ORDER BY source
 
 @register(
     "ns_quality_classifier",
-    oracle=_quality_classifier_sql("duckdb"),
+    oracle=_quality_classifier_sql("duckdb").format(documents="documents"),
     doc="Linear quality-model INFERENCE over engineered text features "
     "(distinct-token ratio, stopword ratio, mean token length, length "
     "prior) with fixed literal weights — the fastText/DCLM-style "
@@ -2017,8 +2003,10 @@ ORDER BY source
     tags=("ns", "text", "quality"),
 )
 def ns_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_quality_classifier_sql("spark"))
+    return spark.sql(
+        _quality_classifier_sql("spark"),
+        documents=load_table(spark, sf_dir, "documents"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2048,7 +2036,7 @@ WITH keyed AS (
   SELECT doc_id, k, substring(k, 1, 2) AS blk
   FROM (SELECT doc_id,
           md5(concat('{_SHUF_SALT}', CAST(doc_id AS STRING))) AS k
-        FROM documents) t0
+        FROM {{documents}}) t0
 ),
 bc AS (SELECT blk, count(*) AS c FROM keyed GROUP BY blk),
 off AS (
@@ -2098,8 +2086,8 @@ ORDER BY pos
     tags=("ns", "scale", "ordering"),
 )
 def ns_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_global_shuffle_spark_sql())
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_global_shuffle_spark_sql(), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -2130,7 +2118,7 @@ def _mixture_epochs_sql(dialect: str) -> str:
     return f"""
 WITH tok AS (
   SELECT source, CAST(sum({ntok}) AS BIGINT) AS toks
-  FROM documents GROUP BY source
+  FROM {{documents}} GROUP BY source
 ),
 w AS (
   SELECT source, toks,
@@ -2149,7 +2137,7 @@ ORDER BY source
 
 @register(
     "ns_mixture_epochs",
-    oracle=_mixture_epochs_sql("duckdb"),
+    oracle=_mixture_epochs_sql("duckdb").format(documents="documents"),
     doc="Token-budget epoch allocation per domain: BIGINT token "
     "inventories per source, integer mixture weights, epoch count = "
     "budget share / inventory as ONE IEEE division of exact integers "
@@ -2164,18 +2152,17 @@ def ns_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projection; under Spark CTE inlining that re-runs the corpus token
     # aggregation twice. Materialize the bounded (one row per source)
     # relation once — corpus scanned exactly once.
-    _view(spark, sf_dir, "documents")
     full = _mixture_epochs_sql("spark")
     w_sql = full.split("tot AS", 1)[0].rstrip().rstrip(",") + (
         "\nSELECT * FROM w"
     )
-    spark.sql(w_sql).localCheckpoint(eager=True).createOrReplaceTempView(
-        "w32bd_mix_w"
+    w = spark.sql(
+        w_sql, documents=load_table(spark, sf_dir, "documents")
+    ).localCheckpoint(
+        eager=True
     )
     tail = full.split("\ntot AS", 1)[1]
-    return spark.sql(
-        "WITH w AS (SELECT * FROM w32bd_mix_w),\ntot AS" + tail
-    )
+    return spark.sql("WITH w AS (SELECT * FROM {w}),\ntot AS" + tail, w=w)
 
 
 # ---------------------------------------------------------------------------
@@ -2281,7 +2268,7 @@ clab{k + 1} AS (
         )
     return f"""
 WITH s0 AS (
-  SELECT doc_id, source, text FROM documents WHERE doc_id % {_EVAL_MOD} <> 0
+  SELECT doc_id, source, text FROM {{documents}} WHERE doc_id % {_EVAL_MOD} <> 0
 ),
 fetches AS (SELECT doc_id, {_pipe_url_case(dialect)} AS url FROM s0),
 canon AS ({_canon_url_sql(dialect)}),
@@ -2419,7 +2406,7 @@ def _pipe_final_sql(dialect: str, flags_ref: str, doc2_ref: str) -> str:
     """The one lazy funnel/pack/shuffle/mixture statement — a WITH-chain
     CONTINUATION (no leading WITH) so the oracle can prepend its
     materialized stage CTEs and Spark can run it directly over the
-    checkpointed stage views."""
+    checkpointed stages bound into it."""
     p = _PIPE_P
     shard = f"CAST(floor(doc_id / {synth.flit(_PIPE_SHARD)}) AS BIGINT)"
     if dialect == "spark":
@@ -2546,7 +2533,7 @@ def _pipeline_v2_oracle_sql() -> str:
 
 @register(
     "ns_pipeline_e2e",
-    oracle=_pipeline_v2_oracle_sql(),
+    oracle=_pipeline_v2_oracle_sql().format(documents="documents"),
     doc="The FULL composed corpus-refresh pipeline (rebuilt r8): eval "
     "holdout → URL-canonicalization dedup → exact+MinHash cluster dedup → "
     "linear quality-model filter → perplexity tercile (blocked ntile, no "
@@ -2563,50 +2550,50 @@ def _pipeline_v2_oracle_sql() -> str:
     tags=("ns", "text", "bench", "pipeline"),
 )
 def ns_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .text import _cached_minhash_pairs, cached_rep_map_ref
+    from .text import REP_REF, _cached_minhash_pairs, cached_rep_map
 
-    _view(spark, sf_dir, "documents")
-    rep_ref = cached_rep_map_ref(spark, sf_dir)
-    _cached_minhash_pairs(spark, sf_dir).createOrReplaceTempView(
-        "minhash_pairs"
-    )
-    checkpointed(
+    documents = load_table(spark, sf_dir, "documents")
+    flags = checkpointed(
         spark, "pipe_flags",
         lambda: spark.sql(
             _pipe_flags_sql(
-                "spark", rep_ref=rep_ref,
-                pairs_ref="SELECT ai, bi FROM minhash_pairs",
-            )
+                "spark", rep_ref=REP_REF, pairs_ref="SELECT ai, bi FROM {pairs}"
+            ),
+            documents=documents,
+            rep=cached_rep_map(spark, sf_dir),
+            pairs=_cached_minhash_pairs(spark, sf_dir),
         ).coalesce(8),
         sf_dir,
-    ).createOrReplaceTempView("pipe_flags")
-    _cached_ppl_doc(spark, sf_dir).createOrReplaceTempView("ppl_doc")
-    checkpointed(
+    )
+    s4 = checkpointed(
         spark, "pipe_s4",
         lambda: spark.sql(
             _pipe_s4_sql(
-                "spark", "SELECT * FROM pipe_flags",
-                pdoc_ref="SELECT doc_id, n_tokens, nll FROM ppl_doc",
-            )
+                "spark", "SELECT * FROM {flags}",
+                pdoc_ref="SELECT doc_id, n_tokens, nll FROM {pdoc}",
+            ),
+            flags=flags,
+            pdoc=_cached_ppl_doc(spark, sf_dir),
         ).coalesce(8),
         sf_dir,
-    ).createOrReplaceTempView("pipe_s4")
-    _cached_bloom_ng(spark, sf_dir).createOrReplaceTempView("bloom_ng")
-    checkpointed(
+    )
+    doc2 = checkpointed(
         spark, "pipe_doc2",
         lambda: spark.sql(
             _pipe_doc2_sql(
-                "spark", "SELECT * FROM pipe_s4",
-                ng_ref="SELECT doc_id, gram FROM bloom_ng",
-            )
+                "spark", "SELECT * FROM {s4}",
+                ng_ref="SELECT doc_id, gram FROM {ng}",
+            ),
+            s4=s4,
+            ng=_cached_bloom_ng(spark, sf_dir),
         ).coalesce(8),
         sf_dir,
-    ).createOrReplaceTempView("pipe_doc2")
+    )
     return spark.sql(
         "WITH "
-        + _pipe_final_sql(
-            "spark", "SELECT * FROM pipe_flags", "SELECT * FROM pipe_doc2"
-        )
+        + _pipe_final_sql("spark", "SELECT * FROM {flags}", "SELECT * FROM {doc2}"),
+        flags=flags,
+        doc2=doc2,
     )
 
 
@@ -2680,7 +2667,7 @@ ORDER BY pos
 
 @register(
     "ns_curriculum_order",
-    oracle=_curriculum_sql("duckdb"),
+    oracle=_curriculum_sql("duckdb").format(documents="documents"),
     doc="Deterministic curriculum training order: corpus ranked best-first "
     "by the shared quality-model score (bit-identical IEEE parse tree, "
     "safe to sort by), position + contiguous shard assignment via the "
@@ -2695,16 +2682,16 @@ def ns_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The scored-and-bucketed relation feeds both the bucket summary and
     # the rank join; CTE inlining would re-run the map-side scoring pass
     # per reference (r8 plan audit: 2 documents scans) — materialize once.
-    _view(spark, sf_dir, "documents")
-    checkpointed(
+    pb = checkpointed(
         spark, "curr_pb",
         lambda: spark.sql(
             "SELECT doc_id, z, CAST(floor(z * 16e0) AS BIGINT) AS pb FROM ("
             + _qc_scored_sql("spark")
-            + ") qs0"
+            + ") qs0",
+            documents=load_table(spark, sf_dir, "documents"),
         ).coalesce(8),
         sf_dir,
-    ).createOrReplaceTempView("curr_pb")
+    )
     return spark.sql(
-        _curriculum_sql("spark", pb_ref="SELECT doc_id, z, pb FROM curr_pb")
+        _curriculum_sql("spark", pb_ref="SELECT doc_id, z, pb FROM {pb}"), pb=pb
     )

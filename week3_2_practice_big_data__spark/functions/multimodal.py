@@ -545,30 +545,28 @@ def phash_pipeline(spark: SparkSession, posters: DataFrame) -> DataFrame:
     hashed = rep_posters.select("blob_id", "png").mapInPandas(
         phash, "blob_id int, phash bigint"
     ).localCheckpoint(eager=True)
-    hashed.createOrReplaceTempView("mm_phash")
-    g.createOrReplaceTempView("mm_phash_g")
     return spark.sql(f"""
 WITH rep_pairs AS (
   SELECT a.blob_id AS ba, b.blob_id AS bb,
     bit_count(a.phash ^ b.phash) AS hamming
-  FROM mm_phash a JOIN mm_phash b ON a.blob_id < b.blob_id
+  FROM {{hashed}} a JOIN {{hashed}} b ON a.blob_id < b.blob_id
   WHERE bit_count(a.phash ^ b.phash) <= {_PHASH_HAMMING}
 ),
 expanded AS (
   SELECT least(ga.blob_id, gb.blob_id) AS ba,
     greatest(ga.blob_id, gb.blob_id) AS bb, rp.hamming
   FROM rep_pairs rp
-  JOIN mm_phash_g ga ON ga.rep = rp.ba
-  JOIN mm_phash_g gb ON gb.rep = rp.bb
+  JOIN {{g}} ga ON ga.rep = rp.ba
+  JOIN {{g}} gb ON gb.rep = rp.bb
   UNION ALL
   SELECT a.blob_id AS ba, b.blob_id AS bb, CAST(0 AS BIGINT) AS hamming
-  FROM mm_phash_g a JOIN mm_phash_g b
+  FROM {{g}} a JOIN {{g}} b
     ON a.rep = b.rep AND a.blob_id < b.blob_id
 )
 SELECT CAST(ba AS INT) AS ba, CAST(bb AS INT) AS bb, hamming
 FROM expanded
 ORDER BY hamming, ba, bb
-""")
+""", hashed=hashed, g=g)
 
 
 @register(

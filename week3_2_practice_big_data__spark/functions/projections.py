@@ -342,7 +342,7 @@ SELECT o_orderkey,
   month(o_orderdate) AS mo,
   CAST(datediff(o_orderdate, DATE '1995-01-01') AS BIGINT) AS day_offset,
   date_format(date_trunc('MONTH', o_orderdate), 'yyyy-MM-dd') AS month_start
-FROM orders ORDER BY o_orderkey
+FROM {orders} ORDER BY o_orderkey
 """
     return """
 SELECT o_orderkey,
@@ -362,8 +362,7 @@ FROM orders ORDER BY o_orderkey
     tags=("function",),
 )
 def fn_datetime_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_dt_sql("spark"))
+    return spark.sql(_dt_sql("spark"), orders=load_table(spark, sf_dir, "orders"))
 
 
 # ---------------------------------------------------------------------------
@@ -375,7 +374,7 @@ def _json_sql(dialect: str) -> str:
     if dialect == "spark":
         return """
 SELECT event_id, CAST(get_json_object(props, '$.k') AS BIGINT) AS k
-FROM events ORDER BY event_id
+FROM {events} ORDER BY event_id
 """
     return """
 SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
@@ -391,8 +390,7 @@ FROM events ORDER BY event_id
     tags=("function", "ns"),
 )
 def fn_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_json_sql("spark"))
+    return spark.sql(_json_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -422,8 +420,8 @@ SELECT event_id,
   variant_get(parse_json(props), '$.missing', 'bigint') AS k_missing,
   schema_of_variant(parse_json(props)) AS vschema,
   to_json(parse_json(props)) AS roundtrip,
-  CAST(try_parse_json(repeat('{', 1)) IS NULL AS BOOLEAN) AS malformed_is_null
-FROM events ORDER BY event_id
+  CAST(try_parse_json(repeat('{{', 1)) IS NULL AS BOOLEAN) AS malformed_is_null
+FROM {events} ORDER BY event_id
 """
     # NULL- and empty-object-safe (calibrated live: parse_json(NULL) →
     # NULL variant; '{}' → schema 'OBJECT<>', round-trip '{}')
@@ -456,5 +454,4 @@ FROM events ORDER BY event_id
     tags=("function", "ns"),
 )
 def fn_variant_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_variant_sql("spark"))
+    return spark.sql(_variant_sql("spark"), events=load_table(spark, sf_dir, "events"))

@@ -47,22 +47,22 @@ SELECT vec_id,
   {synth.q6(f"CAST({e(0)} AS DOUBLE)")} AS e0,
   {synth.q6(first4)} AS sum_first4,
   {synth.q6(f"sqrt({sumsq})")} AS l2_norm
-FROM embeddings
+FROM {{embeddings}}
 ORDER BY vec_id
 """
 
 
 @register(
     "fn_array_ops",
-    oracle=_array_ops_sql("duckdb"),
+    oracle=_array_ops_sql("duckdb").format(embeddings="embeddings"),
     doc="Array element access, width, fixed-order fold and L2 norm over "
     "embeddings — codegen-only, no UDF (REF-ANALOG of the per-blob arrays "
     "at app.py:19,141-144).",
     tags=("function", "array"),
 )
 def fn_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    return spark.sql(_array_ops_sql("spark"))
+    embeddings = load_table(spark, sf_dir, "embeddings")
+    return spark.sql(_array_ops_sql("spark"), embeddings=embeddings)
 
 
 def _regex_sql(dialect: str) -> str:
@@ -80,22 +80,22 @@ SELECT doc_id,
   CAST({has_spark} AS BOOLEAN) AS has_spark,
   {n_table} AS n_table,
   upper(substr(text, 1, 10)) AS head10
-FROM documents
+FROM {{documents}}
 ORDER BY doc_id
 """
 
 
 @register(
     "fn_regex_extract",
-    oracle=_regex_sql("duckdb"),
+    oracle=_regex_sql("duckdb").format(documents="documents"),
     doc="Regex extract/match + string-function occurrence count over "
     "documents.text (REF-ANALOG of the string formatting at "
     "app.py:152,158).",
     tags=("function", "text"),
 )
 def fn_regex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_regex_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_regex_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -123,22 +123,21 @@ SELECT o_orderkey,
   {shl} AS cust_shl3,
   {shr} AS key_shr4,
   CAST(bit_count(o_orderkey) AS BIGINT) AS popcount
-FROM orders WHERE o_orderkey < 2000
+FROM {{orders}} WHERE o_orderkey < 2000
 ORDER BY o_orderkey
 """
 
 
 @register(
     "fn_bitwise_ops",
-    oracle=_bitwise_sql("duckdb"),
+    oracle=_bitwise_sql("duckdb").format(orders="orders"),
     doc="Bitwise scalar surface (&, |, xor, shifts, popcount) over BIGINT "
     "keys — codegen-only expressions; xor/shift names are the only dialect "
     "seam (REF-ANALOG).",
     tags=("function",),
 )
 def fn_bitwise_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_bitwise_sql("spark"))
+    return spark.sql(_bitwise_sql("spark"), orders=load_table(spark, sf_dir, "orders"))
 
 
 # ---------------------------------------------------------------------------
@@ -256,7 +255,7 @@ def _sql_udf_query(dialect: str) -> str:
     return f"""
 SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
   CAST(CAST(sum({qu}) AS BIGINT) AS DOUBLE) / 1000000e0 AS revenue
-FROM lineitem
+FROM {{lineitem}}
 GROUP BY l_returnflag
 ORDER BY l_returnflag
 """
@@ -264,7 +263,7 @@ ORDER BY l_returnflag
 
 @register(
     "fn_sql_udf",
-    oracle=_sql_udf_query("duckdb"),
+    oracle=_sql_udf_query("duckdb").format(lineitem="lineitem"),
     doc="Spark 4 SQL-language UDFs (CREATE TEMPORARY FUNCTION ... RETURN "
     "expr): a discounted-revenue scalar and the micro-unit quantizer "
     "declared as catalog SQL functions, driven through a lineitem "
@@ -275,7 +274,6 @@ ORDER BY l_returnflag
     tags=("function", "udf"),
 )
 def fn_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION w32bd_disc_rev(p DOUBLE, d DOUBLE) "
         "RETURNS DOUBLE RETURN p * (1e0 - d)"
@@ -286,7 +284,8 @@ def fn_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         + synth.sat("x", 1e9)
         + " * 1000000e0 + 0.5e0) AS BIGINT)"
     )
-    return spark.sql(_sql_udf_query("spark"))
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    return spark.sql(_sql_udf_query("spark"), lineitem=lineitem)
 
 
 # ---------------------------------------------------------------------------
@@ -442,7 +441,6 @@ def fn_udf_sql_register(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_package_on_workers(spark)
     spark.udf.register("w32bd_pumicro", w32bd_pumicro)
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
     # Pre-sorted subquery (r13): a top-level ORDER BY above the
     # ArrowEvalPython node makes the range sampling re-execute the UDF —
     # sorting the 2-column input below it keeps one UDF pass (the pandas
@@ -450,7 +448,8 @@ def fn_udf_sql_register(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical; Catalyst keeps the subquery sort below the Python node).
     return spark.sql(
         "SELECT event_id, w32bd_pumicro(value) AS value_u "
-        "FROM (SELECT event_id, value FROM events ORDER BY event_id)"
+        "FROM (SELECT event_id, value FROM {events} ORDER BY event_id)",
+        events=load_table(spark, sf_dir, "events"),
     )
 
 

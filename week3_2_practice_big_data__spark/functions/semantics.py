@@ -27,10 +27,6 @@ from ..io import load_table
 from ..registry import register
 
 
-def _view(spark: SparkSession, sf_dir: str, name: str) -> None:
-    load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 # ---------------------------------------------------------------------------
 # fn_null_semantics — coalesce / nullif / plain vs null-safe equality.
 # Dialect seam: Spark spells null-safe equality `<=>`, DuckDB
@@ -58,14 +54,14 @@ FROM (
   SELECT c_custkey,
     nullif(c_nationkey % 5, 0) AS a,
     nullif(CAST(c_custkey % 5 AS INT), 0) AS b
-  FROM customer) t
+  FROM {{customer}}) t
 ORDER BY c_custkey
 """
 
 
 @register(
     "fn_null_semantics",
-    oracle=_null_semantics_sql("duckdb"),
+    oracle=_null_semantics_sql("duckdb").format(customer="customer"),
     doc="ANSI null semantics in one projection: nullif-injected NULLs, "
     "coalesce, three-valued plain equality (NULL result rows) vs null-safe "
     "equality (`<=>` / IS NOT DISTINCT FROM), and IS NULL dispatch "
@@ -73,8 +69,8 @@ ORDER BY c_custkey
     tags=("scalar", "semantics"),
 )
 def fn_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "customer")
-    return spark.sql(_null_semantics_sql("spark"))
+    customer = load_table(spark, sf_dir, "customer")
+    return spark.sql(_null_semantics_sql("spark"), customer=customer)
 
 
 # ---------------------------------------------------------------------------
@@ -91,7 +87,7 @@ SELECT n_nationkey, k, v FROM (
   SELECT n_nationkey,
     explode(map_from_arrays(array('name', 'region'),
                             array(n_name, CAST(n_regionkey AS STRING)))) AS (k, v)
-  FROM nation) t
+  FROM {nation}) t
 ORDER BY n_nationkey, k
 """
     return """
@@ -114,8 +110,7 @@ ORDER BY n_nationkey, k
     tags=("scalar", "semantics"),
 )
 def fn_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "nation")
-    return spark.sql(_map_ops_sql("spark"))
+    return spark.sql(_map_ops_sql("spark"), nation=load_table(spark, sf_dir, "nation"))
 
 
 # ---------------------------------------------------------------------------
@@ -133,7 +128,7 @@ def _string_similarity_sql(dialect: str) -> str:
         else "string_split(p_name, ' ')[2]"
     )
     return f"""
-WITH names AS (SELECT DISTINCT p_name, {noun} AS noun FROM part)
+WITH names AS (SELECT DISTINCT p_name, {noun} AS noun FROM {{part}})
 SELECT a.p_name AS name_a, b.p_name AS name_b,
   levenshtein(a.p_name, b.p_name) AS dist
 FROM names a
@@ -145,15 +140,15 @@ ORDER BY dist, name_a, name_b
 
 @register(
     "fn_string_similarity",
-    oracle=_string_similarity_sql("duckdb"),
+    oracle=_string_similarity_sql("duckdb").format(part="part"),
     doc="Levenshtein fuzzy matching of part names, blocked on the shared "
     "noun token over the DISTINCT name vocabulary — edit distance runs on "
     "vocab-sized blocks, never all row pairs (REF-ANALOG).",
     tags=("scalar", "semantics", "dedup"),
 )
 def fn_string_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "part")
-    return spark.sql(_string_similarity_sql("spark"))
+    part = load_table(spark, sf_dir, "part")
+    return spark.sql(_string_similarity_sql("spark"), part=part)
 
 
 # ---------------------------------------------------------------------------
@@ -172,7 +167,7 @@ def _variant_json_sql(dialect: str) -> str:
     return f"""
 SELECT event_type, count(*) AS n_events,
   min(k) AS min_k, max(k) AS max_k, CAST(sum(k) AS BIGINT) AS sum_k
-FROM (SELECT event_type, {k} AS k FROM events) t
+FROM (SELECT event_type, {k} AS k FROM {{events}}) t
 GROUP BY event_type
 ORDER BY event_type
 """
@@ -180,7 +175,7 @@ ORDER BY event_type
 
 @register(
     "fn_variant_json",
-    oracle=_variant_json_sql("duckdb"),
+    oracle=_variant_json_sql("duckdb").format(events="events"),
     doc="Semi-structured access via Spark 4 VARIANT: parse_json(props) + "
     "typed variant_get on the JSON path, aggregated per event type "
     "(oracle: DuckDB json_extract). Parse happens once in the projection, "
@@ -188,8 +183,8 @@ ORDER BY event_type
     tags=("scalar", "semantics", "json"),
 )
 def fn_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
-    return spark.sql(_variant_json_sql("spark"))
+    events = load_table(spark, sf_dir, "events")
+    return spark.sql(_variant_json_sql("spark"), events=events)
 
 
 # ---------------------------------------------------------------------------
@@ -227,22 +222,22 @@ def _url_parse_sql(dialect: str) -> str:
         lang = "regexp_extract(url, 'lang=(.*)$', 1)"
     return f"""
 SELECT doc_id, {host} AS host, {path} AS path, {lang} AS lang_param
-FROM (SELECT doc_id, {fmt} AS url, lang FROM documents) u
+FROM (SELECT doc_id, {fmt} AS url, lang FROM {{documents}}) u
 ORDER BY doc_id
 """
 
 
 @register(
     "fn_url_parse",
-    oracle=_url_parse_sql("duckdb"),
+    oracle=_url_parse_sql("duckdb").format(documents="documents"),
     doc="URL decomposition (host / path / query parameter) via parse_url "
     "over deterministically synthesized document URLs; pure map-side "
     "projection (REF-ANALOG; the oracle recomputes with regexes).",
     tags=("scalar", "semantics"),
 )
 def fn_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_url_parse_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_url_parse_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -257,7 +252,7 @@ def _listagg_sql(dialect: str) -> str:
     agg = ordered_string_agg(dialect, "n_name", "','", "n_name")
     return f"""
 SELECT r_name, count(*) AS n_nations, {agg} AS nation_list
-FROM nation JOIN region ON n_regionkey = r_regionkey
+FROM {{nation}} JOIN {{region}} ON n_regionkey = r_regionkey
 GROUP BY r_name
 ORDER BY r_name
 """
@@ -265,7 +260,7 @@ ORDER BY r_name
 
 @register(
     "agg_string_listagg",
-    oracle=_listagg_sql("duckdb"),
+    oracle=_listagg_sql("duckdb").format(nation="nation", region="region"),
     doc="Ordered string aggregation (Spark 4 listagg WITHIN GROUP / DuckDB "
     "string_agg ORDER BY) of nation names per region — explicit intra-"
     "group order makes the concatenation deterministic; offered only for "
@@ -273,9 +268,11 @@ ORDER BY r_name
     tags=("agg", "semantics"),
 )
 def agg_string_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "nation")
-    _view(spark, sf_dir, "region")
-    return spark.sql(_listagg_sql("spark"))
+    return spark.sql(
+        _listagg_sql("spark"),
+        nation=load_table(spark, sf_dir, "nation"),
+        region=load_table(spark, sf_dir, "region"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -308,13 +305,13 @@ SELECT
   CAST(sum(CASE WHEN {add} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_add_overflow,
   CAST(sum(CASE WHEN {cast} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_cast_fail,
   {synth.q6(f"sum(coalesce(floor({div}), 0e0))")} AS sum_safe_div
-FROM orders
+FROM {{orders}}
 """
 
 
 @register(
     "fn_try_arith",
-    oracle=_try_arith_sql("duckdb"),
+    oracle=_try_arith_sql("duckdb").format(orders="orders"),
     doc="ANSI-mode error-safe arithmetic: try_divide / try_add overflow / "
     "try_cast return NULL where ANSI would throw — per-outcome null "
     "counts plus a floor-quantized safe-division sum (oracle rebuilds the "
@@ -323,8 +320,8 @@ FROM orders
     tags=("scalar", "semantics", "ansi"),
 )
 def fn_try_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "orders")
-    return spark.sql(_try_arith_sql("spark"))
+    orders = load_table(spark, sf_dir, "orders")
+    return spark.sql(_try_arith_sql("spark"), orders=orders)
 
 
 # ---------------------------------------------------------------------------
@@ -353,7 +350,7 @@ WITH x AS (
     to_xml(named_struct(
       'ck', c_custkey, 'nm', c_name, 'seg', c_mktsegment,
       'esc', concat(c_name, '<&>'))) AS xml
-  FROM customer WHERE c_custkey % 10 = 0
+  FROM {customer} WHERE c_custkey % 10 = 0
 ),
 p AS (
   SELECT c_custkey, xml,
@@ -394,8 +391,8 @@ ORDER BY c_custkey
     tags=("scalar", "semantics", "xml"),
 )
 def fn_xml_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "customer")
-    return spark.sql(_xml_funcs_sql("spark"))
+    customer = load_table(spark, sf_dir, "customer")
+    return spark.sql(_xml_funcs_sql("spark"), customer=customer)
 
 
 # ---------------------------------------------------------------------------
@@ -430,7 +427,7 @@ FROM (
   SELECT {_COLLATE_VARIANT} AS seg_raw,
     collate({_COLLATE_VARIANT}, 'UTF8_LCASE') AS seg_c,
     c_acctbal
-  FROM customer
+  FROM {{customer}}
 ) v
 GROUP BY seg_c
 ORDER BY segment
@@ -465,8 +462,8 @@ ORDER BY segment
     tags=("scalar", "semantics", "collation"),
 )
 def fn_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "customer")
-    return spark.sql(_collation_sql("spark"))
+    customer = load_table(spark, sf_dir, "customer")
+    return spark.sql(_collation_sql("spark"), customer=customer)
 
 
 # ---------------------------------------------------------------------------
@@ -490,7 +487,7 @@ SELECT hour(t) AS hr,
   CAST(max(t) AS STRING) AS max_t,
   CAST(sum(CASE WHEN t >= TIME'12:00:00' THEN 1 ELSE 0 END) AS BIGINT)
     AS n_pm
-FROM (SELECT to_time(date_format(ts, 'HH:mm:ss')) AS t FROM events) v
+FROM (SELECT to_time(date_format(ts, 'HH:mm:ss')) AS t FROM {events}) v
 GROUP BY hour(t)
 ORDER BY hr
 """
@@ -526,9 +523,9 @@ def fn_time_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shared session never see the preview flag (ADVICE r10).
     from ..streaming.streams import _scoped_conf
 
-    _view(spark, sf_dir, "events")
     with _scoped_conf(spark, {"spark.sql.timeType.enabled": "true"}):
-        return spark.sql(_time_type_sql("spark"))
+        events = load_table(spark, sf_dir, "events")
+        return spark.sql(_time_type_sql("spark"), events=events)
 
 
 # ---------------------------------------------------------------------------
@@ -554,7 +551,7 @@ WITH gaps AS (
       (unix_micros(ts) - lag(unix_micros(ts)) OVER (
         PARTITION BY user_id ORDER BY ts, event_id
       )) DIV 1000000 AS DOUBLE)) AS gap
-  FROM events WHERE ts IS NOT NULL
+  FROM {events} WHERE ts IS NOT NULL
 )
 SELECT user_id,
   CAST(count(gap) AS BIGINT) AS n_gaps,
@@ -595,8 +592,8 @@ FROM gaps GROUP BY user_id ORDER BY user_id
     tags=("scalar", "semantics", "datetime"),
 )
 def fn_interval_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
-    return spark.sql(_interval_agg_sql("spark"))
+    events = load_table(spark, sf_dir, "events")
+    return spark.sql(_interval_agg_sql("spark"), events=events)
 
 
 # ---------------------------------------------------------------------------
@@ -617,7 +614,7 @@ SELECT c_custkey,
   mask(c_name) AS masked_default,
   mask(c_name, 'U', 'l', '#', '*') AS masked_custom,
   mask(c_name, 'A', 'a', '0') AS masked_digits
-FROM customer ORDER BY c_custkey
+FROM {customer} ORDER BY c_custkey
 """
     return """
 SELECT c_custkey,
@@ -645,8 +642,7 @@ FROM customer ORDER BY c_custkey
     tags=("scalar", "semantics"),
 )
 def fn_mask_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "customer")
-    return spark.sql(_mask_sql("spark"))
+    return spark.sql(_mask_sql("spark"), customer=load_table(spark, sf_dir, "customer"))
 
 
 # ---------------------------------------------------------------------------
@@ -671,7 +667,7 @@ SELECT c_custkey,
   CAST(length(aes_encrypt(c_name, '{_AES_KEY}', 'ECB')) AS BIGINT)
     AS ct_len,
   sha2(c_name, 256) AS name_sha
-FROM customer ORDER BY c_custkey
+FROM {{customer}} ORDER BY c_custkey
 """
     return """
 SELECT c_custkey,
@@ -694,5 +690,5 @@ FROM customer ORDER BY c_custkey
     tags=("scalar", "semantics"),
 )
 def fn_crypto_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "customer")
-    return spark.sql(_crypto_sql("spark"))
+    customer = load_table(spark, sf_dir, "customer")
+    return spark.sql(_crypto_sql("spark"), customer=customer)

@@ -29,20 +29,16 @@ from .. import synth
 _DIM = 64
 
 
-def _view(spark: SparkSession, sf_dir: str) -> None:
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-
-
 def _long_sql(dialect: str) -> str:
     """(vec_id, dim, val DOUBLE) long format — explode-dialect seam."""
     if dialect == "spark":
         return """
 SELECT vec_id, posexplode(embedding) AS (dim, fval)
-FROM embeddings
+FROM {embeddings}
 """
     return f"""
 SELECT vec_id, d - 1 AS dim, embedding[d] AS fval
-FROM embeddings, (SELECT CAST(range AS INT) + 1 AS d FROM range({_DIM})) ds
+FROM {{embeddings}}, (SELECT CAST(range AS INT) + 1 AS d FROM range({_DIM})) ds
 """
 
 
@@ -80,8 +76,8 @@ def _topk_sql(dialect: str) -> str:
     return f"""
 SELECT c.vec_id, c.label,
   {synth.q6(f"{dot} / nullif(sqrt({na}) * sqrt({nb}), 0e0)")} AS cosine
-FROM embeddings c
-CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = {_QUERY_ID}) q
+FROM {{embeddings}} c
+CROSS JOIN (SELECT embedding FROM {{embeddings}} WHERE vec_id = {_QUERY_ID}) q
 WHERE c.vec_id != {_QUERY_ID}
 ORDER BY cosine DESC, c.vec_id
 LIMIT {_TOPK}
@@ -90,14 +86,14 @@ LIMIT {_TOPK}
 
 @register(
     "ns_sim_topk",
-    oracle=_topk_sql("duckdb"),
+    oracle=_topk_sql("duckdb").format(embeddings="embeddings"),
     doc="Brute-force cosine top-k against a query embedding; fixed-order "
     "array fold for bit-identical scores (NS).",
     tags=("ns", "similarity", "bench"),
 )
 def ns_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_topk_sql("spark"))
+    embeddings = load_table(spark, sf_dir, "embeddings")
+    return spark.sql(_topk_sql("spark"), embeddings=embeddings)
 
 
 # ---------------------------------------------------------------------------
@@ -124,7 +120,7 @@ _MAX_BITS = 16
 _MAX_PLANES = _BANDS * _MAX_BITS  # 64 hyperplanes emitted; first 4·b used
 
 
-def _bits_sql(rel: str = "embeddings") -> str:
+def _bits_sql(rel: str = "{embeddings}") -> str:
     """Scalar (b INT): band width ⌈log₂(n)⌉ clamped to [8, 16] — shared
     text, so both engines derive the identical gate from the corpus size.
     log2 is exact in both libms at powers of two, so the ceil boundary
@@ -171,7 +167,7 @@ def _plane_values(dialect: str) -> str:
     return f"(SELECT * FROM (VALUES {vals}) AS p(plane, comps))"
 
 
-def _band_sig_sql(dialect: str, rel: str = "embeddings") -> str:
+def _band_sig_sql(dialect: str, rel: str = "{embeddings}") -> str:
     """(vec_id, band, sig) — banded LSH signature per vector of `rel`.
 
     Projections are FIXED-ORDER array folds per (vector, plane): the same
@@ -216,21 +212,24 @@ def _cached_band_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlines CTEs, so the naive form re-runs the 32-plane projection per
     reference — the checkpoint makes each reference a materialized scan."""
     def build():
-        _view(spark, sf_dir)
-        return spark.sql(_band_sig_sql("spark")).coalesce(4)
+        return spark.sql(
+            _band_sig_sql("spark"), embeddings=load_table(spark, sf_dir, "embeddings")
+        ).coalesce(4)
 
     return checkpointed(spark, "band_sig", build, sf_dir)
 
 
 def _band_sig_ref(dialect: str) -> str:
-    """Binding for the band_sig CTE: cached temp view on Spark, inline SQL
-    (self-materialized) on DuckDB."""
+    """Binding for the band_sig CTE: the cached relation bound as
+    `band_sig=` on Spark, inline SQL (self-materialized) on DuckDB."""
     if dialect == "spark":
-        return "SELECT vec_id, band, sig FROM embeddings_band_sig"
+        return "SELECT vec_id, band, sig FROM {band_sig}"
     return _band_sig_sql("duckdb")
 
 
-def _emb_norm_sql(dialect: str, rel: str = "embeddings", label: bool = True) -> str:
+def _emb_norm_sql(
+    dialect: str, rel: str = "{embeddings}", label: bool = True
+) -> str:
     """(vec_id[, label], embedding, nrm) — vectors with their norm computed
     ONCE: sqrt of the fixed-order self-fold. The pair rerank then does one
     dot fold per pair instead of three (dot + two norms) — same doubles,
@@ -242,15 +241,16 @@ def _emb_norm_sql(dialect: str, rel: str = "embeddings", label: bool = True) -> 
 
 def _cached_emb_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
-        _view(spark, sf_dir)
-        return spark.sql(_emb_norm_sql("spark")).coalesce(4)
+        return spark.sql(
+            _emb_norm_sql("spark"), embeddings=load_table(spark, sf_dir, "embeddings")
+        ).coalesce(4)
 
     return checkpointed(spark, "emb_norm", build, sf_dir)
 
 
 def _emb_norm_ref(dialect: str) -> str:
     if dialect == "spark":
-        return "SELECT vec_id, label, embedding, nrm FROM embeddings_norm"
+        return "SELECT vec_id, label, embedding, nrm FROM {emb_norm}"
     return _emb_norm_sql("duckdb")
 
 
@@ -283,14 +283,17 @@ def _rep_sql(dialect: str) -> str:
     embedding. GROUP BY on the array is exact float equality in both
     engines."""
     del dialect
-    return "SELECT min(vec_id) AS vec_id, embedding FROM embeddings GROUP BY embedding"
+    return (
+        "SELECT min(vec_id) AS vec_id, embedding FROM {embeddings} "
+        "GROUP BY embedding"
+    )
 
 
 def _gm_sql(dialect: str, rep_ref: str) -> str:
     """(vec_id, gid) — member vector → its representative."""
     del dialect
     return (
-        f"SELECT e.vec_id, r.vec_id AS gid FROM embeddings e "
+        f"SELECT e.vec_id, r.vec_id AS gid FROM {{embeddings}} e "
         f"JOIN ({rep_ref}) r ON e.embedding = r.embedding"
     )
 
@@ -352,41 +355,42 @@ def _embed_pairs_oracle() -> str:
     )
 
 
-def _rep_views(spark: SparkSession, sf_dir: str) -> None:
+def _rep_rels(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Materialize the representative relations once per (session, sf):
     reps, rep band signatures, rep norms, and the member→rep map — every
     one is consumed at least twice by the pair plan."""
-    def reps():
-        _view(spark, sf_dir)
-        return spark.sql(_rep_sql("spark")).coalesce(4)
-
-    checkpointed(spark, "embeddings_reps", reps, sf_dir).createOrReplaceTempView(
-        "embeddings_reps"
+    embeddings = load_table(spark, sf_dir, "embeddings")
+    reps = checkpointed(
+        spark, "embeddings_reps",
+        lambda: spark.sql(_rep_sql("spark"), embeddings=embeddings).coalesce(4),
+        sf_dir,
     )
 
     def sig():
-        return spark.sql(_band_sig_sql("spark", rel="embeddings_reps")).coalesce(4)
+        return spark.sql(_band_sig_sql("spark", rel="{reps}"), reps=reps).coalesce(4)
 
     def norm():
         return spark.sql(
-            _emb_norm_sql("spark", rel="embeddings_reps", label=False)
+            _emb_norm_sql("spark", rel="{reps}", label=False), reps=reps
         ).coalesce(4)
 
     def gm():
-        _view(spark, sf_dir)
         return spark.sql(
-            _gm_sql("spark", "SELECT vec_id, embedding FROM embeddings_reps")
+            _gm_sql("spark", "SELECT vec_id, embedding FROM {reps}"),
+            embeddings=embeddings, reps=reps,
         ).coalesce(4)
 
-    for name, build in (
-        ("reps_band_sig", sig), ("reps_norm", norm), ("embeddings_gm", gm)
-    ):
-        checkpointed(spark, name, build, sf_dir).createOrReplaceTempView(name)
+    return {
+        name: checkpointed(spark, name, build, sf_dir)
+        for name, build in (
+            ("reps_band_sig", sig), ("reps_norm", norm), ("embeddings_gm", gm)
+        )
+    }
 
 
 @register(
     "ns_dedup_embed_cosine",
-    oracle=_embed_pairs_oracle(),
+    oracle=_embed_pairs_oracle().format(embeddings="embeddings"),
     doc="Embedding-cosine near-dup pairs (τ=0.4): exact-duplicate collapse "
     "(GROUP BY embedding → representative) FIRST, then the banded-LSH "
     "candidate gate with scale-derived band width (b=⌈log₂ n_reps⌉) and "
@@ -398,14 +402,14 @@ def _rep_views(spark: SparkSession, sf_dir: str) -> None:
     tags=("ns", "dedup", "similarity", "scale"),
 )
 def ns_dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _rep_views(spark, sf_dir)
     return spark.sql(
         _embed_pairs_sql(
             "spark",
-            band_sig_ref="SELECT vec_id, band, sig FROM reps_band_sig",
-            norm_ref="SELECT vec_id, embedding, nrm FROM reps_norm",
-            gm_ref="SELECT vec_id, gid FROM embeddings_gm",
-        )
+            band_sig_ref="SELECT vec_id, band, sig FROM {reps_band_sig}",
+            norm_ref="SELECT vec_id, embedding, nrm FROM {reps_norm}",
+            gm_ref="SELECT vec_id, gid FROM {embeddings_gm}",
+        ),
+        **_rep_rels(spark, sf_dir),
     )
 
 
@@ -438,7 +442,7 @@ LIMIT {_TOPK}
 
 @register(
     "ns_sim_ann_lsh",
-    oracle=_lsh_sql("duckdb"),
+    oracle=_lsh_sql("duckdb").format(embeddings="embeddings"),
     doc="ANN scale path: banded random-hyperplane LSH — probe the query's "
     "band buckets (equi-join on (band, sig)), exact fixed-order cosine "
     "rerank of candidates only, top-k neighbors. Mirrors the IVF probe/"
@@ -446,9 +450,11 @@ LIMIT {_TOPK}
     tags=("ns", "similarity", "scale"),
 )
 def ns_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _cached_band_sig(spark, sf_dir).createOrReplaceTempView("embeddings_band_sig")
-    _cached_emb_norm(spark, sf_dir).createOrReplaceTempView("embeddings_norm")
-    return spark.sql(_lsh_sql("spark"))
+    return spark.sql(
+        _lsh_sql("spark"),
+        band_sig=_cached_band_sig(spark, sf_dir),
+        emb_norm=_cached_emb_norm(spark, sf_dir),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -533,7 +539,7 @@ def _ivf_assign_ctes(dialect: str) -> str:
     d2 = _ivf_d2(dialect)
     return f"""dist AS (
   SELECT e.vec_id, ct.c, {synth.q6(d2)} AS dq
-  FROM embeddings e CROSS JOIN {_centroid_values(dialect)} ct
+  FROM {{embeddings}} e CROSS JOIN {_centroid_values(dialect)} ct
 ),
 assign AS (
   SELECT vec_id, c AS cell,
@@ -556,8 +562,8 @@ SELECT cl.vec_id, cl.cell,
   {synth.q6(f"{dot} / nullif(sqrt({na}) * sqrt({nb}), 0e0)")} AS cosine
 FROM cells cl
 JOIN probe p ON cl.cell = p.cell
-JOIN embeddings cv ON cl.vec_id = cv.vec_id
-CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = {_QUERY_ID}) qv
+JOIN {{embeddings}} cv ON cl.vec_id = cv.vec_id
+CROSS JOIN (SELECT embedding FROM {{embeddings}} WHERE vec_id = {_QUERY_ID}) qv
 WHERE cl.vec_id != {_QUERY_ID}
 ORDER BY cosine DESC, cl.vec_id
 LIMIT {_TOPK}
@@ -566,15 +572,15 @@ LIMIT {_TOPK}
 
 @register(
     "ns_sim_ann_ivf",
-    oracle=_ivf_sql("duckdb"),
+    oracle=_ivf_sql("duckdb").format(embeddings="embeddings"),
     doc="ANN scale path #2: IVF-style coarse-quantizer cell pruning "
     "(nprobe=2 of 8 seeded centroids) + exact cosine rerank of the probed "
     "candidates (NS).",
     tags=("ns", "similarity", "scale"),
 )
 def ns_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_ivf_sql("spark"))
+    embeddings = load_table(spark, sf_dir, "embeddings")
+    return spark.sql(_ivf_sql("spark"), embeddings=embeddings)
 
 
 # ---------------------------------------------------------------------------
@@ -595,7 +601,7 @@ def ns_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ns_sim_ann_ivf_persist",
-    oracle=_ivf_sql("duckdb"),
+    oracle=_ivf_sql("duckdb").format(embeddings="embeddings"),
     doc="Persist-and-probe IVF ANN: the inverted file (vec_id → cell) is "
     "written once as parquet scratch (build_once, stamp-keyed) and each "
     "query computes only its own probe cells map-side, scans the "
@@ -611,25 +617,23 @@ def ns_sim_ann_ivf_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..common import build_once
     from ..sources.files import _scratch
 
-    _view(spark, sf_dir)
+    embeddings = load_table(spark, sf_dir, "embeddings")
     out = _scratch(sf_dir, "ivfidx")
 
     def build(tmp: str) -> None:
         spark.sql(
-            f"WITH {_ivf_assign_ctes('spark')} SELECT vec_id, cell FROM cells"
+            f"WITH {_ivf_assign_ctes('spark')} SELECT vec_id, cell FROM cells",
+            embeddings=embeddings,
         ).write.mode("overwrite").parquet(os.path.join(tmp, "cells.parquet"))
 
     build_once(out, build, stamp=f"v1:c{_IVF_CELLS}:s{_IVF_SEED}:p{_IVF_PROBE}")
-    spark.read.parquet(
-        os.path.join(out, "cells.parquet")
-    ).createOrReplaceTempView("w32bd_ivf_cells")
     dot = _dot_fold("spark", "cv.embedding", "qv.embedding")
     na = _dot_fold("spark", "cv.embedding", "cv.embedding")
     nb = _dot_fold("spark", "qv.embedding", "qv.embedding")
     return spark.sql(f"""
 WITH qdist AS (
   SELECT ct.c, {synth.q6(_ivf_d2("spark"))} AS dq
-  FROM (SELECT embedding FROM embeddings WHERE vec_id = {_QUERY_ID}) e
+  FROM (SELECT embedding FROM {{embeddings}} WHERE vec_id = {_QUERY_ID}) e
   CROSS JOIN {_centroid_values("spark")} ct
 ),
 probe AS (
@@ -639,14 +643,17 @@ probe AS (
 )
 SELECT cl.vec_id, cl.cell,
   {synth.q6(f"{dot} / nullif(sqrt({na}) * sqrt({nb}), 0e0)")} AS cosine
-FROM w32bd_ivf_cells cl
+FROM {{cells}} cl
 JOIN probe p ON cl.cell = p.cell
-JOIN embeddings cv ON cl.vec_id = cv.vec_id
-CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = {_QUERY_ID}) qv
+JOIN {{embeddings}} cv ON cl.vec_id = cv.vec_id
+CROSS JOIN (SELECT embedding FROM {{embeddings}} WHERE vec_id = {_QUERY_ID}) qv
 WHERE cl.vec_id != {_QUERY_ID}
 ORDER BY cosine DESC, cl.vec_id
 LIMIT {_TOPK}
-""")
+""",
+        embeddings=embeddings,
+        cells=spark.read.parquet(os.path.join(out, "cells.parquet")),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -680,7 +687,7 @@ def _semdedup_sql(
     norm_ref = norm_ref or _emb_norm_sql(dialect, rel=f"({rep})", label=False)
     gm_ref = gm_ref or _gm_sql(dialect, rep)
     # The cells relation is consumed TWICE (pair generation + final member
-    # scan); the Spark builder passes a checkpointed view so the inlined
+    # scan); the Spark builder binds a checkpointed relation so the inlined
     # CTE is not re-evaluated per reference.
     cells = (
         f"cells AS ({cells_ref})"
@@ -718,7 +725,7 @@ ORDER BY cl.vec_id
 
 @register(
     "ns_semdedup",
-    oracle=_semdedup_sql("duckdb"),
+    oracle=_semdedup_sql("duckdb").format(embeddings="embeddings"),
     doc="SemDeDup-style semantic dedup (public method, arXiv:2303.09540): "
     "IVF cell assignment bounds the pairwise cosine pass to within-cell "
     "pairs, computed at exact-duplicate-collapsed representative level "
@@ -729,24 +736,24 @@ ORDER BY cl.vec_id
     tags=("ns", "dedup", "similarity", "scale"),
 )
 def ns_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    _rep_views(spark, sf_dir)
+    rels = _rep_rels(spark, sf_dir)
 
     def cells():
         return spark.sql(
-            f"WITH {_ivf_assign_ctes('spark')} SELECT vec_id, cell FROM cells"
+            f"WITH {_ivf_assign_ctes('spark')} SELECT vec_id, cell FROM cells",
+            embeddings=load_table(spark, sf_dir, "embeddings"),
         ).coalesce(4)
 
-    checkpointed(spark, "embeddings_cells", cells, sf_dir).createOrReplaceTempView(
-        "embeddings_cells"
-    )
     return spark.sql(
         _semdedup_sql(
             "spark",
-            norm_ref="SELECT vec_id, embedding, nrm FROM reps_norm",
-            gm_ref="SELECT vec_id, gid FROM embeddings_gm",
-            cells_ref="SELECT vec_id, cell FROM embeddings_cells",
-        )
+            norm_ref="SELECT vec_id, embedding, nrm FROM {reps_norm}",
+            gm_ref="SELECT vec_id, gid FROM {embeddings_gm}",
+            cells_ref="SELECT vec_id, cell FROM {cells}",
+        ),
+        reps_norm=rels["reps_norm"],
+        embeddings_gm=rels["embeddings_gm"],
+        cells=checkpointed(spark, "embeddings_cells", cells, sf_dir),
     )
 
 
@@ -800,7 +807,7 @@ SELECT s.a, s.b, {cell} AS cell
 FROM (
   SELECT la.dim AS a, lb.dim AS b,
     sum(CAST(la.v6 * lb.v6 AS DECIMAL(38,0))) AS s12,
-    (SELECT count(*) + 0e0 FROM embeddings) AS n
+    (SELECT count(*) + 0e0 FROM {{embeddings}}) AS n
   FROM ({long6}) la
   JOIN ({long6}) lb ON la.vec_id = lb.vec_id
   GROUP BY la.dim, lb.dim
@@ -884,7 +891,7 @@ ORDER BY v.dim
 
 @register(
     "ml_pca_power",
-    oracle=_pca_sql("duckdb"),
+    oracle=_pca_sql("duckdb").format(embeddings="embeddings"),
     doc="Top principal component of the embedding covariance via 8 power-"
     "iteration rounds: q6-quantized covariance cells (identical matrix "
     "both engines), matvec join + re-quantized normalization per round, "
@@ -893,22 +900,21 @@ ORDER BY v.dim
     tags=("statml", "ns", "similarity", "iterative"),
 )
 def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    cov = spark.sql(_pca_cov_sql("spark")).localCheckpoint(eager=True)
-    cov.createOrReplaceTempView("pca_cov")
+    cov = spark.sql(
+        _pca_cov_sql("spark"), embeddings=load_table(spark, sf_dir, "embeddings")
+    ).localCheckpoint(eager=True)
     v = spark.sql(_pca_v0_sql("spark")).localCheckpoint(eager=True)
     for _ in range(_PCA_ROUNDS):
-        v.createOrReplaceTempView("pca_v")
         v = spark.sql(
-            _pca_round_sql("SELECT a, b, cell FROM pca_cov", "SELECT dim, l FROM pca_v")
+            _pca_round_sql("SELECT a, b, cell FROM {cov}", "SELECT dim, l FROM {v}"),
+            cov=cov, v=v,
         ).localCheckpoint(eager=True)
-    v.createOrReplaceTempView("pca_v")
     return spark.sql(f"""
-WITH ray AS ({_ray_sql("pca_cov", "pca_v")})
+WITH ray AS ({_ray_sql("{cov}", "{v}")})
 SELECT v.dim, v.l AS loading, {synth.q6("ray.lam")} AS eigenvalue
-FROM pca_v v CROSS JOIN ray
+FROM {{v}} v CROSS JOIN ray
 ORDER BY v.dim
-""")
+""", cov=cov, v=v)
 
 
 # ---------------------------------------------------------------------------
@@ -999,7 +1005,7 @@ def _kme_round_sql(cents: list[list[float]]) -> str:
     return f"""
 WITH asg AS (
   SELECT {_kme_amin(cents)} AS am, embedding
-  FROM embeddings
+  FROM {{embeddings}}
   WHERE embedding IS NOT NULL AND size(embedding) = {_DIM}
 )
 SELECT am.c AS cell, pos AS d,
@@ -1017,7 +1023,7 @@ def _kme_final_sql(cents: list[list[float]]) -> str:
     return f"""
 WITH asg AS (
   SELECT {_kme_amin(cents)} AS am
-  FROM embeddings
+  FROM {{embeddings}}
   WHERE embedding IS NOT NULL AND size(embedding) = {_DIM}
 ),
 stats AS (
@@ -1116,12 +1122,12 @@ def _kme_lloyd(spark: SparkSession, sf_dir: str):
     literal per-round stat rows). Shared by iter_kmeans_embed (which
     appends the live round-R plan) and ns_topic_mixture (which consumes
     only the final centroids)."""
-    _view(spark, sf_dir)
+    embeddings = load_table(spark, sf_dir, "embeddings")
     cents = [list(c) for c in _centroid_components()]
     lit_rows = []
     for rnd in range(1, _KME_ROUNDS):
         per: dict[int, dict[int, dict]] = {}
-        for row in spark.sql(_kme_round_sql(cents)).collect():
+        for row in spark.sql(_kme_round_sql(cents), embeddings=embeddings).collect():
             per.setdefault(row["cell"], {})[row["d"]] = row
         new_cents, stats = [], {}
         for c in range(_KME_K):
@@ -1169,7 +1175,7 @@ FROM VALUES {lits} AS t(round, cluster, n_vecs, inertia_u, weight_u)
 UNION ALL
 ({_kme_final_sql(cents)})
 ORDER BY round, cluster
-""")
+""", embeddings=load_table(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------
@@ -1197,14 +1203,14 @@ def _topic_mixture_live_sql(cents: list[list[float]]) -> str:
     return f"""
 WITH asg AS (
   SELECT vec_id, {_kme_amin(cents)} AS am
-  FROM embeddings
+  FROM {{embeddings}}
   WHERE embedding IS NOT NULL AND size(embedding) = {_DIM}
 ),
 docs AS (
   SELECT doc_id,
     CASE WHEN text IS NULL THEN CAST(0 AS BIGINT)
          ELSE CAST(size(split(text, ' ')) AS BIGINT) END AS tok
-  FROM documents
+  FROM {{documents}}
 ),
 tm AS (
   SELECT asg.am.c AS cell, count(*) AS n_docs,
@@ -1271,7 +1277,8 @@ ORDER BY topic
 )
 def ns_topic_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents, _ = _kme_lloyd(spark, sf_dir)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
+    return spark.sql(
+        _topic_mixture_live_sql(cents),
+        embeddings=load_table(spark, sf_dir, "embeddings"),
+        documents=load_table(spark, sf_dir, "documents"),
     )
-    return spark.sql(_topic_mixture_live_sql(cents))

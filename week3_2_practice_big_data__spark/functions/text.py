@@ -30,45 +30,48 @@ from .. import synth
 _P = 2_147_483_647  # hash modulus (2^31-1)
 
 
-def _view(spark: SparkSession, sf_dir: str, name: str = "documents") -> None:
-    load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 # Restrict signature computation to exact-dup representatives (min doc_id
 # per distinct text) — the rep-collapse front half of the banded plans.
-_REP_WHERE = "WHERE doc_id IN (SELECT min(doc_id) FROM documents GROUP BY text)"
+_REP_WHERE = "WHERE doc_id IN (SELECT min(doc_id) FROM {documents} GROUP BY text)"
 
 _REP_MAP_SQL = (
     "SELECT doc_id, min(doc_id) OVER (PARTITION BY text) AS rep "
-    "FROM documents"
+    "FROM {documents}"
 )
 
 
-def cached_tokens_ref(spark: SparkSession, sf_dir: str) -> str:
+# Refs to the shared materialized relations below, bound as `tok=` / `rep=`.
+TOK_REF = "SELECT doc_id, pos, token FROM {tok}"
+REP_REF = "SELECT doc_id, rep FROM {rep}"
+
+
+def cached_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialize the corpus (doc_id, pos, token) stream ONCE per
-    (session, sf) and return a SQL ref to it — this is what makes the
+    (session, sf); consumers read it through TOK_REF — this is what makes the
     module docstring's "every text key tokenizes the corpus exactly
     once" literally true in the PHYSICAL plan: Spark's CTE inlining
     otherwise re-runs the explode per reference (tfidf ×3, pmi ×3,
     langid ×2, naive Bayes ×4 measured). DuckDB materializes CTEs, so
     the shared oracle text was always single-pass."""
-    _view(spark, sf_dir)
-    checkpointed(
-        spark, "tok_mat", lambda: spark.sql(tokens_sql("spark")).coalesce(8), sf_dir
-    ).createOrReplaceTempView("tok_mat")
-    return "SELECT doc_id, pos, token FROM tok_mat"
+    documents = load_table(spark, sf_dir, "documents")
+    return checkpointed(
+        spark, "tok_mat",
+        lambda: spark.sql(tokens_sql("spark"), documents=documents).coalesce(8),
+        sf_dir,
+    )
 
 
-def cached_rep_map_ref(spark: SparkSession, sf_dir: str) -> str:
+def cached_rep_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """doc_id → exact-dup representative map, materialized once per
     (session, sf) and SHARED by the minhash/simhash/substring member
     expansions (each referenced it 2–4 times → that many documents
     scans + text-partition windows)."""
-    _view(spark, sf_dir)
-    checkpointed(
-        spark, "rep_map", lambda: spark.sql(_REP_MAP_SQL).coalesce(8), sf_dir
-    ).createOrReplaceTempView("rep_map")
-    return "SELECT doc_id, rep FROM rep_map"
+    documents = load_table(spark, sf_dir, "documents")
+    return checkpointed(
+        spark, "rep_map",
+        lambda: spark.sql(_REP_MAP_SQL, documents=documents).coalesce(8),
+        sf_dir,
+    )
 
 
 def tokens_sql(dialect: str, where: str = "") -> str:
@@ -76,13 +79,13 @@ def tokens_sql(dialect: str, where: str = "") -> str:
     if dialect == "spark":
         return (
             "SELECT doc_id, posexplode(split(text, ' ')) AS (pos, token) "
-            f"FROM documents {where}"
+            f"FROM {{documents}} {where}"
         )
     return f"""
 SELECT doc_id, p - 1 AS pos, toks[p] AS token
 FROM (
   SELECT doc_id, toks, unnest(generate_series(1, len(toks))) AS p
-  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents {where}) t0
+  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM {{documents}} {where}) t0
 ) t1
 """
 
@@ -145,7 +148,7 @@ SELECT doc_id, n_copies FROM (
   SELECT doc_id,
     row_number() OVER (PARTITION BY {digest} ORDER BY doc_id) AS rn,
     count(*) OVER (PARTITION BY {digest}) AS n_copies
-  FROM documents
+  FROM {{documents}}
 ) t WHERE rn = 1
 ORDER BY doc_id
 """
@@ -153,15 +156,15 @@ ORDER BY doc_id
 
 @register(
     "ns_dedup_exact",
-    oracle=_dedup_exact_sql("duckdb"),
+    oracle=_dedup_exact_sql("duckdb").format(documents="documents"),
     doc="Exact dedup: first doc_id per identical text, grouped by "
     "sha-256 digest so the shuffle key is fixed-width — the 100 TB "
     "shape (NS).",
     tags=("ns", "dedup", "bench"),
 )
 def ns_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_dedup_exact_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_dedup_exact_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -201,8 +204,10 @@ def _cached_capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard stage references it three times (inverted-index self-join +
     sizes)."""
     def build():
-        _view(spark, sf_dir)
-        return spark.sql(_capped_shingles_sql("spark")).coalesce(4)
+        return spark.sql(
+            _capped_shingles_sql("spark"),
+            documents=load_table(spark, sf_dir, "documents"),
+        ).coalesce(4)
 
     return checkpointed(spark, "shingle", build, sf_dir)
 
@@ -253,7 +258,7 @@ ORDER BY jaccard DESC, ai, bi
 
 @register(
     "ns_dedup_ngram_jaccard",
-    oracle=_jaccard_sql("duckdb"),
+    oracle=_jaccard_sql("duckdb").format(documents="documents"),
     doc="Near-dup detection: 3-gram shingle Jaccard >= 0.2 via inverted "
     "shingle index over exact-dup REPRESENTATIVES (rep-collapse, r5) "
     "with the df <= 50 cap counting distinct TEXTS — no posting list "
@@ -263,13 +268,10 @@ ORDER BY jaccard DESC, ai, bi
     tags=("ns", "dedup", "bench"),
 )
 def ns_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _cached_capped_shingles(spark, sf_dir).createOrReplaceTempView("capped_shingles")
     return spark.sql(
-        _jaccard_sql(
-            "spark",
-            "SELECT doc_id, shingle FROM capped_shingles",
-            g_ref=cached_rep_map_ref(spark, sf_dir),
-        )
+        _jaccard_sql("spark", "SELECT doc_id, shingle FROM {sh}", g_ref=REP_REF),
+        sh=_cached_capped_shingles(spark, sf_dir),
+        rep=cached_rep_map(spark, sf_dir),
     )
 
 
@@ -337,8 +339,10 @@ def _cached_minhash_sig(
     makes each reference a scan of the materialized relation (cache-manager
     matching is unreliable for plans with collect_list/lambda exprs)."""
     def build():
-        _view(spark, sf_dir)
-        return spark.sql(_minhash_sig_sql("spark", where)).coalesce(4)
+        return spark.sql(
+            _minhash_sig_sql("spark", where),
+            documents=load_table(spark, sf_dir, "documents"),
+        ).coalesce(4)
 
     return checkpointed(spark, "minhash_sig", build, sf_dir, (where,))
 
@@ -407,7 +411,7 @@ ORDER BY est_jaccard DESC, ai, bi
 
 @register(
     "ns_dedup_minhash",
-    oracle=_minhash_sql("duckdb"),
+    oracle=_minhash_sql("duckdb").format(documents="documents"),
     doc="MinHash (k=16) + LSH banding (4×4) + VERIFY over exact-dup "
     "REPRESENTATIVES (rep-collapse, r4): byte-identical docs share one "
     "signature computation, banding and the Jaccard verify join stay "
@@ -416,15 +420,10 @@ ORDER BY est_jaccard DESC, ai, bi
     tags=("ns", "dedup", "bench"),
 )
 def ns_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _cached_minhash_sig(spark, sf_dir, _REP_WHERE).createOrReplaceTempView(
-        "minhash_sig"
-    )
     return spark.sql(
-        _minhash_sql(
-            "spark",
-            "SELECT doc_id, i, sig FROM minhash_sig",
-            g_ref=cached_rep_map_ref(spark, sf_dir),
-        )
+        _minhash_sql("spark", "SELECT doc_id, i, sig FROM {sig}", g_ref=REP_REF),
+        sig=_cached_minhash_sig(spark, sf_dir, _REP_WHERE),
+        rep=cached_rep_map(spark, sf_dir),
     )
 
 
@@ -546,15 +545,19 @@ def _cached_simhash_fp(
     reference into an InMemoryTableScan (same discipline as the pagerank
     edge cache)."""
     def build():
-        _view(spark, sf_dir)
-        return spark.sql(_simhash_fp_sql("spark", where)).coalesce(4)
+        return spark.sql(
+            _simhash_fp_sql("spark", where),
+            documents=load_table(spark, sf_dir, "documents"),
+        ).coalesce(4)
 
     return checkpointed(spark, "simhash_fp", build, sf_dir, (where,))
 
 
 @register(
     "ns_dedup_simhash",
-    oracle=_simhash_pairs_sql("duckdb", _simhash_fp_sql("duckdb", _REP_WHERE)),
+    oracle=_simhash_pairs_sql(
+        "duckdb", _simhash_fp_sql("duckdb", _REP_WHERE)
+    ).format(documents="documents"),
     doc="SimHash near-dup pairs over exact-dup REPRESENTATIVES "
     "(rep-collapse, r4): 48-bit sign-of-weighted-bit-sum fingerprint over "
     "3-gram shingles, banded into 6 bytes; rep candidates share a (band, "
@@ -565,14 +568,10 @@ def _cached_simhash_fp(
     tags=("ns", "dedup", "scale"),
 )
 def ns_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fp = _cached_simhash_fp(spark, sf_dir, _REP_WHERE)
-    fp.createOrReplaceTempView("simhash_fp")
     return spark.sql(
-        _simhash_pairs_sql(
-            "spark",
-            "SELECT doc_id, simhash FROM simhash_fp",
-            g_ref=cached_rep_map_ref(spark, sf_dir),
-        )
+        _simhash_pairs_sql("spark", "SELECT doc_id, simhash FROM {fp}", g_ref=REP_REF),
+        fp=_cached_simhash_fp(spark, sf_dir, _REP_WHERE),
+        rep=cached_rep_map(spark, sf_dir),
     )
 
 
@@ -597,21 +596,21 @@ def _clean_sql(dialect: str) -> str:
 SELECT doc_id, trim({collapsed}) AS clean_text,
   length(text) AS n_chars_before,
   length(trim({collapsed})) AS n_chars_after
-FROM documents ORDER BY doc_id
+FROM {{documents}} ORDER BY doc_id
 """
 
 
 @register(
     "ns_text_clean",
-    oracle=_clean_sql("duckdb"),
+    oracle=_clean_sql("duckdb").format(documents="documents"),
     doc="Text normalization: lowercase → strip non-alphanumerics → collapse "
     "whitespace → trim, with before/after char counts — the standard first "
     "stage of an LLM-data pipeline, pure JVM-side regexp (NS).",
     tags=("ns", "text"),
 )
 def ns_text_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_clean_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_clean_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -633,7 +632,7 @@ def _cluster_sql(dialect: str, edges_ref: str) -> str:
     # DuckDB must MATERIALIZE the pairs CTE: every propagation round
     # references it, and inlined re-evaluation re-runs the whole MinHash
     # pipeline per round (measured 18 s -> 0.4 s at sf0.01). Spark reads a
-    # localCheckpoint-ed view instead (and has no MATERIALIZED syntax).
+    # localCheckpoint-ed relation instead (and has no MATERIALIZED syntax).
     mat = "MATERIALIZED " if dialect == "duckdb" else ""
     parts = [
         f"""WITH pairs AS {mat}({edges_ref}),
@@ -674,15 +673,10 @@ def _cached_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation round references the edge list, and Catalyst inlines CTEs —
     without the cache the whole minhash pipeline would re-run per round."""
     def build():
-        _cached_minhash_sig(spark, sf_dir, _REP_WHERE).createOrReplaceTempView(
-            "minhash_sig"
-        )
         return spark.sql(
-            _minhash_sql(
-                "spark",
-                "SELECT doc_id, i, sig FROM minhash_sig",
-                g_ref=cached_rep_map_ref(spark, sf_dir),
-            )
+            _minhash_sql("spark", "SELECT doc_id, i, sig FROM {sig}", g_ref=REP_REF),
+            sig=_cached_minhash_sig(spark, sf_dir, _REP_WHERE),
+            rep=cached_rep_map(spark, sf_dir),
         ).coalesce(2)
 
     return checkpointed(spark, "minhash_pairs", build, sf_dir)
@@ -692,7 +686,7 @@ def _cached_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ns_dedup_cluster",
     oracle=_cluster_sql(
         "duckdb", f"SELECT ai, bi FROM ({_minhash_sql('duckdb')}) mp"
-    ),
+    ).format(documents="documents"),
     doc="Near-dup clustering: confirmed MinHash pairs → 4 rounds of min-"
     "label propagation → (cluster, n_docs, keep_doc). The operator a user "
     "actually deduplicates with (keep doc_id == keep_doc); pair graph is "
@@ -700,10 +694,9 @@ def _cached_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ns", "dedup", "iterative"),
 )
 def ns_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _cached_minhash_pairs(spark, sf_dir)
-    pairs.createOrReplaceTempView("minhash_pairs")
     return spark.sql(
-        _cluster_sql("spark", "SELECT ai, bi FROM minhash_pairs")
+        _cluster_sql("spark", "SELECT ai, bi FROM {pairs}"),
+        pairs=_cached_minhash_pairs(spark, sf_dir),
     )
 
 
@@ -717,19 +710,19 @@ SELECT lang,
   CAST(sum({ntok}) AS BIGINT) AS total_tokens,
   count(DISTINCT source) AS n_sources,
   {synth.q6("sum(n_chars) / (count(*) + 0e0)")} AS avg_chars
-FROM documents GROUP BY lang ORDER BY lang
+FROM {{documents}} GROUP BY lang ORDER BY lang
 """
 
 
 @register(
     "ns_text_stats",
-    oracle=_stats_sql("duckdb"),
+    oracle=_stats_sql("duckdb").format(documents="documents"),
     doc="Per-language corpus stats: docs, tokens, sources, mean length (NS).",
     tags=("ns", "text"),
 )
 def ns_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_stats_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_stats_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -743,7 +736,7 @@ WITH tok AS ({tok_ref or tokens_sql(dialect)}),
 doclen AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id),
 tf AS (SELECT doc_id, token, count(*) AS cnt FROM tok GROUP BY doc_id, token),
 df AS (SELECT token, count(DISTINCT doc_id) AS df FROM tok GROUP BY token),
-n AS (SELECT count(*) AS nd FROM documents)
+n AS (SELECT count(*) AS nd FROM {{documents}})
 SELECT tf.doc_id, tf.token,
   {synth.q6("(tf.cnt / (dl.dl + 0e0)) * ln((n.nd + 0e0) / df.df)")} AS tfidf
 FROM tf
@@ -757,12 +750,16 @@ LIMIT 20
 
 @register(
     "ns_text_tfidf",
-    oracle=_tfidf_sql("duckdb"),
+    oracle=_tfidf_sql("duckdb").format(documents="documents"),
     doc="tf-idf scoring (tf/doclen × ln(N/df)); top-20 tokens (NS).",
     tags=("ns", "text", "bench"),
 )
 def ns_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_tfidf_sql("spark", cached_tokens_ref(spark, sf_dir)))
+    return spark.sql(
+        _tfidf_sql("spark", TOK_REF),
+        tok=cached_tokens(spark, sf_dir),
+        documents=load_table(spark, sf_dir, "documents"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -782,7 +779,7 @@ freq AS (
   -- first ASC, DuckDB NULL last (diverged on the r13 90%-NULL-lang
   -- skew fixture). No-op on fully-labeled corpora.
   SELECT d.lang, t.token, count(*) AS cnt
-  FROM tok t JOIN documents d ON t.doc_id = d.doc_id
+  FROM tok t JOIN {{documents}} d ON t.doc_id = d.doc_id
   WHERE d.lang IS NOT NULL
   GROUP BY d.lang, t.token
 ),
@@ -807,20 +804,24 @@ pred AS (
   ) s WHERE rn = 1
 )
 SELECT d.doc_id, d.lang AS actual, coalesce(p.predicted, 'unknown') AS predicted
-FROM documents d LEFT JOIN pred p ON d.doc_id = p.doc_id
+FROM {{documents}} d LEFT JOIN pred p ON d.doc_id = p.doc_id
 ORDER BY d.doc_id
 """
 
 
 @register(
     "ns_text_langid",
-    oracle=_langid_sql("duckdb"),
+    oracle=_langid_sql("duckdb").format(documents="documents"),
     doc="Language ID via per-language top-token profiles + overlap argmax "
     "(n-gram heuristic adapted to the shared-vocabulary corpus) (NS).",
     tags=("ns", "text"),
 )
 def ns_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_langid_sql("spark", cached_tokens_ref(spark, sf_dir)))
+    return spark.sql(
+        _langid_sql("spark", TOK_REF),
+        tok=cached_tokens(spark, sf_dir),
+        documents=load_table(spark, sf_dir, "documents"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -858,20 +859,20 @@ SELECT doc_id,
       f"- 2e0 * ({nonalnum} / (greatest(length(text), 1) + 0e0)) "
       f"- 0.5e0 * ({stop} / ({ntok} + 0e0)), 0e0), 1e0)"
   )} AS quality
-FROM documents ORDER BY doc_id
+FROM {{documents}} ORDER BY doc_id
 """
 
 
 @register(
     "ns_text_quality",
-    oracle=_quality_sql("duckdb"),
+    oracle=_quality_sql("duckdb").format(documents="documents"),
     doc="Quality scoring: length/punctuation/stopword ratios → clipped "
     "affine score (NS).",
     tags=("ns", "text"),
 )
 def ns_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_quality_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_quality_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -889,19 +890,19 @@ def _tokens_count_sql(dialect: str) -> str:
         bpe = f"len(regexp_extract_all(text, {pat}))"
     return f"""
 SELECT doc_id, {ws} AS ws_tokens, {bpe} AS bpe_tokens
-FROM documents ORDER BY doc_id
+FROM {{documents}} ORDER BY doc_id
 """
 
 
 @register(
     "ns_text_tokens",
-    oracle=_tokens_count_sql("duckdb"),
+    oracle=_tokens_count_sql("duckdb").format(documents="documents"),
     doc="Token counting: whitespace split vs BPE-ish regex segmentation (NS).",
     tags=("ns", "text"),
 )
 def ns_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_tokens_count_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_tokens_count_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -933,14 +934,14 @@ FROM hashed GROUP BY doc_id ORDER BY doc_id
 
 @register(
     "ns_text_fingerprint",
-    oracle=_fingerprint_sql("duckdb"),
+    oracle=_fingerprint_sql("duckdb").format(documents="documents"),
     doc="Document fingerprint: order-sensitive rolling hash over token "
     "hashes (Rabin-Karp) (NS).",
     tags=("ns", "text"),
 )
 def ns_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_fingerprint_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_fingerprint_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -960,7 +961,7 @@ _SAMPLE_SQL = f"""
 WITH r AS (
   SELECT doc_id, lang, source, n_chars,
     row_number() OVER (PARTITION BY lang, source ORDER BY doc_id) AS rn
-  FROM documents
+  FROM {{documents}}
 )
 SELECT doc_id, lang, source, n_chars
 FROM r WHERE rn % {_SAMPLE_K} = 1
@@ -970,14 +971,13 @@ ORDER BY doc_id
 
 @register(
     "ns_sample_stratified",
-    oracle=_SAMPLE_SQL,
+    oracle=_SAMPLE_SQL.format(documents="documents"),
     doc="Deterministic 1-in-K systematic sample per (lang, source) stratum "
     "— rerun-stable training-data downsampling (NS).",
     tags=("ns", "text", "scale"),
 )
 def ns_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_SAMPLE_SQL)
+    return spark.sql(_SAMPLE_SQL, documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1005,7 +1005,7 @@ def _pack_sql(dialect: str) -> str:
     return f"""
 WITH toks AS (
   SELECT doc_id, {shard} AS shard, CAST({ntok} AS BIGINT) AS n_tokens
-  FROM documents
+  FROM {{documents}}
 ),
 cum AS (
   SELECT doc_id, shard, n_tokens,
@@ -1028,7 +1028,7 @@ FROM packed GROUP BY pack_id ORDER BY pack_id
 
 @register(
     "ns_pack_sequences",
-    oracle=_pack_sql("duckdb"),
+    oracle=_pack_sql("duckdb").format(documents="documents"),
     doc="LLM-training sequence packing: docs -> fixed-capacity (512-token) "
     "packs via a running-sum window PARTITIONED BY 256-doc shard "
     "(pack_id = shard*1e6 + within-shard pack) — genuinely parallel, no "
@@ -1036,8 +1036,8 @@ FROM packed GROUP BY pack_id ORDER BY pack_id
     tags=("ns", "text", "scale"),
 )
 def ns_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_pack_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_pack_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -1056,7 +1056,7 @@ SELECT
   count(*) AS n_docs,
   CAST(sum(n_chars) AS BIGINT) AS n_chars,
   min(doc_id) AS first_doc
-FROM documents
+FROM {{documents}}
 GROUP BY CASE WHEN {bucket} < 90 THEN 'train' ELSE 'val' END
 ORDER BY split
 """
@@ -1064,15 +1064,15 @@ ORDER BY split
 
 @register(
     "ns_split_train_val",
-    oracle=_split_sql("duckdb"),
+    oracle=_split_sql("duckdb").format(documents="documents"),
     doc="Deterministic 90/10 train/val split by affine doc_id hash mod 100 "
     "— reproducible across runs/engines/shards, unlike random() splits; "
     "pure integer arithmetic, identical both dialects (NS).",
     tags=("ns", "text"),
 )
 def ns_split_train_val(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_split_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_split_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -1104,7 +1104,7 @@ def _decontaminate_sql(dialect: str) -> str:
 SELECT p.probe,
   CAST(sum(CASE WHEN {hit} THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated,
   coalesce(min(CASE WHEN {hit} THEN d.doc_id END), -1) AS first_doc
-FROM documents d CROSS JOIN {probes} p
+FROM {{documents}} d CROSS JOIN {probes} p
 GROUP BY p.probe
 ORDER BY p.probe
 """
@@ -1112,15 +1112,15 @@ ORDER BY p.probe
 
 @register(
     "ns_decontaminate",
-    oracle=_decontaminate_sql("duckdb"),
+    oracle=_decontaminate_sql("duckdb").format(documents="documents"),
     doc="Benchmark decontamination first pass: per eval-probe phrase, count "
     "of documents containing it + first contaminated doc_id — probes "
     "broadcast against one corpus scan (NS).",
     tags=("ns", "text"),
 )
 def ns_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_decontaminate_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_decontaminate_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -1211,7 +1211,7 @@ ORDER BY qid, rnk
 
 @register(
     "ns_text_bm25",
-    oracle=_bm25_sql("duckdb"),
+    oracle=_bm25_sql("duckdb").format(documents="documents"),
     doc="BM25 ranked retrieval: 4 deterministic 3-term queries (df ranks "
     "21..32 via top-32 TakeOrderedAndProject, no vocabulary-wide window) "
     "probe the inverted tf index (broadcast, candidate volume Σ df), "
@@ -1221,7 +1221,7 @@ ORDER BY qid, rnk
     tags=("ns", "text", "join"),
 )
 def ns_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_bm25_sql("spark", cached_tokens_ref(spark, sf_dir)))
+    return spark.sql(_bm25_sql("spark", TOK_REF), tok=cached_tokens(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -1287,7 +1287,6 @@ ORDER BY doc_id, pos
 def udtf_python_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import udtf
 
-    _view(spark, sf_dir)
 
     @udtf(returnType="pos int, token string, start_off int, end_off int",
           useArrow=True)
@@ -1310,9 +1309,9 @@ def udtf_python_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one UDTF pass; sampling now re-reads only the 2-column parquet scan.
     return spark.sql("""
 SELECT d.doc_id, t.pos, t.token, t.start_off, t.end_off
-FROM (SELECT doc_id, text FROM documents ORDER BY doc_id) d,
+FROM (SELECT doc_id, text FROM {documents} ORDER BY doc_id) d,
      LATERAL w32bd_tokenize_spans(d.text) t
-""")
+""", documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1380,7 +1379,7 @@ ORDER BY source
 
 @register(
     "ns_vocab_coverage",
-    oracle=_vocab_coverage_sql("duckdb"),
+    oracle=_vocab_coverage_sql("duckdb").format(documents="documents"),
     doc="Tokenizer-vocabulary coverage / OOV-rate diagnostic: top-16 "
     "vocabulary by document frequency (TakeOrderedAndProject, no "
     "vocabulary-wide window), broadcast coverage join over the one-pass "
@@ -1391,5 +1390,5 @@ ORDER BY source
 )
 def ns_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
-        _vocab_coverage_sql("spark", cached_tokens_ref(spark, sf_dir))
+        _vocab_coverage_sql("spark", TOK_REF), tok=cached_tokens(spark, sf_dir)
     )

@@ -68,17 +68,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # watermarks) was built against.
         df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> None:
-    """Register temp views so spark.sql queries can address tables by name."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

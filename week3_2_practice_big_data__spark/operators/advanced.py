@@ -32,10 +32,6 @@ from ..io import load_table
 from ..registry import register
 
 
-def _view(spark: SparkSession, sf_dir: str, name: str) -> None:
-    load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 # ---------------------------------------------------------------------------
 # iter_gd_logreg
 # ---------------------------------------------------------------------------
@@ -72,7 +68,7 @@ _GD_DATA_SQL = """
 SELECT CASE WHEN l_returnflag = 'R' THEN 1e0 ELSE 0e0 END AS y,
   (l_quantity / 50e0) AS x1,
   (l_discount * 10e0) AS x2
-FROM lineitem
+FROM {lineitem}
 """
 
 
@@ -98,7 +94,7 @@ GROUP BY f.w0, f.w1, f.w2
 
 @register(
     "iter_gd_logreg",
-    oracle=_gd_logreg_sql("duckdb"),
+    oracle=_gd_logreg_sql("duckdb").format(lineitem="lineitem"),
     doc="Distributed logistic regression (predict returned lines from "
     "quantity/discount): 3 unrolled gradient-descent steps; per-row "
     "gradients quantized to integer micro-units before the sum, so the "
@@ -116,12 +112,12 @@ def iter_gd_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the checkpointed-relation discipline of the dedup family); every
     # step then reads the in-memory RDD. At 100 TB this is exactly the
     # cached-training-set shape distributed SGD assumes.
-    _view(spark, sf_dir, "lineitem")
-    checkpointed(
-        spark, "gd_data", lambda: spark.sql(_GD_DATA_SQL), sf_dir
-    ).createOrReplaceTempView("gd_data")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    data = checkpointed(
+        spark, "gd_data", lambda: spark.sql(_GD_DATA_SQL, lineitem=lineitem), sf_dir
+    )
     return spark.sql(
-        _gd_logreg_sql("spark", data_ref="SELECT y, x1, x2 FROM gd_data")
+        _gd_logreg_sql("spark", data_ref="SELECT y, x1, x2 FROM {data}"), data=data
     )
 
 
@@ -207,7 +203,7 @@ def _bitmap_sql(dialect: str) -> str:
     word = f"CAST((user_id - {pos}) / {_BM_BITS}e0 AS BIGINT)"
     return f"""
 WITH bits AS (
-  SELECT {word} AS word, {bit} AS bit FROM events
+  SELECT {word} AS word, {bit} AS bit FROM {{events}}
 ),
 words AS (
   SELECT word, bit_or(bit) AS bm FROM bits GROUP BY word
@@ -217,7 +213,7 @@ bm_count AS (
   FROM words
 ),
 exact_count AS (
-  SELECT count(DISTINCT user_id) AS n_exact FROM events
+  SELECT count(DISTINCT user_id) AS n_exact FROM {{events}}
 )
 SELECT coalesce(n_bitmap, 0) AS n_bitmap, n_exact,
   (coalesce(n_bitmap, 0) = n_exact) AS agree
@@ -227,7 +223,7 @@ FROM bm_count CROSS JOIN exact_count
 
 @register(
     "agg_bitmap_distinct",
-    oracle=_bitmap_sql("duckdb"),
+    oracle=_bitmap_sql("duckdb").format(events="events"),
     doc="Exact COUNT(DISTINCT) via word-partitioned bitmaps: 62 ids per "
     "BIGINT word, bit_or per word, popcount sum — the shuffle carries one "
     "word per 62 ids instead of every id (the bitmap-index pattern for "
@@ -236,8 +232,7 @@ FROM bm_count CROSS JOIN exact_count
     tags=("agg", "scale"),
 )
 def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
-    return spark.sql(_bitmap_sql("spark"))
+    return spark.sql(_bitmap_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -249,7 +244,7 @@ def _islands_sql(dialect: str) -> str:
     del dialect  # shared text
     return """
 WITH present AS (
-  SELECT event_id FROM events WHERE event_id % 13 <> 0
+  SELECT event_id FROM {events} WHERE event_id % 13 <> 0
 ),
 grp AS (
   SELECT event_id,
@@ -266,7 +261,7 @@ ORDER BY range_start
 
 @register(
     "win_islands_ranges",
-    oracle=_islands_sql("duckdb"),
+    oracle=_islands_sql("duckdb").format(events="events"),
     doc="Gaps-and-islands over the id sequence (every 13th id masked out): "
     "contiguous runs collapse to [start, end, len] ranges via the "
     "id-minus-row_number constant — the missing-data / compaction report. "
@@ -275,8 +270,7 @@ ORDER BY range_start
     tags=("window", "quality"),
 )
 def win_islands_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
-    return spark.sql(_islands_sql("spark"))
+    return spark.sql(_islands_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -317,7 +311,7 @@ def _islands_edges_sql(block: int = _ISL_B) -> str:
     b = f"(event_id - event_id % {block})"
     return f"""
 WITH present AS (
-  SELECT event_id, {b} AS b FROM events WHERE event_id % 13 <> 0
+  SELECT event_id, {b} AS b FROM {{events}} WHERE event_id % 13 <> 0
 ),
 loc AS (
   SELECT b, event_id,
@@ -367,7 +361,7 @@ ORDER BY range_start
 
 @register(
     "win_islands_blocked",
-    oracle=_islands_sql("duckdb"),
+    oracle=_islands_sql("duckdb").format(events="events"),
     doc="Gaps-and-islands, hierarchical scale path: per-id-block islands "
     "(partitioned window) + cross-block chain merge over the ~n/4096 "
     "edge-flush summary — removes the registry's last events-sized "
@@ -376,14 +370,14 @@ ORDER BY range_start
     tags=("window", "quality", "scale"),
 )
 def win_islands_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
 
     def build():
-        return spark.sql(_islands_edges_sql()).coalesce(8)
+        return spark.sql(_islands_edges_sql(), events=events).coalesce(8)
 
-    checkpointed(spark, "isl_edges", build, sf_dir).createOrReplaceTempView("isl_edges")
     return spark.sql(
-        _islands_blocked_sql("SELECT b, s, e, lflush, rflush FROM isl_edges")
+        _islands_blocked_sql("SELECT b, s, e, lflush, rflush FROM {edges}"),
+        edges=checkpointed(spark, "isl_edges", build, sf_dir),
     )
 
 
@@ -460,7 +454,7 @@ LIMIT 50
 
 @register(
     "iter_kcore",
-    oracle=_kcore_sql("duckdb"),
+    oracle=_kcore_sql("duckdb").format(documents="documents"),
     doc="K-core decomposition (k=3, 4 unrolled pruning rounds) of the "
     "distinct adjacent-token co-occurrence graph: each round is one "
     "degree aggregation + one keep semi-join over the vocabulary-bounded "
@@ -473,7 +467,6 @@ def iter_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.text import tokens_sql
 
-    _view(spark, sf_dir, "documents")
     edges = spark.sql(f"""
 SELECT DISTINCT
   CASE WHEN token < nxt THEN token ELSE nxt END AS a,
@@ -483,7 +476,7 @@ FROM (
     lead(token) OVER (PARTITION BY doc_id ORDER BY pos) AS nxt
   FROM ({tokens_sql("spark")}) tok) p
 WHERE nxt IS NOT NULL AND token <> nxt
-""").localCheckpoint(eager=True)
+""", documents=load_table(spark, sf_dir, "documents")).localCheckpoint(eager=True)
     for _ in range(_KCORE_ROUNDS):
         deg = (
             edges.select(F.col("a").alias("node"))
@@ -575,21 +568,22 @@ LIMIT 20
 """
 
 
-def _tri_edges_view(spark: SparkSession, sf_dir: str) -> None:
-    """Register the oriented token co-occurrence edge list, materialized
-    once and shared by the triangle/clustering/degree builders, as view
-    `tri_edges`."""
-    _view(spark, sf_dir, "documents")
-    checkpointed(
+def _tri_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The oriented token co-occurrence edge list, materialized once and
+    shared by the triangle/clustering/degree builders."""
+    documents = load_table(spark, sf_dir, "documents")
+    return checkpointed(
         spark, "tri_edges",
-        lambda: spark.sql(_triangle_edges_sql("spark")).coalesce(8),
+        lambda: spark.sql(
+            _triangle_edges_sql("spark"), documents=documents
+        ).coalesce(8),
         sf_dir,
-    ).createOrReplaceTempView("tri_edges")
+    )
 
 
 @register(
     "graph_triangle_count",
-    oracle=_triangle_sql("duckdb"),
+    oracle=_triangle_sql("duckdb").format(documents="documents"),
     doc="Triangle counting on the oriented (a<b) token co-occurrence "
     "graph: one two-hop equi-join chain counts each triangle once (the "
     "classic MapReduce formulation); per-node memberships top-20 + global "
@@ -597,9 +591,9 @@ def _tri_edges_view(spark: SparkSession, sf_dir: str) -> None:
     tags=("graph", "iterative"),
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tri_edges_view(spark, sf_dir)
     return spark.sql(
-        _triangle_sql("spark", edges_ref="SELECT a, b FROM tri_edges")
+        _triangle_sql("spark", edges_ref="SELECT a, b FROM {tri}"),
+        tri=_tri_edges(spark, sf_dir),
     )
 
 
@@ -621,8 +615,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# `{lineitem}`: the builders bind the table with spark.sql(text, lineitem=df);
-# the oracles read DuckDB's `lineitem` view.
 _BIP_EDGES_SQL = "SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM {lineitem}"
 
 # Per-part fan-out cap for pair generation — the graph twin of the dedup
@@ -664,7 +656,7 @@ def _bipartite_jaccard_sql(
     )
     return f"""
 WITH edges AS (
-  {edges_ref or _BIP_EDGES_SQL.format(lineitem="lineitem")}
+  {edges_ref or _BIP_EDGES_SQL}
 ),
 deg AS (
   SELECT s, CAST(count(*) AS BIGINT) AS d FROM edges GROUP BY s
@@ -708,7 +700,7 @@ def _bip_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_bipartite_jaccard",
-    oracle=_bipartite_jaccard_sql("duckdb"),
+    oracle=_bipartite_jaccard_sql("duckdb").format(lineitem="lineitem"),
     doc="Bipartite node similarity: supplier pairs projected through "
     "shared parts, Jaccard over part neighborhoods with degree evidence, "
     "top-100. Candidates from the per-part equi-join (fan-out bounded by "
@@ -783,7 +775,7 @@ def _resource_alloc_sql(
     )
     return f"""
 WITH edges AS (
-  {edges_ref or _BIP_EDGES_SQL.format(lineitem="lineitem")}
+  {edges_ref or _BIP_EDGES_SQL}
 ),
 pdeg AS (
   SELECT p, CAST(count(*) AS BIGINT) AS d FROM edges GROUP BY p
@@ -811,7 +803,7 @@ LIMIT 100
 
 @register(
     "graph_resource_alloc",
-    oracle=_resource_alloc_sql("duckdb"),
+    oracle=_resource_alloc_sql("duckdb").format(lineitem="lineitem"),
     doc="Weighted common-neighbor link prediction: Resource Allocation "
     "index Σ 1/deg(shared part) over supplier pairs, exact BIGINT "
     "micro-unit weights (round(1e6/d) in pure correctly-rounded "
@@ -919,7 +911,7 @@ LIMIT 20
 
 @register(
     "graph_clustering_coeff",
-    oracle=_clustering_sql("duckdb"),
+    oracle=_clustering_sql("duckdb").format(documents="documents"),
     doc="Local clustering coefficient per node (2T/(d(d-1))) on the token "
     "co-occurrence graph + exact network average over all deg>=2 nodes "
     "(micro-quantized BIGINT mean, zero-triangle nodes included via LEFT "
@@ -930,9 +922,9 @@ LIMIT 20
     tags=("graph", "iterative", "agg"),
 )
 def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tri_edges_view(spark, sf_dir)
     return spark.sql(
-        _clustering_sql("spark", edges_ref="SELECT a, b FROM tri_edges")
+        _clustering_sql("spark", edges_ref="SELECT a, b FROM {tri}"),
+        tri=_tri_edges(spark, sf_dir),
     )
 
 
@@ -1014,7 +1006,7 @@ FROM agg
 
 @register(
     "graph_degree_distribution",
-    oracle=_degree_dist_sql("duckdb"),
+    oracle=_degree_dist_sql("duckdb").format(documents="documents"),
     doc="Degree distribution + power-law tail fit: histogram of node "
     "degrees over the shared checkpointed edge list, log-log OLS "
     "(slope ~ -alpha, intercept, R^2) from per-term micro-quantized "
@@ -1024,9 +1016,9 @@ FROM agg
     tags=("graph", "agg", "stats"),
 )
 def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _tri_edges_view(spark, sf_dir)
     return spark.sql(
-        _degree_dist_sql("spark", edges_ref="SELECT a, b FROM tri_edges")
+        _degree_dist_sql("spark", edges_ref="SELECT a, b FROM {tri}"),
+        tri=_tri_edges(spark, sf_dir),
     )
 
 
@@ -1056,7 +1048,7 @@ _ALS_LAMBDA = "0.1e0"
 _ALS_RATINGS_SQL = """
 SELECT o.o_custkey AS u, l.l_partkey AS i,
   CAST(l.l_quantity AS DOUBLE) AS rt
-FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+FROM {lineitem} l JOIN {orders} o ON l.l_orderkey = o.o_orderkey
 """
 
 
@@ -1128,7 +1120,9 @@ JOIN qn q ON q.i = r.i
 
 @register(
     "iter_als_rank2",
-    oracle=_als_final_sql(_ALS_RATINGS_SQL),
+    oracle=_als_final_sql(_ALS_RATINGS_SQL).format(
+        lineitem="lineitem", orders="orders"
+    ),
     doc="Alternating least squares at rank 2 (customer x part, rating = "
     "quantity): one user step + one item step, each a single equi-join "
     "+ groupBy building BIGINT-micro-exact normal equations, closed-form "
@@ -1140,17 +1134,23 @@ JOIN qn q ON q.i = r.i
     tags=("iterative", "ml", "join"),
 )
 def iter_als_rank2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    for t in ("lineitem", "orders"):
-        _view(spark, sf_dir, t)
-    checkpointed(
-        spark, "als_r", lambda: spark.sql(_ALS_RATINGS_SQL).coalesce(8), sf_dir
-    ).createOrReplaceTempView("als_r")
-    r_ref = "SELECT u, i, rt FROM als_r"
-    checkpointed(
-        spark, "als_p", lambda: spark.sql(_als_user_step_sql(r_ref)).coalesce(4), sf_dir
-    ).createOrReplaceTempView("als_p")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    r = checkpointed(
+        spark, "als_r",
+        lambda: spark.sql(
+            _ALS_RATINGS_SQL, lineitem=lineitem, orders=orders
+        ).coalesce(8),
+        sf_dir,
+    )
+    r_ref = "SELECT u, i, rt FROM {r}"
+    p = checkpointed(
+        spark, "als_p",
+        lambda: spark.sql(_als_user_step_sql(r_ref), r=r).coalesce(4),
+        sf_dir,
+    )
     return spark.sql(
-        _als_final_sql(r_ref, p_ref="SELECT u, f1, f2 FROM als_p")
+        _als_final_sql(r_ref, p_ref="SELECT u, f1, f2 FROM {p}"), r=r, p=p
     )
 
 
@@ -1186,7 +1186,7 @@ _BFS_UND_SQL = """
   SELECT 2 * p + 1 AS src, 2 * s AS dst FROM bip
 """
 _BFS_SEEDS_SQL = (
-    "SELECT DISTINCT 2 * s_suppkey AS node FROM supplier "
+    "SELECT DISTINCT 2 * s_suppkey AS node FROM {supplier} "
     "WHERE s_nationkey % 5 = 0"
 )
 
@@ -1203,7 +1203,7 @@ def _bfs_summary(rel: str, dist: str) -> str:
 def _bfs_oracle_sql() -> str:
     parts = [
         f"""
-WITH bip AS MATERIALIZED ({_BIP_EDGES_SQL.format(lineitem="lineitem")}),
+WITH bip AS MATERIALIZED ({_BIP_EDGES_SQL}),
 und AS MATERIALIZED ({_BFS_UND_SQL}),
 nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM und),
 f0 AS MATERIALIZED ({_BFS_SEEDS_SQL}),
@@ -1255,7 +1255,7 @@ def _bfs_expand(und: DataFrame, frontier: DataFrame, visited: DataFrame):
 
 @register(
     "iter_bfs_sssp",
-    oracle=_bfs_oracle_sql(),
+    oracle=_bfs_oracle_sql().format(lineitem="lineitem", supplier="supplier"),
     doc="Multi-source BFS / unweighted shortest path over the shared "
     "part–supplier bipartite graph (bip_edges checkpoint; supplier 2s / "
     "part 2p+1 node encoding): sources are the nation-0/5/10/15/20 "
@@ -1271,13 +1271,14 @@ def _bfs_expand(und: DataFrame, frontier: DataFrame, visited: DataFrame):
 def iter_bfs_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyspark.sql.functions as F
 
-    _view(spark, sf_dir, "supplier")
     und = spark.sql(
         "WITH bip AS (SELECT p, s FROM {bip}) " + _BFS_UND_SQL,
         bip=_bip_edges(spark, sf_dir),
     ).localCheckpoint(eager=True)
     nodes = und.select(F.col("src").alias("node")).distinct()
-    frontier = spark.sql(_BFS_SEEDS_SQL).localCheckpoint(eager=True)
+    frontier = spark.sql(
+        _BFS_SEEDS_SQL, supplier=load_table(spark, sf_dir, "supplier")
+    ).localCheckpoint(eager=True)
     visited = frontier
     levels = [(0, frontier)]
     for r in range(1, _BFS_ROUNDS + 1):

@@ -388,16 +388,15 @@ FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     tags=("agg",),
 )
 def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("lineitem")
     return spark.sql(
         f"""
 SELECT l_returnflag,
   {synth.q6("percentile(l_extendedprice, 0.25e0)")} AS p25,
   {synth.q6("percentile(l_extendedprice, 0.5e0)")} AS p50,
   {synth.q6("percentile(l_extendedprice, 0.9e0)")} AS p90
-FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-"""
+FROM {{lineitem}} GROUP BY l_returnflag ORDER BY l_returnflag
+""",
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -427,7 +426,7 @@ WITH m AS (
     CAST(SUM({dx} * {dx}) AS DOUBLE) AS sxx,
     CAST(SUM({dy} * {dy}) AS DOUBLE) AS syy,
     CAST(SUM({dx} * {dy}) AS DOUBLE) AS sxy
-  FROM lineitem GROUP BY l_returnflag
+  FROM {{lineitem}} GROUP BY l_returnflag
 )
 SELECT l_returnflag,
   CASE WHEN n * sxx - sx * sx = 0e0 OR n * syy - sy * sy = 0e0
@@ -441,15 +440,14 @@ FROM m ORDER BY l_returnflag
 
 @register(
     "agg_corr_moments",
-    oracle=_moments_sql(),
+    oracle=_moments_sql().format(lineitem="lineitem"),
     doc="corr/stddev_pop/covar_pop per group via exact decimal moments — "
     "order-free single-pass statistics (REF-ANALOG of app.py:73,76 "
     "normalization stats).",
     tags=("agg", "scale"),
 )
 def agg_corr_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_moments_sql())
+    return spark.sql(_moments_sql(), lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 # ---------------------------------------------------------------------------
@@ -464,7 +462,7 @@ def agg_corr_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MODE_SQL = """
 WITH c AS (
   SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
-  FROM orders GROUP BY o_orderstatus, o_orderpriority
+  FROM {orders} GROUP BY o_orderstatus, o_orderpriority
 ), r AS (
   SELECT o_orderstatus, o_orderpriority, n,
     row_number() OVER (PARTITION BY o_orderstatus
@@ -479,14 +477,13 @@ ORDER BY o_orderstatus
 
 @register(
     "agg_mode",
-    oracle=_MODE_SQL,
+    oracle=_MODE_SQL.format(orders="orders"),
     doc="Deterministic per-group mode via count + row_number tie-break "
     "(REF-ANALOG; builtin mode() is tie-unstable across engines).",
     tags=("agg",),
 )
 def agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_MODE_SQL)
+    return spark.sql(_MODE_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 # ---------------------------------------------------------------------------
@@ -582,7 +579,7 @@ SELECT c_mktsegment, o_orderpriority,
   COUNT(*) AS n_orders,
   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
   GROUPING(c_mktsegment) + 2 * GROUPING(o_orderpriority) AS grp
-FROM orders JOIN customer ON o_custkey = c_custkey
+FROM {orders} JOIN {customer} ON o_custkey = c_custkey
 GROUP BY GROUPING SETS ((c_mktsegment, o_orderpriority), (c_mktsegment), ())
 ORDER BY grp, c_mktsegment NULLS FIRST, o_orderpriority NULLS FIRST
 """
@@ -590,15 +587,17 @@ ORDER BY grp, c_mktsegment NULLS FIRST, o_orderpriority NULLS FIRST
 
 @register(
     "agg_grouping_sets",
-    oracle=_GSETS_SQL,
+    oracle=_GSETS_SQL.format(orders="orders", customer="customer"),
     doc="Explicit GROUPING SETS aggregate — the general grouping-sets form "
     "behind ROLLUP/CUBE; one Expand+hash-agg pass (REF-ANALOG).",
     tags=("agg",),
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(_GSETS_SQL)
+    return spark.sql(
+        _GSETS_SQL,
+        orders=load_table(spark, sf_dir, "orders"),
+        customer=load_table(spark, sf_dir, "customer"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -737,13 +736,13 @@ SELECT event_type,
   CAST(min({_VKEY}) % 10000000 AS BIGINT) AS bottom_event,
   bool_or(value > 99) AS any_near_max,
   bool_and(value >= 0) AS all_nonneg
-FROM events GROUP BY event_type ORDER BY event_type
+FROM {{events}} GROUP BY event_type ORDER BY event_type
 """
 
 
 @register(
     "agg_conditional",
-    oracle=_COND_SHARED,
+    oracle=_COND_SHARED.format(events="events"),
     doc="Conditional/argmax aggregates: count_if (FILTER), argmax/argmin "
     "via a composite integer key with a DETERMINISTIC tie-break (quantized "
     "values tie; engine-native max_by/arg_max break ties differently), "
@@ -751,8 +750,7 @@ FROM events GROUP BY event_type ORDER BY event_type
     tags=("agg",),
 )
 def agg_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_COND_SHARED)
+    return spark.sql(_COND_SHARED, events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -795,7 +793,7 @@ def _bigram_stream_sql(dialect: str) -> str:
     split = "split(text, ' ')" if dialect == "spark" else "string_split(text, ' ')"
     return f"""
 SELECT doc_id, {pairs} AS bigram
-FROM (SELECT doc_id, {split} AS toks FROM documents) t0
+FROM (SELECT doc_id, {split} AS toks FROM {{documents}}) t0
 """
 
 
@@ -852,7 +850,7 @@ ORDER BY n_occurrences DESC, c.bigram
 
 @register(
     "agg_sketch_cms_heavy",
-    oracle=_cms_heavy_sql("duckdb"),
+    oracle=_cms_heavy_sql("duckdb").format(documents="documents"),
     doc="Count-Min heavy hitters with exact rerank: the bigram occurrence "
     "stream folds into a 3×1024 counter matrix (bounded-key shuffle, "
     "8 KB broadcastable), candidates read off the sketch (no "
@@ -869,10 +867,8 @@ def agg_sketch_cms_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer (columnar scan + transform) beats materializing it — the
     # opposite tradeoff from the tokenize/window relations the text family
     # checkpoints. Measured: 5.74× → 1.4× on the 10× ladder.
-    from ..functions.llmprep import _view
-
-    _view(spark, sf_dir, "documents")
-    return spark.sql(_cms_heavy_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_cms_heavy_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------
@@ -923,7 +919,7 @@ def _kmv_hash(u: str) -> str:
 # At sf0.001 unions stay under k (the sketch IS the set — exact branch);
 # at sf0.01+ unions exceed k and the theta path is exercised.
 _KMV_D_SQL = """
-SELECT DISTINCT event_type AS t, user_id AS u FROM events
+SELECT DISTINCT event_type AS t, user_id AS u FROM {events}
 WHERE event_type IS NOT NULL AND user_id IS NOT NULL AND value > 150e0
 """
 
@@ -1002,7 +998,7 @@ ORDER BY type_a, type_b
 
 @register(
     "agg_sketch_kmv_intersect",
-    oracle=_kmv_sql("duckdb"),
+    oracle=_kmv_sql("duckdb").format(events="events"),
     doc="Theta-sketch set intersection: per-type KMV sketch (k=64 minimum "
     "LCG-hash values over distinct users), per-pair theta = k-th minimum "
     "of the union sketch, |A∩B| ≈ matches·M/theta, with the exact "
@@ -1014,11 +1010,13 @@ ORDER BY type_a, type_b
     tags=("agg", "scale", "sketch"),
 )
 def agg_sketch_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    checkpointed(
-        spark, "kmv_d", lambda: spark.sql(_KMV_D_SQL).coalesce(8), sf_dir
-    ).createOrReplaceTempView("kmv_d")
-    return spark.sql(_kmv_sql("spark", d_ref="SELECT t, u FROM kmv_d"))
+    events = load_table(spark, sf_dir, "events")
+    d = checkpointed(
+        spark, "kmv_d",
+        lambda: spark.sql(_KMV_D_SQL, events=events).coalesce(8),
+        sf_dir,
+    )
+    return spark.sql(_kmv_sql("spark", d_ref="SELECT t, u FROM {d}"), d=d)
 
 
 # ---------------------------------------------------------------------------
@@ -1031,7 +1029,7 @@ def agg_sketch_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_grouping_sets_df",
-    oracle=_GSETS_SQL,
+    oracle=_GSETS_SQL.format(orders="orders", customer="customer"),
     doc="df.groupingSets(...) (Spark 4 DataFrame API): per-(segment, "
     "priority), per-segment, and grand total in one pass via the "
     "programmatic grouping-sets entry point, with F.expr grouping() "
@@ -1303,7 +1301,7 @@ SELECT CAST(count(*) AS BIGINT) AS n_rows,
   CAST(sum(CAST(floor(l_discount * 100 + 0.5) AS BIGINT)
     * CAST(floor(l_discount * 100 + 0.5) AS BIGINT)) AS BIGINT)
     AS sum_dd
-FROM lineitem
+FROM {lineitem}
 """
 
 _COV_ORACLE = f"""
@@ -1315,7 +1313,7 @@ FROM ({_COV_SUMS}) s
 
 @register(
     "agg_cov_corr",
-    oracle=_COV_ORACLE,
+    oracle=_COV_ORACLE.format(lineitem="lineitem"),
     doc="df.stat.cov / df.stat.corr (quantity vs discount): the "
     "streaming-co-moment API scalars (bounded driver actions) checked "
     "at 1e-6 relative against the closed-form derivation from exact "
@@ -1329,8 +1327,7 @@ def agg_cov_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("lineitem")
-    sums = spark.sql(_COV_SUMS).first()
+    sums = spark.sql(_COV_SUMS, lineitem=li).first()
     n = sums["n_rows"]
     api_cov = li.stat.cov("l_quantity", "l_discount")
     api_corr = li.stat.corr("l_quantity", "l_discount")
@@ -1462,9 +1459,9 @@ def agg_sample_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _THETA_EXACT = """
-WITH a AS (SELECT DISTINCT o_custkey AS k FROM orders
+WITH a AS (SELECT DISTINCT o_custkey AS k FROM {orders}
            WHERE o_orderpriority = '1-URGENT'),
-b AS (SELECT DISTINCT o_custkey AS k FROM orders WHERE o_orderstatus = 'F')
+b AS (SELECT DISTINCT o_custkey AS k FROM {orders} WHERE o_orderstatus = 'F')
 SELECT
   CAST((SELECT count(*) FROM a) AS BIGINT) AS n_a,
   CAST((SELECT count(*) FROM b) AS BIGINT) AS n_b,
@@ -1485,9 +1482,9 @@ FROM ({_THETA_EXACT}) x
 """
 
 _THETA_SPARK = f"""
-WITH ska AS (SELECT theta_sketch_agg(o_custkey) AS sk FROM orders
+WITH ska AS (SELECT theta_sketch_agg(o_custkey) AS sk FROM {{orders}}
              WHERE o_orderpriority = '1-URGENT'),
-skb AS (SELECT theta_sketch_agg(o_custkey) AS sk FROM orders
+skb AS (SELECT theta_sketch_agg(o_custkey) AS sk FROM {{orders}}
         WHERE o_orderstatus = 'F'),
 est AS (
   SELECT
@@ -1519,7 +1516,7 @@ FROM est CROSS JOIN exact
 
 @register(
     "agg_sketch_theta_ops",
-    oracle=_THETA_ORACLE,
+    oracle=_THETA_ORACLE.format(orders="orders"),
     doc="Native Datasketches theta set algebra (Spark 4.1): two customer "
     "sets sketched via theta_sketch_agg, union/intersection/difference "
     "estimated from the SKETCHES (theta_union/theta_intersection/"
@@ -1530,8 +1527,7 @@ FROM est CROSS JOIN exact
     tags=("agg", "scale", "sketch"),
 )
 def agg_sketch_theta_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_THETA_SPARK)
+    return spark.sql(_THETA_SPARK, orders=load_table(spark, sf_dir, "orders"))
 
 
 # ---------------------------------------------------------------------------
@@ -1578,7 +1574,7 @@ WITH g AS (
     regr_slope(l_extendedprice, l_quantity) AS api_slope,
     regr_intercept(l_extendedprice, l_quantity) AS api_intercept,
     regr_r2(l_extendedprice, l_quantity) AS api_r2
-  FROM lineitem GROUP BY l_returnflag
+  FROM {{lineitem}} GROUP BY l_returnflag
 ),
 d AS (
   SELECT *,
@@ -1619,8 +1615,7 @@ FROM d ORDER BY l_returnflag
     tags=("agg", "stats"),
 )
 def agg_regr_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_REGR_SPARK)
+    return spark.sql(_REGR_SPARK, lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 # ---------------------------------------------------------------------------
@@ -1646,7 +1641,7 @@ SELECT o_orderpriority,
 FROM (
   SELECT o_orderpriority, bitmap_bucket_number(o_custkey) AS bucket,
          bitmap_construct_agg(bitmap_bit_position(o_custkey)) AS bm
-  FROM orders GROUP BY o_orderpriority, bucket
+  FROM {orders} GROUP BY o_orderpriority, bucket
 ) g GROUP BY o_orderpriority ORDER BY o_orderpriority
 """
 
@@ -1663,8 +1658,8 @@ FROM (
     tags=("agg", "scale"),
 )
 def agg_bitmap_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_BITMAP_NATIVE_SPARK)
+    orders = load_table(spark, sf_dir, "orders")
+    return spark.sql(_BITMAP_NATIVE_SPARK, orders=orders)
 
 
 # ---------------------------------------------------------------------------
@@ -1698,7 +1693,7 @@ HAVING count(*) > 0
 """
 
 _HISTN_SPARK = f"""
-WITH src AS (SELECT value FROM events WHERE {_HISTN_FILTER}),
+WITH src AS (SELECT value FROM {{events}} WHERE {_HISTN_FILTER}),
 h AS (SELECT histogram_numeric(value, {_HISTN_NB}) AS hist FROM src),
 stats AS (
   SELECT CAST(count(*) AS BIGINT) AS n_vals,
@@ -1739,8 +1734,7 @@ WHERE s.n_vals > 0
     tags=("agg", "sketch", "scale"),
 )
 def agg_histogram_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_HISTN_SPARK)
+    return spark.sql(_HISTN_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -1860,7 +1854,6 @@ def agg_describe_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = {
         r["summary"]: r["c_acctbal"] for r in cust.summary().collect()
     }
-    cust.createOrReplaceTempView("customer_bal")
     ex = spark.sql(
         """
 SELECT CAST(count(*) AS BIGINT) AS n,
@@ -1869,8 +1862,9 @@ SELECT CAST(count(*) AS BIGINT) AS n,
   CAST(sum(CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)) AS DOUBLE) AS s1,
   CAST(sum(CAST(floor(c_acctbal * 100 + 0.5) AS DECIMAL(38,0))
     * CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)) AS DOUBLE) AS s2
-FROM customer_bal
-"""
+FROM {cust}
+""",
+        cust=cust,
     ).first()
     n = ex["n"]
     from ..common import local_rows_df

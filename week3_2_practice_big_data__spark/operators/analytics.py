@@ -28,10 +28,6 @@ def _us(dialect: str) -> str:
     return "unix_micros(ts)" if dialect == "spark" else "epoch_us(ts)"
 
 
-def _view(spark: SparkSession, sf_dir: str) -> None:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-
-
 # ---------------------------------------------------------------------------
 # win_sessionize_gaps — BATCH sessionization via the gaps-and-islands window
 # pattern: lag() marks session starts, a running sum numbers sessions. The
@@ -57,7 +53,7 @@ def _sessionize_sql(dialect: str) -> str:
 WITH ordered AS (
   SELECT user_id, event_id, {us} AS us,
     lag({us}) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-  FROM events
+  FROM {{events}}
 ),
 marked AS (
   SELECT user_id, event_id, us,
@@ -80,7 +76,7 @@ ORDER BY user_id, session_start_us
 
 @register(
     "win_sessionize_gaps",
-    oracle=_sessionize_sql("duckdb"),
+    oracle=_sessionize_sql("duckdb").format(events="events"),
     doc="Batch sessionization (5-min gap) via gaps-and-islands windows: "
     "lag() marks starts, running sum numbers sessions — one shuffle on "
     "user_id; the window-function strategy for the same semantic as "
@@ -88,8 +84,8 @@ ORDER BY user_id, session_start_us
     tags=("window", "analytics"),
 )
 def win_sessionize_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_sessionize_sql("spark"))
+    events = load_table(spark, sf_dir, "events")
+    return spark.sql(_sessionize_sql("spark"), events=events)
 
 
 # ---------------------------------------------------------------------------
@@ -106,7 +102,7 @@ def _funnel_stage_sql(dialect: str, stage: str, prev_ref: str | None) -> str:
     every stage so the chain and the final counts never re-derive one
     (Spark CTE inlining re-ran v/c/p per reference: 6 scans measured)."""
     us = _us(dialect)
-    ev = f"SELECT user_id, event_type, {us} AS us FROM events"
+    ev = f"SELECT user_id, event_type, {us} AS us FROM {{events}}"
     if prev_ref is None:
         return (
             f"SELECT user_id, min(us) AS t FROM ({ev}) ev "
@@ -141,7 +137,7 @@ SELECT stage, n_users FROM (
 
 @register(
     "win_funnel_conversion",
-    oracle=_funnel_sql("duckdb"),
+    oracle=_funnel_sql("duckdb").format(events="events"),
     doc="Ordered-stage funnel (view -> click -> purchase, strict ts order): "
     "per-user first-occurrence chaining; each stage join touches only the "
     "one-row-per-user stage relation, never the raw stream twice "
@@ -149,16 +145,20 @@ SELECT stage, n_users FROM (
     tags=("window", "analytics"),
 )
 def win_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    refs = {}
+    events = load_table(spark, sf_dir, "events")
+    rels, refs = {}, {}
     prev = None
     for name, stage in (("v", "view"), ("c", "click"), ("p", "purchase")):
         sql = _funnel_stage_sql("spark", stage, prev)
-        checkpointed(
-            spark, f"funnel_{name}", lambda q=sql: spark.sql(q).coalesce(4), sf_dir
-        ).createOrReplaceTempView(f"funnel_{name}")
-        refs[name] = prev = f"SELECT user_id, t FROM funnel_{name}"
-    return spark.sql(_funnel_sql("spark", refs["v"], refs["c"], refs["p"]))
+        rels[name] = checkpointed(
+            spark, f"funnel_{name}",
+            lambda q=sql, bound=dict(rels): spark.sql(
+                q, events=events, **bound
+            ).coalesce(4),
+            sf_dir,
+        )
+        refs[name] = prev = f"SELECT user_id, t FROM {{{name}}}"
+    return spark.sql(_funnel_sql("spark", refs["v"], refs["c"], refs["p"]), **rels)
 
 
 # ---------------------------------------------------------------------------
@@ -173,7 +173,7 @@ def _cohort_sql(dialect: str) -> str:
     us = _us(dialect)
     day = f"CAST(floor({us} / {_US_PER_DAY}) AS BIGINT)"
     return f"""
-WITH ev AS (SELECT user_id, {day} AS day FROM events),
+WITH ev AS (SELECT user_id, {day} AS day FROM {{events}}),
 firsts AS (SELECT user_id, min(day) AS cohort FROM ev GROUP BY user_id),
 act AS (
   SELECT DISTINCT e.user_id, f.cohort, e.day - f.cohort AS day_off
@@ -189,7 +189,7 @@ ORDER BY cohort_day, day_off
 
 @register(
     "agg_cohort_retention",
-    oracle=_cohort_sql("duckdb"),
+    oracle=_cohort_sql("duckdb").format(events="events"),
     doc="Cohort retention grid: cohort = first active epoch-day per user, "
     "cells = distinct active users per (cohort, day offset 0..7). Two "
     "user_id-keyed aggregations + one broadcastable first-day join "
@@ -197,8 +197,7 @@ ORDER BY cohort_day, day_off
     tags=("agg", "analytics"),
 )
 def agg_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_cohort_sql("spark"))
+    return spark.sql(_cohort_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -253,7 +252,7 @@ LIMIT 20
 
 @register(
     "join_interval_bucketed",
-    oracle=_interval_overlap_sql("duckdb"),
+    oracle=_interval_overlap_sql("duckdb").format(events="events"),
     doc="Interval-overlap join (sessions of different users overlapping in "
     "time) via 1-hour time-bucket equi-join + DISTINCT candidate + exact "
     "overlap verify — the bucketed temporal-join pattern that replaces the "
@@ -261,8 +260,8 @@ LIMIT 20
     tags=("join", "analytics", "scale"),
 )
 def join_interval_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_interval_overlap_sql("spark"))
+    events = load_table(spark, sf_dir, "events")
+    return spark.sql(_interval_overlap_sql("spark"), events=events)
 
 
 # ---------------------------------------------------------------------------
@@ -306,7 +305,7 @@ WITH seq AS (
     lead(ts, 2) OVER w AS ts2,
     lag(event_type, 1) OVER w AS p1,
     row_number() OVER w AS rn
-  FROM events
+  FROM {{events}}
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 ),
 seq2 AS (
@@ -357,7 +356,7 @@ WITH seq AS (
     lead(event_type, 2) OVER w AS t2,
     lead(ts, 2) OVER w AS ts2,
     row_number() OVER w AS rn
-  FROM events
+  FROM {{events}}
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 ),
 conv AS (
@@ -386,7 +385,7 @@ SELECT u.user_id,
   CAST(coalesce(c.n_strict_conversions, 0) AS BIGINT) AS n_strict_conversions,
   CAST(coalesce(b.n_error_bursts, 0) AS BIGINT) AS n_error_bursts,
   CAST(coalesce(b.longest_burst, 0) AS BIGINT) AS longest_burst
-FROM (SELECT DISTINCT user_id FROM events) u
+FROM (SELECT DISTINCT user_id FROM {{events}}) u
 LEFT JOIN conv c ON u.user_id = c.user_id
 LEFT JOIN burst_agg b ON u.user_id = b.user_id
 WHERE c.user_id IS NOT NULL OR b.user_id IS NOT NULL
@@ -396,7 +395,7 @@ ORDER BY u.user_id
 
 @register(
     "win_event_pattern_cep",
-    oracle=_event_pattern_sql("duckdb"),
+    oracle=_event_pattern_sql("duckdb").format(events="events"),
     doc="MATCH_RECOGNIZE-style CEP expressed relationally: strict-"
     "contiguity time-boxed sequence (view→click→purchase on consecutive "
     "events within 30 min; lead()×2) and Kleene error bursts (≥2 "
@@ -407,8 +406,8 @@ ORDER BY u.user_id
     tags=("window", "analytics", "cep"),
 )
 def win_event_pattern_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_event_pattern_sql("spark"))
+    events = load_table(spark, sf_dir, "events")
+    return spark.sql(_event_pattern_sql("spark"), events=events)
 
 # ---------------------------------------------------------------------------
 # win_attribution — marketing attribution over the event stream: every
@@ -463,7 +462,7 @@ def _attribution_sql(dialect: str) -> str:
     return f"""
 WITH ev AS (
   SELECT user_id, event_id, {us} AS us, event_type, value
-  FROM events
+  FROM {{events}}
   WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL
 ),
 ctx AS (
@@ -499,7 +498,7 @@ ORDER BY touch_day
 
 @register(
     "win_attribution",
-    oracle=_attribution_sql("duckdb"),
+    oracle=_attribution_sql("duckdb").format(events="events"),
     doc="Marketing attribution: purchases credited to the latest prior "
     "click within a 7-day lookback (last_value IGNORE NULLS prefix "
     "frame — incremental, never a suffix frame) + first-touch age "
@@ -510,8 +509,8 @@ ORDER BY touch_day
     tags=("window", "agg", "events"),
 )
 def win_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_attribution_sql("spark"))
+    events = load_table(spark, sf_dir, "events")
+    return spark.sql(_attribution_sql("spark"), events=events)
 
 # ---------------------------------------------------------------------------
 # win_markov_transitions — the user-journey transition matrix: P(next
@@ -532,7 +531,7 @@ def _markov_sql(dialect: str) -> str:
     return f"""
 WITH ev AS (
   SELECT user_id, event_id, {us} AS us, event_type
-  FROM events
+  FROM {{events}}
   WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL
 ),
 pairs AS (
@@ -561,7 +560,7 @@ ORDER BY t_from, t_to
 
 @register(
     "win_markov_transitions",
-    oracle=_markov_sql("duckdb"),
+    oracle=_markov_sql("duckdb").format(events="events"),
     doc="User-journey transition matrix: adjacent event-type pairs per "
     "user (lead on the one user window) aggregated into the |types|^2 "
     "matrix — exact counts, exact-integer row-conditional probabilities, "
@@ -570,8 +569,7 @@ ORDER BY t_from, t_to
     tags=("window", "agg", "events"),
 )
 def win_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_markov_sql("spark"))
+    return spark.sql(_markov_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -613,7 +611,7 @@ def _survival_sql(dialect: str) -> str:
     return f"""
 WITH ev AS (
   SELECT user_id, {us} AS us
-  FROM events
+  FROM {{events}}
   WHERE ts IS NOT NULL AND user_id IS NOT NULL
 ),
 ext AS (SELECT max(us) AS gmax FROM ev),
@@ -660,7 +658,7 @@ ORDER BY lifetime_d
 
 @register(
     "win_survival_km",
-    oracle=_survival_sql("duckdb"),
+    oracle=_survival_sql("duckdb").format(events="events"),
     doc="Kaplan-Meier user-lifetime survival with 12-hour churn definition "
     "and right censoring: at-risk counts from a reverse-sorted running "
     "sum (incremental, never a suffix frame), hazard d/r, survival as a "
@@ -671,5 +669,4 @@ ORDER BY lifetime_d
     tags=("window", "agg", "stats"),
 )
 def win_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_survival_sql("spark"))
+    return spark.sql(_survival_sql("spark"), events=load_table(spark, sf_dir, "events"))

@@ -278,7 +278,7 @@ WITH tagged AS (
   SELECT user_id, ts, event_id,
     CASE WHEN event_type = 'click' THEN {epoch} END AS click_us,
     CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_purchase
-  FROM events
+  FROM {{events}}
   WHERE event_type IN ('click', 'purchase')
 ),
 carried AS (
@@ -299,14 +299,13 @@ ORDER BY user_id, purchase_event_id
 
 @register(
     "join_asof",
-    oracle=_asof_sql("duckdb"),
+    oracle=_asof_sql("duckdb").format(events="events"),
     doc="As-of join (last click at-or-before each purchase per user) via "
     "union+running-max window — no range self-join (beyond-checklist).",
     tags=("join", "window"),
 )
 def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_asof_sql("spark"))
+    return spark.sql(_asof_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -453,9 +452,9 @@ SELECT l_orderkey,
   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
            * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
   CAST(CAST(o_orderdate AS DATE) AS STRING) AS o_orderdate, o_orderpriority
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
+FROM {customer}
+JOIN {orders} ON c_custkey = o_custkey
+JOIN {lineitem} ON l_orderkey = o_orderkey
 WHERE c_mktsegment = 'BUILDING'
   AND o_orderdate < TIMESTAMP '1998-03-15 00:00:00'
   AND l_shipdate > TIMESTAMP '1998-03-15 00:00:00'
@@ -467,16 +466,17 @@ LIMIT 10
 
 @register(
     "join_q3_shipping_priority",
-    oracle=_Q3_SQL,
+    oracle=_Q3_SQL.format(customer="customer", lineitem="lineitem", orders="orders"),
     doc="TPC-H Q3 skeleton: selective segment filter -> customer⋈orders⋈"
     "lineitem -> decimal revenue per order -> top-10. Broadcast customer, "
     "shuffle only the grouped aggregate (REF-ANALOG).",
     tags=("join", "agg", "bench"),
 )
 def join_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    for t in ("customer", "orders", "lineitem"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_Q3_SQL)
+    return spark.sql(
+        _Q3_SQL,
+        **{t: load_table(spark, sf_dir, t) for t in ("customer", "orders", "lineitem")},
+    )
 
 
 _Q5_SQL = """
@@ -484,12 +484,12 @@ SELECT /*+ BROADCAST(supplier, nation, region) */ n_name,
   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
            * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
   COUNT(*) AS n_lineitems
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
+FROM {customer}
+JOIN {orders} ON c_custkey = o_custkey
+JOIN {lineitem} ON l_orderkey = o_orderkey
+JOIN {supplier} ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+JOIN {nation} ON s_nationkey = n_nationkey
+JOIN {region} ON n_regionkey = r_regionkey
 WHERE r_name = 'ASIA'
   AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
@@ -500,16 +500,26 @@ ORDER BY revenue DESC, n_name
 
 @register(
     "join_q5_region_volume",
-    oracle=_Q5_SQL,
+    oracle=_Q5_SQL.format(
+        customer="customer", lineitem="lineitem", nation="nation", orders="orders",
+        region="region", supplier="supplier",
+    ),
     doc="TPC-H Q5 skeleton: 6-way star join (region->nation->supplier dims "
     "broadcast) with the local-supplier co-nation predicate, grouped "
     "decimal revenue per nation (REF-ANALOG).",
     tags=("join", "agg", "bench"),
 )
 def join_q5_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    for t in ("customer", "orders", "lineitem", "supplier", "nation", "region"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_Q5_SQL)
+    # The dimensions are bound with F.broadcast: the text's BROADCAST hint
+    # names the tables DuckDB reads, not the relations bound here.
+    return spark.sql(
+        _Q5_SQL,
+        **{t: load_table(spark, sf_dir, t) for t in ("customer", "orders", "lineitem")},
+        **{
+            t: F.broadcast(load_table(spark, sf_dir, t))
+            for t in ("supplier", "nation", "region")
+        },
+    )
 
 
 # ---------------------------------------------------------------------------

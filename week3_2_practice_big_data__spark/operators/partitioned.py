@@ -83,19 +83,17 @@ ORDER BY o_orderpriority
 )
 def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _partitioned_orders(spark, sf_dir)
-    _read_orders_part(spark, sf_dir, path).createOrReplaceTempView("orders_part")
     years = spark.range(1995, 2002).select(
         F.col("id").cast("int").alias("y")
     )
-    years.createOrReplaceTempView("years_dim")
     return spark.sql(f"""
 SELECT o_orderpriority, count(*) AS n_orders,
   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-FROM orders_part JOIN years_dim ON o_year = y
+FROM {{orders_part}} JOIN {{years_dim}} ON o_year = y
 WHERE y IN {_TARGET_YEARS}
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
-""")
+""", orders_part=_read_orders_part(spark, sf_dir, path), years_dim=years)
 
 
 _STATIC_ORACLE = """
@@ -121,15 +119,14 @@ ORDER BY o_orderpriority
 )
 def src_partition_prune_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _partitioned_orders(spark, sf_dir)
-    _read_orders_part(spark, sf_dir, path).createOrReplaceTempView("orders_part")
     return spark.sql("""
 SELECT o_orderpriority, count(*) AS n_orders,
   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-FROM orders_part
+FROM {orders_part}
 WHERE o_year = 1996
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
-""")
+""", orders_part=_read_orders_part(spark, sf_dir, path))
 
 
 # ---------------------------------------------------------------------------
@@ -175,12 +172,12 @@ def _zorder_sql(dialect: str) -> str:
     return f"""
 WITH mx AS (
   SELECT max(l_partkey) + 1e0 AS ma, max(l_suppkey) + 1e0 AS mb
-  FROM lineitem
+  FROM {{lineitem}}
 ),
 dims AS (
   SELECT CAST(floor(l_partkey * {dom}e0 / mx.ma) AS BIGINT) AS a,
     CAST(floor(l_suppkey * {dom}e0 / mx.mb) AS BIGINT) AS b
-  FROM lineitem CROSS JOIN mx
+  FROM {{lineitem}} CROSS JOIN mx
 ),
 zvals AS (
   SELECT a, b, {z} AS z FROM dims
@@ -202,7 +199,7 @@ ORDER BY bucket
 
 @register(
     "agg_zorder_clustering",
-    oracle=_zorder_sql("duckdb"),
+    oracle=_zorder_sql("duckdb").format(lineitem="lineitem"),
     doc="Z-order (Morton) clustering analytic: bit-interleave the low 16 "
     "bits of (l_partkey, l_suppkey) in portable integer arithmetic, "
     "bucket rows by z-range, and report per-bucket min/max spans of both "
@@ -211,5 +208,5 @@ ORDER BY bucket
     tags=("agg", "scale", "source"),
 )
 def agg_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_zorder_sql("spark"))
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    return spark.sql(_zorder_sql("spark"), lineitem=lineitem)

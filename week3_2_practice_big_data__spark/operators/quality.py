@@ -30,11 +30,6 @@ from ..io import load_table
 from ..registry import register
 
 
-def _views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...]) -> None:
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def _us(dialect: str) -> str:
     return "unix_micros(ts)" if dialect == "spark" else "epoch_us(ts)"
 
@@ -49,24 +44,24 @@ def _dq_sql(dialect: str) -> str:
     return """
 WITH checks AS (
   SELECT 'orders_custkey_fk' AS check_name, count(*) AS n_violations
-  FROM orders LEFT JOIN customer ON o_custkey = c_custkey
+  FROM {orders} LEFT JOIN {customer} ON o_custkey = c_custkey
   WHERE c_custkey IS NULL
   UNION ALL
   SELECT 'orders_orderkey_unique', count(*) FROM (
-    SELECT o_orderkey FROM orders GROUP BY o_orderkey HAVING count(*) > 1) d
+    SELECT o_orderkey FROM {orders} GROUP BY o_orderkey HAVING count(*) > 1) d
   UNION ALL
   SELECT 'orders_totalprice_positive', count(*)
-  FROM orders WHERE o_totalprice <= 0
+  FROM {orders} WHERE o_totalprice <= 0
   UNION ALL
   SELECT 'lineitem_discount_range', count(*)
-  FROM lineitem WHERE l_discount < 0 OR l_discount > 1
+  FROM {lineitem} WHERE l_discount < 0 OR l_discount > 1
   UNION ALL
   SELECT 'lineitem_orderkey_fk', count(*)
-  FROM lineitem LEFT JOIN orders ON l_orderkey = o_orderkey
+  FROM {lineitem} LEFT JOIN {orders} ON l_orderkey = o_orderkey
   WHERE o_orderkey IS NULL
   UNION ALL
   SELECT 'documents_text_nonempty', count(*)
-  FROM documents WHERE text IS NULL OR length(text) = 0
+  FROM {documents} WHERE text IS NULL OR length(text) = 0
 )
 SELECT check_name, n_violations, (n_violations = 0) AS passed
 FROM checks ORDER BY check_name
@@ -75,7 +70,9 @@ FROM checks ORDER BY check_name
 
 @register(
     "dq_constraint_check",
-    oracle=_dq_sql("duckdb"),
+    oracle=_dq_sql("duckdb").format(
+        customer="customer", documents="documents", lineitem="lineitem", orders="orders"
+    ),
     doc="Data-quality constraint suite in one result set: two referential-"
     "integrity checks (broadcast anti-join shape), key uniqueness, value "
     "ranges, non-emptiness — per-check violation counts and pass flags "
@@ -83,8 +80,13 @@ FROM checks ORDER BY check_name
     tags=("quality", "agg"),
 )
 def dq_constraint_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("orders", "customer", "lineitem", "documents"))
-    return spark.sql(_dq_sql("spark"))
+    return spark.sql(
+        _dq_sql("spark"),
+        **{
+            t: load_table(spark, sf_dir, t)
+            for t in ("orders", "customer", "lineitem", "documents")
+        },
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -98,7 +100,7 @@ def _scd2_sql(dialect: str) -> str:
     us = _us(dialect)
     return f"""
 WITH ev AS (
-  SELECT user_id, event_id, {us} AS us, event_type FROM events
+  SELECT user_id, event_id, {us} AS us, event_type FROM {{events}}
 ),
 ordered AS (
   SELECT user_id, event_id, us, event_type,
@@ -126,7 +128,7 @@ ORDER BY user_id, valid_from
 
 @register(
     "merge_scd2",
-    oracle=_scd2_sql("duckdb"),
+    oracle=_scd2_sql("duckdb").format(events="events"),
     doc="Slowly-changing-dimension type-2 build from an event stream: "
     "per-user attribute change points become versioned rows with "
     "[valid_from, valid_to) micros and an is_current flag — lag() detects "
@@ -135,8 +137,7 @@ ORDER BY user_id, valid_from
     tags=("quality", "window", "merge"),
 )
 def merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("events",))
-    return spark.sql(_scd2_sql("spark"))
+    return spark.sql(_scd2_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -173,7 +174,7 @@ def _zscore_sql(dialect: str) -> str:
 WITH ev AS (
   SELECT event_id, user_id, {us} AS us,
     CAST(floor({sat_v} * 1e3) AS BIGINT) AS v3
-  FROM events
+  FROM {{events}}
 ),
 framed AS (
   SELECT event_id, user_id, us, v3,
@@ -192,7 +193,7 @@ ORDER BY user_id, us, event_id
 
 @register(
     "win_moving_zscore",
-    oracle=_zscore_sql("duckdb"),
+    oracle=_zscore_sql("duckdb").format(events="events"),
     doc="Moving-window anomaly detection: z-score of each reading against "
     "the trailing-10 mean/std per user, from integer-exact milli-scaled "
     "frame sums (no float-order drift), |z|>2 flag — the batch twin of a "
@@ -200,8 +201,7 @@ ORDER BY user_id, us, event_id
     tags=("quality", "window", "stats"),
 )
 def win_moving_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("events",))
-    return spark.sql(_zscore_sql("spark"))
+    return spark.sql(_zscore_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -216,7 +216,7 @@ SELECT '{col}' AS column_name, count(*) AS n_rows,
   CAST(min({col}) AS DOUBLE) AS min_v,
   CAST(max({col}) AS DOUBLE) AS max_v,
   CAST(sum(CASE WHEN {col} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls
-FROM lineitem"""
+FROM {{lineitem}}"""
 
 
 def _table_stats_sql(dialect: str) -> str:
@@ -228,7 +228,7 @@ def _table_stats_sql(dialect: str) -> str:
 
 @register(
     "src_table_stats",
-    oracle=_table_stats_sql("duckdb"),
+    oracle=_table_stats_sql("duckdb").format(lineitem="lineitem"),
     doc="ANALYZE-style table statistics: per-column row count, NDV, "
     "min/max, null count in one scan of lineitem — the inputs a "
     "cost-based optimizer consumes (REF-ANALOG; min/max are order-free "
@@ -236,8 +236,8 @@ def _table_stats_sql(dialect: str) -> str:
     tags=("quality", "source", "stats"),
 )
 def src_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem",))
-    return spark.sql(_table_stats_sql("spark"))
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    return spark.sql(_table_stats_sql("spark"), lineitem=lineitem)
 
 
 # ---------------------------------------------------------------------------
@@ -278,7 +278,7 @@ def _drift_hist_sql(dialect: str) -> str:
     return f"""
 WITH ev AS (
   SELECT event_type, {us} AS us, {v6} AS v6
-  FROM events
+  FROM {{events}}
   WHERE value IS NOT NULL AND ts IS NOT NULL AND event_type IS NOT NULL
 ),
 ext AS (
@@ -327,7 +327,7 @@ ORDER BY event_type
 
 @register(
     "dq_distribution_drift",
-    oracle=_drift_sql("duckdb"),
+    oracle=_drift_sql("duckdb").format(events="events"),
     doc="Distribution-drift monitor: events split at the time midpoint, "
     "16 fixed-width value buckets over the global extent, per-event_type "
     "PSI (Σ (p−q)·ln(p/q), Laplace-smoothed) plus the pure-rational "
@@ -339,17 +339,18 @@ ORDER BY event_type
     tags=("quality", "agg", "stats"),
 )
 def dq_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("events",))
-    checkpointed(
+    events = load_table(spark, sf_dir, "events")
+    hist = checkpointed(
         spark, "drift_hist",
-        lambda: spark.sql(_drift_hist_sql("spark")).coalesce(1),
+        lambda: spark.sql(_drift_hist_sql("spark"), events=events).coalesce(1),
         sf_dir,
-    ).createOrReplaceTempView("drift_hist")
+    )
     return spark.sql(
         _drift_sql(
             "spark",
-            hist_ref="SELECT event_type, bkt, c_a, c_b FROM drift_hist",
-        )
+            hist_ref="SELECT event_type, bkt, c_a, c_b FROM {hist}",
+        ),
+        hist=hist,
     )
 
 # ---------------------------------------------------------------------------
@@ -370,7 +371,7 @@ def _freshness_sql(dialect: str) -> str:
     return f"""
 WITH ev AS (
   SELECT event_type, {us} AS us
-  FROM events
+  FROM {{events}}
   WHERE ts IS NOT NULL AND event_type IS NOT NULL
 ),
 ext AS (SELECT max(us) AS gmax FROM ev),
@@ -395,7 +396,7 @@ ORDER BY event_type
 
 @register(
     "dq_freshness",
-    oracle=_freshness_sql("duckdb"),
+    oracle=_freshness_sql("duckdb").format(events="events"),
     doc="Per-stream freshness monitor: last-seen micros, staleness vs "
     "the global high-water mark, trailing-24h volume + hourly rate, "
     "6-hour SLA flag. Two inherent passes (1-row global max broadcast + "
@@ -404,8 +405,8 @@ ORDER BY event_type
     tags=("quality", "agg", "events"),
 )
 def dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("events",))
-    return spark.sql(_freshness_sql("spark"))
+    events = load_table(spark, sf_dir, "events")
+    return spark.sql(_freshness_sql("spark"), events=events)
 
 
 # ---------------------------------------------------------------------------
@@ -426,7 +427,7 @@ def _rowcount_daily_sql(dialect: str) -> str:
     )
     return f"""
 SELECT {day} AS day, CAST(count(*) AS BIGINT) AS c
-FROM events WHERE ts IS NOT NULL
+FROM {{events}} WHERE ts IS NOT NULL
 GROUP BY 1
 """
 
@@ -455,7 +456,7 @@ ORDER BY d.day
 
 @register(
     "dq_rowcount_anomaly",
-    oracle=_rowcount_anomaly_sql("duckdb"),
+    oracle=_rowcount_anomaly_sql("duckdb").format(events="events"),
     doc="Daily-volume anomaly monitor: per-day counts, exact R-7 median "
     "and MAD over the calendar-bounded daily summary (q6 before reuse, "
     "the agg_mad_robust discipline), robust z + 3-sigma-equivalent flag "
@@ -465,14 +466,15 @@ ORDER BY d.day
     tags=("quality", "agg", "stats"),
 )
 def dq_rowcount_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("events",))
-    checkpointed(
+    events = load_table(spark, sf_dir, "events")
+    daily = checkpointed(
         spark, "rc_daily",
-        lambda: spark.sql(_rowcount_daily_sql("spark")).coalesce(1),
+        lambda: spark.sql(_rowcount_daily_sql("spark"), events=events).coalesce(1),
         sf_dir,
-    ).createOrReplaceTempView("rc_daily")
+    )
     return spark.sql(
-        _rowcount_anomaly_sql("spark", daily_ref="SELECT day, c FROM rc_daily")
+        _rowcount_anomaly_sql("spark", daily_ref="SELECT day, c FROM {daily}"),
+        daily=daily,
     )
 
 

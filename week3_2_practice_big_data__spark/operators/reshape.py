@@ -138,13 +138,13 @@ _INSERT_SHIFT = 1_000_000
 _MERGE_SRC_SQL = f"""
   SELECT o_custkey AS m_custkey,
          SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS delta
-  FROM orders
+  FROM {{orders}}
   WHERE o_orderdate >= TIMESTAMP '{_MERGE_CUTOFF}'
   GROUP BY o_custkey
   UNION ALL
   SELECT o_custkey + {_INSERT_SHIFT} AS m_custkey,
          SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS delta
-  FROM orders
+  FROM {{orders}}
   WHERE o_orderdate >= TIMESTAMP '{_MERGE_CUTOFF}' AND o_orderkey % 7 = 0
   GROUP BY o_custkey + {_INSERT_SHIFT}
 """
@@ -165,16 +165,15 @@ ORDER BY custkey
 
 @register(
     "merge_upsert",
-    oracle=_MERGE_ORACLE,
+    oracle=_MERGE_ORACLE.format(orders="orders"),
     doc="Delta-style MERGE INTO (update/keep/insert) as a single full-outer "
     "key join with pre-aggregated source — models the reference's "
     "state-overwrite rerun loop (app.py:105-115) as data; REF-ANALOG.",
     tags=("merge", "join"),
 )
 def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     cust = load_table(spark, sf_dir, "customer")
-    src = spark.sql(_MERGE_SRC_SQL)
+    src = spark.sql(_MERGE_SRC_SQL, orders=load_table(spark, sf_dir, "orders"))
     zero = F.lit(0).cast("decimal(18,2)")
     merged = cust.join(src, cust.c_custkey == src.m_custkey, "full_outer")
     return merged.select(

@@ -33,10 +33,6 @@ from ..registry import register
 _N_BUCKETS = 20
 
 
-def _view(spark: SparkSession, sf_dir: str, name: str) -> None:
-    load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 # ---------------------------------------------------------------------------
 # agg_histogram
 # ---------------------------------------------------------------------------
@@ -49,14 +45,14 @@ def _histogram_sql(dialect: str) -> str:
     # and floor(0/0) would yield NaN buckets; route all rows to bucket 0.
     return f"""
 WITH ext AS (
-  SELECT min(o_totalprice) AS lo, max(o_totalprice) AS hi FROM orders
+  SELECT min(o_totalprice) AS lo, max(o_totalprice) AS hi FROM {{orders}}
 ),
 bucketed AS (
   SELECT CASE WHEN ext.hi = ext.lo THEN CAST(0 AS BIGINT)
          ELSE least(CAST(floor((o_totalprice - ext.lo) / {width}) AS BIGINT),
                     {_N_BUCKETS - 1}) END AS bucket,
     ext.lo, ext.hi
-  FROM orders CROSS JOIN ext
+  FROM {{orders}} CROSS JOIN ext
 )
 SELECT bucket, count(*) AS n,
   {synth.q6(f"lo + bucket * {'((hi - lo) / ' + str(_N_BUCKETS) + 'e0)'}")} AS bucket_lo
@@ -68,7 +64,7 @@ ORDER BY bucket
 
 @register(
     "agg_histogram",
-    oracle=_histogram_sql("duckdb"),
+    oracle=_histogram_sql("duckdb").format(orders="orders"),
     doc="Adaptive equi-width histogram (20 buckets over the observed "
     "min/max of order totals): order-free extremes + one floor() per row, "
     "bit-identical bucketing cross-engine; top bucket closed on the max "
@@ -76,8 +72,8 @@ ORDER BY bucket
     tags=("agg", "stats"),
 )
 def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "orders")
-    return spark.sql(_histogram_sql("spark"))
+    orders = load_table(spark, sf_dir, "orders")
+    return spark.sql(_histogram_sql("spark"), orders=orders)
 
 
 # ---------------------------------------------------------------------------
@@ -123,7 +119,7 @@ def _interpolate_sql(dialect: str) -> str:
 WITH ev AS (
   SELECT event_id, user_id, {us} AS us,
     CASE WHEN event_id % 7 = 0 THEN CAST(NULL AS DOUBLE) ELSE value END AS v
-  FROM events
+  FROM {{events}}
 ),
 ctx AS (
   SELECT event_id, user_id, us, v,
@@ -146,7 +142,7 @@ ORDER BY user_id, us, event_id
 
 @register(
     "win_interpolate_gaps",
-    oracle=_interpolate_sql("duckdb"),
+    oracle=_interpolate_sql("duckdb").format(events="events"),
     doc="Time-series gap filling: every 7th reading masked to NULL, then "
     "linearly interpolated between the nearest non-null neighbors per user "
     "(IGNORE NULLS frames carry neighbor value AND its event time); edges "
@@ -154,8 +150,8 @@ ORDER BY user_id, us, event_id
     tags=("window", "stats", "timeseries"),
 )
 def win_interpolate_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
-    return spark.sql(_interpolate_sql("spark"))
+    events = load_table(spark, sf_dir, "events")
+    return spark.sql(_interpolate_sql("spark"), events=events)
 
 
 # ---------------------------------------------------------------------------
@@ -184,7 +180,7 @@ WITH m AS (
     CAST(SUM({dx} * {dx}) AS DOUBLE) AS sxx,
     CAST(SUM({dy} * {dy}) AS DOUBLE) AS syy,
     CAST(SUM({dx} * {dy}) AS DOUBLE) AS sxy
-  FROM lineitem GROUP BY l_returnflag
+  FROM {{lineitem}} GROUP BY l_returnflag
 )
 SELECT l_returnflag,
   CASE WHEN n * sxx - sx * sx = 0e0 OR n * syy - sy * sy = 0e0
@@ -219,7 +215,7 @@ def _skew_kurt_sql(dialect: str) -> str:
     CAST(sum({q} * {q}) AS DOUBLE) AS s2,
     CAST(sum({q} * {q} * {q}) AS DOUBLE) AS s3,
     CAST(sum({q} * {q} * {q} * {q}) AS DOUBLE) AS s4
-  FROM lineitem GROUP BY l_returnflag"""
+  FROM {{lineitem}} GROUP BY l_returnflag"""
     mean = "(s1 / n)"
     m2 = f"(s2 / n - {mean} * {mean})"
     m3 = f"(s3 / n - 3e0 * {mean} * s2 / n + 2e0 * {mean} * {mean} * {mean})"
@@ -241,7 +237,7 @@ FROM m ORDER BY l_returnflag
 
 @register(
     "agg_skew_kurt",
-    oracle=_skew_kurt_sql("duckdb"),
+    oracle=_skew_kurt_sql("duckdb").format(lineitem="lineitem"),
     doc="Population skewness and excess kurtosis per group from exact "
     "integer power sums (Σx..Σx⁴ are BIGINT-exact for the integer-valued "
     "quantity) — order-free higher-moment statistics in one pass, the "
@@ -250,13 +246,13 @@ FROM m ORDER BY l_returnflag
     tags=("agg", "stats"),
 )
 def agg_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "lineitem")
-    return spark.sql(_skew_kurt_sql("spark"))
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    return spark.sql(_skew_kurt_sql("spark"), lineitem=lineitem)
 
 
 @register(
     "ml_linreg_closed",
-    oracle=_linreg_sql("duckdb"),
+    oracle=_linreg_sql("duckdb").format(lineitem="lineitem"),
     doc="Closed-form simple linear regression (price ~ quantity) per "
     "return flag from exact decimal moments: slope, intercept, R², and a "
     "point prediction — distributed model fitting as one 6-number "
@@ -264,8 +260,8 @@ def agg_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "stats", "ml"),
 )
 def ml_linreg_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "lineitem")
-    return spark.sql(_linreg_sql("spark"))
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    return spark.sql(_linreg_sql("spark"), lineitem=lineitem)
 
 
 # ---------------------------------------------------------------------------
@@ -291,7 +287,7 @@ def _market_basket_sql(dialect: str) -> str:
     lift = f"({conf}) / (ib.n_orders / (t.n + 0e0))"
     return f"""
 WITH baskets AS {mat}(
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+  SELECT DISTINCT l_orderkey, l_partkey FROM {{lineitem}}
 ),
 item_counts AS {mat}(
   SELECT l_partkey, count(*) AS n_orders FROM baskets GROUP BY l_partkey
@@ -318,7 +314,7 @@ LIMIT 25
 
 @register(
     "agg_market_basket",
-    oracle=_market_basket_sql("duckdb"),
+    oracle=_market_basket_sql("duckdb").format(lineitem="lineitem"),
     doc="Market-basket association mining: part pairs co-occurring in an "
     "order with support / confidence / lift, top-25 by lift. The pair "
     "join is keyed on orderkey (bounded by basket size), item counts "
@@ -327,8 +323,8 @@ LIMIT 25
     tags=("agg", "join", "stats"),
 )
 def agg_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "lineitem")
-    return spark.sql(_market_basket_sql("spark"))
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    return spark.sql(_market_basket_sql("spark"), lineitem=lineitem)
 
 
 # ---------------------------------------------------------------------------
@@ -360,7 +356,7 @@ WITH ev AS (
   -- 20·(b·10³)² ≤ 9.2×10¹⁸ ⇒ b ≤ 6.8×10⁵; 6×10⁵ leaves margin.
   SELECT event_id, user_id, {us} AS us,
     CAST(floor({synth.sat("value", 6e5)} * 1e3) AS BIGINT) AS x
-  FROM events
+  FROM {{events}}
 ),
 paired AS (
   SELECT event_id, user_id, us, x,
@@ -387,7 +383,7 @@ ORDER BY user_id, us, event_id
 
 @register(
     "win_rolling_corr",
-    oracle=_rolling_corr_sql("duckdb"),
+    oracle=_rolling_corr_sql("duckdb").format(events="events"),
     doc="Rolling autocorrelation per user: Pearson correlation of each "
     "reading with its predecessor over the trailing 20 pairs, from "
     "integer-exact milli-scaled frame sums (no float-order drift; +1 "
@@ -396,8 +392,8 @@ ORDER BY user_id, us, event_id
     tags=("window", "stats", "timeseries"),
 )
 def win_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
-    return spark.sql(_rolling_corr_sql("spark"))
+    events = load_table(spark, sf_dir, "events")
+    return spark.sql(_rolling_corr_sql("spark"), events=events)
 
 
 # ---------------------------------------------------------------------------
@@ -415,7 +411,7 @@ def _gini_sql(dialect: str) -> str:
 WITH cust AS (
   SELECT c_mktsegment, o_custkey,
     CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents
-  FROM orders JOIN customer ON c_custkey = o_custkey
+  FROM {{orders}} JOIN {{customer}} ON c_custkey = o_custkey
   GROUP BY c_mktsegment, o_custkey
 ),
 ranked AS (
@@ -441,7 +437,7 @@ FROM m ORDER BY c_mktsegment
 
 @register(
     "agg_gini_revenue",
-    oracle=_gini_sql("duckdb"),
+    oracle=_gini_sql("duckdb").format(customer="customer", orders="orders"),
     doc="Gini coefficient of per-customer revenue concentration per market "
     "segment, rank-weighted formulation with DECIMAL-exact cent sums and "
     "deterministic tie ranking — inequality metrics as one ranked window "
@@ -449,9 +445,11 @@ FROM m ORDER BY c_mktsegment
     tags=("agg", "stats"),
 )
 def agg_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "orders")
-    _view(spark, sf_dir, "customer")
-    return spark.sql(_gini_sql("spark"))
+    return spark.sql(
+        _gini_sql("spark"),
+        orders=load_table(spark, sf_dir, "orders"),
+        customer=load_table(spark, sf_dir, "customer"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -471,7 +469,7 @@ def _ohlc_sql(dialect: str) -> str:
 WITH ev AS (
   SELECT CAST(floor({us} / {_BAR_US}e0) AS BIGINT) AS bar,
     {us} AS us, event_id, value
-  FROM events
+  FROM {{events}}
 ),
 rn AS (
   SELECT bar, value,
@@ -492,7 +490,7 @@ ORDER BY bar
 
 @register(
     "agg_ohlc_bars",
-    oracle=_ohlc_sql("duckdb"),
+    oracle=_ohlc_sql("duckdb").format(events="events"),
     doc="30-minute OHLC downsampling bars: open/close via deterministic "
     "(ts, event_id)-ordered row_numbers folded into conditional "
     "aggregates, high/low as order-free extremes — one bucket-keyed "
@@ -500,8 +498,7 @@ ORDER BY bar
     tags=("agg", "timeseries"),
 )
 def agg_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
-    return spark.sql(_ohlc_sql("spark"))
+    return spark.sql(_ohlc_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -523,11 +520,11 @@ def _mad_sql(dialect: str) -> str:
     mad = synth.q6(_pct(dialect, "abs(d.x - d.m)", "0.5"))
     return f"""
 WITH med AS (
-  SELECT l_returnflag, {med} AS m FROM lineitem GROUP BY l_returnflag
+  SELECT l_returnflag, {med} AS m FROM {{lineitem}} GROUP BY l_returnflag
 ),
 dev AS (
   SELECT l.l_returnflag, l.l_extendedprice AS x, med.m
-  FROM lineitem l JOIN med ON l.l_returnflag = med.l_returnflag
+  FROM {{lineitem}} l JOIN med ON l.l_returnflag = med.l_returnflag
 ),
 stats AS (
   SELECT d.l_returnflag, d.m, {mad} AS mad
@@ -546,7 +543,7 @@ ORDER BY d.l_returnflag
 
 @register(
     "agg_mad_robust",
-    oracle=_mad_sql("duckdb"),
+    oracle=_mad_sql("duckdb").format(lineitem="lineitem"),
     doc="Median absolute deviation per group with outlier counting "
     "(|x − median| > 3·1.4826·MAD, plus the always-populated beyond-1-MAD "
     "count so the threshold comparison is exercised at every scale — the "
@@ -557,8 +554,7 @@ ORDER BY d.l_returnflag
     tags=("agg", "stats", "quality"),
 )
 def agg_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "lineitem")
-    return spark.sql(_mad_sql("spark"))
+    return spark.sql(_mad_sql("spark"), lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 # ---------------------------------------------------------------------------
@@ -577,7 +573,7 @@ def _entropy_sql(dialect: str) -> str:
     return f"""
 WITH type_counts AS (
   SELECT user_id, event_type, count(*) AS c
-  FROM events GROUP BY user_id, event_type
+  FROM {{events}} GROUP BY user_id, event_type
 ),
 totals AS (
   SELECT user_id, CAST(sum(c) AS BIGINT) AS n, count(*) AS n_types
@@ -592,7 +588,7 @@ ORDER BY t.user_id
 
 @register(
     "agg_entropy",
-    oracle=_entropy_sql("duckdb"),
+    oracle=_entropy_sql("duckdb").format(events="events"),
     doc="Shannon entropy of each user's event-type distribution from exact "
     "integer counts (−Σ p·ln p, q6-quantized ln) — the behavioral-"
     "diversity feature; two bounded-key aggregations, histogram rows "
@@ -600,8 +596,7 @@ ORDER BY t.user_id
     tags=("agg", "stats"),
 )
 def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
-    return spark.sql(_entropy_sql("spark"))
+    return spark.sql(_entropy_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -636,7 +631,7 @@ def _naive_bayes_sql(dialect: str, tok_ref: str | None = None) -> str:
 WITH tok AS ({tok_ref or tokens_sql(dialect)}),
 labeled AS (
   SELECT t.doc_id, t.token, d.lang FROM tok t
-  JOIN documents d ON t.doc_id = d.doc_id
+  JOIN {{documents}} d ON t.doc_id = d.doc_id
 ),
 cnt AS (
   SELECT lang, token, count(*) AS c FROM labeled GROUP BY lang, token
@@ -647,9 +642,9 @@ ltot AS (
 vocab AS (SELECT CAST(count(DISTINCT token) AS BIGINT) AS v FROM tok),
 prior AS (
   SELECT lang,
-    CAST(floor(ln(count(*) / (SELECT count(*) + 0e0 FROM documents))
+    CAST(floor(ln(count(*) / (SELECT count(*) + 0e0 FROM {{documents}}))
                * 1e6 + 0.5e0) AS BIGINT) AS lp6
-  FROM documents GROUP BY lang
+  FROM {{documents}} GROUP BY lang
 ),
 ll AS (
   SELECT lt.lang, tk.token,
@@ -678,7 +673,7 @@ SELECT d.lang, count(*) AS n_docs,
     AS n_correct,
   {synth.q6("sum(CASE WHEN p.pred = d.lang THEN 1e0 ELSE 0e0 END) / count(*)")}
     AS accuracy
-FROM documents d JOIN pred p ON d.doc_id = p.doc_id
+FROM {{documents}} d JOIN pred p ON d.doc_id = p.doc_id
 GROUP BY d.lang
 ORDER BY d.lang
 """
@@ -686,7 +681,7 @@ ORDER BY d.lang
 
 @register(
     "ml_naive_bayes",
-    oracle=_naive_bayes_sql("duckdb"),
+    oracle=_naive_bayes_sql("duckdb").format(documents="documents"),
     doc="Multinomial naive Bayes trained and evaluated in one plan: add-1 "
     "per-language token log-likelihoods + log priors, per-doc argmax "
     "(q6-quantized score, lang tie-break → deterministic), per-language "
@@ -698,11 +693,12 @@ ORDER BY d.lang
 def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared corpus token materialization (functions.text) — one
     # tokenize per (session, sf) across the whole text family
-    from ..functions.text import cached_tokens_ref
+    from ..functions.text import TOK_REF, cached_tokens
 
-    _view(spark, sf_dir, "documents")
     return spark.sql(
-        _naive_bayes_sql("spark", tok_ref=cached_tokens_ref(spark, sf_dir))
+        _naive_bayes_sql("spark", tok_ref=TOK_REF),
+        tok=cached_tokens(spark, sf_dir),
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -738,7 +734,7 @@ WITH m AS (
     CAST(sum(CASE WHEN NOT ({hi}) THEN 1 ELSE 0 END) AS DOUBLE) AS nb,
     CAST(sum(CASE WHEN NOT ({hi}) THEN {d} END) AS DOUBLE) AS sb,
     CAST(sum(CASE WHEN NOT ({hi}) THEN {d} * {d} END) AS DOUBLE) AS sxb
-  FROM orders GROUP BY o_orderstatus
+  FROM {{orders}} GROUP BY o_orderstatus
 )
 SELECT o_orderstatus,
   CAST(na AS BIGINT) AS n_high, CAST(nb AS BIGINT) AS n_normal,
@@ -754,7 +750,7 @@ ORDER BY o_orderstatus
 
 @register(
     "agg_t_test",
-    oracle=_t_test_sql("duckdb"),
+    oracle=_t_test_sql("duckdb").format(orders="orders"),
     doc="Welch two-sample t-test per order status (high- vs normal-priority "
     "order values) from exact decimal moments — t statistic + "
     "Welch–Satterthwaite dof in one grouped aggregation; the distributed "
@@ -762,8 +758,7 @@ ORDER BY o_orderstatus
     tags=("agg", "stats"),
 )
 def agg_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "orders")
-    return spark.sql(_t_test_sql("spark"))
+    return spark.sql(_t_test_sql("spark"), orders=load_table(spark, sf_dir, "orders"))
 
 
 # ---------------------------------------------------------------------------
@@ -785,7 +780,7 @@ def _chi2_sql(dialect: str) -> str:
     return f"""
 WITH obs AS (
   SELECT event_type, {dow} AS dow, count(*) AS o
-  FROM events GROUP BY event_type, {dow}
+  FROM {{events}} GROUP BY event_type, {dow}
 ),
 rt AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS r FROM obs GROUP BY event_type),
 ct AS (SELECT dow, CAST(sum(o) AS BIGINT) AS c FROM obs GROUP BY dow),
@@ -810,7 +805,7 @@ GROUP BY dims.nr, dims.nc
 
 @register(
     "agg_chi2_independence",
-    oracle=_chi2_sql("duckdb"),
+    oracle=_chi2_sql("duckdb").format(events="events"),
     doc="Chi-square independence test (event_type × weekday): exact "
     "observed counts, expected = row·col/N, statistic summed over the "
     "bounded contingency table — the categorical hypothesis test beside "
@@ -818,8 +813,7 @@ GROUP BY dims.nr, dims.nc
     tags=("agg", "stats"),
 )
 def agg_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
-    return spark.sql(_chi2_sql("spark"))
+    return spark.sql(_chi2_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -857,7 +851,7 @@ def _bootstrap_sql(dialect: str) -> str:
     return f"""
 WITH weighted AS (
   SELECT rep.r, {w} AS w, {d} AS x
-  FROM orders CROSS JOIN __SERIES__ rep
+  FROM {{orders}} CROSS JOIN __SERIES__ rep
 ),
 means AS (
   SELECT r, CAST(sum(w * x) AS DOUBLE) / sum(w) AS m
@@ -869,7 +863,7 @@ ranked AS (
   FROM means
 ),
 full_mean AS (
-  SELECT CAST(sum({d}) AS DOUBLE) / count(*) AS fm FROM orders
+  SELECT CAST(sum({d}) AS DOUBLE) / count(*) AS fm FROM {{orders}}
 )
 SELECT
   CAST(ranked.nr AS BIGINT) AS n_replicates,
@@ -889,7 +883,7 @@ def _bootstrap_for(dialect: str) -> str:
 
 @register(
     "agg_bootstrap_poisson",
-    oracle=_bootstrap_for("duckdb"),
+    oracle=_bootstrap_for("duckdb").format(orders="orders"),
     doc="Poisson bootstrap CI for the mean order value: per-(row, "
     "replicate) Poisson(1) weights from the deterministic LCG inverse-CDF "
     "ladder — the map-side single-pass bootstrap that scales (no "
@@ -898,8 +892,8 @@ def _bootstrap_for(dialect: str) -> str:
     tags=("agg", "stats", "sampling"),
 )
 def agg_bootstrap_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "orders")
-    return spark.sql(_bootstrap_for("spark"))
+    orders = load_table(spark, sf_dir, "orders")
+    return spark.sql(_bootstrap_for("spark"), orders=orders)
 
 
 # ---------------------------------------------------------------------------
@@ -924,7 +918,7 @@ WITH g AS (
     CAST(count(*) AS DOUBLE) AS n,
     CAST(sum({d}) AS DOUBLE) AS sx,
     CAST(sum({d} * {d}) AS DOUBLE) AS sxx
-  FROM orders GROUP BY o_orderpriority
+  FROM {{orders}} GROUP BY o_orderpriority
 ),
 tot AS (
   SELECT sum(n) AS nn, sum(sx) AS tsx, sum(sxx) AS tsxx, count(*) AS k
@@ -949,7 +943,7 @@ FROM ss
 
 @register(
     "agg_anova_oneway",
-    oracle=_anova_sql("duckdb"),
+    oracle=_anova_sql("duckdb").format(orders="orders"),
     doc="One-way ANOVA F-test (order value across priorities) from exact "
     "decimal group moments: scale-invariant F statistic and eta-squared "
     "in one grouped aggregation + one scalar combine — the "
@@ -957,8 +951,7 @@ FROM ss
     tags=("agg", "stats"),
 )
 def agg_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "orders")
-    return spark.sql(_anova_sql("spark"))
+    return spark.sql(_anova_sql("spark"), orders=load_table(spark, sf_dir, "orders"))
 
 # ---------------------------------------------------------------------------
 # ml_knn_classify — k-nearest-neighbor classification with leave-one-out
@@ -1034,7 +1027,7 @@ ORDER BY true_label, pred_label
 
 @register(
     "ml_knn_classify",
-    oracle=_knn_classify_sql("duckdb"),
+    oracle=_knn_classify_sql("duckdb").format(embeddings="embeddings"),
     doc="kNN classification with leave-one-out eval: every 50th vector "
     "queries its top-5 cosine neighbors (shared checkpointed norm "
     "relation, fixed-order dot folds), majority vote with deterministic "
@@ -1047,13 +1040,12 @@ ORDER BY true_label, pred_label
 def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.similarity import _cached_emb_norm
 
-    _view(spark, sf_dir, "embeddings")
-    _cached_emb_norm(spark, sf_dir).createOrReplaceTempView("embeddings_norm")
     return spark.sql(
         _knn_classify_sql(
             "spark",
-            emb_ref="SELECT vec_id, label, embedding, nrm FROM embeddings_norm",
-        )
+            emb_ref="SELECT vec_id, label, embedding, nrm FROM {emb}",
+        ),
+        emb=_cached_emb_norm(spark, sf_dir),
     )
 
 # ---------------------------------------------------------------------------
@@ -1082,16 +1074,14 @@ _STUMP_VB = 16
 
 def _cached_stump_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 16×24 (value-bucket, hour) class histogram materialized once
-    per (session, sf) as view `stump_hist` — the single corpus pass
-    shared by ml_decision_stump and ml_gbt_boost2 (r8)."""
-    _view(spark, sf_dir, "events")
-    df = checkpointed(
+    per (session, sf) — the single corpus pass shared by
+    ml_decision_stump and ml_gbt_boost2 (r8)."""
+    events = load_table(spark, sf_dir, "events")
+    return checkpointed(
         spark, "stump_hist",
-        lambda: spark.sql(_stump_hist_sql("spark")).coalesce(1),
+        lambda: spark.sql(_stump_hist_sql("spark"), events=events).coalesce(1),
         sf_dir,
     )
-    df.createOrReplaceTempView("stump_hist")
-    return df
 
 
 def _stump_hist_sql(dialect: str) -> str:
@@ -1110,7 +1100,7 @@ WITH ev AS (
   SELECT {v6} AS v6,
     {hr} AS hr,
     CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-  FROM events
+  FROM {{events}}
   WHERE value IS NOT NULL AND ts IS NOT NULL AND event_type IS NOT NULL
 ),
 ext AS (SELECT min(v6) AS mn6, max(v6) AS mx6 FROM ev)
@@ -1192,7 +1182,7 @@ ORDER BY fid, bkt
 
 @register(
     "ml_decision_stump",
-    oracle=_stump_sql("duckdb"),
+    oracle=_stump_sql("duckdb").format(events="events"),
     doc="Histogram-based decision-tree node training (the PLANET pattern): "
     "one events pass builds the checkpointed 16x24 (value-bucket, hour) "
     "class histogram; marginals, prefix sums, and information gain of "
@@ -1203,12 +1193,12 @@ ORDER BY fid, bkt
     tags=("ml", "agg", "stats"),
 )
 def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _cached_stump_hist(spark, sf_dir)
     return spark.sql(
         _stump_sql(
             "spark",
-            hist_ref="SELECT vbkt, hr, n, npos, mn6, mx6 FROM stump_hist",
-        )
+            hist_ref="SELECT vbkt, hr, n, npos, mn6, mx6 FROM {hist}",
+        ),
+        hist=_cached_stump_hist(spark, sf_dir),
     )
 
 # ---------------------------------------------------------------------------
@@ -1257,7 +1247,7 @@ def _lift_gains_sql(dialect: str) -> str:
 WITH ev AS (
   SELECT 2 * {v6} + 40000000 * ({hr}) AS z_u,
     CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-  FROM events
+  FROM {{events}}
   WHERE value IS NOT NULL AND ts IS NOT NULL AND event_type IS NOT NULL
 ),
 ext AS (SELECT min(z_u) AS mn, max(z_u) AS mx FROM ev),
@@ -1292,7 +1282,7 @@ ORDER BY bkt DESC
 
 @register(
     "ml_lift_gains",
-    oracle=_lift_gains_sql("duckdb"),
+    oracle=_lift_gains_sql("duckdb").format(events="events"),
     doc="Model evaluation: lift/gains table + bucketed trapezoidal "
     "ROC-AUC for an all-BIGINT linear propensity score against observed "
     "purchases — 16 exact-integer score buckets, conversion rate, lift "
@@ -1303,8 +1293,8 @@ ORDER BY bkt DESC
     tags=("ml", "agg", "stats"),
 )
 def ml_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir, "events")
-    return spark.sql(_lift_gains_sql("spark"))
+    events = load_table(spark, sf_dir, "events")
+    return spark.sql(_lift_gains_sql("spark"), events=events)
 
 
 # ---------------------------------------------------------------------------
@@ -1506,7 +1496,7 @@ ORDER BY round
 
 @register(
     "ml_gbt_boost2",
-    oracle=_gbt_boost_sql("duckdb"),
+    oracle=_gbt_boost_sql("duckdb").format(events="events"),
     doc="Two rounds of least-squares gradient boosting (shrinkage 1/2) on "
     "the shared PLANET stump histogram: base score = mean(y), each round "
     "fits the best SSE-reducing stump to the CURRENT residuals — round-1 "
@@ -1519,12 +1509,12 @@ ORDER BY round
     tags=("ml", "iterative", "agg"),
 )
 def ml_gbt_boost2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _cached_stump_hist(spark, sf_dir)
+    hist = _cached_stump_hist(spark, sf_dir)
     # Overflow guard (ADVICE r8): sum(s2_num) ~ nt⁴ crosses
     # DECIMAL(38,0) near nt ≈ 10^9.5 and non-ANSI Spark would NULL it
     # silently. The check reads the 384-row cached histogram summary,
     # not the corpus.
-    nt = spark.sql("SELECT sum(n) AS nt FROM stump_hist").collect()[0][0]
+    nt = spark.sql("SELECT sum(n) AS nt FROM {hist}", hist=hist).collect()[0][0]
     if nt is not None and int(nt) > _GBT_NT_CEILING:
         raise ValueError(
             f"ml_gbt_boost2: event count {nt} exceeds the DECIMAL(38,0) "
@@ -1535,6 +1525,7 @@ def ml_gbt_boost2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         _gbt_boost_sql(
             "spark",
-            hist_ref="SELECT vbkt, hr, n, npos, mn6, mx6 FROM stump_hist",
-        )
+            hist_ref="SELECT vbkt, hr, n, npos, mn6, mx6 FROM {hist}",
+        ),
+        hist=hist,
     )

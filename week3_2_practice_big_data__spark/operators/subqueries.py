@@ -20,15 +20,12 @@ Scale notes:
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..io import load_table
 from ..registry import register
-
-
-def _views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...]) -> None:
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 # ---------------------------------------------------------------------------
@@ -39,15 +36,15 @@ def _views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...]) -> None:
 
 _SCALAR_SQL = """
 SELECT p_partkey, p_name, p_retailprice
-FROM part
-WHERE p_retailprice > (SELECT max(p_retailprice) FROM part) * 0.5
+FROM {part}
+WHERE p_retailprice > (SELECT max(p_retailprice) FROM {part}) * 0.5
 ORDER BY p_partkey
 """
 
 
 @register(
     "qry_scalar_subquery",
-    oracle=_SCALAR_SQL,
+    oracle=_SCALAR_SQL.format(part="part"),
     doc="Uncorrelated scalar subquery as a filter threshold (parts above "
     "half the max retail price). Catalyst evaluates the subquery once and "
     "folds it into the scan predicate — one extra job, no join "
@@ -55,8 +52,7 @@ ORDER BY p_partkey
     tags=("subquery",),
 )
 def qry_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("part",))
-    return spark.sql(_SCALAR_SQL)
+    return spark.sql(_SCALAR_SQL, part=load_table(spark, sf_dir, "part"))
 
 
 # ---------------------------------------------------------------------------
@@ -68,23 +64,25 @@ def qry_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CORR_SCALAR_SQL = """
 SELECT c_custkey, c_name,
-  (SELECT count(*) FROM orders o WHERE o.o_custkey = c.c_custkey) AS n_orders
-FROM customer c
+  (SELECT count(*) FROM {orders} o WHERE o.o_custkey = c.c_custkey) AS n_orders
+FROM {customer} c
 ORDER BY c_custkey
 """
 
 
 @register(
     "qry_correlated_scalar",
-    oracle=_CORR_SCALAR_SQL,
+    oracle=_CORR_SCALAR_SQL.format(customer="customer", orders="orders"),
     doc="Correlated scalar COUNT subquery per customer, decorrelated by "
     "Catalyst into one grouped aggregate + left outer join (zero-order "
     "customers get 0, not NULL, per ANSI COUNT semantics) (REF-ANALOG).",
     tags=("subquery",),
 )
 def qry_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("customer", "orders"))
-    return spark.sql(_CORR_SCALAR_SQL)
+    return spark.sql(
+        _CORR_SCALAR_SQL,
+        **{t: load_table(spark, sf_dir, t) for t in ("customer", "orders")},
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -94,12 +92,12 @@ def qry_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _EXISTS_SQL = """
 SELECT c_custkey, c_name
-FROM customer c
+FROM {customer} c
 WHERE EXISTS (
-    SELECT 1 FROM orders o
+    SELECT 1 FROM {orders} o
     WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
   AND NOT EXISTS (
-    SELECT 1 FROM orders o2
+    SELECT 1 FROM {orders} o2
     WHERE o2.o_custkey = c.c_custkey AND o2.o_orderstatus = 'P')
 ORDER BY c_custkey
 """
@@ -107,15 +105,17 @@ ORDER BY c_custkey
 
 @register(
     "qry_exists_correlated",
-    oracle=_EXISTS_SQL,
+    oracle=_EXISTS_SQL.format(customer="customer", orders="orders"),
     doc="Correlated EXISTS + NOT EXISTS combined: planned as a left-semi "
     "join chained with a left-anti join on c_custkey — both shuffle once "
     "on the key and carry only the key column of orders (REF-ANALOG).",
     tags=("subquery",),
 )
 def qry_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("customer", "orders"))
-    return spark.sql(_EXISTS_SQL)
+    return spark.sql(
+        _EXISTS_SQL,
+        **{t: load_table(spark, sf_dir, t) for t in ("customer", "orders")},
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -128,28 +128,28 @@ def qry_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _IN_NULL_SQL = """
 SELECT
-  (SELECT count(*) FROM customer
+  (SELECT count(*) FROM {customer}
    WHERE c_custkey NOT IN (
-     SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'))
+     SELECT o_custkey FROM {orders} WHERE o_orderstatus = 'F'))
     AS n_not_in_clean,
-  (SELECT count(*) FROM customer
+  (SELECT count(*) FROM {customer}
    WHERE c_custkey NOT IN (
      SELECT nullif(o_custkey,
-                   (SELECT min(o_custkey) FROM orders WHERE o_orderstatus = 'F'))
-     FROM orders WHERE o_orderstatus = 'F'))
+                   (SELECT min(o_custkey) FROM {orders} WHERE o_orderstatus = 'F'))
+     FROM {orders} WHERE o_orderstatus = 'F'))
     AS n_not_in_with_null,
-  (SELECT count(*) FROM customer
+  (SELECT count(*) FROM {customer}
    WHERE c_custkey IN (
      SELECT nullif(o_custkey,
-                   (SELECT min(o_custkey) FROM orders WHERE o_orderstatus = 'F'))
-     FROM orders WHERE o_orderstatus = 'F'))
+                   (SELECT min(o_custkey) FROM {orders} WHERE o_orderstatus = 'F'))
+     FROM {orders} WHERE o_orderstatus = 'F'))
     AS n_in_with_null
 """
 
 
 @register(
     "qry_in_null_semantics",
-    oracle=_IN_NULL_SQL,
+    oracle=_IN_NULL_SQL.format(customer="customer", orders="orders"),
     doc="ANSI three-valued logic of IN/NOT IN with a NULL in the subquery "
     "list: NOT IN collapses to 0 rows once any list element is NULL, while "
     "IN keeps matching non-null elements. Both engines must agree exactly "
@@ -157,8 +157,10 @@ SELECT
     tags=("subquery",),
 )
 def qry_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("customer", "orders"))
-    return spark.sql(_IN_NULL_SQL)
+    return spark.sql(
+        _IN_NULL_SQL,
+        **{t: load_table(spark, sf_dir, t) for t in ("customer", "orders")},
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -169,9 +171,9 @@ def qry_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LATERAL_SQL = """
 SELECT c.c_custkey, l.o_orderkey, l.o_totalprice
-FROM customer c, LATERAL (
+FROM {customer} c, LATERAL (
   SELECT o_orderkey, o_totalprice
-  FROM orders o
+  FROM {orders} o
   WHERE o.o_custkey = c.c_custkey
   ORDER BY o_totalprice DESC, o_orderkey
   LIMIT 2) l
@@ -181,7 +183,7 @@ ORDER BY c.c_custkey, l.o_orderkey
 
 @register(
     "qry_lateral_topk",
-    oracle=_LATERAL_SQL,
+    oracle=_LATERAL_SQL.format(customer="customer", orders="orders"),
     doc="LATERAL correlated derived table (top-2 orders per customer by "
     "total price, orderkey tie-break). Inner join semantics: zero-order "
     "customers drop out. Scale path for the same semantic is "
@@ -189,8 +191,10 @@ ORDER BY c.c_custkey, l.o_orderkey
     tags=("subquery", "join"),
 )
 def qry_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("customer", "orders"))
-    return spark.sql(_LATERAL_SQL)
+    return spark.sql(
+        _LATERAL_SQL,
+        **{t: load_table(spark, sf_dir, t) for t in ("customer", "orders")},
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -206,7 +210,7 @@ def _recursive_sql(dialect: str) -> str:
     div = "node DIV 2" if dialect == "spark" else "node // 2"
     return f"""
 WITH RECURSIVE walk(node, depth) AS (
-  SELECT p_partkey, CAST(0 AS INT) FROM part
+  SELECT p_partkey, CAST(0 AS INT) FROM {{part}}
   UNION ALL
   SELECT {div}, depth + 1 FROM walk WHERE node > 1
 )
@@ -219,7 +223,7 @@ ORDER BY depth
 
 @register(
     "qry_recursive_cte",
-    oracle=_recursive_sql("duckdb"),
+    oracle=_recursive_sql("duckdb").format(part="part"),
     doc="WITH RECURSIVE (Spark 4 recursive CTE): halving walk from every "
     "part key to the root — per-depth node counts and exact BIGINT key "
     "sums. Level-synchronous execution, depth bounded by log2(max key) "
@@ -227,7 +231,6 @@ ORDER BY depth
     tags=("subquery", "iterative"),
 )
 def qry_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("part",))
     # The walk materializes ~n·log2(max key) rows in total, which is the
     # genuine work of the query — Spark's default 1M-row recursion safety
     # valve trips at sf1 (200k parts × ~18 levels ≈ 3.6M rows; found by
@@ -237,7 +240,7 @@ def qry_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver's later collect — size it session-wide to the engine's
     # bench envelope (sf100: 20M parts × ~25 levels ≈ 5e8).
     spark.conf.set("spark.sql.cteRecursionRowLimit", str(1_000_000_000))
-    return spark.sql(_recursive_sql("spark"))
+    return spark.sql(_recursive_sql("spark"), part=load_table(spark, sf_dir, "part"))
 
 
 # ---------------------------------------------------------------------------
@@ -254,7 +257,7 @@ def qry_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PIPE_CUTOFF = "1998-09-02 00:00:00"
 
 _PIPE_SPARK = f"""
-FROM lineitem
+FROM {{lineitem}}
 |> WHERE l_shipdate <= TIMESTAMP '{_PIPE_CUTOFF}'
 |> AGGREGATE
   CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
@@ -288,8 +291,7 @@ def _pipe_oracle() -> str:
     tags=("subquery", "function"),
 )
 def qry_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem",))
-    return spark.sql(_PIPE_SPARK)
+    return spark.sql(_PIPE_SPARK, lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 # ---------------------------------------------------------------------------
@@ -328,12 +330,12 @@ ORDER BY l_returnflag
     tags=("subquery", "function"),
 )
 def qry_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem",))
+    lineitem = load_table(spark, sf_dir, "lineitem")
     body = """
 SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
   CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
            * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS rev
-FROM lineitem
+FROM {{lineitem}}
 WHERE l_shipdate > {cut} AND l_discount >= {d}
 GROUP BY l_returnflag
 ORDER BY l_returnflag
@@ -341,10 +343,12 @@ ORDER BY l_returnflag
     named = spark.sql(
         body.format(cut="CAST(:cutoff AS TIMESTAMP)", d=":mind"),
         args={"cutoff": _PARAM_CUTOFF, "mind": _PARAM_DISC},
+        lineitem=lineitem,
     )
     positional = spark.sql(
         body.format(cut="CAST(? AS TIMESTAMP)", d="?"),
         args=[_PARAM_CUTOFF, _PARAM_DISC],
+        lineitem=lineitem,
     )
     # both binding forms must agree exactly before either is returned
     n = named.collect()
@@ -372,7 +376,7 @@ SELECT * EXCEPT (dropme) FROM (
     CAST(count(*) AS BIGINT) AS n,
     CAST(max(o_orderkey) AS BIGINT) AS max_key,
     'x' AS dropme
-  FROM orders
+  FROM {orders}
   WHERE o_orderkey % 3 = 0
   GROUP BY ALL
 ) t
@@ -382,7 +386,7 @@ ORDER BY ALL
 SELECT o_orderpriority, o_orderstatus,
   CAST(count(*) AS BIGINT) AS n,
   CAST(max(o_orderkey) AS BIGINT) AS max_key
-FROM orders
+FROM {orders}
 WHERE o_orderkey % 3 = 0
 GROUP BY o_orderpriority, o_orderstatus
 ORDER BY o_orderpriority, o_orderstatus, n, max_key
@@ -391,7 +395,7 @@ ORDER BY o_orderpriority, o_orderstatus, n, max_key
 
 @register(
     "qry_modern_sql_sugar",
-    oracle=_sugar_sql("duckdb"),
+    oracle=_sugar_sql("duckdb").format(orders="orders"),
     doc="Modern SQL ergonomics: GROUP BY ALL (grouping set resolved from "
     "the non-aggregate select items), ORDER BY ALL (every output column "
     "left-to-right), SELECT * EXCEPT (column-subtracting projection) — "
@@ -400,8 +404,7 @@ ORDER BY o_orderpriority, o_orderstatus, n, max_key
     tags=("subquery", "function"),
 )
 def qry_modern_sql_sugar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("orders",))
-    return spark.sql(_sugar_sql("spark"))
+    return spark.sql(_sugar_sql("spark"), orders=load_table(spark, sf_dir, "orders"))
 
 
 # ---------------------------------------------------------------------------
@@ -433,21 +436,23 @@ WHERE o_orderkey > thr.v
     tags=("subquery", "function"),
 )
 def qry_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("orders",))
+    orders = load_table(spark, sf_dir, "orders")
     spark.sql(
         "DECLARE OR REPLACE VARIABLE w32bd_thr BIGINT DEFAULT 0"
     )
     spark.sql(
         "SET VAR w32bd_thr = (SELECT CAST(max(o_orderkey) DIV 2 AS BIGINT) "
-        "FROM orders)"
+        "FROM {orders})",
+        orders=orders,
     )
     return spark.sql(
         """
 SELECT CAST(count(*) AS BIGINT) AS n_above,
   CAST(min(o_orderkey) AS BIGINT) AS min_above,
   w32bd_thr AS threshold
-FROM orders WHERE o_orderkey > w32bd_thr
-"""
+FROM {orders} WHERE o_orderkey > w32bd_thr
+""",
+        orders=orders,
     )
 
 
@@ -478,7 +483,6 @@ FROM orders CROSS JOIN thr WHERE o_orderkey > thr.v
     tags=("subquery", "function", "iterative"),
 )
 def qry_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("orders",))
     return spark.sql(
         """
 BEGIN
@@ -489,18 +493,19 @@ BEGIN
     SET acc = acc + i;
     SET i = i + 1;
   END WHILE;
-  SET thr = (SELECT CAST(max(o_orderkey) DIV 2 AS BIGINT) FROM orders);
+  SET thr = (SELECT CAST(max(o_orderkey) DIV 2 AS BIGINT) FROM {orders});
   IF acc = 45 THEN
     SELECT acc AS loop_sum,
       CAST(count(*) AS BIGINT) AS n_above,
       'big' AS branch
-    FROM orders WHERE o_orderkey > thr;
+    FROM {orders} WHERE o_orderkey > thr;
   ELSE
     SELECT CAST(-1 AS BIGINT) AS loop_sum,
       CAST(0 AS BIGINT) AS n_above, 'small' AS branch;
   END IF;
 END
-"""
+""",
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -539,7 +544,6 @@ ORDER BY o_orderpriority
     tags=("subquery", "function"),
 )
 def qry_dynamic_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("orders",))
     spark.sql("DECLARE OR REPLACE VARIABLE w32bd_dyn_stmt STRING")
     spark.sql("""
 SET VAR w32bd_dyn_stmt =
@@ -552,10 +556,18 @@ SET VAR w32bd_dyn_stmt =
    GROUP BY o_orderpriority
    ORDER BY o_orderpriority'
 """)
-    return spark.sql(
-        "EXECUTE IMMEDIATE w32bd_dyn_stmt "
-        "USING 'o_orderkey' AS keycol, 'orders' AS tbl, 4 AS m"
-    )
+    # IDENTIFIER(:tbl) resolves a catalog name, so this key binds its input
+    # as a temp view — under a name unique to the call, dropped on exit.
+    tbl = f"w32bd_dyn_orders_{uuid.uuid4().hex}"
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView(tbl)
+    try:
+        return spark.sql(
+            "EXECUTE IMMEDIATE w32bd_dyn_stmt "
+            "USING 'o_orderkey' AS keycol, :tbl AS tbl, 4 AS m",
+            args={"tbl": tbl},
+        )
+    finally:
+        spark.catalog.dropTempView(tbl)
 
 
 # ---------------------------------------------------------------------------

@@ -28,10 +28,6 @@ from ..io import load_table
 from ..registry import register
 
 
-def _view(spark: SparkSession, sf_dir: str) -> None:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-
-
 def _us(dialect: str) -> str:
     return "unix_micros(ts)" if dialect == "spark" else "epoch_us(ts)"
 
@@ -48,7 +44,7 @@ WITH tagged AS (
   SELECT user_id, ts, event_id,
     CASE WHEN event_type = 'click' THEN {epoch} END AS click_us,
     CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_purchase
-  FROM events
+  FROM {{events}}
   WHERE event_type IN ('click', 'purchase')
 ),
 carried AS (
@@ -73,7 +69,7 @@ ORDER BY user_id, purchase_event_id
 
 @register(
     "join_asof_forward",
-    oracle=_asof_forward_sql("duckdb"),
+    oracle=_asof_forward_sql("duckdb").format(events="events"),
     doc="Forward as-of join (first click at-or-after each purchase per "
     "user) via union + running-min over the following frame — the "
     "direction='forward' sibling of join_asof, one user_id shuffle, no "
@@ -81,8 +77,8 @@ ORDER BY user_id, purchase_event_id
     tags=("join", "window", "timeseries"),
 )
 def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_asof_forward_sql("spark"))
+    events = load_table(spark, sf_dir, "events")
+    return spark.sql(_asof_forward_sql("spark"), events=events)
 
 
 # ---------------------------------------------------------------------------
@@ -109,7 +105,7 @@ WITH tagged AS (
   SELECT user_id, ts, event_id,
     CASE WHEN event_type = 'click' THEN {epoch} END AS click_us,
     CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_purchase
-  FROM events
+  FROM {{events}}
   WHERE event_type IN ('click', 'purchase')
 ),
 carried AS (
@@ -139,7 +135,7 @@ ORDER BY user_id, purchase_event_id
 
 @register(
     "join_asof_nearest",
-    oracle=_asof_nearest_sql("duckdb"),
+    oracle=_asof_nearest_sql("duckdb").format(events="events"),
     doc="Nearest as-of join within a 1-hour tolerance, either direction "
     "(backward wins ties — pandas merge_asof semantics): both directions "
     "from one window pass over the tagged union, tolerance applied in the "
@@ -147,8 +143,8 @@ ORDER BY user_id, purchase_event_id
     tags=("join", "window", "timeseries"),
 )
 def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_asof_nearest_sql("spark"))
+    events = load_table(spark, sf_dir, "events")
+    return spark.sql(_asof_nearest_sql("spark"), events=events)
 
 
 # ---------------------------------------------------------------------------
@@ -179,7 +175,7 @@ def _ewma_sql(dialect: str) -> str:
     )
     return f"""
 WITH ev AS (
-  SELECT event_id, user_id, {epoch} AS us, value FROM events
+  SELECT event_id, user_id, {epoch} AS us, value FROM {{events}}
 )
 SELECT event_id, user_id,
   {synth.q6(f"({num}) / ({den})")} AS ewma
@@ -190,7 +186,7 @@ ORDER BY user_id, us, event_id
 
 @register(
     "win_ewma_smooth",
-    oracle=_ewma_sql("duckdb"),
+    oracle=_ewma_sql("duckdb").format(events="events"),
     doc="EWMA smoothing (α=0.3, trailing 12 taps, head-renormalized): "
     "exponential kernel as fixed lag-term expressions in ONE window sort "
     "(win_conv1d_frame discipline), driver-computed weight literals, "
@@ -199,8 +195,7 @@ ORDER BY user_id, us, event_id
     tags=("window", "timeseries", "stats"),
 )
 def win_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_ewma_sql("spark"))
+    return spark.sql(_ewma_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -228,7 +223,7 @@ def _distinct_rolling_sql(dialect: str) -> str:
     )
     return f"""
 WITH ev AS (
-  SELECT event_id, user_id, {us} AS us, event_type FROM events
+  SELECT event_id, user_id, {us} AS us, event_type FROM {{events}}
 )
 SELECT event_id, user_id,
   CAST({distinct} AS BIGINT) AS n_distinct_types
@@ -239,7 +234,7 @@ ORDER BY user_id, us, event_id
 
 @register(
     "win_distinct_rolling",
-    oracle=_distinct_rolling_sql("duckdb"),
+    oracle=_distinct_rolling_sql("duckdb").format(events="events"),
     doc="Distinct event-type cardinality over each user's trailing 10 "
     "events (behavioral breadth): size(collect_set) over the frame on "
     "Spark, windowed COUNT(DISTINCT) on DuckDB — same semantics, frame "
@@ -247,8 +242,8 @@ ORDER BY user_id, us, event_id
     tags=("window", "timeseries", "stats"),
 )
 def win_distinct_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_distinct_rolling_sql("spark"))
+    events = load_table(spark, sf_dir, "events")
+    return spark.sql(_distinct_rolling_sql("spark"), events=events)
 
 
 # ---------------------------------------------------------------------------
@@ -278,7 +273,7 @@ WITH ev AS (
   SELECT user_id,
     CAST(floor({epoch} / 86400e6) AS BIGINT) AS day,
     value
-  FROM events
+  FROM {{events}}
 ),
 bounds AS (SELECT user_id, min(day) AS d0, max(day) AS d1 FROM ev GROUP BY user_id),
 grid AS ({_grid_days(dialect)}),
@@ -298,7 +293,7 @@ ORDER BY g.user_id, g.day
 
 @register(
     "ts_resample_fill",
-    oracle=_resample_fill_sql("duckdb"),
+    oracle=_resample_fill_sql("duckdb").format(events="events"),
     doc="Per-user daily resample with explicit zero-filled gap days over "
     "each user's own activity range — calendar densification before any "
     "rolling computation; grid explode bounded per user, one (user, day) "
@@ -306,8 +301,8 @@ ORDER BY g.user_id, g.day
     tags=("timeseries", "window"),
 )
 def ts_resample_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_resample_fill_sql("spark"))
+    events = load_table(spark, sf_dir, "events")
+    return spark.sql(_resample_fill_sql("spark"), events=events)
 
 
 # ---------------------------------------------------------------------------
@@ -362,7 +357,7 @@ def _cusum_sql(dialect: str) -> str:
 WITH ev AS (
   SELECT user_id, event_id, {epoch} AS us,
     CAST(floor({sat_v} * 1e6 + 0.5e0) AS BIGINT) AS v6
-  FROM events
+  FROM {{events}}
 ),
 w AS (
   SELECT user_id, event_id, us,
@@ -390,7 +385,7 @@ ORDER BY user_id, us, event_id
 
 @register(
     "win_cusum_changepoint",
-    oracle=_cusum_sql("duckdb"),
+    oracle=_cusum_sql("duckdb").format(events="events"),
     doc="CUSUM control chart per user: deviation sums from the user's own "
     "mean computed in exact integer micro-units (n·prefix − i·total), "
     "drift flagged beyond 3σ via a cross-multiplied exact comparison — "
@@ -399,8 +394,7 @@ ORDER BY user_id, us, event_id
     tags=("timeseries", "window", "stats"),
 )
 def win_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_cusum_sql("spark"))
+    return spark.sql(_cusum_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -428,7 +422,7 @@ def _lttb_ev_sql(dialect: str) -> str:
     epoch = _us(dialect)
     return f"""
 WITH raw AS (
-  SELECT user_id, event_id, {epoch} AS us, value FROM events
+  SELECT user_id, event_id, {epoch} AS us, value FROM {{events}}
 )
   -- x rescaled to exact per-user day offsets: integer µs subtraction is
   -- exact, so x is bit-identical cross-engine and triangle areas stay at
@@ -482,7 +476,7 @@ ORDER BY user_id, bkt, kind
 
 @register(
     "ts_downsample_lttb",
-    oracle=_lttb_sql("duckdb"),
+    oracle=_lttb_sql("duckdb").format(events="events"),
     doc="Largest-triangle-three-buckets downsampling (public method, "
     "Steinarsson 2013), parallelizable centroid-anchor variant: per-user "
     "equal-count buckets, endpoints kept, each interior bucket keeps its "
@@ -492,15 +486,18 @@ ORDER BY user_id, bkt, kind
     tags=("timeseries", "window", "sampling"),
 )
 def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    checkpointed(
-        spark, "lttb_ev", lambda: spark.sql(_lttb_ev_sql("spark")).coalesce(8), sf_dir
-    ).createOrReplaceTempView("lttb_ev")
+    events = load_table(spark, sf_dir, "events")
+    ev = checkpointed(
+        spark, "lttb_ev",
+        lambda: spark.sql(_lttb_ev_sql("spark"), events=events).coalesce(8),
+        sf_dir,
+    )
     return spark.sql(
         _lttb_sql(
             "spark",
-            ev_ref="SELECT user_id, event_id, x, value, bkt, rn, n FROM lttb_ev",
-        )
+            ev_ref="SELECT user_id, event_id, x, value, bkt, rn, n FROM {ev}",
+        ),
+        ev=ev,
     )
 
 
@@ -538,7 +535,7 @@ def _seasonal_sql(dialect: str) -> str:
     return f"""
 WITH daily AS (
   SELECT {day} AS d, {ym} AS ym
-  FROM events GROUP BY {day}
+  FROM {{events}} GROUP BY {day}
 ),
 trended AS (
   SELECT d, CAST(ym AS DOUBLE) / 1000000e0 AS y, {dow} AS dow,
@@ -572,7 +569,7 @@ ORDER BY d
 
 @register(
     "ts_seasonal_decompose",
-    oracle=_seasonal_sql("duckdb"),
+    oracle=_seasonal_sql("duckdb").format(events="events"),
     doc="Classical additive seasonal decomposition: exact-micro daily "
     "totals → centered 7-day moving-average trend (full-window rows "
     "only) → day-of-week seasonal means → remainder. Daily totals stay "
@@ -584,8 +581,7 @@ ORDER BY d
     tags=("timeseries", "window"),
 )
 def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_seasonal_sql("spark"))
+    return spark.sql(_seasonal_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -632,7 +628,7 @@ def _acf_ordered_sql(dialect: str) -> str:
     return f"""
 WITH daily AS (
   SELECT {day} AS d, {ym} AS ym
-  FROM events GROUP BY {day}
+  FROM {{events}} GROUP BY {day}
 )
 SELECT ym, row_number() OVER (ORDER BY d) AS i FROM daily
 """
@@ -674,7 +670,7 @@ ORDER BY lag_k
 
 @register(
     "ts_autocorr",
-    oracle=_autocorr_sql("duckdb"),
+    oracle=_autocorr_sql("duckdb").format(events="events"),
     doc="Sample autocorrelation function of the daily total series at "
     "lags 1..10: exact-micro daily sums (BIGINT), DECIMAL(38,0) "
     "cross-product/square accumulation (order-free past int64 range), "
@@ -686,14 +682,15 @@ ORDER BY lag_k
     tags=("timeseries", "stats", "window"),
 )
 def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    checkpointed(
+    events = load_table(spark, sf_dir, "events")
+    ordered = checkpointed(
         spark, "acf_ordered",
-        lambda: spark.sql(_acf_ordered_sql("spark")).coalesce(1),
+        lambda: spark.sql(_acf_ordered_sql("spark"), events=events).coalesce(1),
         sf_dir,
-    ).createOrReplaceTempView("acf_ordered")
+    )
     return spark.sql(
-        _autocorr_sql("spark", ordered_ref="SELECT ym, i FROM acf_ordered")
+        _autocorr_sql("spark", ordered_ref="SELECT ym, i FROM {ordered}"),
+        ordered=ordered,
     )
 
 
@@ -717,7 +714,7 @@ def _drawdown_sql(dialect: str) -> str:
     w = "PARTITION BY user_id ORDER BY us, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
     return f"""
 WITH ev AS (
-  SELECT user_id, event_id, {us} AS us, {v6} AS v6 FROM events
+  SELECT user_id, event_id, {us} AS us, {v6} AS v6 FROM {{events}}
 ),
 path AS (
   SELECT user_id, event_id, us,
@@ -772,7 +769,7 @@ def _ccf_daily_sql(dialect: str) -> str:
 SELECT {day} AS d,
   CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS x,
   CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS y
-FROM events GROUP BY {day}
+FROM {{events}} GROUP BY {day}
 """
 
 
@@ -814,7 +811,7 @@ ORDER BY lag_k
 
 @register(
     "ts_cross_corr",
-    oracle=_cross_corr_sql("duckdb"),
+    oracle=_cross_corr_sql("duckdb").format(events="events"),
     doc="Lead/lag cross-correlation of daily click vs purchase counts at "
     "calendar lags -7..+7 (missing days contribute no pair): full-series "
     "means/variances, per-lag cross-sums via the b.d = a.d + k equi-join "
@@ -824,20 +821,21 @@ ORDER BY lag_k
     tags=("timeseries", "stats"),
 )
 def ts_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    checkpointed(
+    events = load_table(spark, sf_dir, "events")
+    daily = checkpointed(
         spark, "ccf_daily",
-        lambda: spark.sql(_ccf_daily_sql("spark")).coalesce(1),
+        lambda: spark.sql(_ccf_daily_sql("spark"), events=events).coalesce(1),
         sf_dir,
-    ).createOrReplaceTempView("ccf_daily")
+    )
     return spark.sql(
-        _cross_corr_sql("spark", daily_ref="SELECT d, x, y FROM ccf_daily")
+        _cross_corr_sql("spark", daily_ref="SELECT d, x, y FROM {daily}"),
+        daily=daily,
     )
 
 
 @register(
     "ts_max_drawdown",
-    oracle=_drawdown_sql("duckdb"),
+    oracle=_drawdown_sql("duckdb").format(events="events"),
     doc="Per-user maximum drawdown of the cumulative value path: "
     "running sum and running peak as incremental UNBOUNDED-PRECEDING "
     "frames (O(n) per partition, one user_id exchange), exact BIGINT "
@@ -846,8 +844,7 @@ def ts_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("timeseries", "window"),
 )
 def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_drawdown_sql("spark"))
+    return spark.sql(_drawdown_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -875,7 +872,7 @@ SELECT CAST(floor({us} / 600000000e0) AS BIGINT) * 600 AS b10,
   event_type,
   CAST(count(*) AS BIGINT) AS n,
   CAST({vm} AS BIGINT) AS sum_v_u
-FROM events
+FROM {{events}}
 WHERE ts IS NOT NULL AND event_type IS NOT NULL
 GROUP BY 1, 2
 """
@@ -890,7 +887,7 @@ direct AS (
     event_type,
     CAST(count(*) AS BIGINT) AS n_events,
     CAST({vm} AS BIGINT) AS sum_v_u
-  FROM events
+  FROM {{events}}
   WHERE ts IS NOT NULL AND event_type IS NOT NULL
   GROUP BY 1, 2
 ),
@@ -918,7 +915,7 @@ ORDER BY b60, event_type
 
 @register(
     "ts_rollup_multires",
-    oracle=_rollup_multires_sql("duckdb"),
+    oracle=_rollup_multires_sql("duckdb").format(events="events"),
     doc="Hierarchical multi-resolution rollup (the continuous-aggregate / "
     "hypertable pattern): the 1-hour tier aggregates the 10-minute tier, "
     "never raw data — one corpus shuffle, each higher tier reads the one "
@@ -930,5 +927,5 @@ ORDER BY b60, event_type
     tags=("timeseries", "agg", "scale"),
 )
 def ts_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _view(spark, sf_dir)
-    return spark.sql(_rollup_multires_sql("spark"))
+    events = load_table(spark, sf_dir, "events")
+    return spark.sql(_rollup_multires_sql("spark"), events=events)

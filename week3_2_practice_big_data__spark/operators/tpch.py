@@ -23,11 +23,6 @@ from ..io import load_table
 from ..registry import register
 
 
-def _views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...]) -> None:
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 # ---------------------------------------------------------------------------
 # Q4 — order priority checking: orders in a quarter with at least one line
 # shipped after the order date (adaptation: the tables lack commit/receipt
@@ -37,11 +32,11 @@ def _views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...]) -> None:
 
 _Q4_SQL = """
 SELECT o_orderpriority, count(*) AS order_count
-FROM orders
+FROM {orders}
 WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
   AND o_orderdate < TIMESTAMP '1996-10-01 00:00:00'
   AND EXISTS (
-    SELECT 1 FROM lineitem
+    SELECT 1 FROM {lineitem}
     WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
@@ -50,7 +45,7 @@ ORDER BY o_orderpriority
 
 @register(
     "join_q4_order_priority",
-    oracle=_Q4_SQL,
+    oracle=_Q4_SQL.format(lineitem="lineitem", orders="orders"),
     doc="TPC-H Q4 skeleton: quarter filter + correlated EXISTS (line "
     "shipped after order date) -> left-semi join on o_orderkey -> priority "
     "counts. Semi join ships only the orderkey column of lineitem "
@@ -58,8 +53,10 @@ ORDER BY o_orderpriority
     tags=("join", "agg", "tpch"),
 )
 def join_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("orders", "lineitem"))
-    return spark.sql(_Q4_SQL)
+    return spark.sql(
+        _Q4_SQL,
+        **{t: load_table(spark, sf_dir, t) for t in ("orders", "lineitem")},
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -76,12 +73,12 @@ FROM (
     CAST(year(l_shipdate) AS INT) AS l_year,
     CAST(l_extendedprice AS DECIMAL(18,2))
       * (1 - CAST(l_discount AS DECIMAL(18,2))) AS volume
-  FROM supplier
-  JOIN lineitem ON s_suppkey = l_suppkey
-  JOIN orders ON o_orderkey = l_orderkey
-  JOIN customer ON c_custkey = o_custkey
-  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-  JOIN nation n2 ON c_nationkey = n2.n_nationkey
+  FROM {supplier}
+  JOIN {lineitem} ON s_suppkey = l_suppkey
+  JOIN {orders} ON o_orderkey = l_orderkey
+  JOIN {customer} ON c_custkey = o_custkey
+  JOIN {nation} n1 ON s_nationkey = n1.n_nationkey
+  JOIN {nation} n2 ON c_nationkey = n2.n_nationkey
   WHERE (n1.n_name = 'NATION_18' AND n2.n_name = 'NATION_19')
      OR (n1.n_name = 'NATION_19' AND n2.n_name = 'NATION_18')
 ) shipping
@@ -92,7 +89,10 @@ ORDER BY supp_nation, cust_nation, l_year
 
 @register(
     "join_q7_volume_shipping",
-    oracle=_Q7_SQL,
+    oracle=_Q7_SQL.format(
+        customer="customer", lineitem="lineitem", nation="nation", orders="orders",
+        supplier="supplier",
+    ),
     doc="TPC-H Q7 skeleton: directed trade volume between two nations (a pair "
     "with flows at every test scale, so the parity check is never "
     "vacuously empty-vs-empty) per "
@@ -101,10 +101,13 @@ ORDER BY supp_nation, cust_nation, l_year
     tags=("join", "agg", "tpch"),
 )
 def join_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(
-        spark, sf_dir, ("supplier", "lineitem", "orders", "customer", "nation")
+    return spark.sql(
+        _Q7_SQL,
+        **{
+            t: load_table(spark, sf_dir, t)
+            for t in ("supplier", "lineitem", "orders", "customer", "nation")
+        },
     )
-    return spark.sql(_Q7_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -119,10 +122,10 @@ SELECT c_custkey, c_name,
   CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
            * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
   c_acctbal, n_name
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-JOIN nation ON c_nationkey = n_nationkey
+FROM {customer}
+JOIN {orders} ON c_custkey = o_custkey
+JOIN {lineitem} ON l_orderkey = o_orderkey
+JOIN {nation} ON c_nationkey = n_nationkey
 WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
   AND l_returnflag = 'R'
@@ -134,15 +137,22 @@ LIMIT 20
 
 @register(
     "join_q10_returned_item",
-    oracle=_Q10_SQL,
+    oracle=_Q10_SQL.format(
+        customer="customer", lineitem="lineitem", nation="nation", orders="orders"
+    ),
     doc="TPC-H Q10 skeleton: returned-line revenue per customer in a "
     "quarter, nation broadcast, top-20 by exact decimal revenue "
     "(REF-ANALOG).",
     tags=("join", "agg", "tpch"),
 )
 def join_q10_returned_item(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("customer", "orders", "lineitem", "nation"))
-    return spark.sql(_Q10_SQL)
+    return spark.sql(
+        _Q10_SQL,
+        **{
+            t: load_table(spark, sf_dir, t)
+            for t in ("customer", "orders", "lineitem", "nation")
+        },
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -164,7 +174,7 @@ FROM (
   SELECT p_type,
     CAST(l_extendedprice AS DECIMAL(18,2))
       * (1 - CAST(l_discount AS DECIMAL(18,2))) AS volume
-  FROM lineitem JOIN part ON l_partkey = p_partkey
+  FROM {lineitem} JOIN {part} ON l_partkey = p_partkey
   WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
     AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
 ) priced
@@ -173,15 +183,17 @@ FROM (
 
 @register(
     "agg_q14_promo_share",
-    oracle=_Q14_SQL,
+    oracle=_Q14_SQL.format(lineitem="lineitem", part="part"),
     doc="TPC-H Q14 skeleton: PROMO revenue share in one month — "
     "conditional decimal aggregate over a part broadcast join; the ratio "
     "is a single IEEE division of two exact sums (REF-ANALOG).",
     tags=("agg", "tpch"),
 )
 def agg_q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem", "part"))
-    return spark.sql(_Q14_SQL)
+    return spark.sql(
+        _Q14_SQL,
+        **{t: load_table(spark, sf_dir, t) for t in ("lineitem", "part")},
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -193,11 +205,11 @@ def agg_q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q16_SQL = """
 SELECT p_brand, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
-FROM lineitem
-JOIN part ON p_partkey = l_partkey
+FROM {lineitem}
+JOIN {part} ON p_partkey = l_partkey
 WHERE p_brand <> 'Brand#1'
   AND p_size IN (1, 2, 3, 4, 5)
-  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 1000)
+  AND l_suppkey NOT IN (SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 1000)
 GROUP BY p_brand, p_size
 ORDER BY supplier_cnt DESC, p_brand, p_size
 """
@@ -205,7 +217,7 @@ ORDER BY supplier_cnt DESC, p_brand, p_size
 
 @register(
     "agg_q16_supplier_cnt",
-    oracle=_Q16_SQL,
+    oracle=_Q16_SQL.format(lineitem="lineitem", part="part", supplier="supplier"),
     doc="TPC-H Q16 skeleton: distinct suppliers per (brand, size) slice "
     "with a NOT IN exclusion list — anti join against a tiny broadcast "
     "list, distinct count keyed on the grouped columns (REF-ANALOG; "
@@ -213,8 +225,10 @@ ORDER BY supplier_cnt DESC, p_brand, p_size
     tags=("agg", "join", "tpch"),
 )
 def agg_q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem", "part", "supplier"))
-    return spark.sql(_Q16_SQL)
+    return spark.sql(
+        _Q16_SQL,
+        **{t: load_table(spark, sf_dir, t) for t in ("lineitem", "part", "supplier")},
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -227,11 +241,11 @@ _Q18_SQL = """
 SELECT c_custkey, c_name, o_orderkey,
   CAST(o_totalprice AS DOUBLE) AS o_totalprice,
   CAST(sum(l_quantity) AS DOUBLE) AS total_qty
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON o_orderkey = l_orderkey
+FROM {customer}
+JOIN {orders} ON c_custkey = o_custkey
+JOIN {lineitem} ON o_orderkey = l_orderkey
 WHERE o_orderkey IN (
-  SELECT l_orderkey FROM lineitem
+  SELECT l_orderkey FROM {lineitem}
   GROUP BY l_orderkey
   HAVING sum(l_quantity) > 250)
 GROUP BY c_custkey, c_name, o_orderkey, o_totalprice
@@ -242,7 +256,7 @@ LIMIT 20
 
 @register(
     "agg_q18_large_orders",
-    oracle=_Q18_SQL,
+    oracle=_Q18_SQL.format(customer="customer", lineitem="lineitem", orders="orders"),
     doc="TPC-H Q18 skeleton: orders with >250 total units (IN over a "
     "grouped HAVING subquery -> semi join on orderkey), top-20 by order "
     "price. The qualifying-order list is aggregated once and semi-joined, "
@@ -250,8 +264,10 @@ LIMIT 20
     tags=("agg", "join", "tpch"),
 )
 def agg_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("customer", "orders", "lineitem"))
-    return spark.sql(_Q18_SQL)
+    return spark.sql(
+        _Q18_SQL,
+        **{t: load_table(spark, sf_dir, t) for t in ("customer", "orders", "lineitem")},
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -267,11 +283,11 @@ def agg_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q2_SQL = """
 WITH eligible AS (
   SELECT DISTINCT p_partkey, p_type, s_suppkey, s_acctbal, s_name, n_name
-  FROM part
-  JOIN lineitem ON p_partkey = l_partkey
-  JOIN supplier ON s_suppkey = l_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey
+  FROM {part}
+  JOIN {lineitem} ON p_partkey = l_partkey
+  JOIN {supplier} ON s_suppkey = l_suppkey
+  JOIN {nation} ON s_nationkey = n_nationkey
+  JOIN {region} ON n_regionkey = r_regionkey
   WHERE p_size = 15 AND r_name = 'EUROPE'
 )
 SELECT p_partkey, p_type, s_name, n_name, s_acctbal
@@ -286,7 +302,10 @@ LIMIT 100
 
 @register(
     "qry_q2_top_supplier",
-    oracle=_Q2_SQL,
+    oracle=_Q2_SQL.format(
+        lineitem="lineitem", nation="nation", part="part", region="region",
+        supplier="supplier",
+    ),
     doc="TPC-H Q2 skeleton (partsupp-free adaptation): region-filtered "
     "part/supplier join, best supplier per part via correlated scalar "
     "max, deterministic total-order LIMIT 100. max over doubles is "
@@ -297,14 +316,17 @@ def qry_q2_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The eligible relation is referenced twice (rows + correlated max);
     # Spark inlines CTEs, so materialize it once (CTE-inlining audit
     # discipline) — 10 scans → 0 on the tail.
-    _views(spark, sf_dir, ("part", "lineitem", "supplier", "nation", "region"))
+    tables = {
+        t: load_table(spark, sf_dir, t)
+        for t in ("part", "lineitem", "supplier", "nation", "region")
+    }
     body = _Q2_SQL.split("\n)\n", 1)
     eligible_sql = body[0].split("eligible AS (", 1)[1]
-    spark.sql(eligible_sql).localCheckpoint(eager=True).createOrReplaceTempView(
-        "w32bd_q2_eligible"
-    )
+    eligible = spark.sql(eligible_sql, **tables).localCheckpoint(eager=True)
     return spark.sql(
-        "WITH eligible AS (SELECT * FROM w32bd_q2_eligible)\n" + body[1]
+        "WITH eligible AS (SELECT * FROM {eligible})\n" + body[1],
+        eligible=eligible,
+        **tables,
     )
 
 
@@ -319,7 +341,7 @@ _Q13_SQL = """
 SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
 FROM (
   SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
-  FROM customer LEFT JOIN orders
+  FROM {customer} LEFT JOIN {orders}
     ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
   GROUP BY c_custkey
 ) c_orders
@@ -330,7 +352,7 @@ ORDER BY custdist DESC, c_count DESC
 
 @register(
     "agg_q13_cust_distribution",
-    oracle=_Q13_SQL,
+    oracle=_Q13_SQL.format(customer="customer", orders="orders"),
     doc="TPC-H Q13 skeleton: outer-join order counting with the priority "
     "filter in the ON clause (zero-order customers survive), then the "
     "count-of-counts histogram. Counts only — no float hazard "
@@ -338,8 +360,10 @@ ORDER BY custdist DESC, c_count DESC
     tags=("agg", "join", "tpch"),
 )
 def agg_q13_cust_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("customer", "orders"))
-    return spark.sql(_Q13_SQL)
+    return spark.sql(
+        _Q13_SQL,
+        **{t: load_table(spark, sf_dir, t) for t in ("customer", "orders")},
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -353,18 +377,18 @@ def agg_q13_cust_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q17_SQL = """
 SELECT CAST(coalesce(sum(CAST(l_extendedprice AS DECIMAL(18,2))), 0)
     AS DOUBLE) / 7e0 AS avg_yearly
-FROM lineitem JOIN part ON p_partkey = l_partkey
+FROM {lineitem} JOIN {part} ON p_partkey = l_partkey
 WHERE p_brand = 'Brand#4' AND p_type = 'MEDIUM'
   AND l_quantity < (
     SELECT 0.2e0 * (CAST(sum(CAST(l2.l_quantity AS DECIMAL(18,2)))
         AS DOUBLE) / count(*))
-    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)
+    FROM {lineitem} l2 WHERE l2.l_partkey = p_partkey)
 """
 
 
 @register(
     "agg_q17_small_qty_revenue",
-    oracle=_Q17_SQL,
+    oracle=_Q17_SQL.format(lineitem="lineitem", part="part"),
     doc="TPC-H Q17 skeleton: correlated per-part average-quantity "
     "threshold (exact-DECIMAL avg -> one double divide, so the membership "
     "decision is bit-identical cross-engine), revenue of the "
@@ -372,8 +396,10 @@ WHERE p_brand = 'Brand#4' AND p_type = 'MEDIUM'
     tags=("agg", "subquery", "tpch"),
 )
 def agg_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem", "part"))
-    return spark.sql(_Q17_SQL)
+    return spark.sql(
+        _Q17_SQL,
+        **{t: load_table(spark, sf_dir, t) for t in ("lineitem", "part")},
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -391,7 +417,7 @@ WITH per_os AS (
   SELECT l_orderkey, l_suppkey,
     max(CASE WHEN l_shipdate > o_orderdate + INTERVAL 60 DAY
         THEN 1 ELSE 0 END) AS supp_late
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+  FROM {lineitem} JOIN {orders} ON l_orderkey = o_orderkey
   WHERE o_orderstatus = 'F'
   GROUP BY l_orderkey, l_suppkey
 ),
@@ -402,8 +428,8 @@ per_o AS (
 SELECT s_name, n_name, CAST(count(*) AS BIGINT) AS numwait
 FROM per_os po
 JOIN per_o o ON po.l_orderkey = o.l_orderkey
-JOIN supplier ON s_suppkey = po.l_suppkey
-JOIN nation ON s_nationkey = n_nationkey
+JOIN {supplier} ON s_suppkey = po.l_suppkey
+JOIN {nation} ON s_nationkey = n_nationkey
 WHERE po.supp_late = 1 AND o.n_supp > 1 AND o.n_late = 1
 GROUP BY s_name, n_name
 ORDER BY numwait DESC, s_name
@@ -412,7 +438,9 @@ ORDER BY numwait DESC, s_name
 
 @register(
     "join_q21_waiting_supplier",
-    oracle=_Q21_SQL,
+    oracle=_Q21_SQL.format(
+        lineitem="lineitem", nation="nation", orders="orders", supplier="supplier"
+    ),
     doc="TPC-H Q21 skeleton (late = shipped >60 days after order date): "
     "sole-late-supplier detection on multi-supplier finished orders — "
     "the EXISTS/NOT-EXISTS pair decorrelated into per-order aggregate "
@@ -423,14 +451,17 @@ def join_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per_os is referenced twice (per-order rollup + the final join);
     # materialize it once so the lineitem⋈orders aggregate runs a single
     # time under Spark's CTE inlining (6 scans → 2 + checkpoint).
-    _views(spark, sf_dir, ("lineitem", "orders", "supplier", "nation"))
+    tables = {
+        t: load_table(spark, sf_dir, t)
+        for t in ("lineitem", "orders", "supplier", "nation")
+    }
     per_os_sql = _Q21_SQL.split("per_os AS (", 1)[1].split("\n),\n", 1)[0]
-    spark.sql(per_os_sql).localCheckpoint(eager=True).createOrReplaceTempView(
-        "w32bd_q21_per_os"
-    )
+    per_os = spark.sql(per_os_sql, **tables).localCheckpoint(eager=True)
     tail = _Q21_SQL.split("\n),\n", 1)[1]
     return spark.sql(
-        "WITH per_os AS (SELECT * FROM w32bd_q21_per_os),\n" + tail
+        "WITH per_os AS (SELECT * FROM {per_os}),\n" + tail,
+        per_os=per_os,
+        **tables,
     )
 
 
@@ -446,15 +477,15 @@ _Q22_SQL = """
 WITH avg_bal AS (
   SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*)
     AS a
-  FROM customer WHERE c_acctbal > 0e0
+  FROM {customer} WHERE c_acctbal > 0e0
 )
 SELECT cntrycode, CAST(count(*) AS BIGINT) AS numcust,
   CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
 FROM (
   SELECT CAST(c_nationkey % 5 AS BIGINT) AS cntrycode, c_acctbal
-  FROM customer CROSS JOIN avg_bal
+  FROM {customer} CROSS JOIN avg_bal
   WHERE c_acctbal > a
-    AND NOT EXISTS (SELECT 1 FROM orders
+    AND NOT EXISTS (SELECT 1 FROM {orders}
       WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
 ) eligible
 GROUP BY cntrycode
@@ -464,15 +495,17 @@ ORDER BY cntrycode
 
 @register(
     "qry_q22_idle_customers",
-    oracle=_Q22_SQL,
+    oracle=_Q22_SQL.format(customer="customer", orders="orders"),
     doc="TPC-H Q22 skeleton (country code = nationkey % 5): exact-DECIMAL "
     "positive-balance average as threshold, NOT EXISTS anti join against "
     "urgent orders, per-code count + exact balance total (REF-ANALOG).",
     tags=("qry", "agg", "subquery", "tpch"),
 )
 def qry_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("customer", "orders"))
-    return spark.sql(_Q22_SQL)
+    return spark.sql(
+        _Q22_SQL,
+        **{t: load_table(spark, sf_dir, t) for t in ("customer", "orders")},
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -486,7 +519,7 @@ _Q6_SQL = """
 SELECT CAST(coalesce(sum(
     CAST(l_extendedprice AS DECIMAL(18,2))
       * CAST(l_discount AS DECIMAL(18,2))), 0) AS DOUBLE) AS revenue
-FROM lineitem
+FROM {lineitem}
 WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
   AND l_discount BETWEEN 0.05e0 AND 0.07e0
@@ -496,15 +529,17 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
 
 @register(
     "agg_q6_forecast_revenue",
-    oracle=_Q6_SQL,
+    oracle=_Q6_SQL.format(lineitem="lineitem"),
     doc="TPC-H Q6 skeleton: single-scan range-predicate revenue sum — "
     "all three predicates pushed to parquet, two-column ReadSchema, one "
     "exact DECIMAL product-sum (REF-ANALOG; the pushdown benchmark).",
     tags=("agg", "scan", "tpch"),
 )
 def agg_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem",))
-    return spark.sql(_Q6_SQL)
+    return spark.sql(
+        _Q6_SQL,
+        **{t: load_table(spark, sf_dir, t) for t in ("lineitem",)},
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -525,14 +560,14 @@ FROM (
     CAST(l_extendedprice AS DECIMAL(18,2))
       * (1 - CAST(l_discount AS DECIMAL(18,2))) AS volume,
     n2.n_name AS supp_nation
-  FROM lineitem
-  JOIN part ON p_partkey = l_partkey
-  JOIN supplier ON s_suppkey = l_suppkey
-  JOIN orders ON o_orderkey = l_orderkey
-  JOIN customer ON c_custkey = o_custkey
-  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-  JOIN region ON n1.n_regionkey = r_regionkey
-  JOIN nation n2 ON s_nationkey = n2.n_nationkey
+  FROM {lineitem}
+  JOIN {part} ON p_partkey = l_partkey
+  JOIN {supplier} ON s_suppkey = l_suppkey
+  JOIN {orders} ON o_orderkey = l_orderkey
+  JOIN {customer} ON c_custkey = o_custkey
+  JOIN {nation} n1 ON c_nationkey = n1.n_nationkey
+  JOIN {region} ON n1.n_regionkey = r_regionkey
+  JOIN {nation} n2 ON s_nationkey = n2.n_nationkey
   WHERE r_name = 'EUROPE' AND p_type = 'STANDARD'
 ) all_nations
 GROUP BY o_year
@@ -542,7 +577,10 @@ ORDER BY o_year
 
 @register(
     "join_q8_market_share",
-    oracle=_Q8_SQL,
+    oracle=_Q8_SQL.format(
+        customer="customer", lineitem="lineitem", nation="nation", orders="orders",
+        part="part", region="region", supplier="supplier",
+    ),
     doc="TPC-H Q8 skeleton: 7-join star (nation twice — supplier and "
     "customer sides), region + part-type filters, per-year market share "
     "as a ratio of exact-DECIMAL sums divided once (REF-ANALOG; every "
@@ -550,12 +588,16 @@ ORDER BY o_year
     tags=("join", "agg", "tpch"),
 )
 def join_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(
-        spark, sf_dir,
-        ("lineitem", "part", "supplier", "orders", "customer", "nation",
-         "region"),
+    return spark.sql(
+        _Q8_SQL,
+        **{
+            t: load_table(spark, sf_dir, t)
+            for t in (
+                "lineitem", "part", "supplier", "orders", "customer", "nation",
+                "region",
+            )
+        },
     )
-    return spark.sql(_Q8_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -572,13 +614,13 @@ WITH revenue AS (
   SELECT l_suppkey AS supplier_no,
     CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
       * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS total_revenue
-  FROM lineitem
+  FROM {lineitem}
   WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
     AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
   GROUP BY l_suppkey
 )
 SELECT s_suppkey, s_name, total_revenue
-FROM supplier JOIN revenue ON s_suppkey = supplier_no
+FROM {supplier} JOIN revenue ON s_suppkey = supplier_no
 WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
 ORDER BY s_suppkey
 """
@@ -586,7 +628,7 @@ ORDER BY s_suppkey
 
 @register(
     "agg_q15_top_supplier",
-    oracle=_Q15_SQL,
+    oracle=_Q15_SQL.format(lineitem="lineitem", supplier="supplier"),
     doc="TPC-H Q15 skeleton: quarterly per-supplier revenue view + "
     "global-max scalar subquery over the same view (materialized once "
     "Spark-side); exact-DECIMAL revenue makes the max-equality "
@@ -594,14 +636,14 @@ ORDER BY s_suppkey
     tags=("agg", "subquery", "tpch"),
 )
 def agg_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem", "supplier"))
+    tables = {t: load_table(spark, sf_dir, t) for t in ("lineitem", "supplier")}
     rev_sql = _Q15_SQL.split("revenue AS (", 1)[1].split("\n)\n", 1)[0]
-    spark.sql(rev_sql).localCheckpoint(eager=True).createOrReplaceTempView(
-        "w32bd_q15_revenue"
-    )
+    revenue = spark.sql(rev_sql, **tables).localCheckpoint(eager=True)
     tail = _Q15_SQL.split("\n)\n", 1)[1]
     return spark.sql(
-        "WITH revenue AS (SELECT * FROM w32bd_q15_revenue)\n" + tail
+        "WITH revenue AS (SELECT * FROM {revenue})\n" + tail,
+        revenue=revenue,
+        **tables,
     )
 
 
@@ -617,7 +659,7 @@ _Q19_SQL = """
 SELECT CAST(coalesce(sum(
     CAST(l_extendedprice AS DECIMAL(18,2))
       * (1 - CAST(l_discount AS DECIMAL(18,2)))), 0) AS DOUBLE) AS revenue
-FROM lineitem JOIN part ON p_partkey = l_partkey
+FROM {lineitem} JOIN {part} ON p_partkey = l_partkey
 WHERE
   (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
     AND l_quantity >= 1e0 AND l_quantity <= 11e0)
@@ -630,15 +672,17 @@ WHERE
 
 @register(
     "join_q19_bracket_revenue",
-    oracle=_Q19_SQL,
+    oracle=_Q19_SQL.format(lineitem="lineitem", part="part"),
     doc="TPC-H Q19 skeleton (brand/size/quantity brackets): disjunctive "
     "three-bracket predicate planned as ONE broadcast join + post-join "
     "filter, exact-DECIMAL revenue (REF-ANALOG).",
     tags=("join", "agg", "tpch"),
 )
 def join_q19_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem", "part"))
-    return spark.sql(_Q19_SQL)
+    return spark.sql(
+        _Q19_SQL,
+        **{t: load_table(spark, sf_dir, t) for t in ("lineitem", "part")},
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -658,11 +702,11 @@ FROM (
          * (1 - CAST(l_discount AS DECIMAL(18,2))))
       - 3 * (CAST(p_retailprice AS DECIMAL(18,2))
              * CAST(l_quantity AS DECIMAL(4,0))) AS amount_x5
-  FROM lineitem
-  JOIN part ON p_partkey = l_partkey
-  JOIN supplier ON s_suppkey = l_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
-  JOIN orders ON o_orderkey = l_orderkey
+  FROM {lineitem}
+  JOIN {part} ON p_partkey = l_partkey
+  JOIN {supplier} ON s_suppkey = l_suppkey
+  JOIN {nation} ON s_nationkey = n_nationkey
+  JOIN {orders} ON o_orderkey = l_orderkey
   WHERE p_name LIKE '%red%'
 ) profit
 GROUP BY nation, o_year
@@ -672,7 +716,10 @@ ORDER BY nation, o_year DESC
 
 @register(
     "join_q9_product_profit",
-    oracle=_Q9_SQL,
+    oracle=_Q9_SQL.format(
+        lineitem="lineitem", nation="nation", orders="orders", part="part",
+        supplier="supplier",
+    ),
     doc="TPC-H Q9 skeleton (supply cost = 60% of p_retailprice — no "
     "partsupp): name-filtered profit per supplier nation and order year. "
     "part/supplier/nation broadcast; the only big-big join is "
@@ -682,10 +729,13 @@ ORDER BY nation, o_year DESC
     tags=("join", "agg", "tpch"),
 )
 def join_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(
-        spark, sf_dir, ("lineitem", "part", "supplier", "nation", "orders")
+    return spark.sql(
+        _Q9_SQL,
+        **{
+            t: load_table(spark, sf_dir, t)
+            for t in ("lineitem", "part", "supplier", "nation", "orders")
+        },
     )
-    return spark.sql(_Q9_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -702,9 +752,9 @@ WITH partval AS (
   SELECT l_partkey,
     sum(CAST(l_extendedprice AS DECIMAL(18,2))
         * CAST(l_quantity AS DECIMAL(4,0))) AS val
-  FROM lineitem
-  JOIN supplier ON s_suppkey = l_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
+  FROM {lineitem}
+  JOIN {supplier} ON s_suppkey = l_suppkey
+  JOIN {nation} ON s_nationkey = n_nationkey
   WHERE n_regionkey = 2
   GROUP BY l_partkey
 )
@@ -718,7 +768,7 @@ ORDER BY part_value DESC, l_partkey
 
 @register(
     "agg_q11_important_stock",
-    oracle=_Q11_SQL,
+    oracle=_Q11_SQL.format(lineitem="lineitem", nation="nation", supplier="supplier"),
     doc="TPC-H Q11 skeleton (stock value from lineitem, one region of "
     "suppliers): per-part exact-DECIMAL value, kept when above 0.1% of "
     "the global total (scalar subquery over the SAME aggregate — "
@@ -730,14 +780,16 @@ ORDER BY part_value DESC, l_partkey
 def agg_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partval feeds both the row set and the global threshold; Spark
     # inlines CTEs, so materialize it once (CTE-inlining discipline).
-    _views(spark, sf_dir, ("lineitem", "supplier", "nation"))
+    tables = {
+        t: load_table(spark, sf_dir, t) for t in ("lineitem", "supplier", "nation")
+    }
     pv_sql = _Q11_SQL.split("partval AS (", 1)[1].split("\n)\n", 1)[0]
-    spark.sql(pv_sql).localCheckpoint(eager=True).createOrReplaceTempView(
-        "w32bd_q11_partval"
-    )
+    partval = spark.sql(pv_sql, **tables).localCheckpoint(eager=True)
     tail = _Q11_SQL.split("\n)\n", 1)[1]
     return spark.sql(
-        "WITH partval AS (SELECT * FROM w32bd_q11_partval)\n" + tail
+        "WITH partval AS (SELECT * FROM {partval})\n" + tail,
+        partval=partval,
+        **tables,
     )
 
 
@@ -759,7 +811,7 @@ FROM (
   SELECT CASE WHEN l_shipdate > o_orderdate + INTERVAL 30 DAY
               THEN 'SLOW' ELSE 'FAST' END AS delay_class,
     o_orderpriority
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+  FROM {lineitem} JOIN {orders} ON l_orderkey = o_orderkey
   WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
     AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
 ) classed
@@ -770,7 +822,7 @@ ORDER BY delay_class
 
 @register(
     "join_q12_ship_priority",
-    oracle=_Q12_SQL,
+    oracle=_Q12_SQL.format(lineitem="lineitem", orders="orders"),
     doc="TPC-H Q12 skeleton (mode = ship-delay class, >30 days = SLOW): "
     "lineitem⋈orders on orderkey with the year filter pushed to the "
     "lineitem scan, priority split as conditional counts — integers "
@@ -778,8 +830,10 @@ ORDER BY delay_class
     tags=("join", "agg", "tpch"),
 )
 def join_q12_ship_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("lineitem", "orders"))
-    return spark.sql(_Q12_SQL)
+    return spark.sql(
+        _Q12_SQL,
+        **{t: load_table(spark, sf_dir, t) for t in ("lineitem", "orders")},
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -793,12 +847,12 @@ def join_q12_ship_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q20_SQL = """
 SELECT s_name, n_name
-FROM supplier
-JOIN nation ON s_nationkey = n_nationkey
+FROM {supplier}
+JOIN {nation} ON s_nationkey = n_nationkey
 WHERE n_regionkey = 2
   AND s_suppkey IN (
     SELECT l_suppkey
-    FROM lineitem JOIN part ON p_partkey = l_partkey
+    FROM {lineitem} JOIN {part} ON p_partkey = l_partkey
     WHERE p_name LIKE 'red%'
       AND l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
       AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
@@ -810,7 +864,9 @@ ORDER BY s_name
 
 @register(
     "join_q20_promo_suppliers",
-    oracle=_Q20_SQL,
+    oracle=_Q20_SQL.format(
+        lineitem="lineitem", nation="nation", part="part", supplier="supplier"
+    ),
     doc="TPC-H Q20 skeleton (excess stock = >40 units of one red part "
     "shipped in the year): grouped-HAVING subquery -> left-semi join on "
     "s_suppkey -> broadcast nation region filter. l_quantity sums are "
@@ -818,5 +874,10 @@ ORDER BY s_name
     tags=("join", "agg", "subquery", "tpch"),
 )
 def join_q20_promo_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, ("supplier", "nation", "lineitem", "part"))
-    return spark.sql(_Q20_SQL)
+    return spark.sql(
+        _Q20_SQL,
+        **{
+            t: load_table(spark, sf_dir, t)
+            for t in ("supplier", "nation", "lineitem", "part")
+        },
+    )

@@ -58,20 +58,19 @@ def _conv1d_sql(dialect: str) -> str:
     return (
         f"SELECT event_id, user_id, {synth.q6('value')} AS value,\n"
         f"  {synth.q6(_conv_terms())} AS smoothed\n"
-        "FROM events ORDER BY user_id, event_id"
+        "FROM {events} ORDER BY user_id, event_id"
     )
 
 
 @register(
     "win_conv1d_frame",
-    oracle=_conv1d_sql("duckdb"),
+    oracle=_conv1d_sql("duckdb").format(events="events"),
     doc="1-D 'same'-mode Gaussian convolution over events.value per user — "
     "the reference's separable blur pass (app.py:31-37) as one window sort.",
     tags=("window", "bench", "generative"),
 )
 def win_conv1d_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_conv1d_sql("spark"))
+    return spark.sql(_conv1d_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -128,7 +127,7 @@ def _lead_lag_sql(dialect: str) -> str:
 SELECT event_id, user_id,
   coalesce(lag(event_id) OVER w, -1) AS prev_event_id,
   coalesce({epoch} - lag({epoch}) OVER w, -1) AS gap_us
-FROM events
+FROM {{events}}
 WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 ORDER BY user_id, event_id
 """
@@ -136,14 +135,13 @@ ORDER BY user_id, event_id
 
 @register(
     "win_lead_lag",
-    oracle=_lead_lag_sql("duckdb"),
+    oracle=_lead_lag_sql("duckdb").format(events="events"),
     doc="lag/lead over event time per user: previous event id + gap in µs "
     "(REF-ANALOG sessionization primitive).",
     tags=("window",),
 )
 def win_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_lead_lag_sql("spark"))
+    return spark.sql(_lead_lag_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -159,20 +157,19 @@ SELECT event_id, user_id,
             'ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)')} AS run_sum,
   count(*) OVER (PARTITION BY user_id ORDER BY ts, event_id
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_cnt
-FROM events
+FROM {{events}}
 ORDER BY user_id, event_id
 """
 
 
 @register(
     "win_running_agg",
-    oracle=_running_sql("duckdb"),
+    oracle=_running_sql("duckdb").format(events="events"),
     doc="Running sum/count per user ordered by event time (REF-ANALOG).",
     tags=("window",),
 )
 def win_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_running_sql("spark"))
+    return spark.sql(_running_sql("spark"), events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -229,7 +226,7 @@ def _ntile_blocked_sql() -> str:
 WITH pb AS (
   SELECT o_orderkey, o_totalprice,
     CAST(floor(o_totalprice / {_NTILE_BUCKET_W}e0) AS BIGINT) AS pb
-  FROM orders
+  FROM {{orders}}
 ),
 bc AS (SELECT pb, count(*) AS c FROM pb GROUP BY pb),
 off AS (
@@ -268,8 +265,7 @@ ORDER BY o_orderkey
     tags=("window", "scale"),
 )
 def win_ntile_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_ntile_blocked_sql())
+    return spark.sql(_ntile_blocked_sql(), orders=load_table(spark, sf_dir, "orders"))
 
 
 # ---------------------------------------------------------------------------
@@ -296,21 +292,21 @@ def _range_frame_sql(dialect: str) -> str:
 SELECT event_id, user_id,
   count(*) {over} AS n_10m,
   {synth.q6(f'sum(value) {over}')} AS sum_10m
-FROM events
+FROM {{events}}
 ORDER BY user_id, event_id
 """
 
 
 @register(
     "win_range_frame",
-    oracle=_range_frame_sql("duckdb"),
+    oracle=_range_frame_sql("duckdb").format(events="events"),
     doc="Trailing 10-minute event-time RANGE frame per user (REF-ANALOG of "
     "the kernel-neighborhood aggregation, app.py:26-37).",
     tags=("window",),
 )
 def win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_range_frame_sql("spark"))
+    events = load_table(spark, sf_dir, "events")
+    return spark.sql(_range_frame_sql("spark"), events=events)
 
 
 # ---------------------------------------------------------------------------
@@ -333,21 +329,21 @@ SELECT o_orderkey, o_custkey,
   last_value(o_totalprice) OVER (PARTITION BY o_custkey {order} {full}) AS last_price,
   coalesce(nth_value(o_totalprice, 2)
            OVER (PARTITION BY o_custkey {order} {full}), -1e0) AS second_price
-FROM orders
+FROM {{orders}}
 ORDER BY o_orderkey
 """
 
 
 @register(
     "win_first_last",
-    oracle=_first_last_sql("duckdb"),
+    oracle=_first_last_sql("duckdb").format(orders="orders"),
     doc="first/last/nth_value with explicit UNBOUNDED FOLLOWING frame over "
     "a deterministic total order (REF-ANALOG of draw order, app.py:137).",
     tags=("window",),
 )
 def win_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_first_last_sql("spark"))
+    orders = load_table(spark, sf_dir, "orders")
+    return spark.sql(_first_last_sql("spark"), orders=orders)
 
 
 # ---------------------------------------------------------------------------
@@ -363,7 +359,7 @@ _PCTRANK_SQL = """
 SELECT o_orderkey, o_orderstatus,
   percent_rank() OVER w AS pr,
   cume_dist() OVER w AS cd
-FROM orders
+FROM {orders}
 WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice)
 ORDER BY o_orderstatus, o_orderkey
 """
@@ -371,14 +367,13 @@ ORDER BY o_orderstatus, o_orderkey
 
 @register(
     "win_percent_rank",
-    oracle=_PCTRANK_SQL,
+    oracle=_PCTRANK_SQL.format(orders="orders"),
     doc="percent_rank + cume_dist distribution windows (tie-invariant, "
     "integer-ratio exact; REF-ANALOG of the normalized depth rank).",
     tags=("window",),
 )
 def win_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_PCTRANK_SQL)
+    return spark.sql(_PCTRANK_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 # NULLS FIRST pinned (r13 skew fixture, 90%-NULL value): Spark's window
@@ -462,7 +457,7 @@ WITH ord AS (
   SELECT o_custkey, {price_c} AS price_c,
     COALESCE(o_orderdate, TIMESTAMP '1970-01-01 00:00:00') AS od,
     COALESCE(o_orderkey, -1) AS ok
-  FROM orders
+  FROM {{orders}}
 ),
 alloc AS (
   SELECT o.o_custkey, c.budget_c, o.price_c,
@@ -470,7 +465,7 @@ alloc AS (
       PARTITION BY o.o_custkey ORDER BY o.od, o.ok
       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
   FROM ord o
-  JOIN (SELECT c_custkey, {budget_c} AS budget_c FROM customer) c
+  JOIN (SELECT c_custkey, {budget_c} AS budget_c FROM {{customer}}) c
     ON c.c_custkey = o.o_custkey
 ),
 fill AS (
@@ -495,7 +490,7 @@ ORDER BY custkey
 
 @register(
     "win_budget_allocation",
-    oracle=_budget_alloc_sql("duckdb"),
+    oracle=_budget_alloc_sql("duckdb").format(orders="orders", customer="customer"),
     doc="Greedy payments-to-invoices allocation: per-customer budget "
     "(account balance) spread over orders in date order via ONE exact "
     "BIGINT-cents running frame — alloc = clamp(budget − prefix_sum, 0, "
@@ -506,9 +501,11 @@ ORDER BY custkey
     tags=("window", "join", "agg"),
 )
 def win_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    return spark.sql(_budget_alloc_sql("spark"))
+    return spark.sql(
+        _budget_alloc_sql("spark"),
+        orders=load_table(spark, sf_dir, "orders"),
+        customer=load_table(spark, sf_dir, "customer"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -542,7 +539,7 @@ SELECT l_partkey AS p_partkey,
   CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
            * (1 - CAST(l_discount AS DECIMAL(18,2)))) * 10000 AS BIGINT)
     AS rev_u
-FROM lineitem GROUP BY l_partkey
+FROM {lineitem} GROUP BY l_partkey
 """
 
 
@@ -598,7 +595,7 @@ ORDER BY abc_class
 
 @register(
     "win_pareto_abc",
-    oracle=_pareto_abc_sql("duckdb"),
+    oracle=_pareto_abc_sql("duckdb").format(lineitem="lineitem"),
     doc="Pareto/ABC revenue classification of parts (A = first 70% of "
     "global cumulative revenue, B to 90%, C rest): exact DECIMAL revenue "
     "as BIGINT 1e-4 units, global running sum via the blocked "
@@ -613,10 +610,13 @@ def win_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The per-part revenue relation feeds both the bucket-summary chain
     # and the rank join; CTE inlining would scan lineitem once per
     # reference (r8 plan audit: 2 scans) — materialize it once.
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    checkpointed(
-        spark, "abc_pr", lambda: spark.sql(_pareto_rev_sql()).coalesce(8), sf_dir
-    ).createOrReplaceTempView("abc_pr")
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    pr = checkpointed(
+        spark, "abc_pr",
+        lambda: spark.sql(_pareto_rev_sql(), lineitem=lineitem).coalesce(8),
+        sf_dir,
+    )
     return spark.sql(
-        _pareto_abc_sql("spark", pr_ref="SELECT p_partkey, rev_u FROM abc_pr")
+        _pareto_abc_sql("spark", pr_ref="SELECT p_partkey, rev_u FROM {pr}"),
+        pr=pr,
     )

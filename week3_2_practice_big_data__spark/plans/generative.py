@@ -1053,9 +1053,9 @@ def gen_poster_caption(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Stamp over the session-cached default canvas (same relation the
     # bilinear resample and hires export reuse) — the caption layer is a
     # broadcast join over it, not a reason to recomposite.
-    _cached_canvas(spark).createOrReplaceTempView("poster_canvas")
     return spark.sql(
-        _captioned_sql("spark", "SELECT row, col, r, g, b FROM poster_canvas")
+        _captioned_sql("spark", "SELECT row, col, r, g, b FROM {canvas}"),
+        canvas=_cached_canvas(spark),
     )
 
 
@@ -1244,9 +1244,9 @@ def sink_binary_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r4: the export now carries the reference's seed-caption text layer
     # (app.py:152) — stamped over the session-cached canvas, same relation
     # as gen_poster_caption.
-    _cached_canvas(spark).createOrReplaceTempView("poster_canvas")
     canvas = spark.sql(
-        _captioned_sql("spark", "SELECT row, col, r, g, b FROM poster_canvas")
+        _captioned_sql("spark", "SELECT row, col, r, g, b FROM {canvas}"),
+        canvas=_cached_canvas(spark),
     )
 
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1329,9 +1329,9 @@ def _cached_canvas(spark: SparkSession) -> DataFrame:
     tags=("projection", "generative", "scale"),
 )
 def proj_resample_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _cached_canvas(spark).createOrReplaceTempView("poster_canvas")
     return spark.sql(
-        _resample_sql("spark", "SELECT row, col, r, g, b FROM poster_canvas")
+        _resample_sql("spark", "SELECT row, col, r, g, b FROM {canvas}"),
+        canvas=_cached_canvas(spark),
     )
 
 
@@ -1357,16 +1357,16 @@ def sink_binary_export_hires(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import ensure_package_on_workers
 
     ensure_package_on_workers(spark)
-    _cached_canvas(spark).createOrReplaceTempView("poster_canvas")
     # Caption stamped AFTER the upsample at scale 3 (fontsize is in points:
     # at 3× dpi the glyphs get 3× the pixels, not a blurry upsample of the
     # low-res stamp — matching savefig's vector-text rasterization).
     hires = spark.sql(
         _captioned_sql(
             "spark",
-            _resample_sql("spark", "SELECT row, col, r, g, b FROM poster_canvas"),
+            _resample_sql("spark", "SELECT row, col, r, g, b FROM {canvas}"),
             scale=3,
-        )
+        ),
+        canvas=_cached_canvas(spark),
     )
 
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1440,12 +1440,12 @@ def sink_binary_export_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import ensure_package_on_workers
 
     ensure_package_on_workers(spark)
-    _cached_canvas(spark).createOrReplaceTempView("poster_canvas")
     canvas = spark.sql(
         _captioned_sql(
-            "spark", "SELECT row, col, r, g, b FROM poster_canvas",
+            "spark", "SELECT row, col, r, g, b FROM {canvas}",
             order_by=False,
-        )
+        ),
+        canvas=_cached_canvas(spark),
     )
     tiled = canvas.withColumn(
         "tile_row", (F.col("row") / _TILE).cast("int")
@@ -1499,7 +1499,7 @@ def _shadow_composite_sql(
     # `mask_ref` substitutes a materialized rasterized-mask relation (with
     # _MASK_COLS) for the mask CTE: the shading chain AND the shadow-blur
     # chain both consume it, so without materialization the rasterization
-    # runs twice (Spark builder passes a checkpointed view; DuckDB
+    # runs twice (Spark builder binds a checkpointed relation; DuckDB
     # self-materializes).
     if mask_ref is None:
         scene = _scene_ctes(dialect, seed, nb, canvas, None, lx, ly, theme)
@@ -1596,12 +1596,12 @@ def _cached_mask(spark: SparkSession) -> DataFrame:
     tags=("generative", "param"),
 )
 def gen_poster_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _cached_mask(spark).createOrReplaceTempView("poster_mask")
     return spark.sql(
         _shadow_composite_sql(
             "spark",
-            mask_ref=f"SELECT {_MASK_COLS} FROM poster_mask",
-        )
+            mask_ref=f"SELECT {_MASK_COLS} FROM {{mask}}",
+        ),
+        mask=_cached_mask(spark),
     )
 
 
@@ -1623,13 +1623,13 @@ _BLUR_POINT = 0.05
     tags=("generative", "param"),
 )
 def gen_poster_shadow_blur(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _cached_mask(spark).createOrReplaceTempView("poster_mask")
     return spark.sql(
         _shadow_composite_sql(
             "spark",
             blur_strength=_BLUR_POINT,
-            mask_ref=f"SELECT {_MASK_COLS} FROM poster_mask",
-        )
+            mask_ref=f"SELECT {_MASK_COLS} FROM {{mask}}",
+        ),
+        mask=_cached_mask(spark),
     )
 
 
@@ -1644,7 +1644,7 @@ def _explode_sql(dialect: str) -> str:
         return """
 SELECT doc_id, pos, token
 FROM (SELECT doc_id, posexplode(split(text, ' ')) AS (pos, token)
-      FROM documents WHERE doc_id < 20) t
+      FROM {documents} WHERE doc_id < 20) t
 ORDER BY doc_id, pos
 """
     return """
@@ -1668,8 +1668,8 @@ SELECT doc_id, p - 1 AS pos, toks[p] AS token FROM e ORDER BY doc_id, pos
 def udtf_explode_gen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..io import load_table
 
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_explode_sql("spark"))
+    documents = load_table(spark, sf_dir, "documents")
+    return spark.sql(_explode_sql("spark"), documents=documents)
 
 
 # ---------------------------------------------------------------------------

@@ -134,11 +134,12 @@ def _cached_graph(spark: SparkSession, sf_dir: str):
     import pyspark.sql.functions as F
 
     def build():
-        load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
         # The graph is VOCAB-sized (distinct tokens / bigrams), bounded by
         # vocabulary — not corpus-sized. One heavy pass builds it; compact
         # partitioning keeps the per-iteration stages from fragmenting.
-        edges = spark.sql(_edges_sql("spark")).coalesce(2).persist()
+        edges = spark.sql(
+            _edges_sql("spark"), documents=load_table(spark, sf_dir, "documents")
+        ).coalesce(2).persist()
         nodes = (
             edges.select(F.col("src").alias("token"))
             .union(edges.select(F.col("dst").alias("token")))
@@ -160,7 +161,7 @@ def _cached_graph(spark: SparkSession, sf_dir: str):
 
 @register(
     "iter_pagerank_tokens",
-    oracle=_pagerank_oracle(),
+    oracle=_pagerank_oracle().format(documents="documents"),
     doc="Iterative algorithm surface: 8 PageRank iterations as a driver-side "
     "loop over the cached token co-occurrence digraph; expression text "
     "mirrors the oracle CTE chain exactly, so it stays fully oracle-checked "

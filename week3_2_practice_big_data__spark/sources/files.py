@@ -332,8 +332,9 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         target
     ).write.mode("overwrite").parquet(compact)
     back = spark.read.schema(ev.schema).parquet(compact)
-    back.createOrReplaceTempView("compacted_events")
-    return spark.sql(_compact_oracle().replace("FROM events", "FROM compacted_events"))
+    return spark.sql(
+        _compact_oracle().replace("FROM events", "FROM {events}"), events=back
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -386,14 +387,13 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.option("mergeSchema", True)
         .parquet(os.path.join(out, "gen=1"), os.path.join(out, "gen=2"))
     )
-    back.createOrReplaceTempView("orders_evolved")
     return spark.sql("""
 SELECT CAST(count(*) AS BIGINT) AS n_rows,
   CAST(count(o_totalprice) AS BIGINT) AS n_priced,
   CAST(coalesce(sum(CAST(coalesce(o_totalprice, 0) AS DECIMAL(18,2))), 0) AS DOUBLE)
     AS sum_priced
-FROM orders_evolved
-""")
+FROM {orders}
+""", orders=back)
 
 
 _XML_ORACLE = """

@@ -29,10 +29,6 @@ _SLIDE_S = 300  # 5-minute slide
 from ..operators.analytics import _GAP_US  # 5-minute session gap (one definition)
 
 
-def _view(spark: SparkSession, sf_dir: str) -> None:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-
-
 _TUMBLING_ORACLE = f"""
 SELECT
   CAST(floor(epoch(ts) / {_WIN_S}) AS BIGINT) * {_WIN_S} AS win_start,
@@ -116,7 +112,7 @@ def stream_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # two physical strategies and this oracle can never drift apart.
 from ..operators.analytics import _sessionize_sql as _session_sql  # noqa: E402
 
-_SESSION_ORACLE = _session_sql("duckdb")
+_SESSION_ORACLE = _session_sql("duckdb").format(events="events")
 
 
 @register(

@@ -1374,7 +1374,7 @@ from ..operators.analytics import _event_pattern_sql as _cep_batch_sql
     # the oracle IS the batch CEP key's independent islands derivation —
     # one text, two totally different implementations (stateful pandas
     # processor vs relational windows) agreeing on every value
-    oracle=_cep_batch_sql("duckdb"),
+    oracle=_cep_batch_sql("duckdb").format(events="events"),
     doc="Streaming CEP via applyInPandasWithState: per-user last-2-event "
     "buffer + trailing-error-run state detect strict view->click->"
     "purchase (30 min bound) and >=2-error bursts ACROSS micro-batch "
@@ -1527,7 +1527,7 @@ _SESS_NATIVE_WM = "6 hours"
 _SESS_NATIVE_WM_US = 21_600_000_000
 
 _SESS_NATIVE_ORACLE = f"""
-WITH sess AS ({_session_batch_sql("duckdb")}),
+WITH sess AS ({_session_batch_sql("duckdb").format(events="events")}),
 wm AS (
   SELECT CAST(floor((max(epoch_us(ts)) + {_SSOJ_SENT_OFFSET_US}
                      - {_SESS_NATIVE_WM_US}) / 1000e0) AS BIGINT) AS wm_ms
