@@ -652,39 +652,28 @@ def streaming_ladder(spark) -> dict:
     for tag, sf_dir in (("base", BASE_SF), (f"x{FACTOR}", scaled)):
         ev = load_table(spark, sf_dir, "events")
         src = st._chunked_source(spark, sf_dir, "wm", dup_first=0)
-        name = f"w32bd_ladder_wm_{tag}"
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        stream = (
+        writer = (
             spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
             .option("recursiveFileLookup", "true")
             .parquet(src)
+            .withWatermark("ts", st._WATERMARK)
+            .groupBy(F.window("ts", "600 seconds"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .writeStream.format("memory")
+            .outputMode("append")
         )
-        with st._stream_shuffle(spark):
-            query = (
-                stream.withWatermark("ts", st._WATERMARK)
-                .groupBy(F.window("ts", "600 seconds"), "event_type")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-                ops = (query.lastProgress or {}).get("stateOperators", [])
-                report.setdefault("wm_state_metrics", {})[tag] = [
-                    {
-                        "operator": op.get("operatorName"),
-                        "state_rows": op.get("numRowsTotal"),
-                        "state_mem_bytes": op.get("memoryUsedBytes"),
-                    }
-                    for op in ops
-                ]
-            finally:
-                query.stop()
+        with st._query(spark, writer) as query:
+            query.processAllAvailable()
+            ops = (query.lastProgress or {}).get("stateOperators", [])
+            report.setdefault("wm_state_metrics", {})[tag] = [
+                {
+                    "operator": op.get("operatorName"),
+                    "state_rows": op.get("numRowsTotal"),
+                    "state_mem_bytes": op.get("memoryUsedBytes"),
+                }
+                for op in ops
+            ]
     return report
 
 
@@ -735,17 +724,7 @@ def rocksdb_ladder(spark) -> dict:
             .parquet(src)
             .count()
         )
-        for provider, confs in (
-            ("hdfs", {}),
-            (
-                "rocksdb",
-                {
-                    "spark.sql.streaming.stateStore.providerClass": st._ROCKSDB_PROVIDER,
-                    "spark.sql.streaming.stateStore.rocksdb."
-                    "changelogCheckpointing.enabled": "true",
-                },
-            ),
-        ):
+        for provider, confs in (("hdfs", {}), ("rocksdb", st._ROCKSDB_CONFS)):
             base_dir = os.path.join(
                 os.path.dirname(os.path.abspath(__file__)),
                 ".tmp",
@@ -757,33 +736,24 @@ def rocksdb_ladder(spark) -> dict:
             shutil.rmtree(base_dir, ignore_errors=True)
             sink = os.path.join(base_dir, "data")
             ckpt = os.path.join(base_dir, "ckpt")
-            qname = f"w32bd_rdbladder_{provider}_{tag}"
-            for q in spark.streams.active:
-                if q.name == qname:
-                    q.stop()
             stream = (
                 spark.readStream.schema(ev.schema)
                 .option("maxFilesPerTrigger", 1)
                 .option("recursiveFileLookup", "true")
                 .parquet(src)
             )
+            writer = (
+                st._pipeline_e2e_transform(stream)
+                .writeStream.format("parquet")
+                .option("path", sink)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+            )
             start = time.perf_counter()
-            with st._scoped_conf(spark, confs), st._stream_shuffle(spark):
-                query = (
-                    st._pipeline_e2e_transform(stream)
-                    .writeStream.format("parquet")
-                    .option("path", sink)
-                    .option("checkpointLocation", ckpt)
-                    .outputMode("append")
-                    .queryName(qname)
-                    .start()
-                )
-                try:
-                    query.processAllAvailable()
-                    wall = time.perf_counter() - start
-                    progresses = [p for p in query.recentProgress if p]
-                finally:
-                    query.stop()
+            with st._query(spark, writer, confs=confs) as query:
+                query.processAllAvailable()
+                wall = time.perf_counter() - start
+                progresses = [p for p in query.recentProgress if p]
             # Per-batch state-row curve (watermark eviction evidence) and
             # the final batch's full operator metrics.
             curve = []

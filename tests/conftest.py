@@ -13,6 +13,18 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
+def stream_hygiene(spark):
+    """What a streaming builder must leave as it found it: the active
+    queries, the temp views, and the confs streams._query scopes to
+    start()."""
+    return (
+        [q.name for q in spark.streams.active],
+        {t.name for t in spark.catalog.listTables() if t.isTemporary},
+        spark.conf.get("spark.sql.shuffle.partitions", None),
+        spark.conf.get("spark.sql.streaming.stateStore.providerClass", None),
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")

@@ -219,6 +219,39 @@ def test_batch_builders_concurrent_scale_factors(spark, key):
     assert temp_views() == before
 
 
+# Stream keys of three kinds: a Python stateful fold, a watermarked
+# append window, and the same window on the RocksDB provider.
+_CONCURRENT_STREAM_KEYS = (
+    "stream_custom_state",
+    "stream_watermark_late",
+    "stream_rocksdb_state",
+)
+
+
+@pytest.mark.parametrize("key", _CONCURRENT_STREAM_KEYS)
+def test_stream_builders_concurrent_scale_factors(spark, key):
+    """Two threads run one stream builder in one session on different
+    scale factors: each query has a name of its own and its confs are set
+    only while it starts, so neither stops or reads the other's query,
+    each result equals its own oracle, and afterwards no query is active,
+    no sink view is left and the session confs read as before."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from .conftest import SF_ORACLE, stream_hygiene
+    from .oracle import compare, duck_run
+
+    entry = REGISTRY[key]
+
+    def run(sf_dir: str) -> None:
+        df = entry.builder(spark, sf_dir)
+        compare(df, duck_run(entry.oracle, sf_dir), key=f"{key}:{sf_dir}")
+
+    before = stream_hygiene(spark)
+    with ThreadPoolExecutor(2) as pool:
+        list(pool.map(run, (SF_SMALL, SF_ORACLE)))
+    assert stream_hygiene(spark) == before
+
+
 def test_build_once_single_winner_under_racing_builders():
     """ADVICE r2: concurrent scratch builds must never expose a partially
     built directory. Race 8 threads through build_once; every thread must
@@ -1100,15 +1133,15 @@ def test_xml_entities_escape_on_write_and_schema_inference(spark):
 
 def test_rocksdb_provider_actually_backs_the_state(spark):
     """stream_rocksdb_state (r10): beyond hash parity, prove the RocksDB
-    provider really ran — a query under the scoped conf must report
-    rocksdb custom metrics in its progress stateOperators, and the
+    provider really ran — a query started with the provider conf must
+    report rocksdb custom metrics in its progress stateOperators, and the
     session conf must be restored to the pre-key provider afterwards."""
     import pyspark.sql.functions as F
 
     from week3_2_practice_big_data__spark.streaming.streams import (
         _ROCKSDB_PROVIDER,
         _chunked_source,
-        _scoped_conf,
+        _query,
     )
     from week3_2_practice_big_data__spark.io import load_table
 
@@ -1117,27 +1150,23 @@ def test_rocksdb_provider_actually_backs_the_state(spark):
     )
     src = _chunked_source(spark, SF_SMALL, "wm", dup_first=0)
     ev = load_table(spark, SF_SMALL, "events")
-    with _scoped_conf(
+    writer = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 2)
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .writeStream.format("memory")
+        .outputMode("complete")
+    )
+    with _query(
         spark,
-        {"spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER},
-    ):
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 2)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .writeStream.format("memory")
-            .queryName("w32bd_rdbpin")
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            progress = q.lastProgress
-        finally:
-            q.stop()
+        writer,
+        confs={"spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER},
+    ) as q:
+        q.processAllAvailable()
+        progress = q.lastProgress
     ops = progress["stateOperators"]
     assert ops, "no stateful operator in progress"
     custom = ops[0].get("customMetrics", {})
@@ -1216,16 +1245,14 @@ def test_time_type_flag_scoped(spark):
     only, probed r11), and TIME semantics inside the scope must agree
     with the literal forms."""
     from week3_2_practice_big_data__spark import REGISTRY
-    from week3_2_practice_big_data__spark.streaming.streams import (
-        _scoped_conf,
-    )
+    from week3_2_practice_big_data__spark.session import scoped_confs
 
     before = spark.conf.get("spark.sql.timeType.enabled", None)
     df = REGISTRY["fn_time_type"].builder(spark, SF_SMALL)
     assert spark.conf.get("spark.sql.timeType.enabled", None) == before
     rows = df.collect()  # analyzed plan executes with the flag restored
     assert len(rows) > 0
-    with _scoped_conf(spark, {"spark.sql.timeType.enabled": "true"}):
+    with scoped_confs(spark, {"spark.sql.timeType.enabled": "true"}):
         r = spark.sql(
             "SELECT hour(to_time('23:59:58')) AS h, "
             "to_time('07:08:09') = TIME'07:08:09' AS eq"

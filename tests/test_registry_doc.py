@@ -93,3 +93,50 @@ def test_no_temp_views_outside_catalog_feature_keys():
                     ):
                         found.add((rel, owner))
     assert found - _TEMP_VIEW_EXCEPTIONS == set(), sorted(found)
+
+
+# One streaming-query lifecycle and one conf scope. Outside them a
+# package module may set a session conf only where it must outlive the
+# builder: the engine's own session setup, and two confs read at
+# execution time (the recursion row limit, the Python filter pushdown).
+_LIFECYCLE_EXCEPTIONS = {
+    ("streaming/streams.py", "_query"),
+    ("session.py", "scoped_confs"),
+    ("session.py", "ensure_session_confs"),
+    ("session.py", "ensure_package_on_workers"),
+    ("operators/subqueries.py", "qry_recursive_cte"),
+    ("sources/generators.py", "src_python_datasource_pushdown"),
+}
+
+
+def test_stream_lifecycle_and_conf_changes_in_one_place():
+    """Static guard (no Spark): outside the listed exceptions no package
+    module names a streaming query (.queryName), reads spark.streams.active
+    or calls conf.set / conf.unset."""
+    import ast
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "week3_2_practice_big_data__spark")
+    found = set()
+    for dirpath, _, files in os.walk(pkg):
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for top in tree.body:
+                owner = getattr(top, "name", "<module>")
+                for node in ast.walk(top):
+                    if not isinstance(node, ast.Attribute):
+                        continue
+                    inner = getattr(node.value, "attr", None)
+                    if (
+                        node.attr == "queryName"
+                        or (node.attr == "active" and inner == "streams")
+                        or (node.attr in ("set", "unset") and inner == "conf")
+                    ):
+                        found.add((rel, owner, node.attr))
+    stray = {f for f in found if f[:2] not in _LIFECYCLE_EXCEPTIONS}
+    assert stray == set(), sorted(stray)

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from week3_2_practice_big_data__spark import REGISTRY
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, stream_hygiene
 
 
 def test_watermark_emits_subset_of_batch_windows(spark):
@@ -483,7 +483,7 @@ def test_pipeline_e2e_restart_straddles_dedup_and_session_state(spark):
     from week3_2_practice_big_data__spark.io import load_table
     from week3_2_practice_big_data__spark.streaming.streams import (
         _pipeline_e2e_transform,
-        _stream_shuffle,
+        _query,
     )
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -513,31 +513,22 @@ def test_pipeline_e2e_restart_straddles_dedup_and_session_state(spark):
         )
 
     schema = load_table(spark, SF_SMALL, "events").schema
-    qname = "w32bd_spe2e_fix"
 
     def life():
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        with _stream_shuffle(spark):
-            query = (
-                _pipeline_e2e_transform(
-                    spark.readStream.schema(schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(stage)
-                )
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .queryName(qname)
-                .start()
+        writer = (
+            _pipeline_e2e_transform(
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(stage)
             )
-            try:
-                query.processAllAvailable()
-                progress = list(query.recentProgress)
-            finally:
-                query.stop()
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+        )
+        with _query(spark, writer) as query:
+            query.processAllAvailable()
+            progress = list(query.recentProgress)
         return sum(
             int(
                 (p.get("observedMetrics") or {})
@@ -667,28 +658,111 @@ def test_python_datasource_stream_sink_commits_per_batch(spark):
 
 
 def test_scoped_conf_rolls_back_on_partial_failure(spark):
-    """_scoped_conf (r11, ADVICE r10): if a later set() raises (static
-    conf on an active session), the keys already applied must be rolled
-    back before the exception propagates — the session is never left
-    half-modified. Also pins the restore-by-unset path for keys that
-    were unset before entry."""
+    """session.scoped_confs: if a later set() raises (static conf on an
+    active session), the keys already applied must be rolled back before
+    the exception propagates — the session is never left half-modified.
+    Also pins the restore-by-unset path for keys that were unset before
+    entry."""
     import pytest
 
-    from week3_2_practice_big_data__spark.streaming.streams import (
-        _scoped_conf,
-    )
+    from week3_2_practice_big_data__spark.session import scoped_confs
 
     probe = "spark.w32bd.test.scopedconf.probe"
     static = "spark.sql.warehouse.dir"  # static: set() raises when active
     assert spark.conf.get(probe, None) is None
     with pytest.raises(Exception):
-        with _scoped_conf(spark, {probe: "set-me", static: "/nope"}):
+        with scoped_confs(spark, {probe: "set-me", static: "/nope"}):
             raise AssertionError("enter must fail before the body runs")
     assert spark.conf.get(probe, None) is None  # rolled back
     # normal path still restores unset keys by unsetting
-    with _scoped_conf(spark, {probe: "scoped"}):
+    with scoped_confs(spark, {probe: "scoped"}):
         assert spark.conf.get(probe) == "scoped"
     assert spark.conf.get(probe, None) is None
+
+
+def test_query_confs_apply_at_start_only(spark):
+    """_query restores the streaming shuffle width and its `confs` as soon
+    as start() returns, which is safe only because the query copies the
+    session conf when it starts. Pin that: while processAllAvailable()
+    runs the session already reads its old values, yet the query's state
+    operators report the streaming width and RocksDB's custom metrics."""
+    import pyspark.sql.functions as F
+
+    from week3_2_practice_big_data__spark.io import load_table
+    from week3_2_practice_big_data__spark.streaming.streams import (
+        _ROCKSDB_CONFS,
+        _chunked_source,
+        _query,
+        _stream_partitions,
+    )
+
+    before = stream_hygiene(spark)
+    width = _stream_partitions(spark)
+    assert before[2] != str(width)  # the scope must be observable
+    src = _chunked_source(spark, SF_SMALL, "wm", dup_first=0)
+    ev = load_table(spark, SF_SMALL, "events")
+    writer = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 2)
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .writeStream.format("memory")
+        .outputMode("complete")
+    )
+    with _query(spark, writer, confs=_ROCKSDB_CONFS) as q:
+        assert stream_hygiene(spark)[2:] == before[2:]
+        q.processAllAvailable()
+        ops = q.lastProgress["stateOperators"]
+    assert ops[0]["numShufflePartitions"] == width
+    assert any("rocksdb" in k.lower() for k in ops[0]["customMetrics"])
+    assert stream_hygiene(spark) == before
+
+
+def test_query_failure_leaves_no_stream_view_or_conf(spark):
+    """A streaming builder made to fail leaves nothing behind: neither when
+    start() raises (unknown sink format, with `confs` given) nor when
+    processAllAvailable() raises (a UDF that throws inside a batch)."""
+    import pytest
+
+    import pyspark.sql.functions as F
+
+    from week3_2_practice_big_data__spark.io import load_table
+    from week3_2_practice_big_data__spark.streaming.streams import (
+        _chunked_source,
+        _query,
+    )
+
+    probe = "spark.w32bd.test.query.probe"
+    before = stream_hygiene(spark)
+    src = _chunked_source(spark, SF_SMALL, "wm", dup_first=0)
+    stream = (
+        spark.readStream.schema(load_table(spark, SF_SMALL, "events").schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+    )
+
+    with pytest.raises(Exception):
+        with _query(
+            spark,
+            stream.writeStream.format("w32bd_no_such_sink"),
+            confs={probe: "set"},
+        ):
+            raise AssertionError("start() must raise before the body runs")
+    assert spark.conf.get(probe, None) is None
+    assert stream_hygiene(spark) == before
+
+    boom = F.udf(lambda v: 1 // 0, "long")
+    writer = (
+        stream.select(boom("value").alias("x"))
+        .writeStream.format("memory")
+        .outputMode("append")
+    )
+    with pytest.raises(Exception):
+        with _query(spark, writer) as q:
+            q.processAllAvailable()
+    assert stream_hygiene(spark) == before
 
 
 def test_pid_run_dir_reaps_dead_siblings(tmp_path, monkeypatch):

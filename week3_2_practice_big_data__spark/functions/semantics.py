@@ -25,6 +25,7 @@ from .. import synth
 from ..common import ordered_string_agg
 from ..io import load_table
 from ..registry import register
+from ..session import scoped_confs
 
 
 # ---------------------------------------------------------------------------
@@ -521,10 +522,8 @@ def fn_time_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tests/test_invariants.py::test_time_type_flag_scoped), so scope it
     # around the spark.sql() parse and restore immediately: later keys on
     # the shared session never see the preview flag (ADVICE r10).
-    from ..streaming.streams import _scoped_conf
-
-    with _scoped_conf(spark, {"spark.sql.timeType.enabled": "true"}):
-        events = load_table(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
+    with scoped_confs(spark, {"spark.sql.timeType.enabled": "true"}):
         return spark.sql(_time_type_sql("spark"), events=events)
 
 

@@ -11,6 +11,8 @@ AQE coalescing).
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -127,3 +129,29 @@ def ensure_session_confs(spark: SparkSession) -> None:
             spark.conf.set(key, value)
         except Exception:
             pass  # immutable in this deployment; io.py has a fallback path
+
+
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict):
+    """Set session confs for the body only; the one place a builder changes
+    a session conf for a bounded time. One lock serializes every scope, so
+    concurrent clients never snapshot each other's overrides. Keys that
+    were unset before are restored by unsetting; if a set() raises (a
+    static conf), the keys already applied are rolled back."""
+    with _CONF_LOCK:
+        applied = []
+        try:
+            for k, v in confs.items():
+                old = spark.conf.get(k, None)
+                spark.conf.set(k, v)
+                applied.append((k, old))
+            yield
+        finally:
+            for k, old in reversed(applied):
+                if old is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, old)

@@ -470,7 +470,7 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     from ..session import ensure_package_on_workers
-    from ..streaming.streams import _stream_shuffle
+    from ..streaming.streams import _query
 
     ensure_package_on_workers(spark)
     n, chunk, seed = _PYDSS_N, _PYDSS_CHUNK, _PYDSS_SEED
@@ -521,36 +521,27 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             return _LcgStreamReader()
 
     spark.dataSource.register(_LcgStreamSource)
-    qname = "w32bd_pydss"
-    for q in spark.streams.active:
-        if q.name == qname:
-            q.stop()
-    with _stream_shuffle(spark):
-        query = (
-            spark.readStream.format("w32bd_lcg_stream")
-            .load()
-            .withColumn("ts", F.timestamp_seconds(F.col("ts_sec")))
-            .withWatermark("ts", f"{_PYDSS_DELAY_S} seconds")
-            .groupBy(F.window("ts", "600 seconds"), "sensor_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("sum_x"))
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("win_start"),
-                "sensor_id",
-                "n",
-                "sum_x",
-            )
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .start()
+    writer = (
+        spark.readStream.format("w32bd_lcg_stream")
+        .load()
+        .withColumn("ts", F.timestamp_seconds(F.col("ts_sec")))
+        .withWatermark("ts", f"{_PYDSS_DELAY_S} seconds")
+        .groupBy(F.window("ts", "600 seconds"), "sensor_id")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("sum_x"))
+        .select(
+            F.unix_timestamp(F.col("window.start")).alias("win_start"),
+            "sensor_id",
+            "n",
+            "sum_x",
         )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
+        .writeStream.format("memory")
+        .outputMode("append")
+    )
+    with _query(spark, writer) as q:
+        q.processAllAvailable()
+        sink = spark.table(q.name)
     return (
-        spark.table(qname)
-        .filter(F.col("sensor_id") >= 0)
+        sink.filter(F.col("sensor_id") >= 0)
         .orderBy("win_start", "sensor_id")
     )
 
@@ -743,11 +734,7 @@ def stream_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from ..common import scratch_dir
     from ..session import ensure_package_on_workers
-    from ..streaming.streams import (
-        _WATERMARK,
-        _chunked_source,
-        _stream_shuffle,
-    )
+    from ..streaming.streams import _WATERMARK, _chunked_source, _query
 
     ensure_package_on_workers(spark)
     ev = load_table(spark, sf_dir, "events")
@@ -809,46 +796,35 @@ def stream_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame
             return _JsonlStreamWriter(self.options["path"])
 
     spark.dataSource.register(_JsonlStreamSink)
-    qname = "w32bd_pydsk"
-    for q in spark.streams.active:
-        if q.name == qname:
-            q.stop()
-    with _stream_shuffle(spark):
-        query = (
-            spark.readStream.schema(ev.schema)
-            # 2 files/trigger (r14): output = manifest-committed union =
-            # windows finalized by the FINAL watermark — invariant to the
-            # chunk→batch grouping (see streams._run_stream).
-            .option("maxFilesPerTrigger", 2)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-            .withWatermark("ts", _WATERMARK)
-            .groupBy(F.window("ts", "600 seconds"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("win_start"),
-                "event_type",
-                "n",
-            )
-            # coalesce(1) (r14, guide §4): each staged file is one Python
-            # writer-task round trip per epoch; the finalized rows per
-            # epoch are a handful — one task stages them all. Committed
-            # row union unchanged; the two-phase commit contract (stage →
-            # per-batch manifest) is exercised identically.
-            .coalesce(1)
-            .writeStream.format("w32bd_jsonl_stream_sink")
-            .option("path", out)
-            .option(
-                "checkpointLocation", os.path.join(out, "_ckpt")
-            )
-            .outputMode("append")
-            .queryName(qname)
-            .start()
+    writer = (
+        spark.readStream.schema(ev.schema)
+        # 2 files/trigger (r14): output = manifest-committed union =
+        # windows finalized by the FINAL watermark — invariant to the
+        # chunk→batch grouping (see streams._run_stream).
+        .option("maxFilesPerTrigger", 2)
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+        .withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "600 seconds"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.unix_timestamp(F.col("window.start")).alias("win_start"),
+            "event_type",
+            "n",
         )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
+        # coalesce(1) (r14, guide §4): each staged file is one Python
+        # writer-task round trip per epoch; the finalized rows per epoch
+        # are a handful — one task stages them all. Committed row union
+        # unchanged; the two-phase commit contract (stage → per-batch
+        # manifest) is exercised identically.
+        .coalesce(1)
+        .writeStream.format("w32bd_jsonl_stream_sink")
+        .option("path", out)
+        .option("checkpointLocation", os.path.join(out, "_ckpt"))
+        .outputMode("append")
+    )
+    with _query(spark, writer) as q:
+        q.processAllAvailable()
     rows = []
     for entry in sorted(os.listdir(out)):
         if not entry.startswith("_MANIFEST_"):
@@ -1224,11 +1200,7 @@ def stream_python_datasource_sink_arrow(
 
     from ..common import scratch_dir
     from ..session import ensure_package_on_workers
-    from ..streaming.streams import (
-        _WATERMARK,
-        _chunked_source,
-        _stream_shuffle,
-    )
+    from ..streaming.streams import _WATERMARK, _chunked_source, _query
 
     ensure_package_on_workers(spark)
     ev = load_table(spark, sf_dir, "events")
@@ -1307,39 +1279,30 @@ def stream_python_datasource_sink_arrow(
             return _ArrowStreamWriter(self.options["path"])
 
     spark.dataSource.register(_ArrowStreamSink)
-    qname = "w32bd_pydska"
-    for q in spark.streams.active:
-        if q.name == qname:
-            q.stop()
-    with _stream_shuffle(spark):
-        query = (
-            spark.readStream.schema(ev.schema)
-            # 2 files/trigger + coalesce(1) (r14): same argument as the
-            # row-writer twin — committed union invariant, one Arrow
-            # writer round trip per epoch instead of four.
-            .option("maxFilesPerTrigger", 2)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-            .withWatermark("ts", _WATERMARK)
-            .groupBy(F.window("ts", "600 seconds"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("win_start"),
-                "event_type",
-                "n",
-            )
-            .coalesce(1)
-            .writeStream.format("w32bd_jsonl_stream_arrow_sink")
-            .option("path", out)
-            .option("checkpointLocation", os.path.join(out, "_ckpt"))
-            .outputMode("append")
-            .queryName(qname)
-            .start()
+    writer = (
+        spark.readStream.schema(ev.schema)
+        # 2 files/trigger + coalesce(1) (r14): same argument as the
+        # row-writer twin — committed union invariant, one Arrow writer
+        # round trip per epoch instead of four.
+        .option("maxFilesPerTrigger", 2)
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+        .withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "600 seconds"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.unix_timestamp(F.col("window.start")).alias("win_start"),
+            "event_type",
+            "n",
         )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
+        .coalesce(1)
+        .writeStream.format("w32bd_jsonl_stream_arrow_sink")
+        .option("path", out)
+        .option("checkpointLocation", os.path.join(out, "_ckpt"))
+        .outputMode("append")
+    )
+    with _query(spark, writer) as q:
+        q.processAllAvailable()
     rows = []
     for entry in sorted(os.listdir(out)):
         if not entry.startswith("_MANIFEST_"):

@@ -27,11 +27,7 @@ from .. import synth
 from ..io import load_table
 from ..registry import register
 from ..session import ensure_package_on_workers
-from .streams import _chunked_source
-
-_ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
+from .streams import _ROCKSDB_PROVIDER, _chunked_source, _query
 
 try:  # Spark >= 4.0 AND a usable protobuf: transformWithStateInPandas runs
     # a dedicated Python driver worker whose wire protocol is protobuf-based,
@@ -86,19 +82,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_package_on_workers(spark)
     ev = load_table(spark, sf_dir, "events")
     src = _chunked_source(spark, sf_dir, "tws", dup_first=0)
-    # Session conf is shared with every later streaming key: remember the
-    # prior provider so it can be restored after the query stops.
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prior_provider = spark.conf.get(_PROVIDER_KEY)
-    except Exception:
-        prior_provider = None
-    spark.conf.set(_PROVIDER_KEY, _ROCKSDB)
-
-    for q in spark.streams.active:
-        if q.name == "w32bd_tws":
-            q.stop()
-    query = (
+    writer = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
         .option("recursiveFileLookup", "true")
@@ -111,24 +95,21 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
         .writeStream.format("memory")
-        .queryName("w32bd_tws")
         .outputMode("update")
-        .start()
     )
-    query.processAllAvailable()
-    query.stop()
-    if prior_provider is not None:
-        spark.conf.set(_PROVIDER_KEY, prior_provider)
-    else:
-        spark.conf.unset(_PROVIDER_KEY)
+    provider = {
+        "spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER
+    }
+    with _query(spark, writer, python_stateful=True, confs=provider) as q:
+        q.processAllAvailable()
+        sink = spark.table(q.name)
     # update-mode sink holds one row per (batch, user); the final state per
     # user is its last (largest n_events) update.
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
-        spark.table("w32bd_tws")
-        .withColumn("_rn", F.row_number().over(w))
+        sink.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
         .orderBy("user_id")
@@ -176,10 +157,7 @@ def stream_trigger_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     src = _chunked_source(spark, sf_dir, "anow", dup_first=0)
 
-    for q in spark.streams.active:
-        if q.name == "w32bd_anow":
-            q.stop()
-    query = (
+    writer = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
         .option("recursiveFileLookup", "true")
@@ -190,10 +168,9 @@ def stream_trigger_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(synth.sum_micro("value")).alias("sum_value"),
         )
         .writeStream.format("memory")
-        .queryName("w32bd_anow")
         .outputMode("complete")
         .trigger(availableNow=True)
-        .start()
     )
-    query.awaitTermination()
-    return spark.table("w32bd_anow").orderBy("event_type")
+    with _query(spark, writer) as q:
+        q.awaitTermination()
+        return spark.table(q.name).orderBy("event_type")

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
+from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -26,6 +28,7 @@ from .. import synth
 from ..common import build_once
 from ..io import load_table
 from ..registry import register
+from ..session import scoped_confs
 from ..operators.analytics import _GAP_US as _SESS_GAP_US
 from ..operators.analytics import _sessionize_sql as _session_batch_sql
 
@@ -60,26 +63,35 @@ def _stream_partitions(
     return max(4, base // 8)
 
 
-class _stream_shuffle:
-    """Scoped shuffle-partition override for a streaming query's lifetime
-    (numShufflePartitions is captured from the session conf when the
-    query plans its first batch; restored on exit for the batch keys)."""
-
-    def __init__(self, spark: SparkSession, python_stateful: bool = False):
-        self._spark = spark
-        self._python_stateful = python_stateful
-
-    def __enter__(self):
-        self._old = self._spark.conf.get("spark.sql.shuffle.partitions")
-        self._spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(_stream_partitions(self._spark, self._python_stateful)),
-        )
-        return self
-
-    def __exit__(self, *exc):
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._old)
-        return False
+@contextmanager
+def _query(
+    spark: SparkSession,
+    writer,
+    *,
+    python_stateful: bool = False,
+    confs: dict | None = None,
+):
+    """The one streaming-query lifecycle. Starts `writer` under a name
+    unique to this call (w32bd_<uuid4 hex>), so clients sharing a session
+    never stop or read each other's query. The streaming shuffle width and
+    `confs` are set only while start() runs: the query copies the session
+    conf when it starts, so nothing outlives the call. Yields the query;
+    on exit stops it and drops its memory-sink view. Read a memory sink
+    with spark.table(q.name) inside the block; that DataFrame stays valid
+    after the view is dropped."""
+    name = f"w32bd_{uuid.uuid4().hex}"
+    width = str(_stream_partitions(spark, python_stateful))
+    with scoped_confs(
+        spark, {"spark.sql.shuffle.partitions": width, **(confs or {})}
+    ):
+        query = writer.queryName(name).start()
+    try:
+        yield query
+    finally:
+        try:
+            query.stop()
+        finally:
+            spark.catalog.dropTempView(name)
 
 
 # Far-future sentinel offset (30 min past max real ts): final watermark =
@@ -202,8 +214,8 @@ def _run_stream(
     src_dir: str,
     schema,
     transform,
-    name: str,
     max_files: int = 1,
+    confs: dict | None = None,
 ) -> DataFrame:
     """max_files (r14, guide §1/§2 fixed-cost class): every micro-batch
     pays trigger + state-store-commit machinery regardless of data, so
@@ -213,26 +225,16 @@ def _run_stream(
     output (hash-proven per key at 3 SFs). Keys whose oracle or
     demonstration depends on per-chunk batching (dedup replay ordering,
     sentinel-driven eviction, n_updates progressions) stay at 1."""
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files)
         .option("recursiveFileLookup", "true")
         .parquet(src_dir)
     )
-    with _stream_shuffle(spark):
-        query = (
-            transform(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        query.processAllAvailable()
-        query.stop()
-    return spark.table(name)
+    writer = transform(stream).writeStream.format("memory").outputMode("append")
+    with _query(spark, writer, confs=confs) as q:
+        q.processAllAvailable()
+        return spark.table(q.name)
 
 
 # Batch-equivalence oracle under LOCKSTEP IN-ORDER ARRIVAL (r5, the
@@ -296,9 +298,9 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ts-ordered chunks batch (watermark still advances across the two
     # data batches; the final finalization rides the same trailing
     # no-data batch it always did). Hash-proven identical at 3 SFs.
-    return _run_stream(
-        spark, src, ev.schema, transform, "w32bd_wm", max_files=2
-    ).orderBy("win_start", "event_type")
+    return _run_stream(spark, src, ev.schema, transform, max_files=2).orderBy(
+        "win_start", "event_type"
+    )
 
 
 # Batch-equivalence oracle under lockstep arrival (r5): the four main
@@ -336,9 +338,7 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_id", "user_id", "event_type")
         )
 
-    return _run_stream(spark, src, ev.schema, transform, "w32bd_dedup").orderBy(
-        "event_id"
-    )
+    return _run_stream(spark, src, ev.schema, transform).orderBy("event_id")
 
 
 # ---------------------------------------------------------------------------
@@ -404,35 +404,29 @@ def stream_tumbling_file_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     src = _chunked_source(spark, sf_dir, "tfr", dup_first=0)
 
-    for q in spark.streams.active:
-        if q.name == "w32bd_tfr":
-            q.stop()
-    with _stream_shuffle(spark):
-        query = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-            .groupBy(F.window("ts", "86400 seconds"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("win_start"),
-                "event_type",
-                "n",
-            )
-            .writeStream.format("memory")
-            .queryName("w32bd_tfr")
-            .outputMode("update")
-            .start()
+    writer = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+        .groupBy(F.window("ts", "86400 seconds"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.unix_timestamp(F.col("window.start")).alias("win_start"),
+            "event_type",
+            "n",
         )
-        query.processAllAvailable()
-        query.stop()
+        .writeStream.format("memory")
+        .outputMode("update")
+    )
+    with _query(spark, writer) as q:
+        q.processAllAvailable()
+        sink = spark.table(q.name)
     # Update-mode sink: one row per (micro-batch, window) update carrying
     # the cumulative count — the final value is the max, the row count is
     # the number of batches that touched the window.
     return (
-        spark.table("w32bd_tfr")
-        .groupBy("win_start", "event_type")
+        sink.groupBy("win_start", "event_type")
         .agg(F.max("n").alias("n"), F.count(F.lit(1)).alias("n_updates"))
         .orderBy("win_start", "event_type")
     )
@@ -520,33 +514,27 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
 
-    for q in spark.streams.active:
-        if q.name == "w32bd_state":
-            q.stop()
-    with _stream_shuffle(spark, python_stateful=True):
-        query = (
-            spark.readStream.schema(ev.schema)
-            # 2 files/trigger (r14): the exact-BIGINT state makes the
-            # final per-user fold batching-free (the oracle's point), and
-            # the builder keeps only each user's max-n_events row — so
-            # halving the batch count halves the per-(batch, group)
-            # Python round-trips and state (de)serialization while state
-            # still provably crosses a batch boundary. Hash-proven
-            # identical at 3 SFs.
-            .option("maxFilesPerTrigger", 2)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-            .transform(transform)
-            .writeStream.format("memory")
-            .queryName("w32bd_state")
-            .outputMode("update")
-            .start()
-        )
-        query.processAllAvailable()
-        query.stop()
-    # update-mode memory sink appends one row per (batch, user) — keep the
-    # final state per user (max n_events is the last update).
-    final = spark.table("w32bd_state")
+    writer = (
+        spark.readStream.schema(ev.schema)
+        # 2 files/trigger (r14): the exact-BIGINT state makes the final
+        # per-user fold batching-free (the oracle's point), and the
+        # builder keeps only each user's max-n_events row — so halving
+        # the batch count halves the per-(batch, group) Python
+        # round-trips and state (de)serialization while state still
+        # provably crosses a batch boundary. Hash-proven identical at
+        # 3 SFs.
+        .option("maxFilesPerTrigger", 2)
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+        .transform(transform)
+        .writeStream.format("memory")
+        .outputMode("update")
+    )
+    with _query(spark, writer, python_stateful=True) as q:
+        q.processAllAvailable()
+        # update-mode memory sink appends one row per (batch, user) —
+        # keep the final state per user (max n_events is the last update).
+        final = spark.table(q.name)
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
@@ -622,20 +610,15 @@ def stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(sink)
         )
 
-    for q in spark.streams.active:
-        if q.name == "w32bd_feb":
-            q.stop()
-    query = (
+    writer = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
         .option("recursiveFileLookup", "true")
         .parquet(src)
         .writeStream.foreachBatch(handle_batch)
-        .queryName("w32bd_feb")
-        .start()
     )
-    query.processAllAvailable()
-    query.stop()
+    with _query(spark, writer) as q:
+        q.processAllAvailable()
     from pyspark.sql.window import Window
 
     return (
@@ -693,10 +676,6 @@ ORDER BY click_id, view_id
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     src = _chunked_source(spark, sf_dir, "ssj", dup_first=0)
-    name = "w32bd_ssj"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
 
     def side():
         return (
@@ -738,16 +717,10 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         (F.unix_micros("view_ts") - F.unix_micros("click_ts")).alias("gap_us"),
     )
-    with _stream_shuffle(spark):
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        query.processAllAvailable()
-        query.stop()
-    return spark.table(name).orderBy("click_id", "view_id")
+    writer = joined.writeStream.format("memory").outputMode("append")
+    with _query(spark, writer) as q:
+        q.processAllAvailable()
+        return spark.table(q.name).orderBy("click_id", "view_id")
 
 
 # ---------------------------------------------------------------------------
@@ -822,10 +795,6 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ([s90,s91] advances the wm to final, [s92] evicts). For THIS key
     # (1 file/trigger) it is one extra no-op data batch.
     src = _chunked_source(spark, sf_dir, "ssoj", sentinels=3)
-    name = "w32bd_ssoj"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
 
     def side():
         return (
@@ -868,16 +837,10 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("click_user").alias("user_id"),
         (F.unix_micros("view_ts") - F.unix_micros("click_ts")).alias("gap_us"),
     )
-    with _stream_shuffle(spark):
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        query.processAllAvailable()
-        query.stop()
-    return spark.table(name).orderBy("click_id", "view_id")
+    writer = joined.writeStream.format("memory").outputMode("append")
+    with _query(spark, writer) as q:
+        q.processAllAvailable()
+        return spark.table(q.name).orderBy("click_id", "view_id")
 
 
 # ---------------------------------------------------------------------------
@@ -941,10 +904,6 @@ ORDER BY win_start
 def stream_chained_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     src = _chunked_source(spark, sf_dir, "ssoj", sentinels=3)
-    name = "w32bd_scja"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
 
     def side():
         return (
@@ -1004,16 +963,10 @@ def stream_chained_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_gap_us",
         )
     )
-    with _stream_shuffle(spark):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        query.processAllAvailable()
-        query.stop()
-    return spark.table(name).orderBy("win_start")
+    writer = agg.writeStream.format("memory").outputMode("append")
+    with _query(spark, writer) as q:
+        q.processAllAvailable()
+        return spark.table(q.name).orderBy("win_start")
 
 
 # ---------------------------------------------------------------------------
@@ -1062,9 +1015,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("e.event_id", "e.user_id", "e.event_type", "c.c_name", "e.value")
         )
 
-    return _run_stream(spark, src, ev.schema, transform, "w32bd_sstatic").orderBy(
-        "event_id"
-    )
+    return _run_stream(spark, src, ev.schema, transform).orderBy("event_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1100,32 +1051,26 @@ def stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
     shutil.rmtree(base, ignore_errors=True)
 
-    for q in spark.streams.active:
-        if q.name == "w32bd_psink":
-            q.stop()
-    with _stream_shuffle(spark):
-        query = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-            .withWatermark("ts", _WATERMARK)
-            .groupBy(F.window("ts", "600 seconds"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("win_start"),
-                "event_type",
-                "n",
-            )
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .queryName("w32bd_psink")
-            .start()
+    writer = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+        .withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "600 seconds"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.unix_timestamp(F.col("window.start")).alias("win_start"),
+            "event_type",
+            "n",
         )
-        query.processAllAvailable()
-        query.stop()
+        .writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+    )
+    with _query(spark, writer) as q:
+        q.processAllAvailable()
     return spark.read.parquet(sink).orderBy("win_start", "event_type")
 
 
@@ -1152,26 +1097,23 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     del sf_dir  # generator source; scale-independent by design
     import time
 
-    for q in spark.streams.active:
-        if q.name == "w32bd_rate":
-            q.stop()
-    query = (
+    writer = (
         spark.readStream.format("rate")
         .option("rowsPerSecond", 500)
         .load()
         .select("value")
         .writeStream.format("memory")
-        .queryName("w32bd_rate")
         .outputMode("append")
-        .start()
     )
-    deadline = time.time() + 10.0
-    while time.time() < deadline:
-        if spark.table("w32bd_rate").count() >= 500:
-            break
-        time.sleep(0.25)
-    query.stop()
-    return spark.table("w32bd_rate").select(
+    with _query(spark, writer) as q:
+        deadline = time.time() + 10.0
+        while time.time() < deadline:
+            if spark.table(q.name).count() >= 500:
+                break
+            time.sleep(0.25)
+        sink = spark.table(q.name)
+    # planned after the stop: the aggregate reads the final sink contents
+    return sink.select(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum((F.col("value") % 2 == 0).cast("int")).alias("n_even"),
         F.max("value").alias("max_value"),
@@ -1271,9 +1213,6 @@ def stream_unbounded_socket(spark: SparkSession, sf_dir: str) -> DataFrame:
     thread = threading.Thread(target=serve, daemon=True)
     thread.start()
 
-    for q in spark.streams.active:
-        if q.name == "w32bd_sock":
-            q.stop()
     lines = (
         spark.readStream.format("socket")
         .option("host", "127.0.0.1")
@@ -1288,30 +1227,20 @@ def stream_unbounded_socket(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.timestamp_micros(F.col("p")[0].cast("bigint")).alias("ts"),
         F.col("p")[1].alias("event_type"),
     )
-    # ADVICE r8: the whole build/start/poll lives INSIDE the context
-    # manager so the shuffle-width override is restored even when plan
-    # construction or writeStream.start() raises — a manual __enter__
-    # with __exit__ only in the post-start finally leaked the streaming
-    # width (8) into every subsequent batch key's session on failure.
-    query = None
+    writer = (
+        parsed.withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "600 seconds"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.unix_timestamp(F.col("window.start")).alias("win_start"),
+            "event_type",
+            "n",
+        )
+        .writeStream.format("memory")
+        .outputMode("append")
+    )
     try:
-        with _stream_shuffle(spark):
-            query = (
-                parsed.withWatermark("ts", _WATERMARK)
-                .groupBy(F.window("ts", "600 seconds"), "event_type")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .select(
-                    F.unix_timestamp(F.col("window.start")).alias(
-                        "win_start"
-                    ),
-                    "event_type",
-                    "n",
-                )
-                .writeStream.format("memory")
-                .queryName("w32bd_sock")
-                .outputMode("append")
-                .start()
-            )
+        with _query(spark, writer) as query:
             sent.wait(timeout=60.0)
             # The socket source ingests on its own receiver thread, so
             # processAllAvailable() only covers bytes already buffered:
@@ -1335,15 +1264,14 @@ def stream_unbounded_socket(spark: SparkSession, sf_dir: str) -> DataFrame:
                     break
                 time.sleep(0.2)
             query.processAllAvailable()
+            out = spark.table(query.name)
     finally:
-        if query is not None:
-            query.stop()
         done.set()
         try:
             server.close()
         except OSError:
             pass
-    return spark.table("w32bd_sock").orderBy("win_start", "event_type")
+    return out.orderBy("win_start", "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -1454,29 +1382,23 @@ def stream_event_pattern_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
 
-    for q in spark.streams.active:
-        if q.name == "w32bd_cep":
-            q.stop()
-    with _stream_shuffle(spark, python_stateful=True):
-        query = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-            .transform(transform)
-            .writeStream.format("memory")
-            .queryName("w32bd_cep")
-            .outputMode("update")
-            .start()
-        )
-        query.processAllAvailable()
-        query.stop()
+    writer = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+        .transform(transform)
+        .writeStream.format("memory")
+        .outputMode("update")
+    )
+    with _query(spark, writer, python_stateful=True) as q:
+        q.processAllAvailable()
+        sink = spark.table(q.name)
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("user_id").orderBy(F.desc("n_seen"))
     return (
-        spark.table("w32bd_cep")
-        .withColumn("_rn", F.row_number().over(w))
+        sink.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .filter(
             (F.col("n_strict_conversions") + F.col("n_error_bursts")) > 0
@@ -1588,8 +1510,7 @@ def stream_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (hash-proven at 3 SFs + the crafted merge/boundary fixture).
     src = _chunked_source(spark, sf_dir, "sessnat", sentinels=3)
     out = _run_stream(
-        spark, src, ev.schema, _session_native_transform, "w32bd_sessnat",
-        max_files=2,
+        spark, src, ev.schema, _session_native_transform, max_files=2
     )
     return out.filter(F.col("user_id") >= 0).orderBy(
         "user_id", "session_start_us"
@@ -1640,9 +1561,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
             .select("event_id", "user_id", "event_type")
         )
 
-    return _run_stream(
-        spark, src, ev.schema, transform, "w32bd_dedupww"
-    ).orderBy("event_id")
+    return _run_stream(spark, src, ev.schema, transform).orderBy("event_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1702,39 +1621,26 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
                 shutil.copytree(os.path.join(src, d), dst)
 
     def _life():
-        for q in spark.streams.active:
-            if q.name == "w32bd_ckres":
-                q.stop()
-        with _stream_shuffle(spark):
-            query = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .option("recursiveFileLookup", "true")
-                .parquet(stage)
-                .withWatermark("ts", _WATERMARK)
-                .groupBy(F.window("ts", "600 seconds"), "event_type")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .select(
-                    F.unix_timestamp(F.col("window.start")).alias(
-                        "win_start"
-                    ),
-                    "event_type",
-                    "n",
-                )
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .queryName("w32bd_ckres")
-                .start()
+        writer = (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true")
+            .parquet(stage)
+            .withWatermark("ts", _WATERMARK)
+            .groupBy(F.window("ts", "600 seconds"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(
+                F.unix_timestamp(F.col("window.start")).alias("win_start"),
+                "event_type",
+                "n",
             )
-            # try/finally (ADVICE r9): a processAllAvailable failure
-            # mid-batch must not leave the query holding the checkpoint
-            # and sink while a later invocation rmtree's the scratch.
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+        )
+        with _query(spark, writer) as q:
+            q.processAllAvailable()
 
     _reveal(chunks[:half])  # life 1: first half of the timeline
     _life()
@@ -1794,10 +1700,6 @@ FROM events
 def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     src = _chunked_source(spark, sf_dir, "obsm", dup_first=0)
-    name = "w32bd_obsm"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
     stream = (
         spark.readStream.schema(ev.schema)
         # 2 files/trigger (r14): per-batch metric terms are summed /
@@ -1825,21 +1727,16 @@ def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("event_id").alias("min_event_id"),
         F.max("event_id").alias("max_event_id"),
     )
-    with _stream_shuffle(spark):
-        query = (
-            observed.withWatermark("ts", _WATERMARK)
-            .groupBy(F.window("ts", "600 seconds"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-            progresses = list(query.recentProgress)
-        finally:
-            query.stop()
+    writer = (
+        observed.withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "600 seconds"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .writeStream.format("memory")
+        .outputMode("append")
+    )
+    with _query(spark, writer) as q:
+        q.processAllAvailable()
+        progresses = list(q.recentProgress)
     per_batch = []
     for p in progresses:
         om = (p.get("observedMetrics") or {}).get("w32bd_obsm_metrics")
@@ -1928,7 +1825,6 @@ def stream_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     main = [d for d in chunks if "_dups" not in d and "_sent" not in d]
     half = max(1, len(main) // 2)
-    qname = "w32bd_spe2e"
 
     def _reveal(names):
         for d in names:
@@ -1937,37 +1833,29 @@ def stream_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 shutil.copytree(os.path.join(src, d), dst)
 
     def _life():
-        for q in spark.streams.active:
-            if q.name == qname:
-                q.stop()
-        with _stream_shuffle(spark):
-            query = (
-                _pipeline_e2e_transform(
-                    spark.readStream.schema(ev.schema)
-                    # 2 files/trigger (r14): the exactly-once argument is
-                    # per-ROW and batching-independent (each replayed row
-                    # is late-dropped OR dedup-filtered whichever batch
-                    # carries it), sessions finalize against the FINAL
-                    # watermark, and the two sentinel chunks still land
-                    # so the last eviction rides a data batch (the second
-                    # sentinel file forms its own trailing batch: 5
-                    # life-2 files -> ceil(5/2) batches). Hash-proven at
-                    # 3 SFs + the crafted restart fixture.
-                    .option("maxFilesPerTrigger", 2)
-                    .option("recursiveFileLookup", "true")
-                    .parquet(stage)
-                )
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .queryName(qname)
-                .start()
+        writer = (
+            _pipeline_e2e_transform(
+                spark.readStream.schema(ev.schema)
+                # 2 files/trigger (r14): the exactly-once argument is
+                # per-ROW and batching-independent (each replayed row is
+                # late-dropped OR dedup-filtered whichever batch carries
+                # it), sessions finalize against the FINAL watermark, and
+                # the two sentinel chunks still land so the last eviction
+                # rides a data batch (the second sentinel file forms its
+                # own trailing batch: 5 life-2 files -> ceil(5/2)
+                # batches). Hash-proven at 3 SFs + the crafted restart
+                # fixture.
+                .option("maxFilesPerTrigger", 2)
+                .option("recursiveFileLookup", "true")
+                .parquet(stage)
             )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+        )
+        with _query(spark, writer) as q:
+            q.processAllAvailable()
 
     _reveal(main[:half])  # life 1: first half of the real timeline
     _life()
@@ -2081,35 +1969,26 @@ def stream_query_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
         def onQueryTerminated(self, event):
             self.terminated.append(str(event.id))
 
+    writer = (
+        spark.readStream.schema(ev.schema)
+        # 2 files/trigger (r14): the key's output is the summed
+        # numInputRows across the query's progress events — invariant to
+        # batching; still multiple progress events.
+        .option("maxFilesPerTrigger", 2)
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+        .withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "600 seconds"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .writeStream.format("memory")
+        .outputMode("append")
+    )
     collector = _Collector()
     spark.streams.addListener(collector)
-    name = "w32bd_qlist"
     try:
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
-        with _stream_shuffle(spark):
-            query = (
-                spark.readStream.schema(ev.schema)
-                # 2 files/trigger (r14): the key's output is the summed
-                # numInputRows across the query's progress events —
-                # invariant to batching; still multiple progress events.
-                .option("maxFilesPerTrigger", 2)
-                .option("recursiveFileLookup", "true")
-                .parquet(src)
-                .withWatermark("ts", _WATERMARK)
-                .groupBy(F.window("ts", "600 seconds"), "event_type")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .start()
-            )
-            qid = str(query.id)
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
+        with _query(spark, writer) as q:
+            qid = str(q.id)
+            q.processAllAvailable()
         # the bus is async: wait for OUR terminated event — ordering
         # guarantees every prior progress event has been delivered
         deadline = time.monotonic() + 30
@@ -2208,42 +2087,33 @@ def stream_sink_foreach_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
             if self._f is not None:
                 self._f.close()
 
-    qname = "w32bd_fesink"
-    for q in spark.streams.active:
-        if q.name == qname:
-            q.stop()
-    with _stream_shuffle(spark):
-        query = (
-            spark.readStream.schema(ev.schema)
-            # 2 files/trigger (r14): same final-watermark-only output
-            # set as stream_watermark_late (see _run_stream).
-            .option("maxFilesPerTrigger", 2)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-            .withWatermark("ts", _WATERMARK)
-            .groupBy(F.window("ts", "600 seconds"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("win_start"),
-                "event_type",
-                "n",
-            )
-            # coalesce(1) (r14, guide §4 boundary): each NON-EMPTY
-            # (epoch, partition) pays a Python foreach-writer round trip;
-            # the finalized-window rows per epoch are a handful, so 4
-            # write partitions bought nothing but 4x the worker dispatch.
-            # The committed ROW SET is unchanged (per-row sink, read back
-            # and globally ordered).
-            .coalesce(1)
-            .writeStream.foreach(_RowWriter(out))
-            .outputMode("append")
-            .queryName(qname)
-            .start()
+    writer = (
+        spark.readStream.schema(ev.schema)
+        # 2 files/trigger (r14): same final-watermark-only output set as
+        # stream_watermark_late (see _run_stream).
+        .option("maxFilesPerTrigger", 2)
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+        .withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "600 seconds"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.unix_timestamp(F.col("window.start")).alias("win_start"),
+            "event_type",
+            "n",
         )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
+        # coalesce(1) (r14, guide §4 boundary): each NON-EMPTY (epoch,
+        # partition) pays a Python foreach-writer round trip; the
+        # finalized-window rows per epoch are a handful, so 4 write
+        # partitions bought nothing but 4x the worker dispatch. The
+        # committed ROW SET is unchanged (per-row sink, read back and
+        # globally ordered).
+        .coalesce(1)
+        .writeStream.foreach(_RowWriter(out))
+        .outputMode("append")
+    )
+    with _query(spark, writer) as q:
+        q.processAllAvailable()
     rows = []
     for entry in sorted(os.listdir(out)):
         if not entry.startswith("fe-"):
@@ -2316,10 +2186,6 @@ def src_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ck = _ssread_checkpoint(sf_dir)
 
     def build(tmp: str) -> None:
-        name = "w32bd_ssread"
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
         ev = load_table(spark, sf_dir, "events")
         stream = (
             spark.readStream.schema(ev.schema)
@@ -2335,18 +2201,13 @@ def src_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("state_n"),
             )
         )
-        with _stream_shuffle(spark):
-            query = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", tmp)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
+        writer = (
+            agg.writeStream.format("memory")
+            .outputMode("complete")
+            .option("checkpointLocation", tmp)
+        )
+        with _query(spark, writer) as q:
+            q.processAllAvailable()
 
     build_once(ck, build, stamp=f"chunks={_CHUNKS},micro=1e6,v1")
     # The statestore reader resolves the session's StateStoreCoordinator
@@ -2380,57 +2241,20 @@ def src_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 # map). Same topology, watermark and lockstep oracle as
 # stream_watermark_late — the key pins that swapping the provider
 # changes NOTHING about results, which is exactly the guarantee a
-# deployment relies on when its state outgrows executor heap. Conf is
-# scoped: provider class is captured at query start, so the override is
-# restored immediately after the run (the batch keys never see it).
+# deployment relies on when its state outgrows executor heap. The
+# provider class is captured at query start, so _query restores the
+# session conf as soon as start() returns (other keys never see it).
 # ---------------------------------------------------------------------------
 
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
     "RocksDBStateStoreProvider"
 )
-
-
-class _scoped_conf:
-    """Set session confs for a streaming query's lifetime, restore after
-    (unset keys are restored by unsetting — conf.get default sentinel)."""
-
-    def __init__(self, spark: SparkSession, confs: dict):
-        self._spark = spark
-        self._confs = confs
-
-    def __enter__(self):
-        # Snapshot ALL old values before setting ANY (ADVICE r10): if a
-        # later set() raises (invalid/static conf), the except rolls back
-        # the keys already applied so the session is never left half-set.
-        #
-        # conf.get(k) would return the DEFAULT value for an unset key
-        # and the restore would then SET it explicitly — a visible
-        # hygiene change (and a wrong restore if the default ever
-        # differs per-cluster). get(k, None) distinguishes unset.
-        self._old = {k: self._spark.conf.get(k, None) for k in self._confs}
-        applied = []
-        try:
-            for k, v in self._confs.items():
-                self._spark.conf.set(k, v)
-                applied.append(k)
-        except Exception:
-            for k in applied:
-                old = self._old[k]
-                if old is None:
-                    self._spark.conf.unset(k)
-                else:
-                    self._spark.conf.set(k, old)
-            raise
-        return self
-
-    def __exit__(self, *exc):
-        for k, old in self._old.items():
-            if old is None:
-                self._spark.conf.unset(k)
-            else:
-                self._spark.conf.set(k, old)
-        return False
+_ROCKSDB_CONFS = {
+    "spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER,
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled":
+        "true",
+}
 
 
 @register(
@@ -2462,19 +2286,11 @@ def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    with _scoped_conf(
-        spark,
-        {
-            "spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER,
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled": "true",
-        },
-    ):
-        # max_files=2 (r14): same final-watermark-only oracle as
-        # stream_watermark_late — see _run_stream.
-        out = _run_stream(
-            spark, src, ev.schema, transform, "w32bd_rocksdb", max_files=2
-        )
+    # max_files=2 (r14): same final-watermark-only oracle as
+    # stream_watermark_late — see _run_stream.
+    out = _run_stream(
+        spark, src, ev.schema, transform, max_files=2, confs=_ROCKSDB_CONFS
+    )
     return out.orderBy("win_start", "event_type")
 
 
@@ -2550,10 +2366,6 @@ def src_statestore_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build(tmp: str) -> None:
-        name = "w32bd_ssreadcf"
-        for q in spark.streams.active:
-            if q.name == name:
-                q.stop()
         ev = load_table(spark, sf_dir, "events")
         stream = (
             spark.readStream.schema(ev.schema)
@@ -2569,26 +2381,13 @@ def src_statestore_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("state_n"),
             )
         )
-        with _stream_shuffle(spark), _scoped_conf(
-            spark,
-            {
-                "spark.sql.streaming.stateStore.providerClass":
-                    _ROCKSDB_PROVIDER,
-                "spark.sql.streaming.stateStore.rocksdb."
-                "changelogCheckpointing.enabled": "true",
-            },
-        ):
-            query = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", tmp)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
+        writer = (
+            agg.writeStream.format("memory")
+            .outputMode("complete")
+            .option("checkpointLocation", tmp)
+        )
+        with _query(spark, writer, confs=_ROCKSDB_CONFS) as q:
+            q.processAllAvailable()
 
     build_once(ck, build, stamp=f"chunks={_CHUNKS},micro=1e6,rocksdb,v1")
     try:
