@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+value-hash).
 
 All implementation lives in ``week3_2_practice_big_data__spark`` (see
 SURVEY.md §2 for the key inventory); this module only adapts the engine's

@@ -1,10 +1,16 @@
 #!/usr/bin/env python
-"""Headline-query benchmark (BASELINE.md protocol).
+"""Headline-query timing: prints ONE JSON line and writes no file.
 
-Runs the headline SURVEY §2 keys at $SPARK_GRAFT_SF_DIR (default sf0.1) on a
-warm local[$SPARK_GRAFT_CPUS] session, median AND min of 5 interleaved runs
-per query, full plan execution via the no-op sink (no driver collect skew).
-Prints ONE JSON line.
+Runs the HEADLINE keys at $SPARK_GRAFT_SF_DIR (default sf0.1) on a warm
+local[$SPARK_GRAFT_CPUS] session. Each run is the key's builder plus a
+no-op write, so the whole plan executes without a driver collect. One
+untimed first pass, then N_PASSES pass-interleaved timed passes; per key
+the median (`queries`), the min (`queries_min`) and the first pass
+(`queries_first`) are reported, and `value` is the sum of the medians.
+
+The engine's benchmark is perfbench/ (BENCHMARK.json, protocol in
+perfbench/WORKLOADS.md); this script only keeps the
+`metric/value/unit/queries/sf` line its callers read.
 """
 
 from __future__ import annotations
@@ -21,548 +27,68 @@ from week3_2_practice_big_data__spark import REGISTRY, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Interleaved timed passes: the host's throughput drifts over minutes, and
+# interleaving spreads that drift evenly across keys instead of loading it
+# onto whichever keys run last.
+N_PASSES = 5
+
 HEADLINE = [
     # relational core
-    "agg_groupby_multi",
-    "join_inner_equi",
-    "join_range_theta",
-    "sort_orderby",
-    "win_conv1d_frame",
+    "agg_groupby_multi", "join_inner_equi", "join_range_theta",
+    "sort_orderby", "win_conv1d_frame",
     # generative pipeline
-    "filt_point_in_polygon",
-    "filt_pip_scanline",
-    "win_conv2d_separable",
-    "sort_composite_order",
-    "gen_poster_full",
-    "gen_poster_shadow",
-    "proj_resample_bilinear",
-    # round-4 additions: caption-stamped composite, 7:10 aspect composite
-    "gen_poster_caption",
-    "gen_poster_aspect",
+    "filt_point_in_polygon", "filt_pip_scanline", "win_conv2d_separable",
+    "sort_composite_order", "gen_poster_full", "gen_poster_shadow",
+    "proj_resample_bilinear", "gen_poster_caption", "gen_poster_aspect",
     # scale patterns
-    "join_bucketed_colocated",
-    "join_q3_shipping_priority",
-    "join_q5_region_volume",
-    # round-2 additions: deeper TPC-H star join, batch kNN, recursive CTE
-    "join_q7_volume_shipping",
-    "ns_ann_knn_join",
+    "join_bucketed_colocated", "join_q3_shipping_priority",
+    "join_q5_region_volume", "join_q7_volume_shipping", "ns_ann_knn_join",
     "qry_recursive_cte",
-    # NORTH-STAR LLM-pipeline ops
-    "ns_dedup_exact",
-    "ns_dedup_minhash",
-    "ns_dedup_ngram_jaccard",
-    "ns_dedup_simhash",
-    "ns_dedup_embed_cosine",
-    "ns_dedup_cluster",
-    "ns_sim_topk",
-    "ns_sim_ann_lsh",
-    "ns_text_tfidf",
-    # round-3 additions: semantic dedup, LM-quality scoring, span dedup
-    "ns_semdedup",
-    "ns_text_perplexity",
-    "ns_dedup_substring",
-    "iter_pagerank_tokens",
-    # event-time windows
-    "stream_tumbling_agg",
-    "stream_session_window",
-    # round-5 additions: hierarchical global-window scale paths and the
-    # oracle-ized streaming keys (no PREV baseline yet — first recorded
-    # medians seed the r6 standing baseline)
-    "win_islands_blocked",
-    "win_ntile_blocked",
-    "stream_watermark_late",
-    "stream_custom_state",
-    # round-6 addition: the corpus-tier key now on the blocked
-    # decomposition (first recorded median seeds the r7 baseline).
-    # stream_unbounded_socket is deliberately NOT benched: its wall is
-    # dominated by the driver-thread broker feeding the TCP socket.
-    "ns_sample_importance",
-    # round-6 second-session additions: the two sketch-accelerated-exact
-    # plans (first recorded medians seed the r7 baseline).
-    "ns_decontaminate_bloom",
-    "agg_sketch_cms_heavy",
-    "win_event_pattern_cep",
-    # round-7 additions: corpus-wide BPE application, the
-    # persist-and-probe index lifecycle, the pushdown-benchmark scan and
-    # the deepest star join (first recorded medians seed the r8
-    # baseline).
-    "ns_bpe_encode",
-    "ns_dedup_incremental_persist",
-    "agg_q6_forecast_revenue",
-    "join_q8_market_share",
-    # round-7 second session: the Q9 profit star (heaviest of the four
-    # closing TPC-H shapes) and the blocked global training-order
-    # permutation (first recorded medians seed the r8 baseline).
-    "join_q9_product_profit",
-    "ns_global_shuffle",
-    # round-7 third session: path-statistic window, summary-sized ACF,
-    # and the graph node-similarity key (first medians seed r8).
-    "ts_max_drawdown",
-    "ts_autocorr",
-    "graph_bipartite_jaccard",
-    "ts_cross_corr",
-    # round-7 fourth session: weighted common-neighbor link prediction,
-    # greedy integer-cents allocation, and the PSI drift monitor (first
-    # medians seed the r8 baseline).
-    "graph_resource_alloc",
-    "win_budget_allocation",
-    "dq_distribution_drift",
-    "agg_sketch_kmv_intersect",
-    # round-7 fifth session: BM25 ranked retrieval over the shared token
-    # stream, clustering coefficient, kNN classification, and the
-    # histogram decision stump (first medians seed the r8 baseline).
-    "ns_text_bm25",
-    "graph_clustering_coeff",
-    "ml_knn_classify",
-    "ml_decision_stump",
-    "win_attribution",
-    "graph_degree_distribution",
-    "ml_lift_gains",
-    "dq_freshness",
-    "dq_rowcount_anomaly",
-    "iter_als_rank2",
-    "win_markov_transitions",
-    "win_survival_km",
-    # round-8: the rebuilt FULL composed pipeline (url canon → dedup
-    # cluster → quality classifier → perplexity tercile → bloom decontam →
-    # pack → blocked global shuffle → mixture epochs) and the multi-source
-    # BFS frontier loop; first medians seed the r9 baseline.
-    "ns_pipeline_e2e",
-    "iter_bfs_sssp",
-    "win_pareto_abc",
-    "ns_curriculum_order",
-    "stream_chained_join_agg",
-    "ts_rollup_multires",
-    "ml_gbt_boost2",
-    # round-9: the native streaming session window, the composed media
-    # pipeline, the lateral Python UDTF, and embedding k-means topic
-    # clustering; first medians seed the r10 baseline.
-    "stream_session_window_native",
-    "ns_mm_pipeline_e2e",
-    "udtf_python_native",
-    "iter_kmeans_embed",
-    "ns_vocab_coverage",
-    "ns_topic_mixture",
-    "src_python_datasource",
-    "udf_arrow_map",
-    # fn_sql_udf landed after the r9 final bench — first median seeds r10
-    "fn_sql_udf",
-    # round-10: observe/CollectMetrics (batch + streaming twin), the
-    # Python streaming data source, applyInArrow, and the composed
-    # streaming pipeline across a checkpoint restart; first medians seed
-    # the r11 baseline.
-    "dq_observe_metrics",
-    "stream_observe_metrics",
-    "src_python_datasource_stream",
-    "udf_arrow_grouped",
-    "stream_pipeline_e2e",
-    "sink_python_datasource",
-    "stream_python_datasource_sink",
-    "qry_pipe_syntax",
-    "fn_variant_type",
-    "stream_query_listener",
-    # landed after the r10 final bench — first medians seed r11
-    "sink_python_datasource_arrow",
-    "src_python_datasource_pushdown",
-    "qry_parameterized_sql",
-    "qry_modern_sql_sugar",
-    "qry_session_variables",
-    "qry_sql_scripting",
-    "fn_udf_sql_register",
-    "udf_pandas_iter",
-    "stream_sink_foreach_rows",
-    "stream_python_datasource_sink_arrow",
-    # round-10 second session: native XML round trip, scalar XML surface,
-    # UTF8_LCASE collation, domain-spined transpose, and the State Data
-    # Source read-back — first medians seed r11.
-    "src_xml_roundtrip",
-    "fn_xml_funcs",
-    "fn_collation",
-    "reshape_transpose",
-    "src_statestore_read",
-    # batch 2: dynamic SQL, TIME type, DataFrame lateral join, file
-    # metadata provenance, RocksDB-backed streaming state.
-    "qry_dynamic_sql",
-    "fn_time_type",
-    "join_lateral_df",
-    "src_file_metadata",
-    "stream_rocksdb_state",
-    # batch 3: the state change feed and the groupingSets API twin.
-    "src_statestore_changefeed",
-    "agg_grouping_sets_df",
-    # batch 4: interval-typed aggregation and the Arrow interchange.
-    "fn_interval_agg",
-    "src_arrow_roundtrip",
-    # batch 5: the contingency table and the NULL-fill union.
-    "agg_crosstab",
-    "set_union_byname_missing",
-    # batch 6 (landed after the r10 closing bench, like the r9/r10
-    # precedent) — first medians seed r11.
-    "fn_mask_redact",
-    "fn_crypto_aes",
-    # round-11: the df.stat completion sweep (freqItems, approxQuantile,
-    # cov/corr, sampleBy — each wraps the driver-side API in a
-    # distributed exact-verification plan); first medians seed r12.
-    "agg_freq_items",
-    "agg_approx_quantile",
-    "agg_cov_corr",
-    "agg_sample_by",
-    # round-11 second batch: the native Datasketches theta set algebra
-    # and the ANSI regression aggregate family.
-    "agg_sketch_theta_ops",
-    "agg_regr_native",
-    "agg_bitmap_native",
-    "agg_histogram_numeric",
-    # landed after the r11 closing bench (r9/r10 batch-6 precedent) —
-    # first medians seed r12.
-    "agg_random_split",
-    "agg_describe_summary",
-    "limit_offset_page",
-    # round-12: the pandas-on-Spark dialect bridge — first median seeds
-    # r13 (sf0.1 continuity) and the sf1 seed comes from the next quiet
-    # sf1 run.
-    "qry_pandas_on_spark",
+    # LLM data-prep ops
+    "ns_dedup_exact", "ns_dedup_minhash", "ns_dedup_ngram_jaccard",
+    "ns_dedup_simhash", "ns_dedup_embed_cosine", "ns_dedup_cluster",
+    "ns_sim_topk", "ns_sim_ann_lsh", "ns_text_tfidf", "ns_semdedup",
+    "ns_text_perplexity", "ns_dedup_substring", "iter_pagerank_tokens",
+    # event-time windows, then the keys added later in the order they landed
+    # (the order sets the interleaving, so it is kept). stream_unbounded_socket
+    # is not benched: its wall is the driver-thread broker feeding the socket.
+    "stream_tumbling_agg", "stream_session_window", "win_islands_blocked",
+    "win_ntile_blocked", "stream_watermark_late", "stream_custom_state",
+    "ns_sample_importance", "ns_decontaminate_bloom", "agg_sketch_cms_heavy",
+    "win_event_pattern_cep", "ns_bpe_encode", "ns_dedup_incremental_persist",
+    "agg_q6_forecast_revenue", "join_q8_market_share",
+    "join_q9_product_profit", "ns_global_shuffle", "ts_max_drawdown",
+    "ts_autocorr", "graph_bipartite_jaccard", "ts_cross_corr",
+    "graph_resource_alloc", "win_budget_allocation", "dq_distribution_drift",
+    "agg_sketch_kmv_intersect", "ns_text_bm25", "graph_clustering_coeff",
+    "ml_knn_classify", "ml_decision_stump", "win_attribution",
+    "graph_degree_distribution", "ml_lift_gains", "dq_freshness",
+    "dq_rowcount_anomaly", "iter_als_rank2", "win_markov_transitions",
+    "win_survival_km", "ns_pipeline_e2e", "iter_bfs_sssp", "win_pareto_abc",
+    "ns_curriculum_order", "stream_chained_join_agg", "ts_rollup_multires",
+    "ml_gbt_boost2", "stream_session_window_native", "ns_mm_pipeline_e2e",
+    "udtf_python_native", "iter_kmeans_embed", "ns_vocab_coverage",
+    "ns_topic_mixture", "src_python_datasource", "udf_arrow_map",
+    "fn_sql_udf", "dq_observe_metrics", "stream_observe_metrics",
+    "src_python_datasource_stream", "udf_arrow_grouped",
+    "stream_pipeline_e2e", "sink_python_datasource",
+    "stream_python_datasource_sink", "qry_pipe_syntax", "fn_variant_type",
+    "stream_query_listener", "sink_python_datasource_arrow",
+    "src_python_datasource_pushdown", "qry_parameterized_sql",
+    "qry_modern_sql_sugar", "qry_session_variables", "qry_sql_scripting",
+    "fn_udf_sql_register", "udf_pandas_iter", "stream_sink_foreach_rows",
+    "stream_python_datasource_sink_arrow", "src_xml_roundtrip",
+    "fn_xml_funcs", "fn_collation", "reshape_transpose",
+    "src_statestore_read", "qry_dynamic_sql", "fn_time_type",
+    "join_lateral_df", "src_file_metadata", "stream_rocksdb_state",
+    "src_statestore_changefeed", "agg_grouping_sets_df", "fn_interval_agg",
+    "src_arrow_roundtrip", "agg_crosstab", "set_union_byname_missing",
+    "fn_mask_redact", "fn_crypto_aes", "agg_freq_items",
+    "agg_approx_quantile", "agg_cov_corr", "agg_sample_by",
+    "agg_sketch_theta_ops", "agg_regr_native", "agg_bitmap_native",
+    "agg_histogram_numeric", "agg_random_split", "agg_describe_summary",
+    "limit_offset_page", "qry_pandas_on_spark",
 ]
-
-
-# Standing per-query baseline: rolled each round from the latest QUIET
-# run only (r6 discipline - a noisy shared-VM artifact would compound
-# drift into the baseline).
-#
-# r13 EPOCH ROLL (VERDICT r12 item 3): BENCH_full_r13.json - the r13
-# round-open run (load 0.31 at launch, 5 interleaved passes, final
-# r13-open code) is the quietest artifact of the project: 6/135 keys
-# (4%) over the 15% median/min spread bar (quiet criterion <~25%;
-# every prior close-day run sat at 24-46%), median-geomean 0.891x /
-# min-geomean 0.838x vs the r8-quiet epoch, regressions: [], worst
-# key 1.14x. That meets BASELINE.md's roll rule decisively, so ALL
-# entries re-seed from this one artifact - retiring the
-# r08+r09new+r10new+r11fold split epoch whose per-entry provenance
-# bookkeeping (three rounds of it) existed only because no single
-# quiet run had covered every key since r8. History: see BASELINE.md
-# and git for the r9/r10/r11 per-epoch notes this replaces.
-PREV_ROUND = "r13"
-BASELINE_SRC = ("BENCH_full_r13.json - r13 round-open, load 0.31, 5 passes, "
-                "135 keys, 4% over the 15% spread bar (quietest run of the "
-                "project); median-geomean 0.891x / min-geomean 0.838x vs the "
-                "retired r8-quiet split epoch, regressions: [] on both")
-PREV_MEDIANS = {
-    "agg_approx_quantile": 0.898,
-    "agg_bitmap_native": 0.4549,
-    "agg_cov_corr": 0.7478,
-    "agg_crosstab": 1.066,
-    "agg_describe_summary": 1.1731,
-    "agg_freq_items": 0.6115,
-    "agg_groupby_multi": 1.0112,
-    "agg_grouping_sets_df": 0.7834,
-    "agg_histogram_numeric": 0.3063,
-    "agg_q6_forecast_revenue": 0.2219,
-    "agg_random_split": 1.3522,
-    "agg_regr_native": 0.7047,
-    "agg_sample_by": 0.6721,
-    "agg_sketch_cms_heavy": 1.0266,
-    "agg_sketch_kmv_intersect": 0.9459,
-    "agg_sketch_theta_ops": 0.6035,
-    "dq_distribution_drift": 0.298,
-    "dq_freshness": 0.4219,
-    "dq_observe_metrics": 0.6579,
-    "dq_rowcount_anomaly": 0.2877,
-    "filt_pip_scanline": 0.9859,
-    "filt_point_in_polygon": 1.4275,
-    "fn_collation": 0.374,
-    "fn_crypto_aes": 0.4774,
-    "fn_interval_agg": 0.6564,
-    "fn_mask_redact": 0.2236,
-    "fn_sql_udf": 0.3738,
-    "fn_time_type": 0.3456,
-    "fn_udf_sql_register": 0.6021,
-    "fn_variant_type": 1.2603,
-    "fn_xml_funcs": 0.7418,
-    "gen_poster_aspect": 1.7519,
-    "gen_poster_caption": 0.1615,
-    "gen_poster_full": 2.684,
-    "gen_poster_shadow": 1.7458,
-    "graph_bipartite_jaccard": 2.1637,
-    "graph_clustering_coeff": 0.3445,
-    "graph_degree_distribution": 0.2893,
-    "graph_resource_alloc": 2.4301,
-    "iter_als_rank2": 1.2845,
-    "iter_bfs_sssp": 2.9259,
-    "iter_kmeans_embed": 1.9987,
-    "iter_pagerank_tokens": 1.5444,
-    "join_bucketed_colocated": 0.5979,
-    "join_inner_equi": 0.8021,
-    "join_lateral_df": 0.6352,
-    "join_q3_shipping_priority": 0.7721,
-    "join_q5_region_volume": 1.1504,
-    "join_q7_volume_shipping": 0.8897,
-    "join_q8_market_share": 0.9952,
-    "join_q9_product_profit": 1.0311,
-    "join_range_theta": 0.3769,
-    "limit_offset_page": 0.1642,
-    "ml_decision_stump": 0.4319,
-    "ml_gbt_boost2": 1.8069,
-    "ml_knn_classify": 1.1206,
-    "ml_lift_gains": 0.6036,
-    "ns_ann_knn_join": 0.9379,
-    "ns_bpe_encode": 1.8967,
-    "ns_curriculum_order": 0.4131,
-    "ns_decontaminate_bloom": 0.7199,
-    "ns_dedup_cluster": 1.1512,
-    "ns_dedup_embed_cosine": 1.9261,
-    "ns_dedup_exact": 0.3192,
-    "ns_dedup_incremental_persist": 0.6533,
-    "ns_dedup_minhash": 0.7082,
-    "ns_dedup_ngram_jaccard": 1.658,
-    "ns_dedup_simhash": 0.8843,
-    "ns_dedup_substring": 0.6847,
-    "ns_global_shuffle": 0.4821,
-    "ns_mm_pipeline_e2e": 1.0914,
-    "ns_pipeline_e2e": 0.7536,
-    "ns_sample_importance": 0.4384,
-    "ns_semdedup": 2.8169,
-    "ns_sim_ann_lsh": 0.2155,
-    "ns_sim_topk": 0.2934,
-    "ns_text_bm25": 1.0975,
-    "ns_text_perplexity": 0.4682,
-    "ns_text_tfidf": 0.7748,
-    "ns_topic_mixture": 1.9175,
-    "ns_vocab_coverage": 0.9902,
-    "proj_resample_bilinear": 0.4096,
-    "qry_dynamic_sql": 0.3211,
-    "qry_modern_sql_sugar": 0.2557,
-    "qry_pandas_on_spark": 0.5881,
-    "qry_parameterized_sql": 1.4705,
-    "qry_pipe_syntax": 0.9601,
-    "qry_recursive_cte": 1.4499,
-    "qry_session_variables": 0.2596,
-    "qry_sql_scripting": 0.8928,
-    "reshape_transpose": 1.191,
-    "set_union_byname_missing": 0.3203,
-    "sink_python_datasource": 1.4877,
-    "sink_python_datasource_arrow": 1.3316,
-    "sort_composite_order": 1.9434,
-    "sort_orderby": 0.6061,
-    "src_arrow_roundtrip": 0.2595,
-    "src_file_metadata": 0.3858,
-    "src_python_datasource": 0.8703,
-    "src_python_datasource_pushdown": 0.7409,
-    "src_python_datasource_stream": 4.9623,
-    "src_statestore_changefeed": 0.2733,
-    "src_statestore_read": 0.2513,
-    "src_xml_roundtrip": 0.4342,
-    "stream_chained_join_agg": 7.099,
-    "stream_custom_state": 4.6305,
-    "stream_observe_metrics": 2.5809,
-    "stream_pipeline_e2e": 5.4732,
-    "stream_python_datasource_sink": 5.1026,
-    "stream_python_datasource_sink_arrow": 4.7814,
-    "stream_query_listener": 2.3186,
-    "stream_rocksdb_state": 2.4147,
-    "stream_session_window": 0.8215,
-    "stream_session_window_native": 3.1368,
-    "stream_sink_foreach_rows": 3.4221,
-    "stream_tumbling_agg": 0.5048,
-    "stream_watermark_late": 2.2355,
-    "ts_autocorr": 0.319,
-    "ts_cross_corr": 0.3025,
-    "ts_max_drawdown": 0.5214,
-    "ts_rollup_multires": 0.5066,
-    "udf_arrow_grouped": 1.2335,
-    "udf_arrow_map": 1.8346,
-    "udf_pandas_iter": 0.6919,
-    "udtf_python_native": 2.3105,
-    "win_attribution": 0.5329,
-    "win_budget_allocation": 0.7803,
-    "win_conv1d_frame": 0.8294,
-    "win_conv2d_separable": 1.7749,
-    "win_event_pattern_cep": 1.2847,
-    "win_islands_blocked": 0.2896,
-    "win_markov_transitions": 0.6184,
-    "win_ntile_blocked": 0.8565,
-    "win_pareto_abc": 0.5421,
-    "win_survival_km": 0.53,
-}
-
-
-# Standing sf1 baseline (VERDICT r11 item 2): the regression-JUDGING
-# scale moves to sf1, where the same keys are multi-second and the box's
-# ±30% sub-second ambient band stops dominating the medians. Seeded from
-# the r12 round-open quiet run (BENCH_full_sf1_r12open.json); rolled only
-# from a QUIET sf1 run per the same protocol as PREV_MEDIANS. The sf0.1
-# medians stay for the driver contract + headline total only.
-PREV_MEDIANS_SF1: dict[str, float] = {
-    # qry_pandas_on_spark landed after the r12open run: seeded from a
-    # dedicated quiet 7-run probe (load 0.41, median 0.8717 / min 0.8479)
-    "qry_pandas_on_spark": 0.8717,
-    "agg_approx_quantile": 1.386,
-    "agg_bitmap_native": 0.7999,
-    "agg_cov_corr": 1.5172,
-    "agg_crosstab": 2.2179,
-    "agg_describe_summary": 1.8506,
-    "agg_freq_items": 1.0436,
-    "agg_groupby_multi": 1.9697,
-    "agg_grouping_sets_df": 1.464,
-    "agg_histogram_numeric": 0.6673,
-    "agg_q6_forecast_revenue": 0.5099,
-    "agg_random_split": 1.7864,
-    "agg_regr_native": 1.2832,
-    "agg_sample_by": 1.3273,
-    "agg_sketch_cms_heavy": 4.8259,
-    "agg_sketch_kmv_intersect": 1.4435,
-    "agg_sketch_theta_ops": 1.7602,
-    "dq_distribution_drift": 0.3862,
-    "dq_freshness": 0.7378,
-    "dq_observe_metrics": 3.1005,
-    "dq_rowcount_anomaly": 0.361,
-    "filt_pip_scanline": 1.3274,
-    "filt_point_in_polygon": 1.789,
-    "fn_collation": 0.7121,
-    "fn_crypto_aes": 1.8429,
-    "fn_interval_agg": 1.2385,
-    "fn_mask_redact": 0.4878,
-    "fn_sql_udf": 0.7007,
-    "fn_time_type": 0.6076,
-    "fn_udf_sql_register": 0.9648,
-    "fn_variant_type": 2.3842,
-    "fn_xml_funcs": 1.2015,
-    "gen_poster_aspect": 2.336,
-    "gen_poster_caption": 0.2432,
-    "gen_poster_full": 3.7861,
-    "gen_poster_shadow": 2.2933,
-    "graph_bipartite_jaccard": 12.9867,
-    "graph_clustering_coeff": 0.4829,
-    "graph_degree_distribution": 0.4689,
-    "graph_resource_alloc": 14.4229,
-    "iter_als_rank2": 3.6718,
-    "iter_bfs_sssp": 7.3496,
-    "iter_kmeans_embed": 3.5164,
-    "iter_pagerank_tokens": 2.3699,
-    "join_bucketed_colocated": 2.1276,
-    "join_inner_equi": 1.881,
-    "join_lateral_df": 1.2444,
-    "join_q3_shipping_priority": 1.6528,
-    "join_q5_region_volume": 2.3738,
-    "join_q7_volume_shipping": 2.0161,
-    "join_q8_market_share": 2.4339,
-    "join_q9_product_profit": 2.2982,
-    "join_range_theta": 1.1655,
-    "limit_offset_page": 0.4351,
-    "ml_decision_stump": 0.6419,
-    "ml_gbt_boost2": 2.5427,
-    "ml_knn_classify": 27.9808,
-    "ml_lift_gains": 1.2349,
-    "ns_ann_knn_join": 31.0523,
-    "ns_bpe_encode": 3.1959,
-    "ns_curriculum_order": 0.8953,
-    "ns_decontaminate_bloom": 1.4051,
-    "ns_dedup_cluster": 4.0416,
-    "ns_dedup_embed_cosine": 3.2905,
-    "ns_dedup_exact": 0.5744,
-    "ns_dedup_incremental_persist": 1.5661,
-    "ns_dedup_minhash": 1.4463,
-    "ns_dedup_ngram_jaccard": 2.2078,
-    "ns_dedup_simhash": 1.2952,
-    "ns_dedup_substring": 1.3605,
-    "ns_global_shuffle": 1.1449,
-    "ns_mm_pipeline_e2e": 1.9312,
-    "ns_pipeline_e2e": 1.0141,
-    "ns_sample_importance": 0.7957,
-    "ns_semdedup": 3.7801,
-    "ns_sim_ann_lsh": 0.5528,
-    "ns_sim_topk": 0.5622,
-    "ns_text_bm25": 3.1552,
-    "ns_text_perplexity": 1.0205,
-    "ns_text_tfidf": 2.3155,
-    "ns_topic_mixture": 3.1514,
-    "ns_vocab_coverage": 2.5881,
-    "proj_resample_bilinear": 0.5535,
-    "qry_dynamic_sql": 0.5196,
-    "qry_modern_sql_sugar": 0.6032,
-    "qry_parameterized_sql": 2.6604,
-    "qry_pipe_syntax": 1.8398,
-    "qry_recursive_cte": 6.028,
-    "qry_session_variables": 0.5345,
-    "qry_sql_scripting": 1.3058,
-    "reshape_transpose": 1.8561,
-    "set_union_byname_missing": 0.722,
-    "sink_python_datasource": 2.305,
-    "sink_python_datasource_arrow": 1.9951,
-    "sort_composite_order": 2.4155,
-    "sort_orderby": 1.0474,
-    "src_arrow_roundtrip": 0.4221,
-    "src_file_metadata": 1.1405,
-    "src_python_datasource": 1.1484,
-    "src_python_datasource_pushdown": 1.2756,
-    "src_python_datasource_stream": 8.1599,
-    "src_statestore_changefeed": 0.4167,
-    "src_statestore_read": 0.3572,
-    "src_xml_roundtrip": 0.5953,
-    "stream_chained_join_agg": 10.3531,
-    "stream_custom_state": 31.0634,
-    "stream_observe_metrics": 4.243,
-    "stream_pipeline_e2e": 11.4691,
-    "stream_python_datasource_sink": 7.0363,
-    "stream_python_datasource_sink_arrow": 6.5827,
-    "stream_query_listener": 3.5872,
-    "stream_rocksdb_state": 3.7319,
-    "stream_session_window": 1.6959,
-    "stream_session_window_native": 8.8722,
-    "stream_sink_foreach_rows": 4.8755,
-    "stream_tumbling_agg": 0.9421,
-    "stream_watermark_late": 3.4283,
-    "ts_autocorr": 0.4582,
-    "ts_cross_corr": 0.4738,
-    "ts_max_drawdown": 1.2244,
-    "ts_rollup_multires": 1.1082,
-    "udf_arrow_grouped": 7.947,
-    "udf_arrow_map": 8.7896,
-    "udf_pandas_iter": 1.0819,
-    "udtf_python_native": 4.6463,
-    "win_attribution": 1.2103,
-    "win_budget_allocation": 2.0522,
-    "win_conv1d_frame": 1.6834,
-    "win_conv2d_separable": 2.2489,
-    "win_event_pattern_cep": 2.1632,
-    "win_islands_blocked": 0.5112,
-    "win_markov_transitions": 1.2739,
-    "win_ntile_blocked": 2.1417,
-    "win_pareto_abc": 1.3096,
-    "win_survival_km": 0.945,
-}
-BASELINE_SRC_SF1 = (
-    "BENCH_full_sf1_r12open.json — r12 round-open, 3 passes, 134 keys, "
-    "24/134 keys over the 15% median/min spread bar (82% under; the "
-    "r11 close-day sf1 artifact had 48/131 over), median-geomean "
-    "1.029x vs BENCH_full_sf1_r11.json"
-)
-
-
-# Keys whose ratio vs the standing median reflects deliberate FUNCTIONAL
-# GROWTH, not a plan regression — carried in the output so a >1.3× entry
-# is read with its cause (VERDICT r2 §What's wrong).
-GROWTH_NOTES = {
-    "sort_composite_order": "r2 widened the key from bbox-only to "
-    "full-canvas compositing with themed backgrounds; r1 ratio 1.91x was "
-    "functional growth, baseline now reset to the wide form",
-    "ns_dedup_substring": "r5 added the rep-collapse stage (spans indexed "
-    "over exact-dup representatives + member expansion): ~1.25x at sf0.1 "
-    "buys the df-cap recall fix under duplication and drops the 10x-dup "
-    "wall from 2.3x to ~1.1x",
-    "ns_text_perplexity": "r6 replaced the corpus-sized global ntile(3) "
-    "sort with the blocked hierarchical decomposition (VERDICT r5 item "
-    "3): ~1.4x at sf0.1 from extra exchange stages at tiny scale, vs "
-    "9.8x instead of 89x at 100x — the scale path is the point",
-    "graph_bipartite_jaccard": "r13 moved the hot-part cap from the "
-    "generated pairs onto the edge list BEFORE the self-join (a per-run "
-    "checkpointed capped-edge relation — Catalyst's join reordering had "
-    "been filtering AFTER the C(d,2) explosion): ~+0.5 s at sf0.1 for "
-    "the extra cap pass, vs 29.8 s -> 9.6 s on the 6M-row hot-part "
-    "fixture — the skew regime is the point",
-    "graph_resource_alloc": "same r13 capped-edges-first restructure as "
-    "graph_bipartite_jaccard: ~+0.5 s at sf0.1, vs 49.9 s -> 7.6 s on "
-    "the hot-part fixture",
-}
 
 
 def run_once(spark, key: str) -> float:
@@ -573,44 +99,6 @@ def run_once(spark, key: str) -> float:
     return time.perf_counter() - start
 
 
-from pyspark.sql.streaming import StreamingQueryListener  # noqa: E402
-
-
-class _StreamTap(StreamingQueryListener):
-    """Session-level StreamingQueryListener for the sf1 streaming
-    statistic (VERDICT r12 item 4): at sf1 a streaming key's WALL is
-    dominated by micro-batch trigger alignment (a ~3 s key moves ±40%
-    with zero code change — the stream_watermark_late 1.32×-vs-probe
-    saga), so regressions on streaming keys are additionally judged on
-    a trigger-jitter-insensitive statistic: the summed triggerExecution
-    time of DATA batches (numInputRows > 0) and its per-batch
-    normalization. Idle trigger waits and no-data batches — the jitter
-    — never enter the metric. Batch-twin stream_* keys emit no progress
-    events and naturally drop out."""
-
-    def __init__(self) -> None:
-        super().__init__()
-        self.events: list[tuple[int, float]] = []
-
-    def onQueryStarted(self, event) -> None:
-        pass
-
-    def onQueryProgress(self, event) -> None:
-        try:
-            p = event.progress
-            rows = int(p.numInputRows or 0)
-            ms = float((p.durationMs or {}).get("triggerExecution", 0))
-            self.events.append((rows, ms))
-        except Exception:  # never break the listener bus
-            pass
-
-    def onQueryIdle(self, event) -> None:
-        pass
-
-    def onQueryTerminated(self, event) -> None:
-        pass
-
-
 def main() -> None:
     spark = get_spark("w32bd-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -619,147 +107,28 @@ def main() -> None:
         sf = float(os.path.basename(SF_DIR.rstrip("/")).replace("sf", ""))
     except ValueError:
         sf = None
-    # sf1 only: tap every streaming query's progress events for the
-    # trigger-jitter-insensitive statistic (see _StreamTap). Not worth
-    # the listener-bus noise at sf0.1 where wall is the contract.
-    tap = _StreamTap() if sf == 1.0 else None
-    if tap is not None:
-        spark.streams.addListener(tap)
-    # Warm the JVM/codegen/file-listing paths once before timing — and
-    # RECORD that cold first pass per key (VERDICT r13 item 6b): the
-    # engine's `checkpointed()` helper materializes shared sub-relations
-    # once per (session, sf), so timed passes 1..n measure the warm path;
-    # `queries_first` makes the cold-path cost visible in the artifact
-    # instead of inferable. Additions-only: the timed region, medians and
-    # mins are computed exactly as before.
-    per_query_first = {}
-    for key in keys:
-        per_query_first[key] = round(run_once(spark, key), 4)
-    # Five PASS-INTERLEAVED timed runs (not 5 back-to-back per key): the
-    # host VM's throughput drifts over minutes, and interleaving spreads
-    # that drift evenly across keys instead of loading it onto whichever
-    # keys run last. SPARK_GRAFT_BENCH_PASSES trims the pass count for
-    # long-wall epochs (the sf1 protocol runs 3 passes — a full 5-pass
-    # sf1 sweep would take ~2 h and measure mostly its own drift).
-    n_passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "5"))
+    # The untimed first pass warms the JVM, codegen and file listings; the
+    # engine's `checkpointed` relations are built here once per session, so
+    # `queries_first` shows the cold cost the timed passes no longer pay.
+    per_query_first = {key: round(run_once(spark, key), 4) for key in keys}
     samples = {key: [] for key in keys}
-    stream_samples: dict[str, list[tuple[float, int]]] = {}
-    for _ in range(n_passes):
+    for _ in range(N_PASSES):
         for key in keys:
-            if tap is not None and key.startswith("stream_"):
-                mark = len(tap.events)
-                samples[key].append(run_once(spark, key))
-                # listener events are delivered async on the bus thread;
-                # give the tail a beat to land before slicing
-                time.sleep(0.3)
-                evs = tap.events[mark:]
-                data = [(r, ms) for r, ms in evs if r > 0]
-                stream_samples.setdefault(key, []).append(
-                    (sum(ms for _, ms in data) / 1000.0, len(data))
-                )
-            else:
-                samples[key].append(run_once(spark, key))
-    per_query = {
-        key: round(statistics.median(vals), 4) for key, vals in samples.items()
-    }
-    # Noise floor (VERDICT r3 item 10): the per-key MINIMUM is the best
-    # observed wall — on a noisy shared VM the median of sub-second keys
-    # moves ±30% run to run while the min is far more stable, so
-    # regressions at the 0.1 s scale are judged against BOTH.
-    per_query_min = {
-        key: round(min(vals), 4) for key, vals in samples.items()
-    }
-    total = round(sum(per_query.values()), 4)
-    # The standing PREV_MEDIANS are sf0.1 medians — at any other scale a
-    # ratio against them measures the scale factor, not a regression, so
-    # the comparison only runs at the baseline's own scale.
-    if sf == 0.1:
-        vs_prev = {
-            k: round(per_query[k] / PREV_MEDIANS[k], 2)
-            for k in per_query
-            if k in PREV_MEDIANS and PREV_MEDIANS[k] > 0
-        }
-        regressions = sorted(k for k, r in vs_prev.items() if r > 2.0)
-    elif sf == 1.0 and PREV_MEDIANS_SF1:
-        vs_prev = {
-            k: round(per_query[k] / PREV_MEDIANS_SF1[k], 2)
-            for k in per_query
-            if k in PREV_MEDIANS_SF1 and PREV_MEDIANS_SF1[k] > 0
-        }
-        regressions = sorted(k for k, r in vs_prev.items() if r > 2.0)
-    else:
-        vs_prev = {}
-        regressions = []
+            samples[key].append(run_once(spark, key))
+    per_query = {k: round(statistics.median(v), 4) for k, v in samples.items()}
+    # The min is the best observed wall: far steadier than the median for
+    # sub-second keys on a shared host.
+    per_query_min = {k: round(min(v), 4) for k, v in samples.items()}
     payload = {
         "metric": "headline_queries_total_wall",
-        "value": total,
+        "value": round(sum(per_query.values()), 4),
         "unit": "sec",
-        "n": n_passes,  # interleaved timed passes (median + min reported)
+        "n": N_PASSES,
         "queries": per_query,
         "queries_min": per_query_min,
-        # cold first pass (the warmup run, before any per-session
-        # checkpoint reuse exists) — see the warm loop comment
         "queries_first": per_query_first,
         "sf": sf,
-        "prev_round": PREV_ROUND,
-        "baseline_src": BASELINE_SRC if sf != 1.0 else BASELINE_SRC_SF1,
-        "vs_prev": vs_prev,
-        "regressions": regressions,
-        "growth_notes": {
-            k: v for k, v in GROWTH_NOTES.items() if k in per_query
-        },
     }
-    if stream_samples:
-        # sf1 streaming statistic (VERDICT r12 item 4): per key, the
-        # median/min of summed data-batch triggerExecution seconds, the
-        # median data-batch count, and seconds-per-batch. Judged instead
-        # of wall for stream_* regressions at sf1 — wall stays in
-        # `queries` for the headline total.
-        norm = {}
-        for key, vals in stream_samples.items():
-            data_s = [d for d, b in vals if b > 0]
-            batches = [b for d, b in vals if b > 0]
-            if not data_s:
-                continue  # batch-twin key: no streaming progress events
-            med_d = statistics.median(data_s)
-            med_b = statistics.median(batches)
-            norm[key] = {
-                "data_s_med": round(med_d, 4),
-                "data_s_min": round(min(data_s), 4),
-                "batches_med": med_b,
-                "s_per_batch_med": round(med_d / med_b, 4) if med_b else None,
-            }
-        payload["stream_batch_norm"] = norm
-    # Persist the COMPLETE output in-repo (VERDICT r4 item 3): the
-    # driver's BENCH_r{N}.json artifact keeps only a 2000-char tail,
-    # which has twice truncated away medians/queries_min the next
-    # round's standing baseline needed. Best-effort: benching from a
-    # read-only checkout must not break the stdout contract.
-    round_tag = os.environ.get("SPARK_GRAFT_ROUND", "r13")
-    try:
-        repo = os.path.dirname(os.path.abspath(__file__))
-        full = os.path.join(repo, f"BENCH_full_{round_tag}.json")
-        # Never clobber a committed round artifact (VERDICT r10 item 1:
-        # the driver's post-commit re-run silently overwrote the r10
-        # closing artifact in the worktree). Unless --force / env force
-        # is given, an existing BENCH_full_{tag}.json is left intact and
-        # this run lands on the first free _runN suffix.
-        force = (
-            "--force" in sys.argv
-            or os.environ.get("SPARK_GRAFT_BENCH_FORCE") == "1"
-        )
-        if os.path.exists(full) and not force:
-            n = 2
-            while os.path.exists(
-                os.path.join(repo, f"BENCH_full_{round_tag}_run{n}.json")
-            ):
-                n += 1
-            full = os.path.join(repo, f"BENCH_full_{round_tag}_run{n}.json")
-        with open(full, "w") as f:
-            json.dump(payload, f, indent=1, sort_keys=True)
-            f.write("\n")
-    except OSError:
-        pass
     print(json.dumps(payload))
 
 

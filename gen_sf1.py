@@ -11,18 +11,17 @@ fact AND dimension tables grow 10×:
   - lineitem shifts l_orderkey/l_partkey/l_suppkey in lockstep with
     orders/part/supplier.
   - events replicas are DISJOINT user populations over the same time
-    span (scale_smoke's horizontal-growth shape).
+    span (horizontal growth: more users, not denser ones).
   - documents/embeddings keep their text/vectors verbatim on every copy
     — the 10× corpus carries 10 exact duplicates of every document, the
     worst realistic load for the dedup family.
   - nation/region are fixed 25/5-row domains and copy as-is (c_nationkey
     / s_nationkey stay valid on every replica).
 
-Purpose: the sf0.1 bench medians sit at 0.2–2 s where the box's ±8%
-ambient band dominates; sf1 (6 M lineitem / 1 M events / 50 k docs)
-makes medians noise-resistant and directly evidences the scale posture.
-The driver contract stays on sf0.1 — sf1 is the builder's quiet-epoch
-protocol (BASELINE.md).
+Purpose: sf1 (6 M lineitem / 1 M events / 50 k docs) reaches the
+regimes sf0.1 cannot (sketch estimation mode, row-count safety valves);
+tests/test_sf1_parity.py checks the tolerance-envelope keys on it. The
+driver contract stays on sf0.1.
 
 Run: `python gen_sf1.py` → prints the output dir; idempotent via a
 stamped _DONE marker.

@@ -7,7 +7,7 @@ r11 qry_recursive_cte depth cliff and the r12 theta estimation-mode
 transition both surfaced only when scale changed the regime:
 
   - HEAVY-TAILED KEYS: one hot user owns ~10% of all 1M events (the
-    scale_smoke skew-ladder shape, now in a standing fixture); one hot
+    skew-ladder shape, now in a standing fixture); one hot
     part and one hot supplier each absorb ~10% of 6M lineitems; one hot
     customer owns ~10% of orders. Every groupBy/join/window partitioned
     by these keys sees a 600k-row straggler partition.
@@ -25,9 +25,9 @@ transition both surfaced only when scale changed the regime:
 
 Replication keeps gen_sf1's consistent FK shifts, so joins keep their
 base selectivity EXCEPT where the hot keys concentrate them — which is
-the point. Both engines read the same parquet, so the sweep
-(skew_sweep.py) checks that Spark and DuckDB agree bit-for-bit under
-the hostile regime, and that no key's wall explodes on the straggler
+the point. Both engines read the same parquet, so a sweep over this
+fixture checks that Spark and DuckDB agree bit-for-bit under the
+hostile regime, and that no key's wall explodes on the straggler
 partition.
 
 Run: `python gen_skew.py` -> prints the output dir; idempotent via a

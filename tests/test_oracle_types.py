@@ -4,11 +4,11 @@ The driver hashes VALUES after pulling both result sets through Arrow, so a
 DuckDB oracle whose output column is HUGEINT (e.g. ``sum(int)``) or DECIMAL
 arrives as float64/object while the Spark side emits int64 — the hash then
 flags a "mismatch" on 1585 vs 1585.0 even though every value is identical
-(this killed ``udf_geom_contains`` in CORRECTNESS_r03). This lint runs every
-registered oracle through DuckDB ``DESCRIBE`` (plans only — no data scan) and
-asserts each output column's declared type is in the engine's emitted set, so
-the HUGEINT/DECIMAL class of driver-hash artifacts is caught before the
-driver ever sees it.
+(this killed ``udf_geom_contains`` in the round-3 correctness run). This
+lint runs every registered oracle through DuckDB ``DESCRIBE`` (plans only —
+no data scan) and asserts each output column's declared type is in the
+engine's emitted set, so the HUGEINT/DECIMAL class of driver-hash artifacts
+is caught before the driver ever sees it.
 """
 
 from __future__ import annotations

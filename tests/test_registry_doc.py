@@ -60,6 +60,23 @@ def test_driver_contract_lists_keys_in_registration_order():
     assert list(got) == list(expected)
 
 
+def _package_modules():
+    """Yield (path relative to the package, parsed AST) for every package
+    module: the input of the static guards below."""
+    import ast
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "week3_2_practice_big_data__spark")
+    for dirpath, _, files in os.walk(pkg):
+        for name in sorted(files):
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            yield os.path.relpath(path, pkg).replace(os.sep, "/"), tree
+
+
 # Builders bind their inputs with spark.sql(text, name=df). The only
 # createOrReplaceTempView calls left are keys whose point is a catalog
 # feature; each uses a name unique to the call and drops it in `finally`
@@ -72,26 +89,17 @@ def test_no_temp_views_outside_catalog_feature_keys():
     on a createOrReplaceTempView call outside the listed exceptions."""
     import ast
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pkg = os.path.join(repo, "week3_2_practice_big_data__spark")
     found = set()
-    for dirpath, _, files in os.walk(pkg):
-        for name in sorted(files):
-            if not name.endswith(".py"):
-                continue
-            path = os.path.join(dirpath, name)
-            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
-            with open(path) as f:
-                tree = ast.parse(f.read(), path)
-            for top in tree.body:
-                owner = getattr(top, "name", "<module>")
-                for node in ast.walk(top):
-                    if (
-                        isinstance(node, ast.Call)
-                        and isinstance(node.func, ast.Attribute)
-                        and node.func.attr == "createOrReplaceTempView"
-                    ):
-                        found.add((rel, owner))
+    for rel, tree in _package_modules():
+        for top in tree.body:
+            owner = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createOrReplaceTempView"
+                ):
+                    found.add((rel, owner))
     assert found - _TEMP_VIEW_EXCEPTIONS == set(), sorted(found)
 
 
@@ -115,28 +123,39 @@ def test_stream_lifecycle_and_conf_changes_in_one_place():
     or calls conf.set / conf.unset."""
     import ast
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pkg = os.path.join(repo, "week3_2_practice_big_data__spark")
     found = set()
-    for dirpath, _, files in os.walk(pkg):
-        for name in sorted(files):
-            if not name.endswith(".py"):
-                continue
-            path = os.path.join(dirpath, name)
-            rel = os.path.relpath(path, pkg).replace(os.sep, "/")
-            with open(path) as f:
-                tree = ast.parse(f.read(), path)
-            for top in tree.body:
-                owner = getattr(top, "name", "<module>")
-                for node in ast.walk(top):
-                    if not isinstance(node, ast.Attribute):
-                        continue
-                    inner = getattr(node.value, "attr", None)
-                    if (
-                        node.attr == "queryName"
-                        or (node.attr == "active" and inner == "streams")
-                        or (node.attr in ("set", "unset") and inner == "conf")
-                    ):
-                        found.add((rel, owner, node.attr))
+    for rel, tree in _package_modules():
+        for top in tree.body:
+            owner = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                if not isinstance(node, ast.Attribute):
+                    continue
+                inner = getattr(node.value, "attr", None)
+                if (
+                    node.attr == "queryName"
+                    or (node.attr == "active" and inner == "streams")
+                    or (node.attr in ("set", "unset") and inner == "conf")
+                ):
+                    found.add((rel, owner, node.attr))
     stray = {f for f in found if f[:2] not in _LIFECYCLE_EXCEPTIONS}
     assert stray == set(), sorted(stray)
+
+
+def test_scratch_root_defined_only_in_common():
+    """Static guard (no Spark): `common.scratch_root` is the one place the
+    `.tmp` scratch root is spelled. No other package module holds a string
+    constant that names it as a path component; prose in docstrings and
+    SQL comments (which has spaces) does not count."""
+    import ast
+
+    found = set()
+    for rel, tree in _package_modules():
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and not any(c.isspace() for c in node.value)
+                and ".tmp" in node.value.split("/")
+            ):
+                found.add((rel, node.lineno))
+    assert {rel for rel, _ in found} <= {"common.py"}, sorted(found)

@@ -23,10 +23,9 @@ fixture (12 rows) can:
   - unicode tokenization/casefold/length parity Spark-vs-DuckDB over
     a corpus-scale slice, not a hand-picked dozen rows.
 
-The full 341-key sweep (skew_sweep.py -> SKEW_sweep_r13.json: 325
-MATCH / 16 rows-only, 0 mismatches after the r13 fixes) is the round
-artifact; this gate re-runs a curated representative subset each
-landing session.
+A full sweep of all 341 keys over this fixture gave 325 MATCH / 16
+rows-only and 0 mismatches after the r13 fixes; this gate re-runs a
+curated representative subset each landing session.
 
 Opt-in: costs minutes of Spark+DuckDB over 6M-row tables; runs only
 with SPARK_GRAFT_SKEW_GATE=1. The fixture builds on demand via

@@ -34,17 +34,20 @@ def clip01(expr: str) -> str:
     return f"least(greatest({expr}, 0e0), 1e0)"
 
 
-def scratch_dir(sf_dir: str, name: str) -> str:
-    """Repo-local .tmp scratch path keyed by (name, sf): the ONE place the
-    scratch root is defined (sinks, stream chunks, partitioned warehouse,
-    media exports all build under it)."""
+def scratch_root() -> str:
+    """The repo-local .tmp scratch root: the ONE place it is defined (sinks,
+    stream chunks and checkpoints, the partitioned warehouse, bucketed
+    tables and media exports all build under it)."""
     import os
 
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".tmp",
-        f"{name}_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    return os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
+
+
+def scratch_dir(sf_dir: str, name: str) -> str:
+    """Scratch path under ``scratch_root()`` keyed by (name, sf)."""
+    import os
+
+    return os.path.join(scratch_root(), f"{name}_{os.path.basename(sf_dir.rstrip('/'))}")
 
 
 def build_once(out: str, build, stamp: str = "") -> str:

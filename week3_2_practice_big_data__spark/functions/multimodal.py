@@ -57,10 +57,16 @@ def ns_multimodal_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("blob_id")
 
 
-def decode_meta_pipeline(posters: DataFrame) -> DataFrame:
-    """The ns_mm_decode_meta transform over any posters-shaped relation —
-    factored out (r6) so scale_smoke's replication ladder times the same
-    Arrow-batched UDF path the registered key runs."""
+@register(
+    "ns_mm_decode_meta",
+    oracle=None,  # parses binary — rows-only; pytest asserts consistency
+    doc="Metadata decode from the binary column: IHDR width/height parsed "
+    "from PNG bytes by an Arrow-batched pandas UDF, cross-checked against "
+    "the stored metadata columns (NS).",
+    tags=("ns", "multimodal", "udf"),
+)
+def ns_mm_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ensure_package_on_workers(spark)
 
     @F.pandas_udf("w int, h int")
     def parsed_dims(png: pd.Series) -> pd.DataFrame:
@@ -70,7 +76,8 @@ def decode_meta_pipeline(posters: DataFrame) -> DataFrame:
         return pd.DataFrame({"w": dims.map(lambda d: d[0]), "h": dims.map(lambda d: d[1])})
 
     return (
-        posters.withColumn("parsed", parsed_dims("png"))  # one parse per PNG
+        _posters(spark, sf_dir)
+        .withColumn("parsed", parsed_dims("png"))  # one parse per PNG
         .select(
             "blob_id",
             "width",
@@ -84,19 +91,6 @@ def decode_meta_pipeline(posters: DataFrame) -> DataFrame:
         )
         .orderBy("blob_id")
     )
-
-
-@register(
-    "ns_mm_decode_meta",
-    oracle=None,  # parses binary — rows-only; pytest asserts consistency
-    doc="Metadata decode from the binary column: IHDR width/height parsed "
-    "from PNG bytes by an Arrow-batched pandas UDF, cross-checked against "
-    "the stored metadata columns (NS).",
-    tags=("ns", "multimodal", "udf"),
-)
-def ns_mm_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_on_workers(spark)
-    return decode_meta_pipeline(_posters(spark, sf_dir))
 
 
 def _stub_feature(png: bytes, n: int = 8) -> list[float]:
@@ -346,10 +340,9 @@ def synth_pcm(track_id: int) -> bytes:
     return out.tobytes()
 
 
-def audio_pipeline(spark: SparkSession, n_tracks: int = _AUDIO_TRACKS) -> DataFrame:
-    """The ns_mm_audio_window transform, track count parameterized so the
-    scale ladder can run it at N× tracks."""
-    tracks = spark.range(n_tracks).withColumnRenamed("id", "track_id")
+def audio_pipeline(spark: SparkSession) -> DataFrame:
+    """The ns_mm_audio_window transform over _AUDIO_TRACKS synthetic tracks."""
+    tracks = spark.range(_AUDIO_TRACKS).withColumnRenamed("id", "track_id")
 
     def gen(batches):
         from . import multimodal as mm

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..io import load_table
 from ..registry import register
-from ..common import dec as _dec
+from ..common import dec as _dec, scratch_dir
 from .. import synth
 
 
@@ -340,11 +340,7 @@ ORDER BY o_orderpriority
 def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".tmp",
-        f"bucketed_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    base = scratch_dir(sf_dir, "bucketed")
     sfx = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     lt, ot = f"w32bd_li_{sfx}", f"w32bd_ord_{sfx}"
     catalog = spark.catalog

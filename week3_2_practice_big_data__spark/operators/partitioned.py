@@ -14,24 +14,14 @@ raw table, proving partitioning changed the plan, not the answer.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..common import build_once
+from ..common import build_once, scratch_dir
 from ..io import load_table
 from ..registry import register
 
 _TARGET_YEARS = (1996, 1997)
-
-
-def _warehouse(sf_dir: str) -> str:
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".tmp",
-        f"dpp_orders_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
 
 
 def _partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
@@ -44,7 +34,7 @@ def _partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
             .parquet(tmp)
         )
 
-    return build_once(_warehouse(sf_dir), build)
+    return build_once(scratch_dir(sf_dir, "dpp_orders"), build)
 
 
 def _read_orders_part(spark: SparkSession, sf_dir: str, path: str):

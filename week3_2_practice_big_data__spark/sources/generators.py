@@ -19,6 +19,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..common import scratch_dir
 from ..io import TABLES, load_table
 from ..registry import register
 from .. import synth
@@ -252,13 +253,7 @@ FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     tags=("sink", "scale"),
 )
 def sink_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".tmp",
-        f"partwrite_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    out = scratch_dir(sf_dir, "partwrite")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
     # explicit schema: an empty write leaves no files and schemaless read
@@ -598,7 +593,6 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         WriterCommitMessage,
     )
 
-    from ..common import scratch_dir
     from ..io import load_table
     from ..session import ensure_package_on_workers
 
@@ -732,7 +726,6 @@ def stream_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame
         WriterCommitMessage,
     )
 
-    from ..common import scratch_dir
     from ..session import ensure_package_on_workers
     from ..streaming.streams import _WATERMARK, _chunked_source, _query
 
@@ -904,7 +897,6 @@ def sink_python_datasource_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         WriterCommitMessage,
     )
 
-    from ..common import scratch_dir
     from ..session import ensure_package_on_workers
 
     ensure_package_on_workers(spark)
@@ -1198,7 +1190,6 @@ def stream_python_datasource_sink_arrow(
         WriterCommitMessage,
     )
 
-    from ..common import scratch_dir
     from ..session import ensure_package_on_workers
     from ..streaming.streams import _WATERMARK, _chunked_source, _query
 

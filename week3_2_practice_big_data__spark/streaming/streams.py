@@ -25,14 +25,14 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
-from ..common import build_once
+from ..common import build_once, scratch_root
 from ..io import load_table
 from ..registry import register
 from ..session import scoped_confs
 from ..operators.analytics import _GAP_US as _SESS_GAP_US
 from ..operators.analytics import _sessionize_sql as _session_batch_sql
 
-_REPO_TMP = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tmp")
+_REPO_TMP = scratch_root()
 _CHUNKS = 4
 _WATERMARK = "10 minutes"
 _WATERMARK_US = 600_000_000  # the same 10 minutes, in microseconds
