@@ -268,17 +268,15 @@ def test_tiled_export_stitches_to_single_png(spark):
 def test_poster_shadow_param_point_matches_oracle(spark):
     """Shadow composite is parameterized too: oracle parity at a non-default
     point (different seed/blob count/light/theme/blur strength)."""
-    from week3_2_practice_big_data__spark.plans.generative import (
-        _shadow_composite_sql,
-    )
+    from week3_2_practice_big_data__spark.plans.generative import _composite_sql
     from .oracle import compare, duck_run
 
     # blur 0.08 at canvas 48 → σ = 3.84: past the max(2, ·) floor, so the
     # point varies the kernel width for real (0.03 would collapse to σ=2).
     pt = dict(seed=31, nb=4, canvas=48, lx="0.9e0", ly="-0.1e0",
               theme="neutral", blur_strength=0.08)
-    sdf = spark.sql(_shadow_composite_sql("spark", **pt))
-    ddf = duck_run(_shadow_composite_sql("duckdb", **pt), SF_SMALL)
+    sdf = spark.sql(_composite_sql("spark", **pt))
+    ddf = duck_run(_composite_sql("duckdb", **pt), SF_SMALL)
     compare(sdf, ddf, key="gen_poster_shadow:param")
 
 
@@ -310,6 +308,18 @@ _COMPOSITE_GOLDEN = [
      "8e41669e1c50790d651a497cf1fdb985b44bef9d0b3b81b2af6b8c59f83cdaf5"),
 ]
 _SHADOW_GOLDEN = "825e50188f0cdc4ddb4a27a33aa3e891ec71bab8b0e463e91b0420ca489b6ee1"
+# The shadow at three more points: the gen_poster_shadow_blur point, the
+# param point of test_poster_shadow_param_point_matches_oracle, and 14
+# blobs at 64 px on the warm theme.
+_SHADOW_GOLDENS = [
+    (dict(blur_strength=0.05),
+     "e9d14984b861a775a60a893b48a3cf93300cebe64199234bb53e1c9c122db480"),
+    (dict(seed=31, nb=4, canvas=48, lx="0.9e0", ly="-0.1e0",
+          theme="neutral", blur_strength=0.08),
+     "18885d4b2fc926cc4dd521337425f3e4e0f708e5f95cdbc2ee5213dd7b3bd9e8"),
+    (dict(nb=14, canvas=64, theme="warm", blur_strength=0.015),
+     "5d02c7356c7b616e805295ca2f40ce5a2d90a3fffe13cce84525f4e4607c72c0"),
+]
 
 
 def _duck_pixel_digest(sql: str) -> str:
@@ -324,13 +334,16 @@ def _duck_pixel_digest(sql: str) -> str:
 
 def test_composite_pixels_match_golden_hashes():
     from week3_2_practice_big_data__spark.plans.generative import (
+        _BLUR_STRENGTH,
         _composite_sql,
-        _shadow_composite_sql,
     )
 
     for pt, digest in _COMPOSITE_GOLDEN:
         assert _duck_pixel_digest(_composite_sql("duckdb", **pt)) == digest, pt
-    assert _duck_pixel_digest(_shadow_composite_sql("duckdb")) == _SHADOW_GOLDEN
+    shadow = _composite_sql("duckdb", blur_strength=_BLUR_STRENGTH)
+    assert _duck_pixel_digest(shadow) == _SHADOW_GOLDEN
+    for pt, digest in _SHADOW_GOLDENS:
+        assert _duck_pixel_digest(_composite_sql("duckdb", **pt)) == digest, pt
 
 
 def test_poster_blob_count_bounds(spark):
@@ -352,6 +365,17 @@ def test_poster_blob_count_bounds(spark):
     for nb in (0, 31):
         with pytest.raises(ValueError):
             _composite_sql("spark", nb=nb)
+
+
+def test_shadow_is_square_only():
+    """The shadow's blur and offset assume one pixel pitch on both axes,
+    so a shadow on the 7:10 canvas is refused, not drawn skewed."""
+    import pytest
+
+    from week3_2_practice_big_data__spark.plans.generative import _composite_sql
+
+    with pytest.raises(ValueError):
+        _composite_sql("duckdb", canvas=70, canvas_h=100, blur_strength=0.015)
 
 
 def test_bg_colormap_matches_lut_reference(spark):

@@ -170,7 +170,7 @@ def test_iterative_checkpoint_bounds_plan_depth(spark):
 
 def test_materialized_relations_stay_materialized(spark):
     """Regression guard for the cache-matching pitfall: multi-referenced
-    relations (minhash sig, simhash fp, band sigs, canvas, mask) must enter
+    relations (minhash sig, simhash fp, band sigs, canvas) must enter
     consumer plans as RDD-backed scans (LogicalRDD), not be re-derived —
     plan-matching caching silently misses for collect_list/lambda plans."""
     from .conftest import SF_SMALL
@@ -185,7 +185,6 @@ def test_materialized_relations_stay_materialized(spark):
         "ns_dedup_embed_cosine": 4,   # rep band_sig a/b + rep norms a/b + gm
         "ns_semdedup": 3,             # cells ref x2 + rep norms + gm
         "proj_resample_bilinear": 4,  # canvas 4-neighbor gather
-        "gen_poster_shadow": 2,       # mask: shading chain + blur chain
     }
     for key, min_rdd in expect.items():
         df = REGISTRY[key].builder(spark, SF_SMALL)
@@ -1297,6 +1296,29 @@ def test_poster_render_is_two_stages(spark):
     assert len(re.findall(r"(?<![A-Za-z])Exchange ", final)) <= 2, final
     assert "rangepartitioning" not in final, final
     assert "BroadcastNestedLoopJoin" not in final, final
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+
+
+def test_poster_shadow_render_is_one_exchange(spark):
+    """A shadow edit is the same one-exchange plan: the mask, both blur
+    passes and the offset sample are array work on each blob's row, so
+    there is no join, no window, at most two exchanges and four jobs."""
+    sc = spark.sparkContext
+    group = "test-poster-shadow-shape"
+    sc.setJobGroup(group, group)
+    try:
+        df = _poster_render(
+            spark, seed=31, nb=9, lx="0.9e0", ly="-0.1e0", theme="cool",
+            blur_strength=0.05,
+        )
+        df.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"(?<![A-Za-z])Exchange ", final)) <= 2, final
+    assert "Join" not in final, final
+    assert "Window" not in final, final
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
 
 

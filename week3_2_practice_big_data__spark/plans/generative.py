@@ -20,20 +20,25 @@ Engine re-expression — relational, long-format, per SURVEY §1.2:
   (array filters; the scanline variant computes the row's crossings once).
   A pandas_udf variant (`udf_geom_contains`) cross-checks the same counts
   through the Arrow UDF surface.
-- the blur is two 1-D Gaussian window passes (separable factorization kept
-  from the reference, SURVEY §4.1) — Σ w_o·lead() terms, no self-join.
+- the blur is two 1-D Gaussian passes (separable factorization kept from
+  the reference, SURVEY §4.1), one tap sum Σ w_o·v(o) for both forms: over
+  lead()/lag() windows for `win_conv2d_separable`, and over each blob's
+  mask array for the shadow — the mask built rows × cols from each raster
+  row's edge crossings (scanline, after Raptor), both passes as array
+  transforms, and the (+0.02, −0.02) offset sample as a bilinear read of
+  the blurred array by guarded 2-D index. No join, no window.
 - compositing is the ordered non-commutative fold (SURVEY §7.4.1): per pixel
   sort_array(collect_list(struct(depth,…))) + aggregate() alpha-over fold,
   forced deterministic by the sort key, with the background as its first
-  layer.
+  layer and, with the shadow on, the shadows at zorder 0 under the blobs.
 
 Stage shape: everything before the fold is row-local (generators,
-projections, array folds), so the composite needs one exchange, the
-`REPARTITION(1)` hint in front of the fold, and a 64 px edit runs as two
-Spark jobs. The hint is query text — it scopes to the one query and is a
-comment to DuckDB, which reads the same SQL as the oracle. At reference
-scale the pixel work sits in that one partition; `_composite_sql` notes
-the trade-off.
+projections, array folds), so the composite — shadow or not — needs one
+exchange, the `REPARTITION(1)` hint in front of the fold, and a 64 px
+edit runs as two Spark jobs. The hint is query text — it scopes to the
+one query and is a comment to DuckDB, which reads the same SQL as the
+oracle. At reference scale the pixel work sits in that one partition;
+`_composite_sql` notes the trade-off.
 """
 
 from __future__ import annotations
@@ -432,21 +437,30 @@ def filt_mask_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BLUR_SIGMA = 2.0
 
 
-def _blur_terms(value: str, part: str, order: str, sigma: float = _BLUR_SIGMA) -> str:
-    taps = synth.gaussian_kernel(sigma)
-    terms = []
-    for off, w in taps:
-        fn = "lead" if off >= 0 else "lag"
-        terms.append(
-            f"{synth.flit(w)} * coalesce({fn}({value}, {abs(off)}) "
-            f"OVER (PARTITION BY {part} ORDER BY {order}), 0e0)"
-        )
+def _blur_terms(read, sigma: float = _BLUR_SIGMA) -> str:
+    """Σ w·read(off) over the Gaussian taps, added left to right. `read`
+    gives the value `off` steps along the pass, 0 past the box's edge. One
+    tap sum serves the window passes and the shadow's array passes, so
+    both add the same doubles in the same order."""
+    terms = [f"{synth.flit(w)} * {read(off)}" for off, w in synth.gaussian_kernel(sigma)]
     return "(" + " + ".join(terms) + ")"
 
 
+def _window_read(value: str, part: str, order: str):
+    """Tap reader of a window pass: `value` `off` rows along `order`."""
+    def read(off: int) -> str:
+        fn = "lead" if off >= 0 else "lag"
+        return (
+            f"coalesce({fn}({value}, {abs(off)}) "
+            f"OVER (PARTITION BY {part} ORDER BY {order}), 0e0)"
+        )
+
+    return read
+
+
 def _blur_sql(dialect: str) -> str:
-    pass1 = _blur_terms("mask_f", "blob_id, row", "col")
-    pass2 = _blur_terms("blur1", "blob_id, col", "row")
+    pass1 = _blur_terms(_window_read("mask_f", "blob_id, row", "col"))
+    pass2 = _blur_terms(_window_read("blur1", "blob_id, col", "row"))
     return f"""{_scene_ctes(dialect)},
 pass1 AS (
   SELECT blob_id, row, col, {pass1} AS blur1 FROM mask
@@ -481,7 +495,7 @@ def win_conv2d_separable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _blur_pass1_oracle(dialect: str) -> str:
-    pass1 = _blur_terms("mask_f", "blob_id, row", "col")
+    pass1 = _blur_terms(_window_read("mask_f", "blob_id, row", "col"))
     return f"""{_scene_ctes(dialect)}
 SELECT blob_id, row, col, {synth.q6(pass1)} AS blur1
 FROM mask ORDER BY blob_id, row, col
@@ -693,12 +707,7 @@ def gen_poster_bg_colormap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _fold_sql(
-    dialect: str,
-    source: str,
-    cols: tuple[str, str, str, str] = ("pr", "pg", "pb", "alpha"),
-    with_z: bool = False,
-) -> str:
+def _fold_sql(dialect: str, source: str, with_z: bool = False) -> str:
     """Ordered alpha-over fold per pixel, from a constant accumulator: the
     background is the first layer (depth −1, α = 1, so bg·1 + acc·0 = bg
     exactly), which keeps every parameter out of the fold's expressions.
@@ -709,11 +718,9 @@ def _fold_sql(
     a WHERE: Catalyst would push a WHERE down through the projections,
     inlining the containment test into a Filter a second time.
 
-    ONE definition for both composites: the shadow pipeline passes
-    `with_z=True` (a leading zorder sort field — shadows under blobs) and
-    its layer column names; the accumulator arithmetic exists exactly once.
+    With the shadow on, `with_z=True` adds a leading zorder sort field
+    (shadows under blobs); the accumulator arithmetic is the same.
     """
-    cr, cg, cb, ca = cols
     ze = "'z', z, " if with_z else ""
     zi = "'z', 0, " if with_z else ""
     if dialect == "spark":
@@ -721,8 +728,8 @@ def _fold_sql(
 SELECT row, col,
   aggregate(
     array_sort(collect_list(named_struct(
-      {ze}'depth', depth, 'r', {cr}, 'g', {cg}, 'b', {cb}, 'a', {ca}))
-      FILTER (WHERE {ca} > 0e0)),
+      {ze}'depth', depth, 'r', pr, 'g', pg, 'b', pb, 'a', alpha))
+      FILTER (WHERE alpha > 0e0)),
     named_struct({zi}'depth', 0e0, 'r', 0e0, 'g', 0e0, 'b', 0e0, 'a', 0e0),
     (acc, e) -> named_struct(
       {zi}'depth', 0e0,
@@ -741,8 +748,8 @@ SELECT row, col,
   list_reduce(
     list_prepend(
       struct_pack({zpi}depth := 0e0, r := 0e0, g := 0e0, b := 0e0, a := 0e0),
-      list(struct_pack({zpe}depth := depth, r := {cr}, g := {cg}, b := {cb}, a := {ca})
-           {order}) FILTER (WHERE {ca} > 0e0)),
+      list(struct_pack({zpe}depth := depth, r := pr, g := pg, b := pb, a := alpha)
+           {order}) FILTER (WHERE alpha > 0e0)),
     (acc, e) -> struct_pack(
       {zpi}depth := 0e0,
       r := e.r * e.a + acc.r * (1e0 - e.a),
@@ -752,6 +759,88 @@ SELECT row, col,
   ) AS px
 FROM {source} GROUP BY row, col
 """
+
+
+_SHADOW_OFF = 0.02  # extent shift, app.py:90
+
+
+def _shadow_ctes(dialect: str, canvas: int, blur_strength: float) -> str:
+    """`shadow`: each blob's shadow layer (shadow_toggle, app.py:87-91) —
+    the separable Gaussian blur of its mask (σ = max(2, canvas ·
+    blur_strength), app.py:88), sampled at the (+0.02, −0.02) extent
+    offset (app.py:90). Row-local per blob, on arrays over its box:
+
+    1. the mask, rows × cols, in scanline form: each raster row's edge
+       crossings once, then each pixel's parity against them;
+    2. the two separable passes as array transforms, zero past the box;
+    3. per pixel of the shifted box (`_axis`), the bilinear 4-neighbour
+       gather of the blur, read by guarded 2-D index (zero outside).
+
+    The passes share `_blur_terms` with the window form
+    (`win_conv2d_separable`): the same doubles, added in the same order."""
+    fn = functools.partial(synth.list_fn, dialect=dialect)
+    t, size = fn("transform"), fn("size")
+    pos = functools.partial(synth.lambda_pos, dialect=dialect)
+    get = functools.partial(synth.list_get, dialect=dialect)
+    sigma = max(2.0, canvas * blur_strength)
+    coord = synth.linspace("i", "0e0", "1e0", canvas)
+    offi = synth.flit(_SHADOW_OFF * (canvas - 1))  # shift in pixel-index space
+
+    def cell(arr: str, i: str, j: str | None = None) -> str:
+        # arr[i] (or arr[i][j]), 0 outside the box.
+        val = get(arr, i)
+        return f"coalesce({val if j is None else get(val, j)}, 0e0)"
+
+    # Every lambda reads only lambda variables (see synth.let_sql).
+    axes = dict(e="edges", y=f"{t}(rows, i -> {coord})", x=f"{t}(cols, i -> {coord})")
+    crossings = f"{t}(g.y, y -> {t}(filter(g.e, e -> (e.y1 > y) != (e.y2 > y)), e -> {_XCROSS}))"
+    mask = synth.let_sql(
+        synth.struct_sql(axes, dialect),
+        "g",
+        f"{t}({crossings}, xs -> {t}(g.x, x -> "
+        f"CASE WHEN {size}(filter(xs, v -> v > x)) % 2 = 1 THEN 1e0 ELSE 0e0 END))",
+        dialect,
+    )
+    pass1 = _blur_terms(lambda off: cell("mr", f"{pos('j')} + {off}"), sigma)
+    pass2 = _blur_terms(lambda off: cell("b", f"{pos('i')} + {off}", pos("j")), sigma)
+    blur = synth.let_sql(
+        f"{t}(m, mr -> {t}(mr, (v, j) -> {pass1}))", "b",
+        f"{t}(b, (br, i) -> {t}(br, (v, j) -> {pass2}))", dialect,
+    )
+    p00, p01, p10, p11 = (
+        cell("blur", f"ri + {dr}", f"ci + {dc}") for dr in (0, 1) for dc in (0, 1)
+    )
+    sample = (
+        f"(({p00} * (1e0 - wc) + {p01} * wc) * (1e0 - wr) + "
+        f"({p10} * (1e0 - wc) + {p11} * wc) * wr)"
+    )
+    lo, hi = fn("min"), fn("max")
+
+    def span(a: str) -> str:
+        return synth.explode_sql(synth.int_list(f"{lo}({a})", f"{hi}({a})", dialect), dialect)
+
+    # The shifted box is a contiguous range on each axis, so its pixels
+    # are generated from its bounds: a `sequence` keeps the generators in
+    # Spark's generated code, which reads `blur` in place; a generator over
+    # a lambda (`_axis`'s filter) runs interpreted and copies `blur` into
+    # every pixel row it emits.
+    return f"""sblur AS (
+  SELECT depth, {lo}(rows) AS r_lo, {lo}(cols) AS c_lo, {blur} AS blur, srows, scols
+  FROM (SELECT n.*, {mask} AS m,
+          {_axis(dialect, "by0", "by1", canvas, _SHADOW_OFF)} AS srows,
+          {_axis(dialect, "bx0", "bx1", canvas, -_SHADOW_OFF)} AS scols
+        FROM norms n) n
+),
+shadow AS (
+  SELECT row, col, depth, {sample} AS v
+  FROM (SELECT p.*,
+          CAST(floor(row + {offi}) AS BIGINT) - r_lo AS ri,
+          (row + {offi} - floor(row + {offi})) AS wr,
+          CAST(floor(col - {offi}) AS BIGINT) - c_lo AS ci,
+          (col - {offi} - floor(col - {offi})) AS wc
+        FROM (SELECT r.*, {span("scols")} AS col
+              FROM (SELECT s.*, {span("srows")} AS row FROM sblur s) r) p) s
+)"""
 
 
 def _composite_sql(
@@ -765,12 +854,14 @@ def _composite_sql(
     scanline: bool = False,
     order_by: bool = True,
     canvas_h: int | None = None,
+    blur_strength: float | None = None,
 ) -> str:
     """Full poster composite, parameterized over the reference's UI surface
     (app.py:107-113): seed, n_blobs (1..30), light direction, background
-    theme — plus canvas resolution (width `canvas`, optional distinct
-    height `canvas_h` for the 7:10 figsize, app.py:121) and containment
-    strategy (per pixel vs scanline)."""
+    theme, and the shadow toggle with its blur strength (None: no shadow)
+    — plus canvas resolution (width `canvas`, optional distinct height
+    `canvas_h` for the 7:10 figsize, app.py:121) and containment strategy
+    (per pixel vs scanline)."""
     # Stage shape. Everything up to `all_layers` is row-local: one row per
     # blob, generated pixels, array folds — no join, aggregate or window,
     # so no exchange. The one exchange is the REPARTITION(1) hint on
@@ -789,20 +880,36 @@ def _composite_sql(
     # reference renders the full figure, app.py:121-133). The background
     # layer (depth −1 sorts first, α = 1) routes EVERY pixel through the
     # one fold groupBy.
+    #
+    # The shadow is one more layer under the same exchange: generated
+    # row-locally per blob like the blobs' own pixels, folded at zorder 0
+    # under every blob (zorder 1) with a constant alpha of 0.25·(1−depth).
+    shadow = blur_strength is not None
+    if shadow and canvas_h is not None:
+        raise ValueError("the shadow is drawn on a square canvas only")
     scene_fn = _scene_scanline_ctes if scanline else _scene_ctes
     scene = scene_fn(dialect, seed, nb, canvas, canvas_h, lx, ly, theme)
     tail = " ORDER BY row, col" if order_by else ""
+
+    def z(v: int) -> str:
+        return f"{v} AS z, " if shadow else ""
+
+    shadow_ctes = f"{_shadow_ctes(dialect, canvas, blur_strength)},\n" if shadow else ""
+    shadow_arm = """
+    UNION ALL
+    SELECT row, col, 0 AS z, depth, v AS pr, v AS pg, v AS pb,
+      (0.25e0 * (1e0 - depth)) AS alpha FROM shadow""" if shadow else ""
     return f"""{_shaded_sql(dialect, scene=scene)},
 {_background_ctes(dialect, canvas, canvas_h or canvas)},
-all_layers AS (
+{shadow_ctes}all_layers AS (
   SELECT /*+ REPARTITION(1) */ * FROM (
-    SELECT row, col, depth, pr, pg, pb, alpha FROM shaded
+    SELECT row, col, {z(1)}depth, pr, pg, pb, alpha FROM shaded
     UNION ALL
-    SELECT row, col, -1e0 AS depth, lr AS pr, lg AS pg, lb AS pb, 1e0 AS alpha
-    FROM grid
+    SELECT row, col, {z(-1)}-1e0 AS depth, lr AS pr, lg AS pg, lb AS pb, 1e0 AS alpha
+    FROM grid{shadow_arm}
   ) layers
 ),
-folded AS ({_fold_sql(dialect, "all_layers")})
+folded AS ({_fold_sql(dialect, "all_layers", with_z=shadow)})
 SELECT row, col, {synth.q6('px.r')} AS r, {synth.q6('px.g')} AS g,
   {synth.q6('px.b')} AS b FROM folded{tail}"""
 
@@ -1467,142 +1574,29 @@ def sink_binary_export_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (σ = max(2, canvas·blur_strength), app.py:88), drawn OFFSET by
 # (+0.02, −0.02) in unit coords (the shifted imshow extent at 90), gray
 # colormap (v,v,v), constant layer alpha 0.25·(1−depth), at zorder 0 —
-# under every blob layer (zorder 1). The offset sample is a bilinear
-# 4-neighbor gather of the blur raster (fractional pixel shift), and the
-# composite fold sorts on (zorder, depth) — the painter's algorithm with
-# two z-planes. Fully relational, oracle-checked.
+# under every blob layer (zorder 1). The layer is built on arrays per blob
+# (`_shadow_ctes`): the mask from each raster row's edge crossings, the
+# two passes as array transforms, and the offset sample as a bilinear
+# 4-neighbour read of the blurred array. It is one more arm of
+# `_composite_sql`'s layers, so the fold sorts on (zorder, depth) under
+# the composite's one exchange. Fully relational, oracle-checked.
 # ---------------------------------------------------------------------------
 
 _BLUR_STRENGTH = 0.015  # app.py:113 default
-_SHADOW_OFF = 0.02  # extent shift, app.py:90
-
-
-# The mask columns the shading chain reads: a materialized mask (see
-# `mask_ref` below) carries these.
-_MASK_COLS = (
-    "blob_id, row, col, x, y, inside, mask_f, depth, col_r, col_g, col_b, "
-    "ccx, ccy, dmax, lmin, lmax, lx, ly"
-)
-
-
-def _shadow_composite_sql(
-    dialect: str,
-    seed: int = SEED,
-    nb: int = NB,
-    canvas: int = CANVAS,
-    lx: str = _LX,
-    ly: str = _LY,
-    theme: str | None = None,
-    blur_strength: float = _BLUR_STRENGTH,
-    mask_ref: str | None = None,
-) -> str:
-    # `mask_ref` substitutes a materialized rasterized-mask relation (with
-    # _MASK_COLS) for the mask CTE: the shading chain AND the shadow-blur
-    # chain both consume it, so without materialization the rasterization
-    # runs twice (Spark builder binds a checkpointed relation; DuckDB
-    # self-materializes).
-    if mask_ref is None:
-        scene = _scene_ctes(dialect, seed, nb, canvas, None, lx, ly, theme)
-    else:
-        scene = (
-            _scene_prefix_ctes(dialect, seed, nb, canvas, None, lx, ly, theme)
-            + f",\nmask AS ({mask_ref})"
-        )
-    sigma = max(2.0, canvas * blur_strength)
-    offi = synth.flit(_SHADOW_OFF * (canvas - 1))  # shift in pixel-index space
-    p1 = _blur_terms("mask_f", "blob_id, row", "col", sigma)
-    p2 = _blur_terms("blur1", "blob_id, col", "row", sigma)
-    sample = (
-        "((coalesce(p00.blur2, 0e0) * (1e0 - s.wc) + "
-        "coalesce(p01.blur2, 0e0) * s.wc) * (1e0 - s.wr) + "
-        "(coalesce(p10.blur2, 0e0) * (1e0 - s.wc) + "
-        "coalesce(p11.blur2, 0e0) * s.wc) * s.wr)"
-    )
-    explode = functools.partial(synth.explode_sql, dialect=dialect)
-    srows = _axis(dialect, "by0", "by1", canvas, _SHADOW_OFF)
-    scols = _axis(dialect, "bx0", "bx1", canvas, -_SHADOW_OFF)
-    fold = _fold_sql(
-        dialect, "layers", cols=("lr", "lg", "lb", "la"), with_z=True
-    )
-
-    # sgrid: per blob, the pixels whose offset position (x − 0.02, y + 0.02)
-    # lies in the blob's box — the shadow's extent shift, app.py:90.
-    return f"""{_shaded_sql(dialect, scene=scene)},
-{_background_ctes(dialect, canvas, canvas)},
-spass2 AS (
-  SELECT blob_id, row, col, {p2} AS blur2 FROM
-  (SELECT blob_id, row, col, {p1} AS blur1 FROM mask) bp1
-),
-sgrid AS (
-  SELECT blob_id, depth, row, col,
-    CAST(floor(row + {offi}) AS BIGINT) AS r0,
-    CAST(floor(row + {offi}) AS BIGINT) + 1 AS r1,
-    (row + {offi} - floor(row + {offi})) AS wr,
-    CAST(floor(col - {offi}) AS BIGINT) AS c0,
-    CAST(floor(col - {offi}) AS BIGINT) + 1 AS c1,
-    (col - {offi} - floor(col - {offi})) AS wc
-  FROM (SELECT blob_id, depth, row, {explode(scols)} AS col
-        FROM (SELECT blob_id, bx0, bx1, depth, {explode(srows)} AS row
-              FROM bbox) r) g
-),
-shadow_layers AS (
-  SELECT s.row, s.col, s.depth, {sample} AS v
-  FROM sgrid s
-  LEFT JOIN spass2 p00 ON s.blob_id = p00.blob_id AND s.r0 = p00.row AND s.c0 = p00.col
-  LEFT JOIN spass2 p01 ON s.blob_id = p01.blob_id AND s.r0 = p01.row AND s.c1 = p01.col
-  LEFT JOIN spass2 p10 ON s.blob_id = p10.blob_id AND s.r1 = p10.row AND s.c0 = p10.col
-  LEFT JOIN spass2 p11 ON s.blob_id = p11.blob_id AND s.r1 = p11.row AND s.c1 = p11.col
-),
-layers AS (
-  SELECT /*+ REPARTITION(1) */ * FROM (
-    SELECT row, col, 0 AS z, depth, v AS lr, v AS lg, v AS lb,
-      (0.25e0 * (1e0 - depth)) AS la
-    FROM shadow_layers
-    UNION ALL
-    SELECT row, col, 1 AS z, depth, pr AS lr, pg AS lg, pb AS lb, alpha AS la
-    FROM shaded
-    UNION ALL
-    SELECT row, col, -1 AS z, -1e0 AS depth, lr, lg, lb, 1e0 AS la FROM grid
-  ) l
-),
-folded AS ({fold})
-SELECT row, col, {synth.q6('px.r')} AS r,
-  {synth.q6('px.g')} AS g,
-  {synth.q6('px.b')} AS b
-FROM folded
-ORDER BY row, col
-"""
-
-
-def _cached_mask(spark: SparkSession) -> DataFrame:
-    """Default-parameter rasterized mask, materialized per session (see
-    mask_ref note in _shadow_composite_sql)."""
-    def build():
-        return spark.sql(
-            _scene_ctes("spark") + f"\nSELECT {_MASK_COLS} FROM mask"
-        ).coalesce(4)
-
-    return checkpointed(spark, "poster_mask", build)
 
 
 @register(
     "gen_poster_shadow",
-    oracle=_shadow_composite_sql("duckdb"),
+    oracle=_composite_sql("duckdb", blur_strength=_BLUR_STRENGTH),
     doc="Full composite WITH shadows (shadow_toggle=True, app.py:87-91,112): "
-    "per-blob separable-blur shadow raster, bilinear-sampled at the "
+    "per-blob separable-blur shadow on arrays, bilinear-sampled at the "
     "(+0.02, −0.02) extent offset, gray color, constant alpha "
     "0.25·(1−depth), composited at zorder 0 under all blob layers via a "
     "(zorder, depth)-sorted alpha-over fold (NS-free reference parity).",
     tags=("generative", "param"),
 )
 def gen_poster_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(
-        _shadow_composite_sql(
-            "spark",
-            mask_ref=f"SELECT {_MASK_COLS} FROM {{mask}}",
-        ),
-        mask=_cached_mask(spark),
-    )
+    return spark.sql(_composite_sql("spark", blur_strength=_BLUR_STRENGTH))
 
 
 # σ = max(2, canvas·blur_strength) (app.py:88,113): at the DEFAULT point
@@ -1615,22 +1609,14 @@ _BLUR_POINT = 0.05
 
 @register(
     "gen_poster_shadow_blur",
-    oracle=_shadow_composite_sql("duckdb", blur_strength=_BLUR_POINT),
+    oracle=_composite_sql("duckdb", blur_strength=_BLUR_POINT),
     doc="gen_poster_shadow at blur_strength=0.05 (slider point, app.py:113): "
     "σ = 4.8 instead of the floor-clamped default 2 — oracle parity with a "
-    "genuinely wider separable kernel (same mask raster, reused from the "
-    "session cache).",
+    "genuinely wider separable kernel.",
     tags=("generative", "param"),
 )
 def gen_poster_shadow_blur(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(
-        _shadow_composite_sql(
-            "spark",
-            blur_strength=_BLUR_POINT,
-            mask_ref=f"SELECT {_MASK_COLS} FROM {{mask}}",
-        ),
-        mask=_cached_mask(spark),
-    )
+    return spark.sql(_composite_sql("spark", blur_strength=_BLUR_POINT))
 
 
 # ---------------------------------------------------------------------------

@@ -29,8 +29,7 @@ _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 # switch this decides from MEASURED partition sizes, so it cannot OOM on
 # a bad estimate and is scale-safe: at 100 TB the big joins' partitions
 # exceed the threshold and stay sort-merge. 64 MB per-partition build is
-# conservative for any executor sized per guide §5; env-overridable for
-# deployments that want it off (0) or larger.
+# conservative for any executor sized per guide §5.
 #
 # Ordering audit (ADVICE r13): rewriting SMJ->SHJ changes INTRA-PARTITION
 # row order for any join without a final sort. Audited r14: every oracle
@@ -41,7 +40,21 @@ _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 # r1; the r13 single-pass rewrites moved those sorts BELOW Python nodes
 # but never removed them). No key relies on SMJ's incidental key-sorted
 # partition order.
-_SHJ_THRESHOLD = os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", str(64 * 1024 * 1024))
+_SHJ_THRESHOLD = str(64 * 1024 * 1024)
+
+# The SQL confs the engine relies on, runtime-settable, so both the
+# engine's own session (`get_spark`) and a session handed in by a caller
+# (`ensure_session_confs`) get them. The driver's vanilla session defaults
+# to 200 shuffle partitions — far too many tasks for sf<=0.1 local
+# shuffles; AQE coalescing plus a 32-partition floor keeps task overhead
+# sane without affecting results.
+_SESSION_CONFS = (
+    (_NANOS_CONF, "true"),
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", _SHJ_THRESHOLD),
+    ("spark.sql.shuffle.partitions", "32"),
+)
 
 
 def get_spark(app_name: str = "w32bd-spark-engine") -> SparkSession:
@@ -49,19 +62,13 @@ def get_spark(app_name: str = "w32bd-spark-engine") -> SparkSession:
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            _SHJ_THRESHOLD,
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(_NANOS_CONF, "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    for key, value in _SESSION_CONFS:
+        builder = builder.config(key, value)
     return builder.getOrCreate()
 
 
@@ -108,23 +115,7 @@ def ensure_session_confs(spark: SparkSession) -> None:
     The correctness driver hands us its own SparkSession; these SQL confs are
     runtime-mutable, so apply them defensively before reading tables.
     """
-    for key, value in (
-        (_NANOS_CONF, "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", "true"),
-        # r13: runtime SMJ->SHJ rewrite for joins AQE has measured small
-        # (see _SHJ_THRESHOLD above) — runtime-settable, so the driver's
-        # own session gets it too.
-        (
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            _SHJ_THRESHOLD,
-        ),
-        # the driver's vanilla session defaults to 200 shuffle partitions —
-        # far too many tasks for sf<=0.1 local shuffles; AQE coalescing plus
-        # a 32-partition floor keeps task overhead sane without affecting
-        # results.
-        ("spark.sql.shuffle.partitions", "32"),
-    ):
+    for key, value in _SESSION_CONFS:
         try:
             spark.conf.set(key, value)
         except Exception:

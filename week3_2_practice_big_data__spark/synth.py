@@ -257,6 +257,32 @@ def list_at(array: str, i: str, dialect: str) -> str:
     return f"{array}[{i}]" if dialect == "spark" else f"{array}[{i} + 1]"
 
 
+def list_get(array: str, i: str, dialect: str) -> str:
+    """Element `i` (0-based) of `array`, NULL when `i` falls outside it.
+    Spark's `get` never raises (`array[i]` does under ANSI, and codegen
+    may evaluate it ahead of a CASE guard); DuckDB reads a negative index
+    from the end, so it is guarded."""
+    if dialect == "spark":
+        return f"get({array}, {i})"
+    return f"(CASE WHEN {i} >= 0 THEN {array}[{i} + 1] END)"
+
+
+def lambda_pos(var: str, dialect: str) -> str:
+    """0-based position bound by a `(v, var) -> …` lambda: Spark counts
+    from 0, DuckDB from 1."""
+    return var if dialect == "spark" else f"({var} - 1)"
+
+
+def let_sql(value: str, var: str, body: str, dialect: str) -> str:
+    """`body` with lambda variable `var` bound to `value`, evaluated once.
+
+    A lambda that reads a column directly gets that column's definition
+    inlined by Catalyst (CollapseProject counts one reference) and then
+    evaluates it once per element; a lambda variable is never inlined."""
+    one = f"array({value})" if dialect == "spark" else f"[{value}]"
+    return list_at(f"{list_fn('transform', dialect)}({one}, {var} -> {body})", "0", dialect)
+
+
 def int_list(lo: str, hi: str, dialect: str) -> str:
     """BIGINT array lo..hi inclusive. Keep hi >= lo: Spark's `sequence`
     counts down when lo > hi, DuckDB's `generate_series` is empty."""
