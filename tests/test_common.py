@@ -1,8 +1,9 @@
 """common.py contracts: the session-scoped materialization cache
 (``checkpointed``) and the literal-row relation builder (``local_rows_df``).
 
-The cache tests are Spark-free: a fake session exposes only
-``sparkContext.applicationId`` and a fake frame counts its
+The cache tests are Spark-free, except the one that binds a stored frame in
+a second session: a fake session exposes only ``sparkContext.applicationId``
+and its JVM session's ``sessionUUID``, and a fake frame counts its
 ``localCheckpoint`` calls, so every build is observable."""
 
 from __future__ import annotations
@@ -44,7 +45,10 @@ class _Build:
 
 
 def _session(app_id: str = "app-1"):
-    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+    return SimpleNamespace(
+        sparkContext=SimpleNamespace(applicationId=app_id),
+        _jsparkSession=SimpleNamespace(sessionUUID=lambda: "session-1"),
+    )
 
 
 @pytest.fixture(autouse=True)
@@ -125,6 +129,16 @@ def test_checkpointed_nested_build_does_not_deadlock(store):
     assert not t.is_alive(), "nested checkpointed deadlocked"
     assert len(done) == 1 and inner.calls == 1
     assert {k[1] for k in store} == {"inner", "outer"}
+
+
+def test_checkpointed_binds_in_each_session_of_one_app(spark):
+    """A frame stored from one session is never handed to another session
+    of the same application (``spark.newSession()``): binding it into that
+    session's ``spark.sql`` would fail with TABLE_OR_VIEW_NOT_FOUND."""
+    other = spark.newSession()
+    checkpointed(spark, "range3", lambda: spark.range(3))
+    df = checkpointed(other, "range3", lambda: other.range(3))
+    assert other.sql("SELECT count(*) AS n FROM {t}", t=df).first()["n"] == 3
 
 
 def test_local_rows_df_parses_parameterized_types(spark):

@@ -1140,21 +1140,15 @@ def test_rocksdb_provider_actually_backs_the_state(spark):
 
     from week3_2_practice_big_data__spark.streaming.streams import (
         _ROCKSDB_PROVIDER,
-        _chunked_source,
+        _event_stream,
         _query,
     )
-    from week3_2_practice_big_data__spark.io import load_table
 
     before = spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass", "DEFAULT"
     )
-    src = _chunked_source(spark, SF_SMALL, "wm", dup_first=0)
-    ev = load_table(spark, SF_SMALL, "events")
     writer = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 2)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+        _event_stream(spark, SF_SMALL, max_files=2)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .writeStream.format("memory")

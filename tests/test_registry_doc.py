@@ -159,3 +159,42 @@ def test_scratch_root_defined_only_in_common():
             ):
                 found.add((rel, node.lineno))
     assert {rel for rel, _ in found} <= {"common.py"}, sorted(found)
+
+
+def test_chunked_events_read_only_by_the_one_reader():
+    """Static guard (no Spark): `streams._event_stream` is the one place a
+    package module reads the chunked events. Nowhere else may a module
+    give a `readStream` a schema or set `recursiveFileLookup`; sources
+    that need no schema (rate, socket, Python data sources) do not
+    count."""
+    import ast
+
+    def on_read_stream(node):
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Attribute) and node.attr == "readStream":
+                return True
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return False
+
+    found = []
+    for rel, tree in _package_modules():
+        for top in tree.body:
+            owner = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "schema"
+                    and on_read_stream(node.func.value)
+                ):
+                    found.append((rel, owner, "readStream.schema"))
+                elif (
+                    isinstance(node, ast.Constant)
+                    and node.value == "recursiveFileLookup"
+                ):
+                    found.append((rel, owner, "recursiveFileLookup"))
+    reader = ("streaming/streams.py", "_event_stream")
+    assert sorted(found) == [
+        (*reader, "readStream.schema"),
+        (*reader, "recursiveFileLookup"),
+    ], sorted(found)

@@ -365,17 +365,12 @@ def test_dedup_within_watermark_runs_distinct_operator(spark):
     plan the DeduplicateWithinWatermark operator (not silently the
     unbounded Deduplicate), and both dedup keys must emit the identical
     exactly-once row set on the replayed-duplicates source."""
-    from week3_2_practice_big_data__spark.io import load_table
     from week3_2_practice_big_data__spark.streaming.streams import (
         _WATERMARK,
-        _chunked_source,
+        _event_stream,
     )
 
-    ev = load_table(spark, SF_SMALL, "events")
-    src = _chunked_source(spark, SF_SMALL, "dedupww", dup_first=100)
-    s = spark.readStream.schema(ev.schema).option(
-        "recursiveFileLookup", "true"
-    ).parquet(src)
+    s = _event_stream(spark, SF_SMALL, dup_first=100)
     bounded = s.withWatermark("ts", _WATERMARK).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
@@ -480,8 +475,8 @@ def test_pipeline_e2e_restart_straddles_dedup_and_session_state(spark):
     import duckdb
     import pyspark.sql.functions as F
 
-    from week3_2_practice_big_data__spark.io import load_table
     from week3_2_practice_big_data__spark.streaming.streams import (
+        _event_stream,
         _pipeline_e2e_transform,
         _query,
     )
@@ -512,15 +507,9 @@ def test_pipeline_e2e_restart_straddles_dedup_and_session_state(spark):
             f"COPY e TO '{stage}/{name}.parquet' (FORMAT PARQUET)"
         )
 
-    schema = load_table(spark, SF_SMALL, "events").schema
-
     def life():
         writer = (
-            _pipeline_e2e_transform(
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(stage)
-            )
+            _pipeline_e2e_transform(_event_stream(spark, SF_SMALL, path=stage))
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
@@ -688,10 +677,9 @@ def test_query_confs_apply_at_start_only(spark):
     operators report the streaming width and RocksDB's custom metrics."""
     import pyspark.sql.functions as F
 
-    from week3_2_practice_big_data__spark.io import load_table
     from week3_2_practice_big_data__spark.streaming.streams import (
         _ROCKSDB_CONFS,
-        _chunked_source,
+        _event_stream,
         _query,
         _stream_partitions,
     )
@@ -699,13 +687,8 @@ def test_query_confs_apply_at_start_only(spark):
     before = stream_hygiene(spark)
     width = _stream_partitions(spark)
     assert before[2] != str(width)  # the scope must be observable
-    src = _chunked_source(spark, SF_SMALL, "wm", dup_first=0)
-    ev = load_table(spark, SF_SMALL, "events")
     writer = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 2)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+        _event_stream(spark, SF_SMALL, max_files=2)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .writeStream.format("memory")
@@ -728,20 +711,14 @@ def test_query_failure_leaves_no_stream_view_or_conf(spark):
 
     import pyspark.sql.functions as F
 
-    from week3_2_practice_big_data__spark.io import load_table
     from week3_2_practice_big_data__spark.streaming.streams import (
-        _chunked_source,
+        _event_stream,
         _query,
     )
 
     probe = "spark.w32bd.test.query.probe"
     before = stream_hygiene(spark)
-    src = _chunked_source(spark, SF_SMALL, "wm", dup_first=0)
-    stream = (
-        spark.readStream.schema(load_table(spark, SF_SMALL, "events").schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
+    stream = _event_stream(spark, SF_SMALL)
 
     with pytest.raises(Exception):
         with _query(
@@ -766,19 +743,19 @@ def test_query_failure_leaves_no_stream_view_or_conf(spark):
 
 
 def test_pid_run_dir_reaps_dead_siblings(tmp_path, monkeypatch):
-    """_pid_run_dir (r11): scratch dirs left by dead pids of the same
+    """common.pid_run_dir (r11): scratch dirs left by dead pids of the same
     (prefix, sf) tag are reaped; the caller's own dir name is returned;
     unrelated prefixes and non-pid suffixes are left alone."""
     import os
 
-    from week3_2_practice_big_data__spark.streaming import streams as st
+    from week3_2_practice_big_data__spark import common
 
-    monkeypatch.setattr(st, "_REPO_TMP", str(tmp_path))
+    monkeypatch.setattr(common, "scratch_root", lambda: str(tmp_path))
     dead_pid = 2**22 + 1  # beyond pid_max defaults — never a live process
     (tmp_path / f"x_run_sf9_{dead_pid}").mkdir()
     (tmp_path / "x_run_sf9_notapid").mkdir()
     (tmp_path / f"other_run_sf9_{dead_pid}").mkdir()
-    mine = st._pid_run_dir("x_run", "/data/sf9")
+    mine = common.pid_run_dir("/data/sf9", "x_run")
     assert mine == str(tmp_path / f"x_run_sf9_{os.getpid()}")
     assert not (tmp_path / f"x_run_sf9_{dead_pid}").exists()  # reaped
     assert (tmp_path / "x_run_sf9_notapid").exists()  # suffix not a pid

@@ -7,8 +7,8 @@ Spark builder and stays in lockstep with the DuckDB oracle texts.
 It also owns the engine's ONE materialization cache (``checkpointed``): a
 session-scoped store of relations that several builders, or several
 references inside one builder, reuse. Every entry is keyed by
-``(applicationId, name, sf_dir, params)``; builders never build cache keys
-or hold cache dicts of their own.
+``(applicationId, name, sf_dir, params, session uuid)``; builders never
+build cache keys or hold cache dicts of their own.
 """
 
 from __future__ import annotations
@@ -48,6 +48,33 @@ def scratch_dir(sf_dir: str, name: str) -> str:
     import os
 
     return os.path.join(scratch_root(), f"{name}_{os.path.basename(sf_dir.rstrip('/'))}")
+
+
+def pid_run_dir(sf_dir: str, name: str) -> str:
+    """Scratch path for one process's run: ``scratch_dir(sf_dir, name)``
+    suffixed with the pid, so concurrent processes on one sf never share
+    (and rmtree) a sink or checkpoint. Directories of the same (name, sf)
+    left by DEAD pids are removed first; live pids' directories are never
+    touched (os.kill(pid, 0) probe)."""
+    import os
+    import shutil
+
+    root = scratch_root()
+    want = os.path.basename(scratch_dir(sf_dir, name)) + "_"
+    try:
+        for d in os.listdir(root):
+            pid_s = d[len(want):]
+            if not (d.startswith(want) and pid_s.isdigit()) or int(pid_s) == os.getpid():
+                continue
+            try:
+                os.kill(int(pid_s), 0)  # raises if the owner is gone
+            except ProcessLookupError:
+                shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+            except PermissionError:
+                pass  # live process owned elsewhere — leave it
+    except OSError:
+        pass
+    return os.path.join(root, want + str(os.getpid()))
 
 
 def build_once(out: str, build, stamp: str = "") -> str:
@@ -125,19 +152,23 @@ def ordered_string_agg(dialect: str, expr: str, sep: str, order_by: str) -> str:
     return f"string_agg({expr}, {sep} ORDER BY {order_by})"
 
 
-def session_key(spark) -> str:
-    """Stable cache key for a live SparkSession: the applicationId.
+def session_key(spark) -> tuple[str, str]:
+    """Stable cache key for a live SparkSession: (applicationId, session
+    uuid).
 
     `id(spark)` (the r1–r5 key) is unsafe across session restarts — CPython
     reuses addresses, so a new session could hit a stale localCheckpoint
     bound to a DEAD context. applicationId is unique per SparkContext and
-    never reused within a process."""
-    return spark.sparkContext.applicationId
+    never reused within a process. The JVM session's uuid tells apart the
+    sessions of one application (``spark.newSession()``): a frame built in
+    one of them cannot be bound into another's ``spark.sql``."""
+    return spark.sparkContext.applicationId, spark._jsparkSession.sessionUUID()
 
 
-# The materialization store: (applicationId, name, sf_dir, params) -> value.
-# One re-entrant lock guards it, so concurrent misses on one key build once
-# and a build that itself calls `checkpointed` on the same thread proceeds.
+# The materialization store: (applicationId, name, sf_dir, params, session
+# uuid) -> value. One re-entrant lock guards it, so concurrent misses on
+# one key build once and a build that itself calls `checkpointed` on the
+# same thread proceeds.
 _STORE: dict[tuple, object] = {}
 _STORE_LOCK = threading.RLock()
 
@@ -146,13 +177,14 @@ def _memo(spark, name: str, build, sf_dir: str | None = None, params: tuple = ()
     """Return the stored value for (session, name, sf_dir, params), calling
     ``build()`` once on a miss.
 
-    On a miss, entries keyed to OTHER sessions are evicted first (ADVICE
-    r6): one live session at a time is the usage pattern, and without
-    eviction a long-lived process that restarts sessions would leak each
-    dead session's materialized relations forever.
+    On a miss, entries keyed to OTHER applications are evicted first
+    (ADVICE r6): one live application at a time is the usage pattern, and
+    without eviction a long-lived process that restarts sessions would leak
+    each dead context's materialized relations forever. Entries of other
+    sessions of the same application stay: those sessions are still live.
     """
-    app = session_key(spark)
-    key = (app, name, None if sf_dir is None else sf_dir.rstrip("/"), params)
+    app, session = session_key(spark)
+    key = (app, name, None if sf_dir is None else sf_dir.rstrip("/"), params, session)
     with _STORE_LOCK:
         if key not in _STORE:
             for k in [k for k in _STORE if k[0] != app]:
@@ -175,7 +207,7 @@ def checkpointed(spark, name: str, build, sf_dir: str | None = None, params: tup
     the same name. Pass ``sf_dir`` for relations read from the tables
     (``None`` for session-only relations such as the canvas grid) and
     ``params`` (a hashable tuple) for any other input the result depends
-    on. Keys of other sessions are evicted on a miss (see ``_memo``).
+    on. Keys of other applications are evicted on a miss (see ``_memo``).
     """
     return _memo(spark, name, lambda: build().localCheckpoint(eager=True), sf_dir, params)
 

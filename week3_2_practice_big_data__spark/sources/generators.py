@@ -19,7 +19,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..common import scratch_dir
+from ..common import pid_run_dir, scratch_dir
 from ..io import TABLES, load_table
 from ..registry import register
 from .. import synth
@@ -597,7 +597,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import ensure_package_on_workers
 
     ensure_package_on_workers(spark)
-    out = scratch_dir(sf_dir, "pydsw") + f"_{os.getpid()}"
+    out = pid_run_dir(sf_dir, "pydsw")
     import shutil
 
     shutil.rmtree(out, ignore_errors=True)
@@ -727,12 +727,10 @@ def stream_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     from ..session import ensure_package_on_workers
-    from ..streaming.streams import _WATERMARK, _chunked_source, _query
+    from ..streaming.streams import _WATERMARK, _event_stream, _query
 
     ensure_package_on_workers(spark)
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "pydsk", dup_first=0)
-    out = scratch_dir(sf_dir, "pydsk_out") + f"_{os.getpid()}"
+    out = pid_run_dir(sf_dir, "pydsk_out")
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
 
@@ -790,13 +788,10 @@ def stream_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame
 
     spark.dataSource.register(_JsonlStreamSink)
     writer = (
-        spark.readStream.schema(ev.schema)
         # 2 files/trigger (r14): output = manifest-committed union =
         # windows finalized by the FINAL watermark — invariant to the
-        # chunk→batch grouping (see streams._run_stream).
-        .option("maxFilesPerTrigger", 2)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+        # chunk→batch grouping (see streams._event_stream).
+        _event_stream(spark, sf_dir, max_files=2)
         .withWatermark("ts", _WATERMARK)
         .groupBy(F.window("ts", "600 seconds"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -900,7 +895,7 @@ def sink_python_datasource_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import ensure_package_on_workers
 
     ensure_package_on_workers(spark)
-    out = scratch_dir(sf_dir, "pydswa") + f"_{os.getpid()}"
+    out = pid_run_dir(sf_dir, "pydswa")
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
 
@@ -1191,12 +1186,10 @@ def stream_python_datasource_sink_arrow(
     )
 
     from ..session import ensure_package_on_workers
-    from ..streaming.streams import _WATERMARK, _chunked_source, _query
+    from ..streaming.streams import _WATERMARK, _event_stream, _query
 
     ensure_package_on_workers(spark)
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "pydska", dup_first=0)
-    out = scratch_dir(sf_dir, "pydska_out") + f"_{os.getpid()}"
+    out = pid_run_dir(sf_dir, "pydska_out")
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
 
@@ -1271,13 +1264,10 @@ def stream_python_datasource_sink_arrow(
 
     spark.dataSource.register(_ArrowStreamSink)
     writer = (
-        spark.readStream.schema(ev.schema)
         # 2 files/trigger + coalesce(1) (r14): same argument as the
         # row-writer twin — committed union invariant, one Arrow writer
         # round trip per epoch instead of four.
-        .option("maxFilesPerTrigger", 2)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+        _event_stream(spark, sf_dir, max_files=2)
         .withWatermark("ts", _WATERMARK)
         .groupBy(F.window("ts", "600 seconds"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -18,16 +18,13 @@ asserting totals against the batch aggregation of the same source.
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
-from ..io import load_table
 from ..registry import register
 from ..session import ensure_package_on_workers
-from .streams import _ROCKSDB_PROVIDER, _chunked_source, _query
+from .streams import _ROCKSDB_PROVIDER, _event_stream, _query
 
 try:  # Spark >= 4.0 AND a usable protobuf: transformWithStateInPandas runs
     # a dedicated Python driver worker whose wire protocol is protobuf-based,
@@ -80,13 +77,8 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transformWithStateInPandas needs Spark >= 4.0 and protobuf"
         )
     ensure_package_on_workers(spark)
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "tws", dup_first=0)
     writer = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+        _event_stream(spark, sf_dir)
         .groupBy("user_id")
         .transformWithStateInPandas(
             statefulProcessor=_RunningTotals(),
@@ -154,14 +146,8 @@ FROM events GROUP BY event_type ORDER BY event_type
     tags=("streaming", "trigger"),
 )
 def stream_trigger_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "anow", dup_first=0)
-
     writer = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+        _event_stream(spark, sf_dir)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),

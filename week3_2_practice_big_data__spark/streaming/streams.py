@@ -1,17 +1,20 @@
 """True Structured Streaming operators (SURVEY.md §2.1-I, §7.1 M5).
 
 `readStream` file-source micro-batches over the events table: the table is
-re-sharded into time-ordered chunks under .tmp/ and consumed with
-maxFilesPerTrigger=1 so the watermark actually advances across batches —
-that is what makes append-mode window finalization and late-row dropping
-observable. Results land in a memory sink and come back as a normal batch
-DataFrame for the driver (pure-streaming semantics get the rows-only check;
-pytest asserts the containment/drop properties vs the batch oracles).
+re-sharded into time-ordered chunks under .tmp/ (`_chunk_dir`: one chunk
+set per (sf, dup_first, sentinels), shared by every key) and every key
+reads it through ONE function, `_event_stream`, at one or two files per
+trigger so the watermark actually advances across batches — that is what
+makes append-mode window finalization and late-row dropping observable.
+Results land in a memory sink and come back as a normal batch DataFrame
+for the caller (pure-streaming semantics get the rows-only check; pytest
+asserts the containment/drop properties vs the batch oracles).
 
 Scale notes: this is the same topology as a production job (source →
-watermarked stateful op → sink); swap the file source for Kafka and the
-memory sink for a Delta/parquet sink and nothing else changes. Watermark
-bounds state: ~(delay/window) open windows per key.
+watermarked stateful op → sink); swap `_event_stream`'s one `readStream`
+line for a Kafka source and the memory sink for a Delta/parquet sink and
+nothing else changes. Watermark bounds state: ~(delay/window) open
+windows per key.
 """
 
 from __future__ import annotations
@@ -25,14 +28,13 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
-from ..common import build_once, scratch_root
+from ..common import build_once, pid_run_dir, scratch_dir
 from ..io import load_table
 from ..registry import register
 from ..session import scoped_confs
 from ..operators.analytics import _GAP_US as _SESS_GAP_US
 from ..operators.analytics import _sessionize_sql as _session_batch_sql
 
-_REPO_TMP = scratch_root()
 _CHUNKS = 4
 _WATERMARK = "10 minutes"
 _WATERMARK_US = 600_000_000  # the same 10 minutes, in microseconds
@@ -100,16 +102,15 @@ def _query(
 _SSOJ_SENT_OFFSET_US = 1_800_000_000
 
 
-def _chunked_source(
-    spark: SparkSession,
-    sf_dir: str,
-    tag: str,
-    dup_first: int = 0,
-    sentinels: int = 0,
+def _chunk_dir(
+    spark: SparkSession, sf_dir: str, dup_first: int = 0, sentinels: int = 0
 ) -> str:
     """Write events as _CHUNKS time-ordered parquet files; optionally append
     a final chunk duplicating the first `dup_first` rows (late + duplicate
-    data for the dedup/watermark paths). Deterministic per (sf_dir, tag).
+    data for the dedup/watermark paths). The files are a function of
+    (sf_dir, dup_first, sentinels) alone, so the directory is named by
+    exactly that: one chunk set per configuration, shared by every key
+    that reads it.
 
     `sentinels` > 0 appends that many trailing single-pair chunk files
     (one 'click' + one 'view' row, user_id = -(i+1), ts = max real ts +
@@ -121,10 +122,13 @@ def _chunked_source(
     sf0.001: one eviction-eligible click intermittently withheld). The
     sentinel view sits 1 s BEFORE its click, so the pair never matches
     itself; user_id < 0 matches no real user."""
-    ev = load_table(spark, sf_dir, "events")
-    out = os.path.join(_REPO_TMP, f"stream_{tag}_{os.path.basename(sf_dir.rstrip('/'))}")
+    stamp = f"dup_first={dup_first}" + (
+        f",sentinels={sentinels}" if sentinels else ""
+    )
+    out = scratch_dir(sf_dir, f"stream_chunks_d{dup_first}_s{sentinels}")
 
     def build(tmp: str) -> None:
+        ev = load_table(spark, sf_dir, "events")
         n = ev.count()
         per = (n + _CHUNKS - 1) // _CHUNKS
         # stable chunking by row_number over ts
@@ -175,49 +179,26 @@ FROM VALUES ('click'), ('view') AS t(event_type)
                 .parquet(os.path.join(tmp, f"chunk={90 + i:02d}_sent"))
             )
 
-    stamp = f"dup_first={dup_first}" + (
-        f",sentinels={sentinels}" if sentinels else ""
-    )
     return build_once(out, build, stamp=stamp)
 
 
-def _pid_run_dir(prefix: str, sf_dir: str) -> str:
-    """Per-(prefix, sf, pid) scratch for two-life checkpoint keys, with
-    stale-sibling reaping: dirs left by DEAD pids of the same
-    (prefix, sf) are removed before this run creates its own — pid
-    suffixes keep concurrent invocations apart (ADVICE r9) but used to
-    accumulate ~100 MB/round of dead checkpoints in .tmp (r11). Live
-    pids' dirs are never touched (os.kill(pid, 0) probe)."""
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    mine = os.path.join(_REPO_TMP, f"{prefix}_{tag}_{os.getpid()}")
-    want = f"{prefix}_{tag}_"
-    try:
-        for d in os.listdir(_REPO_TMP):
-            if not d.startswith(want):
-                continue
-            pid_s = d[len(want):]
-            if not pid_s.isdigit() or int(pid_s) == os.getpid():
-                continue
-            try:
-                os.kill(int(pid_s), 0)  # raises if the owner is gone
-            except ProcessLookupError:
-                shutil.rmtree(os.path.join(_REPO_TMP, d), ignore_errors=True)
-            except PermissionError:
-                pass  # live process owned elsewhere — leave it
-    except OSError:
-        pass
-    return mine
-
-
-def _run_stream(
+def _event_stream(
     spark: SparkSession,
-    src_dir: str,
-    schema,
-    transform,
+    sf_dir: str,
     max_files: int = 1,
-    confs: dict | None = None,
+    *,
+    dup_first: int = 0,
+    sentinels: int = 0,
+    path: str | None = None,
 ) -> DataFrame:
-    """max_files (r14, guide §1/§2 fixed-cost class): every micro-batch
+    """The one reader of the chunked events: the (sf_dir, dup_first,
+    sentinels) chunk set from _chunk_dir as a file-source stream with the
+    events schema, `max_files` chunk files per micro-batch. `path` reads a
+    stage directory holding copies of chunk files instead (the two-life
+    restart keys reveal chunks into one). This `readStream` is the line a
+    Kafka deployment swaps for its broker source.
+
+    max_files (r14, the fixed-cost class): every micro-batch
     pays trigger + state-store-commit machinery regardless of data, so
     keys whose RESULT is a pure function of the final watermark (append
     union is cumulative-monotone; no oracle encodes the chunk→batch
@@ -225,12 +206,24 @@ def _run_stream(
     output (hash-proven per key at 3 SFs). Keys whose oracle or
     demonstration depends on per-chunk batching (dedup replay ordering,
     sentinel-driven eviction, n_updates progressions) stay at 1."""
-    stream = (
-        spark.readStream.schema(schema)
+    if path is None:
+        path = _chunk_dir(spark, sf_dir, dup_first, sentinels)
+    return (
+        spark.readStream.schema(load_table(spark, sf_dir, "events").schema)
         .option("maxFilesPerTrigger", max_files)
         .option("recursiveFileLookup", "true")
-        .parquet(src_dir)
+        .parquet(path)
     )
+
+
+def _run_stream(
+    spark: SparkSession,
+    stream: DataFrame,
+    transform,
+    confs: dict | None = None,
+) -> DataFrame:
+    """Run `transform(stream)` to completion into a memory sink (append
+    mode) and return the sink's rows."""
     writer = transform(stream).writeStream.format("memory").outputMode("append")
     with _query(spark, writer, confs=confs) as q:
         q.processAllAvailable()
@@ -278,9 +271,6 @@ ORDER BY win_start, event_type
     tags=("streaming", "stateful"),
 )
 def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "wm", dup_first=0)
-
     def transform(s):
         return (
             s.withWatermark("ts", _WATERMARK)
@@ -298,9 +288,8 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ts-ordered chunks batch (watermark still advances across the two
     # data batches; the final finalization rides the same trailing
     # no-data batch it always did). Hash-proven identical at 3 SFs.
-    return _run_stream(spark, src, ev.schema, transform, max_files=2).orderBy(
-        "win_start", "event_type"
-    )
+    stream = _event_stream(spark, sf_dir, max_files=2)
+    return _run_stream(spark, stream, transform).orderBy("win_start", "event_type")
 
 
 # Batch-equivalence oracle under lockstep arrival (r5): the four main
@@ -328,9 +317,6 @@ SELECT event_id, user_id, event_type FROM events ORDER BY event_id
     tags=("streaming", "stateful"),
 )
 def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "dedup", dup_first=100)
-
     def transform(s):
         return (
             s.withWatermark("ts", _WATERMARK)
@@ -338,7 +324,8 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_id", "user_id", "event_type")
         )
 
-    return _run_stream(spark, src, ev.schema, transform).orderBy("event_id")
+    stream = _event_stream(spark, sf_dir, dup_first=100)
+    return _run_stream(spark, stream, transform).orderBy("event_id")
 
 
 # ---------------------------------------------------------------------------
@@ -401,14 +388,8 @@ ORDER BY win_start, event_type
     tags=("streaming", "source"),
 )
 def stream_tumbling_file_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "tfr", dup_first=0)
-
     writer = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+        _event_stream(spark, sf_dir)
         .groupBy(F.window("ts", "86400 seconds"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
@@ -478,8 +459,6 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import ensure_package_on_workers
 
     ensure_package_on_workers(spark)
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "state", dup_first=0)
 
     def update(key, pdfs, state: GroupState):
         import numpy as np
@@ -515,7 +494,6 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     writer = (
-        spark.readStream.schema(ev.schema)
         # 2 files/trigger (r14): the exact-BIGINT state makes the final
         # per-user fold batching-free (the oracle's point), and the
         # builder keeps only each user's max-n_events row — so halving
@@ -523,9 +501,7 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round-trips and state (de)serialization while state still
         # provably crosses a batch boundary. Hash-proven identical at
         # 3 SFs.
-        .option("maxFilesPerTrigger", 2)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+        _event_stream(spark, sf_dir, max_files=2)
         .transform(transform)
         .writeStream.format("memory")
         .outputMode("update")
@@ -596,11 +572,7 @@ ORDER BY batch_idx
     tags=("streaming", "sink"),
 )
 def stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "feb", dup_first=0)
-    sink = os.path.join(
-        _REPO_TMP, f"feb_sink_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    sink = pid_run_dir(sf_dir, "feb_sink")
     shutil.rmtree(sink, ignore_errors=True)
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -610,13 +582,7 @@ def stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(sink)
         )
 
-    writer = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-    )
+    writer = _event_stream(spark, sf_dir).writeStream.foreachBatch(handle_batch)
     with _query(spark, writer) as q:
         q.processAllAvailable()
     from pyspark.sql.window import Window
@@ -674,16 +640,8 @@ ORDER BY click_id, view_id
     tags=("streaming", "join"),
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "ssj", dup_first=0)
-
     def side():
-        return (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
+        return _event_stream(spark, sf_dir)
 
     clicks = (
         side()
@@ -787,22 +745,14 @@ ORDER BY click_id, view_id
     tags=("streaming", "join"),
 )
 def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
     # sentinels=3 (r14): all sentinel chunks carry the SAME far-future
     # timestamps, so a third changes no watermark and no oracle — it
-    # exists so the chained-join twin (same 'ssoj' source) can read 2
+    # exists so the chained-join twin (same chunk set) can read 2
     # files/trigger and still land its final eviction in a data batch
     # ([s90,s91] advances the wm to final, [s92] evicts). For THIS key
     # (1 file/trigger) it is one extra no-op data batch.
-    src = _chunked_source(spark, sf_dir, "ssoj", sentinels=3)
-
     def side():
-        return (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
+        return _event_stream(spark, sf_dir, sentinels=3)
 
     clicks = (
         side()
@@ -902,24 +852,16 @@ ORDER BY win_start
     tags=("streaming", "join", "stateful"),
 )
 def stream_chained_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "ssoj", sentinels=3)
-
     def side():
-        return (
-            spark.readStream.schema(ev.schema)
-            # 2 files/trigger (r14): batches [c0,c1],[c2,c3],[s90,s91],
-            # [s92] — the identical-ts sentinel chunks mean [s90,s91]
-            # advances the global watermark to its final value and [s92]
-            # is the data batch that runs the last eviction/finalization,
-            # exactly the r8 sentinel discipline at half the batch count.
-            # Emitted set = windows with end <= final wm - range, a pure
-            # function of the FINAL watermark — batching-invariant
-            # (hash-proven at 3 SFs).
-            .option("maxFilesPerTrigger", 2)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
+        # 2 files/trigger (r14): batches [c0,c1],[c2,c3],[s90,s91],
+        # [s92] — the identical-ts sentinel chunks mean [s90,s91]
+        # advances the global watermark to its final value and [s92]
+        # is the data batch that runs the last eviction/finalization,
+        # exactly the r8 sentinel discipline at half the batch count.
+        # Emitted set = windows with end <= final wm - range, a pure
+        # function of the FINAL watermark — batching-invariant
+        # (hash-proven at 3 SFs).
+        return _event_stream(spark, sf_dir, max_files=2, sentinels=3)
 
     clicks = (
         side()
@@ -1000,8 +942,6 @@ ORDER BY e.event_id
     tags=("streaming",),
 )
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "sstatic", dup_first=0)
     dim = (
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")
@@ -1015,7 +955,8 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("e.event_id", "e.user_id", "e.event_type", "c.c_name", "e.value")
         )
 
-    return _run_stream(spark, src, ev.schema, transform).orderBy("event_id")
+    stream = _event_stream(spark, sf_dir)
+    return _run_stream(spark, stream, transform).orderBy("event_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1043,19 +984,12 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "sink"),
 )
 def stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "psink", dup_first=0)
-    base = os.path.join(
-        _REPO_TMP, f"psink_out_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    base = pid_run_dir(sf_dir, "psink_out")
     sink, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
     shutil.rmtree(base, ignore_errors=True)
 
     writer = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+        _event_stream(spark, sf_dir)
         .withWatermark("ts", _WATERMARK)
         .groupBy(F.window("ts", "600 seconds"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -1318,8 +1252,6 @@ def stream_event_pattern_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import ensure_package_on_workers
 
     ensure_package_on_workers(spark)
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "cep", dup_first=0)
     within_ns = 30 * 60 * 1_000_000_000
 
     def update(key, pdfs, state: GroupState):
@@ -1383,10 +1315,7 @@ def stream_event_pattern_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     writer = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+        _event_stream(spark, sf_dir)
         .transform(transform)
         .writeStream.format("memory")
         .outputMode("update")
@@ -1501,17 +1430,14 @@ def _session_native_transform(s: DataFrame) -> DataFrame:
     tags=("streaming", "stateful"),
 )
 def stream_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
     # sentinels=3 + 2 files/trigger (r14): sentinel chunks share one
     # timestamp, so [s90,s91] advances the watermark to its final value
     # and [s92] is the data batch that evicts the last sessions — the
     # same sentinel discipline at 4 data batches instead of 6. Emitted
     # set = sessions with end <= final wm, batching-invariant
     # (hash-proven at 3 SFs + the crafted merge/boundary fixture).
-    src = _chunked_source(spark, sf_dir, "sessnat", sentinels=3)
-    out = _run_stream(
-        spark, src, ev.schema, _session_native_transform, max_files=2
-    )
+    stream = _event_stream(spark, sf_dir, max_files=2, sentinels=3)
+    out = _run_stream(spark, stream, _session_native_transform)
     return out.filter(F.col("user_id") >= 0).orderBy(
         "user_id", "session_start_us"
     )
@@ -1551,9 +1477,6 @@ def stream_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful"),
 )
 def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "dedupww", dup_first=100)
-
     def transform(s):
         return (
             s.withWatermark("ts", _WATERMARK)
@@ -1561,7 +1484,8 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
             .select("event_id", "user_id", "event_type")
         )
 
-    return _run_stream(spark, src, ev.schema, transform).orderBy("event_id")
+    stream = _event_stream(spark, sf_dir, dup_first=100)
+    return _run_stream(spark, stream, transform).orderBy("event_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1598,12 +1522,11 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("streaming", "stateful", "sink"),
 )
 def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "ckres", dup_first=0)
+    src = _chunk_dir(spark, sf_dir)
     # pid-suffixed scratch (ADVICE r9): the two-life run mutates this
     # directory across lives, so concurrent invocations on one sf_dir
     # (pytest-xdist + the driver) must not share — and rmtree — one path.
-    base = _pid_run_dir("ckres_run", sf_dir)
+    base = pid_run_dir(sf_dir, "ckres_run")
     stage = os.path.join(base, "stage")
     sink, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
     shutil.rmtree(base, ignore_errors=True)
@@ -1622,10 +1545,7 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _life():
         writer = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(stage)
+            _event_stream(spark, sf_dir, path=stage)
             .withWatermark("ts", _WATERMARK)
             .groupBy(F.window("ts", "600 seconds"), "event_type")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -1698,18 +1618,11 @@ FROM events
     tags=("streaming", "quality"),
 )
 def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "obsm", dup_first=0)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        # 2 files/trigger (r14): per-batch metric terms are summed /
-        # min-max-merged across batches, so the totals are invariant to
-        # the chunk→batch grouping; two data batches still exercise the
-        # cross-batch merge while halving trigger+commit fixed cost.
-        .option("maxFilesPerTrigger", 2)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
+    # 2 files/trigger (r14): per-batch metric terms are summed /
+    # min-max-merged across batches, so the totals are invariant to
+    # the chunk→batch grouping; two data batches still exercise the
+    # cross-batch merge while halving trigger+commit fixed cost.
+    stream = _event_stream(spark, sf_dir, max_files=2)
     observed = stream.observe(
         "w32bd_obsm_metrics",
         F.count(F.lit(1)).alias("n_rows"),
@@ -1813,9 +1726,8 @@ def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "sink"),
 )
 def stream_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "spe2e", dup_first=100, sentinels=2)
-    base = _pid_run_dir("spe2e_run", sf_dir)
+    src = _chunk_dir(spark, sf_dir, dup_first=100, sentinels=2)
+    base = pid_run_dir(sf_dir, "spe2e_run")
     stage = os.path.join(base, "stage")
     sink, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
     shutil.rmtree(base, ignore_errors=True)
@@ -1834,20 +1746,17 @@ def stream_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _life():
         writer = (
+            # 2 files/trigger (r14): the exactly-once argument is
+            # per-ROW and batching-independent (each replayed row is
+            # late-dropped OR dedup-filtered whichever batch carries
+            # it), sessions finalize against the FINAL watermark, and
+            # the two sentinel chunks still land so the last eviction
+            # rides a data batch (the second sentinel file forms its
+            # own trailing batch: 5 life-2 files -> ceil(5/2)
+            # batches). Hash-proven at 3 SFs + the crafted restart
+            # fixture.
             _pipeline_e2e_transform(
-                spark.readStream.schema(ev.schema)
-                # 2 files/trigger (r14): the exactly-once argument is
-                # per-ROW and batching-independent (each replayed row is
-                # late-dropped OR dedup-filtered whichever batch carries
-                # it), sessions finalize against the FINAL watermark, and
-                # the two sentinel chunks still land so the last eviction
-                # rides a data batch (the second sentinel file forms its
-                # own trailing batch: 5 life-2 files -> ceil(5/2)
-                # batches). Hash-proven at 3 SFs + the crafted restart
-                # fixture.
-                .option("maxFilesPerTrigger", 2)
-                .option("recursiveFileLookup", "true")
-                .parquet(stage)
+                _event_stream(spark, sf_dir, max_files=2, path=stage)
             )
             .writeStream.format("parquet")
             .option("path", sink)
@@ -1947,9 +1856,6 @@ def stream_query_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.streaming import StreamingQueryListener
 
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "qlist", dup_first=0)
-
     class _Collector(StreamingQueryListener):
         def __init__(self):
             self.started = []
@@ -1970,13 +1876,10 @@ def stream_query_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
             self.terminated.append(str(event.id))
 
     writer = (
-        spark.readStream.schema(ev.schema)
         # 2 files/trigger (r14): the key's output is the summed
         # numInputRows across the query's progress events — invariant to
         # batching; still multiple progress events.
-        .option("maxFilesPerTrigger", 2)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+        _event_stream(spark, sf_dir, max_files=2)
         .withWatermark("ts", _WATERMARK)
         .groupBy(F.window("ts", "600 seconds"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -2044,13 +1947,10 @@ def stream_query_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_sink_foreach_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
 
-    from ..common import scratch_dir
     from ..session import ensure_package_on_workers
 
     ensure_package_on_workers(spark)
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "fesink", dup_first=0)
-    out = scratch_dir(sf_dir, "fesink_out") + f"_{os.getpid()}"
+    out = pid_run_dir(sf_dir, "fesink_out")
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out, exist_ok=True)
 
@@ -2088,12 +1988,9 @@ def stream_sink_foreach_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
                 self._f.close()
 
     writer = (
-        spark.readStream.schema(ev.schema)
         # 2 files/trigger (r14): same final-watermark-only output set as
-        # stream_watermark_late (see _run_stream).
-        .option("maxFilesPerTrigger", 2)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+        # stream_watermark_late (see _event_stream).
+        _event_stream(spark, sf_dir, max_files=2)
         .withWatermark("ts", _WATERMARK)
         .groupBy(F.window("ts", "600 seconds"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -2162,9 +2059,7 @@ def _ssread_checkpoint(sf_dir: str) -> str:
     one place (ADVICE r10: the pytest inventory check used to duplicate
     this derivation and would silently read a stale checkpoint if the
     naming ever changed)."""
-    return os.path.join(
-        _REPO_TMP, f"ssread_ck_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    return scratch_dir(sf_dir, "ssread_ck")
 
 
 @register(
@@ -2182,19 +2077,12 @@ def _ssread_checkpoint(sf_dir: str) -> str:
     tags=("source", "streaming", "stateful"),
 )
 def src_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _chunked_source(spark, sf_dir, "wm", dup_first=0)
     ck = _ssread_checkpoint(sf_dir)
 
     def build(tmp: str) -> None:
-        ev = load_table(spark, sf_dir, "events")
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 2)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
         agg = (
-            stream.selectExpr("event_type", f"{_SS_MICRO} AS v_micro")
+            _event_stream(spark, sf_dir, max_files=2)
+            .selectExpr("event_type", f"{_SS_MICRO} AS v_micro")
             .groupBy("event_type")
             .agg(
                 F.sum("v_micro").alias("state_sum_micro"),
@@ -2271,9 +2159,6 @@ _ROCKSDB_CONFS = {
     tags=("streaming", "stateful", "scale"),
 )
 def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    src = _chunked_source(spark, sf_dir, "wm", dup_first=0)
-
     def transform(s):
         return (
             s.withWatermark("ts", _WATERMARK)
@@ -2287,10 +2172,9 @@ def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # max_files=2 (r14): same final-watermark-only oracle as
-    # stream_watermark_late — see _run_stream.
-    out = _run_stream(
-        spark, src, ev.schema, transform, max_files=2, confs=_ROCKSDB_CONFS
-    )
+    # stream_watermark_late — see _event_stream.
+    stream = _event_stream(spark, sf_dir, max_files=2)
+    out = _run_stream(spark, stream, transform, confs=_ROCKSDB_CONFS)
     return out.orderBy("win_start", "event_type")
 
 
@@ -2360,21 +2244,12 @@ ORDER BY batch_id, event_type
     tags=("source", "streaming", "stateful"),
 )
 def src_statestore_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _chunked_source(spark, sf_dir, "wm", dup_first=0)
-    ck = os.path.join(
-        _REPO_TMP, f"ssreadcf_ck_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    ck = scratch_dir(sf_dir, "ssreadcf_ck")
 
     def build(tmp: str) -> None:
-        ev = load_table(spark, sf_dir, "events")
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 2)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-        )
         agg = (
-            stream.selectExpr("event_type", f"{_SS_MICRO} AS v_micro")
+            _event_stream(spark, sf_dir, max_files=2)
+            .selectExpr("event_type", f"{_SS_MICRO} AS v_micro")
             .groupBy("event_type")
             .agg(
                 F.sum("v_micro").alias("state_sum_micro"),
