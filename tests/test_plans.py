@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from week3_2_practice_big_data__spark import REGISTRY
 
 from .conftest import SF_SMALL
@@ -1055,6 +1057,92 @@ def test_python_datasource_sink_manifest_isolates_uncommitted(spark):
     # stay exactly the committed relation
     b = REGISTRY["sink_python_datasource"].builder(spark, SF_SMALL)
     assert [tuple(r) for r in b.collect()] == rows_before
+
+
+def _staged_writer(path, arrow: bool, stream: bool):
+    """A writer of the staged-commit sink, made as Spark makes it: the
+    DataSource built from its options, then `writer` or `streamWriter`
+    called with the output schema."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from week3_2_practice_big_data__spark.sources.generators import _jsonl_sink
+
+    schema = StructType(
+        [StructField("event_type", StringType()), StructField("n", LongType())]
+    )
+    sink = _jsonl_sink(arrow)(options={"path": str(path)})
+    return (sink.streamWriter if stream else sink.writer)(schema, False)
+
+
+def _staged_input(rows, arrow: bool):
+    """What write() receives: Rows, or one pyarrow RecordBatch."""
+    if arrow:
+        import pyarrow as pa
+
+        return iter([pa.RecordBatch.from_pylist([r.asDict() for r in rows])])
+    return iter(rows)
+
+
+@pytest.mark.parametrize("arrow", [False, True], ids=["row", "arrow"])
+@pytest.mark.parametrize("stream", [False, True], ids=["batch", "stream"])
+def test_staged_commit_read_back_skips_uncommitted(tmp_path, arrow, stream):
+    """The staged-commit sink (no Spark session): the read-back returns
+    exactly the rows of the files a commit listed, whichever manifest
+    shape — Row names or Arrow {"file", "n_batches"} entries, in
+    `_MANIFEST` (batch) or `_MANIFEST_<batchId:06d>` (stream). A task
+    that staged but was never committed, and a stray staged file, are
+    invisible. Staged lines are one JSON array per row in schema order."""
+    import json
+    import os
+
+    from pyspark.sql import Row
+
+    from week3_2_practice_big_data__spark.sources.generators import (
+        _committed_rows,
+    )
+
+    w = _staged_writer(tmp_path, arrow, stream)
+    tasks = [[Row(event_type="click", n=3)], [Row(event_type="view", n=5)]]
+    msgs = [w.write(_staged_input(rows, arrow)) for rows in tasks]
+    w.write(_staged_input([Row(event_type="lost", n=7)], arrow))  # uncommitted
+    with open(tmp_path / "part-deadbeef-stray.jsonl", "w") as f:
+        f.write(json.dumps(["stray", 999]) + "\n")
+    if stream:
+        w.commit(msgs + [None], 3)
+    else:
+        w.commit(msgs + [None])
+    manifest_name = "_MANIFEST_000003" if stream else "_MANIFEST"
+    with open(tmp_path / manifest_name) as f:
+        manifest = json.load(f)
+    names = sorted(m.fname for m in msgs)
+    if arrow:
+        assert manifest == [{"file": n, "n_batches": 1} for n in names]
+    else:
+        assert manifest == names
+    with open(tmp_path / msgs[0].fname) as f:
+        assert f.read() == '["click", 3]\n'
+    assert len([e for e in os.listdir(tmp_path) if e.endswith(".jsonl")]) == 4
+    assert sorted(_committed_rows(str(tmp_path))) == [("click", 3), ("view", 5)]
+
+
+@pytest.mark.parametrize("arrow", [False, True], ids=["row", "arrow"])
+@pytest.mark.parametrize("stream", [False, True], ids=["batch", "stream"])
+def test_staged_commit_abort_deletes_staged(tmp_path, arrow, stream):
+    """abort() deletes every file its tasks' write() staged (a failed
+    task's None message is skipped) and publishes no manifest."""
+    from pyspark.sql import Row
+
+    w = _staged_writer(tmp_path, arrow, stream)
+    msgs = [
+        w.write(_staged_input([Row(event_type=t, n=1)], arrow))
+        for t in ("click", "view")
+    ]
+    assert len(list(tmp_path.iterdir())) == 2
+    if stream:
+        w.abort(msgs + [None], 0)
+    else:
+        w.abort(msgs + [None])
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_python_datasource_pushdown_prunes_generation(spark):

@@ -198,3 +198,45 @@ def test_chunked_events_read_only_by_the_one_reader():
         (*reader, "readStream.schema"),
         (*reader, "recursiveFileLookup"),
     ], sorted(found)
+
+
+def test_finalized_window_query_written_once():
+    """Static guard (no Spark): `streams._finalized_windows` is the one
+    place a package function chains `withWatermark("ts", _WATERMARK)` into
+    a `groupBy(F.window("ts", "600 seconds"), …)`. The keys that share
+    `_WM_LATE_ORACLE` differ only in their sink, so they call it instead
+    of spelling the query out."""
+    import ast
+
+    def call_of(node, func, args):
+        return (
+            isinstance(node, ast.Call)
+            and ast.unparse(node.func).endswith(func)
+            and [ast.unparse(a) for a in node.args] == args
+        )
+
+    def receivers(node):
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            yield node
+            node = node.func if isinstance(node, ast.Call) else node.value
+
+    found = []
+    for rel, tree in _package_modules():
+        for top in tree.body:
+            owner = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "groupBy"
+                    and any(
+                        call_of(a, "F.window", ["'ts'", "'600 seconds'"])
+                        for a in node.args
+                    )
+                    and any(
+                        call_of(r, ".withWatermark", ["'ts'", "_WATERMARK"])
+                        for r in receivers(node.func.value)
+                    )
+                ):
+                    found.append((rel, owner))
+    assert found == [("streaming/streams.py", "_finalized_windows")], found

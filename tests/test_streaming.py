@@ -742,6 +742,36 @@ def test_query_failure_leaves_no_stream_view_or_conf(spark):
     assert stream_hygiene(spark) == before
 
 
+def test_pid_run_dir_removed_when_its_process_exits(tmp_path):
+    """common.pid_run_dir: a process's run directory goes when the process
+    exits. Builders return lazy reads over their sinks, so nothing can
+    remove it earlier; without the exit hook a driver sweep left one
+    directory per sink key in .tmp until the next run at that scale
+    factor reaped it."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = f"""
+import os, sys
+sys.path.insert(0, {repo!r})
+from week3_2_practice_big_data__spark import common
+common.scratch_root = lambda: {str(tmp_path)!r}
+d = common.pid_run_dir("/data/sf9", "x_run")
+os.makedirs(os.path.join(d, "data"))
+open(os.path.join(d, "data", "part-0.jsonl"), "w").close()
+print(d)
+"""
+    done = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, check=True
+    )
+    run_dir = done.stdout.strip()
+    assert os.path.dirname(run_dir) == str(tmp_path), done.stdout
+    assert not os.path.exists(run_dir)
+    assert list(tmp_path.iterdir()) == []
+
+
 def test_pid_run_dir_reaps_dead_siblings(tmp_path, monkeypatch):
     """common.pid_run_dir (r11): scratch dirs left by dead pids of the same
     (prefix, sf) tag are reaped; the caller's own dir name is returned;

@@ -13,6 +13,7 @@ build cache keys or hold cache dicts of their own.
 
 from __future__ import annotations
 
+import atexit
 import threading
 
 import pyspark.sql.functions as F
@@ -50,12 +51,31 @@ def scratch_dir(sf_dir: str, name: str) -> str:
     return os.path.join(scratch_root(), f"{name}_{os.path.basename(sf_dir.rstrip('/'))}")
 
 
+# This process's per-run directories (pid_run_dir), removed at exit.
+_RUN_DIRS: set[str] = set()
+
+
+def _remove_run_dirs() -> None:
+    import os
+    import shutil
+
+    mine = "_" + str(os.getpid())
+    for d in _RUN_DIRS:
+        if d.endswith(mine):  # not a parent's, in a forked child
+            shutil.rmtree(d, ignore_errors=True)
+
+
+atexit.register(_remove_run_dirs)
+
+
 def pid_run_dir(sf_dir: str, name: str) -> str:
     """Scratch path for one process's run: ``scratch_dir(sf_dir, name)``
     suffixed with the pid, so concurrent processes on one sf never share
-    (and rmtree) a sink or checkpoint. Directories of the same (name, sf)
-    left by DEAD pids are removed first; live pids' directories are never
-    touched (os.kill(pid, 0) probe)."""
+    (and rmtree) a sink or checkpoint. The directory is removed when this
+    process exits (builders may return lazy reads over it, so not
+    before). Directories of the same (name, sf) left by DEAD pids — a
+    killed process runs no exit hook — are removed first; live pids'
+    directories are never touched (os.kill(pid, 0) probe)."""
     import os
     import shutil
 
@@ -74,7 +94,9 @@ def pid_run_dir(sf_dir: str, name: str) -> str:
                 pass  # live process owned elsewhere — leave it
     except OSError:
         pass
-    return os.path.join(root, want + str(os.getpid()))
+    mine = os.path.join(root, want + str(os.getpid()))
+    _RUN_DIRS.add(mine)
+    return mine
 
 
 def build_once(out: str, build, stamp: str = "") -> str:

@@ -1587,11 +1587,7 @@ _PII_SAMPLE = [
 
 def _pii_sql(dialect: str) -> str:
     rows = ", ".join(f"({i}, '{t}')" for i, t in _PII_SAMPLE)
-    rel = (
-        f"(SELECT * FROM VALUES {rows} AS s(rec_id, txt))"
-        if dialect == "spark"
-        else f"(SELECT * FROM (VALUES {rows}) AS s(rec_id, txt))"
-    )
+    rel = f"(SELECT * FROM (VALUES {rows}) AS s(rec_id, txt))"
 
     def scrub(expr: str, pat: str, tag: str) -> str:
         if dialect == "spark":

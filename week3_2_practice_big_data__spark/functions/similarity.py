@@ -162,8 +162,6 @@ def _plane_values(dialect: str) -> str:
         arr = f"array({lits})" if dialect == "spark" else f"[{lits}]"
         rows.append(f"({plane}, {arr})")
     vals = ", ".join(rows)
-    if dialect == "spark":
-        return f"(SELECT * FROM VALUES {vals} AS p(plane, comps))"
     return f"(SELECT * FROM (VALUES {vals}) AS p(plane, comps))"
 
 
@@ -506,8 +504,6 @@ def _centroid_values(dialect: str) -> str:
         arr = f"array({lits})" if dialect == "spark" else f"[{lits}]"
         rows.append(f"({cell}, {arr})")
     vals = ", ".join(rows)
-    if dialect == "spark":
-        return f"(SELECT * FROM VALUES {vals} AS ct(c, comps))"
     return f"(SELECT * FROM (VALUES {vals}) AS ct(c, comps))"
 
 

@@ -299,10 +299,8 @@ def _minhash_params(k: int = MINHASH_K, seed: int = 7) -> list[tuple[int, int, i
     return out
 
 
-def _values_table(dialect: str, rows: list[tuple], alias: str, cols: str) -> str:
+def _values_table(rows: list[tuple], alias: str, cols: str) -> str:
     vals = ", ".join("(" + ", ".join(str(v) for v in r) + ")" for r in rows)
-    if dialect == "spark":
-        return f"(SELECT * FROM VALUES {vals} AS {alias}({cols}))"
     return f"(SELECT * FROM (VALUES {vals}) AS {alias}({cols}))"
 
 
@@ -319,7 +317,7 @@ def _bandsig(dialect: str) -> str:
 
 def _minhash_sig_sql(dialect: str, where: str = "") -> str:
     """(doc_id, i, sig) — the k=16 MinHash signature components."""
-    params = _values_table(dialect, _minhash_params(), "hp", "i, a, b")
+    params = _values_table(_minhash_params(), "hp", "i, a, b")
     return f"""
 WITH sh AS ({shingles_sql(dialect, where)}),
 hashed AS (
@@ -1095,10 +1093,7 @@ _PROBES = [
 
 def _decontaminate_sql(dialect: str) -> str:
     vals = ", ".join(f"('{p}')" for p in _PROBES)
-    if dialect == "spark":
-        probes = f"(SELECT * FROM VALUES {vals} AS probes(probe))"
-    else:
-        probes = f"(SELECT * FROM (VALUES {vals}) AS probes(probe))"
+    probes = f"(SELECT * FROM (VALUES {vals}) AS probes(probe))"
     hit = "contains(d.text, p.probe)"
     return f"""
 SELECT p.probe,

@@ -608,10 +608,8 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ACF_MAX_LAG = 10
 
 
-def _acf_lags(dialect: str) -> str:
+def _acf_lags() -> str:
     vals = ", ".join(f"({k})" for k in range(1, _ACF_MAX_LAG + 1))
-    if dialect == "spark":
-        return f"(SELECT * FROM VALUES {vals} AS lg(lag_k))"
     return f"(SELECT * FROM (VALUES {vals}) AS lg(lag_k))"
 
 
@@ -658,7 +656,7 @@ pairs AS (
     CAST(sum(CAST(a.ym AS DECIMAL(38,0)) * b.ym) AS DOUBLE) AS sxy,
     sum(a.ym) AS sa, sum(b.ym) AS sb
   FROM ordered a
-  JOIN {_acf_lags(dialect)} ON a.i > lag_k
+  JOIN {_acf_lags()} ON a.i > lag_k
   JOIN ordered b ON b.i = a.i - lag_k
   GROUP BY lag_k
 )
@@ -753,10 +751,8 @@ ORDER BY user_id
 _CCF_MAX_LAG = 7
 
 
-def _ccf_lags(dialect: str) -> str:
+def _ccf_lags() -> str:
     vals = ", ".join(f"({k})" for k in range(-_CCF_MAX_LAG, _CCF_MAX_LAG + 1))
-    if dialect == "spark":
-        return f"(SELECT * FROM VALUES {vals} AS lg(lag_k))"
     return f"(SELECT * FROM (VALUES {vals}) AS lg(lag_k))"
 
 
@@ -799,7 +795,7 @@ pairs AS (
     CAST(sum(CAST(a.x AS DECIMAL(38,0)) * b.y) AS DOUBLE) AS sxy,
     sum(a.x) AS sxk, sum(b.y) AS syk
   FROM daily a
-  JOIN {_ccf_lags(dialect)} ON 1 = 1
+  JOIN {_ccf_lags()} ON 1 = 1
   JOIN daily b ON b.d = a.d + lag_k
   GROUP BY lag_k
 )

@@ -621,7 +621,7 @@ _GRAD_ROWS = 600  # np.linspace(0, 1, 600), app.py:132
 _LUT_N = 256  # matplotlib default colormap LUT resolution
 
 
-def _cmap_anchor_values(dialect: str) -> str:
+def _cmap_anchor_values() -> str:
     """(cmap, k, ar, ag, ab) literal anchor table, both dialects."""
     rows = []
     for cmap, anchors in (("coolwarm", _CMAP_COOLWARM), ("wistia", _CMAP_WISTIA)):
@@ -630,8 +630,6 @@ def _cmap_anchor_values(dialect: str) -> str:
                 f"('{cmap}', {k}, {synth.flit(r)}, {synth.flit(g)}, {synth.flit(b)})"
             )
     vals = ", ".join(rows)
-    if dialect == "spark":
-        return f"(SELECT * FROM VALUES {vals} AS ca(cmap, k, ar, ag, ab))"
     return f"(SELECT * FROM (VALUES {vals}) AS ca(cmap, k, ar, ag, ab))"
 
 
@@ -641,15 +639,13 @@ def _bg_colormap_sql(dialect: str) -> str:
     seg = min(floor(x·nseg), nseg−1), linear blend of anchors seg/seg+1,
     then the alpha-0.2 composite over white. Pure IEEE arithmetic over
     shared literals → bit-identical cross-engine, q6 at the boundary."""
-    themes = "(VALUES ('cool', 'coolwarm'), ('warm', 'wistia'), ('neutral', 'wistia'))"
-    if dialect == "spark":
-        themes = "VALUES ('cool', 'coolwarm'), ('warm', 'wistia'), ('neutral', 'wistia')"
-        themes_rel = f"(SELECT * FROM {themes} AS th(theme, cmap))"
-    else:
-        themes_rel = f"(SELECT * FROM {themes} AS th(theme, cmap))"
+    themes_rel = (
+        "(SELECT * FROM (VALUES ('cool', 'coolwarm'), ('warm', 'wistia'), "
+        "('neutral', 'wistia')) AS th(theme, cmap))"
+    )
     nseg = (
         "(SELECT cmap, CAST(max(k) AS BIGINT) AS nseg "
-        f"FROM {_cmap_anchor_values(dialect)} mx GROUP BY cmap)"
+        f"FROM {_cmap_anchor_values()} mx GROUP BY cmap)"
     )
     t = f"(i / {synth.flit(_GRAD_ROWS - 1)})"
     j = f"least(CAST(floor({t} * {synth.flit(_LUT_N)}) AS BIGINT), {_LUT_N - 1})"
@@ -682,8 +678,8 @@ pos AS (
 SELECT g.theme, g.i,
   {out}
 FROM pos g
-JOIN {_cmap_anchor_values(dialect)} a0 ON a0.cmap = g.cmap AND a0.k = g.k0
-JOIN {_cmap_anchor_values(dialect)} a1 ON a1.cmap = g.cmap AND a1.k = g.k0 + 1
+JOIN {_cmap_anchor_values()} a0 ON a0.cmap = g.cmap AND a0.k = g.k0
+JOIN {_cmap_anchor_values()} a1 ON a1.cmap = g.cmap AND a1.k = g.k0 + 1
 ORDER BY g.theme, g.i
 """
 
@@ -1009,7 +1005,7 @@ _CAPTION_GRAY = 128.0 / 255.0  # matplotlib named color "gray"
 _GLYPH_W, _GLYPH_H, _GLYPH_PITCH = 5, 7, 6
 
 
-def _glyph_values(dialect: str, chars: str) -> str:
+def _glyph_values(chars: str) -> str:
     """(ch, gr, gc) lit-pixel table for the characters used."""
     rows = []
     for ch in sorted(set(chars)):
@@ -1018,16 +1014,12 @@ def _glyph_values(dialect: str, chars: str) -> str:
                 if bit == "1":
                     rows.append(f"({ord(ch)}, {gr}, {gc})")
     vals = ", ".join(rows)
-    if dialect == "spark":
-        return f"(SELECT * FROM VALUES {vals} AS gl(ch, gr, gc))"
     return f"(SELECT * FROM (VALUES {vals}) AS gl(ch, gr, gc))"
 
 
-def _caption_layout_values(dialect: str, caption: str) -> str:
+def _caption_layout_values(caption: str) -> str:
     """(p, ch) character-position table for the caption string."""
     vals = ", ".join(f"({p}, {ord(ch)})" for p, ch in enumerate(caption))
-    if dialect == "spark":
-        return f"(SELECT * FROM VALUES {vals} AS cp(p, ch))"
     return f"(SELECT * FROM (VALUES {vals}) AS cp(p, ch))"
 
 
@@ -1085,8 +1077,6 @@ def _caption_overlay_sql(
         vals = ", ".join(
             f"({r}, {c}, {synth.flit(a)})" for r, c, a in dejavu
         )
-        if dialect == "spark":
-            return f"SELECT * FROM VALUES {vals} AS cap(row, col, a)"
         return f"SELECT * FROM (VALUES {vals}) AS cap(row, col, a)"
     width = (len(caption) * _GLYPH_PITCH - 1) * scale
     col0 = round((canvas_px - width) / 2)
@@ -1098,8 +1088,8 @@ SELECT DISTINCT
     + CAST(floor(b.blk / {scale}) AS BIGINT) AS row,
   {col0} + (cp.p * {_GLYPH_PITCH} + g.gc) * {scale} + b.blk % {scale} AS col,
   1e0 AS a
-FROM {_caption_layout_values(dialect, caption)} cp
-JOIN {_glyph_values(dialect, caption)} g ON g.ch = cp.ch
+FROM {_caption_layout_values(caption)} cp
+JOIN {_glyph_values(caption)} g ON g.ch = cp.ch
 CROSS JOIN {block} b
 """
 

@@ -16,12 +16,22 @@ partitions the id space across executors.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..common import pid_run_dir, scratch_dir
+from ..common import local_rows_df, pid_run_dir, scratch_dir
 from ..io import TABLES, load_table
 from ..registry import register
+from ..streaming.streams import (
+    _WM_LATE_ORACLE,
+    _event_stream,
+    _finalized_windows,
+    _jsonl_rows,
+    _query,
+)
 from .. import synth
 
 _SEED, _NB = 42, 14
@@ -331,11 +341,8 @@ def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         def read(self, partition):
             per = (n + parts - 1) // parts
             p = partition.value
-            m31, a, c = 2_147_483_648, 1_103_515_245, 12_345
             for i in range(p * per, min((p + 1) * per, n)):
-                x = (i * 1000003 + seed * 7919 + c) % m31
-                x = (a * x + c) % m31
-                yield (i, i % sensors, x / m31)
+                yield (i, i % sensors, synth.lcg_state(i, seed) / synth.M31)
 
     class _LcgSource(DataSource):
         @classmethod
@@ -375,7 +382,7 @@ def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 # src_python_datasource_stream — the Python Data Source API's STREAMING
 # side (r10, VERDICT r9 item 4): simpleStreamReader — how a PySpark 4
 # user builds a custom streaming source without JVM code. The reader
-# replays the shared LCG in OFFSET-TRACKED chunks: initialOffset() pins
+# serves the shared LCG in OFFSET-TRACKED chunks: initialOffset() pins
 # the start, each read(start) returns one chunk plus the next offset,
 # and readBetweenOffsets(start, end) regenerates any range for replay
 # after failure — which is trivially exact here because the rows are a
@@ -458,31 +465,32 @@ ORDER BY win_start, sensor_id
     tags=("source", "streaming", "udf"),
 )
 def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
     from pyspark.sql.datasource import (
         DataSource,
         SimpleDataSourceStreamReader,
     )
 
     from ..session import ensure_package_on_workers
-    from ..streaming.streams import _query
 
     ensure_package_on_workers(spark)
     n, chunk, seed = _PYDSS_N, _PYDSS_CHUNK, _PYDSS_SEED
     t0, sent_off = _PYDSS_T0, _PYDSS_SENT_OFFSET_S
     sensors = _PYDS_SENSORS
+    # The LCG states are computed here and shipped with the reader: the
+    # streaming source runs in a process that never receives the package
+    # (addPyFile reaches task workers only), so the reader may not import
+    # it, synth.lcg_state included.
+    xs = [synth.lcg_state(i, seed) for i in range(n)]
 
     class _LcgStreamReader(SimpleDataSourceStreamReader):
         def initialOffset(self):
             return {"offset": 0}
 
         def _rows(self, lo, hi):
-            m31, a, c = 2_147_483_648, 1_103_515_245, 12_345
             out = []
             for i in range(lo, hi):
                 if i < n:
-                    x0 = (i * 1000003 + seed * 7919 + c) % m31
-                    out.append((i, i % sensors, (a * x0 + c) % m31, t0 + i))
+                    out.append((i, i % sensors, xs[i], t0 + i))
                 else:
                     # sentinel rows: one per trailing chunk, staggered 1 s
                     out.append(
@@ -542,24 +550,154 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# sink_python_datasource — the Python Data Source API's WRITE side (r10):
-# with the r9 batch reader and the r10 stream reader covering reads, this
-# key covers `DataSource.writer()` — a custom Python BATCH sink. The
-# contract under test is the two-phase commit: each task's `write(rows)`
-# stages a uniquely-named jsonl file and returns a WriterCommitMessage;
-# the driver-side `commit(messages)` publishes a manifest listing exactly
-# the committed files — staged files NOT in the manifest (aborted/
-# speculative tasks) are invisible to readers. The key writes the proven
-# per-type rollup through the sink, reads back ONLY manifest-listed
-# files, and hash-checks against the relational oracle — so the driver
-# hash pins the full write → commit → read-back loop.
+# The Python Data Source API's WRITE side (r10): with the r9 batch reader
+# and the r10 stream reader covering reads, four keys cover the writer
+# matrix — Row/Arrow x batch/streaming — through ONE staged-commit sink
+# (`_jsonl_sink`) and ONE read-back (`_committed_rows`). The contract
+# under test is the two-phase commit: each task's `write()` stages a
+# uniquely-named jsonl file and returns a WriterCommitMessage; the
+# driver-side commit publishes a manifest listing exactly the committed
+# files, and abort deletes what the tasks staged. Staged files NOT in a
+# manifest (aborted/speculative tasks) are invisible to readers, so each
+# key's driver hash pins the full write -> commit -> read-back loop.
 #
 # Scale note: write() runs once per input partition on the executors
 # (local mode shares the FS; a real deployment points `path` at shared
-# storage — the plumbing, not the medium, is what the API defines). The
-# relation is repartitioned to 4 so multiple concurrent tasks exercise
-# the commit protocol.
+# storage — the plumbing, not the medium, is what the API defines).
 # ---------------------------------------------------------------------------
+
+
+def _jsonl_sink(arrow: bool = False):
+    """The staged-commit sink as a DataSource class, one per writer kind:
+    Row writers (`w32bd_jsonl_sink`) or Arrow writers
+    (`w32bd_jsonl_arrow_sink`: write() receives pyarrow RecordBatches, the
+    zero-copy bulk path a columnar sink wants). Each serves both `writer`
+    (batch) and `streamWriter` (micro-batch).
+
+    A staged file holds one JSON array per row, its fields in the order of
+    the schema Spark passes in. A batch commit publishes `_MANIFEST`, a
+    stream commit `_MANIFEST_<batchId:06d>` per micro-batch (the
+    exactly-once unit the engine replays against on failure). Row
+    manifests list file names; Arrow manifests list {"file", "n_batches"}
+    entries, the RecordBatches each task received, which proves the Arrow
+    path (not a row fallback) carried the data.
+
+    The classes are built per call, not at module level, so cloudpickle
+    ships them to the Python workers by value."""
+    from pyspark.sql.datasource import (
+        DataSource,
+        DataSourceArrowWriter,
+        DataSourceStreamArrowWriter,
+        DataSourceStreamWriter,
+        DataSourceWriter,
+        WriterCommitMessage,
+    )
+
+    class _Staged(WriterCommitMessage):
+        def __init__(self, fname, n_batches):
+            self.fname = fname
+            self.n_batches = n_batches
+
+    bases = (
+        (DataSourceArrowWriter, DataSourceStreamArrowWriter)
+        if arrow
+        else (DataSourceWriter, DataSourceStreamWriter)
+    )
+
+    class _Writer(*bases):
+        def __init__(self, path, fields):
+            self.path, self.fields = path, fields
+
+        def write(self, iterator):
+            import json
+            import os
+            import uuid
+
+            fname = f"part-{uuid.uuid4().hex}.jsonl"
+            n_batches = 0
+            with open(os.path.join(self.path, fname), "w") as f:
+                if arrow:
+                    for batch in iterator:
+                        n_batches += 1
+                        cols = [batch.column(c).to_pylist() for c in self.fields]
+                        for row in zip(*cols):
+                            f.write(json.dumps(row) + "\n")
+                else:
+                    for r in iterator:
+                        f.write(json.dumps([r[c] for c in self.fields]) + "\n")
+            return _Staged(fname, n_batches)
+
+        def commit(self, messages, batchId=None):
+            import json
+            import os
+
+            staged = sorted(
+                (m for m in messages if m is not None), key=lambda m: m.fname
+            )
+            manifest = [
+                {"file": m.fname, "n_batches": m.n_batches} if arrow else m.fname
+                for m in staged
+            ]
+            name = "_MANIFEST" if batchId is None else f"_MANIFEST_{batchId:06d}"
+            with open(os.path.join(self.path, name), "w") as f:
+                json.dump(manifest, f)
+
+        def abort(self, messages, batchId=None):
+            import os
+
+            for m in messages:
+                if m is not None:
+                    try:
+                        os.remove(os.path.join(self.path, m.fname))
+                    except OSError:
+                        pass
+
+    class _JsonlSink(DataSource):
+        @classmethod
+        def name(cls):
+            return "w32bd_jsonl_arrow_sink" if arrow else "w32bd_jsonl_sink"
+
+        def writer(self, schema, overwrite):
+            return _Writer(self.options["path"], schema.fieldNames())
+
+        streamWriter = writer
+
+    return _JsonlSink
+
+
+def _staged_sink_dir(
+    spark: SparkSession, sf_dir: str, name: str, arrow: bool = False
+) -> str:
+    """Register the staged-commit sink of one writer kind and return this
+    run's empty sink directory `name` (pid-suffixed, see pid_run_dir)."""
+    from ..session import ensure_package_on_workers
+
+    ensure_package_on_workers(spark)
+    spark.dataSource.register(_jsonl_sink(arrow))
+    out = pid_run_dir(sf_dir, name)
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out, exist_ok=True)
+    return out
+
+
+def _committed_rows(out: str) -> list[tuple]:
+    """The one read-back of the staged-commit sink: the rows of the files
+    that the manifests in `out` list (`_MANIFEST`, or each
+    `_MANIFEST_<batchId>` in batch order), whichever manifest shape. A
+    staged file that no manifest lists is never read."""
+    import json
+
+    names = []
+    for entry in sorted(os.listdir(out)):
+        if entry.startswith("_MANIFEST"):
+            with open(os.path.join(out, entry)) as f:
+                names += [e if isinstance(e, str) else e["file"] for e in json.load(f)]
+    return _jsonl_rows(out, names)
+
+
+# sink_python_datasource — the Row writer on a batch write: the per-type
+# rollup is repartitioned to 4 so multiple concurrent tasks exercise the
+# commit protocol.
 
 _PYDSW_ORACLE = """
 SELECT event_type, CAST(count(*) AS BIGINT) AS n,
@@ -583,77 +721,7 @@ ORDER BY event_type
     tags=("sink", "source", "udf"),
 )
 def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json as _json
-    import os
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceWriter,
-        WriterCommitMessage,
-    )
-
-    from ..io import load_table
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    out = pid_run_dir(sf_dir, "pydsw")
-    import shutil
-
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-
-    class _Msg(WriterCommitMessage):
-        def __init__(self, fname):
-            self.fname = fname
-
-    class _JsonlWriter(DataSourceWriter):
-        def __init__(self, path):
-            self.path = path
-
-        def write(self, rows):
-            import json
-            import os
-            import uuid
-
-            fname = f"part-{uuid.uuid4().hex}.jsonl"
-            with open(os.path.join(self.path, fname), "w") as f:
-                for r in rows:
-                    f.write(
-                        json.dumps(
-                            [r["event_type"], int(r["n"]), int(r["n_users"])]
-                        )
-                        + "\n"
-                    )
-            return _Msg(fname)
-
-        def commit(self, messages):
-            import json
-            import os
-
-            manifest = sorted(m.fname for m in messages if m is not None)
-            with open(os.path.join(self.path, "_MANIFEST"), "w") as f:
-                json.dump(manifest, f)
-
-        def abort(self, messages):
-            import os
-
-            for m in messages:
-                if m is not None:
-                    try:
-                        os.remove(os.path.join(self.path, m.fname))
-                    except OSError:
-                        pass
-
-    class _JsonlSink(DataSource):
-        @classmethod
-        def name(cls):
-            return "w32bd_jsonl_sink"
-
-        def writer(self, schema, overwrite):
-            return _JsonlWriter(self.options["path"])
-
-    spark.dataSource.register(_JsonlSink)
+    out = _staged_sink_dir(spark, sf_dir, "pydsw")
     rollup = (
         load_table(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -666,45 +734,30 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup.write.format("w32bd_jsonl_sink").option("path", out).mode(
         "append"
     ).save()
-    with open(os.path.join(out, "_MANIFEST")) as f:
-        manifest = _json.load(f)
-    rows = []
-    for fname in manifest:
-        with open(os.path.join(out, fname)) as f:
-            for line in f:
-                t, n, nu = _json.loads(line)
-                rows.append((t, n, nu))
-    from ..common import local_rows_df
-
     # r14: literal JVM rows — the read-back is a handful of rollup rows;
     # createDataFrame's Python-RDD scan paid a worker round trip per
     # action (see common.local_rows_df).
     return local_rows_df(
-        spark, "event_type string, n bigint, n_users bigint", rows
+        spark, "event_type string, n bigint, n_users bigint", _committed_rows(out)
     ).orderBy("event_type")
 
 
 # ---------------------------------------------------------------------------
-# stream_python_datasource_sink — the Python Data Source API's STREAMING
-# write side (r10): `DataSource.streamWriter()` — a custom Python sink
-# driven by a real watermarked query. Per micro-batch, each task's
-# write(rows) stages a uniquely-named jsonl file; the driver-side
-# commit(messages, batchId) publishes a per-batch manifest — the
-# exactly-once unit the engine replays against on failure (an aborted
-# epoch's staged files never gain a manifest and stay invisible).
+# stream_python_datasource_sink — the Row writer behind a real watermarked
+# query (`DataSource.streamWriter()`): per micro-batch, each task stages
+# its rows and commit(messages, batchId) publishes that batch's manifest
+# (an aborted epoch's staged files never gain one and stay invisible).
 #
-# The topology is stream_watermark_late's, unchanged (same chunked
-# source, same watermark, same append-mode tumbling agg) — only the sink
-# differs — so the SAME lockstep finalized-window oracle applies: the
-# union of manifest-committed rows across batches must hash-equal the
-# batch expression. This closes the Data Source API matrix:
-# reader/writer × batch/streaming, all four value-pinned.
+# The query is the one finalized-window query (streams._finalized_windows)
+# — only the sink differs — so the SAME lockstep finalized-window oracle
+# applies: the union of manifest-committed rows across batches must
+# hash-equal the batch expression.
 # ---------------------------------------------------------------------------
 
 
 @register(
     "stream_python_datasource_sink",
-    oracle=None,  # replaced below — reuses streams._WM_LATE_ORACLE
+    oracle=_WM_LATE_ORACLE,
     doc="Python Data Source API STREAMING writer: the watermarked tumbling "
     "agg written through a custom Python sink — per-batch per-task "
     "write() stages jsonl, commit(messages, batchId) publishes a "
@@ -715,147 +768,35 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sink", "source", "streaming", "udf"),
 )
 def stream_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json as _json
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamWriter,
-        WriterCommitMessage,
-    )
-
-    from ..session import ensure_package_on_workers
-    from ..streaming.streams import _WATERMARK, _event_stream, _query
-
-    ensure_package_on_workers(spark)
-    out = pid_run_dir(sf_dir, "pydsk_out")
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-
-    class _Msg(WriterCommitMessage):
-        def __init__(self, fname):
-            self.fname = fname
-
-    class _JsonlStreamWriter(DataSourceStreamWriter):
-        def __init__(self, path):
-            self.path = path
-
-        def write(self, rows):
-            import json
-            import os
-            import uuid
-
-            fname = f"stage-{uuid.uuid4().hex}.jsonl"
-            with open(os.path.join(self.path, fname), "w") as f:
-                for r in rows:
-                    f.write(
-                        json.dumps(
-                            [int(r["win_start"]), r["event_type"], int(r["n"])]
-                        )
-                        + "\n"
-                    )
-            return _Msg(fname)
-
-        def commit(self, messages, batchId):
-            import json
-            import os
-
-            manifest = sorted(m.fname for m in messages if m is not None)
-            with open(
-                os.path.join(self.path, f"_MANIFEST_{batchId:06d}"), "w"
-            ) as f:
-                json.dump(manifest, f)
-
-        def abort(self, messages, batchId):
-            import os
-
-            for m in messages:
-                if m is not None:
-                    try:
-                        os.remove(os.path.join(self.path, m.fname))
-                    except OSError:
-                        pass
-
-    class _JsonlStreamSink(DataSource):
-        @classmethod
-        def name(cls):
-            return "w32bd_jsonl_stream_sink"
-
-        def streamWriter(self, schema, overwrite):
-            return _JsonlStreamWriter(self.options["path"])
-
-    spark.dataSource.register(_JsonlStreamSink)
+    out = _staged_sink_dir(spark, sf_dir, "pydsk_out")
     writer = (
         # 2 files/trigger (r14): output = manifest-committed union =
         # windows finalized by the FINAL watermark — invariant to the
         # chunk→batch grouping (see streams._event_stream).
-        _event_stream(spark, sf_dir, max_files=2)
-        .withWatermark("ts", _WATERMARK)
-        .groupBy(F.window("ts", "600 seconds"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.unix_timestamp(F.col("window.start")).alias("win_start"),
-            "event_type",
-            "n",
-        )
+        _finalized_windows(_event_stream(spark, sf_dir, max_files=2))
         # coalesce(1) (r14, guide §4): each staged file is one Python
         # writer-task round trip per epoch; the finalized rows per epoch
         # are a handful — one task stages them all. Committed row union
         # unchanged; the two-phase commit contract (stage → per-batch
         # manifest) is exercised identically.
         .coalesce(1)
-        .writeStream.format("w32bd_jsonl_stream_sink")
+        .writeStream.format("w32bd_jsonl_sink")
         .option("path", out)
         .option("checkpointLocation", os.path.join(out, "_ckpt"))
         .outputMode("append")
     )
     with _query(spark, writer) as q:
         q.processAllAvailable()
-    rows = []
-    for entry in sorted(os.listdir(out)):
-        if not entry.startswith("_MANIFEST_"):
-            continue
-        with open(os.path.join(out, entry)) as f:
-            manifest = _json.load(f)
-        for fname in manifest:
-            with open(os.path.join(out, fname)) as fh:
-                for line in fh:
-                    w, t, n = _json.loads(line)
-                    rows.append((w, t, n))
     return spark.createDataFrame(
-        rows, "win_start bigint, event_type string, n bigint"
+        _committed_rows(out), "win_start bigint, event_type string, n bigint"
     ).orderBy("win_start", "event_type")
 
 
-# the oracle is the shared lockstep finalized-window expression — set it
-# here (streams.py imports this module indirectly; late binding avoids a
-# circular import at module load)
-def _bind_pydsk_oracle() -> None:
-    import dataclasses
-
-    from ..registry import REGISTRY as _REG
-    from ..streaming.streams import _WM_LATE_ORACLE
-
-    q = _REG["stream_python_datasource_sink"]
-    _REG["stream_python_datasource_sink"] = dataclasses.replace(
-        q, oracle=_WM_LATE_ORACLE
-    )
-
-
-_bind_pydsk_oracle()
-
-
 # ---------------------------------------------------------------------------
-# sink_python_datasource_arrow — DataSourceArrowWriter (r10): the
-# Arrow-native variant of the batch writer — write() receives pyarrow
-# RecordBatches instead of Rows (the zero-copy bulk path a columnar sink
-# actually wants; the udf_arrow_map argument applied to the connector
-# write side). Same two-phase commit contract as the row writer; each
-# staged file additionally records how many RecordBatches the task
-# received, so the manifest proves the Arrow path (not a row fallback)
-# carried the data.
+# sink_python_datasource_arrow — the Arrow writer on a batch write
+# (DataSourceArrowWriter, r10): write() receives pyarrow RecordBatches
+# instead of Rows (the udf_arrow_map argument applied to the connector
+# write side); the manifest's per-file batch counts are pinned in pytest.
 # ---------------------------------------------------------------------------
 
 _PYDSWA_ORACLE = f"""
@@ -881,93 +822,7 @@ ORDER BY l_returnflag, l_linestatus
     tags=("sink", "source", "udf"),
 )
 def sink_python_datasource_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json as _json
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceArrowWriter,
-        WriterCommitMessage,
-    )
-
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-    out = pid_run_dir(sf_dir, "pydswa")
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-
-    class _Msg(WriterCommitMessage):
-        def __init__(self, fname, n_batches):
-            self.fname = fname
-            self.n_batches = n_batches
-
-    class _ArrowJsonlWriter(DataSourceArrowWriter):
-        def __init__(self, path):
-            self.path = path
-
-        def write(self, batches):
-            import json
-            import os
-            import uuid
-
-            fname = f"part-{uuid.uuid4().hex}.jsonl"
-            n_batches = 0
-            with open(os.path.join(self.path, fname), "w") as f:
-                for batch in batches:
-                    n_batches += 1
-                    cols = {
-                        name: batch.column(name).to_pylist()
-                        for name in batch.schema.names
-                    }
-                    for i in range(batch.num_rows):
-                        f.write(
-                            json.dumps(
-                                [
-                                    cols["l_returnflag"][i],
-                                    cols["l_linestatus"][i],
-                                    int(cols["n"][i]),
-                                    int(cols["sum_qty_u"][i]),
-                                ]
-                            )
-                            + "\n"
-                        )
-            return _Msg(fname, n_batches)
-
-        def commit(self, messages):
-            import json
-            import os
-
-            entries = [
-                {"file": m.fname, "n_batches": m.n_batches}
-                for m in messages
-                if m is not None
-            ]
-            entries.sort(key=lambda e: e["file"])
-            with open(os.path.join(self.path, "_MANIFEST"), "w") as f:
-                json.dump(entries, f)
-
-        def abort(self, messages):
-            import os
-
-            for m in messages:
-                if m is not None:
-                    try:
-                        os.remove(os.path.join(self.path, m.fname))
-                    except OSError:
-                        pass
-
-    class _ArrowJsonlSink(DataSource):
-        @classmethod
-        def name(cls):
-            return "w32bd_jsonl_arrow_sink"
-
-        def writer(self, schema, overwrite):
-            return _ArrowJsonlWriter(self.options["path"])
-
-    spark.dataSource.register(_ArrowJsonlSink)
+    out = _staged_sink_dir(spark, sf_dir, "pydswa", arrow=True)
     rollup = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag", "l_linestatus")
@@ -989,22 +844,12 @@ def sink_python_datasource_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup.write.format("w32bd_jsonl_arrow_sink").option("path", out).mode(
         "append"
     ).save()
-    with open(os.path.join(out, "_MANIFEST")) as f:
-        manifest = _json.load(f)
-    rows = []
-    for entry in manifest:
-        with open(os.path.join(out, entry["file"])) as f:
-            for line in f:
-                rf, ls, n, squ = _json.loads(line)
-                rows.append((rf, ls, n, squ))
-    from ..common import local_rows_df
-
     # r14: literal JVM rows (see common.local_rows_df)
     return local_rows_df(
         spark,
         "l_returnflag string, l_linestatus string, n bigint, "
         "sum_qty_u bigint",
-        rows,
+        _committed_rows(out),
     ).orderBy("l_returnflag", "l_linestatus")
 
 
@@ -1084,7 +929,6 @@ def _pydsf_source(row_counter=None):
             return [InputPartition(p) for p in range(4)]
 
         def read(self, partition):
-            m31, a, c = 2_147_483_648, 1_103_515_245, 12_345
             per = (n + 3) // 4
             p = partition.value
             lo, hi = p * per, min((p + 1) * per, n)
@@ -1096,9 +940,7 @@ def _pydsf_source(row_counter=None):
                     continue
                 if row_counter is not None:
                     row_counter.add(1)
-                x = (i * 1000003 + seed * 7919 + c) % m31
-                x = (a * x + c) % m31
-                yield (i, i % sensors, x / m31)
+                yield (i, i % sensors, synth.lcg_state(i, seed) / synth.M31)
 
     class _PushdownSource(DataSource):
         @classmethod
@@ -1128,8 +970,6 @@ def _pydsf_source(row_counter=None):
     tags=("source", "udf", "scale"),
 )
 def src_python_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from ..session import ensure_package_on_workers
 
     ensure_package_on_workers(spark)
@@ -1153,17 +993,16 @@ def src_python_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFram
 
 # ---------------------------------------------------------------------------
 # stream_python_datasource_sink_arrow — DataSourceStreamArrowWriter
-# (r10): the fourth and final writer quadrant (Row/Arrow × batch/
-# streaming) — per micro-batch, tasks receive pyarrow RecordBatches and
-# stage jsonl with the batch count recorded; commit(messages, batchId)
-# publishes the per-batch manifest. Topology and oracle are
-# stream_watermark_late's, unchanged.
+# (r10): the fourth writer quadrant (Row/Arrow × batch/streaming) — per
+# micro-batch, tasks receive pyarrow RecordBatches and stage jsonl with
+# the batch count recorded; commit(messages, batchId) publishes the
+# per-batch manifest. Query and oracle are stream_watermark_late's.
 # ---------------------------------------------------------------------------
 
 
 @register(
     "stream_python_datasource_sink_arrow",
-    oracle=None,  # bound below to streams._WM_LATE_ORACLE (late import)
+    oracle=_WM_LATE_ORACLE,
     doc="DataSourceStreamArrowWriter: the Arrow-native STREAMING write "
     "path — per-micro-batch RecordBatches through the two-phase commit "
     "(batch counts recorded in each per-batch manifest), read-back of "
@@ -1174,142 +1013,20 @@ def src_python_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFram
 def stream_python_datasource_sink_arrow(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import json as _json
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceStreamArrowWriter,
-        WriterCommitMessage,
-    )
-
-    from ..session import ensure_package_on_workers
-    from ..streaming.streams import _WATERMARK, _event_stream, _query
-
-    ensure_package_on_workers(spark)
-    out = pid_run_dir(sf_dir, "pydska_out")
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-
-    class _Msg(WriterCommitMessage):
-        def __init__(self, fname, n_batches):
-            self.fname = fname
-            self.n_batches = n_batches
-
-    class _ArrowStreamWriter(DataSourceStreamArrowWriter):
-        def __init__(self, path):
-            self.path = path
-
-        def write(self, batches):
-            import json
-            import os as _os
-            import uuid
-
-            fname = f"stage-{uuid.uuid4().hex}.jsonl"
-            n_batches = 0
-            with open(_os.path.join(self.path, fname), "w") as f:
-                for batch in batches:
-                    n_batches += 1
-                    cols = {
-                        name: batch.column(name).to_pylist()
-                        for name in batch.schema.names
-                    }
-                    for i in range(batch.num_rows):
-                        f.write(
-                            json.dumps(
-                                [
-                                    int(cols["win_start"][i]),
-                                    cols["event_type"][i],
-                                    int(cols["n"][i]),
-                                ]
-                            )
-                            + "\n"
-                        )
-            return _Msg(fname, n_batches)
-
-        def commit(self, messages, batchId):
-            import json
-            import os as _os
-
-            entries = [
-                {"file": m.fname, "n_batches": m.n_batches}
-                for m in messages
-                if m is not None
-            ]
-            entries.sort(key=lambda e: e["file"])
-            with open(
-                _os.path.join(self.path, f"_MANIFEST_{batchId:06d}"), "w"
-            ) as f:
-                json.dump(entries, f)
-
-        def abort(self, messages, batchId):
-            import os as _os
-
-            for m in messages:
-                if m is not None:
-                    try:
-                        _os.remove(_os.path.join(self.path, m.fname))
-                    except OSError:
-                        pass
-
-    class _ArrowStreamSink(DataSource):
-        @classmethod
-        def name(cls):
-            return "w32bd_jsonl_stream_arrow_sink"
-
-        def streamWriter(self, schema, overwrite):
-            return _ArrowStreamWriter(self.options["path"])
-
-    spark.dataSource.register(_ArrowStreamSink)
+    out = _staged_sink_dir(spark, sf_dir, "pydska_out", arrow=True)
     writer = (
         # 2 files/trigger + coalesce(1) (r14): same argument as the
         # row-writer twin — committed union invariant, one Arrow writer
         # round trip per epoch instead of four.
-        _event_stream(spark, sf_dir, max_files=2)
-        .withWatermark("ts", _WATERMARK)
-        .groupBy(F.window("ts", "600 seconds"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.unix_timestamp(F.col("window.start")).alias("win_start"),
-            "event_type",
-            "n",
-        )
+        _finalized_windows(_event_stream(spark, sf_dir, max_files=2))
         .coalesce(1)
-        .writeStream.format("w32bd_jsonl_stream_arrow_sink")
+        .writeStream.format("w32bd_jsonl_arrow_sink")
         .option("path", out)
         .option("checkpointLocation", os.path.join(out, "_ckpt"))
         .outputMode("append")
     )
     with _query(spark, writer) as q:
         q.processAllAvailable()
-    rows = []
-    for entry in sorted(os.listdir(out)):
-        if not entry.startswith("_MANIFEST_"):
-            continue
-        with open(os.path.join(out, entry)) as f:
-            manifest = _json.load(f)
-        for e in manifest:
-            with open(os.path.join(out, e["file"])) as fh:
-                for line in fh:
-                    w, t, n = _json.loads(line)
-                    rows.append((w, t, n))
     return spark.createDataFrame(
-        rows, "win_start bigint, event_type string, n bigint"
+        _committed_rows(out), "win_start bigint, event_type string, n bigint"
     ).orderBy("win_start", "event_type")
-
-
-def _bind_pydska_oracle() -> None:
-    import dataclasses
-
-    from ..registry import REGISTRY as _REG
-    from ..streaming.streams import _WM_LATE_ORACLE
-
-    q = _REG["stream_python_datasource_sink_arrow"]
-    _REG["stream_python_datasource_sink_arrow"] = dataclasses.replace(
-        q, oracle=_WM_LATE_ORACLE
-    )
-
-
-_bind_pydska_oracle()

@@ -10,6 +10,14 @@ Results land in a memory sink and come back as a normal batch DataFrame
 for the caller (pure-streaming semantics get the rows-only check; pytest
 asserts the containment/drop properties vs the batch oracles).
 
+Sinks: the eight keys that share the finalized-window oracle
+(_WM_LATE_ORACLE) run ONE query, `_finalized_windows`, and differ only in
+what surrounds it — a memory, parquet, foreach-row or Python Data Source
+sink, the RocksDB state store, a socket source, a checkpoint restart.
+The Python Data Source writers share one staged-commit sink kit
+(`_jsonl_sink`, `_committed_rows`) in sources/generators.py;
+`_jsonl_rows` reads the jsonl files those sinks stage.
+
 Scale notes: this is the same topology as a production job (source →
 watermarked stateful op → sink); swap `_event_stream`'s one `readStream`
 line for a Kafka source and the memory sink for a Delta/parquet sink and
@@ -230,6 +238,19 @@ def _run_stream(
         return spark.table(q.name)
 
 
+def _jsonl_rows(out: str, names) -> list[tuple]:
+    """The rows of the jsonl files `names` in `out`, in that order: one
+    tuple per line, each line one JSON array (how stream_sink_foreach_rows'
+    writer and the staged-commit sink in sources/generators.py write rows)."""
+    import json
+
+    rows = []
+    for name in names:
+        with open(os.path.join(out, name)) as f:
+            rows += [tuple(json.loads(line)) for line in f]
+    return rows
+
+
 # Batch-equivalence oracle under LOCKSTEP IN-ORDER ARRIVAL (r5, the
 # stream_stream_join trick applied to watermark finalization): the chunked
 # source replays events in (ts, event_id) order, so the event-time
@@ -260,6 +281,24 @@ ORDER BY win_start, event_type
 """
 
 
+def _finalized_windows(s: DataFrame) -> DataFrame:
+    """The one finalized-window query, behind every sink whose key carries
+    _WM_LATE_ORACLE: 600 s tumbling counts per event_type under the
+    10-minute watermark, as (win_start, event_type, n). In append mode a
+    window is emitted once the watermark passes its end, so each sink
+    holds exactly the windows the final watermark finalized."""
+    return (
+        s.withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", "600 seconds"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.unix_timestamp(F.col("window.start")).alias("win_start"),
+            "event_type",
+            "n",
+        )
+    )
+
+
 @register(
     "stream_watermark_late",
     oracle=_WM_LATE_ORACLE,
@@ -271,25 +310,15 @@ ORDER BY win_start, event_type
     tags=("streaming", "stateful"),
 )
 def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def transform(s):
-        return (
-            s.withWatermark("ts", _WATERMARK)
-            .groupBy(F.window("ts", "600 seconds"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("win_start"),
-                "event_type",
-                "n",
-            )
-        )
-
     # max_files=2 (r14): the emitted set is windows with end <= FINAL
     # watermark — a cumulative-monotone union invariant to how the four
     # ts-ordered chunks batch (watermark still advances across the two
     # data batches; the final finalization rides the same trailing
     # no-data batch it always did). Hash-proven identical at 3 SFs.
     stream = _event_stream(spark, sf_dir, max_files=2)
-    return _run_stream(spark, stream, transform).orderBy("win_start", "event_type")
+    return _run_stream(spark, stream, _finalized_windows).orderBy(
+        "win_start", "event_type"
+    )
 
 
 # Batch-equivalence oracle under lockstep arrival (r5): the four main
@@ -989,15 +1018,7 @@ def stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base, ignore_errors=True)
 
     writer = (
-        _event_stream(spark, sf_dir)
-        .withWatermark("ts", _WATERMARK)
-        .groupBy(F.window("ts", "600 seconds"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.unix_timestamp(F.col("window.start")).alias("win_start"),
-            "event_type",
-            "n",
-        )
+        _finalized_windows(_event_stream(spark, sf_dir))
         .writeStream.format("parquet")
         .option("path", sink)
         .option("checkpointLocation", ckpt)
@@ -1162,14 +1183,7 @@ def stream_unbounded_socket(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p")[1].alias("event_type"),
     )
     writer = (
-        parsed.withWatermark("ts", _WATERMARK)
-        .groupBy(F.window("ts", "600 seconds"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.unix_timestamp(F.col("window.start")).alias("win_start"),
-            "event_type",
-            "n",
-        )
+        _finalized_windows(parsed)
         .writeStream.format("memory")
         .outputMode("append")
     )
@@ -1545,15 +1559,7 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _life():
         writer = (
-            _event_stream(spark, sf_dir, path=stage)
-            .withWatermark("ts", _WATERMARK)
-            .groupBy(F.window("ts", "600 seconds"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("win_start"),
-                "event_type",
-                "n",
-            )
+            _finalized_windows(_event_stream(spark, sf_dir, path=stage))
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
@@ -1641,9 +1647,7 @@ def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("event_id").alias("max_event_id"),
     )
     writer = (
-        observed.withWatermark("ts", _WATERMARK)
-        .groupBy(F.window("ts", "600 seconds"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
+        _finalized_windows(observed)
         .writeStream.format("memory")
         .outputMode("append")
     )
@@ -1879,10 +1883,7 @@ def stream_query_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 2 files/trigger (r14): the key's output is the summed
         # numInputRows across the query's progress events — invariant to
         # batching; still multiple progress events.
-        _event_stream(spark, sf_dir, max_files=2)
-        .withWatermark("ts", _WATERMARK)
-        .groupBy(F.window("ts", "600 seconds"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
+        _finalized_windows(_event_stream(spark, sf_dir, max_files=2))
         .writeStream.format("memory")
         .outputMode("append")
     )
@@ -1945,8 +1946,6 @@ def stream_query_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "sink"),
 )
 def stream_sink_foreach_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json as _json
-
     from ..session import ensure_package_on_workers
 
     ensure_package_on_workers(spark)
@@ -1990,15 +1989,7 @@ def stream_sink_foreach_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer = (
         # 2 files/trigger (r14): same final-watermark-only output set as
         # stream_watermark_late (see _event_stream).
-        _event_stream(spark, sf_dir, max_files=2)
-        .withWatermark("ts", _WATERMARK)
-        .groupBy(F.window("ts", "600 seconds"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.unix_timestamp(F.col("window.start")).alias("win_start"),
-            "event_type",
-            "n",
-        )
+        _finalized_windows(_event_stream(spark, sf_dir, max_files=2))
         # coalesce(1) (r14, guide §4 boundary): each NON-EMPTY (epoch,
         # partition) pays a Python foreach-writer round trip; the
         # finalized-window rows per epoch are a handful, so 4 write
@@ -2011,16 +2002,9 @@ def stream_sink_foreach_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with _query(spark, writer) as q:
         q.processAllAvailable()
-    rows = []
-    for entry in sorted(os.listdir(out)):
-        if not entry.startswith("fe-"):
-            continue
-        with open(os.path.join(out, entry)) as f:
-            for line in f:
-                w, t, n = _json.loads(line)
-                rows.append((w, t, n))
+    staged = sorted(e for e in os.listdir(out) if e.startswith("fe-"))
     return spark.createDataFrame(
-        rows, "win_start bigint, event_type string, n bigint"
+        _jsonl_rows(out, staged), "win_start bigint, event_type string, n bigint"
     ).orderBy("win_start", "event_type")
 
 
@@ -2159,22 +2143,10 @@ _ROCKSDB_CONFS = {
     tags=("streaming", "stateful", "scale"),
 )
 def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def transform(s):
-        return (
-            s.withWatermark("ts", _WATERMARK)
-            .groupBy(F.window("ts", "600 seconds"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(
-                F.unix_timestamp(F.col("window.start")).alias("win_start"),
-                "event_type",
-                "n",
-            )
-        )
-
     # max_files=2 (r14): same final-watermark-only oracle as
     # stream_watermark_late — see _event_stream.
     stream = _event_stream(spark, sf_dir, max_files=2)
-    out = _run_stream(spark, stream, transform, confs=_ROCKSDB_CONFS)
+    out = _run_stream(spark, stream, _finalized_windows, confs=_ROCKSDB_CONFS)
     return out.orderBy("win_start", "event_type")
 
 

@@ -109,6 +109,14 @@ def sum_micro_int(expr: str, bound: float = 1e6) -> str:
     )
 
 
+def lcg_state(key: int, seed: int) -> int:
+    """Python form of `lcg_u`'s first draw (draw=0) as its integer state
+    x in [0, M31): the replay Python readers use; `x / M31` is the
+    uniform, bit-identical to the SQL text's."""
+    x = (key * 1000003 + seed * 7919 + LCG_C) % M31
+    return (LCG_A * x + LCG_C) % M31
+
+
 def lcg_u(key_expr: str, seed: int, draw: int = 0) -> str:
     """Uniform [0,1) double: `draw`-th LCG output for integer key `key_expr`."""
     x = f"((({key_expr}) * 1000003 + {seed} * 7919 + {LCG_C}) % {M31})"
