@@ -162,6 +162,41 @@ def test_poster_param_points_match_oracle(spark):
         compare(sdf, ddf, key=f"gen_poster_param:{pt['seed']}")
 
 
+def test_poster_edits_from_two_threads_match_their_oracles(spark):
+    """Two clients on one session interleave edits, each with parameters
+    of its own (the shadow on for one edit): every render equals its own
+    DuckDB oracle, so no render reads the other client's parameters."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from week3_2_practice_big_data__spark.plans.generative import _composite_sql
+    from .oracle import compare, duck_run
+
+    clients = [
+        [dict(seed=11, nb=5, theme="cool"),
+         dict(seed=12, nb=9, lx="0.8e0", ly="0.6e0"),
+         dict(seed=13, nb=9, theme="warm", blur_strength=0.05)],
+        [dict(seed=21, nb=14, theme="neutral"),
+         dict(seed=22, nb=3, lx="0e0", ly="1e0"),
+         dict(seed=23, nb=14, lx="-0.7e0", ly="-0.4e0")],
+    ]
+    turn = threading.Barrier(len(clients), timeout=300)
+
+    def run(edits: list[dict]) -> None:
+        for edit in edits:
+            turn.wait()  # each edit starts beside the other client's
+            pt = dict(edit, canvas=32, scanline=True)
+            compare(
+                spark.sql(_composite_sql("spark", **pt)),
+                duck_run(_composite_sql("duckdb", **pt), SF_SMALL),
+                key=f"poster:{pt}",
+            )
+
+    with ThreadPoolExecutor(len(clients)) as pool:
+        for done in [pool.submit(run, edits) for edits in clients]:
+            done.result(timeout=600)
+
+
 def test_poster_theme_changes_background_only_outside_blobs(spark):
     """Strong theme invariant: every pixel that is pure background on the
     white canvas (all channels 1.0 — no blob layer can blend to exact 1.0,

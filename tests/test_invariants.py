@@ -1530,7 +1530,7 @@ def test_pandas_on_spark_null_group_keys_match_sql(spark):
         import glob
         import shutil
 
-        for d in glob.glob(os.path.join(os.path.dirname(out), "*sf_weird*")):
+        for d in glob.glob(os.path.join(os.path.dirname(out), "*sf_nullkey*")):
             shutil.rmtree(d, ignore_errors=True)
         os.makedirs(out, exist_ok=True)
         con0 = duckdb.connect()

@@ -1365,49 +1365,46 @@ def _poster_render(spark, **params):
     return spark.sql(_composite_sql("spark", canvas=64, scanline=True, **params))
 
 
-def test_poster_render_is_two_stages(spark):
-    """A 64 px poster edit runs as one single-partition pipeline: at most
-    two exchanges, no range exchange under the final ORDER BY, no
-    nested-loop join, and at most four jobs."""
+def _render_shape(spark, group: str, **params) -> tuple[str, int]:
+    """Render once under a job group: the final physical plan and the
+    number of Spark jobs the render ran."""
     sc = spark.sparkContext
-    group = "test-poster-render-shape"
     sc.setJobGroup(group, group)
     try:
-        df = _poster_render(
-            spark, seed=7, nb=9, lx="0.4e0", ly="-0.7e0", theme="warm"
-        )
+        df = _poster_render(spark, **params)
         df.collect()
     finally:
         sc._jsc.clearJobGroup()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert len(re.findall(r"(?<![A-Za-z])Exchange ", final)) <= 2, final
-    assert "rangepartitioning" not in final, final
-    assert "BroadcastNestedLoopJoin" not in final, final
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+    return plan.split("== Initial Plan ==")[0], len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_poster_shadow_render_is_one_exchange(spark):
-    """A shadow edit is the same one-exchange plan: the mask, both blur
-    passes and the offset sample are array work on each blob's row, so
-    there is no join, no window, at most two exchanges and four jobs."""
-    sc = spark.sparkContext
-    group = "test-poster-shadow-shape"
-    sc.setJobGroup(group, group)
-    try:
-        df = _poster_render(
-            spark, seed=31, nb=9, lx="0.9e0", ly="-0.1e0", theme="cool",
-            blur_strength=0.05,
-        )
-        df.collect()
-    finally:
-        sc._jsc.clearJobGroup()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert len(re.findall(r"(?<![A-Za-z])Exchange ", final)) <= 2, final
+def test_poster_render_is_one_job_without_exchange(spark):
+    """A 64 px poster edit is a gather: generators and projections over
+    the one-row scene, so the final plan has no exchange, no aggregate
+    and no join, and the render runs as exactly one Spark job."""
+    final, jobs = _render_shape(
+        spark, "test-poster-render-shape",
+        seed=7, nb=9, lx="0.4e0", ly="-0.7e0", theme="warm",
+    )
+    assert "Exchange" not in final, final
+    assert "Aggregate" not in final, final
+    assert "Join" not in final, final
+    assert jobs == 1
+
+
+def test_poster_shadow_render_is_one_job_without_exchange(spark):
+    """A shadow edit is the same gather: the mask, both blur passes and
+    the offset sample are array work on the scene's blobs, so there is no
+    exchange, no join and no window, and the render is one Spark job."""
+    final, jobs = _render_shape(
+        spark, "test-poster-shadow-shape",
+        seed=31, nb=9, lx="0.9e0", ly="-0.1e0", theme="cool", blur_strength=0.05,
+    )
+    assert "Exchange" not in final, final
     assert "Join" not in final, final
     assert "Window" not in final, final
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+    assert jobs == 1
 
 
 def test_poster_edits_reuse_compiled_code(spark):

@@ -11,10 +11,12 @@ Engine re-expression — relational, long-format, per SURVEY §1.2:
   a canvas size is the same plan and the same generated Java: Spark's
   compiled-class cache serves an edit instead of Janino compiling ~30
   classes for it.
-- blobs are rows generated from `ui`; each carries its closed polygon as a
-  280-edge array (vertex k + 1 is an array index, no window), its padded
-  box and centroid (array folds), and its candidate pixels, which are
-  generated from the box with `inline(...)` — no pixel×box join.
+- the blobs are one array of structs generated from `ui` (`_blob_sql`);
+  each carries its closed polygon as a 280-edge array (vertex k + 1 is an
+  array index, no window), its box bounds, centroid and shading
+  normalizers (array folds). The per-pixel keys read the array one blob
+  per row and generate each blob's candidate pixels from its box with
+  `inline(...)` — no pixel×box join.
 - polygon containment is NOT a UDF here: even-odd ray casting counts, per
   pixel, the edges spanning its raster row that cross it to its right
   (array filters; the scanline variant computes the row's crossings once).
@@ -27,18 +29,21 @@ Engine re-expression — relational, long-format, per SURVEY §1.2:
   row's edge crossings (scanline, after Raptor), both passes as array
   transforms, and the (+0.02, −0.02) offset sample as a bilinear read of
   the blurred array by guarded 2-D index. No join, no window.
-- compositing is the ordered non-commutative fold (SURVEY §7.4.1): per pixel
-  sort_array(collect_list(struct(depth,…))) + aggregate() alpha-over fold,
-  forced deterministic by the sort key, with the background as its first
-  layer and, with the shadow on, the shadows at zorder 0 under the blobs.
+- compositing is the ordered non-commutative fold (SURVEY §7.4.1) as a
+  gather: each pixel folds, with aggregate() (list_reduce in DuckDB), the
+  layers of the blobs that contain it over its row's background, in the
+  blob array's depth order — with the shadow on, the shadows first, under
+  every blob.
 
-Stage shape: everything before the fold is row-local (generators,
-projections, array folds), so the composite — shadow or not — needs one
-exchange, the `REPARTITION(1)` hint in front of the fold, and a 64 px
-edit runs as two Spark jobs. The hint is query text — it scopes to the
-one query and is a comment to DuckDB, which reads the same SQL as the
-oracle. At reference scale the pixel work sits in that one partition;
-`_composite_sql` notes the trade-off.
+Stage shape: the composite is generators and projections over the one
+`scene` row — per raster row the blobs whose box spans it with their
+crossings of that row, per pixel the fold — so it has no exchange, no
+aggregate and no join, and a 64 px edit, shadow or not, runs as one Spark
+job. The scene's `COALESCE(1)` hint keeps the plan in one partition, so
+the final ORDER BY sorts locally; the hint is query text, scoped to the
+one query, and a comment to DuckDB, which reads the same SQL as the
+oracle. All pixel work sits in that one task; `_composite_sql` notes the
+trade-off.
 """
 
 from __future__ import annotations
@@ -61,6 +66,7 @@ CANVAS = 96  # global canvas resolution (H = W)
 NSAMP = 280  # boundary samples per blob (app.py:141)
 PAD = "0.4e0"  # bbox pad fraction of max(xrange, yrange), app.py:58-60
 _LX, _LY = "-0.6e0", "0.8e0"  # light_dir (app.py:52)
+_SHADOW_OFF = 0.02  # shadow extent shift, app.py:90
 
 
 # Background themes: the reference declares two hex colors per theme
@@ -96,20 +102,6 @@ def _theme_ramp(theme: str | None) -> list[tuple[float, float]]:
         v2 = int(c2[1 + 2 * ch : 3 + 2 * ch], 16) / 255.0
         out.append(((1.0 - _BG_ALPHA) + _BG_ALPHA * v1, _BG_ALPHA * (v2 - v1)))
     return out
-
-
-def _background_ctes(dialect: str, canvas: int, canvas_h: int) -> str:
-    """`grid`: every canvas pixel with its background colour (lr, lg, lb),
-    generated from `ui` — one row per raster row, then per pixel."""
-    t = f"(row / {synth.flit(canvas_h - 1)})"
-    rows = synth.explode_sql(synth.int_list("0", str(canvas_h - 1), dialect), dialect)
-    cols = synth.explode_sql(synth.int_list("0", str(canvas - 1), dialect), dialect)
-    return f"""bgrow AS (
-  SELECT row, bg_r + bg_dr * {t} AS lr, bg_g + bg_dg * {t} AS lg,
-    bg_b + bg_db * {t} AS lb
-  FROM (SELECT ui.*, {rows} AS row FROM ui) u
-),
-grid AS (SELECT row, {cols} AS col, lr, lg, lb FROM bgrow)"""
 
 
 # x of edge e's crossing with the pixel's raster row (y): the even-odd test's
@@ -169,22 +161,18 @@ def _axis(dialect: str, lo: str, hi: str, n: int, shift: float = 0.0) -> str:
     return f"filter({cands}, i -> {v} >= {lo} AND {v} <= {hi})"
 
 
-def _scene_prefix_ctes(
-    dialect: str, seed: int = SEED, nb: int = NB, canvas: int = CANVAS,
-    canvas_h: int | None = None, lx: str = _LX, ly: str = _LY,
-    theme: str | None = None,
-) -> str:
-    """Shared CTE prelude through `pairs`: one row per blob, then per
-    (blob, raster row), then per candidate pixel. Generators, projections
-    and array folds only, so nothing here needs an exchange.
+def _blob_sql(dialect: str, canvas: int, canvas_h: int, shadow: bool = False) -> str:
+    """The render's blobs as one array of structs in depth order, generated
+    from the `ui` columns: the one definition of a blob, read by the
+    composite and, one row per blob, by the per-pixel keys.
 
-    `ui` (the UI parameters) → `blobs` (generated from nb) → `poly` (the
-    280 q6-quantized vertices and the closed edges; vertex k + 1 is an
-    array index, not a window) → `bbox` (padded box; the centroid sums the
-    vertices left to right, the same additions as the row SUM it replaces)
-    → `norms` (the box's grid rows and cols, see `_axis`, and the shading
-    normalizers) → `prow` (the edges spanning the row and their crossings
-    `xs`) → `pairs`.
+    Each blob is a chain of `synth.let_sql` binds, each step evaluated
+    once: its parameters `b` (app.py:138-146) → the 280 q6-quantized
+    `verts` → the closed `edges` (vertex k + 1 is an array index, not a
+    window) → their extent `m` → the padded box and the centroid `bx` (the
+    vertices summed left to right, the same additions as a row SUM) → the
+    box's grid rows and cols `ax` (see `_axis`; contiguous, so the struct
+    keeps their bounds) → the pixel rectangle's corner coordinates `c`.
 
     The shading normalizers (max distance and the light range over a
     blob's candidate pixels) come from the four corners of the pixel
@@ -193,102 +181,194 @@ def _scene_prefix_ctes(
     lie on the corners, with the same doubles the windows over all pixels
     computed.
 
-    `canvas_h` mirrors the reference's non-square figure (figsize 7x10,
-    app.py:121): width stays `canvas`, height becomes `canvas_h`, and both
-    axes keep their own unit-interval linspace exactly as imshow stretches
-    extent=[0,1,0,1] over a 7:10 figure."""
-    h = canvas_h or canvas
+    With `shadow`, a blob also carries the bounds of its box shifted by
+    the (+0.02, −0.02) extent offset (app.py:90), where its shadow is
+    drawn. Lambdas read only lambda variables and `ui` columns (see
+    `synth.let_sql`)."""
     fn = functools.partial(synth.list_fn, dialect=dialect)
-    base = synth.blob_base_exprs("u.seed", "u.nb", id_expr="u.blob_id")
-    params = ",\n      ".join(f"{e} AS {name}" for name, e in base.items())
-    rgb = synth.hsv_to_rgb_exprs("hue", "sat", "val")
+    t, lo, hi = fn("transform"), fn("min"), fn("max")
+    struct = functools.partial(synth.struct_sql, dialect=dialect)
     k_all = synth.int_list("0", str(NSAMP - 1), dialect)
     _, _, vx, vy = synth.vertex_exprs("seed", "k", NSAMP)
-    raw = synth.struct_sql(dict(x=vx, y=vy), dialect)
-    quant = synth.struct_sql(dict(x=synth.q6("v.x"), y=synth.q6("v.y")), dialect)
+    raw = struct(dict(x=vx, y=vy))
+    quant = struct(dict(x=synth.q6("v.x"), y=synth.q6("v.y")))
 
     def vert(k: str, field: str) -> str:
         return f"{synth.list_at('verts', k, dialect)}.{field}"
 
     k1 = f"(k + 1) % {NSAMP}"
-    edge = synth.struct_sql(
-        dict(x1=vert("k", "x"), y1=vert("k", "y"), x2=vert(k1, "x"), y2=vert(k1, "y")),
-        dialect,
+    edge = struct(
+        dict(x1=vert("k", "x"), y1=vert("k", "y"), x2=vert(k1, "x"), y2=vert(k1, "y"))
     )
 
     def fold(agg: str, field: str) -> str:
-        return f"{fn(agg)}({fn('transform')}(verts, v -> v.{field}))"
+        return f"{fn(agg)}({t}(verts, v -> v.{field}))"
 
     def centroid(field: str) -> str:
-        vals = f"{fn('transform')}(verts, v -> v.{field})"
+        vals = f"{t}(verts, v -> v.{field})"
         return synth.q6(f"{synth.list_sum_sql(vals, dialect)} / {NSAMP}")
 
-    ext = f"{PAD} * greatest(xmax - xmin, ymax - ymin)"
-    corners = [(x, y) for x in ("xlo", "xhi") for y in ("ylo", "yhi")]
-    dist = [f"sqrt(({x} - ccx) * ({x} - ccx) + ({y} - ccy) * ({y} - ccy))"
-            for x, y in corners]
-    light = [f"({x} - ccx) * lx + ({y} - ccy) * ly" for x, y in corners]
+    ext = f"{PAD} * greatest(m.xmax - m.xmin, m.ymax - m.ymin)"
+    axes = dict(
+        rows=_axis(dialect, "bx.by0", "bx.by1", canvas_h),
+        cols=_axis(dialect, "bx.bx0", "bx.bx1", canvas),
+    )
+    if shadow:
+        axes.update(
+            srows=_axis(dialect, "bx.by0", "bx.by1", canvas, _SHADOW_OFF),
+            scols=_axis(dialect, "bx.bx0", "bx.bx1", canvas, -_SHADOW_OFF),
+        )
 
     def ycoord(i: str) -> str:
-        return synth.linspace(i, "0e0", "1e0", h)
+        return synth.linspace(i, "0e0", "1e0", canvas_h)
 
     def xcoord(i: str) -> str:
         return synth.linspace(i, "0e0", "1e0", canvas)
 
-    # Pixels are generated from expressions over the `rows`/`cols` columns,
-    # never by `explode(column)`: that makes Catalyst infer `size(column) >
-    # 0` and push it down through the projections, inlining the per-blob
-    # geometry (the 280-vertex transform) into a Filter once per reference.
-    # `inline` also emits each pixel's coordinate with its index, so no
-    # projection over the generator is left for Catalyst to collapse one
-    # way or the other from one query to the next.
+    corners = [(f"c.{x}", f"c.{y}") for x in ("xlo", "xhi") for y in ("ylo", "yhi")]
+    dist = [f"sqrt(({x} - bx.ccx) * ({x} - bx.ccx) + ({y} - bx.ccy) * ({y} - bx.ccy))"
+            for x, y in corners]
+    light = [f"({x} - bx.ccx) * lx + ({y} - bx.ccy) * ly" for x, y in corners]
+    rgb = synth.hsv_to_rgb_exprs("b.hue", "b.sat", "b.val")
+    blob = dict(
+        blob_id="b.blob_id", depth="b.depth",
+        col_r=rgb[0], col_g=rgb[1], col_b=rgb[2], edges="edges",
+        rlo=f"{lo}(ax.rows)", rhi=f"{hi}(ax.rows)",
+        clo=f"{lo}(ax.cols)", chi=f"{hi}(ax.cols)",
+        ccx="bx.ccx", ccy="bx.ccy",
+        dmax=f"greatest({', '.join(dist)})",
+        lmin=f"least({', '.join(light)})", lmax=f"greatest({', '.join(light)})",
+    )
+    if shadow:
+        blob.update(srlo=f"{lo}(ax.srows)", srhi=f"{hi}(ax.srows)",
+                    sclo=f"{lo}(ax.scols)", schi=f"{hi}(ax.scols)")
+    steps = [
+        ("b", struct(dict(blob_id="blob_id", **synth.blob_base_exprs("seed", "nb")))),
+        ("verts", f"{t}({t}({k_all}, k -> {raw}), v -> {quant})"),
+        ("edges", f"{t}({k_all}, k -> {edge})"),
+        ("m", struct(dict(xmin=fold("min", "x"), xmax=fold("max", "x"),
+                          ymin=fold("min", "y"), ymax=fold("max", "y")))),
+        ("bx", struct(dict(bx0=f"m.xmin - {ext}", bx1=f"m.xmax + {ext}",
+                           by0=f"m.ymin - {ext}", by1=f"m.ymax + {ext}",
+                           ccx=centroid("x"), ccy=centroid("y")))),
+        ("ax", struct(axes)),
+        ("c", struct(dict(xlo=xcoord(f"{lo}(ax.cols)"), xhi=xcoord(f"{hi}(ax.cols)"),
+                          ylo=ycoord(f"{lo}(ax.rows)"), yhi=ycoord(f"{hi}(ax.rows)")))),
+    ]
+    body = struct(blob)
+    for var, value in reversed(steps):
+        body = synth.let_sql(value, var, body, dialect)
+    return f"{t}({synth.int_list('0', 'nb - 1', dialect)}, blob_id -> {body})"
+
+
+def _shadow_blur_sql(dialect: str, canvas: int, sigma: float) -> str:
+    """Each blob's shadow (shadow_toggle, app.py:87-91) before its offset:
+    the separable Gaussian blur of its mask over its box, as an array of
+    rows, one per blob of `blobs` in the same order. On arrays:
+
+    1. the mask, rows × cols, in scanline form: each raster row's edge
+       crossings once, then each pixel's parity against them;
+    2. the two separable passes as array transforms, zero past the box.
+
+    The passes share `_blur_terms` with the window form
+    (`win_conv2d_separable`): the same doubles, added in the same order."""
+    fn = functools.partial(synth.list_fn, dialect=dialect)
+    t, size = fn("transform"), fn("size")
+    pos = functools.partial(synth.lambda_pos, dialect=dialect)
+    get = functools.partial(synth.list_get, dialect=dialect)
+
+    def cell(arr: str, i: str, j: str | None = None) -> str:
+        # arr[i] (or arr[i][j]), 0 outside the box.
+        val = get(arr, i)
+        return f"coalesce({val if j is None else get(val, j)}, 0e0)"
+
+    def coords(lo: str, hi: str) -> str:
+        coord = synth.linspace("i", "0e0", "1e0", canvas)
+        return f"{t}({synth.int_list(lo, hi, dialect)}, i -> {coord})"
+
+    grid = synth.struct_sql(
+        dict(e="b.edges", y=coords("b.rlo", "b.rhi"), x=coords("b.clo", "b.chi")), dialect
+    )
+    crossings = f"{t}(g.y, y -> {t}(filter(g.e, e -> (e.y1 > y) != (e.y2 > y)), e -> {_XCROSS}))"
+    mask = synth.let_sql(
+        grid, "g",
+        f"{t}({crossings}, xs -> {t}(g.x, x -> "
+        f"CASE WHEN {size}(filter(xs, v -> v > x)) % 2 = 1 THEN 1e0 ELSE 0e0 END))",
+        dialect,
+    )
+    pass1 = _blur_terms(lambda off: cell("mr", f"{pos('j')} + {off}"), sigma)
+    pass2 = _blur_terms(lambda off: cell("bl", f"{pos('i')} + {off}", pos("j")), sigma)
+    blur = synth.let_sql(
+        f"{t}({mask}, mr -> {t}(mr, (v, j) -> {pass1}))", "bl",
+        f"{t}(bl, (br, i) -> {t}(br, (v, j) -> {pass2}))", dialect,
+    )
+    return f"{t}(blobs, b -> {blur})"
+
+
+def _scene_sql(
+    dialect: str, seed: int, nb: int, canvas: int, canvas_h: int | None,
+    lx: str, ly: str, theme: str | None, sigma: float | None = None,
+) -> str:
+    """`ui` (the UI parameters) and `scene`: the same one row with its
+    `blobs` (`_blob_sql`) beside them and, with the shadow's `sigma`, their
+    `blurs` (`_shadow_blur_sql`).
+
+    The `COALESCE(1)` hint gives the plan a single partition without a
+    shuffle, so an ORDER BY above it sorts locally instead of adding a
+    range exchange (whose bounds sampling would run the pipeline twice).
+    The hint is query text, scoped to this query; to DuckDB it is a
+    comment. In Spark the scene over the `VALUES` row is folded into a
+    local relation while the plan is optimized."""
+    blobs = _blob_sql(dialect, canvas, canvas_h or canvas, shadow=sigma is not None)
+    blurs = "" if sigma is None else f", {_shadow_blur_sql(dialect, canvas, sigma)} AS blurs"
     return f"""
 WITH ui AS ({_ui_sql(dialect, seed, nb, lx, ly, theme)}),
-blobs AS (
-  SELECT b.*, {rgb[0]} AS col_r, {rgb[1]} AS col_g, {rgb[2]} AS col_b
-  FROM (SELECT u.blob_id, u.seed, u.lx, u.ly,
-      {params}
-    FROM (SELECT ui.*,
-            {synth.explode_sql(synth.int_list("0", "nb - 1", dialect), dialect)} AS blob_id
-          FROM ui) u) b
-),
-poly AS (
-  SELECT p.*, {fn('transform')}({k_all}, k -> {edge}) AS edges
-  FROM (SELECT b.*,
-          {fn('transform')}({fn('transform')}({k_all}, k -> {raw}), v -> {quant}) AS verts
-        FROM blobs b) p
-),
-bbox AS (
-  SELECT blob_id, lx, ly, depth, col_r, col_g, col_b, edges,
-    xmin - {ext} AS bx0, xmax + {ext} AS bx1,
-    ymin - {ext} AS by0, ymax + {ext} AS by1,
-    {centroid("x")} AS ccx, {centroid("y")} AS ccy
-  FROM (SELECT p.*, {fold('min', 'x')} AS xmin, {fold('max', 'x')} AS xmax,
-          {fold('min', 'y')} AS ymin, {fold('max', 'y')} AS ymax
-        FROM poly p) p
-),
-norms AS (
-  SELECT c.*,
-    greatest({", ".join(dist)}) AS dmax,
-    least({", ".join(light)}) AS lmin,
-    greatest({", ".join(light)}) AS lmax
-  FROM (SELECT s.*,
-          {xcoord(f"{fn('min')}(cols)")} AS xlo, {xcoord(f"{fn('max')}(cols)")} AS xhi,
-          {ycoord(f"{fn('min')}(rows)")} AS ylo, {ycoord(f"{fn('max')}(rows)")} AS yhi
-        FROM (SELECT b.*, {_axis(dialect, "by0", "by1", h)} AS rows,
-                {_axis(dialect, "bx0", "bx1", canvas)} AS cols
-              FROM bbox b) s) c
-),
+scene AS (
+  SELECT /*+ COALESCE(1) */ *{blurs}
+  FROM (SELECT ui.*, {blobs} AS blobs FROM ui) s
+)"""
+
+
+def _scene_prefix_ctes(
+    dialect: str, seed: int = SEED, nb: int = NB, canvas: int = CANVAS,
+    canvas_h: int | None = None, lx: str = _LX, ly: str = _LY,
+    theme: str | None = None,
+) -> str:
+    """Per-pixel CTE prelude through `pairs`: the scene's blobs one row
+    each (`norms`), then per (blob, raster row) with the edges spanning
+    the row and their crossings `xs` (`prow`), then per candidate pixel of
+    the blob's box (`pairs`). Generators and projections only, so nothing
+    here needs an exchange.
+
+    `canvas_h` mirrors the reference's non-square figure (figsize 7x10,
+    app.py:121): width stays `canvas`, height becomes `canvas_h`, and both
+    axes keep their own unit-interval linspace exactly as imshow stretches
+    extent=[0,1,0,1] over a 7:10 figure."""
+    t = synth.list_fn("transform", dialect)
+
+    def pixels(lo: str, hi: str, index: str, coord: str, n: int) -> str:
+        # One row per grid index lo..hi, with the index and its coordinate.
+        v = synth.linspace("i", "0e0", "1e0", n)
+        point = synth.struct_sql({index: "i", coord: v}, dialect)
+        return synth.inline_sql(f"{t}({synth.int_list(lo, hi, dialect)}, i -> {point})", dialect)
+
+    # Pixels are generated from expressions over the box bounds, never by
+    # `explode(column)` of a computed column: that makes Catalyst infer
+    # `size(column) > 0` and push it down through the projections, inlining
+    # its definition into a Filter once per reference. (`norms` may explode
+    # `blobs`: Spark has folded the scene into a local relation by then.)
+    # `inline` also emits each pixel's coordinate with its index, so no
+    # projection over the generator is left for Catalyst to collapse one
+    # way or the other.
+    return f"""{_scene_sql(dialect, seed, nb, canvas, canvas_h, lx, ly, theme)},
+norms AS (SELECT lx, ly, {synth.inline_sql("blobs", dialect)} FROM scene),
 prow AS (
-  SELECT q.*, {fn('transform')}(redges, e -> {_XCROSS}) AS xs
+  SELECT q.*, {t}(redges, e -> {_XCROSS}) AS xs
   FROM (SELECT r.*, filter(edges, e -> (e.y1 > y) != (e.y2 > y)) AS redges
-        FROM (SELECT n.*, {synth.inline_sql("rows", "i", dict(row="i", y=ycoord("i")), dialect)}
+        FROM (SELECT n.*, {pixels("rlo", "rhi", "row", "y", canvas_h or canvas)}
               FROM norms n) r) q
 ),
-pairs AS (
-  SELECT r.*, {synth.inline_sql("cols", "i", dict(col="i", x=xcoord("i")), dialect)}
-  FROM prow r
-)"""
+pairs AS (SELECT r.*, {pixels("clo", "chi", "col", "x", canvas)} FROM prow r)"""
 
 
 def _mask_ctes(prefix: str, n_cross: str) -> str:
@@ -334,30 +414,27 @@ def _scene_scanline_ctes(
     )
 
 
+def _shade_sql(x: str, y: str, b: str = "") -> str:
+    """A blob's shade at pixel (x, y) (app.py:70-78): the radial falloff
+    from its centroid and the light along (lx, ly) (sliders at
+    app.py:109-110), each normalized over the blob's box. `b` prefixes the
+    blob's fields (ccx, ccy, dmax, lmin, lmax)."""
+    dx, dy = f"({x} - {b}ccx)", f"({y} - {b}ccy)"
+    radial = _clip01(f"1e0 - sqrt({dx} * {dx} + {dy} * {dy}) / {b}dmax")
+    light_n = f"({dx} * lx + {dy} * ly - {b}lmin) / ({b}lmax - {b}lmin + 1e-9)"
+    return f"(0.3e0 + 0.7e0 * (0.5e0 * {radial} + 0.5e0 * {light_n}))"
+
+
 def _shaded_sql(dialect: str, scene: str | None = None) -> str:
-    """Mask + shading + alpha (app.py:68-85) on top of the scene CTEs; the
-    light direction (sliders at app.py:109-110) arrives as columns lx/ly."""
+    """Mask + shading + alpha (app.py:68-85) on top of the scene CTEs."""
     return f"""{scene or _scene_ctes(dialect)},
-lit AS (
-  SELECT m.*,
-    sqrt((x - ccx) * (x - ccx) + (y - ccy) * (y - ccy)) AS d,
-    (x - ccx) * lx + (y - ccy) * ly AS light
-  FROM mask m
-),
-norm AS (
-  SELECT *,
-    {_clip01("1e0 - d / dmax")} AS radial,
-    (light - lmin) / (lmax - lmin + 1e-9) AS light_n
-  FROM lit
-),
 shaded AS (
   SELECT blob_id, row, col, inside, mask_f, depth,
-    0.3e0 + 0.7e0 * (0.5e0 * radial + 0.5e0 * light_n) AS shade,
-    {_clip01("col_r * (0.3e0 + 0.7e0 * (0.5e0 * radial + 0.5e0 * light_n))")} AS pr,
-    {_clip01("col_g * (0.3e0 + 0.7e0 * (0.5e0 * radial + 0.5e0 * light_n))")} AS pg,
-    {_clip01("col_b * (0.3e0 + 0.7e0 * (0.5e0 * radial + 0.5e0 * light_n))")} AS pb,
+    {_clip01("col_r * shade")} AS pr,
+    {_clip01("col_g * shade")} AS pg,
+    {_clip01("col_b * shade")} AS pb,
     mask_f * (0.4e0 + 0.6e0 * depth) AS alpha
-  FROM norm
+  FROM (SELECT m.*, {_shade_sql("x", "y")} AS shade FROM mask m) s
 )"""
 
 
@@ -699,144 +776,30 @@ def gen_poster_bg_colormap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # sort_composite_order — painter's-algorithm alpha-over fold (app.py:137-150,
-# 91-93): ordered, non-commutative; order forced by sorting on depth.
+# 91-93): ordered, non-commutative; each pixel folds its layers in depth
+# order, which is the order of the blob array.
 # ---------------------------------------------------------------------------
 
 
-def _fold_sql(dialect: str, source: str, with_z: bool = False) -> str:
-    """Ordered alpha-over fold per pixel, from a constant accumulator: the
-    background is the first layer (depth −1, α = 1, so bg·1 + acc·0 = bg
-    exactly), which keeps every parameter out of the fold's expressions.
+def _over_sql(dialect: str, layers: str, bg: tuple[str, str, str]) -> str:
+    """Alpha-over fold of the struct array `layers` (fields r, g, b, a), in
+    array order, from the background colour `bg`: acc ← e·a + acc·(1−a).
 
-    Layers with α = 0 are left out by the aggregate's FILTER clause, which
-    is BIT-EXACT (r·0 + acc·(1−0) = acc in IEEE) and shrinks the groups
-    about 4× (most candidate pixels lie outside their blob). A FILTER, not
-    a WHERE: Catalyst would push a WHERE down through the projections,
-    inlining the containment test into a Filter a second time.
-
-    With the shadow on, `with_z=True` adds a leading zorder sort field
-    (shadows under blobs); the accumulator arithmetic is the same.
-    """
-    ze = "'z', z, " if with_z else ""
-    zi = "'z', 0, " if with_z else ""
+    Starting from `bg` equals folding a background layer of α = 1 first
+    (bg·1 + 0·0 = bg exactly), and a layer of α = 0 leaves the colour as it
+    is (v·0 + acc·1 = acc in IEEE), so neither needs a case of its own."""
+    blend = {ch: f"e.{ch} * e.a + acc.{ch} * (1e0 - e.a)" for ch in "rgb"}
+    zero = dict(zip("rgb", bg))
     if dialect == "spark":
-        return f"""
-SELECT row, col,
-  aggregate(
-    array_sort(collect_list(named_struct(
-      {ze}'depth', depth, 'r', pr, 'g', pg, 'b', pb, 'a', alpha))
-      FILTER (WHERE alpha > 0e0)),
-    named_struct({zi}'depth', 0e0, 'r', 0e0, 'g', 0e0, 'b', 0e0, 'a', 0e0),
-    (acc, e) -> named_struct(
-      {zi}'depth', 0e0,
-      'r', e.r * e.a + acc.r * (1e0 - e.a),
-      'g', e.g * e.a + acc.g * (1e0 - e.a),
-      'b', e.b * e.a + acc.b * (1e0 - e.a),
-      'a', 0e0)
-  ) AS px
-FROM {source} GROUP BY row, col
-"""
-    zpe = "z := z, " if with_z else ""
-    zpi = "z := 0, " if with_z else ""
-    order = "ORDER BY z, depth" if with_z else "ORDER BY depth"
-    return f"""
-SELECT row, col,
-  list_reduce(
-    list_prepend(
-      struct_pack({zpi}depth := 0e0, r := 0e0, g := 0e0, b := 0e0, a := 0e0),
-      list(struct_pack({zpe}depth := depth, r := pr, g := pg, b := pb, a := alpha)
-           {order}) FILTER (WHERE alpha > 0e0)),
-    (acc, e) -> struct_pack(
-      {zpi}depth := 0e0,
-      r := e.r * e.a + acc.r * (1e0 - e.a),
-      g := e.g * e.a + acc.g * (1e0 - e.a),
-      b := e.b * e.a + acc.b * (1e0 - e.a),
-      a := 0e0)
-  ) AS px
-FROM {source} GROUP BY row, col
-"""
-
-
-_SHADOW_OFF = 0.02  # extent shift, app.py:90
-
-
-def _shadow_ctes(dialect: str, canvas: int, blur_strength: float) -> str:
-    """`shadow`: each blob's shadow layer (shadow_toggle, app.py:87-91) —
-    the separable Gaussian blur of its mask (σ = max(2, canvas ·
-    blur_strength), app.py:88), sampled at the (+0.02, −0.02) extent
-    offset (app.py:90). Row-local per blob, on arrays over its box:
-
-    1. the mask, rows × cols, in scanline form: each raster row's edge
-       crossings once, then each pixel's parity against them;
-    2. the two separable passes as array transforms, zero past the box;
-    3. per pixel of the shifted box (`_axis`), the bilinear 4-neighbour
-       gather of the blur, read by guarded 2-D index (zero outside).
-
-    The passes share `_blur_terms` with the window form
-    (`win_conv2d_separable`): the same doubles, added in the same order."""
-    fn = functools.partial(synth.list_fn, dialect=dialect)
-    t, size = fn("transform"), fn("size")
-    pos = functools.partial(synth.lambda_pos, dialect=dialect)
-    get = functools.partial(synth.list_get, dialect=dialect)
-    sigma = max(2.0, canvas * blur_strength)
-    coord = synth.linspace("i", "0e0", "1e0", canvas)
-    offi = synth.flit(_SHADOW_OFF * (canvas - 1))  # shift in pixel-index space
-
-    def cell(arr: str, i: str, j: str | None = None) -> str:
-        # arr[i] (or arr[i][j]), 0 outside the box.
-        val = get(arr, i)
-        return f"coalesce({val if j is None else get(val, j)}, 0e0)"
-
-    # Every lambda reads only lambda variables (see synth.let_sql).
-    axes = dict(e="edges", y=f"{t}(rows, i -> {coord})", x=f"{t}(cols, i -> {coord})")
-    crossings = f"{t}(g.y, y -> {t}(filter(g.e, e -> (e.y1 > y) != (e.y2 > y)), e -> {_XCROSS}))"
-    mask = synth.let_sql(
-        synth.struct_sql(axes, dialect),
-        "g",
-        f"{t}({crossings}, xs -> {t}(g.x, x -> "
-        f"CASE WHEN {size}(filter(xs, v -> v > x)) % 2 = 1 THEN 1e0 ELSE 0e0 END))",
-        dialect,
+        return (
+            f"aggregate({layers}, {synth.struct_sql(zero, dialect)}, "
+            f"(acc, e) -> {synth.struct_sql(blend, dialect)})"
+        )
+    first = synth.struct_sql(dict(zero, a="1e0"), dialect)
+    return (
+        f"list_reduce(list_prepend({first}, {layers}), "
+        f"(acc, e) -> {synth.struct_sql(dict(blend, a='0e0'), dialect)})"
     )
-    pass1 = _blur_terms(lambda off: cell("mr", f"{pos('j')} + {off}"), sigma)
-    pass2 = _blur_terms(lambda off: cell("b", f"{pos('i')} + {off}", pos("j")), sigma)
-    blur = synth.let_sql(
-        f"{t}(m, mr -> {t}(mr, (v, j) -> {pass1}))", "b",
-        f"{t}(b, (br, i) -> {t}(br, (v, j) -> {pass2}))", dialect,
-    )
-    p00, p01, p10, p11 = (
-        cell("blur", f"ri + {dr}", f"ci + {dc}") for dr in (0, 1) for dc in (0, 1)
-    )
-    sample = (
-        f"(({p00} * (1e0 - wc) + {p01} * wc) * (1e0 - wr) + "
-        f"({p10} * (1e0 - wc) + {p11} * wc) * wr)"
-    )
-    lo, hi = fn("min"), fn("max")
-
-    def span(a: str) -> str:
-        return synth.explode_sql(synth.int_list(f"{lo}({a})", f"{hi}({a})", dialect), dialect)
-
-    # The shifted box is a contiguous range on each axis, so its pixels
-    # are generated from its bounds: a `sequence` keeps the generators in
-    # Spark's generated code, which reads `blur` in place; a generator over
-    # a lambda (`_axis`'s filter) runs interpreted and copies `blur` into
-    # every pixel row it emits.
-    return f"""sblur AS (
-  SELECT depth, {lo}(rows) AS r_lo, {lo}(cols) AS c_lo, {blur} AS blur, srows, scols
-  FROM (SELECT n.*, {mask} AS m,
-          {_axis(dialect, "by0", "by1", canvas, _SHADOW_OFF)} AS srows,
-          {_axis(dialect, "bx0", "bx1", canvas, -_SHADOW_OFF)} AS scols
-        FROM norms n) n
-),
-shadow AS (
-  SELECT row, col, depth, {sample} AS v
-  FROM (SELECT p.*,
-          CAST(floor(row + {offi}) AS BIGINT) - r_lo AS ri,
-          (row + {offi} - floor(row + {offi})) AS wr,
-          CAST(floor(col - {offi}) AS BIGINT) - c_lo AS ci,
-          (col - {offi} - floor(col - {offi})) AS wc
-        FROM (SELECT r.*, {span("scols")} AS col
-              FROM (SELECT s.*, {span("srows")} AS row FROM sblur s) r) p) s
-)"""
 
 
 def _composite_sql(
@@ -856,66 +819,109 @@ def _composite_sql(
     (app.py:107-113): seed, n_blobs (1..30), light direction, background
     theme, and the shadow toggle with its blur strength (None: no shadow)
     — plus canvas resolution (width `canvas`, optional distinct height
-    `canvas_h` for the 7:10 figsize, app.py:121) and containment strategy
-    (per pixel vs scanline)."""
-    # Stage shape. Everything up to `all_layers` is row-local: one row per
-    # blob, generated pixels, array folds — no join, aggregate or window,
-    # so no exchange. The one exchange is the REPARTITION(1) hint on
-    # `all_layers`: it puts every layer in one partition, which satisfies
-    # the fold's GROUP BY row, col and the final ORDER BY, so neither adds
-    # an exchange of its own. A 64 px render is then two Spark jobs (the
-    # shuffle map stage and the result stage) instead of ~14 AQE stages in
-    # six waves. The hint lives in the query text, so it scopes to this
-    # query; to DuckDB it is a comment, so both engines read the same SQL.
-    # The price is one task for all pixel work: at 400 px × 14 blobs
-    # (gen_poster_full) that measured 3.8 s against 4.2 s for the previous
-    # 32-partition plan on a 4-core VM, so it holds up to reference scale.
+    `canvas_h` for the 7:10 figsize, app.py:121).
+
+    `scanline` stays for callers: the composite always counts each raster
+    row's crossings once, and the per-pixel crossing test decides every
+    pixel the same way (`filt_pip_scanline`), so both strategies give
+    identical pixels."""
+    # Stage shape: a gather. `scene` is one row holding every blob of the
+    # render. Each raster row keeps the blobs whose box spans it, with their
+    # crossings of that row (`hits`); each pixel folds the layers of the
+    # blobs whose crossings to its right are odd in number, in depth order
+    # (array order), over the row's background. A pixel outside every blob
+    # keeps its background: the reference renders the full figure
+    # (app.py:121-133). Between `ui` and the result there are only
+    # generators and projections, and the scene's COALESCE(1) turns the
+    # final ORDER BY into a local sort, so a render is one Spark job with no
+    # exchange, no GROUP BY and no per-pixel sort. The price is one task
+    # for all pixel work, as with the single-partition fold it replaces.
     #
-    # Canvas completion: pixels outside every blob bbox never enter
-    # `pairs`/`shaded`, but the poster still shows background there (the
-    # reference renders the full figure, app.py:121-133). The background
-    # layer (depth −1 sorts first, α = 1) routes EVERY pixel through the
-    # one fold groupBy.
-    #
-    # The shadow is one more layer under the same exchange: generated
-    # row-locally per blob like the blobs' own pixels, folded at zorder 0
-    # under every blob (zorder 1) with a constant alpha of 0.25·(1−depth).
+    # With the shadow on, each blob's shadow covers its shifted box under
+    # every blob: the bilinear 4-neighbour read of its blurred mask by
+    # guarded 2-D index (zero outside), grey, alpha 0.25·(1−depth), folded
+    # before the blob layers. The two rows of the blur a raster row reads
+    # are picked once per row.
     shadow = blur_strength is not None
     if shadow and canvas_h is not None:
         raise ValueError("the shadow is drawn on a square canvas only")
-    scene_fn = _scene_scanline_ctes if scanline else _scene_ctes
-    scene = scene_fn(dialect, seed, nb, canvas, canvas_h, lx, ly, theme)
+    h = canvas_h or canvas
+    sigma = max(2.0, canvas * blur_strength) if shadow else None
+    fn = functools.partial(synth.list_fn, dialect=dialect)
+    t, size = fn("transform"), fn("size")
+    struct = functools.partial(synth.struct_sql, dialect=dialect)
+    get = functools.partial(synth.list_get, dialect=dialect)
+
+    def let(value: str, var: str, body: str) -> str:
+        return synth.let_sql(value, var, body, dialect)
+
+    y = synth.linspace("row", "0e0", "1e0", h)
+    hit = struct(dict(
+        {f: f"b.{f}" for f in ("depth", "col_r", "col_g", "col_b", "ccx", "ccy",
+                               "dmax", "lmin", "lmax")},
+        xs=f"{t}(filter(b.edges, e -> (e.y1 > y) != (e.y2 > y)), e -> {_XCROSS})",
+    ))
+    hits = (
+        f"filter({t}(filter(blobs, b -> row BETWEEN b.rlo AND b.rhi), b -> {hit}), "
+        f"b -> {size}(b.xs) > 0)"
+    )
+    bg = f"(row / {synth.flit(h - 1)})"
+    scan = dict(
+        row="row", lr=f"bg_r + bg_dr * {bg}", lg=f"bg_g + bg_dg * {bg}",
+        lb=f"bg_b + bg_db * {bg}", y="y", hits=hits,
+    )
+    paint = let(_shade_sql("x", "y", "h."), "s", struct(dict(
+        r=_clip01("h.col_r * s"), g=_clip01("h.col_g * s"), b=_clip01("h.col_b * s"),
+        a="0.4e0 + 0.6e0 * h.depth",
+    )))
+    layers = f"{t}(filter(hits, h -> {size}(filter(h.xs, v -> v > x)) % 2 = 1), h -> {paint})"
+    if shadow:
+        offi = synth.flit(_SHADOW_OFF * (canvas - 1))  # shift in pixel-index space
+        ri = f"CAST(floor(row + {offi}) AS BIGINT) - b.rlo"
+        blur = get("blurs", "b.blob_id")
+        srow = struct(dict(
+            a="0.25e0 * (1e0 - b.depth)", clo="b.clo", sclo="b.sclo", schi="b.schi",
+            wr=f"(row + {offi} - floor(row + {offi}))",
+            r0=get(blur, ri), r1=get(blur, f"{ri} + 1"),
+        ))
+        scan["shadows"] = f"{t}(filter(blobs, b -> row BETWEEN b.srlo AND b.srhi), b -> {srow})"
+        p00, p01, p10, p11 = (
+            f"coalesce({get(f'o.r{dr}', f'w.ci + {dc}')}, 0e0)"
+            for dr in (0, 1) for dc in (0, 1)
+        )
+        sample = (
+            f"(({p00} * (1e0 - w.wc) + {p01} * w.wc) * (1e0 - o.wr) + "
+            f"({p10} * (1e0 - w.wc) + {p11} * w.wc) * o.wr)"
+        )
+        weights = struct(dict(
+            ci=f"CAST(floor(col - {offi}) AS BIGINT) - o.clo",
+            wc=f"(col - {offi} - floor(col - {offi}))",
+        ))
+        grey = let(weights, "w", let(sample, "v", struct(dict(r="v", g="v", b="v", a="o.a"))))
+        shades = f"{t}(filter(shadows, o -> col BETWEEN o.sclo AND o.schi), o -> {grey})"
+        layers = f"{fn('concat')}({shades}, {layers})"
+    x = synth.linspace("col", "0e0", "1e0", canvas)
+    px = struct(dict(col="col", px=let(x, "x", _over_sql(dialect, layers, ("lr", "lg", "lb")))))
+    rows = f"{t}({synth.int_list('0', str(h - 1), dialect)}, row -> {let(y, 'y', struct(scan))})"
+    cols = f"{t}({synth.int_list('0', str(canvas - 1), dialect)}, col -> {px})"
     tail = " ORDER BY row, col" if order_by else ""
-
-    def z(v: int) -> str:
-        return f"{v} AS z, " if shadow else ""
-
-    shadow_ctes = f"{_shadow_ctes(dialect, canvas, blur_strength)},\n" if shadow else ""
-    shadow_arm = """
-    UNION ALL
-    SELECT row, col, 0 AS z, depth, v AS pr, v AS pg, v AS pb,
-      (0.25e0 * (1e0 - depth)) AS alpha FROM shadow""" if shadow else ""
-    return f"""{_shaded_sql(dialect, scene=scene)},
-{_background_ctes(dialect, canvas, canvas_h or canvas)},
-{shadow_ctes}all_layers AS (
-  SELECT /*+ REPARTITION(1) */ * FROM (
-    SELECT row, col, {z(1)}depth, pr, pg, pb, alpha FROM shaded
-    UNION ALL
-    SELECT row, col, {z(-1)}-1e0 AS depth, lr AS pr, lg AS pg, lb AS pb, 1e0 AS alpha
-    FROM grid{shadow_arm}
-  ) layers
-),
-folded AS ({_fold_sql(dialect, "all_layers", with_z=shadow)})
+    # The raster rows, and then each row's pixels, are generated from one
+    # expression over the row above them, so the scene's blobs and a row's
+    # `hits` and `shadows` are read in place, not copied into every row.
+    return f"""{_scene_sql(dialect, seed, nb, canvas, canvas_h, lx, ly, theme, sigma)},
+scan AS (SELECT lx, ly, {synth.inline_sql(rows, dialect)} FROM scene),
+pixels AS (SELECT row, {synth.inline_sql(cols, dialect)} FROM scan)
 SELECT row, col, {synth.q6('px.r')} AS r, {synth.q6('px.g')} AS g,
-  {synth.q6('px.b')} AS b FROM folded{tail}"""
+  {synth.q6('px.b')} AS b FROM pixels{tail}"""
 
 
 @register(
     "sort_composite_order",
     oracle=_composite_sql("duckdb"),
-    doc="Painter's-algorithm alpha-over composite as an ordered fold: "
-    "sort_array(collect_list(struct)) + aggregate() (app.py:137-150,91-93; "
-    "SURVEY §7.4.1). White background, blobs over in depth order.",
+    doc="Painter's-algorithm alpha-over composite as an ordered fold: per "
+    "pixel, aggregate() over the layers of its row's blobs in depth order "
+    "(app.py:137-150,91-93; SURVEY §7.4.1) — a gather with no shuffle. "
+    "White background, blobs over in depth order.",
     tags=("sort", "generative", "bench"),
 )
 def sort_composite_order(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1564,12 +1570,11 @@ def sink_binary_export_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (σ = max(2, canvas·blur_strength), app.py:88), drawn OFFSET by
 # (+0.02, −0.02) in unit coords (the shifted imshow extent at 90), gray
 # colormap (v,v,v), constant layer alpha 0.25·(1−depth), at zorder 0 —
-# under every blob layer (zorder 1). The layer is built on arrays per blob
-# (`_shadow_ctes`): the mask from each raster row's edge crossings, the
-# two passes as array transforms, and the offset sample as a bilinear
-# 4-neighbour read of the blurred array. It is one more arm of
-# `_composite_sql`'s layers, so the fold sorts on (zorder, depth) under
-# the composite's one exchange. Fully relational, oracle-checked.
+# under every blob layer (zorder 1). The blur is built on arrays per blob
+# (`_blob_sql`): the mask from each raster row's edge crossings and the
+# two passes as array transforms. `_composite_sql` reads it as a bilinear
+# 4-neighbour sample per pixel of the shifted box, and folds those layers
+# before the blob layers. Fully relational, oracle-checked.
 # ---------------------------------------------------------------------------
 
 _BLUR_STRENGTH = 0.015  # app.py:113 default
@@ -1581,8 +1586,8 @@ _BLUR_STRENGTH = 0.015  # app.py:113 default
     doc="Full composite WITH shadows (shadow_toggle=True, app.py:87-91,112): "
     "per-blob separable-blur shadow on arrays, bilinear-sampled at the "
     "(+0.02, −0.02) extent offset, gray color, constant alpha "
-    "0.25·(1−depth), composited at zorder 0 under all blob layers via a "
-    "(zorder, depth)-sorted alpha-over fold (NS-free reference parity).",
+    "0.25·(1−depth), composited at zorder 0 under all blob layers: folded "
+    "before them in each pixel's alpha-over fold (NS-free reference parity).",
     tags=("generative", "param"),
 )
 def gen_poster_shadow(spark: SparkSession, sf_dir: str) -> DataFrame:

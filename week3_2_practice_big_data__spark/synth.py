@@ -249,14 +249,15 @@ def series_sql(n: int, alias: str = "i", dialect: str = "spark") -> str:
 # (`x -> expr`) and `filter` are spelled the same in both.
 _LIST_FNS = {
     "spark": {"transform": "transform", "min": "array_min", "max": "array_max",
-              "size": "size"},
+              "size": "size", "concat": "concat"},
     "duckdb": {"transform": "list_transform", "min": "list_min",
-               "max": "list_max", "size": "len"},
+               "max": "list_max", "size": "len", "concat": "list_concat"},
 }
 
 
 def list_fn(name: str, dialect: str) -> str:
-    """The dialect's name for array function `name` (transform/min/max/size)."""
+    """The dialect's name for array function `name`
+    (transform/min/max/size/concat)."""
     return _LIST_FNS[dialect][name]
 
 
@@ -298,19 +299,13 @@ def int_list(lo: str, hi: str, dialect: str) -> str:
     return f"{fn}(CAST({lo} AS BIGINT), CAST({hi} AS BIGINT))"
 
 
-def explode_sql(array: str, dialect: str) -> str:
-    """Select-list generator: one output row per element of `array`."""
-    return f"{'explode' if dialect == 'spark' else 'unnest'}({array})"
-
-
-def inline_sql(array: str, var: str, fields: dict[str, str], dialect: str) -> str:
-    """Select-list generator: one output row per element `var` of `array`,
-    with one output column per entry of `fields` (expressions of `var`)."""
-    struct = struct_sql(fields, dialect)
-    structs = f"{list_fn('transform', dialect)}({array}, {var} -> {struct})"
+def inline_sql(structs: str, dialect: str) -> str:
+    """Select-list generator: one output row per element of the struct
+    array `structs`, one output column per field (a field that is itself
+    an array stays one column)."""
     if dialect == "spark":
         return f"inline({structs})"
-    return f"unnest({structs}, recursive := true)"
+    return f"unnest({structs}, max_depth := 2)"
 
 
 def struct_sql(fields: dict[str, str], dialect: str) -> str:
