@@ -1365,31 +1365,34 @@ def _poster_render(spark, **params):
     return spark.sql(_composite_sql("spark", canvas=64, scanline=True, **params))
 
 
-def _render_shape(spark, group: str, **params) -> tuple[str, int]:
-    """Render once under a job group: the final physical plan and the
-    number of Spark jobs the render ran."""
+def _job_shape(spark, group: str, df, run=lambda df: df.collect()) -> tuple[list[str], int]:
+    """Run `df` once under a job group: the operators of its physical
+    plan (one exact name per tree line, see _TREE_NODE) and the number of
+    Spark jobs the run took."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        df = _poster_render(spark, **params)
-        df.collect()
+        run(df)
     finally:
         sc._jsc.clearJobGroup()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return plan.split("== Initial Plan ==")[0], len(sc.statusTracker().getJobIdsForGroup(group))
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    nodes = [m.group(1) for m in map(_TREE_NODE.match, _plan_tree(plan)) if m]
+    return nodes, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_poster_render_is_one_job_without_exchange(spark):
     """A 64 px poster edit is a gather: generators and projections over
     the one-row scene, so the final plan has no exchange, no aggregate
     and no join, and the render runs as exactly one Spark job."""
-    final, jobs = _render_shape(
+    nodes, jobs = _job_shape(
         spark, "test-poster-render-shape",
-        seed=7, nb=9, lx="0.4e0", ly="-0.7e0", theme="warm",
+        _poster_render(spark, seed=7, nb=9, lx="0.4e0", ly="-0.7e0", theme="warm"),
     )
-    assert "Exchange" not in final, final
-    assert "Aggregate" not in final, final
-    assert "Join" not in final, final
+    assert not any(n.endswith("Exchange") for n in nodes), nodes
+    assert not any("Aggregate" in n for n in nodes), nodes
+    assert not any("Join" in n for n in nodes), nodes
     assert jobs == 1
 
 
@@ -1397,13 +1400,16 @@ def test_poster_shadow_render_is_one_job_without_exchange(spark):
     """A shadow edit is the same gather: the mask, both blur passes and
     the offset sample are array work on the scene's blobs, so there is no
     exchange, no join and no window, and the render is one Spark job."""
-    final, jobs = _render_shape(
+    nodes, jobs = _job_shape(
         spark, "test-poster-shadow-shape",
-        seed=31, nb=9, lx="0.9e0", ly="-0.1e0", theme="cool", blur_strength=0.05,
+        _poster_render(
+            spark, seed=31, nb=9, lx="0.9e0", ly="-0.1e0", theme="cool",
+            blur_strength=0.05,
+        ),
     )
-    assert "Exchange" not in final, final
-    assert "Join" not in final, final
-    assert "Window" not in final, final
+    assert not any(n.endswith("Exchange") for n in nodes), nodes
+    assert not any("Join" in n for n in nodes), nodes
+    assert not any("Window" in n for n in nodes), nodes
     assert jobs == 1
 
 
@@ -1419,3 +1425,19 @@ def test_poster_edits_reuse_compiled_code(spark):
     _poster_render(spark, nb=14, **edit).collect()
     _poster_render(spark, nb=20, **edit).collect()
     assert compiles.getCount() == before
+
+
+def test_custom_state_sink_read_is_one_job_without_exchange(spark):
+    """stream_custom_state reads its update-mode memory sink as one
+    partition (streams._sink), so the window and the sort above the sink's
+    LocalTableScan run locally: the plan has no exchange, and toPandas
+    runs exactly one Spark job."""
+    nodes, jobs = _job_shape(
+        spark, "test-custom-state-sink-read",
+        REGISTRY["stream_custom_state"].builder(spark, SF_SMALL),
+        run=lambda df: df.toPandas(),
+    )
+    for node in ("LocalTableScan", "Coalesce", "Window", "Sort"):
+        assert node in nodes, (node, nodes)
+    assert not any(n.endswith("Exchange") for n in nodes), nodes
+    assert jobs == 1

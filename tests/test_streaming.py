@@ -76,6 +76,28 @@ def test_custom_state_matches_batch_totals(spark):
         assert r["n_events"] == batch_map[r["user_id"]]
 
 
+def test_custom_state_runs_the_streaming_width(spark):
+    """A Python-stateful stream runs the one streaming width,
+    max(4, cores // 8), not a wider one of its own: every data batch of
+    stream_custom_state has that many state partitions, and its state
+    crosses a batch boundary (at least two data batches)."""
+    from week3_2_practice_big_data__spark.streaming.streams import _query_events
+
+    with _query_events(spark) as events:
+        REGISTRY["stream_custom_state"].builder(spark, SF_SMALL).collect()
+        assert len(events.started) == 1, events.started
+        qid = events.started[0]
+        events.wait(qid)
+    width = max(4, spark.sparkContext.defaultParallelism // 8)
+    widths = [
+        [op.numShufflePartitions for op in p.stateOperators]
+        for p in events.progress(qid)
+        if p.numInputRows > 0
+    ]
+    assert len(widths) >= 2, widths
+    assert all(w == [width] for w in widths), (width, widths)
+
+
 def test_foreachbatch_sink_preserves_all_rows(spark):
     rows = REGISTRY["stream_foreachbatch"].builder(spark, SF_SMALL).collect()
     assert len(rows) == 4  # one row per micro-batch chunk

@@ -31,6 +31,7 @@ from ..streaming.streams import (
     _finalized_windows,
     _jsonl_rows,
     _query,
+    _sink,
 )
 from .. import synth
 
@@ -542,7 +543,7 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with _query(spark, writer) as q:
         q.processAllAvailable()
-        sink = spark.table(q.name)
+        sink = _sink(spark, q)
     return (
         sink.filter(F.col("sensor_id") >= 0)
         .orderBy("win_start", "sensor_id")

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import synth
 from ..registry import register
 from ..session import ensure_package_on_workers
-from .streams import _ROCKSDB_PROVIDER, _event_stream, _query
+from .streams import _ROCKSDB_PROVIDER, _event_stream, _query, _sink
 
 try:  # Spark >= 4.0 AND a usable protobuf: transformWithStateInPandas runs
     # a dedicated Python driver worker whose wire protocol is protobuf-based,
@@ -92,9 +92,9 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     provider = {
         "spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER
     }
-    with _query(spark, writer, python_stateful=True, confs=provider) as q:
+    with _query(spark, writer, confs=provider) as q:
         q.processAllAvailable()
-        sink = spark.table(q.name)
+        sink = _sink(spark, q)
     # update-mode sink holds one row per (batch, user); the final state per
     # user is its last (largest n_events) update.
     from pyspark.sql.window import Window
@@ -159,4 +159,4 @@ def stream_trigger_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with _query(spark, writer) as q:
         q.awaitTermination()
-        return spark.table(q.name).orderBy("event_type")
+        return _sink(spark, q).orderBy("event_type")

@@ -48,29 +48,40 @@ _WATERMARK = "10 minutes"
 _WATERMARK_US = 600_000_000  # the same 10 minutes, in microseconds
 
 
-def _stream_partitions(
-    spark: SparkSession, python_stateful: bool = False
-) -> int:
-    """Shuffle width for STREAMING queries: state-store instances =
-    partitions × stores-per-op × stateful-ops, and every store pays a
-    per-micro-batch commit (delta file + provider load) regardless of
-    data — at micro-batch scale that fixed cost dominates (measured r8:
-    the chained join+agg at sf0.1 took 33 s at 32 partitions vs 8.4 s at
-    8; r13 re-measured store commits at ~64 ms each — JVM provider
-    machinery, not disk: a raw write+rename is 0.13 ms on this box).
-    r13: JVM-stateful queries drop to 4 (measured min 8.5 s → 6.2 s on
-    the chained join at sf0.1; the per-batch data volume here never
-    needs more than a handful of tasks), while python_stateful=True
-    keeps 8 — applyInPandasWithState work is CPU-bound per-group Python
-    where parallelism wins (measured: 2 partitions cost 11-18 s vs
-    6-9 s at 8 on stream_custom_state). Size streaming shuffles to the
-    executor count and the operator's compute profile, never to the
-    batch data volume; a real cluster re-sizes via its own session conf
-    before the query starts."""
-    base = spark.sparkContext.defaultParallelism
-    if python_stateful:
-        return max(8, base // 4)
-    return max(4, base // 8)
+def _stream_partitions(spark: SparkSession) -> int:
+    """Shuffle width for STREAMING queries, which is also the number of
+    state-store instances per stateful operator: max(4, cores // 8), for
+    JVM and Python state alike. Every instance pays a commit on every
+    micro-batch whatever its data (about 64 ms of JVM provider work, not
+    disk), and at micro-batch scale that fixed cost dominates. Size
+    streaming shuffles to the cores, never to the batch data volume; a
+    real cluster re-sizes through its own session conf before the query
+    starts. Every figure below was taken on a 4-core VM, where the rule
+    gives 4; no other core count was measured.
+
+    JVM state: the chained join + agg at sf0.1 took 33 s at 32 partitions
+    against 8.4 s at 8, and in a later run 8.5 s at 8 against 6.2 s at 4.
+
+    Python state (applyInPandasWithState): 4 partitions on 4 cores make a
+    micro-batch one wave of Python tasks. Each task has a fixed price
+    before it reads a row: PySpark's worker calls
+    importlib.invalidate_caches() for every task, which re-reads the zip
+    directory behind each zip importer it holds (pyspark.zip, the
+    spark-core jar on its PYTHONPATH, py4j, the package zip), about
+    0.15 s of CPU, and the task's state store then commits (about
+    0.1 s). The fold itself costs about 5 ms per user. stream_custom_state,
+    builder + toPandas, median of 3 ops after a warm-up:
+
+        partitions    sf0.01    sf0.1
+        8             3.18 s    3.70 s
+        4             2.08 s    2.94 s
+        2             1.97 s    3.68 s
+
+    Two partitions win only at sf0.01, and by less than they lose at
+    sf0.1; four hold at both. Python CPU per sf0.01 op, read from the
+    worker processes before the stream was projected: 5.5-6 s at 8
+    partitions, 2.6 s at 4, 1.7 s at 2."""
+    return max(4, spark.sparkContext.defaultParallelism // 8)
 
 
 @contextmanager
@@ -78,7 +89,6 @@ def _query(
     spark: SparkSession,
     writer,
     *,
-    python_stateful: bool = False,
     confs: dict | None = None,
 ):
     """The one streaming-query lifecycle. Starts `writer` under a name
@@ -87,10 +97,10 @@ def _query(
     `confs` are set only while start() runs: the query copies the session
     conf when it starts, so nothing outlives the call. Yields the query;
     on exit stops it and drops its memory-sink view. Read a memory sink
-    with spark.table(q.name) inside the block; that DataFrame stays valid
+    with _sink(spark, q) inside the block; that DataFrame stays valid
     after the view is dropped."""
     name = f"w32bd_{uuid.uuid4().hex}"
-    width = str(_stream_partitions(spark, python_stateful))
+    width = str(_stream_partitions(spark))
     with scoped_confs(
         spark, {"spark.sql.shuffle.partitions": width, **(confs or {})}
     ):
@@ -102,6 +112,69 @@ def _query(
             query.stop()
         finally:
             spark.catalog.dropTempView(name)
+
+
+def _sink(spark: SparkSession, q) -> DataFrame:
+    """The one reader of a memory sink: the rows of query `q`'s sink as
+    one partition. The sink is a LocalTableScan of rows already on the
+    driver, so a sort, window or aggregate above it runs locally, with no
+    exchange and in one job."""
+    return spark.table(q.name).coalesce(1)
+
+
+class _QueryEvents:
+    """What a session StreamingQueryListener saw, by query id: `started`
+    and `terminated` ids in delivery order, and each query's progress
+    events (`progress(qid)`)."""
+
+    def __init__(self):
+        self.started, self.terminated, self._progress = [], [], []
+
+    def progress(self, qid: str) -> list:
+        return [p for p in self._progress if str(p.id) == qid]
+
+    def wait(self, qid: str, timeout_s: float = 30.0) -> None:
+        """Block until query qid's terminated event is delivered. The
+        listener bus is async but ordered, so by then every earlier event
+        of that query was delivered too."""
+        import time
+
+        deadline = time.monotonic() + timeout_s
+        while qid not in self.terminated:
+            if time.monotonic() > deadline:
+                raise TimeoutError(
+                    f"QueryTerminatedEvent not delivered within {timeout_s:g} s"
+                )
+            time.sleep(0.1)
+
+
+@contextmanager
+def _query_events(spark: SparkSession):
+    """Attach a StreamingQueryListener to the session for the block and
+    yield its _QueryEvents; the listener is removed in `finally`."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    events = _QueryEvents()
+
+    class _Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            events.started.append(str(event.id))
+
+        def onQueryProgress(self, event):
+            events._progress.append(event.progress)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            events.terminated.append(str(event.id))
+
+    listener = _Listener()
+    spark.streams.addListener(listener)
+    try:
+        yield events
+    finally:
+        spark.streams.removeListener(listener)
 
 
 # Far-future sentinel offset (30 min past max real ts): final watermark =
@@ -235,7 +308,7 @@ def _run_stream(
     writer = transform(stream).writeStream.format("memory").outputMode("append")
     with _query(spark, writer, confs=confs) as q:
         q.processAllAvailable()
-        return spark.table(q.name)
+        return _sink(spark, q)
 
 
 def _jsonl_rows(out: str, names) -> list[tuple]:
@@ -431,7 +504,7 @@ def stream_tumbling_file_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with _query(spark, writer) as q:
         q.processAllAvailable()
-        sink = spark.table(q.name)
+        sink = _sink(spark, q)
     # Update-mode sink: one row per (micro-batch, window) update carrying
     # the cumulative count — the final value is the max, the row count is
     # the number of batches that touched the window.
@@ -514,7 +587,9 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def transform(s):
-        return s.groupBy("user_id").applyInPandasWithState(
+        # the fold reads only these columns: the rest never reach Python
+        stream = s.select("user_id", "value")
+        return stream.groupBy("user_id").applyInPandasWithState(
             update,
             outputStructType="user_id bigint, n_events bigint, sum_value double",
             stateStructType="n bigint, total bigint",
@@ -535,11 +610,11 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .writeStream.format("memory")
         .outputMode("update")
     )
-    with _query(spark, writer, python_stateful=True) as q:
+    with _query(spark, writer) as q:
         q.processAllAvailable()
         # update-mode memory sink appends one row per (batch, user) —
         # keep the final state per user (max n_events is the last update).
-        final = spark.table(q.name)
+        final = _sink(spark, q)
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
@@ -707,7 +782,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer = joined.writeStream.format("memory").outputMode("append")
     with _query(spark, writer) as q:
         q.processAllAvailable()
-        return spark.table(q.name).orderBy("click_id", "view_id")
+        return _sink(spark, q).orderBy("click_id", "view_id")
 
 
 # ---------------------------------------------------------------------------
@@ -819,7 +894,7 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer = joined.writeStream.format("memory").outputMode("append")
     with _query(spark, writer) as q:
         q.processAllAvailable()
-        return spark.table(q.name).orderBy("click_id", "view_id")
+        return _sink(spark, q).orderBy("click_id", "view_id")
 
 
 # ---------------------------------------------------------------------------
@@ -937,7 +1012,7 @@ def stream_chained_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer = agg.writeStream.format("memory").outputMode("append")
     with _query(spark, writer) as q:
         q.processAllAvailable()
-        return spark.table(q.name).orderBy("win_start")
+        return _sink(spark, q).orderBy("win_start")
 
 
 # ---------------------------------------------------------------------------
@@ -1063,10 +1138,10 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _query(spark, writer) as q:
         deadline = time.time() + 10.0
         while time.time() < deadline:
-            if spark.table(q.name).count() >= 500:
+            if _sink(spark, q).count() >= 500:
                 break
             time.sleep(0.25)
-        sink = spark.table(q.name)
+        sink = _sink(spark, q)
     # planned after the stop: the aggregate reads the final sink contents
     return sink.select(
         F.count(F.lit(1)).alias("n_rows"),
@@ -1212,7 +1287,7 @@ def stream_unbounded_socket(spark: SparkSession, sf_dir: str) -> DataFrame:
                     break
                 time.sleep(0.2)
             query.processAllAvailable()
-            out = spark.table(query.name)
+            out = _sink(spark, query)
     finally:
         done.set()
         try:
@@ -1313,7 +1388,9 @@ def stream_event_pattern_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def transform(s):
-        return s.groupBy("user_id").applyInPandasWithState(
+        # the fold reads only these columns: the rest never reach Python
+        stream = s.select("user_id", "event_id", "ts", "event_type")
+        return stream.groupBy("user_id").applyInPandasWithState(
             update,
             outputStructType=(
                 "user_id bigint, n_seen bigint, n_strict_conversions "
@@ -1334,9 +1411,9 @@ def stream_event_pattern_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .writeStream.format("memory")
         .outputMode("update")
     )
-    with _query(spark, writer, python_stateful=True) as q:
+    with _query(spark, writer) as q:
         q.processAllAvailable()
-        sink = spark.table(q.name)
+        sink = _sink(spark, q)
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("user_id").orderBy(F.desc("n_seen"))
@@ -1856,29 +1933,6 @@ FROM events
     tags=("streaming", "quality"),
 )
 def stream_query_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time
-
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    class _Collector(StreamingQueryListener):
-        def __init__(self):
-            self.started = []
-            self.progress = []
-            self.terminated = []
-
-        def onQueryStarted(self, event):
-            self.started.append(str(event.id))
-
-        def onQueryProgress(self, event):
-            p = event.progress
-            self.progress.append((str(p.id), int(p.numInputRows)))
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            self.terminated.append(str(event.id))
-
     writer = (
         # 2 files/trigger (r14): the key's output is the summed
         # numInputRows across the query's progress events — invariant to
@@ -1887,29 +1941,17 @@ def stream_query_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
         .writeStream.format("memory")
         .outputMode("append")
     )
-    collector = _Collector()
-    spark.streams.addListener(collector)
-    try:
+    with _query_events(spark) as events:
         with _query(spark, writer) as q:
             qid = str(q.id)
             q.processAllAvailable()
-        # the bus is async: wait for OUR terminated event — ordering
-        # guarantees every prior progress event has been delivered
-        deadline = time.monotonic() + 30
-        while qid not in collector.terminated:
-            if time.monotonic() > deadline:
-                raise TimeoutError(
-                    "QueryTerminatedEvent not delivered within 30 s"
-                )
-            time.sleep(0.1)
-    finally:
-        spark.streams.removeListener(collector)
-    n_rows = sum(n for pid, n in collector.progress if pid == qid)
+        events.wait(qid)
+    n_rows = sum(int(p.numInputRows) for p in events.progress(qid))
     row = [
         (
             n_rows,
-            collector.started.count(qid),
-            collector.terminated.count(qid),
+            events.started.count(qid),
+            events.terminated.count(qid),
         )
     ]
     # r14: literal JVM row (see common.local_rows_df) — createDataFrame's
