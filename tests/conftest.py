@@ -25,6 +25,18 @@ def stream_hygiene(spark):
     )
 
 
+def newest_run_dir(name: str, sf_dir: str = SF_SMALL) -> str:
+    """The run directory that the latest `common.pid_run_dir(sf_dir,
+    name)` call of this process made: each call makes a fresh one inside
+    the process's `<name>_<sf>_<pid>` directory."""
+    from week3_2_practice_big_data__spark.common import scratch_dir
+
+    runs = f"{scratch_dir(sf_dir, name)}_{os.getpid()}"
+    return max(
+        (os.path.join(runs, d) for d in os.listdir(runs)), key=os.path.getmtime
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")

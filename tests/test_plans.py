@@ -13,7 +13,7 @@ import pytest
 
 from week3_2_practice_big_data__spark import REGISTRY
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, newest_run_dir
 
 
 def _formatted_plan(spark, key: str) -> str:
@@ -1035,28 +1035,26 @@ def test_python_datasource_sink_manifest_isolates_uncommitted(spark):
     manifest-listed files are visible to the read-back; a stray staged
     file (an aborted/speculative task's leftovers) must be invisible.
     Verified by injecting a stray jsonl AFTER the committed write and
-    re-running the read-back through the registered builder: the result
-    must be unchanged."""
+    re-running the builder's read-back (`_committed_rows`) over that
+    directory: the result must be unchanged."""
     import json
     import os
 
+    from week3_2_practice_big_data__spark.sources.generators import _committed_rows
+
     a = REGISTRY["sink_python_datasource"].builder(spark, SF_SMALL)
     rows_before = [tuple(r) for r in a.collect()]
-    # locate the sink scratch (pid-suffixed) and inject a stray file
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = os.path.join(
-        repo, ".tmp", f"pydsw_{os.path.basename(SF_SMALL)}_{os.getpid()}"
-    )
+    # locate this call's sink directory and inject a stray file
+    out = newest_run_dir("pydsw")
     assert os.path.isdir(out), out
     with open(os.path.join(out, "part-deadbeef-stray.jsonl"), "w") as f:
         f.write(json.dumps(["stray", 999, 999]) + "\n")
     with open(os.path.join(out, "_MANIFEST")) as f:
         manifest = json.load(f)
     assert "part-deadbeef-stray.jsonl" not in manifest
-    # a fresh builder run rewrites the scratch and recomputes — results
-    # stay exactly the committed relation
-    b = REGISTRY["sink_python_datasource"].builder(spark, SF_SMALL)
-    assert [tuple(r) for r in b.collect()] == rows_before
+    # the builder's read-back of that same directory still returns
+    # exactly the committed relation
+    assert sorted(_committed_rows(out)) == sorted(rows_before)
 
 
 def _staged_writer(path, arrow: bool, stream: bool):
@@ -1194,10 +1192,7 @@ def test_python_datasource_arrow_writer_received_batches(spark):
 
     df = REGISTRY["sink_python_datasource_arrow"].builder(spark, SF_SMALL)
     got = sorted(tuple(r) for r in df.collect())
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = os.path.join(
-        repo, ".tmp", f"pydswa_{os.path.basename(SF_SMALL)}_{os.getpid()}"
-    )
+    out = newest_run_dir("pydswa")
     with open(os.path.join(out, "_MANIFEST")) as f:
         manifest = json.load(f)
     assert all(e["n_batches"] >= 0 for e in manifest)

@@ -141,6 +141,32 @@ def test_stream_lifecycle_and_conf_changes_in_one_place():
     assert stray == set(), sorted(stray)
 
 
+def test_shared_stream_shapes_built_in_one_function():
+    """Static guard (no Spark): in streams.py each shared stream shape is
+    spelled in exactly one top-level function — the watermarked clicks and
+    views sides of the range join (a withWatermark beside both the
+    'click' and 'view' constants), the stage reveal of the two-life
+    restart (shutil.copytree), and the state-store coordinator touch
+    (stateStoreCoordinator)."""
+    import ast
+
+    tree = dict(_package_modules())["streaming/streams.py"]
+    owners = {"click-view": [], "copytree": [], "stateStoreCoordinator": []}
+    for top in tree.body:
+        attrs = {n.attr for n in ast.walk(top) if isinstance(n, ast.Attribute)}
+        consts = {n.value for n in ast.walk(top) if isinstance(n, ast.Constant)}
+        if "withWatermark" in attrs and {"click", "view"} <= consts:
+            owners["click-view"].append(top.name)
+        for attr in ("copytree", "stateStoreCoordinator"):
+            if attr in attrs:
+                owners[attr].append(top.name)
+    assert owners == {
+        "click-view": ["_click_view_pairs"],
+        "copytree": ["_two_lives"],
+        "stateStoreCoordinator": ["_statestore_checkpoint"],
+    }, owners
+
+
 def test_scratch_root_defined_only_in_common():
     """Static guard (no Spark): `common.scratch_root` is the one place the
     `.tmp` scratch root is spelled. No other package module holds a string

@@ -3,6 +3,8 @@ stateful dedup, validated against the batch oracles."""
 
 from __future__ import annotations
 
+import pytest
+
 from week3_2_practice_big_data__spark import REGISTRY
 
 from .conftest import SF_SMALL, stream_hygiene
@@ -643,14 +645,13 @@ def test_python_datasource_stream_sink_commits_per_batch(spark):
     import json
     import os
 
+    from .conftest import newest_run_dir
+
     out_df = REGISTRY["stream_python_datasource_sink"].builder(
         spark, SF_SMALL
     )
     got = sorted(tuple(r) for r in out_df.collect())
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out = os.path.join(
-        repo, ".tmp", f"pydsk_out_{os.path.basename(SF_SMALL)}_{os.getpid()}"
-    )
+    out = newest_run_dir("pydsk_out")
     manifests = sorted(
         e for e in os.listdir(out) if e.startswith("_MANIFEST_")
     )
@@ -788,7 +789,7 @@ print(d)
     done = subprocess.run(
         [sys.executable, "-c", code], capture_output=True, text=True, check=True
     )
-    run_dir = done.stdout.strip()
+    run_dir = os.path.dirname(done.stdout.strip())  # the pid directory
     assert os.path.dirname(run_dir) == str(tmp_path), done.stdout
     assert not os.path.exists(run_dir)
     assert list(tmp_path.iterdir()) == []
@@ -796,8 +797,9 @@ print(d)
 
 def test_pid_run_dir_reaps_dead_siblings(tmp_path, monkeypatch):
     """common.pid_run_dir (r11): scratch dirs left by dead pids of the same
-    (prefix, sf) tag are reaped; the caller's own dir name is returned;
-    unrelated prefixes and non-pid suffixes are left alone."""
+    (prefix, sf) tag are reaped; each call returns a fresh empty directory
+    inside the caller's own pid directory; unrelated prefixes and non-pid
+    suffixes are left alone."""
     import os
 
     from week3_2_practice_big_data__spark import common
@@ -808,7 +810,69 @@ def test_pid_run_dir_reaps_dead_siblings(tmp_path, monkeypatch):
     (tmp_path / "x_run_sf9_notapid").mkdir()
     (tmp_path / f"other_run_sf9_{dead_pid}").mkdir()
     mine = common.pid_run_dir("/data/sf9", "x_run")
-    assert mine == str(tmp_path / f"x_run_sf9_{os.getpid()}")
+    assert os.path.dirname(mine) == str(tmp_path / f"x_run_sf9_{os.getpid()}")
+    assert os.listdir(mine) == []
+    again = common.pid_run_dir("/data/sf9", "x_run")
+    assert again != mine and os.path.dirname(again) == os.path.dirname(mine)
     assert not (tmp_path / f"x_run_sf9_{dead_pid}").exists()  # reaped
     assert (tmp_path / "x_run_sf9_notapid").exists()  # suffix not a pid
     assert (tmp_path / f"other_run_sf9_{dead_pid}").exists()  # other prefix
+
+
+@pytest.mark.parametrize(
+    "key",
+    (
+        "stream_foreachbatch",
+        "stream_sink_parquet",
+        "stream_checkpoint_restart",
+        "stream_pipeline_e2e",
+    ),
+)
+def test_sink_frame_stays_readable_after_the_key_runs_again(spark, key):
+    """A sink key's returned frame is a lazy read of its sink files.
+    Each call writes to its own run directory (common.pid_run_dir), so
+    a second call of the same key leaves the first frame's files in
+    place: the first frame still reads, and equals the second."""
+    first = REGISTRY[key].builder(spark, SF_SMALL)
+    second = REGISTRY[key].builder(spark, SF_SMALL)
+    assert first.count() > 0
+    assert first.collect() == second.collect()
+
+
+def test_parquet_sink_from_two_threads_matches_its_oracle(spark):
+    """Two client threads run stream_sink_parquet at once in one session
+    and scale factor: each writes its own sink and checkpoint, so each
+    result equals the oracle and the session is left as it was found."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from .oracle import compare, duck_run
+
+    entry = REGISTRY["stream_sink_parquet"]
+    ref = duck_run(entry.oracle, SF_SMALL)
+    before = stream_hygiene(spark)
+    with ThreadPoolExecutor(2) as pool:
+        frames = list(pool.map(lambda _: entry.builder(spark, SF_SMALL), range(2)))
+    for i, df in enumerate(frames):
+        compare(df, ref, key=f"stream_sink_parquet:thread{i}")
+    assert stream_hygiene(spark) == before
+
+
+def test_events_schema_is_the_loaded_schema(spark, tmp_path):
+    """io.EVENTS_SCHEMA, which every chunked stream reads with, equals
+    load_table(..., "events").schema, nullability included: on the test
+    scale factors and on the benchmark's generated tables."""
+    import os
+
+    from perfbench.datagen import ensure_tables
+    from pyspark.sql.types import StructType
+
+    from week3_2_practice_big_data__spark.io import EVENTS_SCHEMA, load_table
+
+    from .conftest import SF_ORACLE
+
+    dirs = [SF_SMALL, SF_ORACLE, os.path.join(os.path.dirname(SF_SMALL), "sf0.1")]
+    dirs = [d for d in dirs if os.path.exists(os.path.join(d, "events.parquet"))]
+    dirs.append(ensure_tables(str(tmp_path), "0.01", 42))
+    want = StructType.fromDDL(EVENTS_SCHEMA)
+    for sf_dir in dirs:
+        assert load_table(spark, sf_dir, "events").schema == want, sf_dir

@@ -69,15 +69,18 @@ atexit.register(_remove_run_dirs)
 
 
 def pid_run_dir(sf_dir: str, name: str) -> str:
-    """Scratch path for one process's run: ``scratch_dir(sf_dir, name)``
-    suffixed with the pid, so concurrent processes on one sf never share
-    (and rmtree) a sink or checkpoint. The directory is removed when this
-    process exits (builders may return lazy reads over it, so not
-    before). Directories of the same (name, sf) left by DEAD pids — a
-    killed process runs no exit hook — are removed first; live pids'
+    """A fresh, empty directory for one run, made on each call inside
+    this process's directory ``scratch_dir(sf_dir, name)`` + ``_<pid>``.
+    No two calls share one, so a second run of a sink key (or a second
+    client thread) never touches the files an earlier call's returned
+    frame still reads. The pid directory is removed when this process
+    exits (builders may return lazy reads over it, so not before).
+    Directories of the same (name, sf) left by DEAD pids — a killed
+    process runs no exit hook — are removed first; live pids'
     directories are never touched (os.kill(pid, 0) probe)."""
     import os
     import shutil
+    import tempfile
 
     root = scratch_root()
     want = os.path.basename(scratch_dir(sf_dir, name)) + "_"
@@ -96,7 +99,8 @@ def pid_run_dir(sf_dir: str, name: str) -> str:
         pass
     mine = os.path.join(root, want + str(os.getpid()))
     _RUN_DIRS.add(mine)
-    return mine
+    os.makedirs(mine, exist_ok=True)
+    return tempfile.mkdtemp(prefix="run-", dir=mine)
 
 
 def build_once(out: str, build, stamp: str = "") -> str:

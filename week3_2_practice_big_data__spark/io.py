@@ -31,6 +31,15 @@ TABLES = (
     "embeddings",
 )
 
+# The events table's schema as load_table returns it (ts already a
+# microsecond TIMESTAMP), spelled once so a stream can take it without
+# reading the table.
+EVENTS_SCHEMA = (
+    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, "
+    "value DOUBLE, props STRING"
+)
+
+
 def _events_fallback(spark: SparkSession, path: str) -> DataFrame:
     """Arrow-side ns→us cast for sessions where the legacy conf is locked."""
     import pyarrow.compute  # noqa: F401  (ensure pyarrow fully loaded)

@@ -17,7 +17,6 @@ partitions the id space across executors.
 from __future__ import annotations
 
 import os
-import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -670,15 +669,12 @@ def _staged_sink_dir(
     spark: SparkSession, sf_dir: str, name: str, arrow: bool = False
 ) -> str:
     """Register the staged-commit sink of one writer kind and return this
-    run's empty sink directory `name` (pid-suffixed, see pid_run_dir)."""
+    call's empty sink directory (see pid_run_dir)."""
     from ..session import ensure_package_on_workers
 
     ensure_package_on_workers(spark)
     spark.dataSource.register(_jsonl_sink(arrow))
-    out = pid_run_dir(sf_dir, name)
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-    return out
+    return pid_run_dir(sf_dir, name)
 
 
 def _committed_rows(out: str) -> list[tuple]:

@@ -16,7 +16,16 @@ what surrounds it — a memory, parquet, foreach-row or Python Data Source
 sink, the RocksDB state store, a socket source, a checkpoint restart.
 The Python Data Source writers share one staged-commit sink kit
 (`_jsonl_sink`, `_committed_rows`) in sources/generators.py;
-`_jsonl_rows` reads the jsonl files those sinks stage.
+`_jsonl_rows` reads the jsonl files those sinks stage. Every sink run
+writes to its own fresh directory (`common.pid_run_dir`), so a frame an
+earlier call returned stays readable when the key runs again.
+
+Shapes: each stream shape that several keys share is built once. The
+three join keys take the watermarked clicks x views range join from
+`_click_view_pairs` (their oracles from `_CLICK_VIEW_PAIR` and
+`_sentinel_wm`); the two restart keys run `_two_lives`; the session
+keys count with `_session_count`; the two state-reader keys read the
+checkpoint `_statestore_checkpoint` builds.
 
 Scale notes: this is the same topology as a production job (source →
 watermarked stateful op → sink); swap `_event_stream`'s one `readStream`
@@ -37,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
 from ..common import build_once, pid_run_dir, scratch_dir
-from ..io import load_table
+from ..io import EVENTS_SCHEMA, load_table
 from ..registry import register
 from ..session import scoped_confs
 from ..operators.analytics import _GAP_US as _SESS_GAP_US
@@ -290,7 +299,7 @@ def _event_stream(
     if path is None:
         path = _chunk_dir(spark, sf_dir, dup_first, sentinels)
     return (
-        spark.readStream.schema(load_table(spark, sf_dir, "events").schema)
+        spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", max_files)
         .option("recursiveFileLookup", "true")
         .parquet(path)
@@ -298,14 +307,11 @@ def _event_stream(
 
 
 def _run_stream(
-    spark: SparkSession,
-    stream: DataFrame,
-    transform,
-    confs: dict | None = None,
+    spark: SparkSession, frame: DataFrame, confs: dict | None = None
 ) -> DataFrame:
-    """Run `transform(stream)` to completion into a memory sink (append
+    """Run the streaming `frame` to completion into a memory sink (append
     mode) and return the sink's rows."""
-    writer = transform(stream).writeStream.format("memory").outputMode("append")
+    writer = frame.writeStream.format("memory").outputMode("append")
     with _query(spark, writer, confs=confs) as q:
         q.processAllAvailable()
         return _sink(spark, q)
@@ -389,7 +395,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     # data batches; the final finalization rides the same trailing
     # no-data batch it always did). Hash-proven identical at 3 SFs.
     stream = _event_stream(spark, sf_dir, max_files=2)
-    return _run_stream(spark, stream, _finalized_windows).orderBy(
+    return _run_stream(spark, _finalized_windows(stream)).orderBy(
         "win_start", "event_type"
     )
 
@@ -419,15 +425,13 @@ SELECT event_id, user_id, event_type FROM events ORDER BY event_id
     tags=("streaming", "stateful"),
 )
 def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def transform(s):
-        return (
-            s.withWatermark("ts", _WATERMARK)
-            .dropDuplicates(["event_id"])
-            .select("event_id", "user_id", "event_type")
-        )
-
-    stream = _event_stream(spark, sf_dir, dup_first=100)
-    return _run_stream(spark, stream, transform).orderBy("event_id")
+    deduped = (
+        _event_stream(spark, sf_dir, dup_first=100)
+        .withWatermark("ts", _WATERMARK)
+        .dropDuplicates(["event_id"])
+        .select("event_id", "user_id", "event_type")
+    )
+    return _run_stream(spark, deduped).orderBy("event_id")
 
 
 # ---------------------------------------------------------------------------
@@ -677,7 +681,6 @@ ORDER BY batch_idx
 )
 def stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = pid_run_dir(sf_dir, "feb_sink")
-    shutil.rmtree(sink, ignore_errors=True)
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -724,15 +727,76 @@ def stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SSJ_RANGE_MIN = 360
 
-_SSJ_ORACLE = f"""
+# The oracle side of _click_view_pairs, for the three join keys: click a
+# and view b pair up when the view is of the same user and lands within
+# the range after the click.
+_CLICK_VIEW_PAIR = f"""a.user_id = b.user_id
+ AND a.event_type = 'click' AND b.event_type = 'view'
+ AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL {_SSJ_RANGE_MIN} MINUTE"""
+
+_SSJ_PAIRS = f"""
 SELECT a.event_id AS click_id, b.event_id AS view_id, a.user_id,
   epoch_us(b.ts) - epoch_us(a.ts) AS gap_us
-FROM events a JOIN events b
-  ON a.user_id = b.user_id
- AND a.event_type = 'click' AND b.event_type = 'view'
- AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL {_SSJ_RANGE_MIN} MINUTE
+FROM events a JOIN events b ON {_CLICK_VIEW_PAIR}"""
+
+_SSJ_ORACLE = f"""{_SSJ_PAIRS}
 ORDER BY click_id, view_id
 """
+
+
+def _sentinel_wm(delay_us: int, lag_us: int = 0) -> str:
+    """The oracle CTE `wm(wm_ms)`: the final ms-floored watermark of a
+    stream over a sentinel chunk set, whose last rows sit
+    _SSOJ_SENT_OFFSET_US past the real max ts. `lag_us` is how far the
+    slowest side's max ts trails that (the join keys' sentinel view sits
+    1 s before its click, and the global watermark is the min over the
+    two sides)."""
+    return f"""wm AS (
+  SELECT CAST(floor((max(epoch_us(ts)) + {_SSOJ_SENT_OFFSET_US} - {lag_us}
+                     - {delay_us}) / 1000e0) AS BIGINT) AS wm_ms
+  FROM events
+)"""
+
+
+def _click_view_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    how: str = "inner",
+    max_files: int = 1,
+    sentinels: int = 0,
+) -> DataFrame:
+    """The one watermarked clicks x views range join of the three join
+    keys: each side is its own _event_stream over the same chunk set,
+    filtered to its event type under the 10-minute watermark; a view
+    pairs with a click of the same user within _SSJ_RANGE_MIN minutes
+    after it. Columns: click_id, click_user, click_ts, view_id, user_id
+    (the view's), view_ts and gap_us."""
+
+    def side(kind: str) -> DataFrame:
+        return (
+            _event_stream(spark, sf_dir, max_files, sentinels=sentinels)
+            .filter(F.col("event_type") == kind)
+            .withWatermark("ts", _WATERMARK)
+        )
+
+    clicks = side("click").select(
+        F.col("event_id").alias("click_id"),
+        F.col("user_id").alias("click_user"),
+        F.col("ts").alias("click_ts"),
+    )
+    views = side("view").select(
+        F.col("event_id").alias("view_id"),
+        "user_id",
+        F.col("ts").alias("view_ts"),
+    )
+    return clicks.join(
+        views,
+        F.expr(
+            f"click_user = user_id AND view_ts >= click_ts "
+            f"AND view_ts <= click_ts + interval {_SSJ_RANGE_MIN} minutes"
+        ),
+        how,
+    ).withColumn("gap_us", F.unix_micros("view_ts") - F.unix_micros("click_ts"))
 
 
 @register(
@@ -744,45 +808,10 @@ ORDER BY click_id, view_id
     tags=("streaming", "join"),
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def side():
-        return _event_stream(spark, sf_dir)
-
-    clicks = (
-        side()
-        .filter(F.col("event_type") == "click")
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
+    pairs = _click_view_pairs(spark, sf_dir).select(
+        "click_id", "view_id", "user_id", "gap_us"
     )
-    views = (
-        side()
-        .filter(F.col("event_type") == "view")
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            F.col("event_id").alias("view_id"),
-            "user_id",
-            F.col("ts").alias("view_ts"),
-        )
-    )
-    joined = clicks.join(
-        views,
-        F.expr(
-            f"click_user = user_id AND view_ts >= click_ts "
-            f"AND view_ts <= click_ts + interval {_SSJ_RANGE_MIN} minutes"
-        ),
-    ).select(
-        "click_id",
-        "view_id",
-        "user_id",
-        (F.unix_micros("view_ts") - F.unix_micros("click_ts")).alias("gap_us"),
-    )
-    writer = joined.writeStream.format("memory").outputMode("append")
-    with _query(spark, writer) as q:
-        q.processAllAvailable()
-        return _sink(spark, q).orderBy("click_id", "view_id")
+    return _run_stream(spark, pairs).orderBy("click_id", "view_id")
 
 
 # ---------------------------------------------------------------------------
@@ -802,33 +831,21 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # arithmetic.
 # ---------------------------------------------------------------------------
 
+# The GLOBAL watermark is the min over the two sides' watermark nodes
+# (each computed post-filter on its own rows): the sentinel view sits 1 s
+# before the sentinel click, so the views side lags and the final global
+# watermark is max_ts + offset - 1 s - delay (observed on the crafted
+# fixture's per-batch progress, encoded exactly here).
+_JOIN_WM = _sentinel_wm(_WATERMARK_US, lag_us=1_000_000)
+
 _SSOJ_ORACLE = f"""
-WITH wm AS (
-  -- the GLOBAL watermark is min over the two sides' watermark nodes
-  -- (each computed post-filter on its own rows): the sentinel view sits
-  -- 1 s before the sentinel click, so the views side lags and the final
-  -- global watermark is max_ts + offset - 1 s - delay (observed on the
-  -- crafted fixture's per-batch progress, encoded exactly here)
-  SELECT CAST(floor((max(epoch_us(ts)) + {_SSOJ_SENT_OFFSET_US} - 1000000
-                     - {_WATERMARK_US}) / 1000e0) AS BIGINT) AS wm_ms
-  FROM events
-)
-SELECT a.event_id AS click_id, b.event_id AS view_id, a.user_id,
-  epoch_us(b.ts) - epoch_us(a.ts) AS gap_us
-FROM events a JOIN events b
-  ON a.user_id = b.user_id
- AND a.event_type = 'click' AND b.event_type = 'view'
- AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL {_SSJ_RANGE_MIN} MINUTE
+WITH {_JOIN_WM}{_SSJ_PAIRS}
 UNION ALL
 SELECT a.event_id AS click_id, CAST(NULL AS BIGINT) AS view_id, a.user_id,
   CAST(NULL AS BIGINT) AS gap_us
 FROM events a CROSS JOIN wm
 WHERE a.event_type = 'click'
-  AND NOT EXISTS (
-    SELECT 1 FROM events b
-    WHERE b.user_id = a.user_id AND b.event_type = 'view'
-      AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL {_SSJ_RANGE_MIN} MINUTE
-  )
+  AND NOT EXISTS (SELECT 1 FROM events b WHERE {_CLICK_VIEW_PAIR})
   AND CAST(floor(epoch_us(a.ts) / 1000e0) AS BIGINT)
       <= wm.wm_ms - {_SSJ_RANGE_MIN} * 60000 - 1
 ORDER BY click_id, view_id
@@ -855,46 +872,10 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # files/trigger and still land its final eviction in a data batch
     # ([s90,s91] advances the wm to final, [s92] evicts). For THIS key
     # (1 file/trigger) it is one extra no-op data batch.
-    def side():
-        return _event_stream(spark, sf_dir, sentinels=3)
-
-    clicks = (
-        side()
-        .filter(F.col("event_type") == "click")
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
+    pairs = _click_view_pairs(spark, sf_dir, "leftOuter", sentinels=3).select(
+        "click_id", "view_id", F.col("click_user").alias("user_id"), "gap_us"
     )
-    views = (
-        side()
-        .filter(F.col("event_type") == "view")
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            F.col("event_id").alias("view_id"),
-            "user_id",
-            F.col("ts").alias("view_ts"),
-        )
-    )
-    joined = clicks.join(
-        views,
-        F.expr(
-            f"click_user = user_id AND view_ts >= click_ts "
-            f"AND view_ts <= click_ts + interval {_SSJ_RANGE_MIN} minutes"
-        ),
-        "leftOuter",
-    ).select(
-        "click_id",
-        "view_id",
-        F.col("click_user").alias("user_id"),
-        (F.unix_micros("view_ts") - F.unix_micros("click_ts")).alias("gap_us"),
-    )
-    writer = joined.writeStream.format("memory").outputMode("append")
-    with _query(spark, writer) as q:
-        q.processAllAvailable()
-        return _sink(spark, q).orderBy("click_id", "view_id")
+    return _run_stream(spark, pairs).orderBy("click_id", "view_id")
 
 
 # ---------------------------------------------------------------------------
@@ -917,17 +898,10 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SCJA_ORACLE = f"""
-WITH wm AS (
-  SELECT CAST(floor((max(epoch_us(ts)) + {_SSOJ_SENT_OFFSET_US} - 1000000
-                     - {_WATERMARK_US}) / 1000e0) AS BIGINT) AS wm_ms
-  FROM events
-),
+WITH {_JOIN_WM},
 j AS (
   SELECT a.ts AS click_ts, epoch_us(b.ts) - epoch_us(a.ts) AS gap_us
-  FROM events a JOIN events b
-    ON a.user_id = b.user_id
-   AND a.event_type = 'click' AND b.event_type = 'view'
-   AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL {_SSJ_RANGE_MIN} MINUTE
+  FROM events a JOIN events b ON {_CLICK_VIEW_PAIR}
 ),
 agg AS (
   SELECT CAST(floor(epoch(click_ts) / 600) AS BIGINT) * 600 AS win_start,
@@ -956,49 +930,16 @@ ORDER BY win_start
     tags=("streaming", "join", "stateful"),
 )
 def stream_chained_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def side():
-        # 2 files/trigger (r14): batches [c0,c1],[c2,c3],[s90,s91],
-        # [s92] — the identical-ts sentinel chunks mean [s90,s91]
-        # advances the global watermark to its final value and [s92]
-        # is the data batch that runs the last eviction/finalization,
-        # exactly the r8 sentinel discipline at half the batch count.
-        # Emitted set = windows with end <= final wm - range, a pure
-        # function of the FINAL watermark — batching-invariant
-        # (hash-proven at 3 SFs).
-        return _event_stream(spark, sf_dir, max_files=2, sentinels=3)
-
-    clicks = (
-        side()
-        .filter(F.col("event_type") == "click")
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("click_user"),
-            F.col("ts").alias("click_ts"),
-        )
-    )
-    views = (
-        side()
-        .filter(F.col("event_type") == "view")
-        .withWatermark("ts", _WATERMARK)
-        .select(
-            F.col("event_id").alias("view_id"),
-            "user_id",
-            F.col("ts").alias("view_ts"),
-        )
-    )
-    joined = clicks.join(
-        views,
-        F.expr(
-            f"click_user = user_id AND view_ts >= click_ts "
-            f"AND view_ts <= click_ts + interval {_SSJ_RANGE_MIN} minutes"
-        ),
-    ).select(
-        "click_ts",
-        (F.unix_micros("view_ts") - F.unix_micros("click_ts")).alias("gap_us"),
-    )
+    # 2 files/trigger (r14): batches [c0,c1],[c2,c3],[s90,s91],[s92] —
+    # the identical-ts sentinel chunks mean [s90,s91] advances the global
+    # watermark to its final value and [s92] is the data batch that runs
+    # the last eviction/finalization, exactly the r8 sentinel discipline
+    # at half the batch count. Emitted set = windows with end <= final
+    # wm - range, a pure function of the FINAL watermark —
+    # batching-invariant (hash-proven at 3 SFs).
+    pairs = _click_view_pairs(spark, sf_dir, max_files=2, sentinels=3)
     agg = (
-        joined.groupBy(F.window("click_ts", "600 seconds"))
+        pairs.groupBy(F.window("click_ts", "600 seconds"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
             F.sum("gap_us").cast("bigint").alias("sum_gap_us"),
@@ -1009,10 +950,7 @@ def stream_chained_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_gap_us",
         )
     )
-    writer = agg.writeStream.format("memory").outputMode("append")
-    with _query(spark, writer) as q:
-        q.processAllAvailable()
-        return _sink(spark, q).orderBy("win_start")
+    return _run_stream(spark, agg).orderBy("win_start")
 
 
 # ---------------------------------------------------------------------------
@@ -1052,15 +990,13 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey", "c_name")
     )
 
-    def transform(s):
-        return (
-            s.alias("e")
-            .join(F.broadcast(dim.alias("c")), F.expr("e.user_id = c.c_custkey"))
-            .select("e.event_id", "e.user_id", "e.event_type", "c.c_name", "e.value")
-        )
-
-    stream = _event_stream(spark, sf_dir)
-    return _run_stream(spark, stream, transform).orderBy("event_id")
+    joined = (
+        _event_stream(spark, sf_dir)
+        .alias("e")
+        .join(F.broadcast(dim.alias("c")), F.expr("e.user_id = c.c_custkey"))
+        .select("e.event_id", "e.user_id", "e.event_type", "c.c_name", "e.value")
+    )
+    return _run_stream(spark, joined).orderBy("event_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1090,7 +1026,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = pid_run_dir(sf_dir, "psink_out")
     sink, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
 
     writer = (
         _finalized_windows(_event_stream(spark, sf_dir))
@@ -1470,11 +1405,7 @@ _SESS_NATIVE_WM_US = 21_600_000_000
 
 _SESS_NATIVE_ORACLE = f"""
 WITH sess AS ({_session_batch_sql("duckdb").format(events="events")}),
-wm AS (
-  SELECT CAST(floor((max(epoch_us(ts)) + {_SSOJ_SENT_OFFSET_US}
-                     - {_SESS_NATIVE_WM_US}) / 1000e0) AS BIGINT) AS wm_ms
-  FROM events
-)
+{_sentinel_wm(_SESS_NATIVE_WM_US)}
 SELECT user_id, session_start_us, session_end_us, n_events
 FROM sess CROSS JOIN wm
 WHERE session_end_us <= wm.wm_ms * 1000
@@ -1482,13 +1413,12 @@ ORDER BY user_id, session_start_us
 """
 
 
-def _session_native_transform(s: DataFrame) -> DataFrame:
-    """The streaming session topology (shared with the crafted-fixture
-    pytest so the pinned merge/withhold/boundary behavior is the same
-    code path the registered key runs)."""
+def _session_count(s: DataFrame) -> DataFrame:
+    """The one streaming session count: session_window() per user with
+    the shared gap, as (user_id, session_start_us, session_end_us,
+    n_events). `s` already carries the 6 h watermark."""
     return (
-        s.withWatermark("ts", _SESS_NATIVE_WM)
-        .groupBy(
+        s.groupBy(
             F.session_window("ts", f"{_SESS_GAP_US // 1_000_000} seconds"),
             "user_id",
         )
@@ -1504,6 +1434,13 @@ def _session_native_transform(s: DataFrame) -> DataFrame:
             "n_events",
         )
     )
+
+
+def _session_native_transform(s: DataFrame) -> DataFrame:
+    """The streaming session topology (shared with the crafted-fixture
+    pytest so the pinned merge/withhold/boundary behavior is the same
+    code path the registered key runs)."""
+    return _session_count(s.withWatermark("ts", _SESS_NATIVE_WM))
 
 
 @register(
@@ -1528,7 +1465,7 @@ def stream_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     # set = sessions with end <= final wm, batching-invariant
     # (hash-proven at 3 SFs + the crafted merge/boundary fixture).
     stream = _event_stream(spark, sf_dir, max_files=2, sentinels=3)
-    out = _run_stream(spark, stream, _session_native_transform)
+    out = _run_stream(spark, _session_native_transform(stream))
     return out.filter(F.col("user_id") >= 0).orderBy(
         "user_id", "session_start_us"
     )
@@ -1568,15 +1505,54 @@ def stream_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful"),
 )
 def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def transform(s):
-        return (
-            s.withWatermark("ts", _WATERMARK)
-            .dropDuplicatesWithinWatermark(["event_id"])
-            .select("event_id", "user_id", "event_type")
-        )
+    deduped = (
+        _event_stream(spark, sf_dir, dup_first=100)
+        .withWatermark("ts", _WATERMARK)
+        .dropDuplicatesWithinWatermark(["event_id"])
+        .select("event_id", "user_id", "event_type")
+    )
+    return _run_stream(spark, deduped).orderBy("event_id")
 
-    stream = _event_stream(spark, sf_dir, dup_first=100)
-    return _run_stream(spark, stream, transform).orderBy("event_id")
+
+def _two_lives(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    transform,
+    *,
+    max_files: int = 1,
+    dup_first: int = 0,
+    sentinels: int = 0,
+) -> DataFrame:
+    """The one two-life restart: `transform` of the (dup_first,
+    sentinels) chunk set runs into a parquet sink as two query lives
+    against one checkpointLocation, in a fresh pid_run_dir `name`. Chunk
+    files are revealed into a stage directory the stream reads: life 1
+    sees the first half of the real timeline (the main chunks, not the
+    replayed-duplicates or sentinel ones) and stops; life 2 restarts from
+    the checkpoint over every chunk. Returns the sink read back."""
+    src = _chunk_dir(spark, sf_dir, dup_first, sentinels)
+    base = pid_run_dir(sf_dir, name)
+    stage = os.path.join(base, "stage")
+    sink, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
+    chunks = sorted(
+        d for d in os.listdir(src) if os.path.isdir(os.path.join(src, d))
+    )
+    main = [d for d in chunks if "_dups" not in d and "_sent" not in d]
+    for life in (main[: max(1, len(main) // 2)], chunks):
+        for d in life:
+            if not os.path.exists(os.path.join(stage, d)):
+                shutil.copytree(os.path.join(src, d), os.path.join(stage, d))
+        writer = (
+            transform(_event_stream(spark, sf_dir, max_files, path=stage))
+            .writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+        )
+        with _query(spark, writer) as q:
+            q.processAllAvailable()
+    return spark.read.parquet(sink)
 
 
 # ---------------------------------------------------------------------------
@@ -1613,43 +1589,8 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("streaming", "stateful", "sink"),
 )
 def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _chunk_dir(spark, sf_dir)
-    # pid-suffixed scratch (ADVICE r9): the two-life run mutates this
-    # directory across lives, so concurrent invocations on one sf_dir
-    # (pytest-xdist + the driver) must not share — and rmtree — one path.
-    base = pid_run_dir(sf_dir, "ckres_run")
-    stage = os.path.join(base, "stage")
-    sink, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(stage, exist_ok=True)
-    chunks = sorted(
-        d for d in os.listdir(src)
-        if os.path.isdir(os.path.join(src, d))
-    )
-    half = max(1, len(chunks) // 2)
-
-    def _reveal(names):
-        for d in names:
-            dst = os.path.join(stage, d)
-            if not os.path.exists(dst):
-                shutil.copytree(os.path.join(src, d), dst)
-
-    def _life():
-        writer = (
-            _finalized_windows(_event_stream(spark, sf_dir, path=stage))
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-        )
-        with _query(spark, writer) as q:
-            q.processAllAvailable()
-
-    _reveal(chunks[:half])  # life 1: first half of the timeline
-    _life()
-    _reveal(chunks[half:])  # life 2: restart over the full set
-    _life()
-    return spark.read.parquet(sink).orderBy("win_start", "event_type")
+    out = _two_lives(spark, sf_dir, "ckres_run", _finalized_windows)
+    return out.orderBy("win_start", "event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -1807,54 +1748,19 @@ def stream_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "sink"),
 )
 def stream_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = _chunk_dir(spark, sf_dir, dup_first=100, sentinels=2)
-    base = pid_run_dir(sf_dir, "spe2e_run")
-    stage = os.path.join(base, "stage")
-    sink, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(stage, exist_ok=True)
-    chunks = sorted(
-        d for d in os.listdir(src) if os.path.isdir(os.path.join(src, d))
+    # 2 files/trigger (r14): the exactly-once argument is per-ROW and
+    # batching-independent (each replayed row is late-dropped OR
+    # dedup-filtered whichever batch carries it), sessions finalize
+    # against the FINAL watermark, and the two sentinel chunks still land
+    # so the last eviction rides a data batch (the second sentinel file
+    # forms its own trailing batch: 5 life-2 files -> ceil(5/2) batches).
+    # Hash-proven at 3 SFs + the crafted restart fixture.
+    out = _two_lives(
+        spark, sf_dir, "spe2e_run", _pipeline_e2e_transform,
+        max_files=2, dup_first=100, sentinels=2,
     )
-    main = [d for d in chunks if "_dups" not in d and "_sent" not in d]
-    half = max(1, len(main) // 2)
-
-    def _reveal(names):
-        for d in names:
-            dst = os.path.join(stage, d)
-            if not os.path.exists(dst):
-                shutil.copytree(os.path.join(src, d), dst)
-
-    def _life():
-        writer = (
-            # 2 files/trigger (r14): the exactly-once argument is
-            # per-ROW and batching-independent (each replayed row is
-            # late-dropped OR dedup-filtered whichever batch carries
-            # it), sessions finalize against the FINAL watermark, and
-            # the two sentinel chunks still land so the last eviction
-            # rides a data batch (the second sentinel file forms its
-            # own trailing batch: 5 life-2 files -> ceil(5/2)
-            # batches). Hash-proven at 3 SFs + the crafted restart
-            # fixture.
-            _pipeline_e2e_transform(
-                _event_stream(spark, sf_dir, max_files=2, path=stage)
-            )
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-        )
-        with _query(spark, writer) as q:
-            q.processAllAvailable()
-
-    _reveal(main[:half])  # life 1: first half of the real timeline
-    _life()
-    _reveal(chunks)  # life 2: the rest + replayed dups + sentinels
-    _life()
-    return (
-        spark.read.parquet(sink)
-        .filter(F.col("user_id") >= 0)
-        .orderBy("user_id", "session_start_us")
+    return out.filter(F.col("user_id") >= 0).orderBy(
+        "user_id", "session_start_us"
     )
 
 
@@ -1862,34 +1768,12 @@ def _pipeline_e2e_transform(s: DataFrame) -> DataFrame:
     """The composed topology (shared with the crafted-fixture pytest so
     the cross-restart dedup/session-straddle proof runs the same code
     path as the registered key)."""
-    return _session_native_transform_post_dedup(
+    return _session_count(
         s.withWatermark("ts", _SESS_NATIVE_WM)
         .dropDuplicatesWithinWatermark(["event_id"])
         .observe(
             "w32bd_spe2e_obs",
             F.count(F.lit(1)).alias("n_post_dedup"),
-        )
-    )
-
-
-def _session_native_transform_post_dedup(s: DataFrame) -> DataFrame:
-    """Session agg + projection only (the watermark is already attached
-    upstream of the dedup)."""
-    return (
-        s.groupBy(
-            F.session_window("ts", f"{_SESS_GAP_US // 1_000_000} seconds"),
-            "user_id",
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_micros(F.col("session_window.start")).alias(
-                "session_start_us"
-            ),
-            F.unix_micros(F.col("session_window.end")).alias(
-                "session_end_us"
-            ),
-            "n_events",
         )
     )
 
@@ -1992,8 +1876,6 @@ def stream_sink_foreach_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_package_on_workers(spark)
     out = pid_run_dir(sf_dir, "fesink_out")
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
 
     class _RowWriter:
         def __init__(self, path):
@@ -2088,22 +1970,18 @@ def _ssread_checkpoint(sf_dir: str) -> str:
     return scratch_dir(sf_dir, "ssread_ck")
 
 
-@register(
-    "src_statestore_read",
-    oracle=_STATESTORE_ORACLE,
-    doc="State Data Source reader (Spark 4, format 'statestore'): a "
-    "complete-mode streaming groupBy (saturating micro-unit sum + count "
-    "per event_type) checkpoints across the chunked source, then its "
-    "state store is read back as a batch relation — key struct, value "
-    "struct {sum, count} — and hash-checked against the relational GROUP "
-    "BY (associative merge ⇒ final state = batch aggregate regardless of "
-    "micro-batch slicing). The checkpoint builds once per sf via the "
-    "race-safe build_once; pytest additionally pins the state-metadata "
-    "reader's operator inventory (NS — production state inspection).",
-    tags=("source", "streaming", "stateful"),
-)
-def src_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ck = _ssread_checkpoint(sf_dir)
+def _statestore_checkpoint(
+    spark: SparkSession,
+    sf_dir: str,
+    ck: str,
+    stamp: str,
+    confs: dict | None = None,
+) -> str:
+    """The one state-store checkpoint of the two state-reader keys: a
+    complete-mode groupBy(event_type) of (micro-unit sum, count) over
+    the chunked source, 2 files per trigger, run once per (ck, stamp)
+    with `confs` set at its start (build_once). Returns `ck`, ready for
+    spark.read.format("statestore")."""
 
     def build(tmp: str) -> None:
         agg = (
@@ -2120,10 +1998,10 @@ def src_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .outputMode("complete")
             .option("checkpointLocation", tmp)
         )
-        with _query(spark, writer) as q:
+        with _query(spark, writer, confs=confs) as q:
             q.processAllAvailable()
 
-    build_once(ck, build, stamp=f"chunks={_CHUNKS},micro=1e6,v1")
+    build_once(ck, build, stamp=stamp)
     # The statestore reader resolves the session's StateStoreCoordinator
     # RPC endpoint, which Spark creates lazily on the FIRST streaming
     # query — a cold session hitting a cached checkpoint (build_once
@@ -2140,6 +2018,27 @@ def src_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     except Exception:
         pass
+    return ck
+
+
+@register(
+    "src_statestore_read",
+    oracle=_STATESTORE_ORACLE,
+    doc="State Data Source reader (Spark 4, format 'statestore'): a "
+    "complete-mode streaming groupBy (saturating micro-unit sum + count "
+    "per event_type) checkpoints across the chunked source, then its "
+    "state store is read back as a batch relation — key struct, value "
+    "struct {sum, count} — and hash-checked against the relational GROUP "
+    "BY (associative merge ⇒ final state = batch aggregate regardless of "
+    "micro-batch slicing). The checkpoint builds once per sf via the "
+    "race-safe build_once; pytest additionally pins the state-metadata "
+    "reader's operator inventory (NS — production state inspection).",
+    tags=("source", "streaming", "stateful"),
+)
+def src_statestore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ck = _statestore_checkpoint(
+        spark, sf_dir, _ssread_checkpoint(sf_dir), f"chunks={_CHUNKS},micro=1e6,v1"
+    )
     state = spark.read.format("statestore").load(ck)
     return state.select(
         F.col("key.event_type").alias("event_type"),
@@ -2188,7 +2087,7 @@ def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # max_files=2 (r14): same final-watermark-only oracle as
     # stream_watermark_late — see _event_stream.
     stream = _event_stream(spark, sf_dir, max_files=2)
-    out = _run_stream(spark, stream, _finalized_windows, confs=_ROCKSDB_CONFS)
+    out = _run_stream(spark, _finalized_windows(stream), confs=_ROCKSDB_CONFS)
     return out.orderBy("win_start", "event_type")
 
 
@@ -2258,35 +2157,13 @@ ORDER BY batch_id, event_type
     tags=("source", "streaming", "stateful"),
 )
 def src_statestore_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ck = scratch_dir(sf_dir, "ssreadcf_ck")
-
-    def build(tmp: str) -> None:
-        agg = (
-            _event_stream(spark, sf_dir, max_files=2)
-            .selectExpr("event_type", f"{_SS_MICRO} AS v_micro")
-            .groupBy("event_type")
-            .agg(
-                F.sum("v_micro").alias("state_sum_micro"),
-                F.count(F.lit(1)).alias("state_n"),
-            )
-        )
-        writer = (
-            agg.writeStream.format("memory")
-            .outputMode("complete")
-            .option("checkpointLocation", tmp)
-        )
-        with _query(spark, writer, confs=_ROCKSDB_CONFS) as q:
-            q.processAllAvailable()
-
-    build_once(ck, build, stamp=f"chunks={_CHUNKS},micro=1e6,rocksdb,v1")
-    try:
-        (
-            spark._jsparkSession.sessionState()
-            .streamingQueryManager()
-            .stateStoreCoordinator()
-        )
-    except Exception:
-        pass
+    ck = _statestore_checkpoint(
+        spark,
+        sf_dir,
+        scratch_dir(sf_dir, "ssreadcf_ck"),
+        f"chunks={_CHUNKS},micro=1e6,rocksdb,v1",
+        confs=_ROCKSDB_CONFS,
+    )
     feed = (
         spark.read.format("statestore")
         .option("readChangeFeed", "true")
