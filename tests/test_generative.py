@@ -136,6 +136,29 @@ def test_scanline_equals_join_rasterization(spark):
     assert a == b
 
 
+def test_containment_keys_match_exported_mask(spark):
+    """Both containment keys equal `golden/engine_scene/mask.csv`, the
+    committed output of `golden/export_scene.py`: every candidate pixel of
+    every blob's box, box rows no edge crosses included, with its even-odd
+    decision. The file does not depend on the query text the two keys and
+    their DuckDB oracles share, so a change to that text that drops,
+    adds or flips a pixel fails here."""
+    import os
+
+    import pandas as pd
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "golden", "engine_scene", "mask.csv",
+    )
+    golden = set(pd.read_csv(path).itertuples(index=False, name=None))
+    assert len(golden) == 24_881
+    for key in ("filt_point_in_polygon", "filt_pip_scanline"):
+        rows = REGISTRY[key].builder(spark, SF_SMALL).collect()
+        got = {(r["blob_id"], r["row"], r["col"], r["inside"]) for r in rows}
+        assert len(rows) == len(got) and got == golden, key
+
+
 def test_poster_full_reference_scale(spark):
     """14 blobs × 400×400 (the reference's default workload) completes and
     covers a plausible canvas fraction."""
@@ -153,8 +176,7 @@ def test_poster_param_points_match_oracle(spark):
 
     points = [
         dict(seed=123, nb=5, canvas=48, lx="-1e0", ly="0.2e0", theme="cool"),
-        dict(seed=999, nb=11, canvas=48, lx="0e0", ly="1e0", theme="neutral",
-             scanline=True),
+        dict(seed=999, nb=11, canvas=48, lx="0e0", ly="1e0", theme="neutral"),
     ]
     for pt in points:
         sdf = spark.sql(_composite_sql("spark", **pt))
@@ -185,7 +207,7 @@ def test_poster_edits_from_two_threads_match_their_oracles(spark):
     def run(edits: list[dict]) -> None:
         for edit in edits:
             turn.wait()  # each edit starts beside the other client's
-            pt = dict(edit, canvas=32, scanline=True)
+            pt = dict(edit, canvas=32)
             compare(
                 spark.sql(_composite_sql("spark", **pt)),
                 duck_run(_composite_sql("duckdb", **pt), SF_SMALL),
@@ -318,28 +340,26 @@ def test_poster_shadow_param_point_matches_oracle(spark):
 # sha256 of the DuckDB render's (row, col, r, g, b) as float64, sorted by
 # (row, col). The two engines read the same SQL text, so a change to that
 # text moves both together and parity alone cannot catch it; these pin the
-# pixels. The points cover both containment strategies, every theme, all
-# five lights of the UI, 1 to 30 blobs, 48 and 64 px and the 7:10 aspect.
+# pixels. The points cover every theme, all five lights of the UI, 1 to 30
+# blobs, 48 and 64 px and the 7:10 aspect.
 _COMPOSITE_GOLDEN = [
     (dict(seed=42, nb=6, canvas=48, lx="-0.6e0", ly="0.8e0", theme=None),
      "8fd5760d1bdb4e16631ef79eb5384920be3a6fdc3277141597a1ff1aa2a9ceb3"),
-    (dict(seed=7, nb=1, canvas=64, lx="0.4e0", ly="-0.7e0", theme="cool",
-          scanline=True),
+    (dict(seed=7, nb=1, canvas=64, lx="0.4e0", ly="-0.7e0", theme="cool"),
      "68be3ad031b42c02a11bd2db465f55dd4c540762b632ef602147ddcce564d5cd"),
     (dict(seed=123, nb=20, canvas=48, lx="0.8e0", ly="0.6e0", theme="warm"),
      "a547860107452530799dce224162ba9271d50fc7b36833c911d3588053ae1e58"),
     (dict(seed=999, nb=30, canvas=64, lx="-0.7e0", ly="-0.4e0",
-          theme="neutral", scanline=True),
+          theme="neutral"),
      "d5aa2844d97bbb3abc9afb341cc8d28c126b5e8ceb2ee1d9f8404979e5b799fb"),
-    (dict(seed=5, nb=14, canvas=64, lx="0e0", ly="1e0", theme=None,
-          scanline=True),
+    (dict(seed=5, nb=14, canvas=64, lx="0e0", ly="1e0", theme=None),
      "511b6844da87a6a72732c66b968fea2ffb77be9430426af1e5d8f33586a370a3"),
     (dict(seed=31, nb=30, canvas=48, lx="0e0", ly="1e0", theme="cool"),
      "e9e89abfdd5ce3a4d9b09fba742c1586f912c1a6313d6603c1cdf373c625e09e"),
     (dict(seed=42, nb=6, canvas=70, canvas_h=100, theme="cool"),
      "beb04d4c8b4d4ca0c165db7485d4b86700136f8f807f1341a87a6163c6d900ab"),
     (dict(seed=8, nb=1, canvas=70, canvas_h=100, lx="0.8e0", ly="0.6e0",
-          theme="warm", scanline=True),
+          theme="warm"),
      "8e41669e1c50790d651a497cf1fdb985b44bef9d0b3b81b2af6b8c59f83cdaf5"),
 ]
 _SHADOW_GOLDEN = "825e50188f0cdc4ddb4a27a33aa3e891ec71bab8b0e463e91b0420ca489b6ee1"
@@ -391,7 +411,7 @@ def test_poster_blob_count_bounds(spark):
     from .oracle import compare, duck_run
 
     for nb in (1, 30):
-        pt = dict(seed=17, nb=nb, canvas=48, theme="warm", scanline=True)
+        pt = dict(seed=17, nb=nb, canvas=48, theme="warm")
         compare(
             spark.sql(_composite_sql("spark", **pt)),
             duck_run(_composite_sql("duckdb", **pt), SF_SMALL),

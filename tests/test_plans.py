@@ -1357,7 +1357,7 @@ def test_checkpointed_python_stages_hide_python_below_the_sort(spark):
 def _poster_render(spark, **params):
     from week3_2_practice_big_data__spark.plans.generative import _composite_sql
 
-    return spark.sql(_composite_sql("spark", canvas=64, scanline=True, **params))
+    return spark.sql(_composite_sql("spark", canvas=64, **params))
 
 
 def _job_shape(spark, group: str, df, run=lambda df: df.collect()) -> tuple[list[str], int]:
@@ -1420,6 +1420,36 @@ def test_poster_edits_reuse_compiled_code(spark):
     _poster_render(spark, nb=14, **edit).collect()
     _poster_render(spark, nb=20, **edit).collect()
     assert compiles.getCount() == before
+
+
+def _generate_outputs(df) -> list[list[str]]:
+    """The output column names of each Generate node of `df`'s physical
+    plan: the child columns it copies into every row it emits, then the
+    columns it generates."""
+    outputs, todo = [], [df._jdf.queryExecution().sparkPlan()]
+    while todo:
+        node = todo.pop()
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+        if node.nodeName() == "Generate":
+            attrs = node.output()
+            outputs.append([attrs.apply(i).name() for i in range(attrs.size())])
+    return outputs
+
+
+def test_per_pixel_generators_do_not_carry_edges(spark):
+    """The per-pixel poster keys read the composite's raster rows, where a
+    blob's hit on a row holds the row's crossings in place of the blob's
+    280 edges: none of their Generate nodes emits `edges`, so no raster-row
+    or pixel row carries the array."""
+    for key in (
+        "filt_point_in_polygon", "filt_pip_scanline", "filt_mask_apply",
+        "win_conv2d_separable", "udf_rowwise_lambda", "udf_geom_contains",
+        "udf_grouped_map_render",
+    ):
+        outputs = _generate_outputs(REGISTRY[key].builder(spark, SF_SMALL))
+        assert len(outputs) >= 3, (key, outputs)  # raster rows, hits, pixels
+        assert not any("edges" in names for names in outputs), (key, outputs)
 
 
 def test_custom_state_sink_read_is_one_job_without_exchange(spark):

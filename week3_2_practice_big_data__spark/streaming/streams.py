@@ -76,10 +76,13 @@ def _stream_partitions(spark: SparkSession) -> int:
     before it reads a row: PySpark's worker calls
     importlib.invalidate_caches() for every task, which re-reads the zip
     directory behind each zip importer it holds (pyspark.zip, the
-    spark-core jar on its PYTHONPATH, py4j, the package zip), about
-    0.15 s of CPU, and the task's state store then commits (about
-    0.1 s). The fold itself costs about 5 ms per user. stream_custom_state,
-    builder + toPandas, median of 3 ops after a warm-up:
+    spark-core jar on its PYTHONPATH, py4j, the package zip), and the
+    task's state store then commits (about 0.1 s). One task at sf0.01
+    took about 250 ms: about 140 ms before its first group (about 80 ms of
+    it in invalidate_caches, over 17 zip importers), 20-35 ms of groups
+    (the fold about 0.5 ms per group, 0.16 ms between groups) and 60-90 ms
+    after the last group. stream_custom_state, builder + toPandas, median
+    of 3 ops after a warm-up:
 
         partitions    sf0.01    sf0.1
         8             3.18 s    3.70 s
