@@ -22,6 +22,7 @@ def stream_hygiene(spark):
         {t.name for t in spark.catalog.listTables() if t.isTemporary},
         spark.conf.get("spark.sql.shuffle.partitions", None),
         spark.conf.get("spark.sql.streaming.stateStore.providerClass", None),
+        spark.conf.get("spark.sql.streaming.checkpointFileManagerClass", None),
     )
 
 

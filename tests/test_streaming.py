@@ -726,6 +726,47 @@ def test_query_confs_apply_at_start_only(spark):
     assert stream_hygiene(spark) == before
 
 
+def test_query_sets_checkpoint_file_manager_only_during_start(spark):
+    """_query starts every query with the FileSystem-based checkpoint file
+    manager (its renames fork no `readlink`) and the streaming width, and
+    unsets both once start() returns. A fake writer records the confs that
+    start() sees."""
+    from week3_2_practice_big_data__spark.streaming.streams import (
+        _query,
+        _stream_partitions,
+    )
+
+    manager = "spark.sql.streaming.checkpointFileManagerClass"
+    seen = {}
+
+    class _FakeQuery:
+        name = "w32bd_fake"
+
+        def stop(self):
+            seen["stopped"] = True
+
+    class _FakeWriter:
+        def queryName(self, name):
+            return self
+
+        def start(self):
+            seen["manager"] = spark.conf.get(manager, None)
+            seen["width"] = spark.conf.get("spark.sql.shuffle.partitions")
+            return _FakeQuery()
+
+    before = stream_hygiene(spark)
+    assert before[4] is None
+    with _query(spark, _FakeWriter()):
+        assert spark.conf.get(manager, None) is None
+    assert seen == {
+        "manager": "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
+        "width": str(_stream_partitions(spark)),
+        "stopped": True,
+    }
+    assert stream_hygiene(spark) == before
+
+
 def test_query_failure_leaves_no_stream_view_or_conf(spark):
     """A streaming builder made to fail leaves nothing behind: neither when
     start() raises (unknown sink format, with `confs` given) nor when

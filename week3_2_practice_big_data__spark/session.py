@@ -6,6 +6,20 @@ pandas_udf transfer), UTC session time zone (deterministic timestamp maths
 against the DuckDB oracle), and shuffle partitions sized for the local box
 (on a 1000-executor cluster this would be set ~2-3x total cores or left to
 AQE coalescing).
+
+Python workers: `get_spark` sets the static `spark.python.daemon.module` to
+`w32bd_daemon` (`pydaemon/w32bd_daemon.py`). That daemon runs
+`pyspark.daemon` unchanged, with one patch: a zip importer re-reads its
+archive's directory only when the file changed. Without it, on Python <
+3.13, PySpark's worker makes every zip importer re-read before every task
+(100-120 ms a task). The module's
+directory goes on the workers' `PYTHONPATH` through
+`spark.executorEnv.PYTHONPATH`, so the daemon imports it from any driver
+cwd. On a cluster the module must reach the executors too, and be on their
+`PYTHONPATH` before the first task: ship it with
+`--py-files pydaemon/w32bd_daemon.py` (YARN puts those files on the
+executors' `PYTHONPATH`) or install it in the executor image. A session
+handed in by a caller keeps PySpark's own daemon.
 """
 
 from __future__ import annotations
@@ -19,6 +33,9 @@ from pyspark.sql import SparkSession
 # The driver test tables store `events.ts` as parquet INT64 TIMESTAMP(NANOS)
 # which Spark refuses by default; read nanos as long + convert in io.py.
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
+# The directory that holds only the worker daemon module (module docstring).
+_DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pydaemon")
 
 
 # AQE SortMergeJoin -> ShuffledHashJoin rewrite threshold (r13, guide
@@ -66,6 +83,8 @@ def get_spark(app_name: str = "w32bd-spark-engine") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "w32bd_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _DAEMON_DIR)
     )
     for key, value in _SESSION_CONFS:
         builder = builder.config(key, value)

@@ -61,39 +61,38 @@ def _stream_partitions(spark: SparkSession) -> int:
     """Shuffle width for STREAMING queries, which is also the number of
     state-store instances per stateful operator: max(4, cores // 8), for
     JVM and Python state alike. Every instance pays a commit on every
-    micro-batch whatever its data (about 64 ms of JVM provider work, not
-    disk), and at micro-batch scale that fixed cost dominates. Size
-    streaming shuffles to the cores, never to the batch data volume; a
-    real cluster re-sizes through its own session conf before the query
-    starts. Every figure below was taken on a 4-core VM, where the rule
-    gives 4; no other core count was measured.
+    micro-batch whatever its data, and at micro-batch scale that fixed
+    cost dominates. Size streaming shuffles to the cores, never to the
+    batch data volume; a real cluster re-sizes through its own session
+    conf before the query starts. Every figure below was taken on a 4-core
+    VM, where the rule gives 4; no other core count was measured.
 
     JVM state: the chained join + agg at sf0.1 took 33 s at 32 partitions
     against 8.4 s at 8, and in a later run 8.5 s at 8 against 6.2 s at 4.
 
     Python state (applyInPandasWithState): 4 partitions on 4 cores make a
-    micro-batch one wave of Python tasks. Each task has a fixed price
-    before it reads a row: PySpark's worker calls
-    importlib.invalidate_caches() for every task, which re-reads the zip
-    directory behind each zip importer it holds (pyspark.zip, the
-    spark-core jar on its PYTHONPATH, py4j, the package zip), and the
-    task's state store then commits (about 0.1 s). One task at sf0.01
-    took about 250 ms: about 140 ms before its first group (about 80 ms of
-    it in invalidate_caches, over 17 zip importers), 20-35 ms of groups
-    (the fold about 0.5 ms per group, 0.16 ms between groups) and 60-90 ms
-    after the last group. stream_custom_state, builder + toPandas, median
-    of 3 ops after a warm-up:
+    micro-batch one wave of Python tasks. Two fixed costs of a task are
+    gone. Its worker's zip importers no longer re-read their archives
+    before every task (the engine's worker daemon, see session.get_spark):
+    that call took over 100 ms a task and now takes 0.1-0.2 ms. Its state
+    commit no longer forks `readlink` commands (_query's checkpoint file
+    manager): an op's commits fell from 540-570 ms to 50-80 ms.
+    stream_custom_state, builder + toPandas, median of 3 ops after a
+    warm-up:
 
         partitions    sf0.01    sf0.1
-        8             3.18 s    3.70 s
-        4             2.08 s    2.94 s
-        2             1.97 s    3.68 s
+        8             1.32 s    2.14 s
+        4             1.05 s    1.84 s
+        2             1.16 s    2.30 s
 
-    Two partitions win only at sf0.01, and by less than they lose at
-    sf0.1; four hold at both. Python CPU per sf0.01 op, read from the
-    worker processes before the stream was projected: 5.5-6 s at 8
-    partitions, 2.6 s at 4, 1.7 s at 2."""
+    Four partitions win at both scales."""
     return max(4, spark.sparkContext.defaultParallelism // 8)
+
+
+_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 @contextmanager
@@ -105,17 +104,25 @@ def _query(
 ):
     """The one streaming-query lifecycle. Starts `writer` under a name
     unique to this call (w32bd_<uuid4 hex>), so clients sharing a session
-    never stop or read each other's query. The streaming shuffle width and
-    `confs` are set only while start() runs: the query copies the session
-    conf when it starts, so nothing outlives the call. Yields the query;
-    on exit stops it and drops its memory-sink view. Read a memory sink
-    with _sink(spark, q) inside the block; that DataFrame stays valid
-    after the view is dropped."""
+    never stop or read each other's query. Two confs are scoped to start(),
+    with any `confs`: the streaming shuffle width (`_stream_partitions`)
+    and the checkpoint file manager, FileSystemBasedCheckpointFileManager.
+    Spark's default manager renames through FileContext, whose link check
+    forks a `readlink` shell command 8 times per renamed file when Hadoop
+    has no native library; FileSystem.rename forks none, and files are
+    still written to a temp path and renamed. It covers every offset,
+    commit and source log entry, state-store delta and sink metadata file.
+    The query copies the session conf when it starts, so nothing outlives
+    the call. Yields the query; on exit stops it and drops its memory-sink
+    view. Read a memory sink with _sink(spark, q) inside the block; that
+    DataFrame stays valid after the view is dropped."""
     name = f"w32bd_{uuid.uuid4().hex}"
-    width = str(_stream_partitions(spark))
-    with scoped_confs(
-        spark, {"spark.sql.shuffle.partitions": width, **(confs or {})}
-    ):
+    scoped = {
+        "spark.sql.shuffle.partitions": str(_stream_partitions(spark)),
+        "spark.sql.streaming.checkpointFileManagerClass": _CHECKPOINT_FILE_MANAGER,
+        **(confs or {}),
+    }
+    with scoped_confs(spark, scoped):
         query = writer.queryName(name).start()
     try:
         yield query
