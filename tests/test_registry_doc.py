@@ -111,7 +111,6 @@ _LIFECYCLE_EXCEPTIONS = {
     ("streaming/streams.py", "_query"),
     ("session.py", "scoped_confs"),
     ("session.py", "ensure_session_confs"),
-    ("session.py", "ensure_package_on_workers"),
     ("operators/subqueries.py", "qry_recursive_cte"),
     ("sources/generators.py", "src_python_datasource_pushdown"),
 }
@@ -139,6 +138,48 @@ def test_stream_lifecycle_and_conf_changes_in_one_place():
                     found.add((rel, owner, node.attr))
     stray = {f for f in found if f[:2] not in _LIFECYCLE_EXCEPTIONS}
     assert stray == set(), sorted(stray)
+
+
+def test_no_module_shipped_to_workers():
+    """Static guard (no Spark): Python-UDF closures carry the package code
+    they call by value (session.py), so no package module ships files to
+    the workers: nothing calls addPyFile."""
+    import ast
+
+    found = {
+        (rel, node.lineno)
+        for rel, tree in _package_modules()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute) and node.attr == "addPyFile"
+    }
+    assert found == set(), sorted(found)
+
+
+def test_no_package_import_inside_a_closure():
+    """Static guard (no Spark): a function nested in another function (a
+    UDF body, a data source method) imports no package module. It runs
+    on a worker, where the package is not importable; the names it needs
+    are imported at module level and travel with it by value."""
+    import ast
+
+    def nested_imports(node, depth):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                yield from nested_imports(child, depth + 1)
+                continue
+            if depth >= 2 and isinstance(child, ast.ImportFrom) and (
+                child.level > 0
+                or (child.module or "").startswith("week3_2_practice_big_data__spark")
+            ):
+                yield child.lineno
+            yield from nested_imports(child, depth)
+
+    found = {
+        (rel, line)
+        for rel, tree in _package_modules()
+        for line in nested_imports(tree, 0)
+    }
+    assert found == set(), sorted(found)
 
 
 def test_shared_stream_shapes_built_in_one_function():

@@ -728,9 +728,11 @@ def test_query_confs_apply_at_start_only(spark):
 
 def test_query_sets_checkpoint_file_manager_only_during_start(spark):
     """_query starts every query with the FileSystem-based checkpoint file
-    manager (its renames fork no `readlink`) and the streaming width, and
-    unsets both once start() returns. A fake writer records the confs that
-    start() sees."""
+    manager (its renames fork no `readlink`) and the streaming width, keeps
+    both set until the query has built its sources (a file source's
+    metadata log reads the conf then, after start() returned), and unsets
+    both before the body runs. A fake writer and query record the confs
+    that start() and the initialization wait see."""
     from week3_2_practice_big_data__spark.streaming.streams import (
         _query,
         _stream_partitions,
@@ -741,6 +743,16 @@ def test_query_sets_checkpoint_file_manager_only_during_start(spark):
 
     class _FakeQuery:
         name = "w32bd_fake"
+
+        @property
+        def _jsq(self):
+            return self
+
+        def streamingQuery(self):
+            return self
+
+        def awaitInitialization(self, timeout_ms):
+            seen["manager at init"] = spark.conf.get(manager, None)
 
         def stop(self):
             seen["stopped"] = True
@@ -758,9 +770,13 @@ def test_query_sets_checkpoint_file_manager_only_during_start(spark):
     assert before[4] is None
     with _query(spark, _FakeWriter()):
         assert spark.conf.get(manager, None) is None
+    fs_manager = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
     assert seen == {
-        "manager": "org.apache.spark.sql.execution.streaming.checkpointing."
-        "FileSystemBasedCheckpointFileManager",
+        "manager": fs_manager,
+        "manager at init": fs_manager,
         "width": str(_stream_partitions(spark)),
         "stopped": True,
     }

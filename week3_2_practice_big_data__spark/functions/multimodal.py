@@ -22,8 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..common import checkpointed
 from ..registry import register
-from ..session import ensure_package_on_workers
 from ..plans.generative import udf_grouped_map_render
+from ..plans.png import decode_png_rgb, encode_png_rgb, png_dimensions
 
 
 def _posters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -66,12 +66,8 @@ def ns_multimodal_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ns", "multimodal", "udf"),
 )
 def ns_mm_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_on_workers(spark)
-
     @F.pandas_udf("w int, h int")
     def parsed_dims(png: pd.Series) -> pd.DataFrame:
-        from week3_2_practice_big_data__spark.plans.png import png_dimensions
-
         dims = png.map(lambda b: png_dimensions(bytes(b)))
         return pd.DataFrame({"w": dims.map(lambda d: d[0]), "h": dims.map(lambda d: d[1])})
 
@@ -104,19 +100,6 @@ def _stub_feature(png: bytes, n: int = 8) -> list[float]:
         round(sum(png[i * chunk : (i + 1) * chunk]) / (255.0 * chunk + 1e-9), 6)
         for i in range(n)
     ]
-
-
-def real_decode(png: bytes):
-    """Full pixel decode — REAL for the engine's own PNG subset.
-
-    Round 1 stubbed this pending an image library; round 2 ships a pure-
-    stdlib decoder for the exact subset the engine encodes (RGB8, filter 0,
-    zlib), so decode/resize/frame-sample below run on real pixels. Foreign
-    PNGs (other filters/bit depths) still need a real image lib and raise.
-    """
-    from ..plans.png import decode_png_rgb
-
-    return decode_png_rgb(png)
 
 
 _FEAT_DIM = 8
@@ -168,7 +151,6 @@ def feature_pipeline(posters: DataFrame) -> DataFrame:
     tags=("ns", "multimodal", "udf"),
 )
 def ns_mm_feature_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_on_workers(spark)
     return feature_pipeline(_posters(spark, sf_dir))
 
 
@@ -188,8 +170,6 @@ def resize_pipeline(posters: DataFrame) -> DataFrame:
 
     def resize(batches):
         import numpy as np
-
-        from ..plans.png import decode_png_rgb, encode_png_rgb
 
         for pdf in batches:
             out = {"blob_id": [], "src_w": [], "src_h": [], "thumb": []}
@@ -223,7 +203,6 @@ def resize_pipeline(posters: DataFrame) -> DataFrame:
     tags=("ns", "multimodal", "udf"),
 )
 def ns_mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_on_workers(spark)
     return resize_pipeline(_posters(spark, sf_dir))
 
 
@@ -247,8 +226,6 @@ def _pack_video(png: bytes) -> bytes:
 
     import numpy as np
 
-    from ..plans.png import decode_png_rgb, encode_png_rgb
-
     pixels, w, h = decode_png_rgb(png)
     img = np.frombuffer(pixels, dtype=np.uint8).astype(np.float64)
     frames = []
@@ -266,8 +243,6 @@ def frame_sample_pipeline(posters: DataFrame) -> DataFrame:
 
     def sample(batches):
         import struct
-
-        from ..plans.png import png_dimensions
 
         for pdf in batches:
             out = {"blob_id": [], "frame_idx": [], "width": [], "height": [], "frame": []}
@@ -308,7 +283,6 @@ def frame_sample_pipeline(posters: DataFrame) -> DataFrame:
     tags=("ns", "multimodal", "udf"),
 )
 def ns_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_on_workers(spark)
     return frame_sample_pipeline(_posters(spark, sf_dir))
 
 
@@ -345,13 +319,11 @@ def audio_pipeline(spark: SparkSession) -> DataFrame:
     tracks = spark.range(_AUDIO_TRACKS).withColumnRenamed("id", "track_id")
 
     def gen(batches):
-        from . import multimodal as mm
-
         for pdf in batches:
             yield pd.DataFrame(
                 {
                     "track_id": pdf["track_id"],
-                    "pcm": [mm.synth_pcm(int(t)) for t in pdf["track_id"]],
+                    "pcm": [synth_pcm(int(t)) for t in pdf["track_id"]],
                 }
             )
 
@@ -389,7 +361,6 @@ def audio_pipeline(spark: SparkSession) -> DataFrame:
 )
 def ns_mm_audio_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     del sf_dir  # waveform is engine-synthesized; no table input
-    ensure_package_on_workers(spark)
     return audio_pipeline(spark)
 
 
@@ -417,7 +388,6 @@ def src_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..common import build_once, scratch_dir
 
-    ensure_package_on_workers(spark)
     rows = _posters(spark, sf_dir).select("blob_id", "png").collect()
 
     def build(tmp: str) -> None:
@@ -436,8 +406,6 @@ def src_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = spark.read.format("binaryFile").option("pathGlobFilter", "*.png").load(out)
 
     def parse_dims(content: pd.Series) -> pd.DataFrame:
-        from ..plans.png import png_dimensions
-
         dims = [png_dimensions(bytes(b)) for b in content]
         return pd.DataFrame({"width": [w for w, _ in dims], "height": [h for _, h in dims]})
 
@@ -487,8 +455,6 @@ def phash_pipeline(spark: SparkSession, posters: DataFrame) -> DataFrame:
 
     def phash(batches):
         import numpy as np
-
-        from ..plans.png import decode_png_rgb
 
         for pdf in batches:
             out = {"blob_id": [], "phash": []}
@@ -574,7 +540,6 @@ ORDER BY hamming, ba, bb
     tags=("ns", "multimodal", "dedup"),
 )
 def ns_mm_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_on_workers(spark)
     return phash_pipeline(spark, _posters(spark, sf_dir))
 
 
@@ -598,8 +563,6 @@ def scene_cut_pipeline(posters: DataFrame) -> DataFrame:
         import struct
 
         import numpy as np
-
-        from ..plans.png import decode_png_rgb
 
         for pdf in batches:
             out = {"blob_id": [], "frame_idx": [], "mean_abs_diff": [], "is_cut": []}
@@ -644,7 +607,6 @@ def scene_cut_pipeline(posters: DataFrame) -> DataFrame:
     tags=("ns", "multimodal", "udf"),
 )
 def ns_mm_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_on_workers(spark)
     return scene_cut_pipeline(_posters(spark, sf_dir))
 
 
@@ -695,8 +657,6 @@ def mm_pipeline_e2e(
 
     def fused(batches):
         import numpy as np
-
-        from ..plans.png import decode_png_rgb, encode_png_rgb
 
         for pdf in batches:
             out = {
@@ -866,5 +826,4 @@ def mm_pipeline_e2e(
     tags=("ns", "multimodal", "udf", "scale"),
 )
 def ns_mm_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_package_on_workers(spark)
     return mm_pipeline_e2e(spark, _posters(spark, sf_dir))

@@ -294,10 +294,6 @@ def _hsv_oracle() -> str:
 def fn_hsv_to_rgb(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-
     def _channels(h: pd.Series, s: pd.Series, v: pd.Series):
         h, s, v = h.to_numpy(), s.to_numpy(), v.to_numpy()
         i = (np.floor(h * 6).astype(np.int64)) % 6

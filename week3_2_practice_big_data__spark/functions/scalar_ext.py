@@ -180,9 +180,6 @@ ORDER BY l_orderkey, l_linenumber
     tags=("udf", "function"),
 )
 def udf_arrow_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     # Deterministic output order comes from sorting the NARROW INPUT below
     # the kernel (r13, guide §4.4 class): a post-map orderBy plants a range
     # Exchange ABOVE MapInArrow, and RangePartitioner's bounds sampling
@@ -366,9 +363,6 @@ def udf_arrow_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _arrow_grouped_kernel_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The applyInArrow kernel relation (pre-sort, pre-checkpoint) — the
     plan-visible stage tests/test_plans.py pins FlatMapGroupsInArrow on."""
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey", "l_orderkey", "l_linenumber", "l_quantity"
     )
@@ -436,10 +430,8 @@ ORDER BY event_id
     tags=("udf", "function"),
 )
 def fn_udf_sql_register(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import ensure_package_on_workers
     from .udf_kernels import w32bd_pumicro
 
-    ensure_package_on_workers(spark)
     spark.udf.register("w32bd_pumicro", w32bd_pumicro)
     # Pre-sorted subquery (r13): a top-level ORDER BY above the
     # ArrowEvalPython node makes the range sampling re-execute the UDF —
@@ -486,10 +478,8 @@ ORDER BY event_id
 def udf_pandas_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import col
 
-    from ..session import ensure_package_on_workers
     from .udf_kernels import iter_micro, iter_parity
 
-    ensure_package_on_workers(spark)
     ev = load_table(spark, sf_dir, "events")
     # Pre-sort the input below the Python nodes (r13): a post-UDF orderBy
     # puts the range sampling above the two ArrowEvalPython nodes and

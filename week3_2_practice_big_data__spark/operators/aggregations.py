@@ -533,10 +533,6 @@ ORDER BY l_returnflag
 def udaf_weighted_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-
     # explicit GROUPED_AGG: module-level `from __future__ import annotations`
     # stringifies type hints, so Spark's hint-based eval-type inference
     # cannot resolve them for these locally-defined functions

@@ -328,8 +328,6 @@ def ts_resample_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 # magnitudes; widen it to DECIMAL(38,0) too if per-user cardinality grows.
 # ---------------------------------------------------------------------------
 
-_CUSUM_H = "3e0"
-
 
 def _cusum_sql(dialect: str) -> str:
     epoch = _us(dialect)

@@ -598,9 +598,6 @@ FROM mask ORDER BY blob_id, row, col
     tags=("udf", "generative"),
 )
 def udf_rowwise_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     mask = spark.sql(
         _mask_ctes("spark") + "\nSELECT blob_id, row, col, mask_f FROM mask"
     )
@@ -1177,10 +1174,6 @@ def _pip_counts_sql(dialect: str) -> str:
 def udf_geom_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-
     pairs = spark.sql(_pairs_ctes("spark") + "\nSELECT blob_id, row, col, x, y FROM pairs")
     verts = spark.sql(synth.boundary_sql(SEED, NB, "spark", NSAMP)).select(
         "blob_id", "k", "px", "py"
@@ -1271,9 +1264,6 @@ def _render_group(pdf: pd.DataFrame) -> pd.DataFrame:
     tags=("udf", "generative", "multimodal"),
 )
 def udf_grouped_map_render(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     shaded = spark.sql(
         _shaded_sql("spark")
         + "\nSELECT blob_id, row, col, inside, pr, pg, pb, alpha FROM shaded"
@@ -1325,9 +1315,6 @@ def _assemble_png_pdf(pdf: pd.DataFrame, seed: int, nb: int) -> pd.DataFrame:
     tags=("sink", "generative", "multimodal"),
 )
 def sink_binary_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     # r4: the export now carries the reference's seed-caption text layer
     # (app.py:152) — stamped over the session-cached canvas, same relation
     # as gen_poster_caption.
@@ -1441,9 +1428,6 @@ def proj_resample_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sink", "generative", "multimodal"),
 )
 def sink_binary_export_hires(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     # Caption stamped AFTER the upsample at scale 3 (fontsize is in points:
     # at 3× dpi the glyphs get 3× the pixels, not a blurry upsample of the
     # low-res stamp — matching savefig's vector-text rasterization).
@@ -1524,9 +1508,6 @@ def _assemble_tile_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     tags=("sink", "generative", "multimodal", "scale"),
 )
 def sink_binary_export_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     canvas = spark.sql(
         _captioned_sql(
             "spark", "SELECT row, col, r, g, b FROM {canvas}",

@@ -7,6 +7,14 @@ against the DuckDB oracle), and shuffle partitions sized for the local box
 (on a 1000-executor cluster this would be set ~2-3x total cores or left to
 AQE coalescing).
 
+Python UDFs: importing this module registers the package with
+`cloudpickle.register_pickle_by_value`, so every Python-UDF closure
+(applyInPandas, mapInPandas, pandas_udf, Python data sources) carries the
+package code it calls by value. Workers never import the package; they
+need only PySpark's own dependencies, from any driver cwd and on any
+session, the engine's or a caller's. Package imports that such a closure
+needs therefore sit at module level, not inside the closure.
+
 Python workers: `get_spark` sets the static `spark.python.daemon.module` to
 `w32bd_daemon` (`pydaemon/w32bd_daemon.py`). That daemon runs
 `pyspark.daemon` unchanged, with one patch: a zip importer re-reads its
@@ -15,9 +23,9 @@ archive's directory only when the file changed. Without it, on Python <
 (100-120 ms a task). The module's
 directory goes on the workers' `PYTHONPATH` through
 `spark.executorEnv.PYTHONPATH`, so the daemon imports it from any driver
-cwd. On a cluster the module must reach the executors too, and be on their
-`PYTHONPATH` before the first task: ship it with
-`--py-files pydaemon/w32bd_daemon.py` (YARN puts those files on the
+cwd. On a cluster that module is the only file to ship: it must reach the
+executors and be on their `PYTHONPATH` before the first task, so ship it
+with `--py-files pydaemon/w32bd_daemon.py` (YARN puts those files on the
 executors' `PYTHONPATH`) or install it in the executor image. A session
 handed in by a caller keeps PySpark's own daemon.
 """
@@ -25,10 +33,15 @@ handed in by a caller keeps PySpark's own daemon.
 from __future__ import annotations
 
 import os
+import sys
 import threading
 from contextlib import contextmanager
 
+from pyspark.cloudpickle import register_pickle_by_value
 from pyspark.sql import SparkSession
+
+# Python-UDF closures carry the package code they call (module docstring).
+register_pickle_by_value(sys.modules[__package__])
 
 # The driver test tables store `events.ts` as parquet INT64 TIMESTAMP(NANOS)
 # which Spark refuses by default; read nanos as long + convert in io.py.
@@ -89,43 +102,6 @@ def get_spark(app_name: str = "w32bd-spark-engine") -> SparkSession:
     for key, value in _SESSION_CONFS:
         builder = builder.config(key, value)
     return builder.getOrCreate()
-
-
-def ensure_package_on_workers(spark: SparkSession) -> None:
-    """Ship this package to executor Python workers via addPyFile.
-
-    Python-UDF closures (applyInPandas/mapInPandas/pandas_udf) may reference
-    module-level symbols, which cloudpickle serializes BY REFERENCE — workers
-    then need to import `week3_2_practice_big_data__spark`, and the driver
-    process may run from any cwd. This is the local-mode equivalent of
-    `spark-submit --py-files pkg.zip` on a real cluster.
-    """
-    if spark.conf.get("spark.w32bd.pkgShipped", None) == "true":
-        return
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    build_dir = os.path.join(os.path.dirname(pkg_dir), ".build")
-    os.makedirs(build_dir, exist_ok=True)
-    zpath = os.path.join(build_dir, "w32bd_pkg.zip")
-    sources = [
-        os.path.join(root, name)
-        for root, _, files in os.walk(pkg_dir)
-        for name in files
-        if name.endswith(".py")
-    ]
-    stale = not os.path.exists(zpath) or os.path.getmtime(zpath) < max(
-        os.path.getmtime(s) for s in sources
-    )
-    if stale:
-        with zipfile.ZipFile(zpath, "w") as z:
-            for full in sources:
-                z.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
-    spark.sparkContext.addPyFile(zpath)
-    try:
-        spark.conf.set("spark.w32bd.pkgShipped", "true")
-    except Exception:
-        pass
 
 
 def ensure_session_confs(spark: SparkSession) -> None:

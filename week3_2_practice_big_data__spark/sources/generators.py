@@ -34,6 +34,10 @@ from ..streaming.streams import (
 )
 from .. import synth
 
+# The Python data source readers call these by name: a closure that
+# referenced the synth module would carry the whole module (session.py).
+from ..synth import M31, lcg_state
+
 _SEED, _NB = 42, 14
 
 
@@ -196,10 +200,6 @@ def _numpy_literal_oracle() -> str:
 def src_range_gen_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
-
     schema = (
         "blob_id bigint, r double, wobble double, cx double, cy double, "
         "depth double, col_r double, col_g double, col_b double, noise_sum double"
@@ -329,9 +329,6 @@ def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         InputPartition,
     )
 
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     n, parts, seed, sensors = _PYDS_N, _PYDS_PARTS, _PYDS_SEED, _PYDS_SENSORS
 
     class _LcgReader(DataSourceReader):
@@ -342,7 +339,7 @@ def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             per = (n + parts - 1) // parts
             p = partition.value
             for i in range(p * per, min((p + 1) * per, n)):
-                yield (i, i % sensors, synth.lcg_state(i, seed) / synth.M31)
+                yield (i, i % sensors, lcg_state(i, seed) / M31)
 
     class _LcgSource(DataSource):
         @classmethod
@@ -470,16 +467,11 @@ def src_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         SimpleDataSourceStreamReader,
     )
 
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     n, chunk, seed = _PYDSS_N, _PYDSS_CHUNK, _PYDSS_SEED
     t0, sent_off = _PYDSS_T0, _PYDSS_SENT_OFFSET_S
     sensors = _PYDS_SENSORS
-    # The LCG states are computed here and shipped with the reader: the
-    # streaming source runs in a process that never receives the package
-    # (addPyFile reaches task workers only), so the reader may not import
-    # it, synth.lcg_state included.
+    # The LCG states are computed here, once, and shipped with the reader,
+    # which serves every micro-batch from that list.
     xs = [synth.lcg_state(i, seed) for i in range(n)]
 
     class _LcgStreamReader(SimpleDataSourceStreamReader):
@@ -670,9 +662,6 @@ def _staged_sink_dir(
 ) -> str:
     """Register the staged-commit sink of one writer kind and return this
     call's empty sink directory (see pid_run_dir)."""
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     spark.dataSource.register(_jsonl_sink(arrow))
     return pid_run_dir(sf_dir, name)
 
@@ -937,7 +926,7 @@ def _pydsf_source(row_counter=None):
                     continue
                 if row_counter is not None:
                     row_counter.add(1)
-                yield (i, i % sensors, synth.lcg_state(i, seed) / synth.M31)
+                yield (i, i % sensors, lcg_state(i, seed) / M31)
 
     class _PushdownSource(DataSource):
         @classmethod
@@ -967,9 +956,6 @@ def _pydsf_source(row_counter=None):
     tags=("source", "udf", "scale"),
 )
 def src_python_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     # the pushFilters hook is gated off by default (Spark 4.1)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(_pydsf_source())

@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .. import synth
 from ..registry import register
-from ..session import ensure_package_on_workers
 from .streams import _ROCKSDB_PROVIDER, _event_stream, _query, _sink
 
 try:  # Spark >= 4.0 AND a usable protobuf: transformWithStateInPandas runs
@@ -76,7 +75,6 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise NotImplementedError(
             "transformWithStateInPandas needs Spark >= 4.0 and protobuf"
         )
-    ensure_package_on_workers(spark)
     writer = (
         _event_stream(spark, sf_dir)
         .groupBy("user_id")

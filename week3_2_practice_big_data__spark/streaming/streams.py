@@ -94,6 +94,9 @@ _CHECKPOINT_FILE_MANAGER = (
     "FileSystemBasedCheckpointFileManager"
 )
 
+# How long _query waits for a started query to build its sources.
+_INIT_TIMEOUT_MS = 60_000
+
 
 @contextmanager
 def _query(
@@ -104,31 +107,42 @@ def _query(
 ):
     """The one streaming-query lifecycle. Starts `writer` under a name
     unique to this call (w32bd_<uuid4 hex>), so clients sharing a session
-    never stop or read each other's query. Two confs are scoped to start(),
-    with any `confs`: the streaming shuffle width (`_stream_partitions`)
-    and the checkpoint file manager, FileSystemBasedCheckpointFileManager.
-    Spark's default manager renames through FileContext, whose link check
-    forks a `readlink` shell command 8 times per renamed file when Hadoop
-    has no native library; FileSystem.rename forks none, and files are
-    still written to a temp path and renamed. It covers every offset,
-    commit and source log entry, state-store delta and sink metadata file.
-    The query copies the session conf when it starts, so nothing outlives
-    the call. Yields the query; on exit stops it and drops its memory-sink
-    view. Read a memory sink with _sink(spark, q) inside the block; that
-    DataFrame stays valid after the view is dropped."""
+    never stop or read each other's query. Two confs are scoped to the
+    query's start, with any `confs`: the streaming shuffle width
+    (`_stream_partitions`) and the checkpoint file manager,
+    FileSystemBasedCheckpointFileManager. Spark's default manager renames
+    through FileContext, whose link check forks a `readlink` shell command
+    8 times per renamed file when Hadoop has no native library;
+    FileSystem.rename forks none, and files are still written to a temp
+    path and renamed. It covers every offset, commit and source log entry,
+    state-store delta and sink metadata file.
+
+    The scope lasts until the query has built its sources, not only until
+    start() returns: start() returns before the stream thread builds them,
+    and a file source's metadata log (`<checkpoint>/sources/<n>`) reads
+    the session conf when it is built. The query copies the rest of the
+    session conf when it starts, so nothing outlives the scope. Yields the
+    query; on exit stops it and drops its memory-sink view. Read a memory
+    sink with _sink(spark, q) inside the block; that DataFrame stays valid
+    after the view is dropped."""
     name = f"w32bd_{uuid.uuid4().hex}"
     scoped = {
         "spark.sql.shuffle.partitions": str(_stream_partitions(spark)),
         "spark.sql.streaming.checkpointFileManagerClass": _CHECKPOINT_FILE_MANAGER,
         **(confs or {}),
     }
-    with scoped_confs(spark, scoped):
-        query = writer.queryName(name).start()
+    query = None
     try:
+        with scoped_confs(spark, scoped):
+            query = writer.queryName(name).start()
+            # returns once the sources are built, or raises the query's
+            # error if it died first
+            query._jsq.streamingQuery().awaitInitialization(_INIT_TIMEOUT_MS)
         yield query
     finally:
         try:
-            query.stop()
+            if query is not None:
+                query.stop()
         finally:
             spark.catalog.dropTempView(name)
 
@@ -571,10 +585,6 @@ ORDER BY user_id
 def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
 
     def update(key, pdfs, state: GroupState):
         import numpy as np
@@ -1283,9 +1293,6 @@ def stream_event_pattern_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     within_ns = 30 * 60 * 1_000_000_000
 
     def update(key, pdfs, state: GroupState):
@@ -1882,9 +1889,6 @@ def stream_query_listener(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "sink"),
 )
 def stream_sink_foreach_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import ensure_package_on_workers
-
-    ensure_package_on_workers(spark)
     out = pid_run_dir(sf_dir, "fesink_out")
 
     class _RowWriter:
